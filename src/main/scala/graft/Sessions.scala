@@ -17,6 +17,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** Parse a positive-integer setting such as an env override. A
+    * malformed or non-positive value fails here, naming the setting,
+    * instead of surfacing later as a wrong plan or a query-start error. */
+  def positiveLong(name: String, raw: String): Long = {
+    val n = try raw.toLong catch { case _: NumberFormatException => 0L }
+    require(n > 0, s"$name must be a positive integer, got '$raw'")
+    n
+  }
+
+  /** [[positiveLong]] over the environment variable `name`, if set. */
+  def positiveLongEnv(name: String): Option[Long] =
+    sys.env.get(name).map(positiveLong(name, _))
+
   val Jdk17AddOpensPackages: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",

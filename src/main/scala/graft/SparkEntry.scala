@@ -3673,7 +3673,7 @@ object SparkEntry {
 
   private def qDupSpans(s: SparkSession, d: String): DataFrame = {
     // 5-token duplicated-span stats per document (exact-substring-dedup
-    // family); raw-text spans so the oracle replays the whole chain.
+    // family); spans are hash-keyed, the oracle replays them as raw text.
     Relational.sort(col("doc_id"))(
       graft.pipeline.Dedup.duplicatedSpans(Tables.documents(s, d),
         "doc_id", "text", n = 5))

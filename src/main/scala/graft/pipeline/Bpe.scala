@@ -74,22 +74,17 @@ object Bpe {
     // keeps the full logical plan — one nested merge HOF per round — and
     // past a few dozen rounds plan analysis itself OOMs the driver.
     // Lazy checkpointing truncates lineage when the round's collect
-    // materializes it, keeping ONE job per round. Block release (round
-    // 9): `Dataset.rdd.unpersist` was a NO-OP on checkpoint blocks (it
-    // unpersists a fresh wrapper RDD), so release goes through
-    // [[Checkpoints]] — the previous round's internal RDD is unpersisted
-    // right after the collect that materialized its successor.
-    val spark = docs.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
+    // materializes it, keeping ONE job per round. The previous round's
+    // table is released through its handle ([[Checkpoints]]) right after
+    // the collect that materialized its successor.
     var wt = wordTable(docs, textCol).stageCheckpoint(false)
-    var liveIds = Set.empty[Int]
+    var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     (0 until numMerges).foreach { i =>
       val best = pairCounts(wt)
         .orderBy(col("cnt").desc, col("a"), col("b")).limit(1).collect()
-      val fresh = Checkpoints.freshIds(spark, baseline, liveIds)
-      Checkpoints.releaseIds(spark, liveIds)
-      liveIds = fresh
+      prev.foreach(_.release())
+      prev = Some(wt)
       require(best.nonEmpty,
         s"trainMerges: no adjacent pairs left after $i merges — corpus too small for $numMerges")
       val (a, b, c) = (best.head.getString(0), best.head.getString(1), best.head.getLong(2))
@@ -97,9 +92,10 @@ object Bpe {
       wt = wt.withColumn("toks", mergePair(col("toks"), a, b))
         .stageCheckpoint(false)
     }
-    // the final wt is lazy and never materialized; only the last
-    // materialized round still holds blocks
-    Checkpoints.releaseIds(spark, liveIds)
+    // the final wt is lazy and never materialized, but registered all
+    // the same; nothing reads either table once the loop ends
+    prev.foreach(_.release())
+    wt.release()
     merges.toSeq
   }
 
@@ -145,12 +141,10 @@ object Bpe {
     // accumulated per-round HOF-chain lineage (which otherwise OOMs the
     // driver's analyzer past a few dozen rounds) while keeping ONE job
     // per round — the round's candidate collect materializes the table,
-    // after which the previous round's blocks are released via
-    // [[Checkpoints]] (round 9 — Dataset.rdd.unpersist was a no-op).
-    val spark = docs.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
+    // after which the previous round's table is released through its
+    // handle.
     var wt = wordTable(docs, textCol).stageCheckpoint(false)
-    var liveIds = Set.empty[Int]
+    var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var rounds = 0
     while (merges.size < numMerges) {
@@ -158,9 +152,8 @@ object Bpe {
       val top = pairCounts(wt)
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(math.max(4 * maxBatch, 16)).collect() // bounded: ≤ 4·maxBatch rows
-      val freshIds = Checkpoints.freshIds(spark, baseline, liveIds)
-      Checkpoints.releaseIds(spark, liveIds)
-      liveIds = freshIds
+      prev.foreach(_.release())
+      prev = Some(wt)
       require(top.nonEmpty,
         s"trainMergesBatched: no adjacent pairs left after ${merges.size} " +
           s"merges — corpus too small for $numMerges")
@@ -199,7 +192,8 @@ object Bpe {
       wt = wt.withColumn("toks", mergedToks).stageCheckpoint(false)
       rounds += 1
     }
-    Checkpoints.releaseIds(spark, liveIds)
+    prev.foreach(_.release())
+    wt.release()
     lastBatchedRounds = rounds
     merges.toSeq
   }

@@ -1,25 +1,26 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Deterministic release of `localCheckpoint` blocks in iterative loops.
+/** Staged checkpoints for iterative loops, released through their own
+  * handle.
   *
-  * `Dataset.rdd.unpersist()` does NOT release a checkpoint's cached
-  * blocks: `Dataset.rdd` wraps the internal checkpointed RDD[InternalRow]
-  * in a fresh deserializing RDD, so unpersisting the wrapper releases
-  * nothing (the round-8 Bpe loop did exactly that; block release silently
-  * fell back to GC + ContextCleaner). The internal RDD is not publicly
-  * reachable from the Dataset, but it IS registered in
-  * `SparkContext.getPersistentRDDs` — so a driver-serial loop can snapshot
-  * the persisted-id set before creating a checkpoint and later release
-  * exactly the ids that appeared since, once the successor checkpoint has
-  * materialized.
+  * A checkpoint returned by [[DatasetCheckpointOps.stageCheckpoint]] is a
+  * frame whose logical plan is a single `LogicalRDD` leaf; that leaf's
+  * `rdd` is the internal RDD[InternalRow] holding the checkpoint's blocks
+  * (a lazy `localCheckpoint` registers it as persisted when it is
+  * created, not on its first action). [[DatasetCheckpointOps.release]]
+  * unpersists exactly that RDD. `Dataset.rdd.unpersist()` would NOT do
+  * it: `Dataset.rdd` wraps the internal RDD in a fresh deserializing RDD,
+  * so unpersisting the wrapper releases nothing.
   *
-  * Only valid for single-threaded loops: a concurrent persist from another
-  * thread between snapshot and release would be misattributed and
-  * unpersisted. Every graft call site (Bpe training, semanticDedup cell
-  * splitting) is a driver-serial loop, and unpersist(blocking=false) on a
-  * still-wanted block is recoverable anyway (recompute), never wrong.
+  * Loop idiom: keep the handle of the current round's checkpoint; once
+  * every checkpoint that reads it has materialized (eager ones when they
+  * are created, lazy ones at the round's first action), call
+  * `prev.release()`. Only the loop's own blocks are touched, so loops are
+  * safe on a session shared with other work.
   */
 object Checkpoints {
 
@@ -48,7 +49,29 @@ object Checkpoints {
       if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined)
         ds.checkpoint(eager)
       else ds.localCheckpoint(eager)
+
+    /** Unpersist (non-blocking) the blocks of this staged checkpoint. A
+      * no-op on a frame derived from one (a projection, say), and in
+      * reliable mode, whose checkpoint RDD is not persisted. Call it only
+      * after every checkpoint that reads this one has materialized. */
+    def release(): Unit = ds.queryExecution.logical match {
+      case r: LogicalRDD => unpersist(r)
+      case _ =>
+    }
+
+    /** Release every staged checkpoint this frame reads directly (the
+      * `LogicalRDD` leaves of its plan), such as the one a helper like
+      * [[Profile.prefixFold]] stages internally. For a caller that owns
+      * all of them, once everything derived from the frame has
+      * materialized. */
+    def releaseInputs(): Unit = ds.queryExecution.logical.foreach {
+      case r: LogicalRDD => unpersist(r)
+      case _ =>
+    }
   }
+
+  private def unpersist(r: LogicalRDD): Unit =
+    if (r.rdd.getStorageLevel != StorageLevel.NONE) r.rdd.unpersist(blocking = false)
 
   /** Run a driver-serial iterative loop with
     * `spark.sql.shuffle.partitions` derived from the loop's MEASURED
@@ -67,8 +90,8 @@ object Checkpoints {
     * adaptivity to coalesce or split in a 1-2 partition exchange, and
     * its per-stage materialization is the dominant cost at that size
     * (measured: q_topo_layers warm 6.8 s → 4.8 s, jobs 185 → 80).
-    * Restores both confs on exit. Driver-serial only, like the release
-    * helpers below. */
+    * Restores both confs on exit. Driver-serial only: it sets the
+    * session's own confs, which concurrent queries on it would see. */
   def withLoopShufflePartitions[A](spark: SparkSession, inputRows: Long)
                                   (body: => A): A = {
     val pKey = "spark.sql.shuffle.partitions"
@@ -85,21 +108,4 @@ object Checkpoints {
       finally { spark.conf.set(pKey, prevP); spark.conf.set(aKey, prevA) }
     }
   }
-
-  /** Snapshot of currently persisted RDD ids (caller-owned persists —
-    * the release helpers never touch anything in this set). */
-  def persistedIds(spark: SparkSession): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** Unpersist exactly the RDDs in `ids` (non-blocking). */
-  def releaseIds(spark: SparkSession, ids: Set[Int]): Unit = {
-    val live = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-  }
-
-  /** Ids persisted since `baseline`, excluding `known` — i.e. the blocks
-    * belonging to the checkpoint a loop materialized most recently. */
-  def freshIds(spark: SparkSession, baseline: Set[Int],
-               known: Set[Int] = Set.empty): Set[Int] =
-    persistedIds(spark) -- baseline -- known
 }

@@ -145,7 +145,6 @@ object Dedup {
         org.apache.spark.sql.types.StructField("cluster", org.apache.spark.sql.types.LongType, nullable = false)))
       return spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
     }
-    val spark = pairs.sparkSession
     import Checkpoints.DatasetCheckpointOps
     // self-only nodes (self-pair endpoints with no real edge) re-enter at
     // the end; the all-self / empty graphs short-circuit the loop entirely
@@ -157,8 +156,6 @@ object Dedup {
       p.unpersist()
       return res
     }
-    val baseline = Checkpoints.persistedIds(spark)
-    var knownIds = Set.empty[Int]
     // canonical orientation (bigger id → smaller id), self-loops dropped,
     // deduped once: both star passes preserve this invariant, so round
     // equality below is plain set equality of canonical frames
@@ -177,9 +174,7 @@ object Dedup {
       // the except runs while cur is still persisted
       converged = nextCnt == curCnt &&
         next.except(cur).limit(1).count() == 0
-      val fresh = Checkpoints.freshIds(spark, baseline, knownIds)
-      Checkpoints.releaseIds(spark, knownIds)
-      knownIds = fresh
+      cur.release()
       cur = next
       curCnt = nextCnt
       iter += 1
@@ -200,7 +195,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     res.count()
     p.unpersist()
-    Checkpoints.releaseIds(spark, knownIds)
+    cur.release()
     res
   }
 
@@ -652,11 +647,12 @@ object Dedup {
     * 1.4 s + 0.45 µs/candidate, prefix ≈ 4.9 s · (n/5000)^0.43 — see
     * OPTIMIZATION_r17.md), erring toward the prefix path because past
     * the crossover blind grows QUADRATICALLY while prefix near it costs
-    * ≤ 1.5× — the asymmetric risk at 100 TB. Env override for
-    * deployment tuning, same pattern as
-    * SPARK_GRAFT_STREAM_STATE_PARTITIONS. */
-  val DefaultBlindCandidateLimit: Long =
-    sys.env.get("SPARK_GRAFT_BLIND_LIMIT").map(_.toLong).getOrElse(16000000L)
+    * ≤ 1.5× — the asymmetric risk at 100 TB. Env override
+    * SPARK_GRAFT_BLIND_LIMIT for deployment tuning, validated as a
+    * positive integer when a call reads it (same parser as
+    * SPARK_GRAFT_STREAM_STATE_PARTITIONS). */
+  def DefaultBlindCandidateLimit: Long =
+    graft.Sessions.positiveLongEnv("SPARK_GRAFT_BLIND_LIMIT").getOrElse(16000000L)
 
   /** Pairwise n-gram Jaccard with double length-bucket blocking: each doc
     * lands in buckets floor(len/W) and floor(len/W)+1, so any pair whose
@@ -1462,28 +1458,19 @@ object Dedup {
     * Shuffle shape: shingles explode partition-locally (a generator, no
     * exchange); ONE exchange groups by shingle for the global count and
     * the count join reuses that exchange (same key); the per-doc rollup
-    * keys by id. With `fingerprint = true` the shuffle carries an 8-byte
-    * xxhash64 of each span instead of its text — the 100 TB path (an
-    * n-word string is ~n·6 bytes; the hash is 8) at the price of
-    * engine-internal keys (the oracle gate replays the raw-text form;
-    * a 64-bit collision across a corpus-scale span set is the usual
-    * negligible-probability trade, same as MinHash). */
+    * keys by id. Spans are keyed by an 8-byte hash of their text, never
+    * the text itself (an n-word string is ~n·6 bytes): duplicate counts
+    * equal the raw-text ones up to 64-bit hash collisions, the usual
+    * negligible-probability trade, same as MinHash. The DuckDB oracle
+    * gate replays the raw-text form. */
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                      n: Int, fingerprint: Boolean = false): DataFrame = {
+                      n: Int): DataFrame = {
     require(n >= 2, "duplicatedSpans: span width must be >= 2 tokens")
     val toks = df.select(col(idCol).as("__id"),
       expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w"))
-    // r17: BOTH modes key spans by their 8-byte window hash through the
-    // native ShingleHashAll kernel (values bit-identical to
-    // xxhash64(array_join(slice(__w, i, n), ' '))). The former raw-text
-    // mode built every span string via an interpreted transform/slice/
-    // array_join chain and shuffled ~6n bytes of text per span where the
-    // hash is 8 — pure shuffle width and expression CPU at any scale; the
-    // duplicate COUNTS are identical up to 64-bit hash collisions (the
-    // usual MinHash-grade trade, and the raw-text DuckDB oracle still
-    // gates the outputs). The `fingerprint` flag is retained for API
-    // compatibility; both paths are now the fingerprint path.
-    val _ = fingerprint
+    // spans are keyed by the native ShingleHashAll kernel's window
+    // hashes (bit-identical to xxhash64(array_join(slice(__w, i, n),
+    // ' '))) — no span string is ever built or shuffled
     val sh = toks.select(col("__id"),
       explode(graft.functions.ShingleHashExpression
         .shingle_hash_all(col("__w"), n)).as("__s"))
@@ -1515,22 +1502,20 @@ object Dedup {
     * single-reducer global sort) into exactly the maximal covered
     * intervals that the suffix-array formulation would emit.
     *
-    * fingerprint=true ships 8-byte window hashes through the shuffle
-    * instead of span text — the 100 TB path; output identical up to
-    * 2^-64 hash collisions (spec-asserted equal on real data).
+    * Windows are keyed by 8-byte hashes of their text, as in
+    * [[duplicatedSpans]]; output equals the raw-text intervals up to
+    * 2^-64 hash collisions (spec-asserted against a raw-text reference).
     *
     * Output: one row per maximal interval —
     * (id, span_start 1-based token index, span_end inclusive, span_len). */
   def duplicatedSpansMaximal(df: DataFrame, idCol: String, textCol: String,
-                             k: Int, fingerprint: Boolean = false): DataFrame = {
+                             k: Int): DataFrame = {
     require(k >= 2, "duplicatedSpansMaximal: window width must be >= 2 tokens")
     val toks = df.select(col(idCol).as("__id"),
       expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w"))
-    // r17: window keys are ALWAYS the native 8-byte window hashes — see
-    // duplicatedSpans (same kernel, bit-identical to xxhash64 of the
-    // joined span text; the flag is retained for API compatibility).
-    // posexplode: window start = pos + 1 (1-based token index)
-    val _ = fingerprint
+    // window keys are the native 8-byte window hashes — see
+    // duplicatedSpans; posexplode: window start = pos + 1 (1-based
+    // token index)
     val sh = toks.select(col("__id"),
       posexplode(graft.functions.ShingleHashExpression
         .shingle_hash_all(col("__w"), k)))

@@ -216,19 +216,16 @@ object Graph {
     // join probe once), so un-truncated lineage grows 3^rounds — the
     // analyzer itself becomes the bottleneck long before execution
     // (pageRank's linear-lineage note is the contrast: one reference per
-    // round needs no truncation). The previous round's blocks are
-    // released via [[Checkpoints]] once its successor materializes (the
-    // Bpe idiom); only the final round's blocks are left to GC — they
-    // back the returned frame.
+    // round needs no truncation). The previous round's checkpoint is
+    // released through its handle once its successor materializes; the
+    // final round's blocks back the returned frame.
     val spark = edges.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
     var e = edges.select(
         least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct().stageCheckpoint(true)
     var eCount = e.count()
-    var liveIds = Checkpoints.freshIds(spark, baseline)
     var rounds = 0
     var converged = eCount == 0
     // loop exchanges sized by the measured live-edge count — see
@@ -248,9 +245,7 @@ object Graph {
           .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
           .stageCheckpoint(true)
         val nextCount = next.count()
-        val fresh = Checkpoints.freshIds(spark, baseline, liveIds)
-        Checkpoints.releaseIds(spark, liveIds)
-        liveIds = fresh
+        e.release()
         e = next
         converged = nextCount == eCount || nextCount == 0
         eCount = nextCount
@@ -288,18 +283,20 @@ object Graph {
     val eRows = e.count()
     // localCheckpoint the per-round state: settled is referenced TWICE
     // per round (anti-join + union), so plain persist would still grow
-    // the LOGICAL plan 2^rounds — the kCore lineage lesson. Previous
-    // round's blocks released once the round's two checkpoints
-    // materialize; the final settled's blocks are the return value's.
+    // the LOGICAL plan 2^rounds — the kCore lineage lesson. Each round's
+    // state is ONE checkpoint (settled ids + the __new frontier flag,
+    // round 0 included); the previous round's is released once its
+    // successor materializes, the final one backs the return value.
     val spark = edges.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
     // loop exchanges sized by the measured edge count, capped at the
     // session setting — see Checkpoints.withLoopShufflePartitions
     val out = Checkpoints.withLoopShufflePartitions(spark, eRows) {
-      var frontier = sources.select(col(idCol).cast("long").as("id"))
-        .where(col("id").isNotNull).distinct().stageCheckpoint(true)
-      var settled = frontier.withColumn("hops", lit(0L)).stageCheckpoint(true)
-      var liveIds = Checkpoints.freshIds(spark, baseline)
+      var state = sources.select(col(idCol).cast("long").as("id"))
+        .where(col("id").isNotNull).distinct()
+        .select(col("id"), lit(0L).as("hops"), lit(true).as("__new"))
+        .stageCheckpoint(true)
+      var settled = state.select(col("id"), col("hops"))
+      var frontier = state.select(col("id"))
       var hop = 0L
       var frontierSize = frontier.count()
       while (frontierSize > 0 && hop < maxHops) {
@@ -320,9 +317,8 @@ object Graph {
         frontierSize = merged.where(col("__new")).count() // reads the checkpoint
         settled = merged.select(col("id"), col("hops"))
         frontier = merged.where(col("__new")).select(col("id"))
-        val fresh = Checkpoints.freshIds(spark, baseline, liveIds)
-        Checkpoints.releaseIds(spark, liveIds)
-        liveIds = fresh
+        state.release()
+        state = merged
       }
       settled
     }
@@ -363,15 +359,14 @@ object Graph {
       .distinct().persist(mem)
     val eRows = e.count()
     val spark = edges.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
     // loop exchanges sized by the measured edge count — see
     // Checkpoints.withLoopShufflePartitions
     val out = Checkpoints.withLoopShufflePartitions(spark, eRows) {
-      var best = sources.select(col(idCol).cast("long").as("id"))
+      var state = sources.select(col(idCol).cast("long").as("id"))
         .where(col("id").isNotNull).distinct()
         .withColumn("dist", lit(0L)).stageCheckpoint(true)
-      var frontier = best
-      var liveIds = Checkpoints.freshIds(spark, baseline)
+      var best = state
+      var frontier = state
       var hop = 0
       var frontierSize = frontier.count()
       while (frontierSize > 0 && hop < maxHops) {
@@ -396,9 +391,8 @@ object Graph {
         frontierSize = merged.where(col("__imp")).count() // reads the checkpoint
         best = merged.select(col("id"), col("dist"))
         frontier = merged.where(col("__imp")).select(col("id"), col("dist"))
-        val fresh = Checkpoints.freshIds(spark, baseline, liveIds)
-        Checkpoints.releaseIds(spark, liveIds)
-        liveIds = fresh
+        state.release()
+        state = merged
       }
       best
     }
@@ -424,15 +418,14 @@ object Graph {
       .distinct().persist(mem)
     val eRows = e.count()
     val spark = edges.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
     // loop exchanges sized by the measured edge count — see
     // Checkpoints.withLoopShufflePartitions
     val out = Checkpoints.withLoopShufflePartitions(spark, eRows) {
-      var layer = e.select(col("src").as("id"))
+      var state = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
         .withColumn("layer", lit(0L)).stageCheckpoint(true)
-      var frontier = layer
-      var liveIds = Checkpoints.freshIds(spark, baseline)
+      var layer = state
+      var frontier = state
       var rounds = 0
       var frontierSize = frontier.count()
       while (frontierSize > 0) {
@@ -459,9 +452,8 @@ object Graph {
         frontierSize = merged.where(col("__imp")).count() // reads the checkpoint
         layer = merged.select(col("id"), col("layer"))
         frontier = merged.where(col("__imp")).select(col("id"), col("layer"))
-        val fresh = Checkpoints.freshIds(spark, baseline, liveIds)
-        Checkpoints.releaseIds(spark, liveIds)
-        liveIds = fresh
+        state.release()
+        state = merged
       }
       layer
     }
@@ -480,11 +472,9 @@ object Graph {
   def ancestorClosure(nodes: DataFrame, idCol: String, parentCol: String,
                       maxRounds: Int = 20): DataFrame = {
     val spark = nodes.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
     var pairs = nodes.select(col(idCol).cast("long").as("id"),
         col(parentCol).cast("long").as("anc"))
       .where(col("anc").isNotNull).distinct().stageCheckpoint(true)
-    var liveIds = Checkpoints.freshIds(spark, baseline)
     var n = pairs.count()
     var rounds = 0
     var converged = n == 0
@@ -503,9 +493,7 @@ object Graph {
           .distinct().stageCheckpoint(true)
       }
       val nn = next.count()
-      val fresh = Checkpoints.freshIds(spark, baseline, liveIds)
-      Checkpoints.releaseIds(spark, liveIds)
-      liveIds = fresh
+      pairs.release()
       converged = nn == n
       pairs = next
       n = nn

@@ -438,12 +438,10 @@ object Profile {
     * recomputed past the lineage truncation), localCheckpoint otherwise.
     *
     * Memory note: the shared lazy localCheckpoint below leaves one cached
-    * RDD per call; because the returned frame is lazy there is no safe
-    * point to unpersist it here, so release is deliberately left to
-    * GC + ContextCleaner (blocks are MEMORY_AND_DISK — worst case they
-    * spill, never OOM). Long-lived sessions chaining many folds can call
-    * `spark.sparkContext.getPersistentRDDs` cleanup between queries —
-    * see [[Checkpoints]]. */
+    * RDD per call, and the returned frame reads it, so there is no safe
+    * point to release it here. Its blocks are freed by ContextCleaner
+    * once the returned frame is garbage-collected (they are
+    * MEMORY_AND_DISK — worst case they spill, never OOM). */
   def prefixFold(df: DataFrame, sortCols: Seq[Column],
                  aggs: Seq[PrefixAgg]): DataFrame = {
     require(sortCols.nonEmpty, "prefixFold: need at least one sort column")

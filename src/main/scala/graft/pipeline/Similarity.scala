@@ -264,10 +264,10 @@ object Similarity {
     * round; cells shard across reducers, and the cap — not k — bounds the
     * per-cell quadratic term, so a coarse initial k stays safe. The
     * component step shuffles (id, id) longs only. Intermediate rounds are
-    * lazily localCheckpoint'd (lineage stays flat) and the previous
-    * round's blocks are released deterministically via [[Checkpoints]];
-    * the final round's blocks are reclaimed by ContextCleaner after the
-    * consuming action.
+    * lazily localCheckpoint'd (lineage stays flat); each round's
+    * checkpoint is released through its handle once its successor
+    * materializes, and the last one once the component step has
+    * consumed every pair.
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     centroids: Array[Array[Double]], tau: Double,
@@ -276,7 +276,6 @@ object Similarity {
     require(maxCellSize > 1, s"semanticDedup: maxCellSize must be > 1, got $maxCellSize")
     require(splitK > 1, s"semanticDedup: splitK must be > 1, got $splitK")
     require(maxSplitRounds >= 0, s"semanticDedup: maxSplitRounds must be >= 0")
-    val spark = df.sparkSession
     val v = df.select(col(idCol), asDoubleVec(col(vecCol)).as("__v"))
       .repartition(col(idCol)) // materialize the cast once, not per centroid
     // cell key is a PATH string: level-0 centroid index, extended with
@@ -285,19 +284,17 @@ object Similarity {
       .withColumn("__cell", col("__cell").cast("string"))
       .select(col(idCol), col("__v"), col("__cell"))
       .stageCheckpoint(false)
-    val baseline = Checkpoints.persistedIds(spark)
-    var knownIds = Set.empty[Int]
+    var prev: Option[DataFrame] = None
     var round = 0
     var done = false
     while (round < maxSplitRounds && !done) {
       val over = celled.groupBy("__cell").agg(count(lit(1)).as("__cn"))
         .where(col("__cn") > maxCellSize).select("__cell")
       // the count materializes the current (lazy) checkpoint; only then is
-      // the PREVIOUS round's block set safe to release
+      // the PREVIOUS round's checkpoint safe to release
       val nOver = over.count()
-      val fresh = Checkpoints.freshIds(spark, baseline, knownIds)
-      Checkpoints.releaseIds(spark, knownIds)
-      knownIds = fresh
+      prev.foreach(_.release())
+      prev = Some(celled)
       if (nOver == 0L) done = true
       else {
         val members = celled.join(over, Seq("__cell"))
@@ -336,6 +333,10 @@ object Similarity {
       .where(col("cosine") >= tau)
       .select("id1", "id2")
     val clusters = Dedup.duplicateClusters(pairs)
+    // duplicateClusters materializes every pair before it returns, so no
+    // frame reads the cell rounds any more
+    prev.foreach(_.release())
+    celled.release()
     df.select(col(idCol))
       .join(clusters.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("canonical", coalesce(col("cluster"), col(idCol)))
@@ -645,7 +646,8 @@ object Similarity {
   def nnDescentGraph(df: DataFrame, idCol: String, vecCol: String,
                      k: Int = 8, rounds: Int = 3,
                      reverseCap: Int = 8): DataFrame = {
-    val (_, refined) = buildKnnGraph(df, idCol, vecCol, k, rounds, reverseCap)
+    val (init, refined) = buildKnnGraph(df, idCol, vecCol, k, rounds, reverseCap)
+    if (refined ne init) init.release() // materialized refined no longer reads it
     val wF = Window.partitionBy(col("id")).orderBy(col("cosine").desc, col("nbr"))
     refined.withColumn("rank", row_number().over(wF))
   }
@@ -679,14 +681,12 @@ object Similarity {
     // checkpoint the logical plan re-embeds the whole build per reference
     // — cost exponential in `rounds`, independent of cluster size. Stage
     // every round through a (lazy) checkpoint and release the previous
-    // round's blocks only after the successor materializes — the
-    // semanticDedup / Bpe loop idiom. The init checkpoint is NOT released
-    // by the loop (it is in the baseline set): navigableGraph returns it.
-    val init = scatterInitEdges(base, "id", "__v", k)
-      .stageCheckpoint(false)
+    // round's only after the successor materializes — the semanticDedup
+    // / Bpe loop idiom. The init checkpoint is NOT released here:
+    // navigableGraph returns it (nnDescentGraph releases it).
+    val scatter = scatterInitEdges(base, "id", "__v", k)
+    val init = scatter.stageCheckpoint(false)
     var edges = init
-    val baseline = Checkpoints.persistedIds(spark)
-    var knownIds = Set.empty[Int]
     val vecsL = base.select(col("id"), col("__v"))
     val vecsR = base.select(col("id").as("nbr"), col("__v").as("__nv"))
     // round exchanges sized by the materialized edge-table rows (n·k —
@@ -711,17 +711,19 @@ object Similarity {
         .withColumn("cosine", cosine(col("__v"), col("__nv")))
         .select("id", "nbr", "cosine")
       val w = Window.partitionBy(col("id")).orderBy(col("cosine").desc, col("nbr"))
-      edges = edges.union(scored)
+      val next = edges.union(scored)
         .groupBy("id", "nbr").agg(max(col("cosine")).as("cosine"))
         .withColumn("__r", row_number().over(w))
         .where(col("__r") <= k).drop("__r")
         .stageCheckpoint(false)
-      edges.count() // materialize this round; only then release the previous
-      val fresh = Checkpoints.freshIds(spark, baseline, knownIds)
-      Checkpoints.releaseIds(spark, knownIds)
-      knownIds = fresh
+      next.count() // materialize this round; only then release the previous
+      if (edges ne init) edges.release()
+      edges = next
     }
     }
+    // the last round has materialized (init with the first), so nothing
+    // reads the vector table or the scatter's row-position checkpoint
+    if (rounds > 0) { base.release(); scatter.releaseInputs() }
     (init, edges)
   }
 
@@ -771,8 +773,6 @@ object Similarity {
         .select("qid", "nbr", "cosine")
     var beam = score(q.select(col("qid")).crossJoin(broadcast(entryIds)))
       .stageCheckpoint(false)
-    val baseline = Checkpoints.persistedIds(spark)
-    var knownIds = Set.empty[Int]
     val wB = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("nbr"))
     // hop exchanges sized by the beam state (queries are broadcast-small
     // by this operator's contract, so the count is a cheap tiny-side
@@ -783,16 +783,17 @@ object Similarity {
       val expand = beam.select("qid", "nbr").join(out, "nbr")
         .select(col("qid"), col("__next").as("nbr"))
       val cands = beam.select("qid", "nbr").union(expand).distinct()
-      beam = score(cands)
+      val next = score(cands)
         .withColumn("__r", row_number().over(wB))
         .where(col("__r") <= beamWidth).drop("__r")
         .stageCheckpoint(false)
-      beam.count() // materialize this hop; only then release the previous
-      val fresh = Checkpoints.freshIds(spark, baseline, knownIds)
-      Checkpoints.releaseIds(spark, knownIds)
-      knownIds = fresh
+      next.count() // materialize this hop; only then release the previous
+      beam.release()
+      beam = next
     }
     }
+    // the last hop has materialized: nothing reads the staged tables
+    if (hops > 0) { base.release(); out.release() }
     beam.where(col("qid") =!= col("nbr"))
       .withColumn("rank", row_number().over(wB))
       .where(col("rank") <= k)

@@ -102,17 +102,14 @@ object WordPiece {
   def trainMerges(docs: DataFrame, textCol: String,
                   numMerges: Int): Seq[(String, String, Long, Long, Long, Double)] = {
     require(numMerges > 0, "trainMerges: numMerges must be positive")
-    val spark = docs.sparkSession
-    val baseline = Checkpoints.persistedIds(spark)
     var wt = wordTable(docs, textCol).stageCheckpoint(false)
-    var liveIds = Set.empty[Int]
+    var prev: Option[DataFrame] = None
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long, Long, Double)]
     (0 until numMerges).foreach { i =>
       val best = bestPair(wt).collect()
-      val fresh = Checkpoints.freshIds(spark, baseline, liveIds)
-      Checkpoints.releaseIds(spark, liveIds)
-      liveIds = fresh
+      prev.foreach(_.release())
+      prev = Some(wt)
       require(best.nonEmpty,
         s"trainMerges: no adjacent pairs left after $i merges — corpus too small for $numMerges")
       val r = best.head
@@ -121,7 +118,8 @@ object WordPiece {
       wt = wt.withColumn("toks", mergePair(col("toks"), r.getString(0), r.getString(1)))
         .stageCheckpoint(false)
     }
-    Checkpoints.releaseIds(spark, liveIds)
+    prev.foreach(_.release())
+    wt.release()
     merges.toSeq
   }
 

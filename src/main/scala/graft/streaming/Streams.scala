@@ -457,21 +457,9 @@ object Streams {
     val prev = spark.conf.get(key)
     val cap = try prev.toLong catch { case _: NumberFormatException => 200L }
     val derived = math.max(1L, math.min(cap, inputBytes / (32L << 20) + 1))
-    // Validate the override HERE: a malformed value would otherwise only
-    // surface deep inside query start (or be silently ignored), and a
-    // non-positive partition count is never a meaningful request.
-    val chosen = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS") match {
-      case Some(v) =>
-        val n = try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive integer, got '$v'")
-        }
-        require(n > 0,
-          s"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive integer, got '$v'")
-        n.toString
-      case None => derived.toString
-    }
-    spark.conf.set(key, chosen)
+    val chosen = graft.Sessions
+      .positiveLongEnv("SPARK_GRAFT_STREAM_STATE_PARTITIONS").getOrElse(derived)
+    spark.conf.set(key, chosen.toString)
     try body finally spark.conf.set(key, prev)
   }
 

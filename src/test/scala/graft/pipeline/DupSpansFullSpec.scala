@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 class DupSpansFullSpec extends SparkSpec {
   import spark.implicits._
 
-  private def spans(docs: Seq[(Long, String)], k: Int, fp: Boolean = false) =
+  private def spans(docs: Seq[(Long, String)], k: Int) =
     rows(Dedup.duplicatedSpansMaximal(docs.toDF("id", "text"), "id", "text",
-      k, fingerprint = fp).orderBy("id", "span_start"))
+      k).orderBy("id", "span_start"))
 
   test("whole-document duplicates cover the full token range") {
     val text = (1 to 20).map(i => s"w$i").mkString(" ")
@@ -39,11 +39,26 @@ class DupSpansFullSpec extends SparkSpec {
     assert(out == Seq(Seq(1L, 1L, 12L, 12L)))
   }
 
-  test("fingerprint mode (8-byte shuffle) emits identical intervals") {
+  test("hash-keyed windows emit the raw-text maximal intervals") {
     val docs = (0L until 40L).map { i =>
       (i, ((i % 7) to (i % 7) + 15).map(j => s"t${(i + j) % 11}").mkString(" "))
     }
-    assert(spans(docs, k = 4) == spans(docs, k = 4, fp = true))
+    val k = 4
+    // raw-text reference: count every k-window's text corpus-wide, then
+    // merge duplicated windows whose starts are within k of each other
+    val toks = docs.map { case (id, t) => id -> t.split("\\s+").toVector }
+    val counts = toks.flatMap { case (_, ws) => ws.sliding(k).map(_.mkString(" ")) }
+      .groupBy(identity).map { case (w, ws) => w -> ws.size }
+    val want = toks.sortBy(_._1).flatMap { case (id, ws) =>
+      val starts = ws.sliding(k).zipWithIndex
+        .collect { case (w, i) if counts(w.mkString(" ")) > 1 => i + 1L }.toSeq
+      starts.foldLeft(List.empty[(Long, Long)]) {
+        case ((s0, e0) :: rest, s) if s <= e0 + 1 => (s0, s + k - 1) :: rest
+        case (acc, s) => (s, s + k - 1) :: acc
+      }.reverse.map { case (s0, e0) => Seq(id, s0, e0, e0 - s0 + 1) }
+    }
+    assert(want.nonEmpty)
+    assert(spans(docs, k) == want)
   }
 
   test("ladder finds the exact longest repeated window") {

@@ -784,10 +784,6 @@ class PipelineOpsSpec extends SparkSpec {
     // doc2: 4 spans, only "a b c" duplicated (globally, via doc1)
     assert(out(1) == Seq(2L, 4L, 1L, 0.25))
     assert(out(2) == Seq(3L, 0L, 0L, 0.0))
-    // the fingerprinted (hash-keyed) scale path computes identical stats
-    val fp = rows(Dedup.duplicatedSpans(docs, "id", "t", n = 3,
-      fingerprint = true).orderBy("id"))
-    assert(fp == out)
   }
 
   test("hashedLinearScore: zero-shuffle plan, deterministic, empty text safe") {

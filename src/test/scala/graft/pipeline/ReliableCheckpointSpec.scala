@@ -17,7 +17,9 @@ import java.nio.file.Files
   * stage to fault-tolerant storage). This spec pins that the reliable
   * path (a) is actually taken — checkpoint files appear, (b) produces
   * bit-identical results for a prefix fold, a multi-round BPE train, and
-  * a multi-round BFS, and (c) restores cleanly. */
+  * a multi-round BFS, and (c) restores cleanly. The loops' per-round
+  * `release()` of their own checkpoint handles is a no-op here: a
+  * reliable checkpoint's RDD is not persisted. */
 class ReliableCheckpointSpec extends SparkSpec {
   import spark.implicits._
 

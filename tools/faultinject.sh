@@ -2,7 +2,7 @@
 # Executor-loss fault injection (round 16, verdict item #5): run the
 # iterative gates under local-cluster (separate executor JVMs) with
 # reliable checkpointing enabled, and kill -9 one executor JVM while the
-# jobs are mid-flight. The sweep proves the stageCheckpoint/releaseIds
+# jobs are mid-flight. The sweep proves the stageCheckpoint/release
 # posture survives LIVE executor loss — lost blocks and shuffle files are
 # recomputed from the reliable checkpoint, not from a lineage that was
 # already released. Oracle-compare the outputs afterwards with
@@ -19,7 +19,8 @@ SF="${1:?sfDir}"; OUT="${2:?outDir}"; KILL_AFTER="${3:-25}"; shift 3 || true
 GATES=("$@")
 if [ ${#GATES[@]} -eq 0 ]; then
   GATES=(q_ann_graph q_kcore q_bfs q_sssp q_topo_layers q_hierarchy \
-         q_pagerank q_dedup_clusters q_bpe_train q_unigram_train)
+         q_subtree_rollup q_pagerank q_dedup_clusters q_bpe_train \
+         q_bpe_train_batched q_wordpiece_train q_semdedup q_unigram_train)
 fi
 CKPT="${SPARK_GRAFT_CHECKPOINT_DIR:-/root/repo/.scratch/ckpt_fi}"
 rm -rf "$CKPT"; mkdir -p "$CKPT" "$OUT"
