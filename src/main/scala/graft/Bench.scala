@@ -21,17 +21,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.cpus
+    val reps = Sessions.positiveLongEnv("SPARK_GRAFT_REPS").getOrElse(3L).toInt
+    val spark = Sessions.build(s"local[$cpus]", cpus, appName = "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: one untimed run to absorb JVM/codegen/parquet-footer startup
     // so the first timed query isn't charged ~8s of session warmup.

@@ -31,7 +31,7 @@ object Curate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse(".scratch/curate_out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     val spark = Sessions.build(
       sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       shufflePartitions = cpus, appName = "graft-curate")

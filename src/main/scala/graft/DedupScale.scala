@@ -40,7 +40,7 @@ object DedupScale {
     val sfDir = args(0)
     val family = args(1)
     val budget = args.lift(2).map(_.toLong).getOrElse(1L << 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     val spark = Sessions.build(
       sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
       shufflePartitions = cpus, appName = s"graft-dedupscale-$family")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan for the
   * given queries (or a default set) so pushdown/broadcast/shuffle shape
   * can be reviewed. Usage: runMain graft.Explain [--stats] [sfDir] [query ...]
@@ -24,15 +22,7 @@ object Explain {
         "q_dedup_simhash", "q_skew_collect_salted", "q_text_perplexity",
         "q_winsorize_approx", "q_bucketed_join", "q_enum_storage",
         "q_multimodal_wav", "q_multimodal_mp4", "q_spec_roundtrip")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build("local[4]", "4", appName = "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profile of one or more named SparkEntry queries: per query,
   * every Spark job's wall clock, stage count and task count, plus the
@@ -13,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * before touching the algorithm).
   *
   * Usage: tools/run_main.sh graft.JobProfile q_topo_layers [more...]
-  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench.
+  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench;
+  * SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_GRAFT_AQE as in Verify.
   */
 object JobProfile {
   private final case class JobRec(id: Int, start: Long, var end: Long = -1L,
@@ -22,18 +22,10 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProfile <query> [query...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.cpus
+    val spark = Sessions.build(s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus),
+      aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true"), appName = "graft-jobprofile")
     spark.sparkContext.setLogLevel("WARN")
     // warmup (same as Bench): absorb codegen/session startup
     try SparkEntry.queries("q1_agg")(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.{BinaryExecNode, GlobalLimitExec,
   LocalLimitExec, LocalTableScanExec, SparkPlan, TakeOrderedAndProjectExec,
@@ -153,17 +152,9 @@ object PlanLint {
     }.map(_._1)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // off so executedPlan is a plain tree (AQE never introduces any
-      // flagged operator — it only upgrades sort-merge to broadcast)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE off so executedPlan is a plain tree (AQE never introduces any
+    // flagged operator — it only upgrades sort-merge to broadcast)
+    val spark = Sessions.build("local[4]", "4", aqe = "false", appName = "graft-planlint")
     spark.sparkContext.setLogLevel("ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))

@@ -19,7 +19,7 @@ import graft.pipeline.Dedup
 object ScaleStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     val spark = Sessions.build(s"local[$cpus]", shufflePartitions = cpus,
       appName = "graft-scalestats")
     spark.sparkContext.setLogLevel("WARN")

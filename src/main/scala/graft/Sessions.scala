@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** Session construction shared by the Verify main and the cross-master
-  * probe: one place that knows how to stand up a session on plain
+/** Session construction shared by every graft main and the cross-master
+  * probe, plus the one partition-scoping helper
+  * ([[Sessions.withDerivedPartitions]]). [[Sessions.build]] is one place that
+  * knows how to stand up a session on plain
   * `local[*]` AND on `local-cluster[...]`, where executors are forked as
   * SEPARATE JVMs — every broadcast, task closure, and custom-Expression
   * capture then crosses a real serialization wire, the one failure class
@@ -29,6 +32,55 @@ object Sessions {
   /** [[positiveLong]] over the environment variable `name`, if set. */
   def positiveLongEnv(name: String): Option[Long] =
     sys.env.get(name).map(positiveLong(name, _))
+
+  /** Local core count (SPARK_GRAFT_CPUS, default 32) — the mains' master
+    * width and default shuffle parallelism. */
+  def cpus: String = positiveLongEnv("SPARK_GRAFT_CPUS").getOrElse(32L).toString
+
+  /** Run `body` on a session whose `spark.sql.shuffle.partitions` is
+    * derived from the work's measured size, `clamp(size / perPartition +
+    * 1, 1, caller's setting)`, instead of the caller's core-count
+    * constant. Loops pass their state rows, stateful stream harnesses
+    * their input bytes.
+    *
+    * Why: at gate scale a round's or micro-batch's cost is per partition
+    * (job scheduling, AQE stage materialization, a state-store load +
+    * commit per partition per store), so a KB-sized round on 32
+    * partitions pays 32x the fixed cost of one task (measured on 32
+    * cores: q_topo_layers 6.8 s → 3 s). The cap means only small work
+    * narrows: at the caller's setting `body` runs on the caller
+    * unchanged. AQE is turned off only at ≤ 2 partitions, where it has
+    * nothing to coalesce or split and its per-stage materialization is
+    * the cost.
+    *
+    * The derived settings live on a child session
+    * ([[ColumnBridge.cloneSession]]); the caller's conf is never
+    * written, so concurrent queries on a shared session keep their plans.
+    * `body` rebinds its input frames to the session it is given
+    * ([[rebind]]) and a frame it returns to the caller, so later plans on
+    * it use the caller's settings. A streaming query started on the child
+    * keeps the derived count across restarts: the checkpoint's offset log
+    * pins it. `body` must not open tables with [[Tables.load]] on the
+    * child: that memo is swept only when a session's SparkContext stops,
+    * and a child's never does. */
+  def withDerivedPartitions[A](spark: SparkSession, size: Long, perPartition: Long)
+                              (body: SparkSession => A): A = {
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val n = math.max(1L, math.min(cap, size / perPartition + 1))
+    if (n >= cap) body(spark)
+    else {
+      val child = ColumnBridge.cloneSession(spark)
+      child.conf.set("spark.sql.shuffle.partitions", n.toString)
+      if (n <= 2) child.conf.set("spark.sql.adaptive.enabled", "false")
+      body(child)
+    }
+  }
+
+  /** `df` as a frame of session `s` (the same analyzed plan, planned
+    * under `s`'s conf); `df` itself when it already belongs to `s`. */
+  def rebind(df: DataFrame, s: SparkSession): DataFrame =
+    if (df.sparkSession eq s) df
+    else ColumnBridge.ofRows(s, df.queryExecution.analyzed)
 
   val Jdk17AddOpensPackages: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",

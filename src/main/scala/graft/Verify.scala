@@ -9,7 +9,7 @@ object Verify {
     // queries are dumped (fast local iteration); oracle_sql.json is always
     // written in full.
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     // Exec-config knobs for invariance sweeps: every gate's output must
     // be identical under any AQE setting / shuffle-partition count —
     // results depend on the data, never on the execution layout.

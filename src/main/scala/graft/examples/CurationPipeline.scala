@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
@@ -28,10 +27,7 @@ import graft.pipeline.{Dedup, Packing, Sampling, TextAnalysis}
   */
 object CurationPipeline {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.build("local[8]", "8", appName = "graft-curation")
     spark.sparkContext.setLogLevel("WARN")
 
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")

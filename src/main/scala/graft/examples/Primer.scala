@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Aggregates, Relational}
 import graft.operators.Aggregates.{Agg, SUM}
 import graft.pipeline.Dedup
@@ -17,10 +16,7 @@ import graft.testing.Builders
   */
 object Primer {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.build("local[4]", "4", appName = "graft-primer")
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- Part 1: the primer GroupAggregate ----

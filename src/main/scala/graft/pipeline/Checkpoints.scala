@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -73,39 +73,7 @@ object Checkpoints {
   private def unpersist(r: LogicalRDD): Unit =
     if (r.rdd.getStorageLevel != StorageLevel.NONE) r.rdd.unpersist(blocking = false)
 
-  /** Run a driver-serial iterative loop with
-    * `spark.sql.shuffle.partitions` derived from the loop's MEASURED
-    * input rows instead of the session's core-count constant — the
-    * Streams.withStatePartitions medicine applied to graph/doubling
-    * loops (optimization guide §2, r17 measurement): a round over a
-    * KB-sized frontier pays per-stage scheduling + AQE orchestration on
-    * 32-way exchanges whose data coalesces to one task anyway; with the
-    * partition count derived from the loop's own row count (~64k rows of
-    * (long, long) state per partition) a gate-scale loop runs 1-2-way
-    * and the per-round fixed cost stops multiplying. The derivation is
-    * CAPPED at the session setting, so at cluster scale (rows/64k ≥ the
-    * configured parallelism) the body runs exactly as before — this can
-    * only narrow tiny rounds, never widen real ones. AQE is disabled
-    * only when the derived count is ≤ 2: there is nothing for runtime
-    * adaptivity to coalesce or split in a 1-2 partition exchange, and
-    * its per-stage materialization is the dominant cost at that size
-    * (measured: q_topo_layers warm 6.8 s → 4.8 s, jobs 185 → 80).
-    * Restores both confs on exit. Driver-serial only: it sets the
-    * session's own confs, which concurrent queries on it would see. */
-  def withLoopShufflePartitions[A](spark: SparkSession, inputRows: Long)
-                                  (body: => A): A = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val aKey = "spark.sql.adaptive.enabled"
-    val prevP = spark.conf.get(pKey)
-    val prevA = spark.conf.get(aKey)
-    val cap = try prevP.toLong catch { case _: NumberFormatException => 200L }
-    val derived = math.max(1L, math.min(cap, inputRows / 65536L + 1))
-    if (derived >= cap) body
-    else {
-      spark.conf.set(pKey, derived.toString)
-      if (derived <= 2) spark.conf.set(aKey, "false")
-      try body
-      finally { spark.conf.set(pKey, prevP); spark.conf.set(aKey, prevA) }
-    }
-  }
+  /** Loop-state rows per shuffle partition: the `perPartition` the
+    * iterative loops pass to [[graft.Sessions.withDerivedPartitions]]. */
+  val LoopRowsPerPartition: Long = 65536L
 }

@@ -649,8 +649,7 @@ object Dedup {
     * the crossover blind grows QUADRATICALLY while prefix near it costs
     * ≤ 1.5× — the asymmetric risk at 100 TB. Env override
     * SPARK_GRAFT_BLIND_LIMIT for deployment tuning, validated as a
-    * positive integer when a call reads it (same parser as
-    * SPARK_GRAFT_STREAM_STATE_PARTITIONS). */
+    * positive integer when a call reads it (`Sessions.positiveLong`). */
   def DefaultBlindCandidateLimit: Long =
     graft.Sessions.positiveLongEnv("SPARK_GRAFT_BLIND_LIMIT").getOrElse(16000000L)
 

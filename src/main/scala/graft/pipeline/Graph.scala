@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import graft.pipeline.Checkpoints.DatasetCheckpointOps
+import graft.Sessions
+import graft.pipeline.Checkpoints.{DatasetCheckpointOps, LoopRowsPerPartition}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -127,9 +128,11 @@ object Graph {
       col("d"), col("done")).persist(mem)
     var remaining = state.where(!col("done")).count()
     var rounds = 0
+    val spark = nodes.sparkSession
     // loop exchanges sized by the unresolved-pointer count (the self-join
-    // fan-in) — see Checkpoints.withLoopShufflePartitions
-    Checkpoints.withLoopShufflePartitions(nodes.sparkSession, remaining) {
+    // fan-in) — see Sessions.withDerivedPartitions
+    state = Sessions.withDerivedPartitions(spark, remaining, LoopRowsPerPartition) { child =>
+      state = Sessions.rebind(state, child)
       while (remaining > 0) {
         rounds += 1
         require(rounds <= maxRounds,
@@ -149,6 +152,7 @@ object Graph {
         state.unpersist()
         state = next
       }
+      Sessions.rebind(state, spark)
     }
     val out = state.select(col("id"), col("anc").as("root"), col("d").as("depth"))
     out
@@ -229,9 +233,10 @@ object Graph {
     var rounds = 0
     var converged = eCount == 0
     // loop exchanges sized by the measured live-edge count — see
-    // Checkpoints.withLoopShufflePartitions (peeling only shrinks e, so
-    // the initial count is the loop's upper bound)
-    Checkpoints.withLoopShufflePartitions(spark, eCount) {
+    // Sessions.withDerivedPartitions (peeling only shrinks e, so the
+    // initial count is the loop's upper bound)
+    e = Sessions.withDerivedPartitions(spark, eCount, LoopRowsPerPartition) { child =>
+      e = Sessions.rebind(e, child)
       while (!converged) {
         rounds += 1
         require(rounds <= maxRounds,
@@ -250,6 +255,7 @@ object Graph {
         converged = nextCount == eCount || nextCount == 0
         eCount = nextCount
       }
+      Sessions.rebind(e, spark)
     }
     val out = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
@@ -289,9 +295,11 @@ object Graph {
     // successor materializes, the final one backs the return value.
     val spark = edges.sparkSession
     // loop exchanges sized by the measured edge count, capped at the
-    // session setting — see Checkpoints.withLoopShufflePartitions
-    val out = Checkpoints.withLoopShufflePartitions(spark, eRows) {
-      var state = sources.select(col(idCol).cast("long").as("id"))
+    // session setting — see Sessions.withDerivedPartitions
+    val out = Sessions.withDerivedPartitions(spark, eRows, LoopRowsPerPartition) { child =>
+      val loopE = Sessions.rebind(e, child)
+      var state = Sessions.rebind(sources, child)
+        .select(col(idCol).cast("long").as("id"))
         .where(col("id").isNotNull).distinct()
         .select(col("id"), lit(0L).as("hops"), lit(true).as("__new"))
         .stageCheckpoint(true)
@@ -306,7 +314,7 @@ object Graph {
         // replacing the r16 two-checkpoint (next, then union) round. The
         // full outer join against the reached set marks exactly the rows
         // the old anti-join produced (reached ids not yet settled).
-        val reach = e.join(frontier.withColumnRenamed("id", "src"), "src")
+        val reach = loopE.join(frontier.withColumnRenamed("id", "src"), "src")
           .select(col("dst").as("id")).distinct()
           .withColumn("__r", lit(true))
         val merged = settled.join(reach, Seq("id"), "full")
@@ -320,7 +328,7 @@ object Graph {
         state.release()
         state = merged
       }
-      settled
+      Sessions.rebind(settled, spark)
     }
     e.unpersist()
     out
@@ -360,9 +368,11 @@ object Graph {
     val eRows = e.count()
     val spark = edges.sparkSession
     // loop exchanges sized by the measured edge count — see
-    // Checkpoints.withLoopShufflePartitions
-    val out = Checkpoints.withLoopShufflePartitions(spark, eRows) {
-      var state = sources.select(col(idCol).cast("long").as("id"))
+    // Sessions.withDerivedPartitions
+    val out = Sessions.withDerivedPartitions(spark, eRows, LoopRowsPerPartition) { child =>
+      val loopE = Sessions.rebind(e, child)
+      var state = Sessions.rebind(sources, child)
+        .select(col(idCol).cast("long").as("id"))
         .where(col("id").isNotNull).distinct()
         .withColumn("dist", lit(0L)).stageCheckpoint(true)
       var best = state
@@ -371,7 +381,7 @@ object Graph {
       var frontierSize = frontier.count()
       while (frontierSize > 0 && hop < maxHops) {
         hop += 1
-        val cand = e.join(frontier.withColumnRenamed("id", "src"), "src")
+        val cand = loopE.join(frontier.withColumnRenamed("id", "src"), "src")
           .select(col("dst").as("id"), (col("dist") + col("w")).as("__c"))
           .groupBy("id").agg(min(col("__c")).as("__c"))
         // FUSED round state — see topoLayers: one checkpointed frame holds
@@ -394,7 +404,7 @@ object Graph {
         state.release()
         state = merged
       }
-      best
+      Sessions.rebind(best, spark)
     }
     e.unpersist()
     out
@@ -419,10 +429,11 @@ object Graph {
     val eRows = e.count()
     val spark = edges.sparkSession
     // loop exchanges sized by the measured edge count — see
-    // Checkpoints.withLoopShufflePartitions
-    val out = Checkpoints.withLoopShufflePartitions(spark, eRows) {
-      var state = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
+    // Sessions.withDerivedPartitions
+    val out = Sessions.withDerivedPartitions(spark, eRows, LoopRowsPerPartition) { child =>
+      val loopE = Sessions.rebind(e, child)
+      var state = loopE.select(col("src").as("id"))
+        .union(loopE.select(col("dst").as("id"))).distinct()
         .withColumn("layer", lit(0L)).stageCheckpoint(true)
       var layer = state
       var frontier = state
@@ -432,7 +443,7 @@ object Graph {
         rounds += 1
         require(rounds <= maxRounds,
           s"topoLayers: not converged after $maxRounds rounds — cycle in edge data?")
-        val cand = e.join(frontier.withColumnRenamed("id", "src"), "src")
+        val cand = loopE.join(frontier.withColumnRenamed("id", "src"), "src")
           .select(col("dst").as("id"), (col("layer") + 1L).as("__c"))
           .groupBy("id").agg(max(col("__c")).as("__c"))
         // FUSED round state (r17, guide §1/§5): ONE checkpointed frame per
@@ -455,7 +466,7 @@ object Graph {
         state.release()
         state = merged
       }
-      layer
+      Sessions.rebind(layer, spark)
     }
     e.unpersist()
     out
@@ -484,13 +495,14 @@ object Graph {
         s"ancestorClosure: still growing after $maxRounds rounds — cycle in parent data?")
       // per-round partition sizing from the CURRENT pair count (the
       // closure grows round over round, so the derivation is re-taken
-      // each round rather than once) — see withLoopShufflePartitions
-      val next = Checkpoints.withLoopShufflePartitions(spark, n) {
+      // each round rather than once) — see Sessions.withDerivedPartitions
+      val next = Sessions.withDerivedPartitions(spark, n, LoopRowsPerPartition) { child =>
         // the eager checkpoint materializes INSIDE the sized scope
-        pairs.unionByName(
-            pairs.as("x").join(pairs.as("y"), col("y.id") === col("x.anc"))
+        val p = Sessions.rebind(pairs, child)
+        Sessions.rebind(p.unionByName(
+            p.as("x").join(p.as("y"), col("y.id") === col("x.anc"))
               .select(col("x.id").as("id"), col("y.anc").as("anc")))
-          .distinct().stageCheckpoint(true)
+          .distinct().stageCheckpoint(true), spark)
       }
       val nn = next.count()
       pairs.release()

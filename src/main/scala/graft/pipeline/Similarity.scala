@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import graft.pipeline.Checkpoints.DatasetCheckpointOps
+import graft.Sessions
+import graft.pipeline.Checkpoints.{DatasetCheckpointOps, LoopRowsPerPartition}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -686,13 +687,19 @@ object Similarity {
     // navigableGraph returns it (nnDescentGraph releases it).
     val scatter = scatterInitEdges(base, "id", "__v", k)
     val init = scatter.stageCheckpoint(false)
-    var edges = init
-    val vecsL = base.select(col("id"), col("__v"))
-    val vecsR = base.select(col("id").as("nbr"), col("__v").as("__nv"))
-    // round exchanges sized by the materialized edge-table rows (n·k —
-    // the top-k cap fixes it per round); at cluster scale this saturates
-    // at the session setting — see Checkpoints.withLoopShufflePartitions
-    Checkpoints.withLoopShufflePartitions(spark, n * k) {
+    // round exchanges sized by the candidate self-join, the round's
+    // widest exchange: each node's out-neighbors plus reverse-capped
+    // in-neighbors, paired, is about n·(k + reverseCap)² rows. At cluster
+    // scale this saturates at the session setting — see
+    // Sessions.withDerivedPartitions
+    val fanOut = (k + reverseCap).toLong
+    val refined = Sessions.withDerivedPartitions(spark, n * fanOut * fanOut,
+        LoopRowsPerPartition) { child =>
+    val first = Sessions.rebind(init, child)
+    var edges = first
+    val vecs = Sessions.rebind(base, child)
+    val vecsL = vecs.select(col("id"), col("__v"))
+    val vecsR = vecs.select(col("id").as("nbr"), col("__v").as("__nv"))
     (1 to rounds).foreach { _ =>
       val wR = Window.partitionBy(col("id")).orderBy(col("cosine").desc, col("nbr"))
       val revCapped = edges
@@ -717,14 +724,15 @@ object Similarity {
         .where(col("__r") <= k).drop("__r")
         .stageCheckpoint(false)
       next.count() // materialize this round; only then release the previous
-      if (edges ne init) edges.release()
+      if (edges ne first) edges.release()
       edges = next
     }
+    if (edges eq first) init else Sessions.rebind(edges, spark)
     }
     // the last round has materialized (init with the first), so nothing
     // reads the vector table or the scatter's row-position checkpoint
     if (rounds > 0) { base.release(); scatter.releaseInputs() }
-    (init, edges)
+    (init, refined)
   }
 
   /** Beam-search top-k over a bounded-degree graph: start every query at
@@ -767,23 +775,27 @@ object Similarity {
     val rev = graph.select(col("nbr").as("nbr"), col("id").as("__next"))
     val out = fwd.union(rev).distinct()
       .stageCheckpoint(false) // joined once per hop
-    def score(cands: DataFrame): DataFrame =
+    def score(cands: DataFrame, q: DataFrame, base: DataFrame): DataFrame =
       cands.join(broadcast(q), "qid").join(base, "nbr")
         .withColumn("cosine", cosine(col("__qv"), col("__cv")))
         .select("qid", "nbr", "cosine")
-    var beam = score(q.select(col("qid")).crossJoin(broadcast(entryIds)))
+    val beam0 = score(q.select(col("qid")).crossJoin(broadcast(entryIds)), q, base)
       .stageCheckpoint(false)
     val wB = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("nbr"))
     // hop exchanges sized by the beam state (queries are broadcast-small
     // by this operator's contract, so the count is a cheap tiny-side
-    // action) — see Checkpoints.withLoopShufflePartitions
+    // action) — see Sessions.withDerivedPartitions
     val beamRows = q.count() * beamWidth
-    Checkpoints.withLoopShufflePartitions(spark, beamRows) {
+    val last = Sessions.withDerivedPartitions(spark, beamRows,
+        LoopRowsPerPartition) { child =>
+    val (hq, hbase, hout) =
+      (Sessions.rebind(q, child), Sessions.rebind(base, child), Sessions.rebind(out, child))
+    var beam = Sessions.rebind(beam0, child)
     (1 to hops).foreach { _ =>
-      val expand = beam.select("qid", "nbr").join(out, "nbr")
+      val expand = beam.select("qid", "nbr").join(hout, "nbr")
         .select(col("qid"), col("__next").as("nbr"))
       val cands = beam.select("qid", "nbr").union(expand).distinct()
-      val next = score(cands)
+      val next = score(cands, hq, hbase)
         .withColumn("__r", row_number().over(wB))
         .where(col("__r") <= beamWidth).drop("__r")
         .stageCheckpoint(false)
@@ -791,10 +803,11 @@ object Similarity {
       beam.release()
       beam = next
     }
+    Sessions.rebind(beam, spark)
     }
     // the last hop has materialized: nothing reads the staged tables
     if (hops > 0) { base.release(); out.release() }
-    beam.where(col("qid") =!= col("nbr"))
+    last.where(col("qid") =!= col("nbr"))
       .withColumn("rank", row_number().over(wB))
       .where(col("rank") <= k)
       .select(col("qid"), col("nbr").as(corpusId), col("cosine"), col("rank"))

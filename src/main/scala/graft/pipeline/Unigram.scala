@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import graft.functions.UnigramViterbiExpression.unigram_viterbi
+import graft.Sessions
+import graft.pipeline.Checkpoints.LoopRowsPerPartition
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -76,16 +78,21 @@ object Unigram {
   def train(docs: DataFrame, textCol: String,
             maxPieceLen: Int = 4, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, "unigram train: rounds must be >= 1")
-    val words = wordTable(docs, textCol).persist()
+    val spark = docs.sparkSession
+    val words0 = wordTable(docs, textCol).persist()
     try {
       // fill the persist and take the loop's sizing row count in one
-      // action; EM-round exchanges are sized by the distinct-word table
-      // (every round's aggregates key on its substrings) and capped at
-      // the session setting — see Checkpoints.withLoopShufflePartitions
-      val wordRows = words.count()
+      // action: EM-round exchanges key on the words' exploded substrings,
+      // Σ_j min(m, L − j) = L·m − m(m−1)/2 of them per word of length
+      // L ≥ m (L(L+1)/2 below m), capped at the session setting — see
+      // Sessions.withDerivedPartitions
+      val (len, m) = (length(col("word")).cast("long"), lit(maxPieceLen.toLong))
+      val occRows = words0.agg(coalesce(sum(when(len < m, len * (len + 1))
+        .otherwise(len * m * 2 - m * (m - 1))), lit(0L))).head().getLong(0) / 2
+      Sessions.withDerivedPartitions(spark, occRows, LoopRowsPerPartition) { child =>
+      val words = Sessions.rebind(words0, child)
       val chars = words.select(explode(split(col("word"), "")).as("piece"))
         .where(col("piece") =!= "").distinct()
-      Checkpoints.withLoopShufflePartitions(words.sparkSession, wordRows) {
       var pieces = substrOccurrences(words, maxPieceLen)
         .groupBy("piece").agg(sum(col("cnt")).as("score"))
       var r = 0
@@ -107,9 +114,9 @@ object Unigram {
         prev = Some(pieces)
         r += 1
       }
-      pieces
+      Sessions.rebind(pieces, spark)
       }
-    } finally { words.unpersist(); () }
+    } finally { words0.unpersist(); () }
   }
 
   /** Fertility (pieces emitted per corpus word) of a vocabulary over a

@@ -419,7 +419,7 @@ object Streams {
     * retroactive over committed output). No state store is involved:
     * the anti-join re-executes per micro-batch. */
   /** Total bytes of regular files under `p` (0 if absent) — sizes the
-    * state-partition derivation below. */
+    * state partitions (see [[StateBytesPerPartition]]). */
   private[graft] def dirBytes(p: java.nio.file.Path): Long = {
     import java.nio.file.Files
     if (!Files.exists(p)) 0L
@@ -430,38 +430,13 @@ object Streams {
     }
   }
 
-  /** Run `body` (which starts + awaits one streaming query) with
-    * `spark.sql.shuffle.partitions` — the STATE partition count for every
-    * stateful streaming operator — derived from the input size instead of
-    * inherited from the session's core-count constant.
-    *
-    * Why (optimization guide §2, measured r16): a stateful micro-batch
-    * pays one state-store load + commit PER PARTITION PER STORE PER BATCH
-    * (a stream-stream join holds 4 stores per partition), so with the
-    * session's 32 partitions a ZERO-row batch measured 2.6 s of pure
-    * store-file protocol on a 2 MB input. State partitions should scale
-    * with STATE VOLUME, not with the local core count: the derivation
-    * targets ~32 MB of input per state partition and NEVER EXCEEDS the
-    * session's own setting — at 100 TB the derivation saturates and the
-    * cluster's configured shuffle parallelism wins; on small inputs the
-    * per-partition protocol floor stops multiplying. Override with
-    * SPARK_GRAFT_STREAM_STATE_PARTITIONS for cluster deployments that
-    * want an explicit value.
-    *
-    * Restart safety: Spark pins the value in the checkpoint's offset-log
-    * metadata and reuses it on resume, so a gate's two runs cannot
-    * diverge; the conf is restored for the surrounding batch work. */
-  private[graft] def withStatePartitions[A](spark: SparkSession,
-                                            inputBytes: Long)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val cap = try prev.toLong catch { case _: NumberFormatException => 200L }
-    val derived = math.max(1L, math.min(cap, inputBytes / (32L << 20) + 1))
-    val chosen = graft.Sessions
-      .positiveLongEnv("SPARK_GRAFT_STREAM_STATE_PARTITIONS").getOrElse(derived)
-    spark.conf.set(key, chosen.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  /** Input bytes per state partition for the stateful gate harnesses
+    * ([[graft.Sessions.withDerivedPartitions]]): a micro-batch pays one
+    * state-store load + commit per partition per store (4 stores for a
+    * stream-stream join), so state partitions scale with state volume
+    * (measured r16: a zero-row batch on 32 partitions spent 2.6 s in
+    * store-file protocol on a 2 MB input). */
+  private[graft] val StateBytesPerPartition: Long = 32L << 20
 
   /** Recursively delete a directory tree if present — shared by the gate
     * harnesses so a fix to the walk applies everywhere at once. */
@@ -597,9 +572,10 @@ object Streams {
     val outDir = work.resolve("out").toString
     val ckpt = work.resolve("ckpt").toString
     val inBytes = dirBytes(in)
-    def runToCompletion(): Unit = withStatePartitions(spark, inBytes) {
+    def runToCompletion(): Unit = graft.Sessions.withDerivedPartitions(
+        spark, inBytes, StateBytesPerPartition) { child =>
       val q = parquetSink(
-        pipeline(() => readEvents(spark, in.toString, glob = "events*.parquet")),
+        pipeline(() => readEvents(child, in.toString, glob = "events*.parquet")),
         outDir, ckpt, trigger = Some(Trigger.AvailableNow()))
       q.awaitTermination()
       // per-batch rows/state metrics for Bench's stats dump (the
@@ -848,8 +824,9 @@ object Streams {
     val outDir = work.resolve("out").toString
     val ckpt = work.resolve("ckpt").toString
     val inBytes = dirBytes(in)
-    def runToCompletion(): Unit = withStatePartitions(spark, inBytes) {
-      val stream = spark.readStream.schema(docSchema)
+    def runToCompletion(): Unit = graft.Sessions.withDerivedPartitions(
+        spark, inBytes, StateBytesPerPartition) { child =>
+      val stream = child.readStream.schema(docSchema)
         .option("pathGlobFilter", "docs*.parquet").parquet(in.toString)
       val q = streamingNearDupCandidates(stream, "doc_id", "text",
         numHashes, bands, shingleLen)

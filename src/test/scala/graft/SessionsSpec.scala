@@ -1,10 +1,9 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The positive-integer parser behind the SPARK_GRAFT_* numeric
-  * overrides (blind-join candidate limit, stream state partitions). */
-class SessionsSpec extends AnyFunSuite {
+  * settings (cores, bench reps, blind-join candidate limit), and the
+  * partition derivation of the scoped loop/stream sessions. */
+class SessionsSpec extends SparkSpec {
 
   test("positiveLong accepts positive integers") {
     assert(Sessions.positiveLong("SPARK_GRAFT_BLIND_LIMIT", "16000000") == 16000000L)
@@ -19,6 +18,33 @@ class SessionsSpec extends AnyFunSuite {
       assert(ex.getMessage.contains("SPARK_GRAFT_BLIND_LIMIT must be a positive integer"),
         s"for '$raw': ${ex.getMessage}")
       assert(ex.getMessage.contains(s"'$raw'"))
+    }
+  }
+
+  test("withDerivedPartitions: clamp(size / perPartition + 1, 1, cap) on a child, AQE off at <= 2") {
+    val (p, a) = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    // (size, perPartition, caller's cap) -> (partitions, AQE, on a child?)
+    val table = Seq(
+      (0L, 64L, 8L) -> ((1L, false, true)),          // floor of 1
+      (63L, 64L, 8L) -> ((1L, false, true)),
+      (64L, 64L, 8L) -> ((2L, false, true)),         // AQE-off threshold
+      (128L, 64L, 8L) -> ((3L, true, true)),         // AQE stays on above 2
+      (6L * 64, 64L, 8L) -> ((7L, true, true)),
+      (7L * 64, 64L, 8L) -> ((8L, true, false)),     // reaches the cap: caller as is
+      (Long.MaxValue, 64L, 8L) -> ((8L, true, false)), // capped
+      (0L, 64L, 2L) -> ((1L, false, true)),
+      (0L, 64L, 1L) -> ((1L, true, false)))
+    for (((size, per, cap), (parts, aqe, child)) <- table) {
+      val caller = spark.newSession()
+      caller.conf.set(p, cap.toString)
+      caller.conf.set(a, "true")
+      val (seen, onChild) = Sessions.withDerivedPartitions(caller, size, per) { s =>
+        ((s.conf.get(p).toLong, s.conf.get(a).toBoolean), s ne caller)
+      }
+      val row = s"size=$size per=$per cap=$cap"
+      assert(seen == ((parts, aqe)), row)
+      assert(onChild == child, row)
+      assert(caller.conf.get(p) == cap.toString && caller.conf.get(a) == "true", row)
     }
   }
 }

@@ -244,6 +244,23 @@ class StreamsSpec extends SparkSpec {
       ev.where(col("event_id") % 2 === 0 && col("user_id") % 10 === 1).count())
   }
 
+  test("stateful gate harness derives state partitions on a child session, not the caller") {
+    import java.nio.file.{Files, Paths}
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val callerConf = keys.map(spark.conf.get)
+    val work = Files.createTempDirectory("graft_state_parts_spec")
+    val inBytes = Streams.dirBytes(Paths.get(sf(), "events.parquet"))
+    val derived = math.min(callerConf.head.toLong,
+      inBytes / Streams.StateBytesPerPartition + 1)
+    assert(derived < callerConf.head.toLong, "input too large to exercise the child session")
+    val out = Streams.windowedStreamGate(spark, sf(), work.toString)
+    assert(out.count() > 0)
+    assert(keys.map(spark.conf.get) == callerConf)
+    // offsets/0 = version line, then the batch metadata with its pinned conf
+    val meta = Files.readAllLines(work.resolve("ckpt/offsets/0")).get(1)
+    assert(meta.contains(s""""spark.sql.shuffle.partitions":"$derived""""), meta)
+  }
+
   test("file-source streaming over the real ns-timestamp events parquet") {
     val streamDf = Streams.readEvents(spark, sf())
     assert(streamDf.isStreaming)
