@@ -14,15 +14,17 @@ import org.apache.spark.sql.SparkSession
   * from a heavy query land on whichever query runs next — the round-3/4
   * driver benches showed sub-second codegen'd projections reading 2-3x
   * their isolated cost from exactly this (BASELINE.md drift
-  * investigations). Best-of-K measures the query, not its neighbors;
-  * clearCache prevents the opposite error (a later rep reusing a cached
-  * frame from an earlier rep and reading artificially fast).
+  * investigations). Best-of-K measures the query, not its neighbors.
+  * No rep can read an earlier rep's blocks: operator intermediates are
+  * owned by each attempt's frames (pipeline.Checkpoints), which the GC
+  * collects so ContextCleaner frees them; clearCache only drops frames
+  * cached through the session (`Relational.splitter`; no gate does).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.cpus
-    val reps = Sessions.positiveLongEnv("SPARK_GRAFT_REPS").getOrElse(3L).toInt
+    val reps = Sessions.env("SPARK_GRAFT_REPS", Sessions.positiveLong).getOrElse(3L).toInt
     val spark = Sessions.build(s"local[$cpus]", cpus, appName = "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: one untimed run to absorb JVM/codegen/parquet-footer startup
@@ -44,9 +46,9 @@ object Bench {
             (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0 }
     }
-    // Untimed inter-attempt reset: drop cached frames (no cross-rep cache
-    // reuse) and pay accumulated GC debt here instead of inside the next
-    // timed window.
+    // Untimed inter-attempt reset: drop session-cached frames, and pay
+    // accumulated GC debt here instead of inside the next timed window
+    // (the GC also lets ContextCleaner free the last attempt's blocks).
     def reset(): Unit = { spark.catalog.clearCache(); System.gc() }
 
     // Per-query JSONL record, streamed AS EACH QUERY COMPLETES (flushed

@@ -25,7 +25,8 @@ object JobProfile {
     val cpus = Sessions.cpus
     val spark = Sessions.build(s"local[$cpus]",
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus),
-      aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true"), appName = "graft-jobprofile")
+      aqe = Sessions.env("SPARK_GRAFT_AQE", Sessions.flag).getOrElse(true).toString,
+      appName = "graft-jobprofile")
     spark.sparkContext.setLogLevel("WARN")
     // warmup (same as Bench): absorb codegen/session startup
     try SparkEntry.queries("q1_agg")(spark, sfDir)

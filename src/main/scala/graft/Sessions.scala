@@ -29,13 +29,26 @@ object Sessions {
     n
   }
 
-  /** [[positiveLong]] over the environment variable `name`, if set. */
-  def positiveLongEnv(name: String): Option[Long] =
-    sys.env.get(name).map(positiveLong(name, _))
+  /** Parse a boolean setting: exactly `true` or `false`. */
+  def flag(name: String, raw: String): Boolean = {
+    require(raw == "true" || raw == "false", s"$name must be true or false, got '$raw'")
+    raw == "true"
+  }
+
+  /** Parse a time-zone setting: an id `java.time.ZoneId.of` accepts. */
+  def zoneId(name: String, raw: String): String = {
+    require(scala.util.Try(java.time.ZoneId.of(raw)).isSuccess,
+      s"$name must be a java.time.ZoneId, got '$raw'")
+    raw
+  }
+
+  /** The environment variable `name` through a parser above, if set. */
+  def env[A](name: String, parse: (String, String) => A): Option[A] =
+    sys.env.get(name).map(parse(name, _))
 
   /** Local core count (SPARK_GRAFT_CPUS, default 32) — the mains' master
     * width and default shuffle parallelism. */
-  def cpus: String = positiveLongEnv("SPARK_GRAFT_CPUS").getOrElse(32L).toString
+  def cpus: String = env("SPARK_GRAFT_CPUS", positiveLong).getOrElse(32L).toString
 
   /** Run `body` on a session whose `spark.sql.shuffle.partitions` is
     * derived from the work's measured size, `clamp(size / perPartition +

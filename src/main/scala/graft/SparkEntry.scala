@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Aggregates, Relational, Sketches}
+import graft.pipeline.Checkpoints.DatasetCheckpointOps
 import graft.operators.Aggregates._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1358,14 +1359,16 @@ object SparkEntry {
       threshold = 0.5, bucketWidth = 8, shingleLen = 2)
       .orderBy("id1", "id2")
 
-  private def qDedupClusters(s: SparkSession, d: String): DataFrame =
+  private def qDedupClusters(s: SparkSession, d: String): DataFrame = {
     // pairs -> transitive clusters (iterative min-label propagation);
     // canonical member = smallest id, verified against a recursive-CTE
     // reachability fixpoint in DuckDB
-    Dedup.duplicateClusters(
-      Dedup.lengthBucketJaccardPairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.5, bucketWidth = 8, shingleLen = 2))
-      .orderBy("id")
+    val pairs = Dedup.lengthBucketJaccardPairs(Tables.documents(s, d), "doc_id", "text",
+      threshold = 0.5, bucketWidth = 8, shingleLen = 2)
+    val out = Dedup.duplicateClusters(pairs).orderBy("id")
+    pairs.releaseInputs() // duplicateClusters materialized its result
+    out
+  }
 
   private def qDedupClustersRep(s: SparkSession, d: String): DataFrame =
     // Same clustering through the collapsed-representative path: the
@@ -2071,8 +2074,8 @@ object SparkEntry {
       .unionByName(eP).unionByName(fJ)
     val sig = Multimodal.decodeImageFeatures(corpus, "payload")
       .select(col("img_id"), col("dhash"))
-    val pairs = Dedup.hammingPairs64(sig, "img_id", "dhash", maxHamming = 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val found = Dedup.hammingPairs64(sig, "img_id", "dhash", maxHamming = 3)
+    val pairs = found.stagePersist(false)
     // planted twins MUST pair: cross-format at Hamming 0, perturbed
     // within the banding guarantee
     val nB = bSrc.count()
@@ -2097,17 +2100,22 @@ object SparkEntry {
     require(foundDF == nDE,
       s"image dedup: $foundDF of $nDE progressive<->baseline JPEG twins " +
         "paired at Hamming 0")
+    found.releaseInputs() // pairs holds the filled result
     pairs
   }
 
-  private def qImageDedup(s: SparkSession, d: String): DataFrame =
+  private def qImageDedup(s: SparkSession, d: String): DataFrame = {
     // the full image-dedup pipeline: dHash pairs -> transitive clusters
     // (the same min-label machinery as text dedup, q_dedup_clusters) —
     // canonical member = smallest img_id, so the original PNG survives
     // and its cross-format/perturbed twins collapse onto it; verified
     // against the recursive-CTE reachability fixpoint over the replayed
     // dHash pairs in DuckDB
-    Dedup.duplicateClusters(qImagePhashPairs(s, d)).orderBy("id")
+    val pairs = qImagePhashPairs(s, d)
+    val out = Dedup.duplicateClusters(pairs).orderBy("id")
+    pairs.release() // duplicateClusters materialized its result
+    out
+  }
 
   private def qMultimodalJpeg(s: SparkSession, d: String): DataFrame = {
     // Round-trip gate for the FOURTH real codec — since round 8 the FULL
@@ -2252,8 +2260,8 @@ object SparkEntry {
     val corpus = a.unionByName(b).unionByName(c)
     val sig = Multimodal.decodeAudioFeatures(corpus, "payload")
       .select(col("aud_id"), col("ahash"))
-    val pairs = Dedup.hammingPairs64(sig, "aud_id", "ahash", maxHamming = 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val found = Dedup.hammingPairs64(sig, "aud_id", "ahash", maxHamming = 3)
+    val pairs = found.stagePersist(false)
     val nB = bSrc.count()
     val foundB = pairs.where(col("id1") < 100000000L &&
       col("id2") === col("id1") + 100000000L && col("hamming") === 0).count()
@@ -2264,6 +2272,7 @@ object SparkEntry {
       col("id2") === col("id1") + 200000000L).count()
     require(foundC == nC,
       s"audio dedup: $foundC of $nC perturbed near-twins paired within the band radius")
+    found.releaseInputs() // pairs holds the filled result
     pairs.orderBy("id1", "id2")
   }
 
@@ -4143,15 +4152,15 @@ object SparkEntry {
     Tables.orders(s, d).select("o_orderkey", "o_orderdate", "o_totalprice")
       .repartitionByRange(8, col("o_orderdate"))
       .write.mode("overwrite").parquet(out)
-    val mf = Relational.fileStatsManifest(s, out, "o_orderdate").cache()
+    val mf = Relational.fileStatsManifest(s, out, "o_orderdate").stagePersist(false)
     val lo = lit("1997-01-01 00:00:00").cast("timestamp_ntz")
     val hi = lit("1997-12-31 23:59:59").cast("timestamp_ntz")
-    val total = mf.count()
+    val total = mf.count() // fills mf
     val picked = mf.where(col("max_v") >= lo && col("min_v") <= hi).count()
     require(picked < total,
       s"manifest pruning skipped nothing ($picked of $total files) — the range layout is broken")
     val scanned = Relational.manifestPrunedScan(s, mf, "o_orderdate", lo, hi)
-    mf.unpersist()
+    mf.release()
     Relational.sort(col("m"))(asDouble("sum_price")(
       Aggregates.groupAggregate(Seq("m"), Seq(
         Agg(COUNT, None, "n"),

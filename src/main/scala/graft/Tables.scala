@@ -40,17 +40,15 @@ object Tables {
   private val handles =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  /** Drop entries whose session has stopped (multi-session test runs /
-    * long-lived services must not pin dead sessions through the memo). */
-  private def sweepStopped(): Unit = {
-    val it = handles.keySet.iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-  }
-
+  /** The memoized handle of table `name` under `sfDir` for `spark`.
+    *
+    * Assumes its input is static: the file listing and inferred schema
+    * are taken on the first call per (session, path), so a directory
+    * rewritten or appended in place is served stale. Every call first
+    * drops the entries of stopped sessions, so the memo never pins a
+    * dead session (a cheap pass over a handful of entries). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (handles.size > 64) sweepStopped()
+    handles.keySet.removeIf(_._1.sparkContext.isStopped)
     handles.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
       k => k._1.read.parquet(k._2))
   }

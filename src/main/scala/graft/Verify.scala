@@ -13,14 +13,14 @@ object Verify {
     // Exec-config knobs for invariance sweeps: every gate's output must
     // be identical under any AQE setting / shuffle-partition count —
     // results depend on the data, never on the execution layout.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
+    val aqe = Sessions.env("SPARK_GRAFT_AQE", Sessions.flag).getOrElse(true).toString
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     // Semantic-config knobs: gates must also hold under the session
     // semantics a USER brings — stock Spark 4 runs ANSI on, and cluster
     // sessions need not be UTC. Sweeps replay the full oracle under
     // ansi=true and a non-UTC zone to prove no gate leans on the pins.
-    val tz = sys.env.getOrElse("SPARK_GRAFT_TZ", "UTC")
-    val ansi = sys.env.getOrElse("SPARK_GRAFT_ANSI", "false")
+    val tz = Sessions.env("SPARK_GRAFT_TZ", Sessions.zoneId).getOrElse("UTC")
+    val ansi = Sessions.env("SPARK_GRAFT_ANSI", Sessions.flag).getOrElse(false).toString
     // Speculation sweep (round 10): SPARK_GRAFT_SPECULATION=1 enables
     // spark.speculation with aggressive thresholds. On a single host the
     // scheduler never actually LAUNCHES a duplicate (TaskSetManager skips

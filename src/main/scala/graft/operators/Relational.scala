@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.Checkpoints.DatasetCheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -947,10 +948,11 @@ object Relational {
     * feeds: rows that fail the declared schema land in a quarantine
     * frame (with their raw line preserved for triage) instead of
     * aborting the load or silently nulling fields. PERMISSIVE parse +
-    * corrupt-record column; the frame is cached once because Spark
-    * forbids filtering on the corrupt column over a lazy CSV relation
-    * (the parser would need to run twice and could disagree with
-    * itself). Returns (good, quarantined) — good drops the marker
+    * corrupt-record column; the parsed frame is persisted once because
+    * Spark forbids filtering on the corrupt column over a lazy CSV
+    * relation (the parser would need to run twice and could disagree
+    * with itself). Both returned frames read it and own its blocks (see
+    * Checkpoints). Returns (good, quarantined) — good drops the marker
     * column, quarantined is (raw_line). */
   def readCsvQuarantine(spark: SparkSession, path: String,
                         schema: StructType): (DataFrame, DataFrame) = {
@@ -960,7 +962,7 @@ object Relational {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(path)
-      .cache()
+      .stagePersist(false)
     val good = raw.where(col("_corrupt_record").isNull).drop("_corrupt_record")
     val bad = raw.where(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_line"))

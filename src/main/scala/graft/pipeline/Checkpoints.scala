@@ -2,68 +2,75 @@ package graft.pipeline
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
-/** Staged checkpoints for iterative loops, released through their own
-  * handle.
+/** The one lifecycle of every intermediate an operator materializes, and
+  * the one owner of persist and unpersist in the library.
   *
-  * A checkpoint returned by [[DatasetCheckpointOps.stageCheckpoint]] is a
-  * frame whose logical plan is a single `LogicalRDD` leaf; that leaf's
-  * `rdd` is the internal RDD[InternalRow] holding the checkpoint's blocks
-  * (a lazy `localCheckpoint` registers it as persisted when it is
-  * created, not on its first action). [[DatasetCheckpointOps.release]]
-  * unpersists exactly that RDD. `Dataset.rdd.unpersist()` would NOT do
-  * it: `Dataset.rdd` wraps the internal RDD in a fresh deserializing RDD,
-  * so unpersisting the wrapper releases nothing.
+  * Two constructors, both returning a frame whose plan is one
+  * `LogicalRDD` leaf whose `rdd` holds the blocks — that frame is their
+  * one handle: [[DatasetCheckpointOps.stageCheckpoint]] truncates lineage
+  * (iterative loops, whose plans would grow every round);
+  * [[DatasetCheckpointOps.stagePersist]] keeps it (shared branches read
+  * more than once: lost blocks recompute, nothing is written to the
+  * checkpoint directory). Neither enters the session's CacheManager,
+  * which is keyed by plan, strongly held and shared by every session of
+  * the SparkContext, so there one query's cleanup could evict another's
+  * state.
   *
-  * Loop idiom: keep the handle of the current round's checkpoint; once
-  * every checkpoint that reads it has materialized (eager ones when they
-  * are created, lazy ones at the round's first action), call
-  * `prev.release()`. Only the loop's own blocks are touched, so loops are
-  * safe on a session shared with other work.
-  */
+  * One release verb, one rule: an intermediate the returned frame does
+  * not read is released with [[DatasetCheckpointOps.release]] once the
+  * result has materialized (at function exit for a scalar); one it reads
+  * belongs to that frame, and ContextCleaner unpersists it once the
+  * frame is unreachable ([[DatasetCheckpointOps.releaseInputs]] frees it
+  * earlier). Loops keep the current round's handle and release the
+  * previous one once every frame that reads it has materialized. Only an
+  * operator's own blocks are touched, so operators are safe on a shared
+  * session. (`Dataset.rdd.unpersist()` would release nothing: it wraps
+  * the internal RDD in a fresh deserializing RDD.) */
 object Checkpoints {
 
-  /** Durability-mode checkpoint — every iterative loop and shared-branch
-    * materialization in graft stages its rounds through this instead of
-    * calling `localCheckpoint` directly.
-    *
-    * `localCheckpoint` blocks live only in executor block managers: on a
-    * real cluster a lost executor loses its blocks, and because the
-    * checkpoint TRUNCATES lineage the job cannot recompute them — it
-    * fails. On a 1000-executor run executor churn is routine, so
-    * long iterative jobs (BPE training, graph rounds) need the RELIABLE
-    * variant, which writes the checkpoint to fault-tolerant storage.
-    * The knob is Spark's own: when `SparkContext.setCheckpointDir` has
-    * been called (cluster deployments point it at DFS), this stages
-    * through `Dataset.checkpoint`; otherwise it falls back to
-    * `localCheckpoint` (single-node runs, tests, bench — no extra I/O).
-    * Same laziness semantics either way, so the shared-materialization
-    * guarantees (prefixFold's pid-assignment contract) hold in both
-    * modes. Reliable-checkpoint FILES are only auto-deleted on GC when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`; cluster
-    * sessions should set it or clean the dir between jobs. */
   implicit final class DatasetCheckpointOps[T](private val ds: Dataset[T])
       extends AnyVal {
+
+    /** Durability-mode checkpoint. `localCheckpoint` blocks live only in
+      * executor block managers, and because the checkpoint truncates
+      * lineage, a lost executor fails the job. When
+      * `SparkContext.setCheckpointDir` has been called (clusters point
+      * it at DFS) this stages through the reliable `Dataset.checkpoint`,
+      * otherwise through `localCheckpoint` (single node, tests, bench).
+      * Laziness is the same either way, so prefixFold's pid-assignment
+      * contract holds in both modes; a lazy `localCheckpoint` registers
+      * its RDD as persisted when it is created. Reliable files are
+      * deleted on GC only with
+      * `spark.cleaner.referenceTracking.cleanCheckpoints=true`. */
     def stageCheckpoint(eager: Boolean): Dataset[T] =
       if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined)
         ds.checkpoint(eager)
       else ds.localCheckpoint(eager)
 
-    /** Unpersist (non-blocking) the blocks of this staged checkpoint. A
-      * no-op on a frame derived from one (a projection, say), and in
-      * reliable mode, whose checkpoint RDD is not persisted. Call it only
-      * after every checkpoint that reads this one has materialized. */
+    /** Persist (MEMORY_AND_DISK) behind this frame's own handle, lineage
+      * kept (see [[ColumnBridge.persistedLeaf]]). `eager` fills the blocks
+      * now with one job, otherwise the first action reading the frame
+      * does; under AQE, building it runs the plan's query stages either
+      * way, as a lazy checkpoint does. A rebuilt, equal plan does not
+      * find these blocks: read them through the returned frame. */
+    def stagePersist(eager: Boolean): Dataset[T] =
+      ColumnBridge.persistedLeaf(ds, eager)
+
+    /** Unpersist (non-blocking) the blocks of this staged frame. A no-op
+      * on a frame derived from one (a projection, say), and on a reliable
+      * checkpoint, whose RDD is not persisted. */
     def release(): Unit = ds.queryExecution.logical match {
       case r: LogicalRDD => unpersist(r)
       case _ =>
     }
 
-    /** Release every staged checkpoint this frame reads directly (the
+    /** Release every staged frame this frame reads directly (the
       * `LogicalRDD` leaves of its plan), such as the one a helper like
-      * [[Profile.prefixFold]] stages internally. For a caller that owns
-      * all of them, once everything derived from the frame has
-      * materialized. */
+      * [[Profile.prefixFold]] stages internally. Only for a caller that
+      * owns all of them, once everything derived has materialized. */
     def releaseInputs(): Unit = ds.queryExecution.logical.foreach {
       case r: LogicalRDD => unpersist(r)
       case _ =>

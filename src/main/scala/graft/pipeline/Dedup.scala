@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.pipeline.Checkpoints.DatasetCheckpointOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,14 +89,14 @@ object Dedup {
     // `pairs` twice (forward + swapped), so persisting only downstream of
     // it would still run the expensive candidate-pair lineage twice; and
     // the edge list is re-joined EVERY propagation round on top of that.
-    // (id, id) long pairs only — cache footprint is tiny.
+    // (id, id) long pairs only — the footprint is tiny.
     // filter BEFORE the aliasing select: after it, col(id1)/col(id2) only
     // resolve through Spark's missing-reference fallback and would bind to
     // a shadowing input column if the source ever carries literal a/b.
     val p = pairs.where(col(id1).isNotNull && col(id2).isNotNull)
       .select(col(id1).as("a"), col(id2).as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // force the cache fill with a single-scan action BEFORE the plan fans
+      .stagePersist(false)
+    // force the fill with a single-scan action BEFORE the plan fans
     // out: lazily, the canonical-orientation distinct and the self-pair
     // branch would land in one job and BOTH compute the expensive pair
     // lineage (per-partition cache population is first-writer-wins, not
@@ -138,22 +139,20 @@ object Dedup {
         if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
         i += 1
       }
-      p.unpersist()
+      p.release()
       val out = parent.keys.toSeq.map(id => org.apache.spark.sql.Row(id, find(id)))
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("cluster", org.apache.spark.sql.types.LongType, nullable = false)))
       return spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
     }
-    import Checkpoints.DatasetCheckpointOps
     // self-only nodes (self-pair endpoints with no real edge) re-enter at
     // the end; the all-self / empty graphs short-circuit the loop entirely
     if (nPairs == nSelf) {
       val res = p.where(col("a") === col("b"))
         .select(col("a").as("id"), col("a").as("cluster")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      res.count()
-      p.unpersist()
+        .stagePersist(true)
+      p.release()
       return res
     }
     // canonical orientation (bigger id → smaller id), self-loops dropped,
@@ -192,9 +191,8 @@ object Dedup {
         .join(members.select("id").unionAll(roots.select("id")),
           Seq("id"), "left_anti"))
     val res = selfOnly.foldLeft(members.unionAll(roots))(_ unionAll _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count()
-    p.unpersist()
+      .stagePersist(true)
+    p.release()
     cur.release()
     res
   }
@@ -529,14 +527,12 @@ object Dedup {
     // it, and without materialization Catalyst recomputes the whole
     // scan→shingle→hash→60-vote pipeline per side (measured 2x). One
     // (id, long) row per document — index-sized, like IVF centroids.
-    // Lifetime: the RESULT is materialized (cached + counted) before
-    // returning so this intermediate can be unpersisted here rather than
-    // leaking one cached frame per call into a long-lived session; the
-    // returned (id1, id2, hamming) frame is itself cached — far smaller
-    // than the per-doc signature lineage — and the caller may .unpersist()
-    // it when done.
+    // Lifetime: the RESULT is materialized before returning, so this
+    // intermediate is released here; the returned (id1, id2, hamming)
+    // frame is the result's own persisted leaf — far smaller than the
+    // per-doc signature lineage — freed with the frame (see Checkpoints).
     val withSig = withSimhashPortable(df, idCol, textCol, shingleLen, "sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .stagePersist(false)
     val banded = withSig.select(col(idCol), col("sig"),
       explode(transform(sequence(lit(0), lit(3)),
         b => struct(b.as("band"),
@@ -549,46 +545,9 @@ object Dedup {
         bit_count(col("sig1").bitwiseXOR(col("sig2"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize the pair set, then release the sig cache
-    withSig.unpersist()
-    leasePairFrame(out)
+      .stagePersist(true)
+    withSig.release()
     out
-  }
-
-  /** Pair frames returned (cached) by [[simhashPortablePairs]], so a
-    * long-lived session has a defined release point instead of relying on
-    * every caller to `.unpersist()`: call [[releaseCachedPairs]] at a
-    * batch boundary (Bench does, between timed attempts, via
-    * `spark.catalog.clearCache()` — this API is the targeted equivalent
-    * that does not drop unrelated caches). The queue is BOUNDED at
-    * [[MaxLeasedPairFrames]]: leasing one more unpersists the oldest, so
-    * an uncooperative caller that never releases cannot accumulate
-    * MEMORY_AND_DISK frames without limit. */
-  private val leasedPairFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Cap on concurrently cached pair frames (recent leases a caller is
-    * plausibly still consuming); beyond it the oldest is evicted. */
-  val MaxLeasedPairFrames = 4
-
-  /** Number of pair frames currently leased (visible for specs/monitors). */
-  def leasedPairCount: Int = leasedPairFrames.size
-
-  private[pipeline] def leasePairFrame(df: DataFrame): Unit = {
-    leasedPairFrames.add(df)
-    while (leasedPairFrames.size > MaxLeasedPairFrames) {
-      val oldest = leasedPairFrames.poll()
-      if (oldest != null) oldest.unpersist(blocking = false)
-    }
-  }
-
-  /** Unpersist (non-blocking) every pair frame handed out by
-    * [[simhashPortablePairs]] since the last release. Frames already
-    * unpersisted by their caller are a no-op. */
-  def releaseCachedPairs(): Unit = {
-    var df = leasedPairFrames.poll()
-    while (df != null) { df.unpersist(blocking = false); df = leasedPairFrames.poll() }
   }
 
   /** All item pairs within `maxHamming` of each other's 64-bit signature —
@@ -608,16 +567,10 @@ object Dedup {
     // from an expensive lineage (image decode + dHash), which would
     // otherwise run once PER SIDE (r16 measurement: the image gates'
     // codec pass ran twice). 9 bytes/row — the standard signature
-    // materialization at any scale.
+    // materialization at any scale. The lazy returned frame reads sig0,
+    // so sig0 lives as long as that frame (see Checkpoints).
     val sig0 = sigs.select(col(idCol), col(sigCol).as("__sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig0.count()
-    // The returned frame is lazy, so there is no in-function point where
-    // sig0 can be unpersisted; register it with the bounded lease queue so
-    // a long-lived session has a defined release point (releaseCachedPairs
-    // / eviction at MaxLeasedPairFrames) instead of leaking one cached
-    // frame per call. An evicted-then-re-executed plan just recomputes.
-    leasePairFrame(sig0)
+      .stagePersist(true)
     val banded = sig0.select(col(idCol), col("__sig"),
       explode(transform(sequence(lit(0), lit(3)),
         b => struct(b.as("band"),
@@ -651,7 +604,7 @@ object Dedup {
     * SPARK_GRAFT_BLIND_LIMIT for deployment tuning, validated as a
     * positive integer when a call reads it (`Sessions.positiveLong`). */
   def DefaultBlindCandidateLimit: Long =
-    graft.Sessions.positiveLongEnv("SPARK_GRAFT_BLIND_LIMIT").getOrElse(16000000L)
+    graft.Sessions.env("SPARK_GRAFT_BLIND_LIMIT", graft.Sessions.positiveLong).getOrElse(16000000L)
 
   /** Pairwise n-gram Jaccard with double length-bucket blocking: each doc
     * lands in buckets floor(len/W) and floor(len/W)+1, so any pair whose
@@ -753,15 +706,11 @@ object Dedup {
     // gate scale). One cache fill + cheap columnar reads wins here
     // because the table is consumed FIVE times; contrast the setsim
     // core's signature table (2 reads — recompute won the A/B there).
-    // Registered with the bounded lease queue — see hammingPairs64.
+    // The broadcast-verify frame reads it, so it belongs to that frame
+    // (see Checkpoints); the batched path releases it before returning.
     // The blind path keeps lazy docs0: it reads the table twice via
     // shuffle joins and its corpora are small by the cost gate.
-    val docs = if (useBlind) docs0 else {
-      val d = docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      leasePairFrame(d)
-      d
-    }
+    val docs = if (useBlind) docs0 else docs0.stagePersist(true)
     if (useBlind) {
       val b0 = base.select(col(idCol), col("__len"), (col("__len") / bucketWidth).cast("long").as("__b"))
       val b1 = base.select(col(idCol), col("__len"), ((col("__len") / bucketWidth).cast("long") + 1).as("__b"))
@@ -802,7 +751,8 @@ object Dedup {
       // the one-block-live contract, and Spark has no lazy "run these
       // jobs in order" plan node. The returned frame reads the persisted
       // verified-pair result (output-sized, jac >= tau survivors only);
-      // all per-pass intermediates are unpersisted before returning.
+      // the doc table and all per-pass intermediates are released before
+      // returning.
       val rawPasses = (docBytesEst + blockFloorBytes - 1) /
         math.max(blockFloorBytes, 1L)
       // NO SILENT CAP: 1024 sequential broadcast passes is already past
@@ -822,34 +772,32 @@ object Dedup {
         s"~${docBytesEst / passes} bytes/block (docBytesEst=$docBytesEst)")
       val cand = lengthBucketJaccardCandidates(df, idCol, textCol, threshold,
         bucketWidth, shingleLen, dedup = true, prebuiltDocs = Some(docs))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // sh1 fetch side: shuffled+sorted by id1 ONCE and cached — the r15
-      // shape re-exchanged the full docs1 side in every pass (total
+        .stagePersist(false)
+      // sh1 fetch side: shuffled+sorted by id1 ONCE and persisted — the
+      // r15 shape re-exchanged the full docs1 side in every pass (total
       // exchange = passes x docBytes); each pass's sort-merge join now
-      // reads the cached partitioning (cache reports its child's
+      // reads the persisted partitioning (the leaf reports its source's
       // partitioning/ordering, so only the pass's candidate ids shuffle)
       val docs1 = docs.select(col(idCol).as("id1"), col("sh").as("sh1"))
         .repartition(col("id1")).sortWithinPartitions("id1")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .stagePersist(false)
       val docs2 = docs.select(col(idCol).as("id2"), col("sh").as("sh2"))
       val parts = (0 until passes).map { j =>
-        val v = cand.where(pmod(xxhash64(col("id2")), lit(passes)) === lit(j))
+        cand.where(pmod(xxhash64(col("id2")), lit(passes)) === lit(j))
           .join(docs1, "id1") // ids-only left side: sort-merge exchange of longs
           .join(broadcast(docs2.where(
             pmod(xxhash64(col("id2")), lit(passes)) === lit(j))), "id2")
           .withColumn("jac", jaccardSortedLong(col("sh1"), col("sh2")))
           .where(col("jac") >= threshold)
           .select("id1", "id2", "jac")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        v.count() // materialize THIS pass before the next block broadcasts
-        v
+          .stagePersist(true) // THIS pass, before the next block broadcasts
       }
-      val out = parts.reduce(_ unionAll _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // materialize so every intermediate below can release
-      parts.foreach(_.unpersist())
-      docs1.unpersist()
-      cand.unpersist()
+      // materialized, so every intermediate below can release
+      val out = parts.reduce(_ unionAll _).stagePersist(true)
+      parts.foreach(_.release())
+      docs1.release()
+      cand.release()
+      docs.release()
       out
     }
   }
@@ -1389,7 +1337,7 @@ object Dedup {
     // produces each doc's sorted distinct 64-bit shingle set once; the
     // (df, hash)-sorted posting table is persisted and EAGERLY
     // materialized so prefix side, full side and both verify probes all
-    // read the same 1-row-per-doc cache instead of re-tokenizing. The
+    // read the same 1-row-per-doc table instead of re-tokenizing. The
     // rare-first prefix order ties by hash instead of by string — any
     // consistent total order is recall-safe (pigeonhole over the
     // contained side's prefix; the container side posts every token) —
@@ -1415,9 +1363,8 @@ object Dedup {
       .groupBy("__id")
       .agg(sort_array(collect_list(struct(col("__df"), col("__h")))).as("__st"),
         count(lit(1)).as("__m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lists.count() // materialize ONCE — cache fills are first-writer-wins
-    leasePairFrame(lists) // bounded release point — see hammingPairs64
+      .stagePersist(true) // ONCE — lazy fills are first-writer-wins; the
+      // returned frame reads it, so it belongs to that frame (Checkpoints)
     val pre = lists
       .withColumn("__p",
         (col("__m") - minOverlap(tau, col("__m")) + 1).cast("int"))
@@ -1553,9 +1500,9 @@ object Dedup {
     require(k >= 1, "longestRepeatedSpanLength: k must be >= 1")
     val toks = df.select(
       expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w"))
-      .persist()
+      .stagePersist(false)
     try {
-      val maxLenRow = toks.agg(max(size(col("__w")))).head()
+      val maxLenRow = toks.agg(max(size(col("__w")))).head() // fills toks
       if (maxLenRow.isNullAt(0)) return 0L // empty corpus
       val maxLen = maxLenRow.getInt(0)
       def existsDup(l: Int): Boolean = l <= maxLen && {
@@ -1580,7 +1527,7 @@ object Dedup {
         if (existsDup(mid)) lo = mid else hiFalse = mid
       }
       lo.toLong
-    } finally { toks.unpersist(); () }
+    } finally toks.release()
   }
 
   /** Survivorship / golden-record construction — the step AFTER dedup

@@ -29,11 +29,12 @@ object Events {
     * where conv = users / users-at-stage-1 (NaN-free: stage 1 always has
     * the max count).
     *
-    * Each frontier is cached: stage i's frontier feeds both stage i+1's
-    * join and the final count union, and at 100 TB a frontier is one row
-    * per converted user — orders of magnitude below the event log it
-    * summarizes. k−1 user-keyed joins total; the per-stage scans prune to
-    * `type = stage` at the source.
+    * Stage i's frontier feeds both stage i+1's join and the final count
+    * union; the whole funnel is one query, whose reused exchanges compute
+    * each frontier once, so no frontier is materialized. A frontier is
+    * one row per converted user — orders of magnitude below the event log
+    * it summarizes. k−1 user-keyed joins total; the per-stage scans prune
+    * to `type = stage` at the source.
     */
   def funnel(df: DataFrame, userCol: String, tsCol: String, typeCol: String,
              stages: Seq[String], maxGapSeconds: Option[Long] = None): DataFrame = {
@@ -44,7 +45,6 @@ object Events {
       col(typeCol).as("__t"))
     var frontier = ev.where(col("__t") === stages.head)
       .groupBy("__u").agg(min("__ts").as("__reach"))
-      .cache()
     val perStage = scala.collection.mutable.ArrayBuffer(
       frontier.select(lit(1).as("stage"), lit(stages.head).as("stage_name"), col("__u")))
     stages.zipWithIndex.drop(1).foreach { case (st, i) =>
@@ -59,7 +59,6 @@ object Events {
         .join(frontier, Seq("__u"))
         .where(inWindow)
         .groupBy("__u").agg(min("__ts").as("__reach"))
-        .cache()
       perStage += frontier.select(lit(i + 1).as("stage"), lit(st).as("stage_name"), col("__u"))
     }
     val counts = perStage.reduce(_ unionAll _)

@@ -47,27 +47,24 @@ object Graph {
                dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
     require(iters >= 1, "pageRank: need at least one iteration")
     require(dampNum > 0 && dampDen > dampNum, "pageRank: need 0 < dampNum < dampDen")
-    // One explicit materialization of the (possibly expensive) edge
-    // dedup lineage BEFORE anything references it twice: outdeg and the
-    // join both read `e`, and per-partition cache fills are
-    // first-writer-wins, not shared work — without the count() the
-    // distinct would compute once per reference inside one job.
+    // Materialize the (possibly expensive) edge lineage EAGERLY, before
+    // outdeg and the join both read `e`: lazy per-partition fills are
+    // first-writer-wins, not shared work, so it would compute once per
+    // reference inside one job.
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
+      .stagePersist(true)
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("__od"))
-    val weighted = e.join(outdeg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val weighted = e.join(outdeg, "src").stagePersist(false)
     val nodes = weighted.select(col("src").as("id"))
       .union(weighted.select(col("dst").as("id"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .stagePersist(false)
     val teleport = (Scale * (dampDen - dampNum)) / dampDen
     // Each round references the previous ranks exactly ONCE, so the
     // iteration chain is LINEAR lineage — no per-round materialization
     // needed; the whole fixed-point evaluates in one job at the end
-    // (weighted/nodes are cached, so rounds don't rescan the input).
+    // (weighted/nodes are persisted, so rounds don't rescan the input).
     var ranks = nodes.withColumn("pr", lit(Scale))
     (1 to iters).foreach { _ =>
       val contribs = weighted
@@ -79,9 +76,8 @@ object Graph {
           (lit(teleport) +
             expr(s"(${dampNum}L * coalesce(__in, 0L)) div ${dampDen}L")).as("pr"))
     }
-    val result = ranks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize before the input caches are dropped
-    e.unpersist(); weighted.unpersist(); nodes.unpersist()
+    val result = ranks.stagePersist(true) // before the inputs are released
+    e.release(); weighted.release(); nodes.release()
     result
   }
 
@@ -116,17 +112,14 @@ object Graph {
     * silently drop its subtree at the join. Output: (id, root, depth). */
   def treeRootDepth(nodes: DataFrame, idCol: String, parentCol: String,
                     maxRounds: Int = 40): DataFrame = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // roots point at themselves so a resolved pointer is a fixed point
     var state = nodes.select(col(idCol).cast("long").as("id"),
-        col(parentCol).cast("long").as("anc"),
+        when(col(parentCol).isNull, col(idCol).cast("long"))
+          .otherwise(col(parentCol).cast("long")).as("anc"),
         when(col(parentCol).isNull, 0L).otherwise(1L).as("d"),
         col(parentCol).isNull.as("done"))
-      .persist(mem)
-    // roots point at themselves so a resolved pointer is a fixed point
-    state = state.select(col("id"),
-      when(col("done"), col("id")).otherwise(col("anc")).as("anc"),
-      col("d"), col("done")).persist(mem)
-    var remaining = state.where(!col("done")).count()
+      .stagePersist(false)
+    var remaining = state.where(!col("done")).count() // fills state
     var rounds = 0
     val spark = nodes.sparkSession
     // loop exchanges sized by the unresolved-pointer count (the self-join
@@ -144,12 +137,12 @@ object Graph {
             when(col("done"), col("anc")).otherwise(col("__aanc")).as("anc"),
             when(col("done"), col("d")).otherwise(col("d") + col("__ad")).as("d"),
             (col("done") || col("__adone")).as("done"))
-          .persist(mem)
+          .stagePersist(false)
         // one action per round: the filtered count both fills the persist
-        // (first action over the cached frame) and yields the loop
+        // (first action over the persisted frame) and yields the loop
         // condition — the r16 shape paid a separate count() job first.
         remaining = next.where(!col("done")).count()
-        state.unpersist()
+        state.release()
         state = next
       }
       Sessions.rebind(state, spark)
@@ -281,12 +274,11 @@ object Graph {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               sources: DataFrame, idCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "bfsHops: maxHops must be >= 0")
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist(mem)
-    val eRows = e.count()
+      .distinct().stagePersist(false)
+    val eRows = e.count() // fills e
     // localCheckpoint the per-round state: settled is referenced TWICE
     // per round (anti-join + union), so plain persist would still grow
     // the LOGICAL plan 2^rounds — the kCore lineage lesson. Each round's
@@ -330,7 +322,7 @@ object Graph {
       }
       Sessions.rebind(settled, spark)
     }
-    e.unpersist()
+    e.release()
     out
   }
 
@@ -359,13 +351,12 @@ object Graph {
                wCol: String, sources: DataFrame, idCol: String,
                maxHops: Int): DataFrame = {
     require(maxHops >= 0, "ssspHops: maxHops must be >= 0")
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("w").isNotNull)
-      .distinct().persist(mem)
-    val eRows = e.count()
+      .distinct().stagePersist(false)
+    val eRows = e.count() // fills e
     val spark = edges.sparkSession
     // loop exchanges sized by the measured edge count — see
     // Sessions.withDerivedPartitions
@@ -406,7 +397,7 @@ object Graph {
       }
       Sessions.rebind(best, spark)
     }
-    e.unpersist()
+    e.release()
     out
   }
 
@@ -421,12 +412,11 @@ object Graph {
     * Output: (id, layer); roots (no incoming edges) are layer 0. */
   def topoLayers(edges: DataFrame, srcCol: String, dstCol: String,
                  maxRounds: Int = 40): DataFrame = {
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist(mem)
-    val eRows = e.count()
+      .distinct().stagePersist(false)
+    val eRows = e.count() // fills e
     val spark = edges.sparkSession
     // loop exchanges sized by the measured edge count — see
     // Sessions.withDerivedPartitions
@@ -468,7 +458,7 @@ object Graph {
       }
       Sessions.rebind(layer, spark)
     }
-    e.unpersist()
+    e.release()
     out
   }
 
@@ -552,7 +542,6 @@ object Graph {
     val selfLoops = raw.where(col("a") === col("b"))
       .agg(count(lit(1)).as("self_loop_rows"))
     val dir = raw.where(col("a") =!= col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val recip = dir.join(dir.select(col("b").as("a"), col("a").as("b")),
       Seq("a", "b"), "left_semi")
     val und = dir.select(least(col("a"), col("b")).as("a"),

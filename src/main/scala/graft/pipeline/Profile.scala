@@ -437,11 +437,10 @@ object Profile {
     * (localCheckpoint blocks die with their executor and CANNOT be
     * recomputed past the lineage truncation), localCheckpoint otherwise.
     *
-    * Memory note: the shared lazy localCheckpoint below leaves one cached
-    * RDD per call, and the returned frame reads it, so there is no safe
-    * point to release it here. Its blocks are freed by ContextCleaner
-    * once the returned frame is garbage-collected (they are
-    * MEMORY_AND_DISK — worst case they spill, never OOM). */
+    * Ownership: the returned frame reads the checkpoint, so the
+    * checkpoint belongs to it (the [[Checkpoints]] rule). ContextCleaner
+    * frees its blocks once the frame is unreachable; a caller done with
+    * the frame earlier calls `releaseInputs()`. */
   def prefixFold(df: DataFrame, sortCols: Seq[Column],
                  aggs: Seq[PrefixAgg]): DataFrame = {
     require(sortCols.nonEmpty, "prefixFold: need at least one sort column")
@@ -658,7 +657,6 @@ object Profile {
     val cells = df.select(predCol.as("__p"), trueCol.as("__t"))
       .where(col("__p").isNotNull && col("__t").isNotNull)
       .groupBy("__p", "__t").agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val perTrue = cells.groupBy(col("__t").as("cls"))
       .agg(sum(col("__c")).as("__row"),
         sum(when(col("__p") === col("__t"), col("__c")).otherwise(0L))
@@ -814,7 +812,6 @@ object Profile {
     val cells = df.select(aCol.as("__a"), bCol.as("__b"))
       .where(col("__a").isNotNull && col("__b").isNotNull)
       .groupBy("__a", "__b").agg(count(lit(1)).as("__c"))
-      .cache()
     val perA = cells.groupBy(col("__a").as("__k"))
       .agg(sum(col("__c")).as("__row"))
     val perB = cells.groupBy(col("__b").as("__k"))
@@ -952,7 +949,7 @@ object Profile {
       .where(col("__x").isNotNull && col("__y").isNotNull)
     val cells = base.groupBy("__g", "__x", "__y")
       .agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .stagePersist(true)
     val l = cells.select(col("__g"), col("__x").as("x1"),
       col("__y").as("y1"), col("__c").as("c1"))
     val r = cells.select(col("__g"), col("__x").as("x2"),

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.pipeline.Checkpoints.DatasetCheckpointOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -188,23 +189,20 @@ object Spatial {
     val ids = points.select(col(idCol).as("id"))
     val pairs = radiusJoinGrid(points, idCol, xCol, yCol, eps)
       .select(col("id_a"), col("id_b"))
-    // symmetric adjacency, cached: it feeds the degree count, the
-    // core-core edge build AND the border assignment
+    // symmetric adjacency, persisted: it feeds the degree count, the
+    // core-core edge build AND the border assignment. r17 A/B kept these
+    // persists (1.97 s with vs 3.11 s without — the neighbor join is
+    // expensive lineage, the opposite of the madOutliers cheap-agg case).
+    // duplicateClusters below fills both; the returned frame reads both,
+    // so they belong to it (see Checkpoints).
     val sym = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .toDF("id", "nb")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .stagePersist(false)
     val core = sym.groupBy("id").agg(count(lit(1)).as("__nbrs"))
       .where(col("__nbrs") + lit(1L) >= lit(minPts.toLong))
       .select("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r17 A/B kept these persists (1.97 s with vs 3.11 s without — the
-    // neighbor join is expensive lineage, the opposite of the madOutliers
-    // cheap-agg case) and registered them with the bounded lease queue so
-    // a long-lived session has a defined release point — see
-    // Dedup.hammingPairs64.
-    Dedup.leasePairFrame(sym)
-    Dedup.leasePairFrame(core)
+      .stagePersist(false)
     val coreEdges = sym
       .join(core, Seq("id"))
       .join(core.select(col("id").as("nb")), Seq("nb"))

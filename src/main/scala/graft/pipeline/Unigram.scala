@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.UnigramViterbiExpression.unigram_viterbi
 import graft.Sessions
-import graft.pipeline.Checkpoints.LoopRowsPerPartition
+import graft.pipeline.Checkpoints.{DatasetCheckpointOps, LoopRowsPerPartition}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,7 +79,7 @@ object Unigram {
             maxPieceLen: Int = 4, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, "unigram train: rounds must be >= 1")
     val spark = docs.sparkSession
-    val words0 = wordTable(docs, textCol).persist()
+    val words0 = wordTable(docs, textCol).stagePersist(false)
     try {
       // fill the persist and take the loop's sizing row count in one
       // action: EM-round exchanges key on the words' exploded substrings,
@@ -96,27 +96,27 @@ object Unigram {
       var pieces = substrOccurrences(words, maxPieceLen)
         .groupBy("piece").agg(sum(col("cnt")).as("score"))
       var r = 0
-      var prev: Option[DataFrame] = None
       while (r < rounds) {
         val usage = segmentUsage(words, pieces, maxPieceLen)
-        // prune unused pieces; keep all single chars (score 0 if unused)
-        pieces = usage.unionByName(
-          chars.join(usage, Seq("piece"), "left_anti")
-            .select(col("piece"), lit(0L).as("score")))
-        // materialize each round: `usage` is referenced twice above and
+        // prune unused pieces; keep all single chars (score 0 if unused).
+        // Materialize each round: `usage` is referenced twice here and
         // the rounds chain, so an unmaterialized round r re-runs every
         // earlier round 2^(depth) times inside the final job (the kCore
         // lineage lesson; measured ~2x on q_unigram_train at rounds=3).
-        // Vocabulary-sized — tens of KB at any corpus scale.
-        pieces = pieces.cache()
-        pieces.count()
-        prev.foreach(_.unpersist(false))
-        prev = Some(pieces)
+        // Vocabulary-sized — tens of KB at any corpus scale. The final
+        // round's frame is returned and owns its blocks (see Checkpoints);
+        // the first round's input is lazy, so its release is a no-op.
+        val next = usage.unionByName(
+          chars.join(usage, Seq("piece"), "left_anti")
+            .select(col("piece"), lit(0L).as("score")))
+          .stagePersist(true)
+        pieces.release()
+        pieces = next
         r += 1
       }
       Sessions.rebind(pieces, spark)
       }
-    } finally { words0.unpersist(); () }
+    } finally words0.release()
   }
 
   /** Fertility (pieces emitted per corpus word) of a vocabulary over a

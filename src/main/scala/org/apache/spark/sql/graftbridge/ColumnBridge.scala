@@ -1,9 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.storage.StorageLevel
 
 /** Bridge to Spark's Column ↔ Catalyst Expression conversion, which is
   * `private[sql]` in Spark 4 (ExpressionUtils). Lives under
@@ -21,6 +25,39 @@ object ColumnBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `ds` as `Dataset.checkpoint` builds it (executed RDD, rows copied,
+    * under a `LogicalRDD`) but persisted MEMORY_AND_DISK, lineage kept;
+    * built and, when `eager`, filled in a SQL execution (listeners see it).
+    * The leaf takes partitioning and ordering from the FINAL plan (under
+    * AQE `LogicalRDD.fromDataset` reads the adaptive wrapper, which
+    * reports none, so joins on the same keys would re-shuffle), and an
+    * eager one its measured rows and bytes, as a filled cache does. */
+  def persistedLeaf[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
+    val d = ds.asInstanceOf[classic.Dataset[T]]
+    val qe = d.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("stagePersist")) {
+      val rows = qe.executedPlan.execute().map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      val filled = if (eager) Some(rows.count()) else None
+      val plan = qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan // final once executed
+        case p => p
+      }
+      def firstLeaf(p: Partitioning): Partitioning = p match {
+        case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+        case p => p
+      }
+      val (estimated, constraints) =
+        LogicalRDD.rewriteStatsAndConstraints(d.logicalPlan, qe.optimizedPlan)
+      val stats = filled.map { n =>
+        val stored = d.sparkSession.sparkContext.getRDDStorageInfo(_.id == rows.id)
+        Statistics(stored.map(i => i.memSize + i.diskSize).sum.max(1L), Some(n))
+      }.orElse(estimated)
+      val leaf = LogicalRDD(d.logicalPlan.output, rows, firstLeaf(plan.outputPartitioning),
+        plan.outputOrdering, d.isStreaming)(d.sparkSession, stats, constraints)
+      classic.Dataset.ofRows(d.sparkSession, leaf).as[T](d.encoder)
+    }
+  }
 
   /** A child session sharing `spark`'s SparkContext, cache and catalog,
     * with a COPY of its SQL conf (`cloneSession` is `private[sql]`): conf

@@ -1,8 +1,9 @@
 package graft
 
-/** The positive-integer parser behind the SPARK_GRAFT_* numeric
-  * settings (cores, bench reps, blind-join candidate limit), and the
-  * partition derivation of the scoped loop/stream sessions. */
+/** The parsers behind the SPARK_GRAFT_* settings (positive integers for
+  * cores, bench reps and the blind-join candidate limit; flags for AQE
+  * and ANSI; the session time zone), and the partition derivation of the
+  * scoped loop/stream sessions. */
 class SessionsSpec extends SparkSpec {
 
   test("positiveLong accepts positive integers") {
@@ -18,6 +19,26 @@ class SessionsSpec extends SparkSpec {
       assert(ex.getMessage.contains("SPARK_GRAFT_BLIND_LIMIT must be a positive integer"),
         s"for '$raw': ${ex.getMessage}")
       assert(ex.getMessage.contains(s"'$raw'"))
+    }
+  }
+
+  test("flag accepts exactly true and false, naming the setting otherwise") {
+    assert(Sessions.flag("SPARK_GRAFT_AQE", "true"))
+    assert(!Sessions.flag("SPARK_GRAFT_ANSI", "false"))
+    for (raw <- Seq("", "TRUE", "False", "1", "0", "yes", " true", "true ")) {
+      val ex = intercept[IllegalArgumentException](Sessions.flag("SPARK_GRAFT_AQE", raw))
+      assert(ex.getMessage.contains(s"SPARK_GRAFT_AQE must be true or false, got '$raw'"),
+        s"for '$raw': ${ex.getMessage}")
+    }
+  }
+
+  test("zoneId accepts java.time zone ids and rejects malformed ones, naming the setting") {
+    for (raw <- Seq("UTC", "America/Los_Angeles", "Asia/Kolkata", "+05:30", "GMT-3"))
+      assert(Sessions.zoneId("SPARK_GRAFT_TZ", raw) == raw)
+    for (raw <- Seq("", "Mars/Olympus", "utc+25", "+25:00", "PST ", "America/")) {
+      val ex = intercept[IllegalArgumentException](Sessions.zoneId("SPARK_GRAFT_TZ", raw))
+      assert(ex.getMessage.contains(s"SPARK_GRAFT_TZ must be a java.time.ZoneId, got '$raw'"),
+        s"for '$raw': ${ex.getMessage}")
     }
   }
 

@@ -5,31 +5,29 @@ import graft.pipeline.Checkpoints.DatasetCheckpointOps
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-/** Block lifecycle of the iterative loops: every staged checkpoint is
-  * released through its own handle, so after an operator returns and its
-  * result has been consumed, the only RDDs it left persisted are the ones
-  * its returned frame reads; a trainer that returns a plain `Seq` leaves
-  * none. Nothing persisted by other work on the shared session is ever
-  * touched. */
+/** One lifecycle for every intermediate an operator materializes: each
+  * staged checkpoint or persist is released through its own handle or
+  * owned by the returned frame, so after an operator returns and its
+  * result has been consumed, the only RDDs it left persisted are the
+  * `LogicalRDD` leaves its returned frames read; an operator that returns
+  * a scalar or a plain `Seq` leaves none. Nothing enters the session's
+  * CacheManager, and nothing persisted by other work on the shared
+  * session is ever touched. */
 class CheckpointLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** RDD ids the frame itself holds: the LogicalRDD leaves of its plan
-    * (staged checkpoints) and the buffers of any cached relation it reads. */
-  private def heldBy(df: DataFrame): Set[Int] = {
-    val qe = df.queryExecution
-    val staged = qe.logical.collect { case r: LogicalRDD => r.rdd.id }
-    val cached = qe.withCachedData.collect {
-      case m: InMemoryRelation => m.cacheBuilder.cachedColumnBuffers.id
-    }
-    (staged ++ cached).toSet
-  }
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  /** RDD ids the frame itself holds: the LogicalRDD leaves of its plan. */
+  private def heldBy(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
 
   private def docs = Seq("low lower lowest", "new newer newest",
     "wide wider widest", "low new wide", "lower newer wider").toDF("text")
@@ -38,60 +36,151 @@ class CheckpointLifecycleSpec extends SparkSpec {
     (i.toLong, Array(math.cos(i * 0.37), math.sin(i * 0.37), (i % 5) * 0.1))
   }.toDF("id", "v")
 
-  /** One row per converted loop: the operator call, and whether it
-    * returns a frame (Some) or a consumed `Seq` (None). */
-  private val operators: Seq[(String, () => Option[DataFrame])] = Seq(
-    "Graph.kCore" -> (() => Some(Graph.kCore(
+  private def pairDocs = (0L until 60L).map { i =>
+    val base = s"alpha beta gamma delta w${i % 9} w${(i * 2) % 9} epsilon zeta"
+    (i, if (i % 3 == 0) base + s" extra${i % 5}" else base)
+  }.toDF("doc_id", "text")
+
+  private def jaccard(budget: Long) = Dedup.lengthBucketJaccardPairs(pairDocs,
+    "doc_id", "text", 0.5, prefixFilter = true, blindCandidateLimit = -1L,
+    broadcastBudgetBytes = budget, blockFloorBytes = 200L)
+
+  private def sigs = (0L until 40L).map(i => (i, (i % 10) * 0x0101010101L)).toDF("id", "sig")
+
+  private def labels = (0 until 50).map(i => (i % 4, (i * 7) % 4, i % 3, i % 5))
+    .toDF("p", "t", "g", "x")
+
+  private def csvFeed: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lifecycle_csv")
+    java.nio.file.Files.write(dir.resolve("feed.csv"),
+      java.util.Arrays.asList("1,10.5", "2,20.25", "oops,nope", "3,bad"),
+      java.nio.charset.StandardCharsets.UTF_8)
+    dir.toString
+  }
+
+  /** One row per converted operator: the call, and the frames it returns
+    * (none for a scalar or a consumed `Seq`). */
+  private val operators: Seq[(String, () => Seq[DataFrame])] = Seq(
+    "Graph.kCore" -> (() => Seq(Graph.kCore(
       Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (4L, 5L), (5L, 6L))
         .toDF("s", "d"), "s", "d", k = 2))),
-    "Graph.bfsHops" -> (() => Some(Graph.bfsHops(
+    "Graph.bfsHops" -> (() => Seq(Graph.bfsHops(
       Seq((0L, 1L), (1L, 2L), (2L, 3L), (1L, 4L), (4L, 5L)).toDF("src", "dst"),
       "src", "dst", Seq(0L).toDF("id"), "id", maxHops = 10))),
-    "Graph.ssspHops" -> (() => Some(Graph.ssspHops(
+    "Graph.ssspHops" -> (() => Seq(Graph.ssspHops(
       Seq((1L, 2L, 4L), (1L, 3L, 1L), (3L, 2L, 1L), (2L, 4L, 2L))
         .toDF("s", "d", "w"), "s", "d", "w", Seq(1L).toDF("id"), "id",
       maxHops = 5))),
-    "Graph.topoLayers" -> (() => Some(Graph.topoLayers(
+    "Graph.topoLayers" -> (() => Seq(Graph.topoLayers(
       Seq((1L, 2L), (2L, 3L), (1L, 4L), (4L, 5L), (3L, 5L)).toDF("s", "d"),
       "s", "d"))),
-    "Graph.ancestorClosure" -> (() => Some(Graph.ancestorClosure(
+    "Graph.ancestorClosure" -> (() => Seq(Graph.ancestorClosure(
       Seq((1L, None), (2L, Some(1L)), (3L, Some(2L)), (4L, Some(3L)),
         (5L, Some(4L)), (6L, Some(5L))).toDF("id", "parent"), "id", "parent"))),
-    "Bpe.trainMerges" -> { () => Bpe.trainMerges(docs, "text", 8); None },
+    "Bpe.trainMerges" -> { () => Bpe.trainMerges(docs, "text", 8); Nil },
     "Bpe.trainMergesBatched" -> { () =>
-      Bpe.trainMergesBatched(docs, "text", 8, maxBatch = 2); None },
-    "WordPiece.trainMerges" -> { () => WordPiece.trainMerges(docs, "text", 4); None },
+      Bpe.trainMergesBatched(docs, "text", 8, maxBatch = 2); Nil },
+    "WordPiece.trainMerges" -> { () => WordPiece.trainMerges(docs, "text", 4); Nil },
     "Similarity.semanticDedup" -> { () =>
       val groups = Seq(Array(1.0, 0, 0, 0), Array(0, 1.0, 0, 0),
         Array(0, 0, 1.0, 0), Array(0, 0, 0, 1.0))
       val data = (0 until 60).map(i => (i.toLong, groups(i % 4))).toDF("id", "v")
-      Some(Similarity.semanticDedup(data, "id", "v", Array(Array(1.0, 1, 1, 1)),
+      Seq(Similarity.semanticDedup(data, "id", "v", Array(Array(1.0, 1, 1, 1)),
         tau = 0.9, maxCellSize = 10, splitK = 8, maxSplitRounds = 3))
     },
-    "Similarity.nnDescentGraph" -> (() => Some(Similarity.nnDescentGraph(
+    "Similarity.nnDescentGraph" -> (() => Seq(Similarity.nnDescentGraph(
       vectors(40), "id", "v", k = 4, rounds = 2, reverseCap = 4))),
-    "Similarity.navigableGraph" -> (() => Some(Similarity.navigableGraph(
+    "Similarity.navigableGraph" -> (() => Seq(Similarity.navigableGraph(
       vectors(40), "id", "v", k = 4, rounds = 2, reverseCap = 4))),
     "Similarity.beamSearchTopK" -> { () =>
       val ring = (0L until 40L).flatMap(i => Seq((i, (i + 1) % 40), (i, (i + 7) % 40)))
         .toDF("id", "nbr")
       val q = vectors(5).select(col("id").as("qid"), col("v").as("qv"))
-      Some(Similarity.beamSearchTopK(ring, vectors(40), "id", "v", q, "qid", "qv",
+      Seq(Similarity.beamSearchTopK(ring, vectors(40), "id", "v", q, "qid", "qv",
         k = 3, beamWidth = 4, hops = 3, entries = 2))
     },
-    "Dedup.duplicateClusters" -> (() => Some(Dedup.duplicateClusters(
+    "Dedup.duplicateClusters" -> (() => Seq(Dedup.duplicateClusters(
       Seq((2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L), (6L, 5L), (10L, 11L))
-        .toDF("id1", "id2"), smallGraphLimit = 0))))
+        .toDF("id1", "id2"), smallGraphLimit = 0))),
+    "Dedup.duplicateClusters small graph" -> (() => Seq(Dedup.duplicateClusters(
+      Seq((2L, 1L), (3L, 2L), (10L, 11L), (7L, 7L)).toDF("id1", "id2")))),
+    "Dedup.simhashPortablePairs" -> (() => Seq(
+      Dedup.simhashPortablePairs(pairDocs, "doc_id", "text"))),
+    "Dedup.hammingPairs64" -> (() => Seq(Dedup.hammingPairs64(sigs, "id", "sig"))),
+    "Dedup.lengthBucketJaccardPairs broadcast verify" -> (() => Seq(jaccard(1L << 30))),
+    "Dedup.lengthBucketJaccardPairs batched verify" -> (() => Seq(jaccard(0L))),
+    "Dedup.containmentPairs" -> (() => Seq(
+      Dedup.containmentPairs(pairDocs, "doc_id", "text", 0.8))),
+    "Dedup.longestRepeatedSpanLength" -> { () =>
+      Dedup.longestRepeatedSpanLength(pairDocs, "doc_id", "text", k = 2); Nil },
+    "Graph.pageRank" -> (() => Seq(Graph.pageRank(
+      Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("s", "d"), "s", "d", iters = 3))),
+    "Graph.treeRootDepth" -> (() => Seq(Graph.treeRootDepth(
+      Seq((1L, None), (2L, Some(1L)), (3L, Some(2L)), (4L, Some(3L)), (5L, Some(1L)))
+        .toDF("id", "parent"), "id", "parent"))),
+    "Graph.graphSummary" -> (() => Seq(Graph.graphSummary(
+      Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 3L)).toDF("s", "d"), "s", "d"))),
+    "Spatial.dbscan" -> (() => Seq(Spatial.dbscan(
+      (0L until 30L).map(i => (i, (i % 6) * 10L + (i / 6) * 100L, (i / 6) * 5L))
+        .toDF("id", "x", "y"), "id", "x", "y", eps = 15L, minPts = 3))),
+    "Unigram.train" -> (() => Seq(Unigram.train(docs, "text", maxPieceLen = 3, rounds = 2))),
+    "Events.funnel" -> (() => Seq(Events.funnel(
+      Seq((1L, 1L, "view"), (1L, 2L, "click"), (2L, 1L, "view"), (1L, 3L, "buy"))
+        .toDF("u", "t", "tp").withColumn("ts", col("t").cast("timestamp")),
+      "u", "ts", "tp", Seq("view", "click", "buy")))),
+    "Profile.macroF1" -> (() => Seq(Profile.macroF1(labels, col("p"), col("t")))),
+    "Profile.cohensKappa" -> (() => Seq(Profile.cohensKappa(labels, col("p"), col("t")))),
+    "Profile.kendallTau" -> (() => Seq(Profile.kendallTau(labels, "g", "x", "p"))),
+    "Relational.readCsvQuarantine" -> { () =>
+      val (good, bad) = graft.operators.Relational.readCsvQuarantine(spark, csvFeed,
+        StructType(Seq(StructField("k", LongType), StructField("v", DoubleType))))
+      Seq(good, bad)
+    }) ++ Seq("q_image_dedup", "q_audio_phash", "q_manifest_prune").map { q =>
+      s"SparkEntry.$q" -> (() => Seq(graft.SparkEntry.queries(q)(spark, sf())))
+    }
 
   operators.foreach { case (name, run) =>
     test(s"$name: only blocks the returned frame reads stay persisted") {
+      spark.catalog.clearCache() // entries other suites left behind
       val before = persisted
       val out = run()
       out.foreach(_.collect())
-      val leaked = persisted -- before -- out.map(heldBy).getOrElse(Set.empty)
+      assert(cacheManager.isEmpty, s"$name left a CacheManager entry")
+      val leaked = persisted -- before -- out.flatMap(heldBy)
       assert(leaked.isEmpty,
-        s"$name left ${leaked.size} persisted RDD(s) it does not return: $leaked")
+        s"$name left ${leaked.size} persisted RDD(s) its frames do not read: $leaked")
     }
+  }
+
+  test("a held hammingPairs64 frame keeps its signatures across later calls") {
+    val acc = spark.sparkContext.longAccumulator("sigRows")
+    val counted = udf { (s: Long) => acc.add(1); s }.asNondeterministic()
+    val held = Dedup.hammingPairs64(sigs.withColumn("sig", counted(col("sig"))), "id", "sig")
+    // a fresh plan per consumption: re-running one plan would reuse its
+    // shuffle files and never read the signature input again
+    def consume() = held.select("*").collect().toSet
+    val first = consume()
+    val seen = acc.value
+    assert(seen >= 40L)
+    (1 to 4).foreach(_ => Dedup.hammingPairs64(sigs, "id", "sig").collect())
+    assert(consume() == first)
+    assert(acc.value == seen, "the held frame recomputed its signature input")
+  }
+
+  test("stagePersist keeps the final plan's partitioning, and joins on it stay exact") {
+    val agg = (1 to 200).map(i => (i % 17, i)).toDF("k", "v")
+      .groupBy("k").agg(sum("v").as("s"))
+    val staged = agg.stagePersist(true)
+    val regrouped = staged.groupBy("k").agg(max("s").as("m")).queryExecution.executedPlan
+    val initial = regrouped match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    assert(initial.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.isEmpty, s"re-shuffled a frame already partitioned by k:\n$initial")
+    val other = (0 until 17).map(k => (k, k * 10)).toDF("k", "w").repartition(3, col("k"))
+    assert(rows(staged.join(other, "k").orderBy("k")) == rows(agg.join(other, "k").orderBy("k")))
   }
 
   test("release unpersists the checkpoint's own RDD and ignores other frames") {

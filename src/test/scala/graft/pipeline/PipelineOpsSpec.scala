@@ -587,31 +587,6 @@ class PipelineOpsSpec extends SparkSpec {
       .select("ids").orderBy("doc_id")) == Seq(Seq(Seq(-1, -1, -1, -1)), Seq(Seq())))
   }
 
-  // ===== Cached-pair lease bounding =====
-
-  test("leased pair frames are bounded: the N+1th lease evicts the oldest") {
-    import org.apache.spark.storage.StorageLevel
-    Dedup.releaseCachedPairs() // clean slate regardless of suite order
-    assert(Dedup.leasedPairCount == 0)
-    val frames = (1 to Dedup.MaxLeasedPairFrames + 1).map { i =>
-      val df = Seq((i.toLong, i.toLong)).toDF("id1", "id2")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      Dedup.leasePairFrame(df)
-      df
-    }
-    // the queue never exceeds the cap, and the OLDEST lease was
-    // unpersisted — an uncooperative caller cannot accumulate frames
-    assert(Dedup.leasedPairCount == Dedup.MaxLeasedPairFrames)
-    assert(frames.head.storageLevel == StorageLevel.NONE,
-      "oldest lease must be evicted/unpersisted")
-    assert(frames.last.storageLevel != StorageLevel.NONE,
-      "newest lease must stay cached")
-    Dedup.releaseCachedPairs()
-    assert(Dedup.leasedPairCount == 0)
-    assert(frames.forall(_.storageLevel == StorageLevel.NONE))
-  }
-
   // ===== Histogram =====
 
   test("histogram: mass-conserving bins with under/overflow and NULL buckets") {

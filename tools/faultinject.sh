@@ -5,7 +5,9 @@
 # jobs are mid-flight. The sweep proves the stageCheckpoint/release
 # posture survives LIVE executor loss — lost blocks and shuffle files are
 # recomputed from the reliable checkpoint, not from a lineage that was
-# already released. Oracle-compare the outputs afterwards with
+# already released. The last four default gates persist shared-branch
+# intermediates (stagePersist), whose lost blocks must recompute from
+# lineage. Oracle-compare the outputs afterwards with
 #   python3 tools/check.py <sfDir> <outDir> --skip-verify --json \
 #     CORRECTNESS_faultinject.json <gates...>
 #
@@ -20,7 +22,8 @@ GATES=("$@")
 if [ ${#GATES[@]} -eq 0 ]; then
   GATES=(q_ann_graph q_kcore q_bfs q_sssp q_topo_layers q_hierarchy \
          q_subtree_rollup q_pagerank q_dedup_clusters q_bpe_train \
-         q_bpe_train_batched q_wordpiece_train q_semdedup q_unigram_train)
+         q_bpe_train_batched q_wordpiece_train q_semdedup q_unigram_train \
+         q_dbscan q_containment_join q_dedup_ngram q_image_dedup)
 fi
 CKPT="${SPARK_GRAFT_CHECKPOINT_DIR:-/root/repo/.scratch/ckpt_fi}"
 rm -rf "$CKPT"; mkdir -p "$CKPT" "$OUT"
