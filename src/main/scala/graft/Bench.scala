@@ -8,17 +8,17 @@ import org.apache.spark.sql.SparkSession
   * unit of measurement is a whole query plan, wall-clock.
   *
   * Timing methodology (round 5): per-query BEST-OF-K (K=3, or 2 once the
-  * first run reaches 4 s), with `spark.catalog.clearCache()` +
-  * `System.gc()` run UNTIMED between attempts. Rationale: all ~90 queries
-  * share one JVM, so GC debt, page-cache churn and codegen-cache growth
-  * from a heavy query land on whichever query runs next — the round-3/4
-  * driver benches showed sub-second codegen'd projections reading 2-3x
-  * their isolated cost from exactly this (BASELINE.md drift
-  * investigations). Best-of-K measures the query, not its neighbors.
+  * first run reaches 4 s), with `System.gc()` run UNTIMED between
+  * attempts. Rationale: all ~90 queries share one JVM, so GC debt,
+  * page-cache churn and codegen-cache growth from a heavy query land on
+  * whichever query runs next — the round-3/4 driver benches showed
+  * sub-second codegen'd projections reading 2-3x their isolated cost
+  * from exactly this (BASELINE.md drift investigations). Best-of-K
+  * measures the query, not its neighbors.
   * No rep can read an earlier rep's blocks: operator intermediates are
   * owned by each attempt's frames (pipeline.Checkpoints), which the GC
-  * collects so ContextCleaner frees them; clearCache only drops frames
-  * cached through the session (`Relational.splitter`; no gate does).
+  * collects so ContextCleaner frees them; nothing in the library enters
+  * the session's CacheManager, so there is no cache to clear.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -46,10 +46,9 @@ object Bench {
             (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0 }
     }
-    // Untimed inter-attempt reset: drop session-cached frames, and pay
-    // accumulated GC debt here instead of inside the next timed window
-    // (the GC also lets ContextCleaner free the last attempt's blocks).
-    def reset(): Unit = { spark.catalog.clearCache(); System.gc() }
+    // Untimed inter-attempt reset: pay GC debt here, not in the next timed
+    // window; the GC also lets ContextCleaner free the last attempt's blocks.
+    def reset(): Unit = System.gc()
 
     // Per-query JSONL record, streamed AS EACH QUERY COMPLETES (flushed
     // line-by-line): the one-line suite JSON outgrew the driver's captured

@@ -24,7 +24,7 @@ object JobProfile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.cpus
     val spark = Sessions.build(s"local[$cpus]",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus),
+      Sessions.env("SPARK_GRAFT_SHUFFLE_PARTITIONS", Sessions.positiveLong).fold(cpus)(_.toString),
       aqe = Sessions.env("SPARK_GRAFT_AQE", Sessions.flag).getOrElse(true).toString,
       appName = "graft-jobprofile")
     spark.sparkContext.setLogLevel("WARN")
@@ -51,7 +51,7 @@ object JobProfile {
 
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
-      spark.catalog.clearCache(); System.gc()
+      System.gc()
       jobs.clear(); order.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

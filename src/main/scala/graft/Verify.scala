@@ -14,7 +14,7 @@ object Verify {
     // be identical under any AQE setting / shuffle-partition count —
     // results depend on the data, never on the execution layout.
     val aqe = Sessions.env("SPARK_GRAFT_AQE", Sessions.flag).getOrElse(true).toString
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    val shufflePartitions = Sessions.env("SPARK_GRAFT_SHUFFLE_PARTITIONS", Sessions.positiveLong).fold(cpus)(_.toString)
     // Semantic-config knobs: gates must also hold under the session
     // semantics a USER brings — stock Spark 4 runs ANSI on, and cluster
     // sessions need not be UTC. Sweeps replay the full oracle under
@@ -46,10 +46,8 @@ object Verify {
       executorMem = sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"),
       appName = "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
-    // Durability-mode sweeps: with a checkpoint dir set, every staged
-    // materialization (prefixFold, BPE, graph rounds, semanticDedup)
-    // goes through RELIABLE Dataset.checkpoint — the cluster posture
-    // (see Checkpoints.stageCheckpoint) — instead of localCheckpoint.
+    // Durability-mode sweeps: with a checkpoint dir set, stageCheckpoint
+    // writes reliable files (the cluster posture), not local executor blocks.
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
     new java.io.File(outDir).mkdirs()

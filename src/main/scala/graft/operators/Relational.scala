@@ -864,9 +864,8 @@ object Relational {
   def except(a: DataFrame, b: DataFrame): DataFrame = a.except(b)
 
   /** BufferedSplitter — share one stream among N consumers (reference:
-    * splitter.h:79-120). In Spark, DAG reuse is native; cache() makes the
-    * shared scan explicit. */
-  def splitter(df: DataFrame): DataFrame = df.cache()
+    * splitter.h:79-120): a lazy stagePersist the returned frame owns. */
+  def splitter(df: DataFrame): DataFrame = df.stagePersist(false)
 
   /** Coalesce — zip columns of N equal-length inputs side by side; fails on
     * duplicate names (reference: cursor/core/coalesce.h:36-44 — NOT SQL

@@ -70,7 +70,7 @@ object Bpe {
     * before `numMerges` (a degenerate corpus, not a silent short list). */
   def trainMerges(docs: DataFrame, textCol: String, numMerges: Int): Seq[(String, String, Long)] = {
     require(numMerges > 0, "trainMerges: numMerges must be positive")
-    // LAZY localCheckpoint instead of persist (round 8): caching alone
+    // LAZY stageCheckpoint instead of a plain persist (round 8): caching alone
     // keeps the full logical plan — one nested merge HOF per round — and
     // past a few dozen rounds plan analysis itself OOMs the driver.
     // Lazy checkpointing truncates lineage when the round's collect
@@ -137,7 +137,7 @@ object Bpe {
                          maxBatch: Int = 32): Seq[(String, String, Long)] = {
     require(numMerges > 0, "trainMergesBatched: numMerges must be positive")
     require(maxBatch >= 1, "trainMergesBatched: maxBatch must be >= 1")
-    // lazy localCheckpoint, the [[trainMerges]] pattern: truncates the
+    // lazy stageCheckpoint, the [[trainMerges]] pattern: truncates the
     // accumulated per-round HOF-chain lineage (which otherwise OOMs the
     // driver's analyzer past a few dozen rounds) while keeping ONE job
     // per round — the round's candidate collect materializes the table,

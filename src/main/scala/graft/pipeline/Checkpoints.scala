@@ -8,16 +8,25 @@ import org.apache.spark.storage.StorageLevel
 /** The one lifecycle of every intermediate an operator materializes, and
   * the one owner of persist and unpersist in the library.
   *
-  * Two constructors, both returning a frame whose plan is one
-  * `LogicalRDD` leaf whose `rdd` holds the blocks — that frame is their
-  * one handle: [[DatasetCheckpointOps.stageCheckpoint]] truncates lineage
-  * (iterative loops, whose plans would grow every round);
-  * [[DatasetCheckpointOps.stagePersist]] keeps it (shared branches read
-  * more than once: lost blocks recompute, nothing is written to the
-  * checkpoint directory). Neither enters the session's CacheManager,
-  * which is keyed by plan, strongly held and shared by every session of
-  * the SparkContext, so there one query's cleanup could evict another's
-  * state.
+  * Two constructors, one builder ([[ColumnBridge.stagedLeaf]]) with
+  * three storage modes, each returning a frame over one `LogicalRDD` leaf
+  * holding the rows — their one handle: a rebuilt, equal plan does not
+  * find them — with the final plan's partitioning and ordering (and,
+  * when `eager` fills it now, the measured row count).
+  * [[DatasetCheckpointOps.stagePersist]] keeps lineage (shared branches
+  * read more than once; MEMORY_AND_DISK, lost blocks recompute);
+  * [[DatasetCheckpointOps.stageCheckpoint]] truncates it (iterative
+  * loops, whose plans would grow every round), to reliable checkpoint
+  * files once `SparkContext.setCheckpointDir` is set (clusters point it
+  * at DFS; deleted on GC only with
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`), else to
+  * local checkpoint blocks, which a lost executor takes with it. A lazy
+  * frame fills on the first action reading it (under AQE, building it
+  * runs the plan's query stages) in every mode, so prefixFold's
+  * pid-assignment contract holds in all. Neither enters the session's
+  * CacheManager, which is keyed by plan, strongly held and shared by
+  * every session of the SparkContext, so there one query's cleanup
+  * could evict another's state.
   *
   * One release verb, one rule: an intermediate the returned frame does
   * not read is released with [[DatasetCheckpointOps.release]] once the
@@ -34,30 +43,11 @@ object Checkpoints {
   implicit final class DatasetCheckpointOps[T](private val ds: Dataset[T])
       extends AnyVal {
 
-    /** Durability-mode checkpoint. `localCheckpoint` blocks live only in
-      * executor block managers, and because the checkpoint truncates
-      * lineage, a lost executor fails the job. When
-      * `SparkContext.setCheckpointDir` has been called (clusters point
-      * it at DFS) this stages through the reliable `Dataset.checkpoint`,
-      * otherwise through `localCheckpoint` (single node, tests, bench).
-      * Laziness is the same either way, so prefixFold's pid-assignment
-      * contract holds in both modes; a lazy `localCheckpoint` registers
-      * its RDD as persisted when it is created. Reliable files are
-      * deleted on GC only with
-      * `spark.cleaner.referenceTracking.cleanCheckpoints=true`. */
     def stageCheckpoint(eager: Boolean): Dataset[T] =
-      if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        ds.checkpoint(eager)
-      else ds.localCheckpoint(eager)
+      ColumnBridge.stagedLeaf(ds, eager, truncateLineage = true)
 
-    /** Persist (MEMORY_AND_DISK) behind this frame's own handle, lineage
-      * kept (see [[ColumnBridge.persistedLeaf]]). `eager` fills the blocks
-      * now with one job, otherwise the first action reading the frame
-      * does; under AQE, building it runs the plan's query stages either
-      * way, as a lazy checkpoint does. A rebuilt, equal plan does not
-      * find these blocks: read them through the returned frame. */
     def stagePersist(eager: Boolean): Dataset[T] =
-      ColumnBridge.persistedLeaf(ds, eager)
+      ColumnBridge.stagedLeaf(ds, eager, truncateLineage = false)
 
     /** Unpersist (non-blocking) the blocks of this staged frame. A no-op
       * on a frame derived from one (a projection, say), and on a reliable

@@ -208,7 +208,7 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 30): DataFrame = {
     require(k >= 1, "kCore: k must be >= 1")
-    // localCheckpoint (eager) per round, NOT just persist: each round
+    // An eager stageCheckpoint per round, NOT a plain persist: each round
     // references the previous edge set THREE times (degree union twice,
     // join probe once), so un-truncated lineage grows 3^rounds — the
     // analyzer itself becomes the bottleneck long before execution
@@ -279,7 +279,7 @@ object Graph {
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct().stagePersist(false)
     val eRows = e.count() // fills e
-    // localCheckpoint the per-round state: settled is referenced TWICE
+    // stageCheckpoint the per-round state: settled is referenced TWICE
     // per round (anti-join + union), so plain persist would still grow
     // the LOGICAL plan 2^rounds — the kCore lineage lesson. Each round's
     // state is ONE checkpoint (settled ids + the __new frontier flag,
@@ -343,7 +343,7 @@ object Graph {
     * cycles; invariant: after round r, best(v) = min cost over paths of
     * ≤ r edges (improvements always re-enter the frontier, so every
     * ≤H-edge path is explored by round H). Early exit when no node
-    * improves. Per-round state localCheckpoints (best is referenced
+    * improves. Per-round state is checkpointed (best is referenced
     * twice per round — the kCore lineage lesson). Multi-edges keep their
     * distinct weights and the min-relax picks the cheapest; unreachable
     * nodes are absent. Output: (id, dist). */

@@ -433,9 +433,9 @@ object Profile {
     * typed zero), a max with none is NULL.
     *
     * Durability: the checkpoint goes through [[Checkpoints.stageCheckpoint]]
-    * — reliable `Dataset.checkpoint` on clusters that set a checkpoint dir
-    * (localCheckpoint blocks die with their executor and CANNOT be
-    * recomputed past the lineage truncation), localCheckpoint otherwise.
+    * — a reliable checkpoint on clusters that set a checkpoint dir (local
+    * checkpoint blocks die with their executor and CANNOT be recomputed
+    * past the lineage truncation), a local one otherwise.
     *
     * Ownership: the returned frame reads the checkpoint, so the
     * checkpoint belongs to it (the [[Checkpoints]] rule). ContextCleaner

@@ -265,7 +265,7 @@ object Similarity {
     * round; cells shard across reducers, and the cap — not k — bounds the
     * per-cell quadratic term, so a coarse initial k stays safe. The
     * component step shuffles (id, id) longs only. Intermediate rounds are
-    * lazily localCheckpoint'd (lineage stays flat); each round's
+    * lazily checkpointed (lineage stays flat); each round's
     * checkpoint is released through its handle once its successor
     * materializes, and the last one once the component step has
     * consumed every pair.

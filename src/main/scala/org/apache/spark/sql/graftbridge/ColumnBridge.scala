@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, classic}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
@@ -26,35 +27,47 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `ds` as `Dataset.checkpoint` builds it (executed RDD, rows copied,
-    * under a `LogicalRDD`) but persisted MEMORY_AND_DISK, lineage kept;
-    * built and, when `eager`, filled in a SQL execution (listeners see it).
-    * The leaf takes partitioning and ordering from the FINAL plan (under
-    * AQE `LogicalRDD.fromDataset` reads the adaptive wrapper, which
-    * reports none, so joins on the same keys would re-shuffle), and an
-    * eager one its measured rows and bytes, as a filled cache does. */
-  def persistedLeaf[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
+  /** The one builder of a staged frame (graft.pipeline.Checkpoints): `ds`
+    * as `Dataset.checkpoint` builds it (executed RDD, rows copied, under a
+    * `LogicalRDD`), built and, when `eager`, filled in a SQL execution;
+    * persisted MEMORY_AND_DISK, or with `truncateLineage` checkpointed
+    * (reliably when the context has a checkpoint dir, else locally). The
+    * leaf takes partitioning and ordering from the FINAL plan (under AQE
+    * `LogicalRDD.fromDataset` reads the adaptive wrapper, which reports
+    * none), and an eager one its measured row count. */
+  def stagedLeaf[T](ds: Dataset[T], eager: Boolean, truncateLineage: Boolean): Dataset[T] = {
     val d = ds.asInstanceOf[classic.Dataset[T]]
     val qe = d.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("stagePersist")) {
-      val rows = qe.executedPlan.execute().map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    val reliable = truncateLineage && d.sparkSession.sparkContext.getCheckpointDir.isDefined
+    SQLExecution.withNewExecutionId(qe, Some(if (truncateLineage) "stageCheckpoint" else "stagePersist")) {
+      val rows = qe.executedPlan.execute().map(_.copy())
+      if (reliable) rows.checkpoint()
+      else if (truncateLineage) rows.localCheckpoint()
+      else rows.persist(StorageLevel.MEMORY_AND_DISK)
+      if (eager && reliable) rows.doCheckpoint() // the count below reads the files back
       val filled = if (eager) Some(rows.count()) else None
       val plan = qe.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan // final once executed
         case p => p
       }
+      // rebound by exprId: a physical attribute can differ from the output
+      // (in nullability, say), and a self-join's newInstance maps only equal ones
+      val output = AttributeMap(d.logicalPlan.output.map(a => a -> a))
+      def bind[E <: Expression](e: E): E =
+        e.transform { case a: Attribute => output.getOrElse(a, a) }.asInstanceOf[E]
       def firstLeaf(p: Partitioning): Partitioning = p match {
         case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+        case e: Partitioning with Expression => bind(e)
         case p => p
       }
       val (estimated, constraints) =
         LogicalRDD.rewriteStatsAndConstraints(d.logicalPlan, qe.optimizedPlan)
-      val stats = filled.map { n =>
-        val stored = d.sparkSession.sparkContext.getRDDStorageInfo(_.id == rows.id)
-        Statistics(stored.map(i => i.memSize + i.diskSize).sum.max(1L), Some(n))
-      }.orElse(estimated)
+      // rows x Spark's row width, the scale of other estimates: stored bytes
+      // count JVM objects (13x on q_kcore), and a reliable checkpoint has none
+      val stats = filled.fold(estimated)(n =>
+        Some(Statistics(EstimationUtils.getOutputSize(d.logicalPlan.output, n), Some(n))))
       val leaf = LogicalRDD(d.logicalPlan.output, rows, firstLeaf(plan.outputPartitioning),
-        plan.outputOrdering, d.isStreaming)(d.sparkSession, stats, constraints)
+        plan.outputOrdering.map(bind), d.isStreaming)(d.sparkSession, stats, constraints)
       classic.Dataset.ofRows(d.sparkSession, leaf).as[T](d.encoder)
     }
   }

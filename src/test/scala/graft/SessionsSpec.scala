@@ -1,9 +1,9 @@
 package graft
 
 /** The parsers behind the SPARK_GRAFT_* settings (positive integers for
-  * cores, bench reps and the blind-join candidate limit; flags for AQE
-  * and ANSI; the session time zone), and the partition derivation of the
-  * scoped loop/stream sessions. */
+  * cores, shuffle partitions, bench reps and the blind-join candidate
+  * limit; flags for AQE and ANSI; the session time zone), and the
+  * partition derivation of the scoped loop/stream sessions. */
 class SessionsSpec extends SparkSpec {
 
   test("positiveLong accepts positive integers") {
@@ -39,6 +39,24 @@ class SessionsSpec extends SparkSpec {
       val ex = intercept[IllegalArgumentException](Sessions.zoneId("SPARK_GRAFT_TZ", raw))
       assert(ex.getMessage.contains(s"SPARK_GRAFT_TZ must be a java.time.ZoneId, got '$raw'"),
         s"for '$raw': ${ex.getMessage}")
+    }
+  }
+
+  test("Verify and JobProfile reject a malformed SPARK_GRAFT_SHUFFLE_PARTITIONS, naming it") {
+    // both mains parse their settings before they start a session, so a
+    // child JVM given a bad value exits at once
+    val out = java.nio.file.Files.createTempDirectory("graft-shuffle-env").toString
+    val mains = Seq("graft.Verify" -> Seq(sf(), out, "q1_agg"), "graft.JobProfile" -> Seq("q1_agg"))
+    for ((main, args) <- mains; raw <- Seq("abc", "0")) {
+      val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx256m",
+        "-cp", sys.props("java.class.path"), main) ++ args
+      val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      pb.environment().put("SPARK_GRAFT_SHUFFLE_PARTITIONS", raw)
+      val proc = pb.start()
+      val log = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+      assert(proc.waitFor() != 0, s"$main accepted '$raw':\n$log")
+      assert(log.contains(s"SPARK_GRAFT_SHUFFLE_PARTITIONS must be a positive integer, got '$raw'"),
+        s"$main with '$raw':\n$log")
     }
   }
 

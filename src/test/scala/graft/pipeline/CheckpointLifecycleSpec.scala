@@ -135,7 +135,8 @@ class CheckpointLifecycleSpec extends SparkSpec {
       val (good, bad) = graft.operators.Relational.readCsvQuarantine(spark, csvFeed,
         StructType(Seq(StructField("k", LongType), StructField("v", DoubleType))))
       Seq(good, bad)
-    }) ++ Seq("q_image_dedup", "q_audio_phash", "q_manifest_prune").map { q =>
+    },
+    "Relational.splitter" -> (() => Seq(graft.operators.Relational.splitter(docs)))) ++ Seq("q_image_dedup", "q_audio_phash", "q_manifest_prune").map { q =>
       s"SparkEntry.$q" -> (() => Seq(graft.SparkEntry.queries(q)(spark, sf())))
     }
 
@@ -168,19 +169,43 @@ class CheckpointLifecycleSpec extends SparkSpec {
   }
 
   test("stagePersist keeps the final plan's partitioning, and joins on it stay exact") {
+    // both constructors, eager and lazy: every staged leaf has one builder
+    val constructors: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "stagePersist(true)" -> (_.stagePersist(true)),
+      "stagePersist(false)" -> (_.stagePersist(false)),
+      "stageCheckpoint(true)" -> (_.stageCheckpoint(true)),
+      "stageCheckpoint(false)" -> (_.stageCheckpoint(false)))
     val agg = (1 to 200).map(i => (i % 17, i)).toDF("k", "v")
       .groupBy("k").agg(sum("v").as("s"))
-    val staged = agg.stagePersist(true)
-    val regrouped = staged.groupBy("k").agg(max("s").as("m")).queryExecution.executedPlan
-    val initial = regrouped match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
-    }
-    assert(initial.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-    }.isEmpty, s"re-shuffled a frame already partitioned by k:\n$initial")
     val other = (0 until 17).map(k => (k, k * 10)).toDF("k", "w").repartition(3, col("k"))
-    assert(rows(staged.join(other, "k").orderBy("k")) == rows(agg.join(other, "k").orderBy("k")))
+    val expected = rows(agg.join(other, "k").orderBy("k"))
+    for ((name, stage) <- constructors) {
+      val staged = stage(agg)
+      val regrouped = staged.groupBy("k").agg(max("s").as("m")).queryExecution.executedPlan
+      // the plan after EnsureRequirements (AQE's inputPlan precedes it)
+      val initial = regrouped match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      assert(initial.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.isEmpty, s"$name re-shuffled a frame already partitioned by k:\n$initial")
+      assert(rows(staged.join(other, "k").orderBy("k")) == expected, name)
+      staged.release()
+    }
+  }
+
+  test("a staged leaf's partitioning follows its output through a self-join") {
+    // prefixFold's leaf is range-partitioned on a physical attribute that
+    // is not exactly the leaf's output attribute; joining the result back
+    // to its source re-instances the leaf, which must rewrite both
+    val docs = (0L until 300L).map(i => (i, s"w${i % 7} w${i % 5} w${i % 3} x"))
+      .toDF("doc_id", "text")
+    val scored = Dsir.importanceScores(docs, docs.where(col("doc_id") < 100),
+      "doc_id", "text", 64)
+    val top = Dsir.selectTopFraction(scored, "doc_id", num = 3, den = 4)
+    val kept = docs.join(top.where(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
+    assert(kept.count() == 225L)
   }
 
   test("release unpersists the checkpoint's own RDD and ignores other frames") {

@@ -1,25 +1,29 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.pipeline.Checkpoints.DatasetCheckpointOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Reliable-checkpoint mode for the iterative/staged operators.
   *
-  * Every staged materialization in graft (prefixFold's shared pid
+  * Every lineage-truncating stage in graft (prefixFold's shared pid
   * assignment, the BPE round table, graph frontiers, semanticDedup cell
-  * rounds) goes through [[Checkpoints.stageCheckpoint]]: `localCheckpoint`
-  * when no checkpoint dir is set (single-node, tests, bench) and reliable
-  * `Dataset.checkpoint` when one is (cluster posture — localCheckpoint
-  * blocks die with a lost executor and the truncated lineage cannot
-  * recompute them, so long iterative jobs on 1000-executor clusters must
-  * stage to fault-tolerant storage). This spec pins that the reliable
-  * path (a) is actually taken — checkpoint files appear, (b) produces
-  * bit-identical results for a prefix fold, a multi-round BPE train, and
-  * a multi-round BFS, and (c) restores cleanly. The loops' per-round
-  * `release()` of their own checkpoint handles is a no-op here: a
-  * reliable checkpoint's RDD is not persisted. */
+  * rounds) goes through [[Checkpoints.stageCheckpoint]], which builds its
+  * leaf in the one staged-leaf builder, the same as `stagePersist`: a
+  * local checkpoint (executor blocks) when no checkpoint dir is set
+  * (single-node, tests, bench) and a reliable one (files) when one is
+  * (cluster posture — local checkpoint blocks die with a lost executor
+  * and the truncated lineage cannot recompute them, so long iterative
+  * jobs on 1000-executor clusters must stage to fault-tolerant storage).
+  * This spec pins that the reliable path (a) is actually taken —
+  * checkpoint files appear, (b) produces bit-identical results for a
+  * prefix fold, a multi-round BPE train, and a multi-round BFS, (c)
+  * restores cleanly, and (d) gives an eager leaf its measured row count
+  * and a size from it, though it stores no blocks to measure. The
+  * loops' per-round `release()` of their own checkpoint handles is a
+  * no-op here: a reliable checkpoint's RDD is not persisted. */
 class ReliableCheckpointSpec extends SparkSpec {
   import spark.implicits._
 
@@ -58,6 +62,19 @@ class ReliableCheckpointSpec extends SparkSpec {
         .select("id", "ps").collect().map(r => r.getLong(0) -> r.get(1)).toMap
       assert(got == expected, "reliable-mode prefixFold diverged")
       assert(ckptFiles(dir) > 0, "no reliable checkpoint files were written")
+    }
+  }
+
+  test("an eager reliable checkpoint reports its measured rows, not a 1-byte leaf") {
+    val agg = (1 to 2000).map(i => (i % 37, i.toLong)).toDF("k", "v")
+      .groupBy("k").agg(sum("v").as("s"))
+    withCheckpointDir { dir =>
+      val staged = agg.stageCheckpoint(true)
+      val stats = staged.queryExecution.optimizedPlan.stats
+      assert(stats.rowCount.contains(BigInt(37)), s"row count not measured: $stats")
+      assert(stats.sizeInBytes > 1, s"size reported as the floor: $stats")
+      assert(ckptFiles(dir) > 0, "no reliable checkpoint files were written")
+      assert(staged.collect().toSet == agg.collect().toSet)
     }
   }
 
