@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * three storage modes, each returning a frame over one `LogicalRDD` leaf
   * holding the rows — their one handle: a rebuilt, equal plan does not
   * find them — with the final plan's partitioning and ordering (and,
-  * when `eager` fills it now, the measured row count).
+  * when `eager` fills it now, the measured rows and row bytes).
   * [[DatasetCheckpointOps.stagePersist]] keeps lineage (shared branches
   * read more than once; MEMORY_AND_DISK, lost blocks recompute);
   * [[DatasetCheckpointOps.stageCheckpoint]] truncates it (iterative
@@ -48,6 +48,13 @@ object Checkpoints {
 
     def stagePersist(eager: Boolean): Dataset[T] =
       ColumnBridge.stagedLeaf(ds, eager, truncateLineage = false)
+
+    /** The row count an EAGER stage measured for this frame, without a job
+      * (a lazy stage's leaf may carry an estimate); other frames count. */
+    def stagedCount: Long = ds.queryExecution.logical match {
+      case r: LogicalRDD => r.stats.rowCount.fold(ds.count())(_.toLong)
+      case _ => ds.count()
+    }
 
     /** Unpersist (non-blocking) the blocks of this staged frame. A no-op
       * on a frame derived from one (a projection, say), and on a reliable

@@ -222,7 +222,7 @@ object Graph {
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct().stageCheckpoint(true)
-    var eCount = e.count()
+    var eCount = e.stagedCount
     var rounds = 0
     var converged = eCount == 0
     // loop exchanges sized by the measured live-edge count — see
@@ -242,7 +242,7 @@ object Graph {
           .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
           .stageCheckpoint(true)
-        val nextCount = next.count()
+        val nextCount = next.stagedCount
         e.release()
         e = next
         converged = nextCount == eCount || nextCount == 0
@@ -476,7 +476,7 @@ object Graph {
     var pairs = nodes.select(col(idCol).cast("long").as("id"),
         col(parentCol).cast("long").as("anc"))
       .where(col("anc").isNotNull).distinct().stageCheckpoint(true)
-    var n = pairs.count()
+    var n = pairs.stagedCount
     var rounds = 0
     var converged = n == 0
     while (!converged) {
@@ -494,7 +494,7 @@ object Graph {
               .select(col("x.id").as("id"), col("y.anc").as("anc")))
           .distinct().stageCheckpoint(true), spark)
       }
-      val nn = next.count()
+      val nn = next.stagedCount
       pairs.release()
       converged = nn == n
       pairs = next

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, classic}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -34,7 +34,7 @@ object ColumnBridge {
     * (reliably when the context has a checkpoint dir, else locally). The
     * leaf takes partitioning and ordering from the FINAL plan (under AQE
     * `LogicalRDD.fromDataset` reads the adaptive wrapper, which reports
-    * none), and an eager one its measured row count. */
+    * none), and an eager one its measured rows and bytes. */
   def stagedLeaf[T](ds: Dataset[T], eager: Boolean, truncateLineage: Boolean): Dataset[T] = {
     val d = ds.asInstanceOf[classic.Dataset[T]]
     val qe = d.queryExecution
@@ -44,8 +44,14 @@ object ColumnBridge {
       if (reliable) rows.checkpoint()
       else if (truncateLineage) rows.localCheckpoint()
       else rows.persist(StorageLevel.MEMORY_AND_DISK)
-      if (eager && reliable) rows.doCheckpoint() // the count below reads the files back
-      val filled = if (eager) Some(rows.count()) else None
+      if (eager && reliable) rows.doCheckpoint() // the job below reads the files back
+      // rows and UnsafeRow bytes, as a filled AQE query stage reports them:
+      // exact for arrays, without the JVM overhead stored blocks count
+      val width = EstimationUtils.getSizePerRow(d.logicalPlan.output).toLong
+      val filled = Option.when(eager)(rows.map {
+        case u: UnsafeRow => u.getSizeInBytes.toLong
+        case _ => width
+      }.aggregate((0L, 0L))((a, b) => (a._1 + 1, a._2 + b), (a, b) => (a._1 + b._1, a._2 + b._2)))
       val plan = qe.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan // final once executed
         case p => p
@@ -62,10 +68,7 @@ object ColumnBridge {
       }
       val (estimated, constraints) =
         LogicalRDD.rewriteStatsAndConstraints(d.logicalPlan, qe.optimizedPlan)
-      // rows x Spark's row width, the scale of other estimates: stored bytes
-      // count JVM objects (13x on q_kcore), and a reliable checkpoint has none
-      val stats = filled.fold(estimated)(n =>
-        Some(Statistics(EstimationUtils.getOutputSize(d.logicalPlan.output, n), Some(n))))
+      val stats = filled.fold(estimated) { case (n, b) => Some(Statistics(BigInt(b max 1L), Some(n))) }
       val leaf = LogicalRDD(d.logicalPlan.output, rows, firstLeaf(plan.outputPartitioning),
         plan.outputOrdering.map(bind), d.isStreaming)(d.sparkSession, stats, constraints)
       classic.Dataset.ofRows(d.sparkSession, leaf).as[T](d.encoder)

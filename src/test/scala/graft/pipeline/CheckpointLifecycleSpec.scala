@@ -195,6 +195,55 @@ class CheckpointLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("eager leaves report their row bytes, so wide doc tables are not broadcast") {
+    // a lowered broadcast threshold stands in for scale: the tables carry
+    // arrays of ~200 shingle hashes per doc, ~1.6 KB a row, far wider than
+    // Spark's default column widths
+    val wide = (0L until 60L).map { i =>
+      (i, ((0 until 200).map(j => s"t$j") :+ s"u${i % 4}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val builds = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        stages.collect(qe.executedPlan) {
+          case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
+            val side = if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildLeft) j.left
+              else j.right
+            side.output.map(_.name)
+          case p if p.output.exists(_.name == "__marker") => Seq("__marker")
+        }.foreach(builds.add)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    // the build sides of every broadcast join the call ran; listeners hear
+    // of executions in order, so the marker query's arrival drains them
+    def broadcastBuilds(run: => Seq[Seq[Any]]): (Seq[Seq[Any]], Seq[Seq[String]]) = {
+      builds.clear()
+      val out = run
+      spark.range(1).toDF("__marker").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!builds.contains(Seq("__marker")) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(builds.contains(Seq("__marker")), "the listener never heard the marker query")
+      (out, builds.toArray(Array.empty[Seq[String]]).toSeq.filter(_ != Seq("__marker")))
+    }
+    spark.listenerManager.register(listener)
+    try withConfs("spark.sql.autoBroadcastJoinThreshold" -> "16384") {
+      // batched verify: only one block of the sh2 side may be broadcast
+      val (pairs, jaccardBuilds) = broadcastBuilds(rows(Dedup.lengthBucketJaccardPairs(
+        wide, "doc_id", "text", 0.5, prefixFilter = true, blindCandidateLimit = -1L,
+        broadcastBudgetBytes = 0L, blockFloorBytes = 50000L)))
+      assert(pairs.size == 60 * 59 / 2)
+      assert(jaccardBuilds.exists(_.contains("sh2")), "no pass broadcast its sh2 block")
+      assert(!jaccardBuilds.exists(_.contains("sh1")),
+        s"the whole sh1 doc table was broadcast: $jaccardBuilds")
+      val (contained, containmentBuilds) = broadcastBuilds(rows(
+        Dedup.containmentPairs(wide, "doc_id", "text", 0.9)))
+      assert(contained.size == 60 * 59)
+      assert(!containmentBuilds.exists(b => b.contains("sh1") || b.contains("sh2")),
+        s"a hashed doc table was broadcast: $containmentBuilds")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("a staged leaf's partitioning follows its output through a self-join") {
     // prefixFold's leaf is range-partitioned on a physical attribute that
     // is not exactly the leaf's output attribute; joining the result back

@@ -21,7 +21,7 @@ import java.nio.file.Files
   * checkpoint files appear, (b) produces bit-identical results for a
   * prefix fold, a multi-round BPE train, and a multi-round BFS, (c)
   * restores cleanly, and (d) gives an eager leaf its measured row count
-  * and a size from it, though it stores no blocks to measure. The
+  * and row bytes, though it stores no blocks to measure. The
   * loops' per-round `release()` of their own checkpoint handles is a
   * no-op here: a reliable checkpoint's RDD is not persisted. */
 class ReliableCheckpointSpec extends SparkSpec {
@@ -73,6 +73,8 @@ class ReliableCheckpointSpec extends SparkSpec {
       val stats = staged.queryExecution.optimizedPlan.stats
       assert(stats.rowCount.contains(BigInt(37)), s"row count not measured: $stats")
       assert(stats.sizeInBytes > 1, s"size reported as the floor: $stats")
+      // (k, s) UnsafeRows: an 8-byte null bitset and two 8-byte slots
+      assert(stats.sizeInBytes == BigInt(37 * 24), s"row bytes not measured: $stats")
       assert(ckptFiles(dir) > 0, "no reliable checkpoint files were written")
       assert(staged.collect().toSet == agg.collect().toSet)
     }
