@@ -1,19 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Aggregates, Relational, Sketches}
-import graft.pipeline.Checkpoints.DatasetCheckpointOps
-import graft.operators.Aggregates._
+import graft.gates.Gates
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract: the gate registry ([[graft.gates.Gates]]) as the maps
+  * the mains, the tests and the benchmark read.
   *
-  * Every entry in `queries` exercises a declared operator from SURVEY.md §2
-  * through the graft.operators / graft.functions API, and (where
-  * SQL-expressible) has a DuckDB oracle in `oracleSql` with identical output
-  * column names and ORDER BY.
+  * Every gate exercises a declared operator from SURVEY.md §2 through the
+  * graft.operators / graft.functions API and has a DuckDB oracle with
+  * identical output column names and ORDER BY. Gates are declared in the
+  * domain files of `graft.gates`, each once, builder beside oracle.
   *
   * Exactness convention: raw parquet values pass through both engines
   * bit-identically; computed monetary aggregates are done in DECIMAL(18,2)
@@ -22,11128 +19,20 @@ import graft.operators.Aggregates._
   */
 object SparkEntry {
 
-  /** money-exact decimal cast */
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
-
-  /** DuckDB VALUES rows `(i, [plane doubles...])` for the LSH oracle —
-    * the exact constants Similarity.lshSignature uses (Double.toString is
-    * shortest-roundtrip, so DuckDB parses bit-identical values). */
-  private def lshPlanesValues(nPlanes: Int, dim: Int, seed: Long): String =
-    graft.pipeline.Similarity.planes(nPlanes, dim, seed).zipWithIndex
-      .map { case (p, i) => s"($i, [${p.mkString(", ")}])" }
-      .mkString(", ")
-
-  /** Shared LSH oracle prelude (planes → signatures → same-signature
-    * candidate pairs with exact cosine) — used verbatim by q_ann_lsh and
-    * q_dedup_embedding so the two gates provably run one algorithm. */
-  private def lshCandidateCtes: String =
-    s"""WITH pl(i, p) AS (VALUES ${lshPlanesValues(8, 64, 42L)}),
-       |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sg AS (SELECT c.vec_id, CAST(SUM(CASE WHEN list_inner_product(c.v, pl.p) >= 0
-       |  THEN (1::BIGINT << pl.i) ELSE 0 END) AS BIGINT) AS s
-       |  FROM c CROSS JOIN pl GROUP BY c.vec_id),
-       |k AS (SELECT c.vec_id, c.v, sg.s FROM c JOIN sg USING (vec_id)),
-       |cand AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-       |  list_inner_product(a.v, b.v) /
-       |  (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))) AS cos
-       |  FROM k a JOIN k b ON a.s = b.s AND a.vec_id < b.vec_id)""".stripMargin
-
-  /** Exact cosine top-k oracle — shared verbatim by q_ann_brute and
-    * q_ann_ivf: the IVF gate probes ALL cells, so its expected output IS
-    * the brute-force result; one binding makes that equivalence
-    * structural rather than copy-paste. */
-  /** Shared CTE chain: length-bucket-blocked 2-shingle Jaccard pairs over
-    * `documents` at threshold 0.5 (mirrors Dedup.lengthBucketJaccardPairs
-    * with bucketWidth 8) — final CTE `jp` has columns (id1, id2, jac).
-    * Used by the q_dedup_ngram and q_dedup_clusters oracles so the pair
-    * definition cannot drift between them. */
-  // MATERIALIZED throughout (round 8): t is referenced four times and jp
-  // twice across the consumers; DuckDB re-inlines un-hinted CTEs, which
-  // multiplied the whole pair computation at the sf1 replica.
-  // Round 12 tractability rewrite (the q_dedup_minhash pattern): the old
-  // form MATERIALIZED the content-free bucket-pair list `p` (quadratic in
-  // bucket size — 359M pairs at the sf3 replica) and ran list_intersect
-  // per pair (>57 GB spill). This form never materializes a content-free
-  // pair: |A∩B| is a grouped COUNT over an inverted (shingle, bucket)
-  // equi-join — jac >= 0.5 > 0 forces a shared shingle, so the inverted
-  // join loses NOTHING; and a pair shares an expanded bucket iff
-  // |b1-b2| <= 1, which the 3-cell expansion of side a against side b's
-  // HOME bucket reproduces exactly once per shared shingle. The union
-  // size is n1 + n2 - i (shingle lists are list_distinct by
-  // construction), so the jac arithmetic is value-identical.
-  private val NgramPairsCte: String =
-    """t AS MATERIALIZED (SELECT doc_id, length(text) AS ln,
-      |(CASE WHEN len(toks) >= 2
-      |  THEN list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]))
-      |  ELSE [array_to_string(toks, ' ')] END) AS sh
-      |FROM (SELECT doc_id, text, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS toks FROM documents)),
-      |eh AS MATERIALIZED (SELECT doc_id, ln, len(sh) AS nsh,
-      |CAST(ln // 8 AS BIGINT) AS b, unnest(sh) AS s FROM t),
-      |ex AS MATERIALIZED (SELECT doc_id, ln, nsh, b + d.d AS b, s
-      |FROM eh CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) d),
-      |inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-      |any_value(a.nsh) AS n1, any_value(b.nsh) AS n2, count(*) AS i
-      |FROM ex a JOIN eh b ON a.s = b.s AND a.b = b.b AND a.doc_id < b.doc_id
-      |AND abs(a.ln - b.ln) <= 8
-      |GROUP BY 1, 2),
-      |jp AS MATERIALIZED (SELECT id1, id2,
-      |CAST(i AS DOUBLE) / greatest(n1 + n2 - i, 1) AS jac FROM inter
-      |WHERE CAST(i AS DOUBLE) / greatest(n1 + n2 - i, 1) >= 0.5)""".stripMargin
-
-  /** Shared pair CTEs of q_setsim_join / q_setsim_clusters: exact
-    * distinct-token-set Jaccard ≥ 0.95 via the τ = 0.95 set-logic
-    * identity (J ≥ 0.95 forces |A∆B| ≤ 1 at these set sizes): `ident`
-    * are equal-set pairs, `sub1` single-deletion containments for sets
-    * ≥ 20 tokens, `guard` poison rows if any doc exceeds 37 distinct
-    * tokens (where the identity would need |A∆B| = 2 — a break fails the
-    * compare loudly). Θ(docs × setSize + output), not Θ(docs²). */
-  private val SetsimPairsCte: String =
-    """t AS (SELECT doc_id, list_sort(list_distinct(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))) AS tk
-      |  FROM documents WHERE len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) > 0),
-      |ident AS (
-      |  SELECT a.doc_id AS id1, b.doc_id AS id2, 1.0 AS jac
-      |  FROM t a JOIN t b ON a.tk = b.tk AND a.doc_id < b.doc_id),
-      |del1 AS (
-      |  SELECT b.doc_id AS bid, list_sort(list_filter(b.tk, x -> x <> d.x)) AS key, len(b.tk) AS blen
-      |  FROM (SELECT doc_id, tk FROM t) b, unnest(b.tk) AS d(x)
-      |  WHERE len(b.tk) >= 20),
-      |sub1 AS (
-      |  SELECT least(a.doc_id, d.bid) AS id1, greatest(a.doc_id, d.bid) AS id2,
-      |    CAST(len(a.tk) AS DOUBLE) / d.blen AS jac
-      |  FROM del1 d JOIN t a ON a.tk = d.key AND a.doc_id <> d.bid
-      |  WHERE CAST(len(a.tk) AS DOUBLE) / d.blen >= 0.95),
-      |guard AS (
-      |  SELECT CAST(-1 AS BIGINT) AS id1, CAST(-2 AS BIGINT) AS id2, -CAST(count(*) AS DOUBLE) AS jac
-      |  FROM t WHERE len(tk) > 37 HAVING count(*) > 0),
-      |sp AS MATERIALIZED (SELECT * FROM ident UNION ALL SELECT * FROM sub1 UNION ALL SELECT * FROM guard)""".stripMargin
-
-  /** Connected components of a (id1, id2) pair CTE as iterative
-    * min-label propagation (12 unrolled doubling rounds with an explicit
-    * convergence check — unconverged ⇒ empty result ⇒ loud row-count
-    * mismatch). Shared tail of q_dedup_clusters, q_dedup_clusters_rep
-    * and q_setsim_clusters. */
-  private def minLabelClustersSql(pairs: String): String =
-    s"""edges AS MATERIALIZED (SELECT id1 AS a, id2 AS b FROM $pairs
-       |UNION SELECT id2, id1 FROM $pairs),
-       |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS lbl FROM edges),
-       |${(1 to 12).map(i =>
-           s"""m$i AS MATERIALIZED (SELECT l.id, least(l.lbl, min(ln.lbl)) AS lbl
-              |  FROM l${i - 1} l JOIN edges e ON e.a = l.id
-              |  JOIN l${i - 1} ln ON ln.id = e.b GROUP BY l.id, l.lbl),
-              |l$i AS MATERIALIZED (SELECT m.id, l2.lbl
-              |  FROM m$i m JOIN m$i l2 ON l2.id = m.lbl)""".stripMargin)
-         .mkString(",\n")},
-       |conv AS (SELECT count(*) AS bad FROM l12 n JOIN l11 p USING (id)
-       |  WHERE n.lbl <> p.lbl)
-       |SELECT id, lbl AS cluster FROM l12 CROSS JOIN conv
-       |WHERE conv.bad = 0 ORDER BY id""".stripMargin
-
-  /** Shared dHash-pair CTE (q_image_phash + q_image_dedup): the full
-    * perceptual-hash replay — six-part image corpus, 9x8 grayscale
-    * grid from the seed-cycling pixel arithmetic (per-pixel cycling for
-    * corpora A/B/C; 8x8 tile-constant for the JPEG↔PNG twins D/E and
-    * the round-9 PROGRESSIVE-JPEG twin F, whose decoded pixels are all
-    * exact because the flat-tile JPEG round trip is lossless through
-    * both codings — see qMultimodalJpeg), 64-bit difference hash
-    * (bit 63 added as min-long — DuckDB rejects 1<<63), then ALL-pairs
-    * Hamming ≤ 3 as `ip` (the banded Spark join is exact at that radius
-    * by pigeonhole). */
-  private val ImageDhashPairsCte: String =
-    """base AS (SELECT doc_id, text,
-      |  CAST(16 + doc_id % 16 AS INTEGER) AS w,
-      |  CAST(16 + (doc_id // 16) % 16 AS INTEGER) AS h FROM documents),
-      |base2 AS (SELECT doc_id, text,
-      |  CAST(64 + doc_id % 64 AS INTEGER) AS w,
-      |  CAST(64 + (doc_id // 64) % 64 AS INTEGER) AS h
-      |  FROM documents WHERE doc_id % 3 = 0),
-      |imgs AS (
-      |  SELECT doc_id AS img_id, text, w, h, -1 AS pert, 0 AS tiled FROM base
-      |  UNION ALL
-      |  SELECT doc_id + 100000000, text, w, h, -1, 0 FROM base WHERE doc_id % 5 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000000, text, w, h, 0, 0 FROM base WHERE doc_id % 7 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 300000000, text, w, h, -1, 1 FROM base2
-      |  UNION ALL
-      |  SELECT doc_id + 400000000, text, w, h, -1, 1 FROM base2
-      |  UNION ALL
-      |  SELECT doc_id + 500000000, text, w, h, -1, 1 FROM base2),
-      |gpk AS (SELECT img_id, y, x, pert, tiled, text,
-      |  3 * (((y * h) // 8) * w + ((x * w) // 9)) + k AS j,
-      |  (((y * h) // 8) // 8) * ((w + 7) // 8) + (((x * w) // 9) // 8) AS t
-      |  FROM imgs, (SELECT unnest(range(8)) AS y),
-      |    (SELECT unnest(range(9)) AS x), (SELECT unnest(range(3)) AS k)),
-      |gpv AS (SELECT img_id, y, x,
-      |  SUM(CASE WHEN tiled = 1
-      |    THEN ord(substr(text, CAST(t % strlen(text) AS INTEGER) + 1, 1))
-      |    WHEN j = pert
-      |    THEN (ord(substr(text, CAST(j % strlen(text) AS INTEGER) + 1, 1)) + 1) % 256
-      |    ELSE ord(substr(text, CAST(j % strlen(text) AS INTEGER) + 1, 1)) END) AS gray
-      |  FROM gpk GROUP BY img_id, y, x),
-      |bits AS (SELECT a.img_id, a.y, a.x,
-      |  CASE WHEN a.gray > b.gray THEN 1 ELSE 0 END AS bit
-      |  FROM gpv a JOIN gpv b ON a.img_id = b.img_id AND a.y = b.y AND b.x = a.x + 1
-      |  WHERE a.x < 8),
-      |hs AS (SELECT img_id,
-      |  CAST(SUM(CASE WHEN bit = 0 THEN 0
-      |    WHEN y * 8 + x = 63 THEN (-9223372036854775807 - 1)
-      |    ELSE (1::BIGINT << CAST(y * 8 + x AS INTEGER)) END) AS BIGINT) AS dhash
-      |  FROM bits GROUP BY img_id),
-      |ip AS (SELECT a.img_id AS id1, b.img_id AS id2,
-      |  bit_count(xor(a.dhash, b.dhash)) AS hamming
-      |FROM hs a JOIN hs b ON a.img_id < b.img_id
-      |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3)""".stripMargin
-
-  /** All-pairs exact-Jaccard threshold join over the documents table —
-    * the recall-complete oracle shared by the batch (q_dedup_minhash),
-    * streaming (q_stream_neardedup) and incremental (q_dedup_incremental,
-    * restricted to pairs touching the odd-id delta) MinHash gates. */
-  private def minhashAllPairsOracle(extraWhere: String): String =
-    s"""WITH t AS MATERIALIZED (SELECT doc_id,
-      |(CASE WHEN len(toks) >= 3
-      |  THEN list_distinct(list_transform(range(1, len(toks) - 1),
-      |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-      |  ELSE [array_to_string(toks, ' ')] END) AS sh
-      |FROM (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks FROM documents)),
-      |sz AS (SELECT doc_id, len(sh) AS n FROM t),
-      |e AS MATERIALIZED (SELECT doc_id, unnest(sh) AS s FROM t),
-      |inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-      |  CAST(count(*) AS BIGINT) AS i
-      |  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |j AS (SELECT id1, id2,
-      |CAST(i AS DOUBLE) / greatest(s1.n + s2.n - i, 1) AS jac
-      |FROM inter JOIN sz s1 ON inter.id1 = s1.doc_id
-      |JOIN sz s2 ON inter.id2 = s2.doc_id)
-      |SELECT id1, id2, jac FROM j WHERE jac >= 0.7$extraWhere ORDER BY id1, id2""".stripMargin
-  private val MinhashAllPairsOracle: String = minhashAllPairsOracle("")
-
-  private val annExactTopKOracle: String =
-    """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 10),
-      |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-      |s AS (SELECT qid, vec_id, list_inner_product(qv, cv) /
-      |  (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(cv, cv))) AS cos_exact
-      |FROM q CROSS JOIN c WHERE vec_id <> qid),
-      |r AS (SELECT qid, vec_id, cos_exact,
-      |row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, vec_id) AS rank FROM s)
-      |SELECT qid, vec_id, round(cos_exact, 6) AS cosine, rank FROM r WHERE rank <= 5
-      |ORDER BY qid, rank""".stripMargin
-  /** q_ann_pq oracle: the COMPLETE product-quantization path replayed in
-    * SQL — seed selection by the same multiplicative-scatter order,
-    * per-subspace codebook slices, L2 code assignment via the identical
-    * discriminant dot(c,c) − 2·dot(x,c) (dot = list_inner_product, the
-    * proven-parity sequential fold; ties to the lower codebook index),
-    * per-query LUTs rounded to 9 dp as DECIMAL, exact decimal ADC sums,
-    * and the (adc desc, id) ranking. Gate shape is iters=0 (codebook
-    * entries are exact data subvectors), so every arithmetic step is
-    * bit-replayable. */
-  private def annPqOracle(m: Int, ksub: Int, kq: Int, rerank: Int = 0): String = {
-    val scatter = "(id % 2147483648) * 2654435761 % 2147483648"
-    s"""WITH c AS MATERIALIZED (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sd AS MATERIALIZED (SELECT s, v FROM (
-       |  SELECT row_number() OVER (ORDER BY $scatter, id) - 1 AS s, v FROM c) WHERE s < $ksub),
-       |js AS (SELECT unnest(range(0, $m)) AS j, len(v) // $m AS d FROM (SELECT v FROM c LIMIT 1)),
-       |cb AS MATERIALIZED (SELECT js.j, js.d, sd.s,
-       |  sd.v[js.j * js.d + 1 : (js.j + 1) * js.d] AS cv FROM sd CROSS JOIN js),
-       |enc AS MATERIALIZED (SELECT id, j, s AS code FROM (
-       |  SELECT x.id, cb.j, cb.s, row_number() OVER (PARTITION BY x.id, cb.j ORDER BY
-       |      list_inner_product(cb.cv, cb.cv)
-       |        - 2 * list_inner_product(x.v[cb.j * cb.d + 1 : (cb.j + 1) * cb.d], cb.cv),
-       |      cb.s) AS rn
-       |  FROM c x CROSS JOIN cb) WHERE rn = 1),
-       |q AS (SELECT id AS qid, v AS qv FROM c WHERE id < 10),
-       |lut AS MATERIALIZED (SELECT q.qid, cb.j, cb.s,
-       |  CAST(round(list_inner_product(q.qv[cb.j * cb.d + 1 : (cb.j + 1) * cb.d], cb.cv), 9)
-       |    AS DECIMAL(20,9)) AS ip
-       |  FROM q CROSS JOIN cb),
-       |a AS (SELECT l.qid, e.id AS vec_id, sum(l.ip) AS adc
-       |  FROM enc e JOIN lut l ON l.j = e.j AND l.s = e.code
-       |  WHERE e.id <> l.qid GROUP BY 1, 2),
-       |r AS (SELECT qid, vec_id, adc,
-       |  row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM a)
-       |${
-        if (rerank <= 0)
-          s"""SELECT qid, vec_id, CAST(adc AS DOUBLE) AS adc, rank
-             |FROM r WHERE rank <= $kq ORDER BY qid, rank""".stripMargin
-        else
-          // exact-dot re-rank of the ADC shortlist (q_ann_ivfadc): the
-          // shortlist membership is the decimal-exact ADC rank, the final
-          // order the bit-parity list_inner_product over raw vectors.
-          s""",sh AS (SELECT qid, vec_id FROM r WHERE rank <= $rerank),
-             |rr AS (SELECT sh.qid, sh.vec_id,
-             |  list_inner_product(q.qv, c.v) AS dot,
-             |  row_number() OVER (PARTITION BY sh.qid
-             |    ORDER BY list_inner_product(q.qv, c.v) DESC, sh.vec_id) AS rk
-             |  FROM sh JOIN q ON sh.qid = q.qid JOIN c ON sh.vec_id = c.id)
-             |SELECT qid, vec_id, CAST(dot AS DOUBLE) AS adc, rk AS rank
-             |FROM rr WHERE rk <= $kq ORDER BY qid, rank""".stripMargin
-      }""".stripMargin
-  }
-
-  /** q_ann_ivf_trained oracle: trained-centroid IVF replayed end to end —
-    * floor-quantized points, first-k-ids seeds, each Lloyd round
-    * unrolled (exact integer d² argmin with ties to the lower cid,
-    * floor-divided dimension means, empty cells keep their centroid —
-    * the q_kmeans chain verbatim), then corpus assignment + the query's
-    * nprobe nearest cells by the SAME argmin, and exact-cosine ranking
-    * within the probed cells (the q_ann_brute arithmetic). */
-  private def annIvfTrainedOracle(nCells: Int, iters: Int, nprobe: Int,
-                                  kq: Int, scale: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH c AS MATERIALIZED (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |pts AS MATERIALIZED (SELECT id, CAST(i AS INTEGER) AS dim,
-         |  CAST(floor(CAST(v[i + 1] AS DOUBLE) * $scale) AS BIGINT) AS q
-         |  FROM c, (SELECT unnest(generate_series(0, 63)) AS i) gs),
-         |init AS (SELECT id, CAST(ROW_NUMBER() OVER (ORDER BY id) - 1 AS INTEGER) AS cid
-         |  FROM (SELECT DISTINCT id FROM pts ORDER BY id LIMIT $nCells)),
-         |c0 AS (SELECT init.cid, p.dim, p.q AS v FROM pts p JOIN init ON p.id = init.id)""".stripMargin)
-    (1 to iters).foreach { r =>
-      val prev = s"c${r - 1}"
-      sb.append(",\n")
-      sb.append(
-        s"""a$r AS (SELECT id, cid FROM (
-           |  SELECT p.id, c.cid,
-           |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-           |  FROM pts p JOIN $prev c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-           |s$r AS (SELECT a.cid, p.dim, SUM(p.q) AS s, count(*) AS n FROM pts p JOIN a$r a ON p.id = a.id GROUP BY 1, 2),
-           |c$r AS MATERIALIZED (SELECT $prev.cid, $prev.dim,
-           |  CAST(COALESCE((s$r.s - (((s$r.s % s$r.n) + s$r.n) % s$r.n)) // s$r.n, $prev.v) AS BIGINT) AS v
-           |  FROM $prev LEFT JOIN s$r ON $prev.cid = s$r.cid AND $prev.dim = s$r.dim)""".stripMargin)
-    }
-    val fin = s"c$iters"
-    sb.append(",\n")
-    sb.append(
-      s"""asg AS (SELECT id, cid FROM (
-         |  SELECT p.id, c.cid,
-         |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-         |  FROM pts p JOIN $fin c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-         |qp AS (SELECT id AS qid, cid FROM (
-         |  SELECT p.id, c.cid,
-         |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-         |  FROM pts p JOIN $fin c ON p.dim = c.dim WHERE p.id < 10 GROUP BY p.id, c.cid) WHERE rn <= $nprobe),
-         |cand AS (SELECT qp.qid, a.id AS vec_id FROM qp JOIN asg a ON a.cid = qp.cid WHERE a.id <> qp.qid),
-         |sc AS (SELECT cand.qid, cand.vec_id,
-         |  list_inner_product(q.v, x.v) /
-         |    (sqrt(list_inner_product(q.v, q.v)) * sqrt(list_inner_product(x.v, x.v))) AS cos
-         |  FROM cand JOIN c q ON q.id = cand.qid JOIN c x ON x.id = cand.vec_id),
-         |r AS (SELECT qid, vec_id, cos,
-         |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank FROM sc)
-         |SELECT qid, vec_id, round(cos, 6) AS cosine, rank
-         |FROM r WHERE rank <= $kq ORDER BY qid, rank""".stripMargin)
-    sb.toString
-  }
-
-  /** q_ann_pq_trained oracle: the trained-codebook PQ path replayed in
-    * SQL INCLUDING the training itself — inputs floor-quantized to
-    * integers, seed sub-vectors from the scatter order, then each Lloyd
-    * round unrolled (integer L2 discriminant assignment with
-    * ties-to-lower-index, integer floor-divided dimension means with
-    * COALESCE keeping empty codes — the q_kmeans pattern), then the
-    * standard encode → integer LUT (exact DECIMAL) → ADC → rank chain
-    * against the FINAL trained codebooks. */
-  private def annPqTrainedOracle(m: Int, ksub: Int, iters: Int, kq: Int,
-                                 scale: Int): String = {
-    val scatter = "(id % 2147483648) * 2654435761 % 2147483648"
-    val dsub = 64 / m
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH c AS MATERIALIZED (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |pts AS MATERIALIZED (SELECT id, CAST(i // $dsub AS INTEGER) AS j,
-         |  CAST(i % $dsub AS INTEGER) AS pos,
-         |  CAST(floor(CAST(v[i + 1] AS DOUBLE) * $scale) AS BIGINT) AS q
-         |  FROM c, (SELECT unnest(generate_series(0, 63)) AS i) gs),
-         |sd AS (SELECT id, s FROM (
-         |  SELECT id, row_number() OVER (ORDER BY $scatter, id) - 1 AS s FROM c) WHERE s < $ksub),
-         |cb0 AS MATERIALIZED (SELECT p.j, sd.s, p.pos, p.q AS cv
-         |  FROM pts p JOIN sd ON p.id = sd.id)""".stripMargin)
-    (1 to iters).foreach { r =>
-      val p = s"cb${r - 1}"
-      sb.append(",\n")
-      sb.append(
-        s"""a$r AS (SELECT id, j, s FROM (
-           |  SELECT p.id, p.j, cb.s, row_number() OVER (PARTITION BY p.id, p.j
-           |    ORDER BY SUM(cb.cv * cb.cv - 2 * p.q * cb.cv), cb.s) AS rn
-           |  FROM pts p JOIN $p cb ON p.j = cb.j AND p.pos = cb.pos
-           |  GROUP BY p.id, p.j, cb.s) WHERE rn = 1),
-           |s$r AS (SELECT a.j, a.s, p.pos, SUM(p.q) AS sm, count(*) AS n
-           |  FROM pts p JOIN a$r a ON p.id = a.id AND p.j = a.j GROUP BY 1, 2, 3),
-           |cb$r AS MATERIALIZED (SELECT cbp.j, cbp.s, cbp.pos,
-           |  CAST(COALESCE((s$r.sm - (((s$r.sm % s$r.n) + s$r.n) % s$r.n)) // s$r.n, cbp.cv) AS BIGINT) AS cv
-           |  FROM $p cbp LEFT JOIN s$r
-           |    ON cbp.j = s$r.j AND cbp.s = s$r.s AND cbp.pos = s$r.pos)""".stripMargin)
-    }
-    val fin = s"cb$iters"
-    sb.append(",\n")
-    sb.append(
-      s"""enc AS MATERIALIZED (SELECT id, j, s AS code FROM (
-         |  SELECT p.id, p.j, cb.s, row_number() OVER (PARTITION BY p.id, p.j
-         |    ORDER BY SUM(cb.cv * cb.cv - 2 * p.q * cb.cv), cb.s) AS rn
-         |  FROM pts p JOIN $fin cb ON p.j = cb.j AND p.pos = cb.pos
-         |  GROUP BY p.id, p.j, cb.s) WHERE rn = 1),
-         |lut AS MATERIALIZED (SELECT p.id AS qid, cb.j, cb.s,
-         |  CAST(SUM(p.q * cb.cv) AS DECIMAL(20,9)) AS ip
-         |  FROM pts p JOIN $fin cb ON p.j = cb.j AND p.pos = cb.pos
-         |  WHERE p.id < 10 GROUP BY 1, 2, 3),
-         |ad AS (SELECT l.qid, e.id AS vec_id, sum(l.ip) AS adc
-         |  FROM enc e JOIN lut l ON l.j = e.j AND l.s = e.code
-         |  WHERE e.id <> l.qid GROUP BY 1, 2),
-         |r AS (SELECT qid, vec_id, adc,
-         |  row_number() OVER (PARTITION BY qid ORDER BY adc DESC, vec_id) AS rank FROM ad)
-         |SELECT qid, vec_id, CAST(adc AS DOUBLE) AS adc, rank
-         |FROM r WHERE rank <= $kq ORDER BY qid, rank""".stripMargin)
-    sb.toString
-  }
-
-  /** q_ann_graph oracle: the COMPLETE NN-descent build + beam search
-    * replayed round by round — ring init from the same multiplicative
-    * scatter, reverse-capped adjacency, shared-neighbor candidate pairs,
-    * per-node top-k, then the unrolled beam hops. Cosine is the one
-    * shared dag (list_inner_product / norms) proven bit-equal to the
-    * Spark side's sequential fold by the other ANN gates. */
-  private def annGraphOracle(k: Int, rounds: Int, reverseCap: Int,
-                             kq: Int, beamWidth: Int, hops: Int,
-                             entries: Int): String = {
-    def cos(a: String, b: String) =
-      s"list_inner_product($a, $b) / (sqrt(list_inner_product($a, $a)) * sqrt(list_inner_product($b, $b)))"
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH c AS MATERIALIZED (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nn AS (SELECT count(*) AS n FROM c),
-         |rk AS MATERIALIZED (SELECT id, v, row_number() OVER (
-         |  ORDER BY (id % 2147483648) * 2654435761 % 2147483648, id) - 1 AS pos FROM c),
-         |e0 AS MATERIALIZED (SELECT DISTINCT a.id, b.id AS nbr, ${cos("a.v", "b.v")} AS cosine
-         |  FROM rk a CROSS JOIN nn
-         |  CROSS JOIN (SELECT unnest(range(1, ${k + 1})) AS j) js
-         |  JOIN rk b ON b.pos = (a.pos + 1 +
-         |    ((a.pos * $k + js.j) % 2147483648) * 2654435761 % 2147483648 % (nn.n - 1)) % nn.n)""".stripMargin)
-    (1 to rounds).foreach { r =>
-      val p = s"e${r - 1}"
-      sb.append(",\n")
-      sb.append(
-        s"""rv$r AS (SELECT id, nbr FROM (
-           |  SELECT e.nbr AS id, e.id AS nbr, e.cosine,
-           |    row_number() OVER (PARTITION BY e.nbr ORDER BY e.cosine DESC, e.id) AS rr
-           |  FROM $p e) WHERE rr <= $reverseCap),
-           |adj$r AS MATERIALIZED (SELECT DISTINCT id, nbr FROM (
-           |  SELECT id, nbr FROM $p UNION ALL SELECT id, nbr FROM rv$r)),
-           |cd$r AS MATERIALIZED (SELECT DISTINCT a.nbr AS x, b.nbr AS y
-           |  FROM adj$r a JOIN adj$r b ON a.id = b.id AND a.nbr < b.nbr),
-           |sc$r AS (SELECT d.id, d.nbr, ${cos("cv.v", "nv.v")} AS cosine FROM (
-           |  SELECT x AS id, y AS nbr FROM cd$r UNION ALL SELECT y, x FROM cd$r) d
-           |  JOIN c cv ON cv.id = d.id JOIN c nv ON nv.id = d.nbr),
-           |e$r AS MATERIALIZED (SELECT id, nbr, cosine FROM (
-           |  SELECT id, nbr, cosine,
-           |    row_number() OVER (PARTITION BY id ORDER BY cosine DESC, nbr) AS rr
-           |  FROM (SELECT id, nbr, MAX(cosine) AS cosine FROM (
-           |    SELECT id, nbr, cosine FROM $p UNION ALL SELECT id, nbr, cosine FROM sc$r)
-           |    GROUP BY id, nbr)) WHERE rr <= $k)""".stripMargin)
-    }
-    val g = s"e$rounds"
-    sb.append(",\n")
-    sb.append(
-      s"""q AS (SELECT id AS qid, v AS qv FROM c WHERE id < 10),
-         |b0 AS MATERIALIZED (SELECT q.qid, ent.nbr, ${cos("q.qv", "cv.v")} AS cosine
-         |  FROM q CROSS JOIN (SELECT id AS nbr FROM rk WHERE pos < $entries) ent
-         |  JOIN c cv ON cv.id = ent.nbr)""".stripMargin)
-    (1 to hops).foreach { h =>
-      val p = s"b${h - 1}"
-      sb.append(",\n")
-      sb.append(
-        s"""b$h AS MATERIALIZED (SELECT qid, nbr, cosine FROM (
-           |  SELECT d.qid, d.nbr, ${cos("q.qv", "cv.v")} AS cosine,
-           |    row_number() OVER (PARTITION BY d.qid
-           |      ORDER BY ${cos("q.qv", "cv.v")} DESC, d.nbr) AS rr
-           |  FROM (SELECT DISTINCT qid, nbr FROM (
-           |    SELECT qid, nbr FROM $p
-           |    UNION ALL SELECT p.qid, g.nbr FROM $p p JOIN $g g ON g.id = p.nbr
-           |    UNION ALL SELECT p.qid, g.id FROM $p p JOIN $g g ON g.nbr = p.nbr
-           |    UNION ALL SELECT p.qid, g0.nbr FROM $p p JOIN e0 g0 ON g0.id = p.nbr
-           |    UNION ALL SELECT p.qid, g0.id FROM $p p JOIN e0 g0 ON g0.nbr = p.nbr)) d
-           |  JOIN q ON q.qid = d.qid JOIN c cv ON cv.id = d.nbr)
-           |  WHERE rr <= $beamWidth)""".stripMargin)
-    }
-    sb.append(
-      s"""
-         |SELECT qid, nbr AS vec_id, round(cosine, 6) AS cosine, rank FROM (
-         |  SELECT qid, nbr, cosine,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nbr) AS rank
-         |  FROM b$hops WHERE qid <> nbr)
-         |WHERE rank <= $kq ORDER BY qid, rank""".stripMargin)
-    sb.toString
-  }
-
-  private def asDouble(names: String*)(df: DataFrame): DataFrame =
-    names.foldLeft(df)((d, n) => d.withColumn(n, col(n).cast("double")))
-
-  /** Shared by q_skew_agg_plain and q_skew_agg_salted — the same skewed
-    * hot-key aggregate, so the two strategies are provably one query. */
-  private val SkewAggOracle: String =
-    """SELECT CASE WHEN l_orderkey % 10 < 3 THEN 0 ELSE l_partkey END AS k1,
-      |CASE WHEN l_orderkey % 10 < 3 THEN 0 ELSE l_suppkey END AS k2,
-      |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |COUNT(*) AS n, MAX(l_quantity) AS mx
-      |FROM lineitem GROUP BY 1, 2 ORDER BY k1, k2""".stripMargin
-
-  /** Shared by q_skew_collect_plain and q_skew_collect_salted: sorted
-    * per-key value lists, pinned by size + md5 of the joined values. */
-  private val SkewCollectOracle: String =
-    """WITH b AS (SELECT
-      |  CASE WHEN l_orderkey % 10 < 3 THEN 0 ELSE l_partkey END AS k1,
-      |  CASE WHEN l_orderkey % 10 < 3 THEN 0 ELSE l_suppkey END AS k2,
-      |  CAST(round(l_quantity, 0) AS INTEGER) AS q FROM lineitem),
-      |g AS (SELECT k1, k2, list(q ORDER BY q) AS l FROM b GROUP BY 1, 2)
-      |SELECT k1, k2, CAST(len(l) AS INTEGER) AS n,
-      |md5(array_to_string(l, ',')) AS fp
-      |FROM g ORDER BY k1, k2""".stripMargin
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  // =========================================================================
-  // Relational core (SURVEY §2.1–2.6)
-  // =========================================================================
-
-  private def q1Agg(s: SparkSession, d: String): DataFrame = {
-    // TPC-H Q1 shape: Filter → Compute → GroupAggregate → Sort.
-    val li = Tables.lineitem(s, d)
-    val prepped = Relational.compute(
-      col("l_returnflag"), col("l_linestatus"),
-      dec(col("l_quantity")).as("qty"),
-      dec(col("l_extendedprice")).as("price"),
-      (dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec(col("l_discount")))).as("disc_price")
-    )(Relational.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))(li))
-    val agg = Aggregates.groupAggregate(Seq("l_returnflag", "l_linestatus"), Seq(
-      Agg(SUM, Some("qty"), "sum_qty"),
-      Agg(SUM, Some("price"), "sum_base_price"),
-      Agg(SUM, Some("disc_price"), "sum_disc_price"),
-      Agg(COUNT, None, "count_order")))(prepped)
-    Relational.sort(col("l_returnflag"), col("l_linestatus"))(
-      asDouble("sum_qty", "sum_base_price", "sum_disc_price")(agg))
-  }
-
-  private def qCompositeQ3(s: SparkSession, d: String): DataFrame = {
-    // TPC-H Q3 shape composed through the operator API (reference join
-    // tree: test/guide/join.cc): selective dim filter → broadcast
-    // hashJoin → shuffle hashJoin against the filtered fact →
-    // groupAggregate → extendedSort top-k. Pins operator COMPOSITION —
-    // joins feeding aggregates feeding top-k — not just each operator
-    // alone. Filters sit on each scan (pushdown), the one-column
-    // customer side broadcasts, the lineitem side is projected to
-    // (key, decimal revenue) before its exchange.
-    val cust = Relational.filter(col("c_mktsegment") === "BUILDING",
-      proj = Seq(col("c_custkey")))(Tables.customer(s, d))
-    val ord = Relational.filter(
-      col("o_orderdate") < lit("1998-01-01").cast("timestamp_ntz"),
-      proj = Seq(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-        col("o_orderpriority")))(Tables.orders(s, d))
-    val li = Relational.filter(
-      col("l_shipdate") > lit("1998-01-01").cast("timestamp_ntz"),
-      proj = Seq(col("l_orderkey"),
-        (dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)")
-          - dec(col("l_discount")))).as("disc_price")))(Tables.lineitem(s, d))
-    val co = Relational.hashJoin(ord, cust,
-      col("o_custkey") === col("c_custkey"), broadcastRight = true)
-    val j = Relational.hashJoin(li, co, col("l_orderkey") === col("o_orderkey"))
-    val agg = Aggregates.groupAggregate(
-      Seq("l_orderkey", "o_orderdate", "o_orderpriority"),
-      Seq(Agg(SUM, Some("disc_price"), "revenue")))(j)
-    // top-k on the EXACT decimal (ties broken by date, then key — fully
-    // deterministic), double cast only on the 10 surviving rows
-    asDouble("revenue")(Relational.extendedSort(
-      Seq(col("revenue").desc, col("o_orderdate"), col("l_orderkey")),
-      limit = Some(10))(agg))
-      .select("l_orderkey", "o_orderdate", "o_orderpriority", "revenue")
-  }
-
-  private def qCompositeQ10(s: SparkSession, d: String): DataFrame = {
-    // TPC-H Q10 shape: 4-table join (fact → time-windowed orders →
-    // customer → broadcast nation) → groupAggregate → top-20.
-    val ord = Relational.filter(
-      col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz")
-        && col("o_orderdate") < lit("1996-07-01").cast("timestamp_ntz"),
-      proj = Seq(col("o_orderkey"), col("o_custkey")))(Tables.orders(s, d))
-    val li = Relational.filter(col("l_returnflag") === "R",
-      proj = Seq(col("l_orderkey"),
-        (dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)")
-          - dec(col("l_discount")))).as("disc_price")))(Tables.lineitem(s, d))
-    val lo = Relational.hashJoin(li, ord, col("l_orderkey") === col("o_orderkey"))
-    val loc = Relational.hashJoin(lo, Tables.customer(s, d),
-      col("o_custkey") === col("c_custkey"))
-    val locn = Relational.hashJoin(loc, Tables.nation(s, d),
-      col("c_nationkey") === col("n_nationkey"), broadcastRight = true)
-    val agg = Aggregates.groupAggregate(
-      Seq("c_custkey", "c_name", "c_acctbal", "n_name"),
-      Seq(Agg(SUM, Some("disc_price"), "revenue")))(locn)
-    asDouble("revenue")(Relational.extendedSort(
-      Seq(col("revenue").desc, col("c_custkey")), limit = Some(20))(agg))
-      .select("c_custkey", "c_name", "c_acctbal", "n_name", "revenue")
-  }
-
-  private def qCompositeQ5(s: SparkSession, d: String): DataFrame = {
-    // TPC-H Q5 shape: 6-table join with the region→nation→supplier dim
-    // chain pre-reduced and broadcast, the two-key (suppkey, nationkey)
-    // final join enforcing the customer-nation = supplier-nation
-    // correlation, then a per-nation revenue aggregate. The dim chain
-    // collapses to a tiny broadcast BEFORE touching fact data.
-    val asia = Relational.filter(col("r_name") === "ASIA",
-      proj = Seq(col("r_regionkey")))(Tables.region(s, d))
-    val nat = Relational.hashJoin(Tables.nation(s, d), asia,
-      col("n_regionkey") === col("r_regionkey"), broadcastRight = true,
-      proj = Seq(col("n_nationkey"), col("n_name")))
-    val sup = Relational.hashJoin(Tables.supplier(s, d), nat,
-      col("s_nationkey") === col("n_nationkey"), broadcastRight = true,
-      proj = Seq(col("s_suppkey"), col("s_nationkey"), col("n_name")))
-    val ord = Relational.filter(
-      col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz")
-        && col("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz"),
-      proj = Seq(col("o_orderkey"), col("o_custkey")))(Tables.orders(s, d))
-    val li = Relational.project(col("l_orderkey"), col("l_suppkey"),
-      (dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)")
-        - dec(col("l_discount")))).as("disc_price"))(Tables.lineitem(s, d))
-    val lo = Relational.hashJoin(li, ord, col("l_orderkey") === col("o_orderkey"))
-    val loc = Relational.hashJoin(lo,
-      Relational.project(col("c_custkey"), col("c_nationkey"))(Tables.customer(s, d)),
-      col("o_custkey") === col("c_custkey"))
-    val j = Relational.hashJoin(loc, sup,
-      col("l_suppkey") === col("s_suppkey")
-        && col("c_nationkey") === col("s_nationkey"), broadcastRight = true)
-    val agg = Aggregates.groupAggregate(Seq("n_name"),
-      Seq(Agg(SUM, Some("disc_price"), "revenue")))(j)
-    Relational.sort(col("n_name"))(asDouble("revenue")(agg))
-  }
-
-  private def qFilterProject(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    val f = Relational.filter(col("l_quantity") >= 45 && col("l_returnflag") === "A")(li)
-    Relational.sort(col("l_orderkey"), col("l_linenumber"))(
-      Relational.project(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-        (dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec(col("l_discount"))))
-          .cast("double").as("revenue"))(f))
-  }
-
-  private def qLimitOffset(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    Relational.limitOffset(20, 50)(
-      Relational.sort(col("l_orderkey"), col("l_linenumber"))(
-        Relational.project(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))(li)))
-  }
-
-  private def qSortTopK(s: SparkSession, d: String): DataFrame = {
-    // ExtendedSort: case-insensitive key + top-k.
-    val p = Tables.part(s, d)
-    Relational.extendedSort(
-      Seq(Relational.caseInsensitive(col("p_type")), col("p_retailprice").desc, col("p_partkey")),
-      limit = Some(10))(p)
-      .select(col("p_partkey"), col("p_type"), col("p_retailprice"))
-  }
-
-  private def qHashJoinInner(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d)
-    val c = Tables.customer(s, d)
-    val j = Relational.hashJoin(o, c, col("o_custkey") === col("c_custkey"),
-      broadcastRight = true)
-    val agg = Aggregates.groupAggregate(Seq("c_mktsegment"), Seq(
-      Agg(COUNT, None, "n_orders"),
-      Agg(MIN, Some("o_totalprice"), "min_price"),
-      Agg(MAX, Some("o_totalprice"), "max_price")))(j)
-    Relational.sort(col("c_mktsegment"))(agg)
-  }
-
-  private def qHashJoinLeft(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d)
-    val o = Tables.orders(s, d)
-    val j = Relational.hashJoin(c, o, col("c_custkey") === col("o_custkey"), "left_outer")
-    val agg = Aggregates.groupAggregate(Seq("c_custkey"), Seq(
-      Agg(COUNT, Some("o_orderkey"), "n_orders"),
-      Agg(SUM, Some("o_totalprice_dec"), "sum_price")))(
-      j.withColumn("o_totalprice_dec", dec(col("o_totalprice"))))
-    Relational.sort(col("c_custkey"))(asDouble("sum_price")(agg))
-  }
-
-  private def qHashJoinRight(s: SparkSession, d: String): DataFrame = {
-    // RIGHT_OUTER superset (reference declares it in the JoinType enum,
-    // supersonic.proto:108-113, without implementing it). rhs = customer,
-    // whose key is unique — exercises the KeyUniqueness=UNIQUE contract.
-    val o = Tables.orders(s, d)
-    val c = Tables.customer(s, d)
-    val j = Relational.hashJoin(o, c, col("o_custkey") === col("c_custkey"),
-      "right_outer", rhsUniqueness = Relational.UniqueKey, rhsKeyCols = Seq("c_custkey"))
-    val agg = Aggregates.groupAggregate(Seq("c_custkey"), Seq(
-      Agg(COUNT, Some("o_orderkey"), "n_orders"),
-      Agg(SUM, Some("o_totalprice_dec"), "sum_price")))(
-      j.withColumn("o_totalprice_dec", dec(col("o_totalprice"))))
-    Relational.sort(col("c_custkey"))(asDouble("sum_price")(agg))
-  }
-
-  private def qHashJoinFull(s: SparkSession, d: String): DataFrame = {
-    // FULL_OUTER superset: restrict customers so both sides contribute
-    // unmatched rows (orders with c_custkey > 750 have no customer row).
-    val c = Tables.customer(s, d).where(col("c_custkey") <= 750)
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val o = Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"))
-    val j = Relational.hashJoin(c, o, col("c_custkey") === col("o_custkey"), "full_outer")
-      .withColumn("custkey", coalesce(col("c_custkey"), col("o_custkey")))
-    val agg = Aggregates.groupAggregate(Seq("custkey"), Seq(
-      Agg(COUNT, Some("o_orderkey"), "n_orders"),
-      Agg(MAX, Some("c_mktsegment"), "seg")))(j)
-    Relational.sort(col("custkey"))(agg)
-  }
-
-  // Sketch gates: the sketch estimate itself is implementation-defined, so
-  // the gate outputs the EXACT value + a tolerance boolean on the estimate
-  // and the oracle recomputes the exact value and asserts the boolean —
-  // verifying the accuracy contract without cross-engine sketch parity.
-  private def qSketchDistinct(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("l_returnflag"))(
-      Sketches.approxDistinctWithCheck(Tables.lineitem(s, d),
-        Seq("l_returnflag"), "l_suppkey")
-        .select("l_returnflag", "nd_exact", "nd_ok"))
-
-  private def qSketchQuantiles(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("l_returnflag"))(
-      Sketches.approxQuantilesWithCheck(Tables.lineitem(s, d),
-        Seq("l_returnflag"), "l_quantity", Seq(0.25, 0.5, 0.75))
-        .select(col("l_returnflag"),
-          round(element_at(col("q_exact"), 1), 6).as("q25"),
-          round(element_at(col("q_exact"), 2), 6).as("q50"),
-          round(element_at(col("q_exact"), 3), 6).as("q75"),
-          col("q_ok")))
-
-  private def qSketchFreq(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("l_suppkey"))(
-      Sketches.topKFrequencyWithCheck(Tables.lineitem(s, d), "l_suppkey", k = 10)
-        .select("l_suppkey", "n_exact", "freq_ok"))
-
-  private def qFileRoundtrip(s: SparkSession, d: String): DataFrame = {
-    // FileOutput → FileInput round-trip (reference file_io.h:64): write a
-    // directory-partitioned projection with size-targeted files, scan it
-    // back, aggregate — gates that the storage round-trip preserves
-    // values exactly (and exercises the 100 TB writer shape: partition
-    // pruning + bounded file sizes).
-    // per-process path: concurrent Verify/Bench runs on one machine must
-    // not interleave overwrites of a shared directory
-    val out = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_roundtrip_${ProcessHandle.current().pid()}")
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
-      col("o_totalprice"))
-    Relational.fileOutputPartitioned(o, out, Seq("o_orderstatus"),
-      targetRowsPerFile = 5000L)
-    val back = Relational.scanParquet(s, out)
-    Relational.sort(col("o_orderstatus"))(asDouble("sum_price")(
-      Aggregates.groupAggregate(Seq("o_orderstatus"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(SUM, Some("price_dec"), "sum_price")))(
-        back.withColumn("price_dec", dec(col("o_totalprice"))))))
-  }
-
-  /** q_fileio_parity — the reference's binary block-file format
-    * (cursor/infrastructure/file_io.cc, FileOutput/FileInput): write a
-    * customer projection as supersonic block files (chunked, LE,
-    * byte-per-row nullability, varlen length prefixes), read the BYTES
-    * back with the schema-supplied reader, emit every row. The oracle
-    * reads the source table directly, so a pass proves the byte round
-    * trip is lossless. Golden wire-layout pinning (hand-assembled bytes)
-    * lives in SupersonicFileSpec. */
-  private def qFileioParity(s: SparkSession, d: String): DataFrame = {
-    val out = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_ssonic_${ProcessHandle.current().pid()}")
-    val src = Tables.customer(s, d).select(col("c_custkey"), col("c_name"),
-      col("c_nationkey").cast("int").as("nk"),
-      col("c_acctbal").cast("double").as("bal"))
-    graft.sources.SupersonicFile.write(src, out)
-    graft.sources.SupersonicFile.read(s, out, src.schema).orderBy("c_custkey")
-  }
-
-  /** Bucketed-table ingest memo: table name -> the sfDir its data came
-    * from. The 100 TB rationale is pay-the-shuffle-once-AT-INGEST, so the
-    * writes must not recur inside Bench's timed best-of-K attempts —
-    * repeat calls in one session (same sfDir) find the tables in the
-    * catalog and skip straight to the join. */
-  private val bucketedIngestDir = scala.collection.mutable.Map.empty[String, String]
-
-  /** Directories to delete at JVM exit: bucketed-table data in the
-    * shared warehouse (the in-memory catalog dies with the session) and
-    * every pid-suffixed scratch dir a gate writes under java.io.tmpdir —
-    * without this, repeated Bench/Verify processes accumulate unbounded
-    * parquet/ORC scratch in /tmp. */
-  private val exitCleanupDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val exitCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      exitCleanupDirs.forEach { p =>
-        try graft.streaming.Streams.deleteRecursively(p)
-        catch { case _: Throwable => () }
-      }))
-
-  /** Register a gate scratch path for deletion at JVM exit (returns it
-    * for inline use at the call site). */
-  private def cleanupAtExit(path: String): String = {
-    exitCleanupDirs.add(java.nio.file.Paths.get(path))
-    exitCleanupHook
-    path
-  }
-
-  /** Default warehouse layout for a database-less table: <warehouse>/<name>. */
-  private def warehousePath(s: SparkSession, table: String): java.nio.file.Path = {
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val base = if (wh.contains(":/")) java.nio.file.Paths.get(new java.net.URI(wh))
-               else java.nio.file.Paths.get(wh)
-    base.resolve(table.toLowerCase(java.util.Locale.ROOT))
-  }
-
-  private def ensureBucketedIngest(s: SparkSession, d: String): (String, String) =
-    synchronized {
-      // pid-suffixed table names: concurrent Verify/Bench sessions share
-      // one warehouse directory.
-      val pid = ProcessHandle.current().pid()
-      val liT = s"graft_li_bkt_$pid"
-      val oT = s"graft_o_bkt_$pid"
-      if (!bucketedIngestDir.get(liT).contains(d) || !s.catalog.tableExists(liT)) {
-        Relational.bucketedWrite(
-          Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity")),
-          liT, Seq("l_orderkey"), numBuckets = 8)
-        bucketedIngestDir(liT) = d
-      }
-      if (!bucketedIngestDir.get(oT).contains(d) || !s.catalog.tableExists(oT)) {
-        Relational.bucketedWrite(
-          Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice")),
-          oT, Seq("o_orderkey"), numBuckets = 8)
-        bucketedIngestDir(oT) = d
-      }
-      exitCleanupDirs.add(warehousePath(s, liT))
-      exitCleanupDirs.add(warehousePath(s, oT))
-      exitCleanupHook
-      (liT, oT)
-    }
-
-  private def qUpsert(s: SparkSession, d: String): DataFrame = {
-    // Keyed upsert (MERGE latest-wins): every 7th order arrives
-    // re-priced (doubled — exact in FP) plus one brand-new key; the
-    // merged corpus must show updated rows replacing, untouched rows
-    // surviving, and the new key appended. The oracle replays the CASE
-    // + the synthetic new row directly from the raw table.
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
-      col("o_totalprice"))
-    val maxKey = 1000000000L // above any generated o_orderkey at every SF
-    val repriced = o.where(col("o_orderkey") % 7 === 0)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-    val newRow = s.range(1).select(lit(maxKey).as("o_orderkey"),
-      lit("N").as("o_orderstatus"), lit(1.5).as("o_totalprice"))
-    val merged = Relational.upsert(o, repriced.unionByName(newRow), Seq("o_orderkey"))
-    merged.orderBy("o_orderkey")
-  }
-
-  private def qOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    // ORC storage face (FileOutput/FileInput over Spark's second
-    // built-in columnar format): write a projection, read it back
-    // FILTERED — the predicate reaches the ORC reader as a pushed
-    // filter, require()d on the scan plan — and aggregate. The oracle
-    // replays the filter+aggregate from the raw table, so a lossy ORC
-    // round trip (values OR the filter contract) hash-mismatches.
-    val out = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_orc_${ProcessHandle.current().pid()}")
-    Relational.orcOutput(Tables.orders(s, d).select(
-      col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")), out)
-    val back = Relational.orcInput(s, out).where(col("o_totalprice") > 100000.0)
-    val plan = back.queryExecution.executedPlan.toString
-    require(plan.contains("PushedFilters: [") && !plan.contains("PushedFilters: []"),
-      s"ORC scan must push the price filter down:\n$plan")
-    Relational.sort(col("o_orderpriority"))(asDouble("sum_price")(
-      Aggregates.groupAggregate(Seq("o_orderpriority"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(SUM, Some("price_dec"), "sum_price")))(
-        back.withColumn("price_dec", dec(col("o_totalprice"))))))
-  }
-
-  private def qBucketedJoin(s: SparkSession, d: String): DataFrame = {
-    // Co-located join via bucketed tables (the pay-once 100 TB ingest
-    // strategy, Relational.bucketedWrite): both sides are written
-    // bucketBy(join key) + sortBy at ingest (memoized — not re-paid per
-    // timed attempt), so the repeated equi-join runs with ZERO shuffle
-    // exchange on the join key. The MERGE hint rules out a broadcast plan
-    // for any threshold and TRAVELS WITH the logical plan, so the
-    // require() below holds for the exact plan Bench/Verify re-plan and
-    // execute — not a throwaway planning under temporarily-altered
-    // session conf. The oracle replays the plain join: values prove the
-    // bucketed storage round-trip is lossless.
-    val (liT, oT) = ensureBucketedIngest(s, d)
-    val joined = s.table(liT).hint("merge")
-      .join(s.table(oT), col("l_orderkey") === col("o_orderkey"))
-    val out = Relational.sort(col("bucket"))(asDouble("sum_qty", "sum_price")(
-      Aggregates.groupAggregate(Seq("bucket"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(SUM, Some("qty_dec"), "sum_qty"),
-        Agg(SUM, Some("price_dec"), "sum_price")))(
-        joined.select(
-          pmod(col("l_orderkey"), lit(10)).cast("long").as("bucket"),
-          dec(col("l_quantity")).as("qty_dec"),
-          dec(col("o_totalprice")).as("price_dec")))))
-    // Assert on the FULL final plan: a sort-merge join over the bucketed
-    // scans with no exchange keyed on either join key (the groupBy's
-    // exchange on `bucket` is expected and allowed).
-    val plan = out.queryExecution.executedPlan.toString
-    require(plan.contains("SortMergeJoin"),
-      s"bucketed join must plan as SortMergeJoin over bucketed scans:\n$plan")
-    require(!plan.contains("Exchange hashpartitioning(l_orderkey") &&
-      !plan.contains("Exchange hashpartitioning(o_orderkey"),
-      s"bucketed join must not shuffle on the join key:\n$plan")
-    out
-  }
-
-  private def qSpy(s: SparkSession, d: String): DataFrame =
-    // SpyOperation passthrough (reference spy.h): observed metrics attach
-    // to the plan without changing the data — the gate asserts identity.
-    Relational.sort(col("n_nationkey"))(
-      Relational.spy(Tables.nation(s, d), "spy_nation")
-        .select(col("n_nationkey"), col("n_name")))
-
-  private def qSaltedAgg(s: SparkSession, d: String): DataFrame = {
-    // Skew-salted two-phase aggregation must be value-identical to the
-    // plain GROUP BY the oracle runs: exactness holds because the partial
-    // sums run over DECIMAL, so merge order cannot perturb the result.
-    val li = Tables.lineitem(s, d).withColumn("qty_dec", dec(col("l_quantity")))
-    val agg = Aggregates.saltedGroupAggregate(Seq("l_suppkey"), Seq(
-      Agg(SUM, Some("qty_dec"), "sum_qty"),
-      Agg(COUNT, None, "n"),
-      Agg(MIN, Some("l_quantity"), "mn"),
-      Agg(MAX, Some("l_quantity"), "mx")), saltBuckets = 8)(li)
-    Relational.sort(col("l_suppkey"))(asDouble("sum_qty")(agg))
-  }
-
-  /** Hot-key projection for the skew A/B gates: ~30% of lineitem rows
-    * (l_orderkey % 10 < 3) fold onto the single compound key (0, 0); the
-    * tail stays high-cardinality (l_partkey, l_suppkey — ~1 group per 3
-    * rows), which keeps map-side partial aggregation from collapsing the
-    * hot key early. This is the regime where one reducer receives ~30%
-    * of the shuffle while the rest share the tail — the skew that kills
-    * a 1000-executor job. */
-  private def skewedKeys(s: SparkSession, d: String): DataFrame = {
-    val hot = pmod(col("l_orderkey"), lit(10)) < 3
-    Tables.lineitem(s, d).select(
-      when(hot, lit(0L)).otherwise(col("l_partkey")).as("k1"),
-      when(hot, lit(0L)).otherwise(col("l_suppkey")).as("k2"),
-      dec(col("l_quantity")).as("qty_dec"), col("l_quantity"))
-  }
-
-  private val skewAggs = Seq(
-    Agg(SUM, Some("qty_dec"), "sum_qty"),
-    Agg(COUNT, None, "n"),
-    Agg(MAX, Some("l_quantity"), "mx"))
-
-  // Plain vs salted on the SAME skewed input + the SAME oracle: the
-  // correctness rows prove value-identity, the bench rows record the
-  // skew cost and the salting win at sf0.1 (see BASELINE.md).
-  private def qSkewAggPlain(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("k1"), col("k2"))(asDouble("sum_qty")(
-      Aggregates.groupAggregate(Seq("k1", "k2"), skewAggs)(skewedKeys(s, d))))
-
-  private def qSkewAggSalted(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("k1"), col("k2"))(asDouble("sum_qty")(
-      Aggregates.saltedGroupAggregate(Seq("k1", "k2"), skewAggs,
-        saltBuckets = 16)(skewedKeys(s, d))))
-
-  // Collect-per-key is the aggregation class where salting genuinely
-  // matters (no map-side combine — see saltedCollectSorted). Same skewed
-  // fixture, same oracle; the array content is pinned via size + md5 of
-  // the sorted joined values (the array itself stays in-engine so the
-  // compare layer never handles multi-MB cells).
-  private def skewedQty(s: SparkSession, d: String): DataFrame =
-    skewedKeys(s, d).withColumn("q", round(col("l_quantity")).cast("int"))
-
-  private def collectFingerprint(arr: Column): Column =
-    md5(concat_ws(",", transform(arr, v => v.cast("string"))))
-
-  private def qSkewCollectPlain(s: SparkSession, d: String): DataFrame =
-    skewedQty(s, d).groupBy("k1", "k2")
-      .agg(sort_array(collect_list(col("q"))).as("vals"))
-      .select(col("k1"), col("k2"), size(col("vals")).as("n"),
-        collectFingerprint(col("vals")).as("fp"))
-      .orderBy("k1", "k2")
-
-  private def qSkewCollectSalted(s: SparkSession, d: String): DataFrame =
-    Aggregates.saltedCollectSorted(Seq("k1", "k2"), "q", "vals")(skewedQty(s, d))
-      .select(col("k1"), col("k2"), size(col("vals")).as("n"),
-        collectFingerprint(col("vals")).as("fp"))
-      .orderBy("k1", "k2")
-
-  private def qScanSelection(s: SparkSession, d: String): DataFrame = {
-    // Selection vector semantics (reference scan_view.h:42-47): rows may
-    // repeat and drop. Selection = every 7th customer, with keys < 70
-    // selected twice (duplicate rowids). c_custkey is 0-based contiguous,
-    // so rowid-over-key-order == c_custkey and the oracle can reproduce
-    // the selection in SQL.
-    val c = Tables.customer(s, d).orderBy("c_custkey")
-    val base = Tables.customer(s, d).where(col("c_custkey") % 7 === 0)
-      .select(col("c_custkey").as("rowid"))
-    val sel = base.unionAll(base.where(col("rowid") < 70))
-      .withColumn("pos", -col("rowid"))
-    Relational.scanWithSelection(c, sel)
-      .select("c_custkey", "c_name", "c_mktsegment")
-  }
-
-  private def qRangeJoin(s: SparkSession, d: String): DataFrame = {
-    // Keyless interval join (the hard case — with an equi key Catalyst
-    // already hash-joins): lineitems shipped within 30 days of any
-    // high-value order's date, aggregated per interval. Exercises the
-    // bucketized plan, not BroadcastNestedLoop (asserted in spec).
-    val day = 86400000L
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_shipdate"))
-    val big = Tables.orders(s, d).where(col("o_totalprice") > 495000.0)
-      .select(col("o_orderkey"), col("o_orderdate"))
-    // parquet timestamps read as TIMESTAMP_NTZ; UTC session makes the
-    // cast to instant-typed TIMESTAMP an identity. The bucket width is
-    // CHOSEN from the interval-length distribution (here every interval
-    // is exactly 30 days, so the p90 chooser lands on ~30 days) — the
-    // driver gate exercises the auto-width path end-to-end; width cannot
-    // change the result set, only the explode/probe balance.
-    val start = graft.functions.Exprs.epochMillisCivil(col("o_orderdate").cast("timestamp_ntz"))
-    val end = graft.functions.Exprs.epochMillisCivil(col("o_orderdate").cast("timestamp_ntz")) + 30L * day
-    val width = Relational.chooseRangeBucketWidth(big, start, end)
-    val j = Relational.rangeJoin(li, big, Nil,
-      graft.functions.Exprs.epochMillisCivil(col("l_shipdate").cast("timestamp_ntz")),
-      start, end, bucketWidth = width)
-    j.groupBy("o_orderkey")
-      .agg(count(lit(1)).as("n_shipped"),
-        sum(dec(col("l_quantity"))).cast("double").as("sum_qty"))
-      .orderBy("o_orderkey")
-  }
-
-  private def qForeignFilter(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    val big = Relational.filter(col("o_totalprice") > 150000.0)(Tables.orders(s, d))
-    Relational.sort(col("l_orderkey"), col("l_linenumber"))(
-      Relational.foreignFilter(li, "l_orderkey", big, "o_orderkey")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity")))
-  }
-
-  private def qRowidMergeJoin(s: SparkSession, d: String): DataFrame = {
-    val n = Tables.nation(s, d).withColumn("n_regionkey64", col("n_regionkey").cast("long"))
-    val r = Tables.region(s, d)
-    Relational.sort(col("n_nationkey"))(
-      Relational.rowidMergeJoin(n, "n_regionkey64", r, Seq(col("r_regionkey")))
-        .select(col("n_nationkey"), col("n_name"), col("r_name")))
-  }
-
-  private def qCoalesce(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d)
-    val left = c.select(col("c_custkey"), col("c_name"))
-    val right = c.select(col("c_acctbal"), col("c_mktsegment"))
-    Relational.sort(col("c_custkey"))(Relational.coalesceColumns(Seq(left, right)))
-  }
-
-  private def qMergeUnion(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    def side(flag: String) =
-      li.filter(col("l_returnflag") === flag)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
-    Relational.mergeUnionAll(Seq(side("A"), side("R")),
-      Seq(col("l_orderkey"), col("l_linenumber")))
-  }
-
-  private def qGenerate(s: SparkSession, d: String): DataFrame =
-    Relational.compute(col("seq"), lit(42).as("c_int"), lit("x").as("c_str"))(
-      Relational.generate(s, 10)).orderBy("seq")
-
-  private def qScalarAgg(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).withColumn("qty_dec", dec(col("l_quantity")))
-    asDouble("s")(Aggregates.scalarAggregate(Seq(
-      Agg(COUNT, None, "cnt"),
-      Agg(SUM, Some("qty_dec"), "s"),
-      Agg(MIN, Some("l_quantity"), "mn"),
-      Agg(MAX, Some("l_quantity"), "mx")))(li))
-  }
-
-  private def qScalarAggEmpty(s: SparkSession, d: String): DataFrame = {
-    // ScalarAggregate returns exactly one row on empty input
-    // (reference: aggregate_scalar.cc); COUNT→0, others→NULL.
-    val li = Tables.lineitem(s, d).filter(col("l_quantity") < 0)
-      .withColumn("qty_dec", dec(col("l_quantity")))
-    asDouble("s")(Aggregates.scalarAggregate(Seq(
-      Agg(COUNT, None, "cnt"),
-      Agg(SUM, Some("qty_dec"), "s"),
-      Agg(MIN, Some("l_quantity"), "mn")))(li))
-  }
-
-  private def qGroupDistinct(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    Relational.sort(col("l_returnflag"))(
-      Aggregates.hybridGroupAggregate(Seq("l_returnflag"), Seq(
-        Agg(COUNT, Some("l_suppkey"), "nd_supp", distinct = true),
-        Agg(SUM, Some("l_linenumber"), "sd_ln", distinct = true),
-        Agg(COUNT, Some("l_orderkey"), "nd_ord", distinct = true)))(li))
-  }
-
-  private def qAggConcat(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d).filter(col("c_custkey") <= 50)
-    Relational.sort(col("c_nationkey"))(
-      Aggregates.groupAggregate(Seq("c_nationkey"), Seq(
-        Agg(CONCAT, Some("c_name"), "names", order = Some(col("c_custkey"))),
-        Agg(COUNT, None, "cnt")))(c))
-  }
-
-  private def qFirstLast(s: SparkSession, d: String): DataFrame = {
-    // (l_orderkey, l_linenumber) is NOT unique in the synthetic data, so the
-    // order key folds the quantity in as a deterministic tie-break — rows
-    // tying on (ord, qty) are interchangeable for FIRST/LAST-of-qty.
-    val li = Tables.lineitem(s, d)
-      .withColumn("ord", (col("l_orderkey") * 10 + col("l_linenumber")) * 100 + col("l_quantity"))
-    Relational.sort(col("l_returnflag"))(
-      Aggregates.groupAggregate(Seq("l_returnflag"), Seq(
-        Agg(FIRST, Some("l_quantity"), "first_qty", order = Some(col("ord"))),
-        Agg(LAST, Some("l_quantity"), "last_qty", order = Some(col("ord")))))(li))
-  }
-
-  private def qAggLimit(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).withColumn("qty_dec", dec(col("l_quantity")))
-    asDouble("sum_qty")(
-      Aggregates.groupAggregateWithLimit("l_suppkey", Seq(
-        Agg(SUM, Some("qty_dec"), "sum_qty"),
-        Agg(COUNT, None, "cnt")), limit = 5)(li))
-      .orderBy(col("l_suppkey").asc_nulls_last, col("overflow"))
-  }
-
-  private def qSetIntersect(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("nk"))(Relational.intersect(
-      Tables.customer(s, d).select(col("c_nationkey").as("nk")),
-      Tables.supplier(s, d).select(col("s_nationkey").as("nk"))))
-
-  /** Right side is restricted to a fixed supplier-key range so the
-    * difference is NON-empty at every SF (round 10: the unrestricted form
-    * was the suite's only zero-row gate — it hash-matched trivially and
-    * could not catch duplicate-semantics drift in except; the empty case
-    * stays asserted in RelationalSpec). */
-  private def qSetExcept(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("nk"))(Relational.except(
-      Tables.customer(s, d).select(col("c_nationkey").as("nk")),
-      Tables.supplier(s, d).filter(col("s_suppkey") < 20)
-        .select(col("s_nationkey").as("nk"))))
-
-  private def qJoin5(s: SparkSession, d: String): DataFrame = {
-    // TPC-H Q5 shape: 5-way join with two broadcast dims, revenue per nation.
-    val li = Tables.lineitem(s, d)
-    val o = Tables.orders(s, d)
-    val c = Tables.customer(s, d)
-    val n = Tables.nation(s, d)
-    val r = Tables.region(s, d)
-    val j = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .withColumn("rev",
-        dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,2)") - dec(col("l_discount"))))
-    Relational.sort(col("r_name"), col("n_name"))(
-      asDouble("revenue")(Aggregates.groupAggregate(Seq("r_name", "n_name"), Seq(
-        Agg(SUM, Some("rev"), "revenue"),
-        Agg(COUNT, None, "n_items")))(j)))
-  }
-
-  // =========================================================================
-  // Scalar expression coverage (SURVEY §2.7) — graft.functions.Exprs
-  // =========================================================================
-
-  import graft.functions.{Exprs => E, Stateful}
-  import graft.pipeline.{Contamination, Dedup, Dsir, Multimodal, Profile, Sampling, Scoring, Similarity, TextAnalysis => T}
-
-  private def qExprArith(s: SparkSession, d: String): DataFrame =
-    Tables.part(s, d).select(col("p_partkey"),
-      E.plus(col("p_size"), lit(1)).as("a_plus"),
-      E.minus(col("p_size"), lit(3)).as("a_minus"),
-      E.multiply(col("p_size"), lit(3)).as("a_mul"),
-      E.divide(col("p_size"), lit(7)).as("a_div"),
-      E.cppDivide(col("p_size"), lit(7)).as("a_intdiv"),
-      E.modulus(col("p_size"), lit(5)).as("a_mod"),
-      E.negate(col("p_size")).as("a_neg"),
-      E.isOdd(col("p_size")).as("a_odd"),
-      E.isEven(col("p_size")).as("a_even")
-    ).orderBy("p_partkey")
-
-  private def qExprCmp(s: SparkSession, d: String): DataFrame =
-    Tables.customer(s, d).select(col("c_custkey"),
-      E.greater(col("c_acctbal"), lit(0)).as("c_pos"),
-      E.lessOrEqual(col("c_acctbal"), lit(1000)).as("c_le"),
-      E.equal(col("c_mktsegment"), lit("BUILDING")).as("c_eq"),
-      E.notEqual(col("c_mktsegment"), lit("AUTOMOBILE")).as("c_ne"),
-      E.in(col("c_mktsegment"), lit("BUILDING"), lit("MACHINERY")).as("c_in"),
-      col("c_acctbal").between(100, 5000).as("c_btw")
-    ).orderBy("c_custkey")
-
-  private def qExprLogic(s: SparkSession, d: String): DataFrame =
-    Tables.part(s, d).select(col("p_partkey"),
-      E.and(col("p_size") > 10, col("p_size") < 40).as("l_and"),
-      E.or(col("p_size") < 5, col("p_size") > 45).as("l_or"),
-      E.xor(col("p_size") > 25, col("p_retailprice") > 950).as("l_xor"),
-      E.not(col("p_size") > 25).as("l_not"),
-      E.ifExpr(col("p_size") > 25, lit("big"), lit("small")).as("l_if"),
-      E.ifNull(nullif(col("p_brand"), lit("Brand#2")), lit("other")).as("l_ifnull"),
-      E.isNull(nullif(col("p_brand"), lit("Brand#2"))).as("l_isnull"),
-      E.caseExpr(col("p_brand"),
-        Seq((lit("Brand#2"), lit(1)), (lit("Brand#17"), lit(2))), lit(0)).as("l_case"),
-      E.bitwiseAnd(col("p_size"), lit(12)).as("b_and"),
-      E.bitwiseOr(col("p_size"), lit(5)).as("b_or"),
-      E.bitwiseXor(col("p_size"), lit(9)).as("b_xor"),
-      E.bitwiseNot(col("p_size")).as("b_not"),
-      E.shiftLeftE(col("p_size"), 2).as("b_shl"),
-      E.shiftRightE(col("p_size"), 1).as("b_shr")
-    ).orderBy("p_partkey")
-
-  private def qExprMath(s: SparkSession, d: String): DataFrame =
-    Tables.part(s, d).select(col("p_partkey"),
-      round(E.sinE(col("p_size")), 6).as("m_sin"),
-      round(E.cosE(col("p_size")), 6).as("m_cos"),
-      round(E.atanE(col("p_size") / 50), 6).as("m_atan"),
-      round(E.expE(col("p_size") / 10), 6).as("m_exp"),
-      round(E.ln(col("p_retailprice")), 6).as("m_ln"),
-      round(E.log10E(col("p_retailprice")), 6).as("m_log10"),
-      round(E.log2E(col("p_retailprice")), 6).as("m_log2"),
-      round(E.sqrtE(col("p_retailprice")), 6).as("m_sqrt"),
-      E.powerE(col("p_size"), lit(2)).as("m_pow"),
-      round(E.atan2E(col("p_retailprice") / 1000, col("p_size")), 6).as("m_atan2"),
-      round(E.toDegrees(col("p_size")), 6).as("m_deg"),
-      round(E.toRadians(col("p_size")), 6).as("m_rad"),
-      E.absE(E.negate(col("p_size"))).as("m_abs"),
-      E.ceilE(col("p_retailprice")).as("m_ceil"),
-      E.floorE(col("p_retailprice")).cast("long").as("m_floor"),
-      E.truncE(col("p_retailprice")).cast("long").as("m_trunc"),
-      E.roundToInt(col("p_retailprice")).as("m_round0"),
-      E.piE.as("m_pi"),
-      E.isFinite(col("p_retailprice")).as("m_finite"),
-      E.isNaNE(lit(Double.NaN)).as("m_nan")
-    ).orderBy("p_partkey")
-
-  private def qExprString(s: SparkSession, d: String): DataFrame =
-    Tables.customer(s, d).select(col("c_custkey"),
-      E.lengthE(col("c_name")).as("s_len"),
-      E.toLower(col("c_name")).as("s_lower"),
-      E.toUpper(col("c_name")).as("s_upper"),
-      E.concatE(col("c_name"), lit("-"), col("c_mktsegment")).as("s_concat"),
-      E.concatWithSeparator("|", col("c_name"), col("c_mktsegment")).as("s_cws"),
-      E.substringE(col("c_name"), lit(10), lit(5)).as("s_sub"),
-      E.trailingSubstring(col("c_name"), lit(10)).as("s_tail"),
-      E.stringOffset(col("c_name"), "1").as("s_instr"),
-      E.stringContains(col("c_name"), "9").as("s_has9"),
-      E.stringContainsCI(col("c_mktsegment"), "auto").as("s_ci"),
-      E.stringReplace(col("c_name"), "Customer", "Cust").as("s_repl"),
-      E.ltrimE(E.concatE(lit("  "), col("c_name"))).as("s_ltrim"),
-      E.rtrimE(E.concatE(col("c_name"), lit("  "))).as("s_rtrim"),
-      E.trimE(E.concatE(lit(" "), col("c_name"), lit(" "))).as("s_trim"),
-      E.toStringE(col("c_custkey")).as("s_tostr")
-    ).orderBy("c_custkey")
-
-  /** The oracle's regexp engine is DuckDB = genuine RE2, so the round-10
-    * dialect-guard columns are pinned against the reference's own engine:
-    * r_posix ([[:upper:]] translates to \p{Upper}), r_named ((?P<..>)
-    * translates to Java named groups), and r_dollar — '[a-z]$' on a
-    * newline-terminated string is FALSE under RE2 ($ = end of text) but
-    * TRUE under untranslated Java ($ also matches before a final \n). */
-  private def qExprRegexp(s: SparkSession, d: String): DataFrame =
-    Tables.part(s, d).select(col("p_partkey"),
-      E.regexpPartialMatch(col("p_name"), "red|blue").as("r_part"),
-      E.regexpFullMatch(col("p_type"), "[A-Z]+").as("r_full"),
-      E.regexpExtractE(col("p_name"), "([a-z]+) ([a-z]+)", 2).as("r_ext"),
-      E.regexpReplaceE(col("p_name"), "[aeiou]", "_").as("r_repl"),
-      E.regexpPartialMatch(col("p_type"), "[[:upper:]]{8,}").as("r_posix"),
-      E.regexpExtractE(col("p_name"), "(?P<first>[a-z]+) (?P<second>[a-z]+)", 2).as("r_named"),
-      E.regexpPartialMatch(concat(col("p_name"), lit("\n")), "[a-z]$").as("r_dollar"),
-      E.regexpPartialMatch(col("p_name"), "[a-z]$").as("r_dollar_true")
-    ).orderBy("p_partkey")
-
-  private def qExprDatetime(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d).select(col("o_orderkey"),
-      E.yearE(col("o_orderdate")).as("d_year"),
-      E.quarterE(col("o_orderdate")).as("d_quarter"),
-      E.monthE(col("o_orderdate")).as("d_month"),
-      E.dayE(col("o_orderdate")).as("d_day"),
-      E.yearDay(col("o_orderdate")).as("d_yday"),
-      E.weekdayE(col("o_orderdate")).as("d_dow"),
-      E.unixTimestampE(col("o_orderdate")).as("d_epoch"),
-      E.dateFormat(col("o_orderdate"), "yyyy-MM-dd").as("d_fmt"),
-      E.dateFormat(E.addDays(col("o_orderdate"), lit(30)), "yyyy-MM-dd").as("d_plus30"),
-      E.dateFormat(E.addMonths(col("o_orderdate"), lit(2)), "yyyy-MM-dd").as("d_plus2m"),
-      E.dateFormat(E.addMinutes(col("o_orderdate"), lit(90)), "yyyy-MM-dd HH:mm").as("d_plus90m"),
-      E.dateFormat(E.makeDateE(lit(2024), lit(3), lit(5)), "yyyy-MM-dd").as("d_make"),
-      E.hourE(E.fromUnixTime(lit(3600L * 5 + 90))).as("d_hour"),
-      // *Local variants at a fixed +05:30 offset (engine-independent of DST
-      // tables): midnight UTC -> 05:30 local, so hour/minute actually move
-      E.yearLocal(col("o_orderdate"), "+05:30").as("d_year_loc"),
-      E.quarterLocal(col("o_orderdate"), "+05:30").as("d_quarter_loc"),
-      E.monthLocal(col("o_orderdate"), "+05:30").as("d_month_loc"),
-      E.dayLocal(col("o_orderdate"), "+05:30").as("d_day_loc"),
-      E.weekdayLocal(col("o_orderdate"), "+05:30").as("d_dow_loc"),
-      E.yearDayLocal(col("o_orderdate"), "+05:30").as("d_yday_loc"),
-      E.hourLocal(col("o_orderdate"), "+05:30").as("d_hour_loc"),
-      E.minuteLocal(col("o_orderdate"), "+05:30").as("d_min_loc")
-    ).orderBy("o_orderkey")
-
-  private def qExprCast(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d).select(col("o_orderkey"),
-      E.castTo(org.apache.spark.sql.types.StringType)(col("o_orderkey")).as("c_str"),
-      E.castTo(org.apache.spark.sql.types.IntegerType)(
-        substring(col("o_orderpriority"), 1, 1)).as("c_int"),
-      E.parseStringNulling(org.apache.spark.sql.types.IntegerType)(lit("abc")).as("c_bad"),
-      E.parseStringQuiet(org.apache.spark.sql.types.IntegerType)(lit("42")).as("c_good"),
-      E.castTo(org.apache.spark.sql.types.DoubleType)(col("o_orderkey")).as("c_dbl"),
-      floor(col("o_totalprice")).cast("long").as("c_floor"),
-      // ParseStringQuiet = longest-valid-prefix (strtol/strtod) semantics
-      E.parseStringQuiet(org.apache.spark.sql.types.IntegerType)(
-        concat(col("o_orderkey").cast("string"), lit("abc"))).as("c_quiet_partial"),
-      E.parseStringQuiet(org.apache.spark.sql.types.DoubleType)(
-        lit(" 3.5e2xyz")).as("c_quiet_dbl"),
-      E.castSignaling(org.apache.spark.sql.types.IntegerType)(lit("7")).as("c_sig")
-    ).orderBy("o_orderkey")
-
-  private def qExprHash(s: SparkSession, d: String): DataFrame =
-    Aggregates.scalarAggregate(Seq(
-      Agg(COUNT, Some("h64"), "nd_hash", distinct = true),
-      Agg(COUNT, Some("hmd5"), "nd_md5", distinct = true),
-      Agg(MIN, Some("hmd5"), "min_md5"),
-      // VALUE-exact (round 10): SupersonicHash(c_custkey, 7) min/max —
-      // the DuckDB oracle replays the hash.cc mixing in closed form.
-      Agg(MIN, Some("hk7"), "min_hk7"),
-      Agg(MAX, Some("hk7"), "max_hk7")))(
-      Tables.customer(s, d).select(
-        E.fingerprint(col("c_name")).as("h64"), md5(col("c_name")).as("hmd5"),
-        E.hashWithSeed(col("c_custkey"), 7L).as("hk7")))
-
-  /** q_expr_fingerprint — per-row EXACT value parity for
-    * SupersonicFingerprint / SupersonicHash (hashing_expressions.h:28-35,
-    * hash.cc:55-85): string fingerprint, seeded string hash, int64
-    * fingerprint, and an int32 fingerprint that exercises C++'s
-    * int32→uint64 SIGN EXTENSION (c_nationkey - 13 goes negative). The
-    * DuckDB oracle replays the 4-byte-chunk prime mixing with a recursive
-    * CTE in hugeint mod-2^64 arithmetic — see [[ssHashOracleSql]]. */
-  private def qExprFingerprint(s: SparkSession, d: String): DataFrame =
-    Tables.customer(s, d).select(col("c_custkey"),
-      E.fingerprint(col("c_name")).as("fp_name"),
-      E.hashWithSeed(col("c_name"), 7L).as("h7_name"),
-      E.fingerprint(col("c_custkey")).as("fp_key"),
-      E.fingerprint((col("c_nationkey").cast("int") - lit(13)).cast("int")).as("fp_n32"))
-      .orderBy("c_custkey")
-
-  // =========================================================================
-  // Stateful running expressions (SURVEY §2.7 stateful) — window-backed
-  // =========================================================================
-
-  private def qStatefulRunning(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d).select(col("user_id"), col("event_id"), col("event_type"),
-      round(col("value") * 100).cast("long").as("cents"),
-      when(col("event_type") === "click", col("value")).as("click_val"))
-    val part = Seq(col("user_id")); val ord = Seq(col("event_id"))
-    e.select(col("user_id"), col("event_id"),
-      Stateful.runningSum(col("cents"), part, ord).as("run_sum"),
-      Stateful.changed(col("event_type"), part, ord).as("chg"),
-      Stateful.smudge(col("click_val"), part, ord).as("locf")
-    ).orderBy("user_id", "event_id")
-  }
-
-  private def qStatefulFlush(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d).select(col("user_id"), col("event_id"),
-      col("event_type"), round(col("value") * 100).cast("long").as("cents"),
-      (col("event_type") === "signup").as("flush"))
-    val part = Seq(col("user_id")); val ord = Seq(col("event_id"))
-    val withMin = Stateful.runningMinWithFlush(e, col("cents"), col("flush"), "run_min", part, ord)
-    Stateful.smudgeIf(withMin, col("cents"), col("event_type") === "view", "carried", part, ord)
-      .select("user_id", "event_id", "run_min", "carried")
-      .orderBy("user_id", "event_id")
-  }
-
-  // =========================================================================
-  // Training-data pipeline operators (dedup / similarity / text / multimodal)
-  // =========================================================================
-
-  private def qDedupExact(s: SparkSession, d: String): DataFrame =
-    Dedup.exactGroups(Tables.documents(s, d), "text", "doc_id").orderBy("keeper")
-
-  private def qDedupNgram(s: SparkSession, d: String): DataFrame =
-    Dedup.lengthBucketJaccardPairs(Tables.documents(s, d), "doc_id", "text",
-      threshold = 0.5, bucketWidth = 8, shingleLen = 2)
-      .orderBy("id1", "id2")
-
-  private def qDedupClusters(s: SparkSession, d: String): DataFrame = {
-    // pairs -> transitive clusters (iterative min-label propagation);
-    // canonical member = smallest id, verified against a recursive-CTE
-    // reachability fixpoint in DuckDB
-    val pairs = Dedup.lengthBucketJaccardPairs(Tables.documents(s, d), "doc_id", "text",
-      threshold = 0.5, bucketWidth = 8, shingleLen = 2)
-    val out = Dedup.duplicateClusters(pairs).orderBy("id")
-    pairs.releaseInputs() // duplicateClusters materialized its result
-    out
-  }
-
-  private def qDedupClustersRep(s: SparkSession, d: String): DataFrame =
-    // Same clustering through the collapsed-representative path: the
-    // (shingle set, exact length) groups are pair-machinery-
-    // interchangeable, so only one rep per group enters the posting
-    // join and member pairs are never expanded — the identical oracle
-    // proves output equality with q_dedup_clusters.
-    Dedup.lengthBucketJaccardClusters(Tables.documents(s, d), "doc_id", "text",
-      threshold = 0.5, bucketWidth = 8, shingleLen = 2)
-      .orderBy("id")
-
-  private def qDedupIncremental(s: SparkSession, d: String): DataFrame = {
-    // Daily-delta dedup: history = even doc_ids (yesterday's corpus),
-    // delta = odd (today's batch). Candidates are delta×history plus
-    // delta×delta bucket collisions — history×history is never re-paired
-    // — and with the q_dedup_minhash recall-complete banding the verified
-    // set equals the full-corpus all-pairs join restricted to pairs
-    // touching the delta, which is what the oracle hashes.
-    val docs = Tables.documents(s, d)
-    Dedup.incrementalMinhashNearDups(
-      docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 =!= 0),
-      "doc_id", "text", threshold = 0.7, numHashes = 48, bands = 24,
-      shingleLen = 3)
-      .orderBy("id1", "id2")
-  }
-
-  private def qDedupMinhash(s: SparkSession, d: String): DataFrame =
-    // bands = 24 (r = 2): P(candidate | J) = 1-(1-J^2)^24 puts the miss
-    // probability at the 0.7 threshold at ~1e-7 per pair, so the
-    // exact-equality gate vs the recall-complete all-pairs oracle holds
-    // deterministically on the fixed corpus. The sf1 sweep caught the
-    // old bands=8 (r=6) curve missing 744 of 250k true pairs — 63%
-    // recall AT the threshold is the textbook S-curve, fine for
-    // approximate production dedup, wrong for an equality gate.
-    Dedup.minhashNearDups(Tables.documents(s, d), "doc_id", "text",
-      threshold = 0.7, numHashes = 48, bands = 24, shingleLen = 3)
-      .orderBy("id1", "id2")
-
-  // No DuckDB oracle: the signature is built from Spark's xxhash64, which
-  // DuckDB cannot reproduce (unlike the LSH hyperplanes, the constants
-  // cannot be embedded — the hash runs per token). Gated instead by the
-  // rows-only determinism check + DedupSpec's planted-pair recall spec.
-  // Output is "candidates found by 16-bit banding" (guaranteed complete
-  // only for Hamming ≤ 3 — see Dedup.simhashCandidates contract).
-  private def qDedupSimhash(s: SparkSession, d: String): DataFrame = {
-    // RECALL GATE with a full oracle for the Spark-internal-hash simhash
-    // (the signature values themselves are xxhash64-derived and cannot be
-    // replayed in DuckDB — but the banding CONTRACT can still be proved):
-    // pairs whose DISTINCT token sets are EQUAL are SQL-expressible, and
-    // equal sets => identical bit votes => identical signature =>
-    // Hamming 0 => the 4x16-bit banding MUST emit them (pigeonhole, for
-    // any radius >= 0). The query runs the entire native pipeline
-    // (simhash64_native, banding explode, band self-join, bit_count) and
-    // emits one row per provably-required pair with its observed hamming
-    // and a found flag; a recall regression anywhere in the native path
-    // turns a row into (-1, false) and hash-mismatches the oracle.
-    // Precision-side semantics (the exact pair set at Hamming <= 3) are
-    // gated by the portable twin q_dedup_simhash_portable, whose whole
-    // algorithm DuckDB replays. The expected-pair join runs on a 16-byte
-    // md5 of the sorted distinct token set — same shuffle shape as the
-    // banding join itself (hashes, never text), so the gate scales.
-    val docs = Tables.documents(s, d)
-    val cand = Dedup.simhashCandidates(docs, "doc_id", "text")
-      .where(col("hamming") <= 3)
-    // NULL-text guard: concat_ws would collapse a NULL token array to ""
-    // and pair NULL-text docs with empty-text docs, while the DuckDB
-    // oracle's array_to_string(NULL) yields a NULL key (no pair). A NULL
-    // key on both engines means NULL text never joins — same semantics.
-    val keyed = docs.select(col("doc_id"),
-      when(col("text").isNotNull,
-        md5(concat_ws(" ", sort_array(array_distinct(T.tokens(col("text"))))))).as("__tk"))
-    val expected = keyed.as("a").join(keyed.as("b"),
-      col("a.__tk") === col("b.__tk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-    expected.join(cand, Seq("id1", "id2"), "left")
-      .select(col("id1"), col("id2"),
-        coalesce(col("hamming"), lit(-1)).as("hamming"),
-        col("hamming").isNotNull.as("found"))
-      .orderBy("id1", "id2")
-  }
-
-  private def qDedupEmbedding(s: SparkSession, d: String): DataFrame =
-    // Embedding-cosine near-dup: LSH-bucketed candidates (8 hyperplanes,
-    // same constants as q_ann_lsh) verified at cosine >= 0.25. True oracle:
-    // the algorithm is reimplemented in DuckDB with the planes embedded.
-    Dedup.embeddingNearDups(Tables.embeddings(s, d), "vec_id", "embedding",
-      threshold = 0.25, nPlanes = 8, seed = 42L, dim = 64)
-      .withColumn("cosine", round(col("cosine"), 6))
-      .orderBy("id1", "id2")
-
-  private def qAnnBrute(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, "qid", "qv", k = 5)
-      .withColumn("cosine", round(col("cosine"), 6))
-      .orderBy("qid", "rank")
-  }
-
-  private def qAnnIvf(s: SparkSession, d: String): DataFrame = {
-    // Gate config probes ALL cells (nprobe = nCells): the full IVF
-    // machinery runs — centroid build, cell assignment, multi-probe cell
-    // ranking — and the result is provably the exact top-k, so the
-    // brute-force DuckDB oracle is a true gate. Approximate-nprobe recall
-    // (the 100 TB operating point) is gated separately in SimilaritySpec.
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.ivfTopK(emb, "vec_id", "embedding", queries, "qid", "qv",
-      k = 5, nCells = 16, nprobe = 16)
-      .withColumn("cosine", round(col("cosine"), 6))
-      .orderBy("qid", "rank")
-  }
-
-  private def qAnnGraph(s: SparkSession, d: String): DataFrame = {
-    // Graph ANN: NN-descent k-NN graph (deterministic ring init + 2
-    // refinement rounds) queried by beam search. EVERY step is
-    // deterministic (ring arithmetic, reverse cap, tie-breaks, beam
-    // ranking), so the oracle replays the full build AND search round by
-    // round — this gates the actual approximate path, not a degenerate
-    // exact configuration. The recall contract vs exact top-k is gated
-    // in SimilaritySpec (the q_ann_ivf pattern).
-    val emb = Tables.embeddings(s, d)
-    // navigable search graph = refined k-NN edges ∪ the deterministic
-    // scatter-init edges (one shared build): the refined graph alone
-    // fragments into similarity-cluster islands (exact-twin cliques at
-    // the replica SFs) that greedy search cannot reach; the scatter
-    // edges are the NSW long links that restore small-world
-    // reachability — and they are the oracle's own e0 CTE, so the
-    // replay stays exact.
-    val nav = Similarity.navigableGraph(emb, "vec_id", "embedding",
-      k = AnnGraphK, rounds = AnnGraphRounds, reverseCap = AnnGraphRevCap)
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.beamSearchTopK(nav, emb, "vec_id", "embedding",
-      queries, "qid", "qv", k = 5,
-      beamWidth = AnnGraphBeam, hops = AnnGraphHops, entries = AnnGraphEntries)
-      .withColumn("cosine", round(col("cosine"), 6))
-      .orderBy("qid", "rank")
-  }
-  // Build/search constants shared with the oracle generator so the SQL
-  // replay and the Spark run can never drift. Chosen to clear the ≥0.6
-  // recall-vs-brute contract (AnnAndSaltSpec) with margin on the random
-  // 64-dim corpus — the hardest ANN regime.
-  private val AnnGraphK = 8
-  private val AnnGraphRounds = 3
-  private val AnnGraphRevCap = 8
-  private val AnnGraphBeam = 16
-  private val AnnGraphHops = 6
-  private val AnnGraphEntries = 4
-
-  private def qAnnLsh(s: SparkSession, d: String): DataFrame =
-    Similarity.lshTopK(Tables.embeddings(s, d), "vec_id", "embedding", k = 5)
-      .withColumn("cosine", round(col("cosine"), 6))
-      .orderBy("qid", "rank")
-
-  // PQ gate constants, shared with the oracle generator (drift-proof).
-  private val AnnPqM = 8
-  private val AnnPqKsub = 16
-
-  private def qAnnPq(s: SparkSession, d: String): DataFrame = {
-    // Product-quantized ANN (ADC inner-product scan over the compressed
-    // code table). iters=0: codebook entries are exact data subvectors
-    // picked by the deterministic scatter order, so the oracle re-derives
-    // seeds → codebooks → codes → per-query LUTs → decimal ADC sums → the
-    // ranking, end to end — this gates the full compressed-domain path
-    // (slice/encode/LUT/ADC arithmetic), not a degenerate rewrite of
-    // brute force. Trained-codebook recall (iters=2, the production
-    // operating point) is gated in AnnAndSaltSpec (the q_ann_ivf pattern).
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.pqTopK(emb, "vec_id", "embedding", queries, "qid", "qv",
-      k = 5, m = AnnPqM, ksub = AnnPqKsub, iters = 0)
-      .orderBy("qid", "rank")
-  }
-
-  private def qAnnPqTrained(s: SparkSession, d: String): DataFrame = {
-    // TRAINED product quantization in floor-quantized integer space: two
-    // Lloyd rounds whose assignment (integer L2 discriminant, ties to the
-    // lower code) and update (integer floor-divided dimension means) are
-    // exact arithmetic, so the oracle replays the TRAINING itself by
-    // unrolling the rounds (the q_kmeans pattern) before the encode →
-    // LUT → ADC → rank chain — closing the r13 gap where trained
-    // codebooks were spec-gated only.
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.pqTopKQuantized(emb, "vec_id", "embedding", queries, "qid", "qv",
-      k = 5, m = AnnPqM, ksub = AnnPqKsub, iters = AnnPqTrainedIters)
-      .orderBy("qid", "rank")
-  }
-  // 4 unrolled Lloyd rounds (r15, was 2): deep enough that codebooks
-  // move, settle, and empty-code COALESCE carries across rounds — the
-  // oracle pins convergence BEHAVIOR, not just two steps.
-  private val AnnPqTrainedIters = 4
-
-  private def qAnnIvfTrained(s: SparkSession, d: String): DataFrame = {
-    // TRAINED-centroid IVF with a genuine approximation (nprobe 2 of 8
-    // cells): centroids from 2 integer Lloyd rounds (kmeansQuantized —
-    // the q_kmeans arithmetic), cell assignment and probing by exact
-    // integer L2 argmin (ties to the lower cid), exact-cosine ranking
-    // within probed cells. The oracle unrolls the TRAINING and replays
-    // the approximation itself — the trained index layout is pinned,
-    // not a degenerate all-probe rewrite of brute force.
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.ivfTopKQuantized(emb, "vec_id", "embedding", queries, "qid", "qv",
-      k = 5, nCells = AnnIvfTrainedCells, nprobe = AnnIvfTrainedProbe,
-      iters = AnnIvfTrainedIters)
-      .withColumn("cosine", round(col("cosine"), 6))
-      .orderBy("qid", "rank")
-  }
-  private val AnnIvfTrainedCells = 8
-  private val AnnIvfTrainedProbe = 2
-  private val AnnIvfTrainedIters = 2
-
-  private def qAnnIvfAdc(s: SparkSession, d: String): DataFrame = {
-    // IVFADC composition (Similarity.ivfPqTopK): coarse IVF cell probe →
-    // PQ ADC scan of the probed cells' code rows → exact-dot re-rank of
-    // the ADC shortlist. Gate config probes ALL cells (nprobe = nCells),
-    // so the cell partition is recall-lossless and every pair is scanned
-    // exactly once — the full composed machinery runs (centroid build,
-    // cell-keyed code table, per-query cell ranking, LUT/ADC arithmetic,
-    // re-rank join) while staying bit-replayable: the oracle is the
-    // q_ann_pq decimal ADC chain extended with a list_inner_product
-    // re-rank of the ADC top-`rerank`. Approximate-nprobe recall (the
-    // billion-scale operating point) stays gated in AnnAndSaltSpec.
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    Similarity.ivfPqTopK(emb, "vec_id", "embedding", queries, "qid", "qv",
-      k = 5, nCells = 16, nprobe = 16, m = AnnPqM, ksub = AnnPqKsub,
-      iters = 0, rerank = AnnIvfAdcRerank)
-      .orderBy("qid", "rank")
-  }
-  private val AnnIvfAdcRerank = 20
-
-  private def qTextStats(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      T.tokenCount(col("text")).as("n_tokens"),
-      T.bpeishTokenCount(col("text")).as("n_bpeish"),
-      T.punctCount(col("text")).as("n_punct"),
-      T.charCount(col("text")).as("n_len"),
-      T.meanTokenLen(col("text")).as("mean_tok_len"),
-      T.qualityOk(col("text")).as("quality_ok")
-    ).orderBy("doc_id")
-
-  private def qTextLangid(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      T.langId(col("text")).as("pred_lang"), col("lang")).orderBy("doc_id")
-
-  private def qTextFingerprint(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"),
-      T.fingerprint(col("text")).as("fp")).orderBy("doc_id")
-
-  private def qDedupSimhashPortable(s: SparkSession, d: String): DataFrame =
-    // EXACT semantics (all pairs within the banding-guaranteed Hamming
-    // radius) over the md5-derived portable signature — the full
-    // cross-engine simhash oracle that the xxhash64 variant cannot have
-    Dedup.simhashPortablePairs(Tables.documents(s, d), "doc_id", "text")
-      .orderBy("id1", "id2")
-
-  private def qSampleBernoulli(s: SparkSession, d: String): DataFrame =
-    // hash-based sampling: the kept set is a pure function of the keys, so
-    // DuckDB reproduces the EXACT sample from the portable-hash formula
-    Sampling.bernoulli(Tables.lineitem(s, d),
-      Seq("l_orderkey", "l_linenumber"), rate = 0.25)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      .orderBy("l_orderkey", "l_linenumber", "l_quantity")
-
-  private def qSampleStratified(s: SparkSession, d: String): DataFrame = {
-    val sampled = Sampling.stratified(Tables.lineitem(s, d), "l_returnflag",
-      Map("A" -> 0.5, "N" -> 0.1), defaultRate = 0.25,
-      keyCols = Seq("l_orderkey", "l_linenumber"))
-    Relational.sort(col("l_returnflag"))(asDouble("sum_qty")(
-      Aggregates.groupAggregate(Seq("l_returnflag"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(SUM, Some("qty_dec"), "sum_qty")))(
-        sampled.withColumn("qty_dec", dec(col("l_quantity"))))))
-  }
-
-  private def qSampleSplit(s: SparkSession, d: String): DataFrame =
-    // deterministic 80/10/10 split; the gate aggregates per (split, flag)
-    // so disjointness + exhaustiveness are hash-checked, not just counted
-    Relational.sort(col("split"), col("l_returnflag"))(
-      Sampling.assignSplit(Tables.lineitem(s, d),
-        Seq("l_orderkey", "l_linenumber"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .groupBy("split", "l_returnflag")
-        .agg(count(lit(1)).as("n")))
-
-  private def qChunk(s: SparkSession, d: String): DataFrame =
-    // Context-window chunking (40-token windows, 8-token overlap): every
-    // document splits into stride-32 windows; the oracle replays the
-    // token list, chunk-count formula and 1-based slices with DuckDB
-    // list arithmetic, so an off-by-one in stride/overlap or a dropped
-    // short tail breaks the hash.
-    graft.pipeline.Packing.chunkTokens(
-      Tables.documents(s, d), "doc_id", "text", maxTokens = 40, overlap = 8)
-      .orderBy("doc_id", "chunk_id")
-
-  private def qMixCorpora(s: SparkSession, d: String): DataFrame = {
-    // Domain mixing (the LLM data-recipe step): three corpus faces
-    // (doc_id mod 3 ~ web/code/books) mixed at 6:3:1 toward 200 rows —
-    // exact-integer thresholds from per-source counts, hash membership,
-    // and the seeded interleave position all replayed verbatim by the
-    // oracle, so a wrong count, a float-rounded rate, or an unstable
-    // order all hash-mismatch.
-    import graft.pipeline.Sampling
-    val docs = Tables.documents(s, d).select("doc_id")
-    def face(m: Int) = docs.where(pmod(col("doc_id"), lit(3)) === m)
-    val mixed = Sampling.mixCorpora(
-      Seq(("web", face(0), 6L), ("code", face(1), 3L), ("books", face(2), 1L)),
-      Seq("doc_id"), targetRows = 200, seed = 42L)
-    mixed.select(col("pos"), col("source"), col("doc_id")).orderBy("pos")
-  }
-
-  private def qEpochRepeat(s: SparkSession, d: String): DataFrame = {
-    // Epoch repetition (up-sampling a small domain 2.25x): whole copies
-    // + hash-gated fractional epoch + per-epoch seeded permutation key.
-    // 2.25 is binary-exact, so the fractional threshold (0.25 * 1e6) is
-    // the same integer in both engines; the oracle replays membership,
-    // epoch fan-out and the epoch-seeded key arithmetic verbatim.
-    import graft.pipeline.Sampling
-    val docs = Tables.documents(s, d).select("doc_id")
-    Sampling.withEpochs(docs, Seq("doc_id"), epochs = 2.25, seed = 42L)
-      .select(col("doc_id"), col("epoch"), col("epoch_key"))
-      .orderBy("doc_id", "epoch")
-  }
-
-  private def qTfidf(s: SparkSession, d: String): DataFrame = {
-    // corpus stats over ALL documents; top-3 BM25 terms for the first docs
-    // (ranking on the ROUNDED score so a last-ulp ln() difference between
-    // engines cannot flip ranks; term is the tiebreak)
-    val scored = Scoring.tfidfBm25(Tables.documents(s, d), "doc_id", "text")
-    Scoring.topTerms(scored.where(col("doc_id") < 40), "doc_id", "bm25", k = 3)
-      .select(col("doc_id"), col("rank"), col("term"), col("tf"), col("df"),
-        round(col("tfidf"), 6).as("tfidf"), round(col("bm25"), 6).as("bm25"))
-      .orderBy("doc_id", "rank")
-  }
-
-  private def qTextRedact(s: SparkSession, d: String): DataFrame = {
-    // deterministic synthetic PII spans appended per doc so the scrub has
-    // real work at every row; n_pii counts the spans each pattern removes
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      concat(col("text"), lit(" contact user"), col("doc_id"),
-        lit("@example.com or 555-123-4567 ssn 123-45-6789")).as("t"))
-    docs.select(col("doc_id"),
-      T.piiCount(col("t")).cast("long").as("n_pii"),
-      T.redact(col("t")).as("redacted"))
-      .select(col("doc_id"), col("n_pii"), expr("right(redacted, 64)").as("tail_redacted"))
-      .orderBy("doc_id")
-  }
-
-  private def qProfile(s: SparkSession, d: String): DataFrame =
-    Profile.profileColumns(Tables.customer(s, d),
-      Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-      .withColumn("avg_len", round(col("avg_len"), 6))
-      .orderBy("col_name")
-
-  private def qPack(s: SparkSession, d: String): DataFrame =
-    // bucketed sequence layout; oracle replays bucket + per-bucket window
-    // cumsum + boundary division in plain SQL
-    graft.pipeline.Packing.layoutOffsets(Tables.documents(s, d),
-      "doc_id", "text", budget = 2048, buckets = 16)
-      .orderBy("doc_id")
-
-  private def qCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    // text-format FileOutput/FileInput face: write CSV, read back with an
-    // explicit schema, aggregate — the oracle recomputes from the source
-    // parquet, so any value corruption in the text round-trip mismatches
-    val out = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_csv_${ProcessHandle.current().pid()}")
-    val c = Tables.customer(s, d)
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    Relational.csvOutput(c, out)
-    val back = Relational.csvInput(s, out, c.schema)
-    Relational.sort(col("c_mktsegment"))(asDouble("sum_bal")(
-      Aggregates.groupAggregate(Seq("c_mktsegment"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(MIN, Some("c_name"), "first_name"),
-        Agg(SUM, Some("bal_dec"), "sum_bal")))(
-        back.withColumn("bal_dec", dec(col("c_acctbal"))))))
-  }
-
-  private def qJsonRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_json_${ProcessHandle.current().pid()}")
-    val p = Tables.part(s, d).select(col("p_partkey"), col("p_type"), col("p_size"))
-    Relational.jsonOutput(p, out)
-    val back = Relational.jsonInput(s, out, p.schema)
-    Relational.sort(col("p_type"))(
-      Aggregates.groupAggregate(Seq("p_type"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(SUM, Some("p_size"), "sum_size",
-          outType = Some(org.apache.spark.sql.types.LongType)),
-        Agg(MAX, Some("p_partkey"), "max_key")))(back))
-  }
-
-  private def qShardManifest(s: SparkSession, d: String): DataFrame =
-    // Content-addressed shard manifest over integer/string columns only
-    // (double/timestamp-to-string rendering is the one encoding step
-    // engines may disagree on, so the canonical encoding contract keeps
-    // to exactly-rendered types; the md5-prefix fingerprint and BIT_XOR
-    // fold are replayed verbatim in DuckDB).
-    graft.pipeline.Shards.shardManifest(Tables.lineitem(s, d),
-      keyCols = Seq("l_orderkey", "l_linenumber"),
-      valueCols = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_returnflag"),
-      nShards = 8)
-      .orderBy("shard")
-
-  private def qTextPerplexity(s: SparkSession, d: String): DataFrame = {
-    // Trigram-LM quality scoring: fit on the train slice (doc_id % 10 <> 0,
-    // the contamination split), score the eval slice. Full DuckDB replay:
-    // counts and vocabulary are exact integers, per-trigram log-probs are
-    // rounded then summed as DECIMAL, one exp at the edge.
-    val docs = Tables.documents(s, d)
-    Scoring.trigramPerplexity(
-      docs.where(col("doc_id") % 10 =!= 0), docs.where(col("doc_id") % 10 === 0),
-      "doc_id", "text")
-      .orderBy("doc_id")
-  }
-
-  private def qTextRepetition(s: SparkSession, d: String): DataFrame =
-    Scoring.repetitionStats(Tables.documents(s, d), "doc_id", "text")
-      .orderBy("doc_id")
-
-  private def qZorder(s: SparkSession, d: String): DataFrame =
-    // z-order curve values: pure bit arithmetic, replayed exactly in SQL;
-    // ties at the limit boundary are identical rows, so the cut is stable
-    Tables.lineitem(s, d)
-      .select(col("l_suppkey"), col("l_partkey"),
-        Relational.zorderValue(col("l_suppkey"), col("l_partkey")).as("z"))
-      .orderBy("z", "l_suppkey", "l_partkey").limit(200)
-
-  private def qZorder3d(s: SparkSession, d: String): DataFrame =
-    // 3-dimensional Morton curve (zorderValueN, 21 bits per key — bit j of
-    // key i at curve position 3j+i): the same disjoint-powers arithmetic
-    // as q_zorder, replayed bit-for-bit by the DuckDB oracle
-    Tables.lineitem(s, d)
-      .select(col("l_suppkey"), col("l_partkey"), col("l_linenumber"),
-        Relational.zorderValueN(Seq(
-          col("l_suppkey"), col("l_partkey"), col("l_linenumber"))).as("z"))
-      .orderBy("z", "l_suppkey", "l_partkey", "l_linenumber").limit(200)
-
-  private def qWinsorize(s: SparkSession, d: String): DataFrame = {
-    // clamp to [p05, p95] then aggregate; every emitted double goes
-    // through round(.,2)->DECIMAL so an ulp of cross-engine percentile-
-    // interpolation difference cannot leak into the hash
-    val w = Profile.winsorize(
-      Tables.lineitem(s, d).select("l_returnflag", "l_extendedprice"),
-      "l_extendedprice", pLo = 0.05, pHi = 0.95)
-    Relational.sort(col("l_returnflag"))(asDouble("sum_w")(
-      Aggregates.groupAggregate(Seq("l_returnflag"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(MIN, Some("w2"), "mn"),
-        Agg(MAX, Some("w2"), "mx"),
-        Agg(SUM, Some("w_dec"), "sum_w")))(
-        w.withColumn("w2", round(col("l_extendedprice"), 2))
-          .withColumn("w_dec", dec(round(col("l_extendedprice"), 2))))))
-  }
-
-  private def qWinsorizeApprox(s: SparkSession, d: String): DataFrame = {
-    // The 100 TB winsorize path (approx_percentile — fixed memory,
-    // mergeable partials; exact `percentile` buffers every value), gated
-    // with the Sketches accuracy-contract pattern: the approx bounds the
-    // OPERATOR actually applied (they surface as min/max of the clamped
-    // output — 5% of the data sits at each bound) must land inside the
-    // exact-percentile band at p ± 4·(1/accuracy) rank error, asserted
-    // in-engine as booleans the DuckDB oracle expects to be TRUE; the
-    // row count and a zero out-of-band count ride along exact.
-    val acc = 10000
-    val eps = 4.0 / acc
-    val li = Tables.lineitem(s, d).select("l_extendedprice")
-    val w = Profile.winsorize(li, "l_extendedprice", pLo = 0.05, pHi = 0.95,
-      exact = false, accuracy = acc)
-    // one ARRAY-percentile aggregate: a single value buffer serves all
-    // four band points (four scalar percentile aggs would buffer the
-    // column four times — measured 11.6 s vs ~4 s at sf0.1)
-    val band = li.agg(
-      expr(s"percentile(l_extendedprice, array(${0.05 - eps}, ${0.05 + eps}, " +
-        s"${0.95 - eps}, ${0.95 + eps}))").as("__b"))
-    w.agg(count(lit(1)).as("n"),
-      min("l_extendedprice").as("__wmn"), max("l_extendedprice").as("__wmx"))
-      .crossJoin(broadcast(band))
-      .select(col("n"),
-        (col("__wmn") >= col("__b")(0) && col("__wmn") <= col("__b")(1)).as("lo_in_tol"),
-        (col("__wmx") >= col("__b")(2) && col("__wmx") <= col("__b")(3)).as("hi_in_tol"))
-  }
-
-  private def qProfileHll(s: SparkSession, d: String): DataFrame = {
-    // The 100 TB profiling breadth path (HyperLogLog++ distinct counts —
-    // single pass, no multi-distinct input expansion): every exact metric
-    // hash-matches the oracle; the approx n_distinct is gated by its
-    // accuracy contract (within 4·rsd of the exact count, computed
-    // in-engine) as a boolean the oracle expects TRUE.
-    val c = Tables.customer(s, d)
-    val cols = Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    val approx = Profile.profileColumns(c, cols, exactDistinct = false, rsd = 0.02)
-      .withColumnRenamed("n_distinct", "__nd_approx")
-    val exact = Profile.profileColumns(c, cols)
-      .select(col("col_name"), col("n_distinct").as("__nd_exact"))
-    approx.join(exact, "col_name")
-      .select(col("col_name"), col("n_nonnull"), col("n_null"),
-        col("min_num"), col("max_num"), round(col("avg_len"), 6).as("avg_len"),
-        (abs(col("__nd_approx") - col("__nd_exact")) <=
-          greatest(lit(1.0), lit(0.08) * col("__nd_exact"))).as("nd_ok"))
-      .orderBy("col_name")
-  }
-
-  private def qContamination(s: SparkSession, d: String): DataFrame = {
-    // two-table join variant: measured fastest at this doc size (the
-    // reduce-by-hash Split variant trades a second tokenization pass for an
-    // object-hash collect_list aggregate, which loses here — see
-    // Contamination scaladocs for when each shape wins)
-    val docs = Tables.documents(s, d)
-    Contamination.ngramContamination(
-      docs.where(col("doc_id") % 10 =!= 0), docs.where(col("doc_id") % 10 === 0),
-      "doc_id", "text", n = 5)
-      .withColumn("rate", round(col("rate"), 6))
-      .orderBy("doc_id")
-  }
-
-  private def qDecontaminate(s: SparkSession, d: String): DataFrame = {
-    // Curate stage-5 decontamination rule in isolation (Curate.scala):
-    // the deterministic 2% portable-bucket sample of the corpus stands in
-    // for the eval benchmark (the zero-input demo default; a real run
-    // passes its eval set), every doc is scored by 3-gram shingle
-    // coverage against the benchmark's distinct shingle set, and kept iff
-    // coverage < 0.8 — sampled docs themselves score 1.0 and drop, plus
-    // any near-verbatim leak. The oracle replays the bucket arithmetic
-    // (the q_sample_bernoulli formula) and the coverage join (the
-    // q_contamination pattern at n = 3), INCLUDING the threshold.
-    val docs = Tables.documents(s, d)
-    val evalSet = Sampling.bernoulli(docs, Seq("doc_id"), 0.02)
-    Contamination.ngramContamination(evalSet, docs, "doc_id", "text", n = 3)
-      .withColumn("kept", col("rate") < 0.8)
-      .withColumn("rate", round(col("rate"), 6))
-      .orderBy("doc_id")
-  }
-
-  private def qMultimodal(s: SparkSession, d: String): DataFrame = {
-    val b = Multimodal.asBinary(Tables.documents(s, d).select("doc_id", "text"),
-      "text", "payload").drop("text")
-    val meta = Multimodal.decodeMeta(b, "payload")
-    val framed = Multimodal.frameSample(meta, "payload", n = 4, frameBytes = 64, out = "frames")
-    val resized = Multimodal.resizeStub(framed, "payload", dstLen = 16, out = "thumb")
-    resized.select(col("doc_id"), col("media_format"), col("width"), col("height"),
-      col("n_bytes"), octet_length(element_at(col("frames"), 1)).as("first_frame_len"),
-      octet_length(col("thumb")).as("thumb_len"),
-      // 9th sampled byte = in[floor(8·n/16)] = the middle byte — verifies
-      // the nearest-neighbor sampling positions, not just the length.
-      // Compared as hex of the raw byte (a string cast would re-decode
-      // UTF-8 and count characters, wrong for any non-ASCII payload).
-      hex(substring(col("thumb"), 9, 1)).as("thumb_mid"))
-      .orderBy("doc_id")
-  }
-
-  private def qMultimodalBmp(s: SparkSession, d: String): DataFrame = {
-    // REAL codec gate: a genuine 24-bit BMP file is built per document
-    // (dimensions derived from doc_id, pixel bytes seeded from the text),
-    // then decodeMeta's magic-byte dispatch routes it through the real
-    // BMP header parser. The oracle recomputes width/height/file-size
-    // from doc_id arithmetic alone (54-byte header + 4-byte-padded rows),
-    // so any off-by-one in the little-endian header layout, the row
-    // padding, or the parse mismatches. roundtrip_ok additionally pins
-    // decode(encode(w, h)) == (w, h) in-engine.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(64)) + 1).cast("int").as("w"),
-      (pmod(floor(col("doc_id") / 64).cast("long"), lit(64)) + 1).cast("int").as("h"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodeBmp(docs, "w", "h", "seed", "payload")
-    val meta = Multimodal.decodeMeta(enc, "payload")
-    meta.select(col("doc_id"), col("media_format"), col("width"), col("height"),
-      col("n_bytes"),
-      (col("width") === col("w") && col("height") === col("h")).as("roundtrip_ok"))
-      .orderBy("doc_id")
-  }
-
-  private def qMultimodalPpm(s: SparkSession, d: String): DataFrame = {
-    // Same round-trip gate for the SECOND real codec: PPM's header is
-    // ASCII with variable-width dimension digits, so the expected file
-    // size is 9 fixed header bytes + the digit counts + 3wh — all
-    // re-derivable in SQL. Exercises the netpbm parser's whitespace/
-    // token scanning rather than BMP's fixed-offset binary fields.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(64)) + 1).cast("int").as("w"),
-      (pmod(floor(col("doc_id") / 64).cast("long"), lit(64)) + 1).cast("int").as("h"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodePpm(docs, "w", "h", "seed", "payload")
-    val meta = Multimodal.decodeMeta(enc, "payload")
-    meta.select(col("doc_id"), col("media_format"), col("width"), col("height"),
-      col("n_bytes"),
-      (col("width") === col("w") && col("height") === col("h")).as("roundtrip_ok"))
-      .orderBy("doc_id")
-  }
-
-  private def qMultimodalPng(s: SparkSession, d: String): DataFrame = {
-    // Round-trip gate for the THIRD real codec — the first COMPRESSED
-    // one: a spec-conformant PNG is built per document (signature, IHDR,
-    // a zlib stream assembled from stored deflate blocks with real
-    // CRC32/Adler32 checksums, IEND), and decodeMeta's dispatch routes it
-    // through the real PNG parser, which verifies the IHDR CRC and
-    // INFLATES the IDAT with java.util.zip.Inflater before trusting the
-    // geometry. Stored-block deflate keeps the file size a closed form of
-    // (w, h) — 63 + raw + 5*ceil(raw/65535), raw = h*(1+3w) — so the
-    // oracle pins the exact byte size like the BMP/PPM gates do.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(64)) + 1).cast("int").as("w"),
-      (pmod(floor(col("doc_id") / 64).cast("long"), lit(64)) + 1).cast("int").as("h"),
-      col("text").cast("binary").as("seed"))
-    // Round 7: the decoder no longer discards the inflated pixels — the
-    // per-channel sums/means come from the REAL decompressed+defiltered
-    // IDAT bytes, and the oracle re-derives them from the seed-cycling
-    // arithmetic (pixel byte j = seed[j % len], channel = j % 3), so a
-    // wrong filter reconstruction or channel order breaks the hash.
-    val enc = Multimodal.encodePngCol(docs, "w", "h", "seed", "payload")
-    val feat = Multimodal.decodeImageFeatures(enc, "payload")
-    feat.select(col("doc_id"), col("media_format"), col("width"), col("height"),
-      col("n_bytes"),
-      (col("width") === col("w") && col("height") === col("h")).as("roundtrip_ok"),
-      col("sum_r"), col("sum_g"), col("sum_b"),
-      col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy("doc_id")
-  }
-
-  private def qMultimodalGif(s: SparkSession, d: String): DataFrame = {
-    // Round-trip gate for the FIFTH real image codec — the LZW one: a
-    // spec-conformant GIF89a is built per document (grayscale palette,
-    // 9-bit literal-stream LZW with periodic CLEARs so the byte size is
-    // a closed form of w·h), and the FULL LZW decompressor + palette map
-    // recovers the pixels; per-channel sums come from the decoded RGB
-    // (all three equal — the palette is gray), replayed by the oracle
-    // from the seed-cycling arithmetic like the PNG gate.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(64)) + 1).cast("int").as("w"),
-      (pmod(floor(col("doc_id") / 64).cast("long"), lit(64)) + 1).cast("int").as("h"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodeGifCol(docs, "w", "h", "seed", "payload")
-    val feat = Multimodal.decodeImageFeatures(enc, "payload")
-    feat.select(col("doc_id"), col("media_format"), col("width"), col("height"),
-      col("n_bytes"),
-      (col("width") === col("w") && col("height") === col("h")).as("roundtrip_ok"),
-      col("sum_r"), col("sum_g"), col("sum_b"))
-      .orderBy("doc_id")
-  }
-
-  private def qImagePhash(s: SparkSession, d: String): DataFrame =
-    qImagePhashPairs(s, d).orderBy("id1", "id2")
-
-  private def qImagePhashPairs(s: SparkSession, d: String): DataFrame = {
-    // IMAGE-CONTENT near-dup (the multimodal counterpart of q_dedup_*):
-    // a three-part corpus — (A) every document rendered as a PNG;
-    // (B) every 5th document's image RE-ENCODED AS PPM — zero shared
-    // payload bytes with its PNG twin, identical pixels, so byte-level
-    // dedup can never pair them but the dHash matches exactly;
-    // (C) every 7th document's PPM with ONE pixel byte nudged (+1 mod
-    // 256) — a near-identical image. dHashes come from the REAL decode
-    // path (PNG: inflate + defilter; PPM: header walk), pairs from the
-    // Hamming-banded self-join (Dedup.hammingPairs64 — exact for radius
-    // <= 3 by pigeonhole). Geometry is >= 16x16 so the perturbed pixel
-    // is sampled by at most one 9x8 grid point => the planted near-twin
-    // is GUARANTEED within Hamming 1; both plantings are require()d
-    // found in-engine, and the oracle replays hash + all-pairs in full.
-    val base = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(16)) + 16).cast("int").as("w"),
-      (pmod(floor(col("doc_id") / 16).cast("long"), lit(16)) + 16).cast("int").as("h"),
-      col("text").cast("binary").as("seed"))
-    val a = Multimodal.encodePngCol(base, "w", "h", "seed", "payload")
-      .select(col("doc_id").as("img_id"), col("payload"))
-    val bSrc = base.where(pmod(col("doc_id"), lit(5)) === 0)
-    val b = Multimodal.encodePpm(bSrc, "w", "h", "seed", "payload")
-      .select((col("doc_id") + 100000000L).as("img_id"), col("payload"))
-    val cSrc = base.where(pmod(col("doc_id"), lit(7)) === 0)
-    val c = Multimodal.perturbPpmPixel(
-      Multimodal.encodePpm(cSrc, "w", "h", "seed", "p0"), "p0", 0, "payload")
-      .select((col("doc_id") + 200000000L).as("img_id"), col("payload"))
-    // (D/E, round 8) every 3rd document ALSO ships as an 8x8-tile-constant
-    // grayscale pair: D = REAL entropy-coded baseline JPEG (Huffman +
-    // IDCT — the flat-tile construction makes the lossy round trip
-    // bit-exact), E = the same pixels as lossless PNG. Zero shared
-    // payload bytes, identical decoded pixels ⇒ the JPEG↔PNG twin MUST
-    // pair at Hamming 0 through the REAL codecs. Geometry 64..127 keeps
-    // the 9x8 dHash grid sampling distinct tiles (full hash entropy).
-    val deSrc = Tables.documents(s, d)
-      .where(pmod(col("doc_id"), lit(3)) === 0)
-      .select(col("doc_id"),
-        (pmod(col("doc_id"), lit(64)) + 64).cast("int").as("w"),
-        (pmod(floor(col("doc_id") / 64).cast("long"), lit(64)) + 64).cast("int").as("h"),
-        col("text").cast("binary").as("seed"))
-    val dJ = Multimodal.encodeJpegBaselineCol(deSrc, "w", "h", "seed", "payload")
-      .select((col("doc_id") + 300000000L).as("img_id"), col("payload"))
-    val eP = Multimodal.encodePngGrayTiledCol(deSrc, "w", "h", "seed", "payload")
-      .select((col("doc_id") + 400000000L).as("img_id"), col("payload"))
-    // (F, round 9) the same tiled pixels as a PROGRESSIVE (SOF2) JPEG —
-    // spectral selection + DC successive approximation through the REAL
-    // Annex-G decode path; flat tiles keep it bit-exact, so F must pair
-    // with both the baseline-JPEG (D) and PNG (E) twins at Hamming 0
-    // through three entirely different codings of identical pixels.
-    val fJ = Multimodal.encodeJpegProgressiveCol(deSrc, "w", "h", "seed", "payload")
-      .select((col("doc_id") + 500000000L).as("img_id"), col("payload"))
-    val corpus = a.unionByName(b).unionByName(c).unionByName(dJ)
-      .unionByName(eP).unionByName(fJ)
-    val sig = Multimodal.decodeImageFeatures(corpus, "payload")
-      .select(col("img_id"), col("dhash"))
-    val found = Dedup.hammingPairs64(sig, "img_id", "dhash", maxHamming = 3)
-    val pairs = found.stagePersist(false)
-    // planted twins MUST pair: cross-format at Hamming 0, perturbed
-    // within the banding guarantee
-    val nB = bSrc.count()
-    val foundB = pairs.where(col("id1") < 100000000L &&
-      col("id2") === col("id1") + 100000000L && col("hamming") === 0).count()
-    require(foundB == nB,
-      s"image dedup: $foundB of $nB cross-format twins paired at Hamming 0")
-    val nC = cSrc.count()
-    val foundC = pairs.where(col("id1") < 100000000L &&
-      col("id2") === col("id1") + 200000000L).count()
-    require(foundC == nC,
-      s"image dedup: $foundC of $nC perturbed near-twins paired within the band radius")
-    val nDE = deSrc.count()
-    val foundDE = pairs.where(col("id1") >= 300000000L &&
-      col("id1") < 400000000L &&
-      col("id2") === col("id1") + 100000000L && col("hamming") === 0).count()
-    require(foundDE == nDE,
-      s"image dedup: $foundDE of $nDE JPEG<->PNG tile twins paired at Hamming 0")
-    val foundDF = pairs.where(col("id1") >= 300000000L &&
-      col("id1") < 400000000L &&
-      col("id2") === col("id1") + 200000000L && col("hamming") === 0).count()
-    require(foundDF == nDE,
-      s"image dedup: $foundDF of $nDE progressive<->baseline JPEG twins " +
-        "paired at Hamming 0")
-    found.releaseInputs() // pairs holds the filled result
-    pairs
-  }
-
-  private def qImageDedup(s: SparkSession, d: String): DataFrame = {
-    // the full image-dedup pipeline: dHash pairs -> transitive clusters
-    // (the same min-label machinery as text dedup, q_dedup_clusters) —
-    // canonical member = smallest img_id, so the original PNG survives
-    // and its cross-format/perturbed twins collapse onto it; verified
-    // against the recursive-CTE reachability fixpoint over the replayed
-    // dHash pairs in DuckDB
-    val pairs = qImagePhashPairs(s, d)
-    val out = Dedup.duplicateClusters(pairs).orderBy("id")
-    pairs.release() // duplicateClusters materialized its result
-    out
-  }
-
-  private def qMultimodalJpeg(s: SparkSession, d: String): DataFrame = {
-    // Round-trip gate for the FOURTH real codec — since round 8 the FULL
-    // ENTROPY one: a baseline-sequential JFIF is built per document with
-    // real FDCT, quantization, Annex-K Huffman coding and byte stuffing
-    // (Jpeg.encodeBaseline via encodeJpegGrayTiled), and the decode side
-    // runs the full Huffman + dequant + IDCT pipeline. The image is
-    // CONSTANT WITHIN EACH 8x8 TILE (tile value = seed[tile % len]), so
-    // the lossy pipeline round-trips BIT-EXACTLY (flat tiles have zero
-    // AC energy and the DC quantizer 8 divides 8*(v-128) evenly) and the
-    // oracle replays the decoded per-channel sums from the tile
-    // arithmetic — a hash-exact gate over a REAL lossy codec. n_bytes is
-    // no longer closed-form (Huffman length is content-dependent), so
-    // the size law moved to the codec spec; the pixel sums are the
-    // stronger check.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(64)) + 1).cast("int").as("w"),
-      (pmod(floor(col("doc_id") / 64).cast("long"), lit(64)) + 1).cast("int").as("h"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodeJpegBaselineCol(docs, "w", "h", "seed", "payload")
-    val feat = Multimodal.decodeImageFeatures(enc, "payload")
-    feat.select(col("doc_id"), col("media_format"), col("width"), col("height"),
-      (col("width") === col("w") && col("height") === col("h")).as("roundtrip_ok"),
-      col("sum_r"), col("sum_g"), col("sum_b"),
-      col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy("doc_id")
-  }
-
-  private def qShuffle(s: SparkSession, d: String): DataFrame = {
-    // Deterministic training-order shuffle: the row's POSITION in the
-    // seeded order is materialized (distributed zipWithIndex, not a
-    // global window) and hash-compared against DuckDB's row_number over
-    // the replayed key formula — the driver's compare sorts rows before
-    // hashing, so carrying the position as DATA is what makes the order
-    // itself gate-visible. Same seed ⇒ same order on any engine.
-    import graft.pipeline.Sampling
-    val o = Tables.orders(s, d).select(col("o_orderkey"))
-    val skey = Sampling.shuffleKey(Seq(col("o_orderkey")), seed = 42L)
-    val withKey = o.withColumn("skey", skey)
-    Relational.withRowidOrdered(withKey, Seq(col("skey"), col("o_orderkey")), "pos")
-      .select(col("o_orderkey"), col("skey"), col("pos"))
-      .orderBy("o_orderkey")
-  }
-
-  private def qVocabEncode(s: SparkSession, d: String): DataFrame = {
-    // Tokenizer-prep: corpus word counts → top-40 vocabulary with
-    // contiguous ids (count desc, token asc — deterministic tie-break) →
-    // every document re-encoded as an id sequence via the broadcast
-    // vocabulary map, OOV → -1. The oracle replays the whole chain
-    // (counts, ranked cut, per-position id join) in DuckDB; the id
-    // STRING carries order, so a transposed or mis-assigned id anywhere
-    // breaks the hash. V=40 sits below this corpus's distinct-token
-    // count, so the OOV path is exercised for real.
-    import graft.pipeline.Vocab
-    val docs = Tables.documents(s, d)
-    val vocab = Vocab.build(docs, "text", size = 40)
-    val enc = Vocab.encode(docs, "text", vocab, "ids")
-    enc.select(col("doc_id"),
-      coalesce(array_join(transform(col("ids"), _.cast("string")), " "), lit(""))
-        .as("ids_str"),
-      coalesce(size(col("ids")), lit(0)).cast("long").as("n_tokens"),
-      coalesce(size(filter(col("ids"), _ === -1)), lit(0)).cast("long").as("n_oov"))
-      .orderBy("doc_id")
-  }
-
-  private def qMultimodalWav(s: SparkSession, d: String): DataFrame = {
-    // AUDIO round-trip gate — the RIFF/WAVE chunk walk: a canonical
-    // 16-bit PCM WAV is built per document (true RIFF sizes, fmt chunk
-    // with derived byte-rate/block-align, data chunk cycling the text
-    // bytes), and decodeAudioMeta recovers channels/rate/bits and derives
-    // the sample count from the data-chunk size. File size is closed-form
-    // (44 header bytes + samples*channels*2), pinned by the oracle like
-    // the image gates.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(2)) + 1).cast("int").as("ch"),
-      (lit(8000) + pmod(col("doc_id"), lit(8)) * 1000).cast("int").as("rate"),
-      (pmod(col("doc_id"), lit(500)) + 1).cast("int").as("ns"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodeWavCol(docs, "ch", "rate", "ns", "seed", "payload")
-    Multimodal.decodeAudioMeta(enc, "payload")
-      .select(col("doc_id"), col("media_format"), col("channels"),
-        col("sample_rate"), col("bits_per_sample"), col("n_samples"), col("n_bytes"),
-        (col("channels") === col("ch") && col("sample_rate") === col("rate") &&
-          col("n_samples") === col("ns")).as("roundtrip_ok"))
-      .orderBy("doc_id")
-  }
-
-  private def qAudioStats(s: SparkSession, d: String): DataFrame = {
-    // Per-channel SAMPLE statistics from the REAL decoded PCM frames —
-    // the audio counterpart of q_multimodal_png's pixel stats: the WAV
-    // payload is built by cycling text bytes into little-endian int16
-    // frames, decodeAudioFeatures re-reads the data chunk as SIGNED
-    // samples and folds per-channel sums/means/|amplitude|, and the
-    // oracle replays the byte-pair arithmetic (value = hi*256+lo,
-    // sign-folded) from the text. One row per (doc, channel) — array
-    // columns stay engine-side; the gate surface is plain scalars.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(2)) + 1).cast("int").as("ch"),
-      (lit(8000) + pmod(col("doc_id"), lit(8)) * 1000).cast("int").as("rate"),
-      (pmod(col("doc_id"), lit(500)) + 1).cast("int").as("ns"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodeWavCol(docs, "ch", "rate", "ns", "seed", "payload")
-    val feat = Multimodal.decodeAudioFeatures(enc, "payload")
-    feat.select(col("doc_id"), col("sample_rate"), col("n_samples"),
-        posexplode(arrays_zip(col("sum_ch"), col("mean_ch"), col("sum_abs_ch")))
-          .as(Seq("channel", "z")))
-      .select(col("doc_id"), col("channel").cast("int").as("channel"),
-        col("sample_rate"), col("n_samples"),
-        col("z.sum_ch").as("sum_s"), col("z.mean_ch").as("mean_s"),
-        col("z.sum_abs_ch").as("sum_abs"))
-      .orderBy("doc_id", "channel")
-  }
-
-  private def qAudioPhash(s: SparkSession, d: String): DataFrame = {
-    // AUDIO-content near-dup, completing the cross-modality dedup story
-    // (text: q_dedup_*, image: q_image_phash): a three-part corpus —
-    // (A) every document rendered as PCM WAV (>= 200 frames so the
-    // 65-window envelope is stable); (B) every 5th doc's SAMPLES
-    // re-encoded under a DIFFERENT header (2x sample rate — different
-    // payload bytes, same samples, so the envelope hash is IDENTICAL:
-    // the re-encoded-container case byte dedup cannot pair);
-    // (C) every 7th doc's WAV with the first data byte nudged (+1 mod
-    // 256) — one sample changes, one envelope window moves, at most ONE
-    // comparison bit flips. Pairs from the same Hamming-banded join as
-    // images; both plantings require()d found; the oracle replays
-    // samples, windows (k = 65i/n integer division), hash and all-pairs.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(2)) + 1).cast("int").as("ch"),
-      (lit(8000) + pmod(col("doc_id"), lit(8)) * 1000).cast("int").as("rate"),
-      (lit(16000)).cast("int").as("rate2"),
-      (pmod(col("doc_id"), lit(300)) + 200).cast("int").as("ns"),
-      col("text").cast("binary").as("seed"))
-    val a = Multimodal.encodeWavCol(docs, "ch", "rate", "ns", "seed", "payload")
-      .select(col("doc_id").as("aud_id"), col("payload"))
-    val bSrc = docs.where(pmod(col("doc_id"), lit(5)) === 0)
-    val b = Multimodal.encodeWavCol(bSrc, "ch", "rate2", "ns", "seed", "payload")
-      .select((col("doc_id") + 100000000L).as("aud_id"), col("payload"))
-    val cSrc = docs.where(pmod(col("doc_id"), lit(7)) === 0)
-    val c = Multimodal.perturbWavSample(
-      Multimodal.encodeWavCol(cSrc, "ch", "rate", "ns", "seed", "p0"), "p0", "payload")
-      .select((col("doc_id") + 200000000L).as("aud_id"), col("payload"))
-    val corpus = a.unionByName(b).unionByName(c)
-    val sig = Multimodal.decodeAudioFeatures(corpus, "payload")
-      .select(col("aud_id"), col("ahash"))
-    val found = Dedup.hammingPairs64(sig, "aud_id", "ahash", maxHamming = 3)
-    val pairs = found.stagePersist(false)
-    val nB = bSrc.count()
-    val foundB = pairs.where(col("id1") < 100000000L &&
-      col("id2") === col("id1") + 100000000L && col("hamming") === 0).count()
-    require(foundB == nB,
-      s"audio dedup: $foundB of $nB re-encoded twins paired at Hamming 0")
-    val nC = cSrc.count()
-    val foundC = pairs.where(col("id1") < 100000000L &&
-      col("id2") === col("id1") + 200000000L).count()
-    require(foundC == nC,
-      s"audio dedup: $foundC of $nC perturbed near-twins paired within the band radius")
-    found.releaseInputs() // pairs holds the filled result
-    pairs.orderBy("id1", "id2")
-  }
-
-  private def qMultimodalMp4(s: SparkSession, d: String): DataFrame = {
-    // VIDEO round-trip gate — the ISO-BMFF box walk: a minimal MP4
-    // (ftyp + moov>mvhd with real timescale/duration + mdat payload) is
-    // built per document; decodeVideoMeta must descend the box tree to
-    // mvhd and convert duration units to milliseconds through the
-    // per-document timescale — the oracle replays that integer
-    // arithmetic, so a misread offset or wrong division breaks the hash.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (lit(600) + pmod(col("doc_id"), lit(5)) * 100).cast("int").as("tsc"),
-      pmod(col("doc_id"), lit(100000)).cast("long").as("dur"),
-      pmod(col("doc_id"), lit(256)).cast("int").as("len"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodeMp4Col(docs, "tsc", "dur", "len", "seed", "payload")
-    Multimodal.decodeVideoMeta(enc, "payload")
-      .select(col("doc_id"), col("media_format"), col("timescale"),
-        col("duration_units"), col("duration_ms"), col("n_bytes"),
-        (col("timescale") === col("tsc") &&
-          col("duration_units") === col("dur")).as("roundtrip_ok"))
-      .orderBy("doc_id")
-  }
-
-  private def qEventsWindow(s: SparkSession, d: String): DataFrame =
-    graft.streaming.Streams.windowedStats(Tables.events(s, d))
-      .withColumn("window_start", date_format(graft.functions.Exprs.civilFromMicros(
-        unix_micros(col("window_start"))), "yyyy-MM-dd HH:mm:ss"))
-      .orderBy("window_start", "event_type")
-
-  private def qStreamWindow(s: SparkSession, d: String): DataFrame = {
-    // The TRUE streaming face of q_events_window: readStream → watermark →
-    // window agg → parquet sink with checkpoint (AvailableNow), committed
-    // files read back through the sink manifest — gated against the SAME
-    // oracle as the batch face, so exactly-once sink semantics (no dupes,
-    // no losses) are hash-checked, not just spec-checked.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.windowedStreamGate(s, d, work)
-      .withColumn("window_start", date_format(graft.functions.Exprs.civilFromMicros(
-        unix_micros(col("window_start"))), "yyyy-MM-dd HH:mm:ss"))
-      .orderBy("window_start", "event_type")
-  }
-
-  private def qWindowRank(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("c_mktsegment"))
-      .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
-      row_number().over(w).as("rn"), rank().over(w).as("rk"), dense_rank().over(w).as("drk"))
-      .orderBy("c_custkey")
-  }
-
-  private def qWindowAnalytics(s: SparkSession, d: String): DataFrame = {
-    // Full analytic-window surface (lead/lag/ntile/percent_rank/cume_dist/
-    // nth_value/first/last) — the distributed generalization of the
-    // reference's single-stream stateful expressions (SURVEY §2.7): an
-    // explicit partition key shards state; explicit order keys replace
-    // stream order.
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("c_mktsegment"))
-      .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    val wRows = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
-      lead(col("c_custkey"), 1).over(w).as("next_key"),
-      lag(col("c_custkey"), 1).over(w).as("prev_key"),
-      ntile(4).over(w).as("quartile"),
-      round(percent_rank().over(w), 6).as("pct_rank"),
-      round(cume_dist().over(w), 6).as("cume"),
-      nth_value(col("c_custkey"), 2).over(wRows).as("second_key"),
-      first(col("c_custkey")).over(wRows).as("top_key"))
-      .orderBy("c_custkey")
-  }
-
-  // =========================================================================
-  // Lookup / aggregate aliases / enum / policies / streaming-batch (§2 tail)
-  // =========================================================================
-
-  private def qLookup(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("p_partkey"), dec(col("l_quantity")).as("qty"))
-    val idx = Tables.part(s, d).select(col("p_partkey"), col("p_brand"))
-    Relational.sort(col("p_brand"))(
-      asDouble("sum_qty")(Aggregates.groupAggregate(Seq("p_brand"), Seq(
-        Agg(COUNT, None, "n_items"),
-        Agg(SUM, Some("qty"), "sum_qty")))(
-        Relational.lookup(li, idx, Seq("p_partkey")))))
-  }
-
-  private def qBestEffortAgg(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).withColumn("price_dec", dec(col("l_extendedprice")))
-    Relational.sort(col("l_linestatus"))(
-      asDouble("sum_price")(Aggregates.bestEffortGroupAggregate(Seq("l_linestatus"), Seq(
-        Agg(SUM, Some("price_dec"), "sum_price"),
-        Agg(COUNT, None, "n")))(li)))
-  }
-
-  private def qAggClusters(s: SparkSession, d: String): DataFrame = {
-    // AggregateClusters contract: input clustered by the key (sorted).
-    val li = Tables.lineitem(s, d).orderBy("l_returnflag")
-    Relational.sort(col("l_returnflag"))(
-      Aggregates.aggregateClusters(Seq("l_returnflag"), Seq(
-        Agg(MIN, Some("l_quantity"), "mn"),
-        Agg(MAX, Some("l_quantity"), "mx"),
-        Agg(COUNT, None, "n")))(li))
-  }
-
-  private def qSessionize(s: SparkSession, d: String): DataFrame =
-    graft.streaming.Streams.sessionizeBatch(Tables.events(s, d), gapMs = 30 * 60 * 1000)
-      .orderBy("user_id", "start_ms")
-
-  private def qStreamSessionize(s: SparkSession, d: String): DataFrame = {
-    // TRUE streaming run of the STATEFUL path — flatMapGroupsWithState
-    // with event-time timeouts — under the same oracle as the batch face:
-    // the sentinel-advanced watermark times out every real session, which
-    // is emitted exactly once into the checkpointed parquet sink (the
-    // sentinel user's own open session can never time out and stays
-    // absent). Complements q_stream_window, which gates the built-in
-    // windowed-aggregation state; this gates CUSTOM state + timeouts.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_sess_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.sessionizeStreamGate(s, d, work, gapMs = 30 * 60 * 1000)
-      .orderBy("user_id", "start_ms")
-  }
-
-  private def qStreamDedup(s: SparkSession, d: String): DataFrame = {
-    // TRUE streaming run of the stateful dedup operator
-    // (dropDuplicatesWithinWatermark) under the sentinel harness: emits
-    // exactly one row per distinct key into the checkpointed sink, and
-    // the checkpoint-resumed second run must NOT re-emit seen keys (a
-    // re-emission becomes a duplicate row and hash-mismatches the
-    // SELECT DISTINCT oracle). The sentinel row is the one arrival the
-    // harness itself injects — filtered here by its -1 user_id.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_dedup_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.dedupStreamGate(s, d, work)
-      .where(col("user_id") =!= -1)
-      .orderBy("user_id", "event_type")
-  }
-
-  private def qStreamNearDedup(s: SparkSession, d: String): DataFrame = {
-    // TRUE streaming MinHash near-dedup: documents arrive as a file
-    // stream in TWO phases split by doc_id parity with a checkpoint
-    // restart between them, per-bucket flatMapGroupsWithState emits
-    // candidate pairs as later docs land on earlier ones' LSH buckets,
-    // and the committed candidates are verified batch-side by exact
-    // shingle Jaccard (the two-tier production shape — id-only streaming
-    // state, heavy verify in batch). Banding is recall-complete at the
-    // threshold (48/24 @ 0.7 — the q_dedup_minhash argument), so the
-    // result set equals the all-pairs threshold join and the SAME DuckDB
-    // oracle gates the streaming path; cross-half pairs hash green only
-    // if bucket state survived the restart.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_neardedup_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.nearDedupStreamGate(s, d, work,
-      threshold = 0.7, numHashes = 48, bands = 24, shingleLen = 3)
-      .orderBy("id1", "id2")
-  }
-
-  private def qStreamStaticFilter(s: SparkSession, d: String): DataFrame = {
-    // TRUE streaming run of the stream-static anti-join — incremental
-    // dedup against history / blocklist filtering, the shape a
-    // training-data pipeline runs daily. Two-phase harness: the
-    // blocklist is UPDATED between the first run and the
-    // checkpoint-resumed second run, and the oracle's phase split only
-    // hashes green if phase-2 rows were filtered by the REFRESHED static
-    // side (and already-committed phase-1 rows were not retroactively
-    // touched). The sentinel row is the harness's own arrival — filtered
-    // here by its -1 user_id, like q_stream_dedup.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_static_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.staticFilterStreamGate(s, d, work)
-      .where(col("user_id") =!= -1)
-      .orderBy("user_id", "event_id")
-  }
-
-  private def qStreamJoin(s: SparkSession, d: String): DataFrame = {
-    // TRUE stream-stream interval self-join under the sentinel harness:
-    // purchases correlated with same-user clicks in the prior 12 hours,
-    // per-side watermarks bounding the join state. The oracle replays the
-    // exact interval join — at MICROSECOND precision, because the events
-    // table's raw nanosecond timestamps are not µs-aligned and Spark's
-    // TimestampType truncates to µs; the DuckDB side mirrors that with
-    // epoch_ns // 1000 arithmetic.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_join_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.correlateStreamGate(s, d, work)
-      .orderBy("user_id", "purchase_id", "click_id")
-  }
-
-  private def qStreamOuterJoin(s: SparkSession, d: String): DataFrame = {
-    // TRUE stream-stream LEFT OUTER interval join: like q_stream_join
-    // plus the null-padded purchases the watermark released — the
-    // outer-specific machinery (min-of-both-watermarks eviction,
-    // sentinel routed through BOTH sides) is what's under test.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_outer_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.outerCorrelateStreamGate(s, d, work)
-      .orderBy("user_id", "purchase_id", "click_id")
-  }
-
-  private def qSlidingWindow(s: SparkSession, d: String): DataFrame =
-    graft.streaming.Streams.slidingStats(Tables.events(s, d), "1 hour", "15 minutes")
-      .withColumn("window_start", date_format(graft.functions.Exprs.civilFromMicros(
-        unix_micros(col("window_start"))), "yyyy-MM-dd HH:mm:ss"))
-      .orderBy("window_start", "event_type")
-
-  private def qStreamSliding(s: SparkSession, d: String): DataFrame = {
-    // EIGHTH true streaming gate: OVERLAPPING windows — four live
-    // window states per (type, event) that the sentinel-advanced
-    // watermark must all release; checkpoint-resumed, committed files
-    // read back, gated on the batch sliding oracle.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_stream_sliding_${ProcessHandle.current().pid()}")
-    graft.streaming.Streams.slidingStreamGate(s, d, work)
-      .withColumn("window_start", date_format(graft.functions.Exprs.civilFromMicros(
-        unix_micros(col("window_start"))), "yyyy-MM-dd HH:mm:ss"))
-      .orderBy("window_start", "event_type")
-  }
-
-  private def qEnum(s: SparkSession, d: String): DataFrame = {
-    val e = graft.types.GraftTypes.EnumDefinition(Seq(
-      1 -> "1-URGENT", 2 -> "2-HIGH", 3 -> "3-MEDIUM",
-      4 -> "4-NOT SPECIFIED", 5 -> "5-LOW"))
-    Tables.orders(s, d).select(col("o_orderkey"),
-      e.encode(col("o_orderpriority")).as("prio_code"),
-      e.decode(e.encode(col("o_orderpriority"))).as("prio_name"),
-      e.decode(lit(99)).as("undefined_code")
-    ).orderBy("o_orderkey")
-  }
-
-  private def qEnumStorage(s: SparkSession, d: String): DataFrame = {
-    // The storage-side win the reference's ENUM columns exist for
-    // (tuple_schema.h:42-74 — int32 codes on disk + a dictionary in the
-    // schema): the priority column is written as int codes next to a
-    // 5-row dictionary parquet, read BACK, and decoded by a broadcast
-    // dictionary join — no in-memory EnumDefinition on the read path.
-    // The footprint claim is MEASURED, not asserted: the int-code
-    // column's total compressed column-chunk bytes (from the parquet
-    // footers) must be strictly smaller than the string column's in an
-    // otherwise-identical write. The oracle replays encode+decode from
-    // the raw strings, so a lossy storage round trip hash-mismatches.
-    val e = graft.types.GraftTypes.EnumDefinition(Seq(
-      1 -> "1-URGENT", 2 -> "2-HIGH", 3 -> "3-MEDIUM",
-      4 -> "4-NOT SPECIFIED", 5 -> "5-LOW"))
-    val base = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_enum_${ProcessHandle.current().pid()}")
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
-    val codedDf = o.select(col("o_orderkey"),
-      e.encode(col("o_orderpriority")).as("prio_code"))
-    Relational.fileOutput(codedDf, s"$base/coded")
-    import s.implicits._
-    Relational.fileOutput(e.entries.toDF("code", "name"), s"$base/dict")
-    Relational.fileOutput(o, s"$base/strings")
-    val codedBytes = Relational.parquetColumnBytes(s, s"$base/coded", "prio_code")
-    val stringBytes = Relational.parquetColumnBytes(s, s"$base/strings", "o_orderpriority")
-    require(codedBytes > 0 && codedBytes < stringBytes,
-      s"enum int-code storage must beat strings on disk: $codedBytes vs $stringBytes bytes")
-    // The other storage win: the int code is a natural PARTITION key (5
-    // directories), so an enum predicate prunes 4/5 of the data before
-    // any IO — written via the size-targeted partitioned writer and
-    // require()d on the scan's PartitionFilters plus the pruned count.
-    Relational.fileOutputPartitioned(codedDf, s"$base/coded_parts",
-      Seq("prio_code"), targetRowsPerFile = 100000L)
-    val pruned = Relational.scanParquet(s, s"$base/coded_parts")
-      .where(col("prio_code") === 1)
-    require(pruned.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(prio_code"),
-      "enum-partitioned scan must prune on the code partition column")
-    require(pruned.count() == codedDf.where(col("prio_code") === 1).count(),
-      "partition-pruned read must return exactly the code-1 rows")
-    val coded = Relational.scanParquet(s, s"$base/coded")
-    val dict = Relational.scanParquet(s, s"$base/dict")
-    coded.join(broadcast(dict), col("prio_code") === col("code"), "left")
-      .select(col("o_orderkey"), col("prio_code"), col("name").as("prio_name"))
-      .orderBy("o_orderkey")
-  }
-
-  private def qExprPolicy(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.{Exprs => EP}
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-      EP.divideNulling(col("l_quantity"), col("l_linenumber") - col("l_linenumber")).as("p_nulling"),
-      EP.divide(col("l_quantity"), lit(2)).as("p_quiet"),
-      EP.divideSignaling(col("l_quantity"), lit(2)).as("p_signal"),
-      EP.cppDivide(col("l_quantity"), lit(3)).as("p_cppdiv"),
-      EP.cppDivideNulling(col("l_quantity"), col("l_linenumber") - col("l_linenumber")).as("p_cppdiv0"),
-      round(EP.log10Nulling(col("l_quantity") - 30), 6).as("p_log10n"),
-      round(EP.log2Signaling(col("l_quantity")), 6).as("p_log2s"),
-      EP.powNulling(EP.negate(col("l_quantity")), lit(0.5)).as("p_pow_null"),
-      EP.powSignaling(col("l_quantity"), lit(2.0)).as("p_pow_sig"),
-      EP.formatSignaling(col("l_quantity"), lit(2)).as("p_fmt_sig"),
-      EP.parseStringQuiet(IntegerType)(
-        concat(col("l_orderkey").cast("string"), lit("pc"))).as("p_parse_q"),
-      EP.castSignaling(LongType)(col("l_linenumber").cast("string")).as("p_cast_sig")
-    ).orderBy("l_orderkey", "l_linenumber")
-  }
-
-  private def qAsofJoin(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-    val signups = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts"), col("value").as("sv"))
-    Relational.asOfJoin(clicks, signups, Seq("user_id"), "ts", "ts", Seq("sv"))
-      .select(col("user_id"), col("event_id"), col("sv"))
-      .orderBy("user_id", "event_id")
-  }
-
-  private def qSpecRoundtrip(s: SparkSession, d: String): DataFrame = {
-    // §3.3 serialization gate (reference ships proto-serialized sample/
-    // aggregation/sort specs across process boundaries,
-    // serialization/build_expression_from_proto.h:31-33): every spec kind
-    // QuerySpecs serializes is written to its JSON wire form, read BACK
-    // from that JSON, structurally compared to the original (lossless
-    // round-trip is a hard require, not just "runs"), and the pipeline the
-    // driver gates is built ONLY from the deserialized copies — a field
-    // dropped or re-typed anywhere in the wire format changes the output
-    // and hash-mismatches the DuckDB oracle.
-    import graft.plans.QuerySpecs
-    import graft.plans.QuerySpecs._
-    import graft.plans.QuerySpecs.ExprSpec._
-    val sampleSpec = SampleSpec("bernoulli",
-      List("l_orderkey", "l_linenumber"), rate = Some(0.01))
-    // Expression-tree wire form (col/lit/comparison/and/or/not/isnull):
-    // keep sampled rows with l_quantity >= 2 whose returnflag is neither
-    // 'X' nor NULL — exercises every boolean connective in one predicate.
-    val filterSpec = FilterSpec(
-      and(ge(colRef("l_quantity"), literal("2", "INT")),
-        not(or(ExprSpec.eq(colRef("l_returnflag"), literal("X", "STRING")),
-          isNull(colRef("l_returnflag"))))))
-    // Projection wire form: pass-throughs, a RENAME (qty_for_min feeds
-    // MIN below — dropping the rename in the wire format breaks the
-    // build), a COMPUTED column (ln2 = l_linenumber * 2 feeds the
-    // DISTINCT sum — a mis-rebuilt arithmetic node changes the hash),
-    // plus one field per remaining operator family of the reference's
-    // expression enum (operators.proto:17-182): div (double division —
-    // IEEE-exact, MIN'd so order cannot matter), mod, string
-    // concat/substr/lower, and CASE over an IN — every one rebuilt from
-    // the wire form and hash-gated through an aggregate.
-    val projectSpec = ProjectSpec(List(
-      ProjectField(colRef("l_returnflag")),
-      ProjectField(colRef("l_quantity")),
-      ProjectField(colRef("l_quantity"), as = Some("qty_for_min")),
-      ProjectField(colRef("l_linestatus")),
-      ProjectField(colRef("qty_dec")),
-      ProjectField(colRef("ok_ln")),
-      ProjectField(mul(colRef("l_linenumber"), literal("2", "INT")),
-        as = Some("ln2")),
-      ProjectField(ExprSpec.div(colRef("l_quantity"), literal("4.0", "DOUBLE")),
-        as = Some("qty_div")),
-      ProjectField(ExprSpec.mod(colRef("l_linenumber"), literal("3", "INT")),
-        as = Some("ln_mod")),
-      ProjectField(ExprSpec.concat(
-        ExprSpec.lower(colRef("l_returnflag")), literal("_", "STRING"),
-        ExprSpec.substr(colRef("l_linestatus"), literal("1", "INT"),
-          literal("1", "INT"))), as = Some("tag")),
-      ProjectField(caseWhen(
-        Seq(ExprSpec.in(colRef("l_returnflag"),
-          literal("A", "STRING"), literal("R", "STRING")) ->
-          literal("ret", "STRING")),
-        otherwise = Some(literal("keep", "STRING"))), as = Some("flag_class"))))
-    val aggSpec = AggSpec(List("l_returnflag"), List(
-      AggFieldSpec("COUNT", None, "n"),
-      AggFieldSpec("SUM", Some("qty_dec"), "sum_qty"),
-      AggFieldSpec("MIN", Some("qty_for_min"), "min_qty"),
-      AggFieldSpec("SUM", Some("ln2"), "sum_ln", distinct = true,
-        outType = Some("BIGINT")),
-      AggFieldSpec("CONCAT", Some("l_linestatus"), "statuses",
-        orderBy = Some(SortKeySpec("ok_ln"))),
-      AggFieldSpec("MIN", Some("qty_div"), "min_qdiv"),
-      AggFieldSpec("MAX", Some("ln_mod"), "max_lnmod"),
-      AggFieldSpec("MIN", Some("tag"), "min_tag"),
-      AggFieldSpec("MIN", Some("flag_class"), "flag_class")))
-    val sortSpec = SortSpec(
-      List(SortKeySpec("l_returnflag", caseInsensitive = true)), limit = Some(2))
-    val sampleJson = QuerySpecs.writeSampleSpec(sampleSpec)
-    val filterJson = QuerySpecs.writeFilterSpec(filterSpec)
-    val projectJson = QuerySpecs.writeProjectSpec(projectSpec)
-    val aggJson = QuerySpecs.writeAggSpec(aggSpec)
-    val sortJson = QuerySpecs.writeSortSpec(sortSpec)
-    val sample2 = QuerySpecs.readSampleSpec(sampleJson)
-    val filter2 = QuerySpecs.readFilterSpec(filterJson)
-    val project2 = QuerySpecs.readProjectSpec(projectJson)
-    val agg2 = QuerySpecs.readAggSpec(aggJson)
-    val sort2 = QuerySpecs.readSortSpec(sortJson)
-    require(sample2 == sampleSpec && filter2 == filterSpec &&
-      project2 == projectSpec && agg2 == aggSpec && sort2 == sortSpec,
-      "spec JSON round-trip is lossy")
-    // Second wire, same gate: the filter + projection stages ALSO round-trip
-    // as protobuf ExpressionDescription bytes (ProtoWire — exact wire parity
-    // with the reference's serialized expression trees,
-    // serialization/build_expression_from_proto.h:31-33), and the pipeline
-    // below is built from the PROTO-decoded trees, so a wire bug anywhere
-    // (field number, varint, embedded-message length, alias list) changes
-    // the output and hash-mismatches the DuckDB oracle.
-    import graft.plans.ProtoWire
-    val predProto = ProtoWire.fromExprSpec(filter2.predicate)
-    val projProto = ProtoWire.fromProjectSpec(project2)
-    val predDecoded = ProtoWire.decode(ProtoWire.encode(predProto))
-    val projDecoded = ProtoWire.decode(ProtoWire.encode(projProto))
-    require(predDecoded == predProto && projDecoded == projProto,
-      "spec proto round-trip is lossy")
-    val sampled = QuerySpecs.buildSample(sample2)(Tables.lineitem(s, d))
-      .withColumn("qty_dec", dec(col("l_quantity")))
-      // the testdata carries duplicate (orderkey, linenumber) rows, so the
-      // concat order key folds the VALUE in as a tiebreak — remaining ties
-      // are between identical contributions and cannot change the output
-      .withColumn("ok_ln", (col("l_orderkey") * 10 + col("l_linenumber")) * 2 +
-        when(col("l_linestatus") === "O", 1).otherwise(0))
-    val staged = sampled.filter(ProtoWire.toColumn(predDecoded))
-      .select(ProtoWire.toColumns(projDecoded): _*)
-    asDouble("sum_qty")(QuerySpecs.buildSort(sort2)(QuerySpecs.buildAggregate(agg2)(staged)))
-  }
-
-  private def qHistogram(s: SparkSession, d: String): DataFrame = {
-    // Mass-conserving equi-width histogram: 20 bins over [900, 105000),
-    // under/overflow kept in bins -1 / 20; identical floor arithmetic
-    // replayed by the oracle.
-    Relational.sort(col("bin"))(
-      graft.pipeline.Profile.histogram(Tables.lineitem(s, d),
-        "l_extendedprice", lo = 900.0, hi = 105000.0, nBins = 20))
-  }
-
-  private def qResample(s: SparkSession, d: String): DataFrame = {
-    // Daily grid per user with forward-filled decimal sums; leading gaps
-    // NULL, gap days n=0. Bucket formatted to a date string so both
-    // engines hash the same representation.
-    val out = graft.pipeline.TimeSeries.resampleFill(
-      Tables.events(s, d), "user_id", "ts", "value", unit = "day")
-    Relational.sort(col("user_id"), col("day"))(
-      out.select(col("user_id"),
-        date_format(col("bucket"), "yyyy-MM-dd").as("day"),
-        col("n"), col("filled")))
-  }
-
-  private def qDomainCap(s: SparkSession, d: String): DataFrame = {
-    // Per-domain cap (anti-overrepresentation): at most 30 docs per
-    // language, chosen by the portable hash order so the survivor set is
-    // a reproducible uniform subset the oracle re-derives exactly.
-    val capped = graft.pipeline.Sampling.exactPerStratum(
-      Tables.documents(s, d).select("doc_id", "lang"), "lang", n = 30,
-      keyCols = Seq("doc_id"))
-    Relational.sort(col("lang"), col("doc_id"))(capped)
-  }
-
-  private def qValidate(s: SparkSession, d: String): DataFrame = {
-    // Constraint report over lineitem with three PLANTED violations (a
-    // null key, an out-of-range discount + bad flag, an orphan fk + dup
-    // key) so every check class exercises its counting path.
-    import graft.pipeline.Checks._
-    val li = Tables.lineitem(s, d)
-      .select("l_orderkey", "l_linenumber", "l_discount", "l_returnflag")
-    val bad = s.range(1).select(
-      lit(null).cast("long").as("l_orderkey"), lit(1L).as("l_linenumber"),
-      lit(0.5).as("l_discount"), lit("Z").as("l_returnflag"))
-      .unionByName(s.range(1).select(
-        lit(888888888L).as("l_orderkey"), lit(1L).as("l_linenumber"),
-        lit(0.0).as("l_discount"), lit("N").as("l_returnflag")))
-      .unionByName(s.range(1).select(
-        lit(888888888L).as("l_orderkey"), lit(1L).as("l_linenumber"),
-        lit(0.0).as("l_discount"), lit("N").as("l_returnflag")))
-    val df = li.unionByName(bad)
-    Relational.sort(col("check"))(graft.pipeline.Checks.validate(df, Seq(
-      NotNull("l_orderkey"),
-      InRange("l_discount", 0.0, 0.1),
-      Accepted("l_returnflag", Seq("A", "N", "R")),
-      Unique(Seq("l_orderkey", "l_linenumber")),
-      RefIntegrity(Seq("l_orderkey"), Tables.orders(s, d), Seq("o_orderkey")))))
-  }
-
-  private def qHierarchy(s: SparkSession, d: String): DataFrame = {
-    // Parent-pointer forest: order keys plus ALL their div-10 ancestors
-    // (so the forest is closed — every parent exists as a node; keys < 10
-    // are roots), resolved by pointer doubling; the oracle walks the same
-    // chains with a recursive CTE.
-    val o = Tables.orders(s, d)
-    val closure = (0 to 7).map(i =>
-        o.select(expr(s"o_orderkey div ${BigInt(10).pow(i)}L").as("id")))
-      .reduce(_ unionAll _).where(col("id") >= 1).distinct()
-    val nodes = closure.select(col("id"),
-      when(col("id") < 10, lit(null).cast("long"))
-        .otherwise(expr("id div 10")).as("parent"))
-    Relational.sort(col("id"))(
-      graft.pipeline.Graph.treeRootDepth(nodes, "id", "parent"))
-  }
-
-  private def qChisq(s: SparkSession, d: String): DataFrame = {
-    // Chi-square independence of returnflag × linestatus: exact integer
-    // contingency cells, per-cell contributions rounded 6 dp and summed
-    // as DECIMAL (order-independent statistic).
-    graft.pipeline.Profile.chiSquareIndependence(
-      Tables.lineitem(s, d), "l_returnflag", "l_linestatus")
-  }
-
-  private def qTtest(s: SparkSession, d: String): DataFrame = {
-    // Welch t-test of order totalprice between open and fulfilled orders,
-    // from exact decimal moments in ONE conditional-aggregation scan.
-    graft.pipeline.Profile.welchTTest(
-      Tables.orders(s, d), "o_orderstatus", "o_totalprice", "O", "F")
-  }
-
-  private def qKanon(s: SparkSession, d: String): DataFrame = {
-    // k-anonymity audit of customer quasi-identifiers (nation, segment)
-    // at k=5: class-size fold over the equivalence-class aggregate.
-    graft.pipeline.Checks.kAnonymity(
-      Tables.customer(s, d), Seq("c_nationkey", "c_mktsegment"), 5L)
-  }
-
-  private def qKeySkew(s: SparkSession, d: String): DataFrame = {
-    // Key-skew diagnostic over lineitem part keys: hottest-key share +
-    // Shannon entropy of the key distribution (rounded-decimal sum).
-    graft.pipeline.Profile.keySkewProfile(Tables.lineitem(s, d), "l_partkey")
-  }
-
-  private def qSnapshotDiff(s: SparkSession, d: String): DataFrame = {
-    // Release-over-release table diff: v2 is v1 with deterministic
-    // deletes (key%97=0), price edits (+1.0 at key%13=1) and inserts
-    // (key%101=5 shifted past the key space); one full-outer key join,
-    // unchanged rows dropped in-plan.
-    val v1 = Tables.orders(s, d)
-    val v2 = v1.where(col("o_orderkey") % 97 =!= 0)
-      .withColumn("o_totalprice",
-        when(col("o_orderkey") % 13 === 1, col("o_totalprice") + lit(1.0))
-          .otherwise(col("o_totalprice")))
-      .unionByName(v1.where(col("o_orderkey") % 101 === 5)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L)))
-    Relational.sort(col("o_orderkey"))(
-      Relational.snapshotDiff(v1, v2, Seq("o_orderkey"),
-        Seq("o_totalprice", "o_orderstatus")))
-  }
-
-  private def qGolden(s: SparkSession, d: String): DataFrame = {
-    // Golden-record survivorship over exact-duplicate document clusters
-    // (md5 text fingerprint): most-frequent-non-null lang/source with the
-    // (count desc, value asc) tie-break, canonical id = min member.
-    val docs = Tables.documents(s, d)
-      .withColumn("fp", md5(col("text").cast("binary")))
-    Relational.sort(col("fp"))(
-      graft.pipeline.Dedup.goldenRecord(docs, "fp", "doc_id",
-        Seq("lang", "source")))
-  }
-
-  private def qJoinSize(s: SparkSession, d: String): DataFrame = {
-    // Exact join-cardinality statistic from per-key counts — the
-    // key-explosion guard; never materializes the join itself.
-    Relational.joinCardinality(Tables.lineitem(s, d), Tables.orders(s, d),
-      "l_orderkey", "o_orderkey")
-  }
-
-  private def qBasket(s: SparkSession, d: String): DataFrame = {
-    // Item-pair association rules over order baskets (parts per order),
-    // support >= 2 baskets; ratios are fixed double dags over exact counts.
-    Relational.sort(col("i1"), col("i2"))(
-      graft.pipeline.Association.itemPairRules(Tables.lineitem(s, d),
-        "l_orderkey", "l_partkey", minSupportCount = 2L))
-  }
-
-  private def qSpatialJoin(s: SparkSession, d: String): DataFrame = {
-    // Grid-blocked radius join over synthetic integer points (portable
-    // hash coords in a 4000x4000 plane, radius 64): recall-exact vs the
-    // all-pairs oracle — equality PROVES the 3x3 cell blocking lost
-    // nothing (q_fuzzy_join standard).
-    val m = 2147483648L
-    val pts = Tables.documents(s, d).select(col("doc_id").as("id"),
-      (pmod(col("doc_id"), lit(m)) * lit(2654435761L) % lit(m) % lit(4000L)).as("x"),
-      (pmod(col("doc_id"), lit(m)) * lit(2246822519L) % lit(m) % lit(4000L)).as("y"))
-    Relational.sort(col("id_a"), col("id_b"))(
-      graft.pipeline.Spatial.radiusJoinGrid(pts, "id", "x", "y", radius = 64L))
-  }
-
-  private def qKmeans(s: SparkSession, d: String): DataFrame = {
-    // Deterministic Lloyd k-means over floor-quantized embeddings (k=8,
-    // 3 iterations): exact integer assignment + floor-div updates; the
-    // oracle unrolls all three iterations as CTE chains.
-    Relational.sort(col("cid"), col("dim"))(
-      graft.pipeline.Similarity.kmeansQuantized(Tables.embeddings(s, d),
-        "vec_id", "embedding", k = 8, iters = 3))
-  }
-
-  private def qRproj(s: SparkSession, d: String): DataFrame = {
-    // Portable-sign JL projection 64 -> 16 dims: each output coord is one
-    // codegen'd vec_dot against a literal parity-sign vector.
-    Relational.sort(col("vec_id"), col("rp_dim"))(
-      graft.pipeline.Similarity.randomProjection(Tables.embeddings(s, d),
-        "vec_id", "embedding", dim = 64, outDims = 16))
-  }
-
-  private def qAnova(s: SparkSession, d: String): DataFrame = {
-    // One-way ANOVA of extendedprice across return flags: exact decimal
-    // moments per group, grand totals as window sums over the k-row
-    // group table, terms 6-dp-rounded and decimal-summed.
-    graft.pipeline.Profile.anovaF(Tables.lineitem(s, d),
-      "l_returnflag", "l_extendedprice")
-  }
-
-  private def qAttribution(s: SparkSession, d: String): DataFrame = {
-    // Last-touch credit for every purchase: one user-sharded window over
-    // the whole stream; times surface as epoch micros (both engines hash
-    // the same integers).
-    val out = graft.pipeline.Events.attribution(Tables.events(s, d),
-      "user_id", "ts", "event_id", "event_type", "purchase",
-      Seq("view", "click"), model = "last")
-    Relational.sort(col("conversion_id"))(
-      out.select(col("conversion_id"), col("user_id"),
-        graft.functions.Exprs.epochMicrosCivil(col("conv_ts")).as("conv_ts"), col("touch_type"),
-        graft.functions.Exprs.epochMicrosCivil(col("touch_ts")).as("touch_ts")))
-  }
-
-  private def qDpCounts(s: SparkSession, d: String): DataFrame = {
-    // Seeded geometric-mechanism noisy customer counts per nation
-    // (alpha = 0.5 <=> epsilon = ln 2); the oracle replays hash, inverse
-    // CDF, and noise arithmetic.
-    Relational.sort(col("c_nationkey"))(
-      graft.pipeline.Checks.noisyCounts(Tables.customer(s, d),
-        "c_nationkey", alpha = 0.5, seed = 7L))
-  }
-
-  private def qTextNormalize(s: SparkSession, d: String): DataFrame = {
-    // Aggressive canonicalization + exact-dup grouping on the normalized
-    // form: reformatted copies collapse to one canonical id; shuffles
-    // carry the md5, not the text.
-    val n = Tables.documents(s, d).select(col("doc_id"),
-      graft.pipeline.TextAnalysis.normalizeAggressive(col("text")).as("__nt"))
-    val w = Window.partitionBy(col("__nt"))
-    Relational.sort(col("doc_id"))(
-      n.select(col("doc_id"), md5(col("__nt")).as("fp"),
-        length(col("__nt")).cast("long").as("norm_chars"),
-        min(col("doc_id")).over(w).as("canonical")))
-  }
-
-  private def qIncrementalAgg(s: SparkSession, d: String): DataFrame = {
-    // Materialized (flag, sum, count) aggregate maintained from a change
-    // log — the oracle RECOMPUTES from scratch over the effective row
-    // set, so equality proves incremental == full recompute.
-    val li = Tables.lineitem(s, d)
-    val base = li.where(col("l_linenumber") <= 4)
-      .groupBy(col("l_returnflag"))
-      .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("sum_v"),
-        count(lit(1)).as("cnt"))
-    val inserts = li.where(col("l_linenumber") > 4)
-      .select(col("l_returnflag"), col("l_quantity"), lit("I").as("op"))
-    val deletes = li.where(col("l_linenumber") === 1 && col("l_orderkey") % 10 === 0)
-      .select(col("l_returnflag"), col("l_quantity"), lit("D").as("op"))
-    val out = Aggregates.incrementalSumCount(base, inserts.unionByName(deletes),
-      Seq("l_returnflag"), "l_quantity", "op")
-    Relational.sort(col("l_returnflag"))(
-      out.select(col("l_returnflag"),
-        col("sum_v").cast("string").cast("double").as("sum_v"), col("cnt")))
-  }
-
-  private def qProfileDrift(s: SparkSession, d: String): DataFrame = {
-    // Release-gate drift check between a table and its next snapshot
-    // (same mutation recipe as q_snapshot_diff): two one-scan profiles
-    // joined on column name.
-    val v1 = Tables.orders(s, d)
-    val v2 = v1.where(col("o_orderkey") % 97 =!= 0)
-      .withColumn("o_totalprice",
-        when(col("o_orderkey") % 13 === 1, col("o_totalprice") + lit(1.0))
-          .otherwise(col("o_totalprice")))
-      .unionByName(v1.where(col("o_orderkey") % 101 === 5)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L)))
-    val out = graft.pipeline.Profile.compareProfiles(v1, v2,
-      Seq("o_orderkey", "o_totalprice", "o_orderstatus"))
-    Relational.sort(col("col_name"))(
-      out.withColumn("avg_len_a", round(col("avg_len_a"), 6))
-        .withColumn("avg_len_b", round(col("avg_len_b"), 6)))
-  }
-
-  private def qSkewJoin(s: SparkSession, d: String): DataFrame = {
-    // Hybrid hot/cold join on a corpus with PLANTED hot suppliers (every
-    // 50th key replicated 4x): hot keys broadcast, cold keys shuffle; the
-    // oracle is the PLAIN join — equality proves the split lost nothing.
-    val li = Tables.lineitem(s, d)
-    val planted = li.where(col("l_suppkey") % 50 === 0)
-    val skewed = li.unionByName(planted).unionByName(planted).unionByName(planted)
-    val avg = skewed.agg((count(lit(1)) /
-      count_distinct(col("l_suppkey"))).cast("long")).collect()(0).getLong(0)
-    val joined = Relational.skewHybridJoin(skewed, Tables.supplier(s, d),
-      "l_suppkey", "s_suppkey", hotThreshold = 2L * avg)
-    Relational.sort(col("s_nationkey"))(
-      joined.groupBy(col("s_nationkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)"))
-          .cast("string").cast("double").as("sum_qty"),
-          count(lit(1)).as("cnt")))
-  }
-
-  private def qRateAnomaly(s: SparkSession, d: String): DataFrame = {
-    // Hourly event-rate z-scores vs the trailing 24 observed hours;
-    // window runs over the bucket table, never raw events.
-    val out = graft.pipeline.Events.rateAnomaly(Tables.events(s, d),
-      "ts", bucket = "hour", window = 24, zThreshold = 2.0)
-    Relational.sort(col("bucket"))(
-      out.select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
-        col("c"), col("z"), col("anomaly")))
-  }
-
-  private def qTopValues(s: SparkSession, d: String): DataFrame = {
-    // Value-frequency profile: top-3 values per column from one stacked
-    // scan, (count desc, value asc) tie-break.
-    Relational.sort(col("col_name"), col("rank"))(
-      graft.pipeline.Profile.topValues(Tables.customer(s, d),
-        Seq("c_mktsegment", "c_nationkey"), k = 3))
-  }
-
-  private def qStreamIncremental(s: SparkSession, d: String): DataFrame = {
-    // TRUE streaming materialized-aggregate maintenance: phase 1 streams
-    // inserts, phase 2 stages deletes and RESUMES from the checkpoint;
-    // the final aggregate must equal a full recompute — gated against
-    // the SAME oracle as q_incremental_agg.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_incr_${ProcessHandle.current().pid()}")
-    val li = Tables.lineitem(s, d)
-    val base = li.where(col("l_linenumber") <= 4)
-      .groupBy(col("l_returnflag"))
-      .agg(sum(col("l_quantity").cast("decimal(18,2)"))
-        .cast("decimal(28,2)").as("sum_v"), count(lit(1)).as("cnt"))
-    val inserts = li.where(col("l_linenumber") > 4)
-      .select(col("l_returnflag"), col("l_quantity"), lit("I").as("op"))
-    val deletes = li.where(col("l_linenumber") === 1 && col("l_orderkey") % 10 === 0)
-      .select(col("l_returnflag"), col("l_quantity"), lit("D").as("op"))
-    val out = graft.streaming.Streams.incrementalAggStreamGate(s, work,
-      base, Seq("l_returnflag"), "l_quantity", "op", inserts, deletes)
-    Relational.sort(col("l_returnflag"))(
-      out.select(col("l_returnflag"),
-        col("sum_v").cast("string").cast("double").as("sum_v"), col("cnt")))
-  }
-
-  private def qPercentiles(s: SparkSession, d: String): DataFrame = {
-    // Exact nearest-rank p50/p90/p99 per return flag from the
-    // distinct-value rank table — no per-row window.
-    Relational.sort(col("l_returnflag"), col("p"))(
-      graft.pipeline.Profile.percentilesExact(Tables.lineitem(s, d),
-        "l_returnflag", "l_extendedprice", Seq(0.5, 0.9, 0.99)))
-  }
-
-  private def qTemporalSplit(s: SparkSession, d: String): DataFrame = {
-    // Leakage-safe time split with a 1-day embargo after each boundary;
-    // pure pushed-down comparisons, zero shuffles.
-    val out = graft.pipeline.Sampling.temporalSplit(Tables.events(s, d),
-      "ts", "2024-01-15 00:00:00", "2024-01-25 00:00:00",
-      embargoSeconds = 86400L)
-    Relational.sort(col("split"))(
-      out.groupBy(col("split")).agg(count(lit(1)).as("n"),
-        count_distinct(col("user_id")).as("users")))
-  }
-
-  private def qAnchorChunks(s: SparkSession, d: String): DataFrame = {
-    // Content-defined chunking by portable anchor tokens (divisor 64 →
-    // ~64-token chunks): boundaries survive edits in other chunks; the
-    // oracle replays key, anchors, chunk cumsum, and fingerprints.
-    Relational.sort(col("doc_id"), col("chunk"))(
-      graft.pipeline.Packing.anchorChunks(Tables.documents(s, d),
-        "doc_id", "text", divisor = 64L))
-  }
-
-  private def qNegatives(s: SparkSession, d: String): DataFrame = {
-    // Deterministic contrastive negatives: modular affine candidates over
-    // the dense id domain, existence-joined, same-label and self pairs
-    // dropped.
-    Relational.sort(col("anchor"), col("j"))(
-      graft.pipeline.Sampling.negativePairs(Tables.embeddings(s, d),
-        "vec_id", "label", k = 3, seed = 5L))
-  }
-
-  private def qRecipe(s: SparkSession, d: String): DataFrame = {
-    // END-TO-END corpus recipe — the five-stage pipeline an LLM data run
-    // actually executes, each stage an already-gated operator, composed:
-    // quality filter → canonicalization dedup → per-source cap →
-    // deterministic shuffle → sequence packing. The oracle replays the
-    // WHOLE chain. (Gate-scale form: the global order/pack windows here
-    // are the single-partition faces; at 100 TB the same chain runs
-    // through deterministicShuffle's range exchange and layoutOffsets'
-    // bucketed packing — both separately gated.)
-    val docs = Tables.documents(s, d)
-    val kept = docs.where(col("n_chars").between(100, 2000))
-    val fp = kept.withColumn("__f",
-      md5(graft.pipeline.TextAnalysis.normalizeAggressive(col("text"))))
-    val ded = fp.withColumn("__canon",
-        min(col("doc_id")).over(Window.partitionBy("__f")))
-      .where(col("doc_id") === col("__canon"))
-      .select(col("doc_id"), col("source"), col("text"))
-    val cap = graft.pipeline.Sampling.exactPerStratum(ded, "source", 100, Seq("doc_id"))
-    val keyed = cap.withColumn("__sk",
-      graft.pipeline.Sampling.shuffleKey(Seq(col("doc_id")), 42L))
-    // global windows below run over the CAPPED sample (<= 100 per
-    // source — bounded by construction, sweep-audited r8)
-    val ord = keyed.withColumn("pos",
-      row_number().over(Window.orderBy(col("__sk"), col("doc_id"))) - 1)
-    val toks = ord.withColumn("n_tokens",
-      size(filter(split(col("text"), "\\s+"), t => t =!= "")).cast("long"))
-    val packed = toks.withColumn("__cum",
-        coalesce(sum(col("n_tokens")).over(
-          Window.orderBy("pos").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("seq", floor(col("__cum").cast("double") / lit(2048)).cast("long"))
-    Relational.sort(col("pos"))(
-      packed.select(col("doc_id"), col("source"), col("pos"),
-        col("n_tokens"), col("seq")))
-  }
-
-  private def qEmbedQuantize(s: SparkSession, d: String): DataFrame = {
-    // Serving-prep int8 quantization: one codegen'd norm per vector,
-    // 9-dp-rounded ratio so a norm ulp can't flip a floor.
-    Relational.sort(col("vec_id"), col("dim"))(
-      graft.pipeline.Similarity.l2QuantizeInt8(Tables.embeddings(s, d),
-        "vec_id", "embedding"))
-  }
-
-  private def qCsvQuarantine(s: SparkSession, d: String): DataFrame = {
-    // Dead-letter ingestion: a CSV feed with three planted corrupt lines;
-    // good rows aggregate exactly to the parquet truth, bad rows land in
-    // quarantine instead of aborting or silently nulling.
-    val dir = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_quar_${ProcessHandle.current().pid()}")
-    val good = Tables.customer(s, d).where(col("c_custkey") <= 200)
-      .select(col("c_custkey"), col("c_acctbal"))
-    good.write.mode("overwrite").csv(dir)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "bad.csv"),
-      java.util.Arrays.asList("abc,def", "999999,notanumber", "x,"),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("c_custkey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("c_acctbal",
-        org.apache.spark.sql.types.DoubleType)))
-    val (g, b) = Relational.readCsvQuarantine(s, dir, schema)
-    g.agg(count(lit(1)).as("n_good"),
-        sum(col("c_acctbal").cast("decimal(18,2)"))
-          .cast("string").cast("double").as("sum_bal"))
-      .crossJoin(broadcast(b.agg(count(lit(1)).as("n_bad"))))
-      .select(col("n_good"), col("n_bad"), col("sum_bal"))
-  }
-
-  private def qHtmlStrip(s: SparkSession, d: String): DataFrame = {
-    // Web-corpus ingest: every document wrapped in deterministic HTML
-    // (script/style/comment blocks, planted entities), then recovered to
-    // visible text — the crawl → prose step before quality filtering.
-    // Codegen regexp chain, zero shuffle; oracle replays the chain.
-    import graft.pipeline.TextAnalysis
-    val html = concat(
-      lit("<html><head><title>Doc "), col("doc_id").cast("string"),
-      lit(" &amp; co</title><style>p{margin:0}</style><script>var id="),
-      col("doc_id").cast("string"), lit(";</script></head><body><!-- src="),
-      col("source"), lit(" --><h1 class=\"hd\">"), col("source"),
-      lit("</h1><p>"), col("text"), lit("</p>"),
-      when(col("doc_id") % 3 === 0,
-        lit("<div>&quot;quoted&quot;&nbsp;&lt;tail&gt;</div>")).otherwise(lit("")),
-      lit("</body></html>"))
-    val h = Tables.documents(s, d).select(col("doc_id"), html.as("html"))
-    val vis = TextAnalysis.stripMarkup(col("html"))
-    Relational.sort(col("doc_id"))(h.select(
-      col("doc_id"),
-      TextAnalysis.htmlTitle(col("html")).as("title"),
-      md5(vis).as("text_fp"),
-      length(vis).cast("long").as("visible_chars"),
-      round(TextAnalysis.markupRatio(col("html")), 6).as("markup_ratio")))
-  }
-
-  private def qUrlDedup(s: SparkSession, d: String): DataFrame = {
-    // URL-level dedup: fetch records whose URLs differ only in scheme/host
-    // case, default port, fragment, tracking params, param order, or a
-    // trailing slash collapse to one canonical page id (min doc_id).
-    import graft.pipeline.TextAnalysis
-    val id = col("doc_id")
-    val scheme = when(id % 3 === 0, lit("https")).when(id % 3 === 1, lit("HTTPS"))
-      .otherwise(lit("Https"))
-    val hostBase = concat(lit("www."), col("source"), lit(".example.com"))
-    val host = when(id % 2 === 0, upper(hostBase)).otherwise(hostBase)
-    val port = when(id % 3 === 1, lit(":443")).otherwise(lit(""))
-    val slash = when(id % 2 === 0, lit("/")).otherwise(lit(""))
-    val qstr = when(id % 4 === 0, lit("?v=1&b=2"))
-      .when(id % 4 === 1, lit("?b=2&v=1&utm_source=tw"))
-      .when(id % 4 === 2, lit("?utm_campaign=x&v=1&b=2&gclid=99"))
-      .otherwise(lit("?v=1&ref=home&b=2"))
-    val frag = when(id % 5 === 0, lit("#sec2")).otherwise(lit(""))
-    val url = concat(scheme, lit("://"), host, port, lit("/docs/"),
-      (id % 400).cast("string"), slash, qstr, frag)
-    val withUrl = Tables.documents(s, d).select(id, url.as("url"))
-    val canon = withUrl.select(id, col("url"),
-      TextAnalysis.canonicalizeUrl(col("url")).as("canon_url"))
-    val w = Window.partitionBy(col("canon_url"))
-    Relational.sort(col("doc_id"))(canon.select(id, col("canon_url"),
-      min(id).over(w).as("canonical"),
-      (id =!= min(id).over(w)).as("is_dup")))
-  }
-
-  private def qLineDedup(s: SparkSession, d: String): DataFrame = {
-    // Corpus-level boilerplate line removal (MassiveText/RefinedWeb):
-    // planted nav/footer lines recur across documents and are dropped;
-    // unique lines survive in order. Counts shuffle 8-byte hashes; the
-    // drop is a broadcast anti-join on the small heavy-line dictionary.
-    val id = col("doc_id")
-    val b1 = when(id % 4 === 0, lit("Subscribe to our newsletter"))
-      .when(id % 4 === 1, lit("All rights reserved."))
-      .when(id % 4 === 2, lit("Cookie policy: accept"))
-      .otherwise(lit("Share this page"))
-    val b2 = when(id % 3 === 0, lit("Follow us on social media"))
-      .when(id % 3 === 1, lit("Back to top"))
-      .otherwise(lit("Contact support"))
-    val t = concat(b1, lit("\n"), col("text"), lit("\nDoc "),
-      id.cast("string"), lit(" footer\n"), b2)
-    val docs = Tables.documents(s, d).select(id, t.as("t"))
-    val out = graft.pipeline.TextAnalysis.dedupCorpusLines(
-      docs, "doc_id", "t", maxOccurrences = 10L)
-    Relational.sort(col("doc_id"))(out.select(id, col("n_lines"),
-      col("n_removed"), md5(col("clean_text")).as("clean_fp")))
-  }
-
-  private def qLexicalDiversity(s: SparkSession, d: String): DataFrame = {
-    // Vocabulary-richness quality signal: TTR + unigram entropy, 9-dp
-    // contributions decimal-summed (order-independent), per-doc window.
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Scoring.lexicalDiversity(Tables.documents(s, d),
-        "doc_id", "text"))
-  }
-
-  private def qLengthBuckets(s: SparkSession, d: String): DataFrame = {
-    // Pad-efficiency batching: power-of-two length buckets, sharded rank
-    // (8 shards here; the default 64 at cluster scale), seeded portable
-    // order — the whole assignment replayed in SQL.
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Packing.lengthBuckets(Tables.documents(s, d),
-        "doc_id", "text", shards = 8, seed = 7L))
-  }
-
-  private def qNovelty(s: SparkSession, d: String): DataFrame = {
-    // Trigram novelty vs an in-corpus reference slice (doc_id % 10 = 0):
-    // reference docs must score 0 by construction; the dictionary join
-    // moves md5 digests, never gram text.
-    val docs = Tables.documents(s, d)
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Scoring.ngramNovelty(docs,
-        docs.where(col("doc_id") % 10 === 0), "doc_id", "text", n = 3))
-  }
-
-  private def qJsonExtract(s: SparkSession, d: String): DataFrame = {
-    // Semi-structured props + a synthesized nested document: both
-    // extraction modes exercised — flatten (one from_json parse) for the
-    // real column, JSONPath get_json_object for nested object and array
-    // index — folded into per-type aggregates the oracle replays with
-    // DuckDB's json_extract.
-    import graft.pipeline.Json
-    val nested = concat(lit("{\"id\":"), col("event_id").cast("string"),
-      lit(",\"nest\":{\"u\":"), col("user_id").cast("string"),
-      lit("},\"arr\":[1,"), (col("event_id") % 5).cast("string"), lit("]}"))
-    val ev = Json.flatten(
-      Tables.events(s, d).select(col("event_type"), col("props"), nested.as("nj")),
-      "props", "k BIGINT", Seq("k" -> "k_typed"))
-    Relational.sort(col("event_type"))(ev.groupBy(col("event_type")).agg(
-      count(lit(1)).as("n"),
-      sum(col("k_typed")).as("sum_k"),
-      sum(Json.extractTyped(col("nj"), "$.nest.u", "long")).as("sum_u"),
-      sum(Json.extractTyped(col("nj"), "$.arr[1]", "long")).as("sum_arr"),
-      max(Json.extractTyped(col("props"), "$.k", "long")).as("max_k")))
-  }
-
-  private def qUnpivot(s: SparkSession, d: String): DataFrame = {
-    // Wide measures to long form via ONE Expand (the oracle is the
-    // four-way UNION ALL that would scan the table four times).
-    val li = Tables.lineitem(s, d).select(col("l_returnflag"),
-      dec(col("l_quantity")).as("quantity"),
-      dec(col("l_extendedprice")).as("extendedprice"),
-      dec(col("l_discount")).as("discount"),
-      dec(col("l_tax")).as("tax"))
-    val long = Aggregates.unpivot(li, Seq("l_returnflag"),
-      Seq("quantity", "extendedprice", "discount", "tax"), "metric", "value")
-    Relational.sort(col("l_returnflag"), col("metric"))(
-      long.groupBy(col("l_returnflag"), col("metric"))
-        .agg(sum(col("value")).cast("string").cast("double").as("sum_value")))
-  }
-
-  private def qDebounce(s: SparkSession, d: String): DataFrame = {
-    // Burst-collapse dedup per (user, type): only burst leaders survive
-    // (gap > 1 h from the previous event); micros surface so both
-    // engines compare the same integers.
-    val out = graft.pipeline.Events.burstLeaders(Tables.events(s, d),
-      Seq("user_id", "event_type"), "ts", gapSeconds = 3600L, tieCol = "event_id")
-    Relational.sort(col("event_id"))(out.select(col("event_id"),
-      col("user_id"), col("event_type"), graft.functions.Exprs.epochMicrosCivil(col("ts")).as("ts_us")))
-  }
-
-  private def qArgmax(s: SparkSession, d: String): DataFrame = {
-    // ARG_MAX/ARG_MIN through the JSON WIRE FORM (the DSL's newest fns
-    // must survive serialization like the rest): per return flag, the
-    // orderkey at the extreme extendedprice, ties broken by the value
-    // itself — deterministic under any partitioning, which bare max_by
-    // is not.
-    import graft.plans.QuerySpecs
-    import graft.plans.QuerySpecs.{AggFieldSpec, AggSpec, SortKeySpec}
-    val spec = AggSpec(List("l_returnflag"), List(
-      AggFieldSpec("ARG_MAX", Some("l_orderkey"), "top_key",
-        orderBy = Some(SortKeySpec("l_extendedprice"))),
-      AggFieldSpec("ARG_MIN", Some("l_orderkey"), "bottom_key",
-        orderBy = Some(SortKeySpec("l_extendedprice"))),
-      AggFieldSpec("COUNT", None, "n")))
-    val wire = QuerySpecs.readAggSpec(QuerySpecs.writeAggSpec(spec))
-    require(wire == spec, "ARG_MAX/ARG_MIN spec JSON round-trip is lossy")
-    Relational.sort(col("l_returnflag"))(
-      QuerySpecs.buildAggregate(wire)(Tables.lineitem(s, d)))
-  }
-
-  private def qIntervalMerge(s: SparkSession, d: String): DataFrame = {
-    // Overlap-merge of per-user time intervals (event start + a
-    // deterministic duration): maximal disjoint spans via the
-    // gaps-and-islands reduction — two key-sharded exchanges.
-    val iv = Tables.events(s, d).select(col("user_id"),
-      graft.functions.Exprs.epochMicrosCivil(col("ts")).as("s"),
-      (graft.functions.Exprs.epochMicrosCivil(col("ts")) +
-        ((col("event_id") % 7) + 1) * 600000000L).as("e"))
-    Relational.sort(col("user_id"), col("s"))(
-      graft.pipeline.Events.mergeIntervals(iv, Seq("user_id"), "s", "e"))
-  }
-
-  private def qTransitions(s: SparkSession, d: String): DataFrame = {
-    // First-order event-type transition counts (the Markov face): one
-    // user-sharded lead window, one pair aggregate.
-    Relational.sort(col("from_type"), col("to_type"))(
-      graft.pipeline.Events.transitions(Tables.events(s, d),
-        Seq("user_id"), "ts", "event_type", "event_id"))
-  }
-
-  private def qNtile(s: SparkSession, d: String): DataFrame = {
-    // Per-group equi-depth bin assignment (ntile k=5, total order via the
-    // (orderkey, linenumber) unique tie); membership pinned per bucket by
-    // exact integer sums, not 60k raw rows.
-    val li = Tables.lineitem(s, d)
-    val binned = graft.pipeline.Profile.quantileBins(li, "l_returnflag",
-      "l_extendedprice", 5, Seq("l_orderkey", "l_linenumber"))
-    Relational.sort(col("l_returnflag"), col("bucket"))(
-      binned.groupBy(col("l_returnflag"), col("bucket")).agg(
-        count(lit(1)).as("n"),
-        min(col("l_extendedprice")).as("lo"),
-        max(col("l_extendedprice")).as("hi"),
-        sum(col("l_orderkey")).as("sum_key")))
-  }
-
-  private def qFdCheck(s: SparkSession, d: String): DataFrame = {
-    // Functional-dependency audit suite: a true key (o_orderkey →
-    // o_custkey), a violated within-order dependency (l_orderkey →
-    // l_returnflag), and a violated demographic one (c_nationkey →
-    // c_mktsegment) — one report row each.
-    import graft.pipeline.Checks
-    val f1 = Checks.functionalDependency(Tables.orders(s, d),
-      Seq("o_orderkey"), "o_custkey", "orders_key")
-    val f2 = Checks.functionalDependency(Tables.lineitem(s, d),
-      Seq("l_orderkey"), "l_returnflag", "order_returnflag")
-    val f3 = Checks.functionalDependency(Tables.customer(s, d),
-      Seq("c_nationkey"), "c_mktsegment", "nation_segment")
-    Relational.sort(col("check_name"))(f1.unionByName(f2).unionByName(f3))
-  }
-
-  private def qRfm(s: SparkSession, d: String): DataFrame = {
-    // RFM customer segmentation over orders: integer recency days (µs
-    // arithmetic), exact count/decimal-sum metrics, global ntile scores
-    // with the customer key as tie-break — windows run on the aggregated
-    // customer table, never the fact scan.
-    Relational.sort(col("o_custkey"))(asDouble("monetary")(
-      graft.pipeline.Retail.rfm(Tables.orders(s, d), "o_custkey",
-        "o_orderdate", "o_totalprice", k = 5)))
-  }
-
-  private def qAbc(s: SparkSession, d: String): DataFrame = {
-    // ABC/Pareto revenue classification per part: cumulative DECIMAL
-    // share against scaled-integer cut lines (cum·100 ≤ total·80/95), so
-    // the class boundary is engine-exact.
-    Relational.sort(col("l_partkey"))(asDouble("revenue", "cum_revenue")(
-      graft.pipeline.Retail.abcClassify(Tables.lineitem(s, d),
-        "l_partkey", "l_extendedprice")))
-  }
-
-  private def qMannwhitney(s: SparkSession, d: String): DataFrame =
-    // Rank-sum test, returnflag A vs R over quantity: tie-aware 2·U kept
-    // integral (two_u), rank-biserial + tie-corrected z as fixed double
-    // dags rounded 6 dp. One distinct-value exchange, no per-row ranks.
-    graft.pipeline.Profile.mannWhitneyU(Tables.lineitem(s, d),
-      "l_returnflag", "l_quantity", "A", "R")
-
-  private def qKsTest(s: SparkSession, d: String): DataFrame =
-    // Two-sample KS distance over extendedprice: integer numerator
-    // max|n2·cum1 − n1·cum2| exact under any partitioning; one rounded
-    // double at the edge.
-    graft.pipeline.Profile.ksTest2(Tables.lineitem(s, d),
-      "l_returnflag", "l_extendedprice", "A", "R")
-
-  private def qItemSim(s: SparkSession, d: String): DataFrame = {
-    // Item-item cosine top-5 over order baskets — the recommender table;
-    // rank order uses the raw double cosine (identical bits from exact
-    // integers in both engines), rounded only at the edge.
-    Relational.sort(col("i1"), col("rank"))(
-      graft.pipeline.Association.itemPairCosine(Tables.lineitem(s, d),
-        "l_orderkey", "l_partkey", minPairCount = 2L, topK = 5))
-  }
-
-  private def qKfold(s: SparkSession, d: String): DataFrame = {
-    // Stratified 5-fold assignment over documents by language; the gate
-    // pins per-(stratum, fold) sizes AND membership (sum of ids) — exact
-    // balance is the property a hash-mod split can't give.
-    val folds = graft.pipeline.Sampling.stratifiedKFold(
-      Tables.documents(s, d), Seq("lang"), k = 5, seed = 42L, Seq("doc_id"))
-    Relational.sort(col("lang"), col("fold"))(
-      folds.groupBy(col("lang"), col("fold"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("sum_id")))
-  }
-
-  private def qTimeTravel(s: SparkSession, d: String): DataFrame = {
-    // Commit-log time travel end to end: three commits (base load, an
-    // append, a rewrite that REMOVES the base file), then every version
-    // read back AS OF and aggregated — a stale or leaky snapshot
-    // resolution (reading a removed directory, missing an added one)
-    // hash-mismatches against the oracle's per-version filters.
-    val base = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_tt_${ProcessHandle.current().pid()}")
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
-    Relational.fileOutput(o.where(col("o_orderkey") % 3 === 0), s"$base/f0")
-    Relational.commitVersion(base, 0, adds = Seq(s"$base/f0"), removes = Nil)
-    Relational.fileOutput(o.where(col("o_orderkey") % 3 === 1), s"$base/f1")
-    Relational.commitVersion(base, 1, adds = Seq(s"$base/f1"), removes = Nil)
-    Relational.fileOutput(
-      o.where(col("o_orderkey") % 3 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2), s"$base/f2")
-    Relational.commitVersion(base, 2,
-      adds = Seq(s"$base/f2"), removes = Seq(s"$base/f0"))
-    val perVersion = (0 to 2).map { v =>
-      Relational.readSnapshot(s, base, Some(v))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("o_totalprice"))).as("sum_price"))
-        .select(lit(v).as("version"), col("n"), col("sum_price"))
-    }
-    Relational.sort(col("version"))(asDouble("sum_price")(
-      perVersion.reduce(_ unionByName _)))
-  }
-
-  private def qPaths(s: SparkSession, d: String): DataFrame = {
-    // First-3-events user journeys: ordered per-user prefix, path counts
-    // across users.
-    Relational.sort(col("path"), col("depth"))(
-      graft.pipeline.Events.topPaths(Tables.events(s, d),
-        "user_id", "ts", "event_type", "event_id", depth = 3))
-  }
-
-  private def qMovingAvg(s: SparkSession, d: String): DataFrame = {
-    // Trailing-5 rolling stats per user over event values: decimal
-    // window sums, exact short heads; micros surface for the ts column.
-    val out = graft.pipeline.TimeSeries.movingStats(Tables.events(s, d),
-      "user_id", "ts", "value", "event_id", lookback = 5)
-    Relational.sort(col("user_id"), col("event_id"))(
-      out.select(col("user_id"), col("event_id"),
-        graft.functions.Exprs.epochMicrosCivil(col("ts")).as("ts_us"), round(col("win_mean"), 6).as("win_mean"),
-        col("win_n"), col("win_min"), col("win_max")))
-  }
-
-  private def qOhlc(s: SparkSession, d: String): DataFrame = {
-    // Daily OHLC/VWAP bars per event type: open/close are struct
-    // ARG_MIN/ARG_MAX by (µs, price) in ONE aggregation pass.
-    val out = graft.pipeline.TimeSeries.ohlcBars(Tables.events(s, d),
-      "event_type", "ts", "value", "event_id", unit = "day")
-    Relational.sort(col("event_type"), col("bucket"))(
-      out.withColumn("bucket", date_format(col("bucket"), "yyyy-MM-dd"))
-        .withColumn("vwap", round(col("vwap"), 6)))
-  }
-
-  private def qTopNOther(s: SparkSession, d: String): DataFrame = {
-    // Cardinality-capped reporting dimension: top-10 parts by revenue,
-    // tail folded into OTHER; the kept set is broadcast, facts summed
-    // exactly once.
-    Relational.sort(col("category"))(asDouble("measure_sum")(
-      graft.operators.Aggregates.topNOther(Tables.lineitem(s, d),
-        "l_partkey", "l_extendedprice", n = 10)))
-  }
-
-  private def qPropTest(s: SparkSession, d: String): DataFrame =
-    // Two-proportion z: flag A vs R, "success" = quantity above 25.
-    graft.pipeline.Profile.propTest2(Tables.lineitem(s, d),
-      "l_returnflag", col("l_quantity") > 25, "A", "R")
-
-  private def qSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    // Schema evolution across commits: v1 adds a column; the merged
-    // time-travel scan reads it as NULL from the v0 file — grouped so a
-    // wrong NULL-fill or a dropped file hash-mismatches.
-    val base = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_se_${ProcessHandle.current().pid()}")
-    val o = Tables.orders(s, d)
-    Relational.fileOutput(o.where(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_totalprice")), s"$base/f0")
-    Relational.commitVersion(base, 0, adds = Seq(s"$base/f0"), removes = Nil)
-    Relational.fileOutput(o.where(col("o_orderkey") % 2 === 1)
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority")),
-      s"$base/f1")
-    Relational.commitVersion(base, 1, adds = Seq(s"$base/f1"), removes = Nil)
-    val snap = Relational.readSnapshot(s, base, mergeSchema = true)
-    Relational.sort(col("prio"))(asDouble("sum_price")(
-      snap.groupBy(coalesce(col("o_orderpriority"), lit("<v0>")).as("prio"))
-        .agg(count(lit(1)).as("n"), sum(dec(col("o_totalprice"))).as("sum_price"))))
-  }
-
-  private def qPmi(s: SparkSession, d: String): DataFrame = {
-    // Adjacent-bigram PMI collocations (minCount 5); ln rounds to 6 dp at
-    // the output edge per the q_tfidf convention.
-    Relational.sort(col("w1"), col("w2"))(
-      graft.pipeline.Scoring.bigramPmi(Tables.documents(s, d),
-        "doc_id", "text", minCount = 5))
-  }
-
-  private def qScd2(s: SparkSession, d: String): DataFrame = {
-    // Four-phase log: initial load, price update, delete wave, re-insert
-    // after delete — versions with open/closed validity, one lead window.
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
-    val log = o.withColumn("seq", lit(1L)).withColumn("op", lit("I"))
-      .unionByName(o.where(col("o_orderkey") % 5 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-        .withColumn("seq", lit(2L)).withColumn("op", lit("U")))
-      .unionByName(o.where(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", lit(null).cast("double"))
-        .withColumn("seq", lit(3L)).withColumn("op", lit("D")))
-      .unionByName(o.where(col("o_orderkey") % 35 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 1)
-        .withColumn("seq", lit(4L)).withColumn("op", lit("I")))
-    Relational.sort(col("o_orderkey"), col("valid_from"))(
-      Relational.scd2History(log, Seq("o_orderkey"), "seq", "op"))
-  }
-
-  private def qPitJoin(s: SparkSession, d: String): DataFrame = {
-    // Point-in-time lookup against the same four-phase SCD2 history as
-    // q_scd2: each synthetic fact (seq = 1 + key % 4) picks up the
-    // version valid at its sequence point; facts inside a deleted
-    // window survive with NULL payload — the left-join semantics a
-    // warehouse PIT read needs.
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
-    val log = o.withColumn("seq", lit(1L)).withColumn("op", lit("I"))
-      .unionByName(o.where(col("o_orderkey") % 5 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-        .withColumn("seq", lit(2L)).withColumn("op", lit("U")))
-      .unionByName(o.where(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", lit(null).cast("double"))
-        .withColumn("seq", lit(3L)).withColumn("op", lit("D")))
-      .unionByName(o.where(col("o_orderkey") % 35 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 1)
-        .withColumn("seq", lit(4L)).withColumn("op", lit("I")))
-    val hist = Relational.scd2History(log, Seq("o_orderkey"), "seq", "op")
-      .withColumnRenamed("o_totalprice", "dim_price")
-    val facts = Tables.orders(s, d).select(col("o_orderkey"),
-      (lit(1L) + col("o_orderkey") % 4).as("fact_seq"))
-    Relational.sort(col("o_orderkey"))(
-      Relational.pointInTimeJoin(facts, hist, Seq("o_orderkey"), "fact_seq")
-        .select(col("o_orderkey"), col("fact_seq"), col("dim_price"),
-          col("valid_from"), col("dim_price").isNotNull.as("matched")))
-  }
-
-  private def qLinkage(s: SparkSession, d: String): DataFrame = {
-    // Fellegi-Sunter linkage of customers against a deterministically
-    // dirtied copy; constant log-weights rounded 6 dp and decimal-
-    // summed. Blocking key = the case-NORMALIZED name: robust to the
-    // case perturbation (true matches always share a block) and
-    // near-linear in candidates — the first cut blocked on nation
-    // alone (25 values), whose block sizes grow with the data and make
-    // candidate pairs QUADRATIC (measured 63x wall at 10x data); the
-    // normalized-name key keeps per-block sides bounded by the
-    // duplication factor, the posture every dedup operator here takes.
-    val c = Tables.customer(s, d)
-    val dirty = c.select(lower(col("c_name")).as("block"),
-      col("c_custkey").as("r_id"),
-      when(col("c_custkey") % 4 === 0, upper(col("c_name")))
-        .otherwise(col("c_name")).as("c_name"),
-      when(col("c_custkey") % 3 === 0, col("c_acctbal") + 1000)
-        .otherwise(col("c_acctbal")).as("c_acctbal"),
-      col("c_mktsegment"))
-    val leftT = c.select(lower(col("c_name")).as("block"), col("c_custkey"),
-      col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    val scored = graft.pipeline.Dedup.linkageScores(leftT, dirty,
-      "block", "c_custkey", "r_id", Seq(
-        ("c_name", 0.95, 0.001), ("c_acctbal", 0.9, 0.001),
-        ("c_mktsegment", 0.95, 0.2)))
-    Relational.sort(col("lid"), col("rid"))(
-      scored.where(col("score") > 0)
-        .select(col("lid"), col("rid"), col("ag_c_name"), col("ag_c_acctbal"),
-          col("ag_c_mktsegment"), round(col("score"), 6).as("score")))
-  }
-
-  private def qBenford(s: SparkSession, d: String): DataFrame =
-    // First-significant-digit audit of order totals: digits from the
-    // exact decimal digit string, never log10/power.
-    Relational.sort(col("digit"))(
-      graft.pipeline.Checks.benfordAudit(Tables.orders(s, d), "o_totalprice"))
-
-  private def qDateDim(s: SparkSession, d: String): DataFrame =
-    // Calendar spine 1995-1998 (the data's date domain): ISO dow,
-    // weekend/month-boundary flags — replayed from generate_series.
-    Relational.sort(col("date"))(
-      Relational.dateDimension(s, "1995-01-01", "1998-12-31"))
-
-  private def qSkyline(s: SparkSession, d: String): DataFrame = {
-    // Pareto frontier of parts on (revenue, quantity): distinct-x
-    // prefix-max reduction, no all-pairs; ties at a frontier point all
-    // survive.
-    val perPart = Tables.lineitem(s, d)
-      .groupBy(col("l_partkey"))
-      .agg(sum(dec(col("l_extendedprice"))).as("revenue"),
-        sum(dec(col("l_quantity"))).as("qty"))
-    Relational.sort(col("l_partkey"))(asDouble("revenue", "qty")(
-      graft.pipeline.Profile.skyline2d(perPart, "revenue", "qty")))
-  }
-
-  private def qFingerprint(s: SparkSession, d: String): DataFrame = {
-    // Replication audit: the base table, a reordered/repartitioned
-    // replica (MUST fingerprint equal — order independence is the whole
-    // point), and a one-cent-perturbed replica (MUST differ).
-    import graft.pipeline.Checks
-    val base = Tables.lineitem(s, d).select(col("l_orderkey"),
-      col("l_linenumber"), col("l_returnflag"),
-      dec(col("l_extendedprice")).as("price"))
-    val shuffled = base.orderBy(col("l_returnflag")).repartition(7)
-    val perturbed = base.withColumn("price",
-      when(col("l_orderkey") % 1000 === 0,
-        col("price") + lit(BigDecimal("0.01"))).otherwise(col("price")))
-    val cols = Seq("l_orderkey", "l_linenumber", "l_returnflag", "price")
-    def tag(name: String, df: DataFrame) =
-      Checks.tableFingerprint(df, cols).select(lit(name).as("replica"),
-        col("n_rows"), col("fingerprint"))
-    val out = tag("base", base)
-      .unionByName(tag("reordered", shuffled))
-      .unionByName(tag("perturbed", perturbed))
-    val fps = out.collect().map(r => (r.getString(0), r.getString(2))).toMap
-    require(fps("base") == fps("reordered"),
-      "fingerprint must be order/partitioning independent")
-    require(fps("base") != fps("perturbed"),
-      "fingerprint must detect a one-cent perturbation")
-    Relational.sort(col("replica"))(out)
-  }
-
-  private def qLinreg(s: SparkSession, d: String): DataFrame = {
-    // Group-wise OLS from exact decimal moments — slope/intercept/r²
-    // bit-identical to the oracle's replay of the same expression shape.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.linearFit(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice"))
-  }
-
-  private def qPeriodOverPeriod(s: SparkSession, d: String): DataFrame = {
-    // Daily per-type value sums with previous-observed-period deltas.
-    val out = graft.pipeline.Events.periodOverPeriod(
-      Tables.events(s, d), "event_type", "ts", "value", unit = "day")
-    Relational.sort(col("event_type"), col("day"))(
-      out.select(col("event_type"),
-        date_format(col("bucket"), "yyyy-MM-dd").as("day"),
-        col("cur"), col("prev"), col("change"), col("pct_change")))
-  }
-
-  private def qFunnelWindowed(s: SparkSession, d: String): DataFrame = {
-    // Time-bounded funnel: each conversion must land within 24 h of the
-    // previous frontier — the abandonment-cutoff variant.
-    Relational.sort(col("stage"))(
-      graft.pipeline.Events.funnel(Tables.events(s, d),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"),
-        maxGapSeconds = Some(86400L)))
-  }
-
-  private def qInvertedIndex(s: SparkSession, d: String): DataFrame = {
-    // Posting-list build + conjunctive AND-query: docs containing all
-    // three terms; the probe aggregates only the query terms' postings.
-    val idx = graft.pipeline.Index.invertedIndex(
-      Tables.documents(s, d), "doc_id", "text")
-    Relational.sort(col("doc"))(
-      graft.pipeline.Index.conjunctiveQuery(idx, Seq("spark", "window", "merge")))
-  }
-
-  private def qQuantileNorm(s: SparkSession, d: String): DataFrame = {
-    // Empirical-CDF normalization (cume_dist semantics, ties share a
-    // value) via the distributed distinct-value rank — no per-row window.
-    Relational.sort(col("o_orderkey"))(
-      graft.pipeline.Profile.quantileNormalize(Tables.orders(s, d),
-        "o_totalprice", Seq("o_orderkey")))
-  }
-
-  private def qWeightedSample(s: SparkSession, d: String): DataFrame = {
-    // Importance sampling: keep probability ∝ document length (capped at
-    // 1.0); the oracle replays bucket and weight arithmetic verbatim.
-    val docs = Tables.documents(s, d)
-      .withColumn("w", least(col("n_chars").cast("double") / lit(400.0), lit(1.0)))
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Sampling.weightedBernoulli(docs, Seq("doc_id"), "w")
-        .select("doc_id", "lang", "n_chars"))
-  }
-
-  private def qMadOutliers(s: SparkSession, d: String): DataFrame = {
-    // Robust per-group outlier summary; lower-median convention keeps
-    // every statistic an actual data value (bit-portable, no
-    // interpolation).
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.madOutliers(Tables.lineitem(s, d),
-        "l_returnflag", "l_extendedprice", k = 3.0))
-  }
-
-  private def qSetsimJoin(s: SparkSession, d: String): DataFrame = {
-    // Prefix-filtered exact token-set Jaccard ≥ 0.95; the oracle is the
-    // ALL-PAIRS join, so equality proves the prefix filter lost nothing.
-    Relational.sort(col("id1"), col("id2"))(
-      graft.pipeline.Dedup.prefixFilterJaccardPairs(Tables.documents(s, d),
-        "doc_id", "text", threshold = 0.95))
-  }
-
-  private def qSetsimClusters(s: SparkSession, d: String): DataFrame =
-    // Output-linear mode of the same τ=0.95 set-similarity join: member
-    // pairs are never materialized — connectivity is decided on the
-    // exact-set-collapsed representative graph, output is (id, cluster)
-    // per clustered doc. The oracle is the pair CTEs + min-label
-    // components, so equality proves the rep-graph shortcut loses
-    // nothing vs pairs-then-cluster.
-    Relational.sort(col("id"))(
-      graft.pipeline.Dedup.prefixFilterJaccardClusters(Tables.documents(s, d),
-        "doc_id", "text", threshold = 0.95))
-
-  private def qTriangles(s: SparkSession, d: String): DataFrame = {
-    // Single-space co-occurrence graph from orders (custkey and orderkey
-    // folded into one 97-id space) — per-node triangle participation.
-    val o = Tables.orders(s, d)
-    val edges = o.select(pmod(col("o_custkey"), lit(97L)).as("x"),
-      pmod(col("o_orderkey"), lit(97L)).as("y"))
-    Relational.sort(col("node"))(
-      graft.pipeline.Graph.triangleCount(edges, "x", "y"))
-  }
-
-  private def qDupSpans(s: SparkSession, d: String): DataFrame = {
-    // 5-token duplicated-span stats per document (exact-substring-dedup
-    // family); spans are hash-keyed, the oracle replays them as raw text.
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Dedup.duplicatedSpans(Tables.documents(s, d),
-        "doc_id", "text", n = 5))
-  }
-
-  /** q_unigram_train — unigram-LM (SentencePiece-style) tokenizer
-    * training, Bpe's sibling: 3 Viterbi-EM rounds over the distinct-word
-    * table at maxPieceLen=4. The integer-cost objective (fewest pieces *
-    * 2^52 - frequency mass, reversed-length tie-break) has no
-    * log-probability doubles, so the DuckDB oracle replays ALL THREE
-    * rounds exactly — enumerating every segmentation per word with a
-    * recursive CTE and ranking by (cost, list_reverse(lens)). */
-  private def qUnigramTrain(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("piece"))(
-      graft.pipeline.Unigram.train(Tables.documents(s, d), "text",
-        maxPieceLen = 4, rounds = 3))
-
-  /** Shared input for the full-substring-dedup gates: documents plus
-    * PLANTED LONG DUPLICATES — docs 0-4 replanted verbatim under
-    * doc_id+10000000, so whole documents (up to ~100 tokens) repeat
-    * corpus-wide and arbitrary-length spans must surface. */
-  private def dupSpansCorpus(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    docs.unionByName(docs.filter(col("doc_id") < 5)
-      .select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text")))
-  }
-
-  /** q_dup_spans_full — FULL Lee et al. exact substring dedup: MAXIMAL
-    * duplicated token spans (k=8) per document over documents + planted
-    * whole-doc duplicates. The DuckDB oracle replays the entire chain:
-    * duplicated 8-grams -> per-doc gaps-and-islands merge -> maximal
-    * intervals. Raw-text windows here (exact string replay); the 8-byte
-    * fingerprint mode is spec-asserted identical (DupSpansFullSpec). */
-  private def qDupSpansFull(s: SparkSession, d: String): DataFrame =
-    Relational.sort(col("doc_id"), col("span_start"))(
-      graft.pipeline.Dedup.duplicatedSpansMaximal(
-        dupSpansCorpus(s, d), "doc_id", "text", k = 8))
-
-  /** q_dup_longest — the escalation ladder: longest exact repeated token
-    * window (>= 8) corpus-wide, found with O(log maxLen) fingerprint-hash
-    * probe jobs; the oracle computes the true maximum by enumerating
-    * every >= 8-token substring (tractable at oracle scale, and exact —
-    * a ladder/oracle mismatch would expose either a probe bug or a hash
-    * collision). */
-  private def qDupLongest(s: SparkSession, d: String): DataFrame = {
-    val len = graft.pipeline.Dedup.longestRepeatedSpanLength(
-      dupSpansCorpus(s, d), "doc_id", "text", k = 8)
-    s.range(1).select(lit(len).as("max_dup_len"))
-  }
-
-  private def qDsir(s: SparkSession, d: String): DataFrame = {
-    // DSIR importance resampling: hashed-bigram log-likelihood ratio of a
-    // target domain (sources src0-2) vs the whole pool, top-quarter kept.
-    // Fully replayable: portable token keys, integer bucket scatter,
-    // Laplace-smoothed exact counts, ln-at-9dp DECIMAL sums, and the
-    // keep rule is the exact integer comparison rank·4 < n — the oracle
-    // re-derives every stage in SQL.
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"), col("source"))
-    val target = docs.where(col("source").isin("src0", "src1", "src2"))
-    val scored = Dsir.importanceScores(docs, target, "doc_id", "text", buckets = 512)
-    Dsir.selectTopFraction(scored, "doc_id", num = 1, den = 4)
-      .select(col("doc_id"), col("n_feats"),
-        col("score").cast("double").as("score"), col("rank"), col("keep"))
-      .orderBy("doc_id")
-  }
-
-  private def qQualityClassifier(s: SparkSession, d: String): DataFrame = {
-    // Hashed-linear classifier inference: one codegen'd projection, zero
-    // shuffles; integer mills accumulation makes the fold order-exact.
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Scoring.hashedLinearScore(Tables.documents(s, d),
-        "doc_id", "text", dims = 64, threshold = -0.2))
-  }
-
-  private def qHistogramEqdepth(s: SparkSession, d: String): DataFrame = {
-    // Exact equi-depth (quantile-binned) histogram, 8 buckets; bucket of
-    // the rank-r row is (r−1)·8 div n — ANSI integer arithmetic the
-    // oracle replays with one row_number window.
-    Relational.sort(col("bucket"))(
-      graft.pipeline.Profile.histogramEquiDepth(Tables.lineitem(s, d),
-        "l_extendedprice", Seq("l_orderkey", "l_linenumber"), k = 8))
-  }
-
-  private def qCorr(s: SparkSession, d: String): DataFrame = {
-    // Exact Pearson r + sample covariance from decimal moment sums —
-    // order-independent, so bit-identical under any partitioning and
-    // exactly replayed from the same six moments.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.corrExact(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice"))
-  }
-
-  private def qFunnel(s: SparkSession, d: String): DataFrame = {
-    // Three-stage min-time-frontier funnel over the event log; strict-after
-    // conversion at µs precision (events.ts is truncated to micros on
-    // read), replayed by the oracle as a CTE chain at epoch_ns//1000.
-    Relational.sort(col("stage"))(
-      graft.pipeline.Events.funnel(Tables.events(s, d),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase")))
-  }
-
-  private def qCohort(s: SparkSession, d: String): DataFrame = {
-    // Weekly cohort retention; cohort formatted to a date string so both
-    // engines hash the same representation (q_resample convention).
-    val out = graft.pipeline.Events.cohortRetention(
-      Tables.events(s, d), "user_id", "ts", unit = "week")
-    Relational.sort(col("cohort"), col("offset"))(
-      out.select(date_format(col("cohort"), "yyyy-MM-dd").as("cohort"),
-        col("offset"), col("users")))
-  }
-
-  /** The final CDC image both cdc gates converge to — replayed with plain
-    * CASE/WHERE arithmetic over the raw table. */
-  private val CdcFinalImageOracle: String =
-    """SELECT o_orderkey, o_orderstatus,
-      |CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice * 2
-      |     ELSE o_totalprice END AS o_totalprice
-      |FROM orders WHERE o_orderkey % 7 <> 0
-      |UNION ALL
-      |SELECT CAST(1000000000 AS BIGINT), 'N', CAST(9.5 AS DOUBLE)
-      |ORDER BY o_orderkey""".stripMargin
-
-  /** Shared CDC fixture: base image + the two halves of the change log.
-    * Every 5th key gets an Update (doubled price — exact in FP) at seq 1;
-    * every 7th a Delete at seq 2 (keys divisible by 35 see U then D — the
-    * D must win); one Insert of a brand-new key. Used by q_cdc_apply
-    * (one-shot log application) and q_stream_cdc (incremental streaming
-    * application) so the two faces provably process one log. */
-  private def cdcFixture(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
-      col("o_totalprice"))
-    val updates = o.where(col("o_orderkey") % 5 === 0)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-      .withColumn("seq", lit(1L)).withColumn("op", lit("U"))
-    val deletes = o.where(col("o_orderkey") % 7 === 0)
-      .withColumn("seq", lit(2L)).withColumn("op", lit("D"))
-    val insert = s.range(1).select(lit(1000000000L).as("o_orderkey"),
-      lit("N").as("o_orderstatus"), lit(9.5).as("o_totalprice"),
-      lit(1L).as("seq"), lit("I").as("op"))
-    (o, updates, deletes.unionByName(insert))
-  }
-
-  private def qCdcApply(s: SparkSession, d: String): DataFrame = {
-    val (o, updates, rest) = cdcFixture(s, d)
-    val merged = Relational.applyChangeLog(o, updates.unionByName(rest),
-      Seq("o_orderkey"), "seq", "op")
-    merged.orderBy("o_orderkey")
-  }
-
-  private def qStreamCdc(s: SparkSession, d: String): DataFrame = {
-    // TRUE streaming CDC materialization: phase 1 streams the updates,
-    // phase 2 stages deletes+insert and resumes from the checkpoint; the
-    // final image must equal the one-shot applyChangeLog — gated against
-    // the SAME oracle as q_cdc_apply.
-    val work = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_cdc_${ProcessHandle.current().pid()}")
-    val (o, updates, rest) = cdcFixture(s, d)
-    graft.streaming.Streams.cdcStreamGate(s, work, o, Seq("o_orderkey"),
-      updates, rest).orderBy("o_orderkey")
-  }
-
-  private def qFuzzyJoin(s: SparkSession, d: String): DataFrame = {
-    // Length-band-blocked Levenshtein pairs over distinct part names —
-    // recall-exact blocking (dist >= |len diff|), so the all-pairs
-    // oracle is the same set.
-    val p = Tables.part(s, d)
-    Relational.sort(col("s1"), col("s2"))(
-      graft.pipeline.Dedup.editDistancePairs(p, "p_name", maxDist = 2))
-  }
-
-  private def qPagerank(s: SparkSession, d: String): DataFrame = {
-    // Two-layer link graph derived from lineitem (supplier → part-bucket →
-    // order-bucket) so rank propagates multiple hops; 3 integer-arithmetic
-    // iterations, every one re-derived exactly by the oracle.
-    val li = Tables.lineitem(s, d)
-    val e1 = li.select(col("l_suppkey").as("src"),
-      (pmod(col("l_partkey"), lit(50L)) + 100000L).as("dst"))
-    val e2 = li.select((pmod(col("l_partkey"), lit(50L)) + 100000L).as("src"),
-      (pmod(col("l_orderkey"), lit(20L)) + 200000L).as("dst"))
-    val edges = e1.unionAll(e2).distinct()
-    Relational.sort(col("id"))(
-      graft.pipeline.Graph.pageRank(edges, "src", "dst", PagerankIters))
-  }
-  private val PagerankIters = 3
-
-  /** Unrolled integer-PageRank oracle: r0..rN as MATERIALIZED CTEs (the
-    * chain references each r$i twice; materialization keeps DuckDB's
-    * evaluation linear, as with the BPE chain). */
-  private def pagerankOracle(iters: Int): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""r$i AS MATERIALIZED (SELECT n.id,
-         |  CAST(150000000000 + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS pr
-         |  FROM n LEFT JOIN (SELECT e.dst AS id, SUM(r.pr // od.od) AS c
-         |    FROM e JOIN od USING (src) JOIN r${i - 1} r ON r.id = e.src
-         |    GROUP BY 1) s ON n.id = s.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT l_suppkey AS src, 100000 + l_partkey % 50 AS dst FROM lineitem
-       |  UNION ALL
-       |  SELECT 100000 + l_partkey % 50, 200000 + l_orderkey % 20 FROM lineitem)),
-       |od AS MATERIALIZED (SELECT src, COUNT(*) AS od FROM e GROUP BY 1),
-       |n AS MATERIALIZED (SELECT DISTINCT id FROM (
-       |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-       |r0 AS MATERIALIZED (SELECT id, CAST(1000000000000 AS BIGINT) AS pr FROM n),
-       |$rounds
-       |SELECT id, pr FROM r$iters ORDER BY id""".stripMargin
-  }
-
-  /** Learned-merge memo per sfDir: q_bpe_train and q_bpe_encode share one
-    * training run inside a JVM (the merge list is 8 tiny tuples). */
-  private val bpeMergesCache =
-    scala.collection.mutable.Map.empty[String, Seq[(String, String, Long)]]
-  private def bpeMerges(s: SparkSession, d: String): Seq[(String, String, Long)] =
-    synchronized {
-      bpeMergesCache.getOrElseUpdate(d,
-        graft.pipeline.Bpe.trainMerges(Tables.documents(s, d), "text", BpeNumMerges))
-    }
-  private val BpeNumMerges = 8
-
-  private def qBpeTrain(s: SparkSession, d: String): DataFrame = {
-    // trains FRESH on every call (no memo read): this gate's bench row
-    // times the training loop itself, not a cache dump — the memo is for
-    // q_bpe_encode, whose one-time tokenizer build is a prerequisite,
-    // not the thing measured
-    import s.implicits._
-    val ms = graft.pipeline.Bpe.trainMerges(
-      Tables.documents(s, d), "text", BpeNumMerges)
-    synchronized { bpeMergesCache(d) = ms }
-    ms.zipWithIndex
-      .map { case ((a, b, c), i) => (i, a, b, c) }
-      .toDF("merge_rank", "a", "b", "cnt").orderBy("merge_rank")
-  }
-
-  /** Learned-merge memo per sfDir: q_wordpiece_train and
-    * q_wordpiece_fertility share one training run inside a JVM. */
-  private val wpMergesCache =
-    scala.collection.mutable.Map.empty[String, Seq[(String, String, Long, Long, Long, Double)]]
-  private def wpMerges(s: SparkSession, d: String): Seq[(String, String, Long, Long, Long, Double)] =
-    synchronized {
-      wpMergesCache.getOrElseUpdate(d,
-        graft.pipeline.WordPiece.trainMerges(Tables.documents(s, d), "text", WpNumMerges))
-    }
-  private val WpNumMerges = 8
-
-  private def qWordpieceTrain(s: SparkSession, d: String): DataFrame = {
-    // trains FRESH on every call — the bench row times the likelihood-
-    // scored training loop itself (the memo is for q_wordpiece_fertility)
-    import s.implicits._
-    val ms = graft.pipeline.WordPiece.trainMerges(
-      Tables.documents(s, d), "text", WpNumMerges)
-    synchronized { wpMergesCache(d) = ms }
-    ms.zipWithIndex
-      .map { case ((a, b, c, ca, cb, sc), i) =>
-        (i, a, b, a + b.stripPrefix("##"), c, ca, cb, sc) }
-      .toDF("merge_rank", "a", "b", "merged", "cnt", "ca", "cb", "score")
-      .orderBy("merge_rank")
-  }
-
-  private def qWordpieceFertility(s: SparkSession, d: String): DataFrame = {
-    // equal-budget, equal-corpus fertility: WordPiece vs BPE at 8 merges
-    // on the same #-stripped corpus; fertility = pieces/word as the one
-    // double division over exact long counts (replays bit-identically)
-    import s.implicits._
-    val docs = Tables.documents(s, d)
-    val wp = wpMerges(s, d).map(m => (m._1, m._2))
-    val bp = graft.pipeline.WordPiece
-      .bpeMergesOnCleanCorpus(docs, "text", WpNumMerges).map(m => (m._1, m._2))
-    val (w1, p1) = graft.pipeline.WordPiece.fertility(docs, "text", wp)
-    val (w2, p2) = graft.pipeline.WordPiece.bpeFertility(docs, "text", bp)
-    Seq(("bpe", w2, p2, p2.toDouble / w2.toDouble),
-        ("wordpiece", w1, p1, p1.toDouble / w1.toDouble))
-      .toDF("tokenizer", "n_words", "n_pieces", "fertility")
-      .orderBy("tokenizer")
-  }
-
-  private def qBpeEncode(s: SparkSession, d: String): DataFrame = {
-    val ms = bpeMerges(s, d).map(m => (m._1, m._2))
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Bpe.encode(Tables.documents(s, d), "doc_id", "text", ms))
-  }
-
-  // --- BPE oracle generation: the training loop unrolls into chained
-  // CTEs. Token brackets are U+0001/U+0002 (stripped from the text on
-  // both sides), word separator U+0003; DuckDB's left-to-right
-  // non-overlapping replace() over the bracketed string IS the greedy
-  // merge fold, and pair counting is per position (overlapping bigrams),
-  // exactly the Spark side's transform+explode.
-  private val B1 = "\u0001"; private val B2 = "\u0002"; private val B3 = "\u0003"
-
-  /** Shared CTE chain s0..sM over DISTINCT words with b$i = round-i best
-    * pair — used verbatim by both BPE oracles. */
-  private def bpeTrainCtes(m: Int, strip: String = "", prefix: String = ""): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""${prefix}tx AS (SELECT doc_id, regexp_replace(text, '[$strip$B1$B2]', '', 'g') AS text FROM documents),
-         |${prefix}wd AS (SELECT unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word FROM ${prefix}tx),
-         |${prefix}s0 AS MATERIALIZED (SELECT '$B1' || array_to_string(regexp_extract_all(word, '.'), '$B2$B1') || '$B2' AS w,
-         |  COUNT(*) AS cnt FROM ${prefix}wd GROUP BY 1)""".stripMargin)
-    (0 until m).foreach { i =>
-      sb.append(",\n")
-      sb.append(
-        s"""${prefix}p$i AS (SELECT p.a AS a, p.b AS b, CAST(SUM(cnt) AS BIGINT) AS c FROM (
-           |  SELECT unnest(list_transform(range(1, len(l)), j -> struct_pack(a := l[j], b := l[j+1]))) AS p, cnt
-           |  FROM (SELECT string_split(trim(w, '$B1$B2'), '$B2$B1') AS l, cnt FROM ${prefix}s$i)) GROUP BY 1, 2),
-           |${prefix}b$i AS MATERIALIZED (SELECT a, b, c FROM ${prefix}p$i ORDER BY c DESC, a, b LIMIT 1),
-           |${prefix}s${i + 1} AS MATERIALIZED (SELECT replace(w,
-           |  '$B1' || (SELECT a FROM ${prefix}b$i) || '$B2$B1' || (SELECT b FROM ${prefix}b$i) || '$B2',
-           |  '$B1' || (SELECT a FROM ${prefix}b$i) || (SELECT b FROM ${prefix}b$i) || '$B2') AS w, cnt FROM ${prefix}s$i)""".stripMargin)
-    }
-    sb.toString
-  }
-
-  /** q_wordpiece_train oracle CTEs: the [[bpeTrainCtes]] bracket-string
-    * machinery with (a) `#` stripped alongside the bracket alphabet, (b)
-    * word-internal tokens `##`-prefixed at init, (c) per-round selection
-    * by the likelihood-gain score cnt/(ca*cb) — one double division over
-    * exact BIGINT counts, the same dag the Spark side computes — and (d)
-    * the merged token `a || strip_##(b)`. Final round table: ws$m. */
-  private def wpTrainCtes(m: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""wtx AS (SELECT doc_id, regexp_replace(text, '[#$B1$B2]', '', 'g') AS text FROM documents),
-         |wwd AS (SELECT unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word FROM wtx),
-         |ws0 AS MATERIALIZED (SELECT '$B1' || array_to_string(
-         |    list_transform(regexp_extract_all(word, '.'),
-         |      (c, j) -> CASE WHEN j = 1 THEN c ELSE '##' || c END), '$B2$B1') || '$B2' AS w,
-         |  COUNT(*) AS cnt FROM wwd GROUP BY 1)""".stripMargin)
-    (0 until m).foreach { i =>
-      sb.append(",\n")
-      sb.append(
-        s"""wu$i AS MATERIALIZED (SELECT t, CAST(SUM(cnt) AS BIGINT) AS u FROM (
-           |  SELECT unnest(string_split(trim(w, '$B1$B2'), '$B2$B1')) AS t, cnt FROM ws$i)
-           |  GROUP BY 1),
-           |wp$i AS (SELECT p.a AS a, p.b AS b, CAST(SUM(cnt) AS BIGINT) AS c FROM (
-           |  SELECT unnest(list_transform(range(1, len(l)), j -> struct_pack(a := l[j], b := l[j+1]))) AS p, cnt
-           |  FROM (SELECT string_split(trim(w, '$B1$B2'), '$B2$B1') AS l, cnt FROM ws$i)) GROUP BY 1, 2),
-           |wb$i AS MATERIALIZED (SELECT p.a, p.b, p.c, ua.u AS ca, ub.u AS cb,
-           |  CAST(p.c AS DOUBLE) / (CAST(ua.u AS DOUBLE) * CAST(ub.u AS DOUBLE)) AS score
-           |  FROM wp$i p JOIN wu$i ua ON ua.t = p.a JOIN wu$i ub ON ub.t = p.b
-           |  ORDER BY score DESC, p.a, p.b LIMIT 1),
-           |ws${i + 1} AS MATERIALIZED (SELECT replace(w,
-           |  '$B1' || (SELECT a FROM wb$i) || '$B2$B1' || (SELECT b FROM wb$i) || '$B2',
-           |  '$B1' || (SELECT a FROM wb$i) || regexp_replace((SELECT b FROM wb$i), '^##', '') || '$B2') AS w, cnt FROM ws$i)""".stripMargin)
-    }
-    sb.toString
-  }
-
-  private def wpTrainOracle(m: Int): String =
-    s"""WITH ${wpTrainCtes(m)}
-       |SELECT * FROM (
-       |${(0 until m).map(i =>
-           s"SELECT $i AS merge_rank, a, b, a || regexp_replace(b, '^##', '') AS merged, " +
-           s"c AS cnt, ca, cb, score FROM wb$i")
-         .mkString("\nUNION ALL ")}
-       |) ORDER BY merge_rank""".stripMargin
-
-  /** q_wordpiece_fertility oracle: both tokenizers' final round tables at
-    * the same budget on the same #-stripped corpus; fertility = the one
-    * double division pieces/words over exact longs. */
-  private def wpFertilityOracle(m: Int): String =
-    s"""WITH ${wpTrainCtes(m)},
-       |${bpeTrainCtes(m, strip = "#", prefix = "f")},
-       |wfin AS (SELECT CAST(SUM(cnt) AS BIGINT) AS nw,
-       |  CAST(SUM(cnt * len(string_split(trim(w, '$B1$B2'), '$B2$B1'))) AS BIGINT) AS np
-       |  FROM ws$m),
-       |bfin AS (SELECT CAST(SUM(cnt) AS BIGINT) AS nw,
-       |  CAST(SUM(cnt * len(string_split(trim(w, '$B1$B2'), '$B2$B1'))) AS BIGINT) AS np
-       |  FROM fs$m)
-       |SELECT * FROM (
-       |SELECT 'bpe' AS tokenizer, nw AS n_words, np AS n_pieces,
-       |  CAST(np AS DOUBLE) / CAST(nw AS DOUBLE) AS fertility FROM bfin
-       |UNION ALL
-       |SELECT 'wordpiece', nw, np, CAST(np AS DOUBLE) / CAST(nw AS DOUBLE) FROM wfin
-       |) ORDER BY tokenizer""".stripMargin
-
-  /** q_semdedup oracle generator: level-0 nearest-centroid assignment,
-    * then `rounds` unrolled recursive cell-size splits (over-cap cells
-    * re-quantized to their ≤splitK lowest-min-id distinct member vectors,
-    * cosine-nearest, tie → higher sub-index, cell key extended as a path
-    * string), then within-cell pairs at τ=0.25 → connected components →
-    * min-id canonicals. Constants are shared with the gate so the SQL
-    * replay and the Spark run can never drift. */
-  private def semdedupOracle(cap: Int, splitK: Int, rounds: Int): String = {
-    val head =
-      s"""WITH RECURSIVE
-         |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |ct AS (SELECT vec_id AS ci, v AS cv FROM c WHERE vec_id < 8),
-         |asg AS (SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-         |  ORDER BY cos DESC, ci DESC) AS rn FROM (
-         |  SELECT c.vec_id, ct.ci,
-         |    list_inner_product(c.v, ct.cv) /
-         |    (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(ct.cv, ct.cv))) AS cos
-         |  FROM c CROSS JOIN ct)),
-         |k0 AS MATERIALIZED (SELECT c.vec_id, c.v, CAST(a.ci AS VARCHAR) AS cell
-         |  FROM c JOIN (SELECT vec_id, ci FROM asg WHERE rn = 1) a USING (vec_id))""".stripMargin
-    val splits = (1 to rounds).map { i =>
-      val p = s"k${i - 1}"
-      s""",
-         |s$i AS MATERIALIZED (SELECT cell FROM $p GROUP BY cell HAVING count(*) > $cap),
-         |c$i AS MATERIALIZED (SELECT cell, v AS sv, row_number() OVER (PARTITION BY cell ORDER BY mid) - 1 AS si
-         |  FROM (SELECT cell, v, min(vec_id) AS mid FROM $p
-         |        WHERE cell IN (SELECT cell FROM s$i) GROUP BY cell, v)
-         |  QUALIFY si < $splitK),
-         |a$i AS MATERIALIZED (SELECT vec_id, v, cell, row_number() OVER (PARTITION BY vec_id
-         |  ORDER BY cos DESC, si DESC) AS rn FROM (
-         |  SELECT r.vec_id, r.v, r.cell || '-' || CAST(sc.si AS VARCHAR) AS cell, sc.si,
-         |    list_inner_product(r.v, sc.sv) /
-         |    (sqrt(list_inner_product(r.v, r.v)) * sqrt(list_inner_product(sc.sv, sc.sv))) AS cos
-         |  FROM $p r JOIN c$i sc ON r.cell = sc.cell)),
-         |k$i AS MATERIALIZED (SELECT vec_id, v, cell FROM a$i WHERE rn = 1
-         |  UNION ALL SELECT vec_id, v, cell FROM $p WHERE cell NOT IN (SELECT cell FROM s$i))""".stripMargin
-    }.mkString
-    val kf = s"k$rounds"
-    val tail =
-      s""",
-         |pr AS (SELECT a.vec_id AS id1, b.vec_id AS id2
-         |  FROM $kf a JOIN $kf b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE list_inner_product(a.v, b.v) /
-         |    (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))) >= 0.25),
-         |edges AS (SELECT id1 AS a, id2 AS b FROM pr
-         |  UNION SELECT id2, id1 FROM pr),
-         |reach(id, lbl) AS (
-         |  SELECT a, a FROM edges
-         |  UNION
-         |  SELECT e.a, r.lbl FROM edges e JOIN reach r ON r.id = e.b),
-         |canon AS (SELECT id, MIN(lbl) AS canonical FROM reach GROUP BY id)
-         |SELECT c.vec_id, COALESCE(canon.canonical, c.vec_id) AS canonical,
-         |COALESCE(canon.canonical, c.vec_id) = c.vec_id AS kept
-         |FROM c LEFT JOIN canon ON c.vec_id = canon.id
-         |ORDER BY c.vec_id""".stripMargin
-    head + splits + tail
-  }
-
-  private def bpeTrainOracle(m: Int): String =
-    s"""WITH ${bpeTrainCtes(m)}
-       |SELECT * FROM (
-       |${(0 until m).map(i => s"SELECT $i AS merge_rank, a, b, c AS cnt FROM b$i")
-           .mkString("\nUNION ALL ")}
-       |) ORDER BY merge_rank""".stripMargin
-
-  private def bpeEncodeOracle(m: Int): String = {
-    val docChain = (0 until m).map { i =>
-      s"""d${i + 1} AS MATERIALIZED (SELECT doc_id, replace(w,
-         |  '$B1' || (SELECT a FROM b$i) || '$B2$B1' || (SELECT b FROM b$i) || '$B2',
-         |  '$B1' || (SELECT a FROM b$i) || (SELECT b FROM b$i) || '$B2') AS w FROM d$i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ${bpeTrainCtes(m)},
-       |d0 AS MATERIALIZED (SELECT doc_id, array_to_string(list_transform(
-       |  list_filter(string_split_regex(regexp_replace(text, '[$B1$B2]', '', 'g'), '\\s+'), x -> x <> ''),
-       |  w -> '$B1' || array_to_string(regexp_extract_all(w, '.'), '$B2$B1') || '$B2'), '$B3') AS w
-       |  FROM documents),
-       |$docChain
-       |SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_tokens,
-       |  md5(array_to_string(toks, '$B1')) AS fp FROM (
-       |  SELECT doc_id, regexp_extract_all(w, '$B1([^$B2]*)$B2', 1) AS toks FROM d$m)
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  private def qManifestPrune(s: SparkSession, d: String): DataFrame = {
-    // Manifest-based data skipping end to end: land orders range-
-    // partitioned on o_orderdate (files carry disjoint date ranges),
-    // build the per-file min/max manifest, then answer a one-year range
-    // query reading ONLY the overlapping files — require()d to actually
-    // skip — and re-apply the exact predicate. The oracle runs the same
-    // range query on the raw table: any pruning mistake (a skipped file
-    // that held matching rows) hash-mismatches.
-    val out = cleanupAtExit(s"${System.getProperty("java.io.tmpdir")}/graft_skip_${ProcessHandle.current().pid()}")
-    Tables.orders(s, d).select("o_orderkey", "o_orderdate", "o_totalprice")
-      .repartitionByRange(8, col("o_orderdate"))
-      .write.mode("overwrite").parquet(out)
-    val mf = Relational.fileStatsManifest(s, out, "o_orderdate").stagePersist(false)
-    val lo = lit("1997-01-01 00:00:00").cast("timestamp_ntz")
-    val hi = lit("1997-12-31 23:59:59").cast("timestamp_ntz")
-    val total = mf.count() // fills mf
-    val picked = mf.where(col("max_v") >= lo && col("min_v") <= hi).count()
-    require(picked < total,
-      s"manifest pruning skipped nothing ($picked of $total files) — the range layout is broken")
-    val scanned = Relational.manifestPrunedScan(s, mf, "o_orderdate", lo, hi)
-    mf.release()
-    Relational.sort(col("m"))(asDouble("sum_price")(
-      Aggregates.groupAggregate(Seq("m"), Seq(
-        Agg(COUNT, None, "n"),
-        Agg(SUM, Some("price_dec"), "sum_price")))(
-        scanned.withColumn("m", month(col("o_orderdate")))
-          .withColumn("price_dec", dec(col("o_totalprice"))))))
-  }
-
-  private def qCompact(s: SparkSession, d: String): DataFrame = {
-    // Compaction planner over a synthetic-but-derived manifest (40 pseudo
-    // files keyed by l_partkey % 40, sized by row count) so DuckDB can
-    // replay the cumulative bin assignment exactly. The REAL file rewrite
-    // (list → plan → per-bin coalesced rewrite) is spec-tested on disk in
-    // RelationalSpec; this gate pins the planning arithmetic.
-    val mf = Tables.lineitem(s, d)
-      .groupBy(pmod(col("l_partkey"), lit(40)).as("file"))
-      .agg((count(lit(1)) * 50).as("bytes"))
-    Relational.sort(col("file"))(
-      Relational.compactionPlan(mf, "file", "bytes", targetBytes = 400000L))
-  }
-
-  private def qSemdedup(s: SparkSession, d: String): DataFrame = {
-    // Replayable centroid set: the first 8 embedding vectors (bounded
-    // driver metadata — 8×64 doubles), so the oracle re-derives the cell
-    // assignment, within-cell pairs, components and canonicals in SQL.
-    // Cell-size contract exercised (round 9): cap 40 forces recursive
-    // cell splitting even at sf0.01 (~62 vectors/cell at k=8); the
-    // oracle unrolls the same 4 split rounds with the same constants.
-    val emb = Tables.embeddings(s, d)
-    val cents = emb.where(col("vec_id") < 8).orderBy("vec_id")
-      .select(graft.pipeline.Similarity.asDoubleVec(col("embedding")).as("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    Relational.sort(col("vec_id"))(
-      graft.pipeline.Similarity.semanticDedup(emb, "vec_id", "embedding", cents, 0.25,
-        maxCellSize = SemdedupCap, splitK = SemdedupSplitK,
-        maxSplitRounds = SemdedupRounds))
-  }
-
-  // q_semdedup split contract constants — shared by the gate and the
-  // oracle generator so they can never drift apart.
-  private val SemdedupCap = 40
-  private val SemdedupSplitK = 8
-  private val SemdedupRounds = 4
-
-  private def qBloomJoin(s: SparkSession, d: String): DataFrame = {
-    // Selective build side (1-URGENT ≈ 20% of orders): the bloom prunes
-    // ~80% of lineitem BEFORE its shuffle; the exact join then removes
-    // the bloom's false positives, so the result equals the plain join —
-    // which is exactly what the oracle runs.
-    val li = Tables.lineitem(s, d)
-    val urgent = Tables.orders(s, d).where(col("o_orderpriority") === "1-URGENT")
-      .select("o_orderkey")
-    val j = Relational.bloomJoin(li, urgent, "l_orderkey", "o_orderkey",
-      expectedItems = 1L << 18)
-    val agg = Aggregates.groupAggregate(Seq("l_returnflag"), Seq(
-      Agg(COUNT, None, "n"),
-      Agg(SUM, Some("qty"), "sum_qty")))(j.withColumn("qty", dec(col("l_quantity"))))
-    Relational.sort(col("l_returnflag"))(asDouble("sum_qty")(agg))
-  }
-
-  // =========================================================================
-  // Multi-dimensional aggregation (ROLLUP / CUBE / GROUPING SETS / PIVOT)
-  // =========================================================================
-
-  private def qRollup(s: SparkSession, d: String): DataFrame = {
-    // Hierarchical subtotals over (returnflag, linestatus) in ONE pass —
-    // Expand before the partial aggregate, so the shuffle moves partials.
-    val li = Tables.lineitem(s, d).withColumn("qty", dec(col("l_quantity")))
-    val agg = Aggregates.rollupAggregate(Seq("l_returnflag", "l_linestatus"), Seq(
-      Agg(SUM, Some("qty"), "sum_qty"), Agg(COUNT, None, "n")))(li)
-    Relational.sort(col("gid"), col("l_returnflag"), col("l_linestatus"))(
-      asDouble("sum_qty")(agg))
-  }
-
-  private def qCube(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d).withColumn("price", dec(col("o_totalprice")))
-    val agg = Aggregates.cubeAggregate(Seq("o_orderstatus", "o_orderpriority"), Seq(
-      Agg(SUM, Some("price"), "sum_price"), Agg(COUNT, None, "n")))(o)
-    Relational.sort(col("gid"), col("o_orderstatus"), col("o_orderpriority"))(
-      asDouble("sum_price")(agg))
-  }
-
-  private def qGroupingSets(s: SparkSession, d: String): DataFrame = {
-    // Explicit sets: per-flag, per-status, and the grand total — the shape
-    // a reference user would emulate with three aggregations + union.
-    val li = Tables.lineitem(s, d).withColumn("qty", dec(col("l_quantity")))
-    val agg = Aggregates.groupingSetsAggregate(
-      Seq(Seq("l_returnflag"), Seq("l_linestatus"), Seq.empty),
-      Seq("l_returnflag", "l_linestatus"),
-      Seq(Agg(SUM, Some("qty"), "sum_qty"), Agg(COUNT, None, "n")))(li)
-    Relational.sort(col("gid"), col("l_returnflag"), col("l_linestatus"))(
-      asDouble("sum_qty")(agg))
-  }
-
-  private def qPivot(s: SparkSession, d: String): DataFrame = {
-    // Explicit value list (no hidden distinct-discovery job); single
-    // conditional aggregation underneath. Absent combinations stay NULL.
-    val o = Tables.orders(s, d).withColumn("price", dec(col("o_totalprice")))
-    val p = Aggregates.pivotAggregate(Seq("o_orderpriority"), "o_orderstatus",
-      Seq("O", "F", "P"), Agg(SUM, Some("price"), "sum_price"))(o)
-    Relational.sort(col("o_orderpriority"))(
-      p.select(col("o_orderpriority"),
-        col("O").cast("double").as("sum_open"),
-        col("F").cast("double").as("sum_filled"),
-        col("P").cast("double").as("sum_pending")))
-  }
-
-  private def qConcurrency(s: SparkSession, d: String): DataFrame = {
-    // Sweep-line peak concurrency over the same synthetic intervals as
-    // q_interval_merge: per user, max simultaneously-open sessions, the
-    // earliest instant the peak is reached, and the interval count.
-    val iv = Tables.events(s, d).select(col("user_id"),
-      graft.functions.Exprs.epochMicrosCivil(col("ts")).as("s"),
-      (graft.functions.Exprs.epochMicrosCivil(col("ts")) +
-        ((col("event_id") % 7) + 1) * 600000000L).as("e"))
-    Relational.sort(col("user_id"))(
-      graft.pipeline.Events.concurrencyProfile(iv, Seq("user_id"), "s", "e"))
-  }
-
-  private def qAuc(s: SparkSession, d: String): DataFrame =
-    // Exact tie-aware ROC AUC: score = l_quantity (heavily tied — the
-    // midrank path is what's under test), label = returned flag.
-    graft.pipeline.Profile.rocAuc(Tables.lineitem(s, d), "l_quantity",
-      col("l_returnflag") === "R")
-
-  private def qGini(s: SparkSession, d: String): DataFrame = {
-    // Revenue-concentration Gini per market segment over per-customer
-    // order totals; rank identity in exact decimals, one final division
-    // through the digit string.
-    val rev = Tables.orders(s, d).groupBy(col("o_custkey"))
-      .agg(sum(dec(col("o_totalprice"))).cast("decimal(18,2)").as("rev"))
-    val seg = rev.join(Tables.customer(s, d),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"), col("rev"))
-    Relational.sort(col("seg"))(
-      graft.pipeline.Profile.gini(seg, "seg", "rev"))
-  }
-
-  private def qBfs(s: SparkSession, d: String): DataFrame = {
-    // Multi-source BFS over a data-derived directed graph (order/customer
-    // keys folded into a 500-node space, cycles included); min hop
-    // distance from the %50 source set, budget 6 — the oracle explores
-    // ALL bounded paths recursively and takes MIN(hops).
-    val o = Tables.orders(s, d)
-    val edges = o.select((col("o_orderkey") % 500).as("src"),
-      ((col("o_custkey") * 3 + 1) % 500).as("dst"))
-    val sources = edges.select(col("src").as("id"))
-      .where(col("id") % 50 === 0).distinct()
-    Relational.sort(col("id"))(
-      graft.pipeline.Graph.bfsHops(edges, "src", "dst", sources, "id",
-        maxHops = 6))
-  }
-
-  private def qPip(s: SparkSession, d: String): DataFrame = {
-    // Point-in-polygon over the q_spatial_join synthetic points against a
-    // non-convex L-shape: exact-integer ray casting unrolled into ONE
-    // codegen'd projection (zero joins/shuffles); the oracle replays the
-    // crossing parity through an explicit edge VALUES join.
-    val m = 2147483648L
-    val pts = Tables.documents(s, d).select(col("doc_id").as("id"),
-      (pmod(col("doc_id"), lit(m)) * lit(2654435761L) % lit(m) % lit(4000L)).as("x"),
-      (pmod(col("doc_id"), lit(m)) * lit(2246822519L) % lit(m) % lit(4000L)).as("y"))
-    Relational.sort(col("id"))(
-      graft.pipeline.Spatial.pointInPolygon(pts, "id", "x", "y", LPolygon))
-  }
-
-  /** Simple non-convex L-shape in the 4000×4000 synthetic point domain —
-    * shared by qPip and its oracle text. */
-  private val LPolygon: Seq[(Long, Long)] = Seq(
-    (1000L, 1000L), (3000L, 1000L), (3000L, 2000L),
-    (2000L, 2000L), (2000L, 3000L), (1000L, 3000L))
-
-  private def qSurvival(s: SparkSession, d: String): DataFrame = {
-    // Kaplan-Meier per order priority: duration = key % 100 + 1, every
-    // 7th subject right-censored; survival via 6-dp-rounded decimal-
-    // summed ln factors, re-exponentiated at the edge.
-    val subj = Tables.orders(s, d).select(
-      col("o_orderpriority").as("g"),
-      (col("o_orderkey") % 100 + 1).as("dur"),
-      (col("o_orderkey") % 7 =!= 0).as("ev"))
-    Relational.sort(col("g"), col("t"))(
-      graft.pipeline.Events.kaplanMeier(subj, "g", "dur", col("ev")))
-  }
-
-  private def qLogTemplates(s: SparkSession, d: String): DataFrame = {
-    // Drain-style parameter masking over synthetic log lines
-    // (event_type + props JSON): digit runs collapse to '#'.
-    val ev = Tables.events(s, d)
-      .select(col("event_id"),
-        concat(col("event_type"), lit(" "), col("props")).as("line"))
-    Relational.sort(col("template"))(
-      graft.pipeline.TextAnalysis.logTemplates(ev, "event_id", "line"))
-  }
-
-  private def qEntityTag(s: SparkSession, d: String): DataFrame = {
-    // Gazetteer tagging of the document corpus against a 4-name
-    // dictionary (one mixed-case to exercise normalization).
-    import s.implicits._
-    val gaz = Seq("Spark", "customer", "query", "vector").toDF("name")
-    Relational.sort(col("doc_id"), col("entity"))(
-      graft.pipeline.TextAnalysis.tagEntities(Tables.documents(s, d),
-        "doc_id", "text", gaz, "name")
-        .withColumn("first_pos", col("first_pos").cast("long")))
-  }
-
-  private def qSkipgram(s: SparkSession, d: String): DataFrame =
-    // Skip-gram pair extraction (window 2) — HOF-generated pairs, one
-    // count shuffle; the oracle regenerates every pair list-wise.
-    Relational.sort(col("center"), col("context"))(
-      graft.pipeline.Vocab.skipgramPairs(Tables.documents(s, d), "text",
-        window = 2))
-
-  private def qApportion(s: SparkSession, d: String): DataFrame = {
-    // Hamilton apportionment of a 100k budget across parts by lineitem
-    // count: Σ seats = 100000 exactly, every placement integer-derived.
-    val wts = Tables.lineitem(s, d).groupBy(col("l_partkey"))
-      .agg(count(lit(1)).as("cnt"))
-    Relational.sort(col("l_partkey"))(
-      graft.pipeline.Sampling.apportion(wts, "l_partkey", "cnt",
-        total = 100000L))
-  }
-
-  private def qCusum(s: SparkSession, d: String): DataFrame =
-    // Two-sided CUSUM per event type (target 50, slack 2, alarm 200):
-    // closed-form prefix-extrema windows, decimal-exact statistics.
-    Relational.sort(col("event_type"), col("event_id"))(
-      graft.pipeline.TimeSeries.cusum(Tables.events(s, d), "event_type",
-        "ts", "value", "event_id", target = BigDecimal(50),
-        slack = BigDecimal(2), threshold = BigDecimal(200)))
-
-  private def qAutocorr(s: SparkSession, d: String): DataFrame =
-    // Lag-3 autocorrelation of event values per type — the corrExact
-    // moment machinery over lag-window pairs.
-    Relational.sort(col("event_type"))(
-      graft.pipeline.TimeSeries.autocorrLag(Tables.events(s, d),
-        "event_type", "ts", "value", "event_id", lagK = 3))
-
-  private def qClassifierEval(s: SparkSession, d: String): DataFrame =
-    // Operating-point metrics at threshold 26 for the q_auc score/label
-    // pair: exact confusion counts, fixed-shape ratio dag.
-    graft.pipeline.Profile.classifierEval(Tables.lineitem(s, d),
-      "l_quantity", col("l_returnflag") === "R", threshold = 26.0)
-
-  private def qTheilsen(s: SparkSession, d: String): DataFrame = {
-    // Robust slope of revenue-vs-quantity per flag over the BOUNDED
-    // per-quantity revenue series (50 points/group — the aggregated-
-    // series contract); lower-median pair slopes + residual intercept.
-    val pts = Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"), col("l_quantity"))
-      .agg(sum(dec(col("l_extendedprice"))).cast("decimal(18,2)").as("y"))
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.theilSen(pts, "l_returnflag", "l_quantity", "y"))
-  }
-
-  private def qStandardize(s: SparkSession, d: String): DataFrame = {
-    // Per-flag z-scores of quantity from exact moment sums; the stats
-    // row broadcasts back onto 60k rows.
-    val out = graft.pipeline.Profile.standardize(Tables.lineitem(s, d),
-      "l_returnflag", "l_quantity")
-    Relational.sort(col("l_orderkey"), col("l_linenumber"))(
-      out.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_returnflag"), col("z")))
-  }
-
-  private def qImpute(s: SparkSession, d: String): DataFrame = {
-    // Group-mean imputation of synthesized NULLs (every 11th order):
-    // deterministic digit-string mean fill + imputed marker.
-    val base = Tables.orders(s, d).select(col("o_orderkey"),
-      col("o_orderpriority"),
-      when(col("o_orderkey") % 11 === 0, lit(null).cast("double"))
-        .otherwise(col("o_totalprice")).as("v"))
-    Relational.sort(col("o_orderkey"))(
-      graft.pipeline.Profile.imputeMean(base, "o_orderpriority", "v",
-        "filled")
-        .select(col("o_orderkey"), col("o_orderpriority"), col("filled"),
-          col("filled_imputed")))
-  }
-
-  private def qTargetEncode(s: SparkSession, d: String): DataFrame =
-    // Leave-one-out mean-price encoding of order priority: the leakage-
-    // guarded categorical encoder, (Σ−x)/(n−1) in exact decimals.
-    Relational.sort(col("o_orderkey"))(
-      graft.pipeline.Scoring.targetEncodeLoo(Tables.orders(s, d),
-        "o_orderpriority", "o_totalprice", "enc")
-        .select(col("o_orderkey"), col("o_orderpriority"), col("enc")))
-
-  private def qClusteringCoef(s: SparkSession, d: String): DataFrame = {
-    // Local clustering coefficient over the q_triangles co-occurrence
-    // graph: distinct-neighbor degrees + the triangle counts.
-    val o = Tables.orders(s, d)
-    val edges = o.select(pmod(col("o_custkey"), lit(97L)).as("x"),
-      pmod(col("o_orderkey"), lit(97L)).as("y"))
-    Relational.sort(col("node"))(
-      graft.pipeline.Graph.clusteringCoefficient(edges, "x", "y"))
-  }
-
-  private def qCumulativeUsers(s: SparkSession, d: String): DataFrame =
-    // Users-to-date growth curve: active / first-seen / cumulative per
-    // day — no windowed COUNT(DISTINCT) anywhere.
-    Relational.sort(col("day"))(
-      graft.pipeline.Events.cumulativeUnique(Tables.events(s, d),
-        "user_id", "ts", "day")
-        .select(date_format(col("period"), "yyyy-MM-dd").as("day"),
-          col("active"), col("first_seen"), col("cumulative")))
-
-  private def qActiveUsers(s: SparkSession, d: String): DataFrame =
-    // DAU/WAU/MAU + stickiness via coverage fan-out on the deduped
-    // (user, day) table — no rolling COUNT(DISTINCT).
-    Relational.sort(col("day"))(
-      graft.pipeline.Events.activeUserStats(Tables.events(s, d),
-        "user_id", "ts")
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd")))
-
-  private def qBandJoin(s: SparkSession, d: String): DataFrame = {
-    // Price-tier banding of orders through the broadcast theta-join;
-    // aggregated per band so a wrong band boundary hash-mismatches.
-    import s.implicits._
-    val bands = Seq(("low", 0L, 50000L), ("mid", 50000L, 150000L),
-      ("high", 150000L, 300000L), ("vip", 300000L, 1000000000L))
-      .toDF("band", "lo", "hi")
-    val j = Relational.bandJoin(Tables.orders(s, d), bands,
-      "o_totalprice", "lo", "hi")
-    Relational.sort(col("band"))(asDouble("sum_price")(
-      j.groupBy(col("band")).agg(count(lit(1)).as("n"),
-        sum(dec(col("o_totalprice"))).as("sum_price"))))
-  }
-
-  private def qReconcile(s: SparkSession, d: String): DataFrame = {
-    // Books-agree audit: per-order lineitem revenue vs the order header
-    // total at a 1-cent tolerance; headerless/lineless keys classify as
-    // one-sided.
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("k"), col("l_extendedprice"))
-    val o = Tables.orders(s, d)
-      .select(col("o_orderkey").as("k"), col("o_totalprice"))
-    Relational.sort(col("k"))(
-      graft.pipeline.Checks.reconcile(li, o, Seq("k"),
-        "l_extendedprice", "o_totalprice", BigDecimal("0.01")))
-  }
-
-  private def qTukey(s: SparkSession, d: String): DataFrame =
-    // IQR outlier fences per flag from nearest-rank quartiles over the
-    // distinct-value table; outlier tally folds from the same table.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.tukeyFences(Tables.lineitem(s, d),
-        "l_returnflag", "l_extendedprice"))
-
-  private def qTypeTrigrams(s: SparkSession, d: String): DataFrame =
-    // Order-3 event patterns per user with distinct-user support.
-    Relational.sort(col("ngram"))(
-      graft.pipeline.Events.typeNgrams(Tables.events(s, d),
-        Seq("user_id"), "ts", "event_type", "event_id", n = 3))
-
-  private def qSeasonal(s: SparkSession, d: String): DataFrame =
-    // Hour-of-day baseline per event type: count, exact-decimal mean,
-    // slot share of the type's total mass.
-    Relational.sort(col("event_type"), col("slot"))(
-      graft.pipeline.TimeSeries.seasonalProfile(Tables.events(s, d),
-        "event_type", "ts", "value", slot = "hour"))
-
-  private def qHill(s: SparkSession, d: String): DataFrame =
-    // Tail-index of order totals over the top 1000 observations:
-    // distinct-value suffix ranks, 6-dp decimal-summed lns.
-    graft.pipeline.Profile.hillTail(Tables.orders(s, d), "o_totalprice",
-      k = 1000)
-
-  private def qBlockingQuality(s: SparkSession, d: String): DataFrame = {
-    // Audit of the q_linkage blocking key (case-normalized name) against
-    // the known truth (each customer matches its dirtied copy):
-    // reduction ratio ≈ 1, pair completeness must be exactly 1.
-    val c = Tables.customer(s, d)
-    val dirty = c.select(lower(col("c_name")).as("block"),
-      col("c_custkey").as("r_id"))
-    val leftT = c.select(lower(col("c_name")).as("block"), col("c_custkey"))
-    val truth = c.select(col("c_custkey"), col("c_custkey").as("r_id"))
-    graft.pipeline.Dedup.blockingQuality(leftT, dirty, "block",
-      "c_custkey", "r_id", truth)
-  }
-
-  private def qHoppingWindow(s: SparkSession, d: String): DataFrame =
-    // 30-min windows sliding 10 min per event type: each event lands in
-    // exactly 3 windows; one hash aggregate after the explode.
-    Relational.sort(col("event_type"), col("window_start_us"))(
-      graft.pipeline.TimeSeries.hoppingWindows(Tables.events(s, d),
-        "event_type", "ts", "value", sizeSec = 1800, slideSec = 600))
-
-  private def qRateLimit(s: SparkSession, d: String): DataFrame =
-    // Trailing-hour event counts per user (RANGE frame — simultaneous
-    // events count each other deterministically), limit 5.
-    Relational.sort(col("event_id"))(
-      graft.pipeline.Events.rateLimitFlags(Tables.events(s, d),
-        Seq("user_id"), "ts", limitN = 5, windowSec = 3600)
-        .select(col("event_id"), col("user_id"), col("window_count"),
-          col("over_limit")))
-
-  private def qWeightedMedian(s: SparkSession, d: String): DataFrame =
-    // Revenue-weighted quantity percentiles per flag: "the quantity at
-    // which half the money moved", exact decimal weight cumulation.
-    Relational.sort(col("l_returnflag"), col("p"))(
-      graft.pipeline.Profile.weightedPercentiles(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice", Seq(0.5, 0.9)))
-
-  private def qFunnelLatency(s: SparkSession, d: String): DataFrame =
-    // First-view to first-later-purchase delay per user — the latency
-    // face of the funnel frontier machinery.
-    Relational.sort(col("user_id"))(
-      graft.pipeline.Events.funnelLatency(Tables.events(s, d),
-        "user_id", "ts", "event_type", "view", "purchase"))
-
-  private def qPsi(s: SparkSession, d: String): DataFrame = {
-    // Drift between early (≤1996) and late order totals over 20 fixed
-    // [0, 600k) bins + under/overflow; add-one smoothing, decimal-
-    // summed terms.
-    val o = Tables.orders(s, d)
-    val base = o.where(year(col("o_orderdate")) <= 1996)
-    val cur = o.where(year(col("o_orderdate")) > 1996)
-    graft.pipeline.Profile.psi(base, cur, "o_totalprice",
-      lo = 0.0, hi = 600000.0, nBins = 20)
-  }
-
-  private def qMutualInfo(s: SparkSession, d: String): DataFrame =
-    // Dependence between priority and status in nats; marginals fold
-    // from the joint-cell table.
-    graft.pipeline.Profile.mutualInfo(Tables.orders(s, d),
-      "o_orderpriority", "o_orderstatus")
-
-  private def qPathLength(s: SparkSession, d: String): DataFrame = {
-    // L1 track statistics per user over hashed synthetic waypoints in
-    // event order (event_id is the unique sequence).
-    val m = 2147483648L
-    val pts = Tables.events(s, d).select(col("user_id"),
-      col("event_id").as("seq"),
-      (pmod(col("event_id"), lit(m)) * lit(2654435761L) % lit(m) % lit(1000L)).as("x"),
-      (pmod(col("event_id"), lit(m)) * lit(2246822519L) % lit(m) % lit(1000L)).as("y"))
-    Relational.sort(col("user_id"))(
-      graft.pipeline.Spatial.pathStats(pts, Seq("user_id"), "x", "y", "seq"))
-  }
-
-  private def qMultiTouch(s: SparkSession, d: String): DataFrame =
-    // Linear attribution in exact mills: per-user credit sums to 10^6
-    // by construction; aggregated per touch type.
-    Relational.sort(col("event_type"))(
-      graft.pipeline.Events.linearAttribution(Tables.events(s, d),
-        "user_id", "ts", "event_type", "event_id",
-        Seq("view", "click"), "purchase")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_touches"),
-          sum(col("credit_mills")).as("total_credit")))
-
-  private def qNotIn(s: SparkSession, d: String): DataFrame = {
-    // ANSI NOT IN three-valued semantics, proven against DuckDB's own
-    // NOT IN: customers with no orders (clean subquery) vs the SAME
-    // subquery with one NULL injected — which must empty the result.
-    val cust = Tables.customer(s, d)
-    val orderKeys = Tables.orders(s, d).select(col("o_custkey").as("k"))
-    val withNull = orderKeys.unionByName(
-      cust.limit(1).select(lit(null).cast("long").as("k")))
-    def tally(label: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("c_custkey")), lit(0L)).as("key_sum"))
-        .select(lit(label).as("label"), col("n"), col("key_sum"))
-    Relational.sort(col("label"))(
-      tally("clean", Relational.notInSubquery(cust, "c_custkey",
-        orderKeys, "k")).unionByName(
-        tally("with_null", Relational.notInSubquery(cust, "c_custkey",
-          withNull, "k"))))
-  }
-
-  private def qStreak(s: SparkSession, d: String): DataFrame =
-    // Longest consecutive-active-day streak per user via the
-    // gaps-and-islands constant; earliest-start tie-break.
-    Relational.sort(col("user_id"))(
-      graft.pipeline.Events.longestStreak(Tables.events(s, d),
-        "user_id", "ts")
-        .withColumn("streak_start",
-          date_format(col("streak_start"), "yyyy-MM-dd")))
-
-  private def qFkDiscovery(s: SparkSession, d: String): DataFrame = {
-    // Inclusion-dependency audit: two true FKs (containment 1.0) and a
-    // deliberately wrong pair — the schema-discovery probe.
-    import graft.pipeline.Checks
-    def one(label: String, c: DataFrame, cc: String, p: DataFrame,
-            pc: String): DataFrame =
-      Checks.inclusionDependency(c, cc, p, pc)
-        .select(lit(label).as("pair"), col("n_child_distinct"),
-          col("n_missing"), col("containment"))
-    val li = Tables.lineitem(s, d)
-    val o = Tables.orders(s, d)
-    val c = Tables.customer(s, d)
-    Relational.sort(col("pair"))(
-      one("li_orderkey_in_orders", li, "l_orderkey", o, "o_orderkey")
-        .unionByName(one("o_custkey_in_customer", o, "o_custkey", c, "c_custkey"))
-        .unionByName(one("o_orderkey_in_customer", o, "o_orderkey", c, "c_custkey")))
-  }
-
-  // k=21: six genuine peeling rounds at sf0.01 with a 908-node core
-  // surviving (k=22 cascades to empty; k=18 barely peels)
-  private val KcoreK = 21
-  private val KcoreRounds = 10
-
-  private def qKcore(s: SparkSession, d: String): DataFrame = {
-    // k-core of a 997-node co-occurrence graph: iterative peeling to
-    // the fixpoint (monotone — the oracle's fixed unroll is safe).
-    val o = Tables.orders(s, d)
-    val edges = o.select(pmod(col("o_custkey"), lit(997L)).as("x"),
-      pmod(col("o_orderkey"), lit(997L)).as("y"))
-    Relational.sort(col("node"))(
-      graft.pipeline.Graph.kCore(edges, "x", "y", k = KcoreK,
-        maxRounds = KcoreRounds))
-  }
-
-  /** The q_kcore oracle unrolls the peeling loop `rounds` times as a
-    * CTE chain (the q_pagerank standard); extra rounds past the engine's
-    * fixpoint are no-ops because peeling is monotone. */
-  private def kcoreOracleSql(rounds: Int, k: Int): String = {
-    // every CTE is MATERIALIZED: with inlining each round references the
-    // previous one several times and the expansion (and its file opens)
-    // grows exponentially — the BPE-oracle lesson
-    val sb = new StringBuilder
-    sb.append("WITH e0 AS MATERIALIZED (SELECT DISTINCT least(x, y) AS a, " +
-      "greatest(x, y) AS b FROM (SELECT o_custkey % 997 AS x, " +
-      "o_orderkey % 997 AS y FROM orders) WHERE x <> y),\n")
-    for (r <- 1 to rounds) {
-      sb.append(s"d$r AS MATERIALIZED (SELECT node, COUNT(*) AS deg FROM (" +
-        s"SELECT a AS node FROM e${r - 1} UNION ALL SELECT b FROM e${r - 1}) " +
-        s"GROUP BY node),\n")
-      sb.append(s"k$r AS MATERIALIZED (SELECT node FROM d$r WHERE deg >= $k),\n")
-      sb.append(s"e$r AS MATERIALIZED (SELECT e.a, e.b FROM e${r - 1} e " +
-        s"JOIN k$r ka ON ka.node = e.a JOIN k$r kb ON kb.node = e.b),\n")
-    }
-    sb.append(s"fin AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree " +
-      s"FROM (SELECT a AS node FROM e$rounds UNION ALL " +
-      s"SELECT b FROM e$rounds) GROUP BY node)\n")
-    sb.append(s"SELECT node, degree FROM fin WHERE degree >= $k ORDER BY node")
-    sb.toString
-  }
-
-  private def qTrimmedMean(s: SparkSession, d: String): DataFrame =
-    // 10%-each-side trimmed mean per flag from the distinct-value
-    // rank-interval overlap — no per-row ranks.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.trimmedMean(Tables.lineitem(s, d),
-        "l_returnflag", "l_extendedprice", trimNum = 1, trimDen = 10))
-
-  private def qRebalance(s: SparkSession, d: String): DataFrame =
-    // Deterministic class rebalancing to the smallest class's size;
-    // aggregated per class with the key sum pinning WHICH rows survive.
-    Relational.sort(col("o_orderpriority"))(
-      graft.pipeline.Sampling.rebalanceClasses(Tables.orders(s, d),
-        "o_orderpriority", Seq("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("key_sum")))
-
-  private def qNaiveBayes(s: SparkSession, d: String): DataFrame = {
-    // Train on even docs (label = lang), classify odd docs; smoothing,
-    // priors and unseen-word mass all replayed by the oracle.
-    val docs = Tables.documents(s, d)
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Scoring.naiveBayes(
-        docs.where(col("doc_id") % 2 === 0),
-        docs.where(col("doc_id") % 2 === 1),
-        "doc_id", "text", "lang"))
-  }
-
-  private def qSortedBlocking(s: SparkSession, d: String): DataFrame =
-    // Sorted-neighborhood candidates over the normalized name, w=3:
-    // exactly n·w pairs by construction, banded rank join (no global
-    // self-join on rank inequality).
-    Relational.sort(col("id_a"), col("id_b"))(
-      graft.pipeline.Dedup.sortedNeighborhoodPairs(
-        Tables.customer(s, d).select(col("c_custkey"),
-          lower(col("c_name")).as("k")),
-        "c_custkey", "k", w = 3))
-
-  private def qSssp(s: SparkSession, d: String): DataFrame = {
-    // Bounded-hop weighted shortest path over the q_bfs graph with edge
-    // weights 1..9: min total cost within 6 hops from the %50 source
-    // set — truncated Bellman-Ford frontier relaxation; the oracle
-    // explores every bounded path recursively and takes MIN(cost).
-    val o = Tables.orders(s, d)
-    val edges = o.select((col("o_orderkey") % 500).as("src"),
-      ((col("o_custkey") * 3 + 1) % 500).as("dst"),
-      ((col("o_orderkey") + col("o_custkey")) % 9 + 1).as("w"))
-    val sources = edges.select(col("src").as("id"))
-      .where(col("id") % 50 === 0).distinct()
-    Relational.sort(col("id"))(
-      graft.pipeline.Graph.ssspHops(edges, "src", "dst", "w", sources,
-        "id", maxHops = 6))
-  }
-
-  private def qIsotonic(s: SparkSession, d: String): DataFrame = {
-    // Isotonic calibration per linestatus: 24 score bins whose label
-    // rate trends upward with planted noise (rate ≈ (20+3·bin)%), so
-    // PAVA genuinely pools violating bins; max-min identity over exact
-    // interval means, O(B³) only on the bin table.
-    val li = Tables.lineitem(s, d).select(col("l_linestatus").as("ls"),
-      (col("l_partkey") % 24).as("bin"),
-      when(col("l_orderkey") % 100 <
-        lit(20) + lit(3) * (col("l_partkey") % 24), 1).otherwise(0).as("y"))
-    Relational.sort(col("g"), col("x"))(
-      graft.pipeline.Profile.isotonicFit(li, "ls", "bin", "y"))
-  }
-
-  private def qRankingMetrics(s: SparkSession, d: String): DataFrame = {
-    // NDCG@10 / MRR / AP per ~200-query workload: orders ranked by
-    // totalprice desc within o_custkey % 200, relevance = fulfilled.
-    val o = Tables.orders(s, d).select((col("o_custkey") % 200).as("qk"),
-      col("o_totalprice"), col("o_orderkey"), col("o_orderstatus"))
-    Relational.sort(col("q"))(
-      graft.pipeline.Profile.rankingMetrics(o, "qk", "o_totalprice",
-        "o_orderkey", col("o_orderstatus") === "F", k = 10))
-  }
-
-  private def qCalibration(s: SparkSession, d: String): DataFrame = {
-    // Reliability diagram + per-bin Brier terms: p = (orderkey%100)/100
-    // as an EXACT decimal (integer score × 0.01), decile bins, label =
-    // fulfilled; every sum decimal-exact, one division per metric.
-    val o = Tables.orders(s, d).select(
-      expr("(o_orderkey % 100) DIV 10").as("b"),
-      (expr("CAST(o_orderkey % 100 AS DECIMAL(5,2))") *
-        expr("CAST(0.01 AS DECIMAL(3,2))")).as("p"),
-      col("o_orderstatus"))
-    Relational.sort(col("bin"))(
-      graft.pipeline.Profile.calibrationBins(o, "b", "p",
-        col("o_orderstatus") === "F"))
-  }
-
-  private def qTwap(s: SparkSession, d: String): DataFrame = {
-    // Time-weighted average event value per user bucket: the value holds
-    // until the user's next event; exact decimal·micros weighted sum,
-    // one digit-string division.
-    val ev = Tables.events(s, d).select((col("user_id") % 100).as("k"),
-      col("ts"), col("value"), col("event_id"))
-    Relational.sort(col("k"))(
-      graft.pipeline.TimeSeries.twap(ev, "k", "ts", "value", "event_id"))
-  }
-
-  private def qEwma(s: SparkSession, d: String): DataFrame = {
-    // Truncated EWMA (α=1/2, lookback 8) per event type — integer
-    // weights 256..1 over the lag chain, warm-up renormalizes over the
-    // lags that exist; one key-sharded window sort, zero joins.
-    val ev = Tables.events(s, d).select(col("event_type"), col("ts"),
-      col("event_id"), col("value"))
-    Relational.sort(col("event_type"), col("event_id"))(
-      graft.pipeline.TimeSeries.ewmaLags(ev, "event_type", "ts", "value",
-          "event_id", lookback = 8)
-        .select(col("event_type"), col("event_id"), col("n_terms"),
-          col("ewma")))
-  }
-
-  private def qOverlapDuration(s: SparkSession, d: String): DataFrame = {
-    // Click×view co-presence per user bucket: total pairwise interval
-    // overlap micros — bucketized (10-min buckets, canonical-bucket
-    // dedup), never a key-only all-pairs join; the oracle IS the
-    // quadratic join (zero-overlap pairs contribute nothing, so the
-    // bucket pruning is invisible to the result).
-    val ev = Tables.events(s, d)
-    val micros = graft.functions.Exprs.epochMicrosCivil(col("ts"))
-    val a = ev.where(col("event_type") === "click")
-      .select((col("user_id") % 20).as("k"), micros.as("s"),
-        (micros + (lit(1) + col("event_id") % 5) * lit(60000000L)).as("e"))
-    val b = ev.where(col("event_type") === "view")
-      .select((col("user_id") % 20).as("k"), micros.as("s"),
-        (micros + (lit(1) + col("user_id") % 7) * lit(60000000L)).as("e"))
-    Relational.sort(col("key"))(
-      graft.pipeline.Events.overlapDuration(a, b, "k", "s", "e",
-        bucketWidth = 600000000L))
-  }
-
-  private def qDid(s: SparkSession, d: String): DataFrame =
-    // Difference-in-differences over the 2×2 (custkey parity ×
-    // 1998-01-01 cutover) design: four exact-decimal cell means, the
-    // causal contrast rounded once at the edge.
-    graft.pipeline.Profile.diffInDiff(Tables.orders(s, d),
-      col("o_custkey") % 2 === 0,
-      col("o_orderdate") >= lit("1998-01-01").cast("timestamp_ntz"),
-      "o_totalprice")
-
-  private def qCidrJoin(s: SparkSession, d: String): DataFrame = {
-    // CIDR containment over synthetic access-log IPs (numeric hash →
-    // dotted-quad string → parsed back, exercising the parser): rules
-    // BROADCAST pre-exploded to /8 buckets, the log side never shuffles;
-    // the oracle replays the integer block arithmetic on the raw value.
-    import s.implicits._
-    val v = pmod(col("user_id") * 2654435761L, lit(4294967296L))
-    val ips = Tables.events(s, d).select(col("event_id"), col("user_id"),
-      graft.pipeline.Net.longToIpv4(v).as("ip"))
-    val rules = Seq("0.0.0.0/2", "128.0.0.0/1", "55.0.0.0/8",
-      "200.100.0.0/16", "10.20.30.0/24", "7.7.7.7/32", "77.0.0.0/6")
-      .toDF("cidr")
-    Relational.sort(col("cidr"))(
-      graft.pipeline.Net.cidrContainJoin(ips, "ip", rules, "cidr")
-        .groupBy(col("cidr"))
-        .agg(count(lit(1)).as("n_hits"),
-          countDistinct(col("user_id")).as("n_users")))
-  }
-
-  private def qCidrLpm(s: SparkSession, d: String): DataFrame = {
-    // LONGEST-prefix-match enrichment over the same log/rule fixture as
-    // q_cidr_join (overlapping rules planted: /32, /24, /8 all inside
-    // 0.0.0.0/2): each event keeps ONLY the most specific rule, or NULL
-    // when unmatched. The per-bucket rule-array broadcast means one
-    // output row per event with no aggregation exchange (Net.cidrLpmJoin
-    // scaladoc); the gate folds per winning cidr (NULL group = unmatched
-    // traffic), so the hash distinguishes LPM from all-matches hard.
-    import s.implicits._
-    val v = pmod(col("user_id") * 2654435761L, lit(4294967296L))
-    val ips = Tables.events(s, d).select(col("event_id"), col("user_id"),
-      graft.pipeline.Net.longToIpv4(v).as("ip"))
-    val rules = Seq("0.0.0.0/2", "128.0.0.0/1", "55.0.0.0/8",
-      "200.100.0.0/16", "10.20.30.0/24", "7.7.7.7/32", "77.0.0.0/6")
-      .toDF("cidr")
-    Relational.sort(col("cidr"))(
-      graft.pipeline.Net.cidrLpmJoin(ips, "ip", rules, "cidr")
-        .groupBy(col("cidr"))
-        .agg(count(lit(1)).as("n_hits"),
-          countDistinct(col("user_id")).as("n_users"),
-          max(col("plen")).as("plen")))
-  }
-
-  private def qBpeTrainBatched(s: SparkSession, d: String): DataFrame =
-    // BATCHED merge learning (one recount round covers several merges —
-    // the 32k-merge scale path; Bpe.trainMergesBatched scaladoc has the
-    // serial-equality proof). The oracle is the SAME serial round-by-
-    // round SQL replay as q_bpe_train: equality with serial is the gate.
-    Relational.sort(col("merge_rank"))(
-      graft.pipeline.Bpe.trainMergesBatchedDf(
-        Tables.documents(s, d), "text", BpeNumMerges))
-
-  private def qPhraseSearch(s: SparkSession, d: String): DataFrame =
-    // Exact-phrase retrieval ("table hash") over the positional inverted
-    // index: per-term postings filter + one (doc, pos−offset) equi-join;
-    // the oracle counts the same adjacencies list-wise per document.
-    Relational.sort(col("doc_id"))(
-      graft.pipeline.Index.phraseSearch(Tables.documents(s, d), "doc_id",
-          "text", Seq("table", "hash"))
-        .select(col("doc").as("doc_id"), col("n_matches")))
-
-  private def qReadability(s: SparkSession, d: String): DataFrame = {
-    import graft.pipeline.TextAnalysis._
-    // Flesch reading ease per document: three regexp counts + one fixed
-    // IEEE expression — single pass, zero joins.
-    Relational.sort(col("doc_id"))(
-      Tables.documents(s, d).select(col("doc_id"),
-        wordCount(col("text")).as("n_words"),
-        sentenceCount(col("text")).as("n_sentences"),
-        syllableCount(col("text")).as("n_syllables"),
-        fleschScore(col("text")).as("flesch")))
-  }
-
-  private def qLuhn(s: SparkSession, d: String): DataFrame = {
-    // Luhn mod-10 audit of synthetic 12-digit ids: the HOF expression
-    // folds doubled digits positionally; the oracle replays digit by
-    // digit in list land.
-    val nums = Tables.orders(s, d).select(
-      lpad(pmod(col("o_orderkey") * 2654435761L, lit(1000000000000L))
-        .cast("string"), 12, "0").as("num"))
-    Relational.sort(col("valid"))(
-      nums.select(graft.pipeline.Checks.luhnValid(col("num")).as("valid"))
-        .groupBy(col("valid")).agg(count(lit(1)).as("n")))
-  }
-
-  private def qTopoLayers(s: SparkSession, d: String): DataFrame = {
-    // DAG stage layering: edges step +16..+63 in a 400-node id space
-    // (dst > src by construction ⇒ acyclic); layer = longest path from
-    // any root, converged frontier relaxation vs the oracle's bounded
-    // all-paths MAX.
-    val o = Tables.orders(s, d)
-    val src = col("o_orderkey") % 400
-    val dst = src + 16 + (col("o_custkey") % 48)
-    val edges = o.select(src.as("src"), dst.as("dst"))
-      .where(col("dst") < 400)
-    Relational.sort(col("id"))(
-      graft.pipeline.Graph.topoLayers(edges, "src", "dst"))
-  }
-
-  private def qSubtreeRollup(s: SparkSession, d: String): DataFrame = {
-    // BOM-style subtree totals over the custkey div-8 forest (parent <
-    // id ⇒ forest; depth ~4 ⇒ two doubling rounds): descendant counts +
-    // inclusive decimal value sums vs the recursive-CTE oracle.
-    val c = Tables.customer(s, d).select(col("c_custkey").as("id"),
-      when(col("c_custkey") < 8, lit(null).cast("long"))
-        .otherwise(expr("c_custkey div 8")).as("parent"),
-      (col("c_custkey") % 100).as("val"))
-    Relational.sort(col("id"))(
-      graft.pipeline.Graph.subtreeRollup(c, "id", "parent", "val"))
-  }
-
-  private def qGeoHarmMean(s: SparkSession, d: String): DataFrame =
-    // Geometric/harmonic price means per order priority: 6-dp decimal-
-    // summed lns and 12-dp reciprocal sums, divisions at the edge.
-    Relational.sort(col("g"))(
-      graft.pipeline.Profile.geoHarmMeans(Tables.orders(s, d),
-        "o_orderpriority", "o_totalprice"))
-
-  private def qSequenceGaps(s: SparkSession, d: String): DataFrame = {
-    // Sequence-completeness audit: event_ids within each user_id%10
-    // class are deliberately sparse — one gap row per hole.
-    val ev = Tables.events(s, d).select((col("user_id") % 10).as("k"),
-      col("event_id"))
-    Relational.sort(col("key"), col("gap_start"))(
-      graft.pipeline.Checks.sequenceGaps(ev, "k", "event_id"))
-  }
-
-  private def qDbscan(s: SparkSession, d: String): DataFrame = {
-    // Grid-blocked DBSCAN over the q_spatial_join-style synthetic points
-    // (eps 40, minPts 5): core/border/noise roles + min-id cluster
-    // labels vs the all-pairs + recursive-closure oracle (9 clusters /
-    // 286 core / 141 border / 73 noise at sf0.01). The plane side scales
-    // with sqrt(n) so spatial DENSITY — and with it per-point neighbor
-    // counts, pair volume, and component sizes — stays constant at any
-    // scale (a fixed plane would grow neighbors linearly in n and the
-    // pair list quadratically; measured: heap-death at the sf1 replica).
-    // The side derivation (650·sqrt(n/500), floored, ≥650) is one
-    // count() of driver metadata, replayed by the oracle from count(*);
-    // sqrt/mult/floor are correctly-rounded IEEE ops in both engines.
-    val base = Tables.documents(s, d)
-    val n = base.count()
-    val side = math.max(650L, math.floor(650.0 * math.sqrt(n / 500.0)).toLong)
-    val m = 2147483648L
-    val pts = base.select(col("doc_id").as("id"),
-      (pmod(col("doc_id"), lit(m)) * lit(2654435761L) % lit(m) % lit(side)).as("x"),
-      (pmod(col("doc_id"), lit(m)) * lit(2246822519L) % lit(m) % lit(side)).as("y"))
-    Relational.sort(col("id"))(
-      graft.pipeline.Spatial.dbscan(pts, "id", "x", "y", eps = 40L, minPts = 5))
-  }
-
-  private def qDrawdown(s: SparkSession, d: String): DataFrame =
-    // Max drawdown of the daily revenue series per order priority:
-    // decimal prefix-max window + one argmax struct fold (earliest
-    // trough wins ties).
-    Relational.sort(col("o_orderpriority"))(
-      graft.pipeline.TimeSeries.drawdown(Tables.orders(s, d),
-        "o_orderpriority", "o_orderdate", "o_totalprice"))
-
-  private def qLdiversity(s: SparkSession, d: String): DataFrame =
-    // Distinct-l diversity of account balances within (nation, segment)
-    // quasi-classes at l=5 — the sensitive-value companion to q_kanon.
-    graft.pipeline.Checks.lDiversity(Tables.customer(s, d),
-      Seq("c_nationkey", "c_mktsegment"), "c_acctbal", 5L)
-
-  private def qMultireg(s: SparkSession, d: String): DataFrame =
-    // Two-feature OLS per return flag: extendedprice on (quantity,
-    // discount) — Cramer closed form over exact decimal moments.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.linearFit2(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_discount", "l_extendedprice"))
-
-  private def qPca(s: SparkSession, d: String): DataFrame =
-    // 2-D PCA per return flag: closed-form eigen of the exact-moment
-    // covariance; lam/explained are fixed double dags, theta 6-dp.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.pca2d(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice"))
-
-  private def qFisherExact(s: SparkSession, d: String): DataFrame =
-    // Fisher's exact 2x2 (even-nation x heavy-segment membership):
-    // ln-factorial table as distributed decimal prefix sums, pmf =
-    // exp(fixed dag) rounded to absolute 10 dp, three p-value folds.
-    graft.pipeline.Profile.fisherExact2x2(Tables.customer(s, d),
-      pmod(col("c_nationkey"), lit(2)) === 0,
-      col("c_mktsegment").isin("BUILDING", "AUTOMOBILE"))
-
-  private def qMultimodalTiff(s: SparkSession, d: String): DataFrame = {
-    // REAL codec gate (q_multimodal_bmp pattern): baseline little-endian
-    // TIFF per document — pixels at offset 8, 9-tag IFD after them — so
-    // n_bytes is closed-form 128 + 3wh and the IFD walk re-reads the
-    // dimensions it wrote.
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      (pmod(col("doc_id"), lit(64)) + 1).cast("int").as("w"),
-      (pmod(floor(col("doc_id") / 64).cast("long"), lit(64)) + 1).cast("int").as("h"),
-      col("text").cast("binary").as("seed"))
-    val enc = Multimodal.encodeTiff(docs, "w", "h", "seed", "payload")
-    val meta = Multimodal.decodeMeta(enc, "payload")
-    meta.select(col("doc_id"), col("media_format"), col("width"), col("height"),
-      col("n_bytes"),
-      (col("width") === col("w") && col("height") === col("h")).as("roundtrip_ok"))
-      .orderBy("doc_id")
-  }
-
-  private def qContainmentJoin(s: SparkSession, d: String): DataFrame =
-    // Directional 3-shingle containment >= 0.8 (quote/excerpt detection):
-    // one-sided prefix filter + exact sorted-hash verify; ALL-PAIRS
-    // oracle equality proves the asymmetric prefix cut lost nothing.
-    // Shingle sets, not unigram sets: the synthetic corpus shares a
-    // small vocabulary, so unigram containment saturates (measured 144k
-    // of 250k ordered pairs >= 0.8) while 3-shingle containment finds
-    // exactly the planted copies (50 pairs at sf0.01).
-    Relational.sort(col("id1"), col("id2"))(
-      graft.pipeline.Dedup.containmentPairs(Tables.documents(s, d),
-        "doc_id", "text", threshold = 0.8, shingleWidth = 3))
-
-  private def qAssortativity(s: SparkSession, d: String): DataFrame = {
-    // Degree assortativity of the q_triangles co-occurrence graph:
-    // decimal-exact degree moments, corrExact double dag.
-    val o = Tables.orders(s, d)
-    val edges = o.select(pmod(col("o_custkey"), lit(97L)).as("x"),
-      pmod(col("o_orderkey"), lit(97L)).as("y"))
-    graft.pipeline.Graph.degreeAssortativity(edges, "x", "y")
-  }
-
-  private def qBollinger(s: SparkSession, d: String): DataFrame =
-    // 7-day Bollinger bands (mean +/- 2 sigma) over daily revenue per
-    // priority with breakout flags: exact decimal window sums, one
-    // fixed double dag per row.
-    Relational.sort(col("o_orderpriority"), col("day"))(
-      graft.pipeline.TimeSeries.bollinger(Tables.orders(s, d),
-        "o_orderpriority", "o_orderdate", "o_totalprice",
-        window = 7, mult = 2.0))
-
-  private def qPhonetic(s: SparkSession, d: String): DataFrame = {
-    // Phonetic blocking over a surname vocabulary with planted spelling
-    // variants (smith/smyth/smythe, reed/read/reid, ...) indexed by
-    // customer key — the table vocabularies are too small (16-31 words)
-    // to block interestingly. karl/carl is the deliberate NEGATIVE case:
-    // phonetically identical but Soundex keeps the first letter, so they
-    // must NOT pair. Codes + same-code pairs, full SQL chain replay.
-    val pool = Seq("smith", "smyth", "smythe", "jon", "john", "jahn",
-      "meyer", "myer", "mayer", "reed", "read", "reid",
-      "stuart", "stewart", "karl", "carl")
-    val words = Tables.customer(s, d).select(
-      element_at(array(pool.map(lit): _*),
-        (pmod(col("c_custkey"), lit(16)) + 1).cast("int")).as("w"))
-    Relational.sort(col("code"), col("w1"), col("w2"))(
-      graft.pipeline.TextAnalysis.phoneticPairs(words, "w"))
-  }
-
-  private def qSilhouette(s: SparkSession, d: String): DataFrame =
-    // Simplified silhouette of the q_kmeans clustering (k=8, 3 iters):
-    // exact-integer centroid distances, 6-dp decimal-summed scores.
-    Relational.sort(col("cid"))(
-      graft.pipeline.Similarity.silhouetteSimplified(Tables.embeddings(s, d),
-        "vec_id", "embedding", k = 8, iters = 3))
-
-  private def qKnnClassify(s: SparkSession, d: String): DataFrame = {
-    // 5-NN majority-label classification for the first 50 vectors:
-    // exact cosine ranks, ties to the smaller label.
-    val emb = Tables.embeddings(s, d)
-    Relational.sort(col("vec_id"))(
-      graft.pipeline.Similarity.knnClassify(emb, "vec_id", "embedding",
-        "label", emb.where(col("vec_id") < 50), k = 5))
-  }
-
-  private def qDecileLift(s: SparkSession, d: String): DataFrame =
-    // Decile gains table for value-as-score predicting purchases:
-    // distributed global rank (no per-row global window), exact counts,
-    // fixed-dag rates and cumulative lift.
-    Relational.sort(col("bucket"))(
-      graft.pipeline.Scoring.decileLift(Tables.events(s, d), "value",
-        col("event_type") === "purchase", "event_id", buckets = 10))
-
-  private def qIntervalGaps(s: SparkSession, d: String): DataFrame = {
-    // Idle windows between the q_interval_merge busy spans: one extra
-    // key-sharded lag over the merged islands.
-    val iv = Tables.events(s, d).select(col("user_id"),
-      graft.functions.Exprs.epochMicrosCivil(col("ts")).as("s"),
-      (graft.functions.Exprs.epochMicrosCivil(col("ts")) +
-        ((col("event_id") % 7) + 1) * 600000000L).as("e"))
-    Relational.sort(col("user_id"), col("gap_start"))(
-      graft.pipeline.Events.intervalGaps(iv, Seq("user_id"), "s", "e"))
-  }
-
-  private def qDiversity(s: SparkSession, d: String): DataFrame =
-    // Source concentration per language: HHI / Simpson / top share —
-    // fixed dags over exact counts, no rounding convention needed.
-    Relational.sort(col("lang"))(
-      graft.pipeline.Profile.diversityIndices(Tables.documents(s, d),
-        "lang", "source"))
-
-  private def qRunsTest(s: SparkSession, d: String): DataFrame =
-    // Wald-Wolfowitz runs test of value randomness per event type:
-    // lower-median binarization, exact run counts, textbook z dag.
-    Relational.sort(col("event_type"))(
-      graft.pipeline.Profile.runsTest(Tables.events(s, d),
-        "event_type", "ts", "event_id", "value"))
-
-  private def qSeasonalDecompose(s: SparkSession, d: String): DataFrame =
-    // Additive STL-lite over daily revenue per priority: centered 7-row
-    // trend, per-weekday seasonal means over 6-dp detrended decimals.
-    Relational.sort(col("o_orderpriority"), col("day"))(
-      graft.pipeline.TimeSeries.seasonalDecompose(Tables.orders(s, d),
-        "o_orderpriority", "o_orderdate", "o_totalprice"))
-
-  private def qBurstiness(s: SparkSession, d: String): DataFrame =
-    // Goh-Barabasi burstiness + CV of inter-event gaps per user:
-    // exact-decimal gap moments, one fixed dag.
-    Relational.sort(col("user_id"))(
-      graft.pipeline.Events.burstiness(Tables.events(s, d),
-        Seq("user_id"), "ts", "event_id"))
-
-  private def qBreakpoint(s: SparkSession, d: String): DataFrame =
-    // Binary-segmentation first split of daily revenue per priority:
-    // exact decimal prefix sums, fixed-dag between-SS, earliest-tie
-    // argmax struct fold.
-    Relational.sort(col("o_orderpriority"))(
-      graft.pipeline.TimeSeries.breakpoint(Tables.orders(s, d),
-        "o_orderpriority", "o_orderdate", "o_totalprice"))
-
-  private def qInterpolate(s: SparkSession, d: String): DataFrame =
-    // Linear-interpolation gap fill over a sparsified event stream
-    // (every 11th event): observed buckets exact, gaps on the straight
-    // line, edges NULL.
-    Relational.sort(col("event_type"), col("bucket"))(
-      graft.pipeline.TimeSeries.interpolateLinear(
-        Tables.events(s, d).where(col("event_id") % 11 === 0),
-        "event_type", "ts", "value", unit = "day"))
-
-  private def qEffectSize(s: SparkSession, d: String): DataFrame =
-    // Cohen's d + Hedges g for A-vs-R extendedprice: exact decimal
-    // moments, pooled-SD fixed dag.
-    graft.pipeline.Profile.cohensD(Tables.lineitem(s, d),
-      "l_returnflag", "l_extendedprice", "A", "R")
-
-  private def qFdr(s: SparkSession, d: String): DataFrame = {
-    // Benjamini-Hochberg step-up over synthetic deterministic p-values
-    // (planted 1000x-smaller signals at event_id % 23): distributed
-    // global rank, broadcast m and k*.
-    val ps = Tables.events(s, d).select(col("event_id").as("id"),
-      (when(col("event_id") % 23 === 0, lit(0.001)).otherwise(lit(1.0)) *
-        (pmod(col("event_id") * 2654435761L, lit(1000000L)).cast("double") /
-          lit(1000000.0))).as("p"))
-    Relational.sort(col("id"))(
-      graft.pipeline.Checks.benjaminiHochberg(ps, "id", "p", q = 0.1))
-  }
-
-  private def qRollingCorr(s: SparkSession, d: String): DataFrame =
-    // 14-day rolling correlation of daily quantity vs revenue per
-    // return flag: exact decimal window moments, corrExact dag per row.
-    Relational.sort(col("l_returnflag"), col("day"))(
-      graft.pipeline.TimeSeries.rollingCorr(Tables.lineitem(s, d),
-        "l_returnflag", "l_shipdate", "l_quantity", "l_extendedprice",
-        window = 14))
-
-  private def qCrossCorr(s: SparkSession, d: String): DataFrame =
-    // Lead-lag cross-correlation (lags -3..3) of daily quantity vs
-    // revenue per return flag: one lag-shifted self-join per lag value.
-    Relational.sort(col("l_returnflag"), col("lag"))(
-      graft.pipeline.TimeSeries.crossCorrLags(Tables.lineitem(s, d),
-        "l_returnflag", "l_shipdate", "l_quantity", "l_extendedprice",
-        maxLag = 3))
-
-  private def qWeightedLinreg(s: SparkSession, d: String): DataFrame =
-    // Tax-weighted OLS of extendedprice on quantity per return flag:
-    // weighted normal equations over exact decimal moments.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.weightedLinearFit(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice", "l_tax"))
-
-  private def qHistogram2d(s: SparkSession, d: String): DataFrame =
-    // 2-D density grid of (quantity, extendedprice) with under/overflow
-    // and NULL cells — mass-conserving floor arithmetic.
-    Relational.sort(col("bx"), col("by"))(
-      graft.pipeline.Profile.histogram2d(Tables.lineitem(s, d),
-        "l_quantity", "l_extendedprice",
-        xLo = 5.0, xHi = 45.0, nx = 8, yLo = 2000.0, yHi = 80000.0, ny = 8))
-
-  private def qSpearman(s: SparkSession, d: String): DataFrame =
-    // Tie-aware Spearman rho per return flag: integer doubled midranks
-    // (Pearson is affine-invariant), decimal moments, corrExact dag.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.spearmanCorr(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice"))
-
-  private def qPartialCorr(s: SparkSession, d: String): DataFrame =
-    // Partial corr of quantity-revenue controlling discount: ten decimal
-    // moments in one pass, first-order identity dag.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.partialCorr(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice", "l_discount"))
-
-  private def qCuped(s: SparkSession, d: String): DataFrame =
-    // CUPED variance reduction: pre-period covariate before Jan 16,
-    // metric after; theta fitted globally, per-arm adjusted means via
-    // linearity (no per-row doubles anywhere).
-    Relational.sort(col("arm"))(
-      graft.pipeline.Profile.cupedAdjust(Tables.events(s, d),
-        "user_id", "ts", "value", "2024-01-16 00:00:00",
-        pmod(col("user_id"), lit(2L))))
-
-  private def qCronbach(s: SparkSession, d: String): DataFrame =
-    // Cronbach's alpha over (quantity, discount, tax) per return flag:
-    // one wide moment scan, population-variance dag.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.cronbachAlpha(Tables.lineitem(s, d),
-        "l_returnflag", Seq("l_quantity", "l_discount", "l_tax")))
-
-  private def qMahalanobis(s: SparkSession, d: String): DataFrame =
-    // Joint (quantity, price) outliers per return flag: closed-form 2x2
-    // inverse, broadcast stats, codegen filter. Threshold 5.5, not the
-    // chi2-99% 9.21: the synthetic marginals are bounded-uniform (max
-    // observed md2 = 5.94), so the textbook gaussian fence selects
-    // nothing — 5.5 exercises the tail filter on real rows.
-    Relational.sort(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"))(
-      graft.pipeline.Profile.mahalanobis2d(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_extendedprice",
-        Seq("l_orderkey", "l_linenumber"), threshold = 5.5))
-
-  private def qZipf(s: SparkSession, d: String): DataFrame =
-    // Zipf rank-frequency fit over the corpus vocabulary: 6-dp ln
-    // decimals, linearFit dag, exponent = -slope.
-    graft.pipeline.Scoring.zipfFit(Tables.documents(s, d), "text")
-
-  private def qForecastEval(s: SparkSession, d: String): DataFrame =
-    // Seasonal-naive (lag-7) forecast error floor per priority:
-    // exact decimal errors, 6-dp ratio terms, MAE/RMSE/MAPE/sMAPE.
-    Relational.sort(col("o_orderpriority"))(
-      graft.pipeline.TimeSeries.forecastErrors(Tables.orders(s, d),
-        "o_orderpriority", "o_orderdate", "o_totalprice", seasonLag = 7))
-
-  private def qAttributionPosition(s: SparkSession, d: String): DataFrame =
-    // U-shaped 40/20/40 credit in exact mills, aggregated per type;
-    // per-user credit sums to 10^6 by construction.
-    Relational.sort(col("event_type"))(
-      graft.pipeline.Events.positionAttribution(Tables.events(s, d),
-        "user_id", "ts", "event_type", "event_id",
-        Seq("view", "click"), "purchase")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_touches"),
-          sum(col("credit_mills")).as("total_credit")))
-
-  private def qAttributionDecay(s: SparkSession, d: String): DataFrame =
-    // Time-decay credit: exact 2^(maxAge-age) integer weights, floor
-    // division, remainder to the earliest touch.
-    Relational.sort(col("event_type"))(
-      graft.pipeline.Events.timeDecayAttribution(Tables.events(s, d),
-        "user_id", "ts", "event_type", "event_id",
-        Seq("view", "click"), "purchase", maxAgeDays = 30)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_touches"),
-          sum(col("credit_mills")).as("total_credit"),
-          sum(col("weight")).as("total_weight")))
-
-  private def qGraphSummary(s: SparkSession, d: String): DataFrame = {
-    // One-row profile of the q_triangles co-occurrence graph treated as
-    // DIRECTED (custkey -> orderkey fold): reciprocity, density, degrees.
-    val o = Tables.orders(s, d)
-    val edges = o.select(pmod(col("o_custkey"), lit(97L)).as("x"),
-      pmod(col("o_orderkey"), lit(97L)).as("y"))
-    graft.pipeline.Graph.graphSummary(edges, "x", "y")
-  }
-
-  private def qSubseqCount(s: SparkSession, d: String): DataFrame =
-    // ALL view->click->purchase subsequences per user: the two-stacked-
-    // prefix-window DP (funnel counts only the first frontier).
-    Relational.sort(col("user_id"))(
-      graft.pipeline.Events.subsequenceCount(Tables.events(s, d),
-        "user_id", "ts", "event_id", "event_type",
-        ("view", "click", "purchase")))
-
-  private def qDensityAnomaly(s: SparkSession, d: String): DataFrame = {
-    // Grid relative-density anomalies over the q_spatial_join plane
-    // (cell 250): hotspot/void flags vs the 8-neighbor mean.
-    val m = 2147483648L
-    val pts = Tables.documents(s, d).select(
-      (pmod(col("doc_id"), lit(m)) * lit(2654435761L) % lit(m) % lit(4000L)).as("x"),
-      (pmod(col("doc_id"), lit(m)) * lit(2246822519L) % lit(m) % lit(4000L)).as("y"))
-    Relational.sort(col("cx"), col("cy"))(
-      graft.pipeline.Spatial.gridDensityAnomaly(pts, "x", "y", cellSize = 250L))
-  }
-
-  private def qSeasonalAnomaly(s: SparkSession, d: String): DataFrame =
-    // STL-style residual anomalies: decompose + per-key lower-median/MAD
-    // fences on the identical-dag residual doubles.
-    Relational.sort(col("o_orderpriority"), col("day"))(
-      graft.pipeline.TimeSeries.seasonalAnomalies(Tables.orders(s, d),
-        "o_orderpriority", "o_orderdate", "o_totalprice", k = 3.0))
-
-  private def qMannKendall(s: SparkSession, d: String): DataFrame =
-    // Mann-Kendall monotone-trend test on the daily revenue series:
-    // pairwise signs over the bounded day table, tie-corrected z.
-    Relational.sort(col("o_orderpriority"))(
-      graft.pipeline.TimeSeries.mannKendall(Tables.orders(s, d),
-        "o_orderpriority", "o_orderdate", "o_totalprice"))
-
-  private def qKendall(s: SparkSession, d: String): DataFrame =
-    // Kendall tau-b via distinct-cell pair products (|X||Y| cells, never
-    // n^2 rows), marginal tie terms, fixed dag.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.kendallTau(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", "l_discount"))
-
-  private def qChao1(s: SparkSession, d: String): DataFrame =
-    // Chao1 vocabulary-richness + Good's coverage from the frequency-of-
-    // frequencies: the "is more crawling still buying new content" card.
-    // 3-shingle units: the 31-word closed vocabulary has no rare
-    // unigrams (f1 = f2 = 0 makes Chao1 degenerate); shingles have a
-    // real tail (9,424 singletons of 16,245 distinct at sf0.01).
-    graft.pipeline.Vocab.chao1Richness(Tables.documents(s, d), "text",
-      shingleWidth = 3)
-
-  private def qGoodTuring(s: SparkSession, d: String): DataFrame =
-    // Good-Turing adjusted counts r* for r <= 5; gap rows report NULL.
-    Relational.sort(col("r"))(
-      graft.pipeline.Vocab.goodTuring(Tables.documents(s, d), "text",
-        maxR = 5, shingleWidth = 3))
-
-  private def qWeibull(s: SparkSession, d: String): DataFrame =
-    // Weibull probability-plot fit of extendedprice per return flag:
-    // Benard median ranks at tied-block edges, 6-dp ln decimals.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.weibullFit(Tables.lineitem(s, d),
-        "l_returnflag", "l_extendedprice"))
-
-  private def qBestSplit(s: SparkSession, d: String): DataFrame =
-    // Decision-stump threshold on quantity vs the price>30k label:
-    // prefix-sum class counts, weighted-Gini dag, smallest-threshold tie.
-    Relational.sort(col("l_returnflag"))(
-      graft.pipeline.Profile.bestSplit(Tables.lineitem(s, d),
-        "l_returnflag", "l_quantity", col("l_extendedprice") > 30000))
-
-  private def qFertility(s: SparkSession, d: String): DataFrame =
-    // Tokenizer fertility per language: exact regexp-unit counts, 6-dp
-    // rate dags.
-    Relational.sort(col("lang"))(
-      graft.pipeline.TextAnalysis.fertilityProfile(Tables.documents(s, d),
-        "text", "lang"))
-
-  private def qLangidEval(s: SparkSession, d: String): DataFrame =
-    // Language-ID confusion vs the labeled lang column: per-cell counts
-    // and shares (diagonal share = per-label recall).
-    Relational.sort(col("label"), col("pred"))(
-      graft.pipeline.TextAnalysis.langIdEval(Tables.documents(s, d),
-        "text", "lang"))
-
-  private def qLabelCentroids(s: SparkSession, d: String): DataFrame =
-    // Per-label quantized centroids: exact integer sums, FLOOR-divided
-    // means (Spark div truncates — the pmod correction is load-bearing).
-    Relational.sort(col("label"), col("dim"))(
-      graft.pipeline.Similarity.labelCentroids(Tables.embeddings(s, d),
-        "vec_id", "embedding", "label"))
-
-  private def qEmbeddingDrift(s: SparkSession, d: String): DataFrame =
-    // Per-label drift between corpus halves: cosine of the halves' sum
-    // vectors (scale-invariant — no means, no per-row doubles).
-    Relational.sort(col("label"))(
-      graft.pipeline.Similarity.embeddingDrift(Tables.embeddings(s, d),
-        "vec_id", "embedding", "label", pmod(col("vec_id"), lit(2L))))
-
-  private def qKappa(s: SparkSession, d: String): DataFrame =
-    // Cohen's kappa between the langId heuristic and the labeled lang:
-    // chance-corrected agreement, one cell aggregate + marginal windows.
-    graft.pipeline.Profile.cohensKappa(Tables.documents(s, d),
-      graft.pipeline.TextAnalysis.langId(col("text")), col("lang"))
-
-  private def qDupMatrix(s: SparkSession, d: String): DataFrame = {
-    // Cross-source duplication matrix over the q_dedup_ngram pair
-    // stream: mirror-site mass (cross cells) vs within-crawl
-    // boilerplate (diagonal). An exact-fingerprint form would be empty
-    // at sf0.01 (the planted copies are NEAR-dups), so the near-dup
-    // pair stream is the meaningful input.
-    val docs = Tables.documents(s, d)
-    val pairs = Dedup.lengthBucketJaccardPairs(docs, "doc_id", "text",
-      threshold = 0.5, bucketWidth = 8, shingleLen = 2)
-    Relational.sort(col("source_a"), col("source_b"))(
-      graft.pipeline.Dedup.crossSourceDupMatrix(pairs, "id1", "id2",
-        docs, "doc_id", "source"))
-  }
-
-  private def qWilson(s: SparkSession, d: String): DataFrame =
-    // Wilson CI of the purchase share per ISO weekday: exact counts,
-    // one fixed dag, 6-dp bounds.
-    Relational.sort(col("dow"))(
-      graft.pipeline.Profile.wilsonInterval(
-        Tables.events(s, d).select(
-          dayofweek(col("ts")).as("dow"), col("event_type")),
-        "dow", col("event_type") === "purchase"))
-
-  private def qTopkStability(s: SparkSession, d: String): DataFrame =
-    // Top-20 parts by revenue in each order-parity half: overlap +
-    // Jaccard — the leaderboard-stability diagnostic.
-    graft.pipeline.Profile.topkStability(Tables.lineitem(s, d),
-      "l_partkey", "l_extendedprice", pmod(col("l_orderkey"), lit(2L)), k = 20)
-
-  private def qMacroF1(s: SparkSession, d: String): DataFrame =
-    // Macro P/R/F1 of the langId heuristic vs labels — the class-
-    // imbalance-honest summary kappa doesn't give.
-    graft.pipeline.Profile.macroF1(Tables.documents(s, d),
-      graft.pipeline.TextAnalysis.langId(col("text")), col("lang"))
-
-  private def qSrm(s: SparkSession, d: String): DataFrame =
-    // Sample-ratio-mismatch: chi-square GOF of user_id%3 arm counts
-    // against equal shares, k*sum(o^2)/n - n closed form.
-    graft.pipeline.Profile.sampleRatioCheck(Tables.events(s, d),
-      pmod(col("user_id"), lit(3L)))
-
-  private def qLorenz(s: SparkSession, d: String): DataFrame =
-    // Lorenz decile coordinates of customer revenue — the curve behind
-    // q_gini, via the distributed rank + equal-count bins.
-    Relational.sort(col("bin"))(
-      graft.pipeline.Profile.lorenzPoints(
-        Tables.orders(s, d).select(col("o_custkey"), col("o_totalprice")),
-        "o_custkey", "o_totalprice", points = 10))
-
-  private def qCohortLtv(s: SparkSession, d: String): DataFrame =
-    // Weekly cohort LTV curves: exact decimal period + cumulative
-    // revenue, per-user division at the edge.
-    Relational.sort(col("cohort"), col("offset"))(
-      graft.pipeline.Events.cohortValueCurves(Tables.events(s, d),
-        "user_id", "ts", "value", unit = "week"))
-
-  private def qCharEntropy(s: SparkSession, d: String): DataFrame =
-    // Character-entropy bits/char per language — the codec-free
-    // compression proxy; 6-dp decimal-summed -p*log2(p) terms.
-    Relational.sort(col("lang"))(
-      graft.pipeline.TextAnalysis.charEntropyProfile(
-        Tables.documents(s, d), "text", "lang"))
-
-  // =========================================================================
-  // Registry
-  // =========================================================================
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q_composite_q3" -> (qCompositeQ3 _),
-    "q_composite_q10" -> (qCompositeQ10 _),
-    "q_composite_q5" -> (qCompositeQ5 _),
-    "q_filter_project" -> (qFilterProject _),
-    "q_limit_offset" -> (qLimitOffset _),
-    "q_sort_topk" -> (qSortTopK _),
-    "q_hash_join_inner" -> (qHashJoinInner _),
-    "q_hash_join_left" -> (qHashJoinLeft _),
-    "q_hash_join_right" -> (qHashJoinRight _),
-    "q_hash_join_full" -> (qHashJoinFull _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_salted_agg" -> (qSaltedAgg _),
-    "q_skew_agg_plain" -> (qSkewAggPlain _),
-    "q_skew_agg_salted" -> (qSkewAggSalted _),
-    "q_skew_collect_plain" -> (qSkewCollectPlain _),
-    "q_skew_collect_salted" -> (qSkewCollectSalted _),
-    "q_scan_selection" -> (qScanSelection _),
-    "q_file_roundtrip" -> (qFileRoundtrip _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_upsert" -> (qUpsert _),
-    "q_spy" -> (qSpy _),
-    "q_sketch_distinct" -> (qSketchDistinct _),
-    "q_sketch_quantiles" -> (qSketchQuantiles _),
-    "q_sketch_freq" -> (qSketchFreq _),
-    "q_foreign_filter" -> (qForeignFilter _),
-    "q_rowid_merge_join" -> (qRowidMergeJoin _),
-    "q_coalesce" -> (qCoalesce _),
-    "q_merge_union" -> (qMergeUnion _),
-    "q_generate" -> (qGenerate _),
-    "q_scalar_agg" -> (qScalarAgg _),
-    "q_scalar_agg_empty" -> (qScalarAggEmpty _),
-    "q_group_distinct" -> (qGroupDistinct _),
-    "q_agg_concat" -> (qAggConcat _),
-    "q_first_last" -> (qFirstLast _),
-    "q_agg_limit" -> (qAggLimit _),
-    "q_set_intersect" -> (qSetIntersect _),
-    "q_set_except" -> (qSetExcept _),
-    "q_join5" -> (qJoin5 _),
-    "q_expr_arith" -> (qExprArith _),
-    "q_expr_cmp" -> (qExprCmp _),
-    "q_expr_logic" -> (qExprLogic _),
-    "q_expr_math" -> (qExprMath _),
-    "q_expr_string" -> (qExprString _),
-    "q_expr_regexp" -> (qExprRegexp _),
-    "q_expr_datetime" -> (qExprDatetime _),
-    "q_expr_cast" -> (qExprCast _),
-    "q_expr_hash" -> (qExprHash _),
-    "q_expr_fingerprint" -> (qExprFingerprint _),
-    "q_fileio_parity" -> (qFileioParity _),
-    "q_stateful_running" -> (qStatefulRunning _),
-    "q_stateful_flush" -> (qStatefulFlush _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_ngram" -> (qDedupNgram _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_clusters_rep" -> (qDedupClustersRep _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_dedup_embedding" -> (qDedupEmbedding _),
-    "q_ann_brute" -> (qAnnBrute _),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_text_stats" -> (qTextStats _),
-    "q_text_langid" -> (qTextLangid _),
-    "q_text_fingerprint" -> (qTextFingerprint _),
-    "q_dedup_simhash_portable" -> (qDedupSimhashPortable _),
-    "q_sample_bernoulli" -> (qSampleBernoulli _),
-    "q_spec_roundtrip" -> (qSpecRoundtrip _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_sample_split" -> (qSampleSplit _),
-    "q_mix_corpora" -> (qMixCorpora _),
-    "q_epoch_repeat" -> (qEpochRepeat _),
-    "q_chunk" -> (qChunk _),
-    "q_tfidf" -> (qTfidf _),
-    "q_text_redact" -> (qTextRedact _),
-    "q_profile" -> (qProfile _),
-    "q_profile_hll" -> (qProfileHll _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_winsorize_approx" -> (qWinsorizeApprox _),
-    "q_zorder" -> (qZorder _),
-    "q_zorder_3d" -> (qZorder3d _),
-    "q_text_repetition" -> (qTextRepetition _),
-    "q_text_perplexity" -> (qTextPerplexity _),
-    "q_shard_manifest" -> (qShardManifest _),
-    "q_pack" -> (qPack _),
-    "q_csv_roundtrip" -> (qCsvRoundtrip _),
-    "q_json_roundtrip" -> (qJsonRoundtrip _),
-    "q_contamination" -> (qContamination _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_multimodal" -> (qMultimodal _),
-    "q_multimodal_bmp" -> (qMultimodalBmp _),
-    "q_multimodal_ppm" -> (qMultimodalPpm _),
-    "q_multimodal_png" -> (qMultimodalPng _),
-    "q_image_phash" -> (qImagePhash _),
-    "q_image_dedup" -> (qImageDedup _),
-    "q_multimodal_gif" -> (qMultimodalGif _),
-    "q_multimodal_jpeg" -> (qMultimodalJpeg _),
-    "q_multimodal_wav" -> (qMultimodalWav _),
-    "q_audio_stats" -> (qAudioStats _),
-    "q_audio_phash" -> (qAudioPhash _),
-    "q_vocab_encode" -> (qVocabEncode _),
-    "q_shuffle" -> (qShuffle _),
-    "q_multimodal_mp4" -> (qMultimodalMp4 _),
-    "q_events_window" -> (qEventsWindow _),
-    "q_stream_window" -> (qStreamWindow _),
-    "q_window_rank" -> (qWindowRank _),
-    "q_window_analytics" -> (qWindowAnalytics _),
-    "q_lookup" -> (qLookup _),
-    "q_best_effort_agg" -> (qBestEffortAgg _),
-    "q_agg_clusters" -> (qAggClusters _),
-    "q_sessionize" -> (qSessionize _),
-    "q_stream_sessionize" -> (qStreamSessionize _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_neardedup" -> (qStreamNearDedup _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_stream_outer_join" -> (qStreamOuterJoin _),
-    "q_stream_static_filter" -> (qStreamStaticFilter _),
-    "q_sliding_window" -> (qSlidingWindow _),
-    "q_stream_sliding" -> (qStreamSliding _),
-    "q_enum" -> (qEnum _),
-    "q_enum_storage" -> (qEnumStorage _),
-    "q_expr_policy" -> (qExprPolicy _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_ann_graph" -> (qAnnGraph _),
-    "q_ann_pq" -> (qAnnPq _),
-    "q_ann_pq_trained" -> (qAnnPqTrained _),
-    "q_ann_ivfadc" -> (qAnnIvfAdc _),
-    "q_ann_ivf_trained" -> (qAnnIvfTrained _),
-    "q_rollup" -> (qRollup _),
-    "q_cube" -> (qCube _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_pivot" -> (qPivot _),
-    "q_bloom_join" -> (qBloomJoin _),
-    "q_semdedup" -> (qSemdedup _),
-    "q_manifest_prune" -> (qManifestPrune _),
-    "q_compact" -> (qCompact _),
-    "q_bpe_train" -> (qBpeTrain _),
-    "q_wordpiece_train" -> (qWordpieceTrain _),
-    "q_wordpiece_fertility" -> (qWordpieceFertility _),
-    "q_bpe_train_batched" -> (qBpeTrainBatched _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_pagerank" -> (qPagerank _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_stream_cdc" -> (qStreamCdc _),
-    "q_fuzzy_join" -> (qFuzzyJoin _),
-    "q_histogram" -> (qHistogram _),
-    "q_resample" -> (qResample _),
-    "q_domain_cap" -> (qDomainCap _),
-    "q_funnel" -> (qFunnel _),
-    "q_cohort" -> (qCohort _),
-    "q_histogram_eqdepth" -> (qHistogramEqdepth _),
-    "q_corr" -> (qCorr _),
-    "q_dup_spans" -> (qDupSpans _),
-    "q_dup_spans_full" -> (qDupSpansFull _),
-    "q_dup_longest" -> (qDupLongest _),
-    "q_unigram_train" -> (qUnigramTrain _),
-    "q_quality_classifier" -> (qQualityClassifier _),
-    "q_dsir" -> (qDsir _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_mad_outliers" -> (qMadOutliers _),
-    "q_setsim_join" -> (qSetsimJoin _),
-    "q_setsim_clusters" -> (qSetsimClusters _),
-    "q_triangles" -> (qTriangles _),
-    "q_funnel_windowed" -> (qFunnelWindowed _),
-    "q_inverted_index" -> (qInvertedIndex _),
-    "q_quantile_norm" -> (qQuantileNorm _),
-    "q_scd2" -> (qScd2 _),
-    "q_linreg" -> (qLinreg _),
-    "q_period_over_period" -> (qPeriodOverPeriod _),
-    "q_pmi" -> (qPmi _),
-    "q_validate" -> (qValidate _),
-    "q_hierarchy" -> (qHierarchy _),
-    "q_chisq" -> (qChisq _),
-    "q_ttest" -> (qTtest _),
-    "q_kanon" -> (qKanon _),
-    "q_key_skew" -> (qKeySkew _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q_golden" -> (qGolden _),
-    "q_join_size" -> (qJoinSize _),
-    "q_basket" -> (qBasket _),
-    "q_spatial_join" -> (qSpatialJoin _),
-    "q_kmeans" -> (qKmeans _),
-    "q_rproj" -> (qRproj _),
-    "q_anova" -> (qAnova _),
-    "q_attribution" -> (qAttribution _),
-    "q_dp_counts" -> (qDpCounts _),
-    "q_text_normalize" -> (qTextNormalize _),
-    "q_incremental_agg" -> (qIncrementalAgg _),
-    "q_profile_drift" -> (qProfileDrift _),
-    "q_skew_join" -> (qSkewJoin _),
-    "q_rate_anomaly" -> (qRateAnomaly _),
-    "q_top_values" -> (qTopValues _),
-    "q_stream_incremental" -> (qStreamIncremental _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_temporal_split" -> (qTemporalSplit _),
-    "q_anchor_chunks" -> (qAnchorChunks _),
-    "q_negatives" -> (qNegatives _),
-    "q_recipe" -> (qRecipe _),
-    "q_embed_quantize" -> (qEmbedQuantize _),
-    "q_csv_quarantine" -> (qCsvQuarantine _),
-    "q_html_strip" -> (qHtmlStrip _),
-    "q_url_dedup" -> (qUrlDedup _),
-    "q_line_dedup" -> (qLineDedup _),
-    "q_lexical_diversity" -> (qLexicalDiversity _),
-    "q_length_buckets" -> (qLengthBuckets _),
-    "q_novelty" -> (qNovelty _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_debounce" -> (qDebounce _),
-    "q_argmax" -> (qArgmax _),
-    "q_interval_merge" -> (qIntervalMerge _),
-    "q_transitions" -> (qTransitions _),
-    "q_ntile" -> (qNtile _),
-    "q_fd_check" -> (qFdCheck _),
-    "q_rfm" -> (qRfm _),
-    "q_abc" -> (qAbc _),
-    "q_mannwhitney" -> (qMannwhitney _),
-    "q_ks_test" -> (qKsTest _),
-    "q_item_sim" -> (qItemSim _),
-    "q_kfold" -> (qKfold _),
-    "q_time_travel" -> (qTimeTravel _),
-    "q_paths" -> (qPaths _),
-    "q_moving_avg" -> (qMovingAvg _),
-    "q_ohlc" -> (qOhlc _),
-    "q_top_n_other" -> (qTopNOther _),
-    "q_prop_test" -> (qPropTest _),
-    "q_schema_evolution" -> (qSchemaEvolution _),
-    "q_pit_join" -> (qPitJoin _),
-    "q_linkage" -> (qLinkage _),
-    "q_benford" -> (qBenford _),
-    "q_date_dim" -> (qDateDim _),
-    "q_skyline" -> (qSkyline _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_concurrency" -> (qConcurrency _),
-    "q_auc" -> (qAuc _),
-    "q_gini" -> (qGini _),
-    "q_bfs" -> (qBfs _),
-    "q_pip" -> (qPip _),
-    "q_survival" -> (qSurvival _),
-    "q_log_templates" -> (qLogTemplates _),
-    "q_entity_tag" -> (qEntityTag _),
-    "q_skipgram" -> (qSkipgram _),
-    "q_apportion" -> (qApportion _),
-    "q_cusum" -> (qCusum _),
-    "q_autocorr" -> (qAutocorr _),
-    "q_classifier_eval" -> (qClassifierEval _),
-    "q_theilsen" -> (qTheilsen _),
-    "q_standardize" -> (qStandardize _),
-    "q_impute" -> (qImpute _),
-    "q_target_encode" -> (qTargetEncode _),
-    "q_clustering_coef" -> (qClusteringCoef _),
-    "q_cumulative_users" -> (qCumulativeUsers _),
-    "q_active_users" -> (qActiveUsers _),
-    "q_band_join" -> (qBandJoin _),
-    "q_reconcile" -> (qReconcile _),
-    "q_tukey" -> (qTukey _),
-    "q_type_trigrams" -> (qTypeTrigrams _),
-    "q_seasonal" -> (qSeasonal _),
-    "q_hill" -> (qHill _),
-    "q_blocking_quality" -> (qBlockingQuality _),
-    "q_hopping_window" -> (qHoppingWindow _),
-    "q_rate_limit" -> (qRateLimit _),
-    "q_weighted_median" -> (qWeightedMedian _),
-    "q_funnel_latency" -> (qFunnelLatency _),
-    "q_psi" -> (qPsi _),
-    "q_mutual_info" -> (qMutualInfo _),
-    "q_path_length" -> (qPathLength _),
-    "q_multi_touch" -> (qMultiTouch _),
-    "q_not_in" -> (qNotIn _),
-    "q_streak" -> (qStreak _),
-    "q_fk_discovery" -> (qFkDiscovery _),
-    "q_kcore" -> (qKcore _),
-    "q_trimmed_mean" -> (qTrimmedMean _),
-    "q_rebalance" -> (qRebalance _),
-    "q_naive_bayes" -> (qNaiveBayes _),
-    "q_sorted_blocking" -> (qSortedBlocking _),
-    "q_sssp" -> (qSssp _),
-    "q_isotonic" -> (qIsotonic _),
-    "q_ranking_metrics" -> (qRankingMetrics _),
-    "q_calibration" -> (qCalibration _),
-    "q_twap" -> (qTwap _),
-    "q_ewma" -> (qEwma _),
-    "q_overlap_duration" -> (qOverlapDuration _),
-    "q_did" -> (qDid _),
-    "q_cidr_join" -> (qCidrJoin _),
-    "q_cidr_lpm" -> (qCidrLpm _),
-    "q_phrase_search" -> (qPhraseSearch _),
-    "q_readability" -> (qReadability _),
-    "q_luhn" -> (qLuhn _),
-    "q_topo_layers" -> (qTopoLayers _),
-    "q_subtree_rollup" -> (qSubtreeRollup _),
-    "q_geo_harm_mean" -> (qGeoHarmMean _),
-    "q_sequence_gaps" -> (qSequenceGaps _),
-    "q_dbscan" -> (qDbscan _),
-    "q_drawdown" -> (qDrawdown _),
-    "q_ldiversity" -> (qLdiversity _),
-    "q_multireg" -> (qMultireg _),
-    "q_pca" -> (qPca _),
-    "q_fisher_exact" -> (qFisherExact _),
-    "q_multimodal_tiff" -> (qMultimodalTiff _),
-    "q_containment_join" -> (qContainmentJoin _),
-    "q_assortativity" -> (qAssortativity _),
-    "q_bollinger" -> (qBollinger _),
-    "q_phonetic" -> (qPhonetic _),
-    "q_silhouette" -> (qSilhouette _),
-    "q_knn_classify" -> (qKnnClassify _),
-    "q_decile_lift" -> (qDecileLift _),
-    "q_interval_gaps" -> (qIntervalGaps _),
-    "q_diversity" -> (qDiversity _),
-    "q_runs_test" -> (qRunsTest _),
-    "q_seasonal_decompose" -> (qSeasonalDecompose _),
-    "q_burstiness" -> (qBurstiness _),
-    "q_breakpoint" -> (qBreakpoint _),
-    "q_interpolate" -> (qInterpolate _),
-    "q_effect_size" -> (qEffectSize _),
-    "q_fdr" -> (qFdr _),
-    "q_rolling_corr" -> (qRollingCorr _),
-    "q_cross_corr" -> (qCrossCorr _),
-    "q_weighted_linreg" -> (qWeightedLinreg _),
-    "q_histogram_2d" -> (qHistogram2d _),
-    "q_spearman" -> (qSpearman _),
-    "q_partial_corr" -> (qPartialCorr _),
-    "q_cuped" -> (qCuped _),
-    "q_cronbach" -> (qCronbach _),
-    "q_mahalanobis" -> (qMahalanobis _),
-    "q_zipf" -> (qZipf _),
-    "q_forecast_eval" -> (qForecastEval _),
-    "q_attribution_position" -> (qAttributionPosition _),
-    "q_attribution_decay" -> (qAttributionDecay _),
-    "q_graph_summary" -> (qGraphSummary _),
-    "q_subseq_count" -> (qSubseqCount _),
-    "q_density_anomaly" -> (qDensityAnomaly _),
-    "q_seasonal_anomaly" -> (qSeasonalAnomaly _),
-    "q_mann_kendall" -> (qMannKendall _),
-    "q_kendall" -> (qKendall _),
-    "q_chao1" -> (qChao1 _),
-    "q_good_turing" -> (qGoodTuring _),
-    "q_weibull" -> (qWeibull _),
-    "q_best_split" -> (qBestSplit _),
-    "q_fertility" -> (qFertility _),
-    "q_langid_eval" -> (qLangidEval _),
-    "q_label_centroids" -> (qLabelCentroids _),
-    "q_embedding_drift" -> (qEmbeddingDrift _),
-    "q_kappa" -> (qKappa _),
-    "q_dup_matrix" -> (qDupMatrix _),
-    "q_wilson" -> (qWilson _),
-    "q_topk_stability" -> (qTopkStability _),
-    "q_macro_f1" -> (qMacroF1 _),
-    "q_srm" -> (qSrm _),
-    "q_lorenz" -> (qLorenz _),
-    "q_cohort_ltv" -> (qCohortLtv _),
-    "q_char_entropy" -> (qCharEntropy _),
-  )
-
-  /** Declared UNTIMED setup per query: one-time ingest work a production
-    * deployment pays at load time, not per query — Bench runs this outside
-    * its timed best-of-K window (and Verify just lets the query run it
-    * inline, where wall time is not the measurement). q_bucketed_join's
-    * row in BASELINE.md times the co-located JOIN, which only holds if the
-    * two bucketed-table writes it probes happen before the timer starts:
-    * the ingest is memoized per (JVM, sfDir), so in any FRESH JVM the
-    * first timed attempt would otherwise pay the ~3 s two-table write
-    * (the round-6 verdict's one non-reproducible bench row). */
-  def benchSetup: Map[String, (SparkSession, String) => Unit] = Map(
-    "q_bucketed_join" -> ((s, d) => { ensureBucketedIngest(s, d); () }))
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  // ===== SupersonicHash DuckDB oracle builders: replay the reference's
-  // hash.cc mod-2^64 prime mixing in HUGEINT arithmetic. 64x64-bit
-  // multiply is done in 32-bit limbs (each partial product < 2^64 fits a
-  // hugeint); uint64 state converts to two's-complement BIGINT at the end
-  // to match the Spark side's LongType carry. Validated against golden
-  // vectors from the compiled reference (SupersonicHashSpec). =====
-  private val SsPrimeList: String =
-    graft.functions.SupersonicHashing.Primes64.map(p => s"$p::HUGEINT")
-      .mkString("[", ",", "]")
-  private def ssMul64(a: String, b: String): String =
-    s"((($a)%4294967296)*(($b)%4294967296) + (((($a)//4294967296)*(($b)%4294967296)" +
-      s" + (($a)%4294967296)*(($b)//4294967296))%4294967296)*4294967296)" +
-      " % 18446744073709551616::HUGEINT"
-  private def ssPrime(idx: String): String =
-    s"list_extract($SsPrimeList, (($idx)%16)+1)"
-  /** 4-byte little-endian chunk at 0-based chunk index `pos` of an ASCII
-    * string column, zero-padded (hash.cc:60-70 union read). */
-  private def ssChunk(sCol: String, pos: String): String = {
-    def byte(i: Int) =
-      s"(CASE WHEN length($sCol) >= ($pos)*4+$i+1 THEN ord(substr($sCol, ($pos)*4+$i+1, 1)) ELSE 0 END)"
-    s"(${byte(0)} + ${byte(1)}*256 + ${byte(2)}*65536 + ${byte(3)}*16777216)::HUGEINT"
-  }
-  private def ssToI64(n: String): String =
-    s"CAST(CASE WHEN ($n) >= 9223372036854775808::HUGEINT THEN ($n) - 18446744073709551616::HUGEINT ELSE ($n) END AS BIGINT)"
-  private def ssU64(v: String): String =
-    s"(CASE WHEN ($v) < 0 THEN ($v)::HUGEINT + 18446744073709551616::HUGEINT ELSE ($v)::HUGEINT END)"
-  /** Closed-form Hash64NumWithSeed over the uint64 image of a BIGINT
-    * expression: exactly two chunks (low, high 32 bits). */
-  private def ssHashNum(v: String, seed: Long): String = {
-    val P = graft.functions.SupersonicHashing.Primes64
-    val u = ssU64(v)
-    val lo = s"(($u)%4294967296)"
-    val hi = s"(($u)//4294967296)"
-    val n1 = s"xor(${ssMul64(s"$seed::HUGEINT", s"${P(0)}::HUGEINT")}, ${ssMul64(lo, s"${P(8)}::HUGEINT")})"
-    s"xor(${ssMul64(n1, s"${P(1)}::HUGEINT")}, ${ssMul64(hi, s"${P(9)}::HUGEINT")})"
-  }
-  /** q_expr_fingerprint oracle: a recursive CTE walks each c_name's chunk
-    * stream once, carrying BOTH the fingerprint (seed 42) and the seed-7
-    * hash state; numeric fingerprints are closed-form. */
-  private def ssFingerprintOracleSql: String = {
-    val step = (st: String) =>
-      s"xor(${ssMul64(st, ssPrime("pos"))}, ${ssMul64(ssChunk("s", "pos"), ssPrime("pos+8"))})"
-    s"""WITH RECURSIVE mix AS (
-       |  SELECT c_custkey AS id, c_name AS s, 42::HUGEINT AS fp, 7::HUGEINT AS h7, 0 AS pos,
-       |         CAST(ceil(length(c_name)/4.0) AS INT) AS nc
-       |  FROM customer
-       |  UNION ALL
-       |  SELECT id, s, ${step("fp")}, ${step("h7")}, pos+1, nc
-       |  FROM mix WHERE pos < nc
-       |)
-       |SELECT id AS c_custkey,
-       |  ${ssToI64("fp")} AS fp_name,
-       |  ${ssToI64("h7")} AS h7_name,
-       |  ${ssToI64(ssHashNum("id", 42L))} AS fp_key,
-       |  ${ssToI64(ssHashNum("CAST(n32 AS BIGINT)", 42L))} AS fp_n32
-       |FROM mix JOIN (SELECT c_custkey AS jid, c_nationkey - 13 AS n32 FROM customer) ON id = jid
-       |WHERE pos = nc
-       |ORDER BY c_custkey""".stripMargin
-  }
-
-  /** q_unigram_train oracle: full unrolled replay of `rounds` Viterbi-EM
-    * rounds. Per round, a recursive CTE ENUMERATES every segmentation of
-    * every distinct word (pieces <= 4 chars; tractable because words are
-    * short) and ranks by the exact integer objective —
-    * (cost = pieces * 2^52 - score mass, then reversed piece-length list)
-    * — which equals the engine's DP + backward-smallest-k walk. Usage
-    * counts become the next round's scores; unused single chars persist
-    * at score 0 (coverage). Multi-referenced CTEs are MATERIALIZED (the
-    * DuckDB unrolled-round requirement). */
-  private def unigramTrainOracleSql(rounds: Int): String = {
-    val Big = graft.functions.UnigramViterbi.Big
-    val head = """words AS MATERIALIZED (
-      |  SELECT w AS word, count(*) AS cnt FROM (
-      |    SELECT unnest(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) AS w
-      |    FROM documents) GROUP BY 1),
-      |ml AS MATERIALIZED (SELECT CAST(max(length(word)) AS INT) AS m FROM words),
-      |chars AS MATERIALIZED (
-      |  SELECT DISTINCT substr(word, i, 1) AS piece FROM words,
-      |    (SELECT unnest(generate_series(1, (SELECT m FROM ml))) AS i) t WHERE i <= length(word)),
-      |occ AS MATERIALIZED (
-      |  SELECT substr(word, j + 1, k) AS piece, cnt FROM words,
-      |    (SELECT unnest(generate_series(0, (SELECT m FROM ml) - 1)) AS j) tj,
-      |    (SELECT unnest(generate_series(1, 4)) AS k) tk
-      |  WHERE j + k <= length(word)),
-      |p0 AS MATERIALIZED (SELECT piece, CAST(SUM(cnt) AS BIGINT) AS score FROM occ GROUP BY 1)""".stripMargin
-    val roundCtes = (0 until rounds).map { r =>
-      s"""seg$r AS (
-         |  SELECT word, cnt, 0 AS pos, []::VARCHAR[] AS pcs, []::INTEGER[] AS lens, CAST(0 AS BIGINT) AS cost
-         |  FROM words
-         |  UNION ALL
-         |  SELECT s.word, s.cnt, s.pos + kk.k, list_append(s.pcs, substr(s.word, s.pos + 1, kk.k)),
-         |    list_append(s.lens, kk.k), s.cost + $Big - p.score
-         |  FROM seg$r s, (SELECT unnest(generate_series(1, 4)) AS k) kk, p$r p
-         |  WHERE s.pos + kk.k <= length(s.word) AND p.piece = substr(s.word, s.pos + 1, kk.k)
-         |),
-         |best$r AS MATERIALIZED (
-         |  SELECT word, cnt, pcs FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY word ORDER BY cost, list_reverse(lens)) AS rn
-         |    FROM seg$r WHERE pos = length(word)) WHERE rn = 1),
-         |u${r + 1} AS MATERIALIZED (SELECT piece, CAST(SUM(cnt) AS BIGINT) AS score FROM
-         |  (SELECT unnest(pcs) AS piece, cnt FROM best$r) GROUP BY 1),
-         |p${r + 1} AS MATERIALIZED (SELECT * FROM u${r + 1}
-         |  UNION ALL SELECT c.piece, CAST(0 AS BIGINT) FROM chars c
-         |  WHERE c.piece NOT IN (SELECT piece FROM u${r + 1}))""".stripMargin
-    }
-    (s"WITH RECURSIVE $head,\n" + roundCtes.mkString(",\n") +
-      s"\nSELECT piece, score FROM p$rounds ORDER BY piece")
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |COUNT(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    // TPC-H-shaped composites: multi-operator join trees feeding
-    // aggregates feeding top-k, exact decimal revenue throughout, ties
-    // broken deterministically so LIMIT is well-defined.
-    "q_composite_q3" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        |AND l_orderkey = o_orderkey
-        |AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q_composite_q10" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem, nation
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |AND o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-        |AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "q_composite_q5" ->
-      """SELECT n_name,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |AND r_name = 'ASIA'
-        |AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity,
-        |CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem WHERE l_quantity >= 45 AND l_returnflag = 'A'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_limit_offset" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber LIMIT 50 OFFSET 20""".stripMargin,
-    "q_sort_topk" ->
-      """SELECT p_partkey, p_type, p_retailprice FROM part
-        |ORDER BY lower(p_type), p_retailprice DESC, p_partkey LIMIT 10""".stripMargin,
-    "q_hash_join_inner" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-        |MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_hash_join_left" ->
-      """SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "q_hash_join_right" ->
-      """SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "q_hash_join_full" ->
-      """SELECT COALESCE(c_custkey, o_custkey) AS custkey,
-        |COUNT(o_orderkey) AS n_orders, MAX(c_mktsegment) AS seg
-        |FROM (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey <= 750) c
-        |FULL JOIN (SELECT o_custkey, o_orderkey FROM orders) o ON c_custkey = o_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_file_roundtrip" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_upsert" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice * 2
-        |     ELSE o_totalprice END AS o_totalprice
-        |FROM orders
-        |UNION ALL
-        |SELECT CAST(1000000000 AS BIGINT), 'N', CAST(1.5 AS DOUBLE)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_orc_roundtrip" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_totalprice > 100000.0
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_bucketed_join" ->
-      """SELECT CAST(l_orderkey % 10 AS BIGINT) AS bucket, COUNT(*) AS n,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_spy" ->
-      "SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey",
-    "q_sketch_distinct" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_suppkey) AS nd_exact, TRUE AS nd_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sketch_quantiles" ->
-      """SELECT l_returnflag,
-        |round(quantile_cont(l_quantity, 0.25), 6) AS q25,
-        |round(quantile_cont(l_quantity, 0.50), 6) AS q50,
-        |round(quantile_cont(l_quantity, 0.75), 6) AS q75,
-        |TRUE AS q_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sketch_freq" ->
-      """SELECT l_suppkey, n_exact, TRUE AS freq_ok FROM (
-        |SELECT l_suppkey, COUNT(*) AS n_exact FROM lineitem
-        |GROUP BY l_suppkey ORDER BY n_exact DESC, l_suppkey LIMIT 10)
-        |ORDER BY l_suppkey""".stripMargin,
-    "q_salted_agg" ->
-      """SELECT l_suppkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |COUNT(*) AS n, MIN(l_quantity) AS mn, MAX(l_quantity) AS mx
-        |FROM lineitem GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin,
-    // One oracle, two physical strategies: the salted variant must be
-    // value-identical to the plain GROUP BY (DECIMAL partials make merge
-    // order irrelevant).
-    "q_skew_agg_plain" -> SkewAggOracle,
-    "q_skew_agg_salted" -> SkewAggOracle,
-    "q_skew_collect_plain" -> SkewCollectOracle,
-    "q_skew_collect_salted" -> SkewCollectOracle,
-    "q_scan_selection" ->
-      """WITH sel AS (SELECT c_custkey AS rid FROM customer WHERE c_custkey % 7 = 0
-        |UNION ALL SELECT c_custkey FROM customer WHERE c_custkey % 7 = 0 AND c_custkey < 70)
-        |SELECT c.c_custkey, c.c_name, c.c_mktsegment
-        |FROM sel JOIN customer c ON c.c_custkey = sel.rid
-        |ORDER BY c.c_custkey""".stripMargin,
-    "q_range_join" ->
-      """SELECT o_orderkey, COUNT(*) AS n_shipped,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN
-        |(SELECT o_orderkey, o_orderdate FROM orders WHERE o_totalprice > 495000.0) o
-        |ON epoch_ms(l_shipdate) >= epoch_ms(o_orderdate)
-        |AND epoch_ms(l_shipdate) <= epoch_ms(o_orderdate) + 2592000000
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
-    "q_foreign_filter" ->
-      """WITH f AS (SELECT o_orderkey, row_number() OVER (ORDER BY o_orderkey) - 1 AS new_id
-        |FROM orders WHERE o_totalprice > 150000.0)
-        |SELECT f.new_id AS l_orderkey, l.l_linenumber, l.l_quantity
-        |FROM lineitem l JOIN f ON l.l_orderkey = f.o_orderkey
-        |ORDER BY 1, 2""".stripMargin,
-    "q_rowid_merge_join" ->
-      """WITH r AS (SELECT r_name, row_number() OVER (ORDER BY r_regionkey) - 1 AS rid FROM region)
-        |SELECT n.n_nationkey, n.n_name, r.r_name
-        |FROM nation n JOIN r ON n.n_regionkey = r.rid ORDER BY n_nationkey""".stripMargin,
-    "q_coalesce" ->
-      "SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey",
-    "q_merge_union" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem WHERE l_returnflag = 'A'
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem WHERE l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_generate" ->
-      "SELECT range AS seq, 42 AS c_int, 'x' AS c_str FROM range(10) ORDER BY seq",
-    "q_scalar_agg" ->
-      """SELECT COUNT(*) AS cnt, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s,
-        |MIN(l_quantity) AS mn, MAX(l_quantity) AS mx FROM lineitem""".stripMargin,
-    "q_scalar_agg_empty" ->
-      """SELECT COUNT(*) AS cnt, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s,
-        |MIN(l_quantity) AS mn FROM lineitem WHERE l_quantity < 0""".stripMargin,
-    "q_group_distinct" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_suppkey) AS nd_supp,
-        |CAST(SUM(DISTINCT l_linenumber) AS BIGINT) AS sd_ln, COUNT(DISTINCT l_orderkey) AS nd_ord
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_concat" ->
-      """SELECT c_nationkey, string_agg(c_name, ',' ORDER BY c_custkey) AS names, COUNT(*) AS cnt
-        |FROM customer WHERE c_custkey <= 50
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "q_first_last" ->
-      """SELECT l_returnflag,
-        |min_by(l_quantity, (l_orderkey * 10 + l_linenumber) * 100 + l_quantity) AS first_qty,
-        |max_by(l_quantity, (l_orderkey * 10 + l_linenumber) * 100 + l_quantity) AS last_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_limit" ->
-      """WITH rk AS (SELECT l_suppkey AS k, dense_rank() OVER (ORDER BY l_suppkey) AS r
-        |FROM (SELECT DISTINCT l_suppkey FROM lineitem)),
-        |t AS (SELECT CASE WHEN rk.r <= 5 THEN l.l_suppkey END AS l_suppkey,
-        |rk.r > 5 AS overflow, l.l_quantity
-        |FROM lineitem l JOIN rk ON l.l_suppkey = rk.k)
-        |SELECT l_suppkey, overflow, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |COUNT(*) AS cnt FROM t GROUP BY l_suppkey, overflow
-        |ORDER BY l_suppkey NULLS LAST, overflow""".stripMargin,
-    "q_set_intersect" ->
-      """SELECT nk FROM (SELECT c_nationkey AS nk FROM customer INTERSECT
-        |SELECT s_nationkey AS nk FROM supplier) ORDER BY nk""".stripMargin,
-    "q_set_except" ->
-      """SELECT nk FROM (SELECT c_nationkey AS nk FROM customer EXCEPT
-        |SELECT s_nationkey AS nk FROM supplier WHERE s_suppkey < 20) ORDER BY nk""".stripMargin,
-    "q_join5" ->
-      """SELECT r_name, n_name,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |COUNT(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q_expr_arith" ->
-      """SELECT p_partkey, p_size + 1 AS a_plus, p_size - 3 AS a_minus, p_size * 3 AS a_mul,
-        |CAST(p_size AS DOUBLE) / 7 AS a_div, CAST(p_size // 7 AS BIGINT) AS a_intdiv,
-        |p_size % 5 AS a_mod, -p_size AS a_neg,
-        |p_size % 2 = 1 AS a_odd, p_size % 2 = 0 AS a_even
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_expr_cmp" ->
-      """SELECT c_custkey, c_acctbal > 0 AS c_pos, c_acctbal <= 1000 AS c_le,
-        |c_mktsegment = 'BUILDING' AS c_eq, c_mktsegment <> 'AUTOMOBILE' AS c_ne,
-        |c_mktsegment IN ('BUILDING','MACHINERY') AS c_in,
-        |c_acctbal BETWEEN 100 AND 5000 AS c_btw
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_expr_logic" ->
-      """SELECT p_partkey,
-        |(p_size > 10 AND p_size < 40) AS l_and, (p_size < 5 OR p_size > 45) AS l_or,
-        |(p_size > 25) <> (p_retailprice > 950) AS l_xor, NOT (p_size > 25) AS l_not,
-        |CASE WHEN p_size > 25 THEN 'big' ELSE 'small' END AS l_if,
-        |COALESCE(NULLIF(p_brand, 'Brand#2'), 'other') AS l_ifnull,
-        |NULLIF(p_brand, 'Brand#2') IS NULL AS l_isnull,
-        |CASE p_brand WHEN 'Brand#2' THEN 1 WHEN 'Brand#17' THEN 2 ELSE 0 END AS l_case,
-        |p_size & 12 AS b_and, p_size | 5 AS b_or, xor(p_size, 9) AS b_xor,
-        |~p_size AS b_not, p_size << 2 AS b_shl, p_size >> 1 AS b_shr
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_expr_math" ->
-      """SELECT p_partkey,
-        |round(sin(p_size), 6) AS m_sin, round(cos(p_size), 6) AS m_cos,
-        |round(atan(CAST(p_size AS DOUBLE) / 50), 6) AS m_atan,
-        |round(exp(CAST(p_size AS DOUBLE) / 10), 6) AS m_exp,
-        |round(ln(p_retailprice), 6) AS m_ln, round(log10(p_retailprice), 6) AS m_log10,
-        |round(log2(p_retailprice), 6) AS m_log2, round(sqrt(p_retailprice), 6) AS m_sqrt,
-        |pow(p_size, 2) AS m_pow,
-        |round(atan2(p_retailprice / 1000, CAST(p_size AS DOUBLE)), 6) AS m_atan2,
-        |round(degrees(p_size), 6) AS m_deg, round(radians(p_size), 6) AS m_rad,
-        |abs(-p_size) AS m_abs, CAST(ceil(p_retailprice) AS BIGINT) AS m_ceil,
-        |CAST(floor(p_retailprice) AS BIGINT) AS m_floor,
-        |CAST(trunc(p_retailprice) AS BIGINT) AS m_trunc,
-        |CAST(round(p_retailprice, 0) AS BIGINT) AS m_round0,
-        |pi() AS m_pi, isfinite(p_retailprice) AS m_finite,
-        |isnan(CAST('nan' AS DOUBLE)) AS m_nan
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_expr_string" ->
-      """SELECT c_custkey, length(c_name) AS s_len, lower(c_name) AS s_lower,
-        |upper(c_name) AS s_upper, c_name || '-' || c_mktsegment AS s_concat,
-        |concat_ws('|', c_name, c_mktsegment) AS s_cws,
-        |substr(c_name, 10, 5) AS s_sub, substr(c_name, 10) AS s_tail,
-        |strpos(c_name, '1') AS s_instr, contains(c_name, '9') AS s_has9,
-        |contains(lower(c_mktsegment), 'auto') AS s_ci,
-        |replace(c_name, 'Customer', 'Cust') AS s_repl,
-        |ltrim('  ' || c_name) AS s_ltrim, rtrim(c_name || '  ') AS s_rtrim,
-        |trim(' ' || c_name || ' ') AS s_trim, CAST(c_custkey AS VARCHAR) AS s_tostr
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_expr_regexp" ->
-      """SELECT p_partkey, regexp_matches(p_name, 'red|blue') AS r_part,
-        |regexp_full_match(p_type, '[A-Z]+') AS r_full,
-        |regexp_extract(p_name, '([a-z]+) ([a-z]+)', 2) AS r_ext,
-        |regexp_replace(p_name, '[aeiou]', '_', 'g') AS r_repl,
-        |regexp_matches(p_type, '[[:upper:]]{8,}') AS r_posix,
-        |regexp_extract(p_name, '(?P<first>[a-z]+) (?P<second>[a-z]+)', 2) AS r_named,
-        |regexp_matches(p_name || chr(10), '[a-z]$') AS r_dollar,
-        |regexp_matches(p_name, '[a-z]$') AS r_dollar_true
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_expr_datetime" ->
-      """SELECT o_orderkey, year(o_orderdate) AS d_year, quarter(o_orderdate) AS d_quarter,
-        |month(o_orderdate) AS d_month, dayofmonth(o_orderdate) AS d_day,
-        |dayofyear(o_orderdate) AS d_yday, dayofweek(o_orderdate) + 1 AS d_dow,
-        |CAST(epoch(o_orderdate) AS BIGINT) AS d_epoch,
-        |strftime(o_orderdate, '%Y-%m-%d') AS d_fmt,
-        |strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS d_plus30,
-        |strftime(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH, '%Y-%m-%d') AS d_plus2m,
-        |strftime(o_orderdate + INTERVAL 90 MINUTE, '%Y-%m-%d %H:%M') AS d_plus90m,
-        |strftime(DATE '2024-03-05', '%Y-%m-%d') AS d_make,
-        |hour(TIMESTAMP '1970-01-01 05:01:30') AS d_hour,
-        |year(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) AS d_year_loc,
-        |quarter(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) AS d_quarter_loc,
-        |month(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) AS d_month_loc,
-        |dayofmonth(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) AS d_day_loc,
-        |dayofweek(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) + 1 AS d_dow_loc,
-        |dayofyear(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) AS d_yday_loc,
-        |hour(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) AS d_hour_loc,
-        |minute(CAST(o_orderdate AS TIMESTAMP) + INTERVAL 330 MINUTE) AS d_min_loc
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_expr_cast" ->
-      """SELECT o_orderkey, CAST(o_orderkey AS VARCHAR) AS c_str,
-        |CAST(substr(o_orderpriority, 1, 1) AS INT) AS c_int,
-        |TRY_CAST('abc' AS INT) AS c_bad, TRY_CAST('42' AS INT) AS c_good,
-        |CAST(o_orderkey AS DOUBLE) AS c_dbl,
-        |CAST(floor(o_totalprice) AS BIGINT) AS c_floor,
-        |CAST(o_orderkey AS INT) AS c_quiet_partial,
-        |350.0 AS c_quiet_dbl,
-        |7 AS c_sig
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_expr_hash" ->
-      s"""SELECT COUNT(DISTINCT c_name) AS nd_hash, COUNT(DISTINCT md5(c_name)) AS nd_md5,
-        |MIN(md5(c_name)) AS min_md5,
-        |MIN(${ssToI64(ssHashNum("c_custkey", 7L))}) AS min_hk7,
-        |MAX(${ssToI64(ssHashNum("c_custkey", 7L))}) AS max_hk7 FROM customer""".stripMargin,
-    "q_expr_fingerprint" -> ssFingerprintOracleSql,
-    "q_fileio_parity" ->
-      """SELECT c_custkey, c_name, CAST(c_nationkey AS INT) AS nk,
-        |CAST(c_acctbal AS DOUBLE) AS bal FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_stateful_running" ->
-      """WITH t AS (SELECT user_id, event_id, event_type,
-        |CAST(round(value * 100, 0) AS BIGINT) AS cents,
-        |CASE WHEN event_type = 'click' THEN value END AS click_val FROM events)
-        |SELECT user_id, event_id, CAST(SUM(cents) OVER w AS BIGINT) AS run_sum,
-        |(row_number() OVER w = 1 OR event_type IS DISTINCT FROM lag(event_type) OVER w) AS chg,
-        |last_value(click_val IGNORE NULLS) OVER w AS locf
-        |FROM t WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-        |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_stateful_flush" ->
-      """WITH t AS (SELECT user_id, event_id, event_type,
-        |CAST(round(value * 100, 0) AS BIGINT) AS cents,
-        |(event_type = 'signup') AS flush FROM events),
-        |s AS (SELECT *,
-        |SUM(CASE WHEN flush THEN 1 ELSE 0 END) OVER w AS sess,
-        |SUM(CASE WHEN event_type = 'view' THEN 0 ELSE 1 END) OVER w AS grp
-        |FROM t WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-        |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT user_id, event_id,
-        |MIN(cents) OVER (PARTITION BY user_id, sess ORDER BY event_id
-        |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_min,
-        |first_value(cents) OVER (PARTITION BY user_id, grp ORDER BY event_id
-        |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carried
-        |FROM s ORDER BY user_id, event_id""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp,
-        |MIN(doc_id) AS keeper, COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY keeper""".stripMargin,
-    "q_dedup_ngram" ->
-      s"WITH $NgramPairsCte\nSELECT id1, id2, jac FROM jp ORDER BY id1, id2",
-    // pairs -> connected components: recursive-CTE reachability fixpoint
-    // (each node collects every label reachable over the undirected pair
-    // edges; MIN per node = the component's canonical id) — the oracle for
-    // the iterative min-label-propagation clustering on the Spark side.
-    // Connected components WITHOUT the recursive-closure blowup (round
-    // 8): the naive `reach` CTE materializes every (node, reachable
-    // smaller label) pair — quadratic in component size, and the sf1
-    // replica's dup-dense clusters pushed it past an hour/70 GB. This
-    // replay runs 12 unrolled min-label + pointer-jump rounds (each one
-    // edge join + one label join, every CTE MATERIALIZED so DuckDB does
-    // not re-inline the doubly-referenced previous round), converging to
-    // the same min-reachable-id labels; the `conv` guard emits ZERO rows
-    // if round 12 differs from round 11, so non-convergence fails the
-    // row-count gate loudly instead of passing a wrong fixpoint.
-    "q_dedup_clusters" ->
-      s"WITH $NgramPairsCte,\n${minLabelClustersSql("jp")}",
-    // Collapsed-representative clustering path: identical answer to
-    // q_dedup_clusters by the (shingle set, length) interchangeability
-    // argument, so the identical oracle gates it.
-    "q_dedup_clusters_rep" ->
-      s"WITH $NgramPairsCte,\n${minLabelClustersSql("jp")}",
-    // ALL-pairs exact 3-shingle Jaccard >= 0.7 — a hard LSH recall gate:
-    // the Spark side only scores LSH candidate pairs, so any banding miss
-    // shows up as a missing row here.
-    // Set-logic-complete rewrite of the all-pairs form (round 8, the r7
-    // containment-oracle pattern): |A∩B| as an aggregated shared-shingle
-    // join — J ≥ 0.7 > 0 forces a shared shingle, so candidate
-    // generation via the inverted shingle join loses NOTHING, and the
-    // Jaccard arithmetic is unchanged. The naive pairwise list_intersect
-    // was quadratic in the corpus (>20 min at the sf1 replica).
-    "q_dedup_minhash" -> MinhashAllPairsOracle,
-    // Streaming two-phase MinHash near-dedup commits the SAME verified
-    // pair set (recall-complete banding makes LSH ≡ all-pairs at the
-    // threshold), so the identical oracle gates the streaming path.
-    "q_stream_neardedup" -> MinhashAllPairsOracle,
-    // Incremental (delta-vs-history) face: the pairs the daily job must
-    // find are exactly the full-corpus pairs touching the odd-id delta.
-    "q_dedup_incremental" ->
-      minhashAllPairsOracle(" AND (id1 % 2 = 1 OR id2 % 2 = 1)"),
-    "q_ann_brute" -> annExactTopKOracle,
-    // Graph ANN: full NN-descent build + beam search replayed round by
-    // round (this gates the approximate path itself; recall vs exact is
-    // SimilaritySpec's contract).
-    "q_ann_graph" -> annGraphOracle(AnnGraphK, AnnGraphRounds,
-      AnnGraphRevCap, 5, AnnGraphBeam, AnnGraphHops, AnnGraphEntries),
-    // IVF gate probes all cells (see qAnnIvf) => result is exactly the
-    // brute-force top-k, so the identical oracle binding applies.
-    "q_ann_ivf" -> annExactTopKOracle,
-    "q_ann_pq" -> annPqOracle(AnnPqM, AnnPqKsub, 5),
-    "q_ann_pq_trained" -> annPqTrainedOracle(AnnPqM, AnnPqKsub, AnnPqTrainedIters, 5, 1000),
-    // IVFADC all-probe: cell partition is lossless, so the oracle is the
-    // q_ann_pq ADC chain + exact-dot re-rank of the ADC top-20.
-    "q_ann_ivfadc" -> annPqOracle(AnnPqM, AnnPqKsub, 5, rerank = AnnIvfAdcRerank),
-    // Trained-centroid IVF, nprobe 2 of 8: the training AND the
-    // approximation replayed (Lloyd unroll + argmin probe + cosine).
-    "q_ann_ivf_trained" -> annIvfTrainedOracle(AnnIvfTrainedCells,
-      AnnIvfTrainedIters, AnnIvfTrainedProbe, 5, 1000),
-    "q_dedup_embedding" ->
-      s"""$lshCandidateCtes
-         |SELECT id1, id2, round(cos, 6) AS cosine FROM cand WHERE cos >= 0.25
-         |ORDER BY id1, id2""".stripMargin,
-    // Independent DuckDB reimplementation of the LSH algorithm itself: the
-    // hyperplanes are data-independent seed-derived constants, embedded as
-    // literals (lshCandidateCtes), so the signatures / buckets /
-    // per-bucket exact ranking are re-derived end to end in SQL.
-    "q_ann_lsh" ->
-      s"""$lshCandidateCtes,
-         |sym AS (SELECT id1 AS qid, id2 AS nid, cos FROM cand
-         |  UNION ALL SELECT id2 AS qid, id1 AS nid, cos FROM cand),
-         |r AS (SELECT qid, nid, cos,
-         |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank FROM sym)
-         |SELECT qid, nid, round(cos, 6) AS cosine, rank FROM r WHERE rank <= 5
-         |ORDER BY qid, rank""".stripMargin,
-    "q_text_stats" ->
-      """SELECT doc_id,
-        |len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) AS n_tokens,
-        |len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS n_bpeish,
-        |len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS n_punct,
-        |length(text) AS n_len,
-        |CAST(length(regexp_replace(trim(text), '\s+', '', 'g')) AS DOUBLE)
-        |  / greatest(len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')), 1) AS mean_tok_len,
-        |(length(text) BETWEEN 50 AND 10000 AND
-        | CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS DOUBLE) / greatest(length(text), 1) <= 0.2) AS quality_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_text_langid" ->
-      """WITH sc AS (SELECT doc_id, lang, ' ' || lower(text) || ' ' AS p FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |(CASE WHEN contains(p, ' the ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' a ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' of ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' and ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' is ') THEN 1 ELSE 0 END) AS s_en,
-        |(CASE WHEN contains(p, ' der ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' und ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' die ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' das ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' ist ') THEN 1 ELSE 0 END) AS s_de,
-        |(CASE WHEN contains(p, ' el ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' de ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' y ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' es ') THEN 1 ELSE 0 END) AS s_es,
-        |(CASE WHEN contains(p, ' le ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' et ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' les ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' est ') THEN 1 ELSE 0 END) AS s_fr,
-        |(CASE WHEN contains(p, ' 的 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 是 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 了 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 在 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 我 ') THEN 1 ELSE 0 END) AS s_zh
-        |FROM sc)
-        |SELECT doc_id,
-        |CASE WHEN s_en = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_en > 0 THEN 'en'
-        |WHEN s_de = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_de > 0 THEN 'de'
-        |WHEN s_es = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_es > 0 THEN 'es'
-        |WHEN s_fr = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_fr > 0 THEN 'fr'
-        |WHEN s_zh = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_zh > 0 THEN 'zh'
-        |ELSE 'und' END AS pred_lang, lang
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q_text_fingerprint" ->
-      """SELECT doc_id, md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Full SimHash reimplementation: md5-prefix feature hashes (parsed
-    // base-16), 60 bit-votes, sign fold, then ALL-pairs exact Hamming —
-    // the banded Spark join has identical output for radius <= 3
-    // (pigeonhole over 4x15-bit bands), so this is an exact-semantics
-    // oracle, not a recall spot-check.
-    "q_dedup_simhash_portable" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS w FROM documents),
-        |sh AS (SELECT doc_id, (CASE WHEN len(w) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' ')))
-        |  ELSE [array_to_string(w, ' ')] END) AS shs FROM tok),
-        |f AS (SELECT doc_id, ('0x' || substr(md5(unnest(shs)), 1, 15))::BIGINT AS h FROM sh),
-        |bits AS (SELECT doc_id, j, SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |         FROM f, (SELECT unnest(range(60)) AS j) t GROUP BY doc_id, j),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS sg
-        |        FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2, bit_count(xor(a.sg, b.sg)) AS hamming
-        |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sg, b.sg)) <= 3 ORDER BY id1, id2""".stripMargin,
-    // Recall contract of the xxhash64 simhash banding (see qDedupSimhash):
-    // the EXPECTED pair set — equal distinct-token sets — is re-derived
-    // independently here; the Spark side must have found every such pair
-    // at Hamming 0. (Signature VALUES are Spark-internal and not
-    // replayable; the portable twin above oracles those end to end.)
-    "q_dedup_simhash" ->
-      """WITH k AS (SELECT doc_id,
-        |  md5(array_to_string(list_sort(list_distinct(
-        |    list_filter(string_split_regex(text, '\s+'), t -> t <> ''))), ' ')) AS tk
-        |  FROM documents),
-        |p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-        |      FROM k a JOIN k b ON a.tk = b.tk AND a.doc_id < b.doc_id)
-        |SELECT id1, id2, CAST(0 AS INTEGER) AS hamming, TRUE AS found
-        |FROM p ORDER BY id1, id2""".stripMargin,
-    // The sampling oracles replay the portable hash (Sampling.portableBucket)
-    // in plain integer arithmetic: same keys -> same buckets -> the EXACT
-    // same sample rows in both engines.
-    // Spec-serialization round-trip: the Spark side builds its whole
-    // pipeline from JSON-deserialized specs; the oracle replays the same
-    // sample-hash + aggregate + case-insensitive top-k sort directly.
-    "q_spec_roundtrip" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |MIN(l_quantity) AS min_qty,
-        |CAST(SUM(DISTINCT l_linenumber * 2) AS BIGINT) AS sum_ln,
-        |string_agg(l_linestatus, ',' ORDER BY (l_orderkey * 10 + l_linenumber) * 2
-        |  + CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS statuses,
-        |MIN(l_quantity / 4.0) AS min_qdiv,
-        |MAX(l_linenumber % 3) AS max_lnmod,
-        |MIN(lower(l_returnflag) || '_' || substr(l_linestatus, 1, 1)) AS min_tag,
-        |MIN(CASE WHEN l_returnflag IN ('A', 'R') THEN 'ret' ELSE 'keep' END)
-        |  AS flag_class
-        |FROM lineitem
-        |WHERE ((((l_orderkey % 2147483648) * 2654435761) % 2147483648
-        |      + ((l_linenumber % 2147483648) * 2246822519) % 2147483648)
-        |      % 2147483648) % 1000000 < 10000
-        |AND l_quantity >= 2
-        |AND NOT (l_returnflag = 'X' OR l_returnflag IS NULL)
-        |GROUP BY l_returnflag
-        |ORDER BY lower(l_returnflag) LIMIT 2""".stripMargin,
-    "q_sample_bernoulli" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE ((((l_orderkey % 2147483648) * 2654435761) % 2147483648
-        |      + ((l_linenumber % 2147483648) * 2246822519) % 2147483648)
-        |      % 2147483648) % 1000000 < 250000
-        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin,
-    "q_sample_stratified" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE ((((l_orderkey % 2147483648) * 2654435761) % 2147483648
-        |      + ((l_linenumber % 2147483648) * 2246822519) % 2147483648)
-        |      % 2147483648) % 1000000
-        |  < (CASE l_returnflag WHEN 'A' THEN 500000 WHEN 'N' THEN 100000 ELSE 250000 END)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sample_split" ->
-      """SELECT CASE
-        |  WHEN bkt < 800000 THEN 'train'
-        |  WHEN bkt < 900000 THEN 'val'
-        |  WHEN bkt < 1000000 THEN 'test'
-        |  ELSE 'rest' END AS split,
-        |l_returnflag, COUNT(*) AS n
-        |FROM (SELECT l_returnflag,
-        |((((l_orderkey % 2147483648) * 2654435761) % 2147483648
-        |+ ((l_linenumber % 2147483648) * 2246822519) % 2147483648)
-        |% 2147483648) % 1000000 AS bkt FROM lineitem)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Domain-mix replay: per-source counts, exact-integer thresholds
-    // least(B, w*T*B // (sumW*n)), the portable key hash for membership,
-    // and the seeded shuffle key (as q_shuffle) for the interleave
-    // position — the full mixing pipeline recomputed from scratch.
-    "q_mix_corpora" ->
-      """WITH src AS (
-        |  SELECT doc_id, 'web' AS source, 6 AS w FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'code', 3 FROM documents WHERE doc_id % 3 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 'books', 1 FROM documents WHERE doc_id % 3 = 2),
-        |thr AS (SELECT source, LEAST(1000000, (MAX(w) * 200 * 1000000) // (10 * COUNT(*))) AS t
-        |  FROM src GROUP BY source),
-        |kept AS (SELECT s.doc_id, s.source,
-        |  (((s.doc_id % 2147483648) * ((85 * 2654435761) % 2147483648)) % 2147483648
-        |   + (42 * 2246822519) % 2147483648) % 2147483648 AS skey
-        |  FROM src s JOIN thr USING (source)
-        |  WHERE (((s.doc_id % 2147483648) * 2654435761) % 2147483648) % 1000000 < thr.t)
-        |SELECT row_number() OVER (ORDER BY skey, doc_id, source) - 1 AS pos,
-        |  source, doc_id
-        |FROM kept ORDER BY pos""".stripMargin,
-    // Chunking replay: same tokenization as the text oracles, chunk
-    // count 1 + ceil(max(0, n-40)/32), 1-based inclusive list slices.
-    "q_chunk" ->
-      """WITH tok AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |c AS (SELECT doc_id, toks, len(toks) AS n,
-        |  1 + CAST(CEIL(GREATEST(0, len(toks) - 40) / 32.0) AS BIGINT) AS nc
-        |  FROM tok),
-        |e AS (SELECT doc_id, toks, unnest(range(nc)) AS chunk_id FROM c)
-        |SELECT doc_id, chunk_id,
-        |  len(toks[chunk_id * 32 + 1 : chunk_id * 32 + 40]) AS n_tokens,
-        |  array_to_string(toks[chunk_id * 32 + 1 : chunk_id * 32 + 40], ' ')
-        |    AS chunk_text
-        |FROM e ORDER BY doc_id, chunk_id""".stripMargin,
-    // Epoch-repetition replay: 2 whole copies + the 0.25-gated extra
-    // epoch (threshold 250000 — 2.25 is binary-exact), then the
-    // epoch-seeded permutation key ((2(42+7e)+1)-odd-multiplier form).
-    "q_epoch_repeat" ->
-      """WITH c AS (SELECT doc_id,
-        |  2 + CASE WHEN (((doc_id % 2147483648) * 2654435761) % 2147483648)
-        |      % 1000000 < 250000 THEN 1 ELSE 0 END AS nc
-        |  FROM documents),
-        |e AS (SELECT doc_id, unnest(range(nc)) AS epoch FROM c),
-        |k AS (SELECT doc_id, epoch,
-        |  (42 + epoch * 7) % 2147483648 AS eseed FROM e)
-        |SELECT doc_id, epoch,
-        |  (((doc_id % 2147483648) * ((((eseed * 2 + 1) % 2147483648)
-        |     * 2654435761) % 2147483648)) % 2147483648
-        |   + (eseed * 2246822519) % 2147483648) % 2147483648 AS epoch_key
-        |FROM k ORDER BY doc_id, epoch""".stripMargin,
-    "q_tfidf" ->
-      """WITH tok AS (SELECT doc_id,
-        |  unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |st AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-        |  round(tf.tf * (ln((st.n + 1.0) / (dfq.df + 1.0)) + 1.0), 6) AS tfidf,
-        |  round(ln(1.0 + (st.n - dfq.df + 0.5) / (dfq.df + 0.5)) *
-        |        tf.tf * 2.2 / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / st.avgdl)), 6) AS bm25
-        |  FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN st),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY bm25 DESC, term) AS rank
-        |  FROM sc WHERE doc_id < 40)
-        |SELECT doc_id, CAST(rank AS INTEGER) AS rank, term, tf, df, tfidf, bm25
-        |FROM rk WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "q_text_redact" ->
-      """WITH t0 AS (SELECT doc_id,
-        |  text || ' contact user' || doc_id || '@example.com or 555-123-4567 ssn 123-45-6789' AS t
-        |  FROM documents),
-        |r1 AS (SELECT doc_id, t,
-        |  regexp_replace(t, '\b\d{3}-\d{2}-\d{4}\b', '[SSN]', 'g') AS t1 FROM t0),
-        |r2 AS (SELECT doc_id, t, t1,
-        |  regexp_replace(t1, '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '[PHONE]', 'g') AS t2 FROM r1),
-        |r3 AS (SELECT doc_id, t, t1, t2,
-        |  regexp_replace(t2, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '[EMAIL]', 'g') AS t3 FROM r2)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '\b\d{3}-\d{2}-\d{4}\b'))
-        |     + len(regexp_extract_all(t1, '\b\d{3}[-.]\d{3}[-.]\d{4}\b'))
-        |     + len(regexp_extract_all(t2, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_pii,
-        |  right(t3, 64) AS tail_redacted
-        |FROM r3 ORDER BY doc_id""".stripMargin,
-    "q_profile" ->
-      """SELECT 'c_custkey' AS col_name, COUNT(c_custkey) AS n_nonnull,
-        |  CAST(SUM(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |  COUNT(DISTINCT c_custkey) AS n_distinct,
-        |  CAST(MIN(c_custkey) AS DOUBLE) AS min_num, CAST(MAX(c_custkey) AS DOUBLE) AS max_num,
-        |  CAST(NULL AS DOUBLE) AS avg_len FROM customer
-        |UNION ALL
-        |SELECT 'c_name', COUNT(c_name),
-        |  CAST(SUM(CASE WHEN c_name IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  COUNT(DISTINCT c_name), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  round(AVG(length(c_name)), 6) FROM customer
-        |UNION ALL
-        |SELECT 'c_nationkey', COUNT(c_nationkey),
-        |  CAST(SUM(CASE WHEN c_nationkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  COUNT(DISTINCT c_nationkey),
-        |  CAST(MIN(c_nationkey) AS DOUBLE), CAST(MAX(c_nationkey) AS DOUBLE),
-        |  CAST(NULL AS DOUBLE) FROM customer
-        |UNION ALL
-        |SELECT 'c_acctbal', COUNT(c_acctbal),
-        |  CAST(SUM(CASE WHEN c_acctbal IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  COUNT(DISTINCT c_acctbal),
-        |  CAST(MIN(c_acctbal) AS DOUBLE), CAST(MAX(c_acctbal) AS DOUBLE),
-        |  CAST(NULL AS DOUBLE) FROM customer
-        |UNION ALL
-        |SELECT 'c_mktsegment', COUNT(c_mktsegment),
-        |  CAST(SUM(CASE WHEN c_mktsegment IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  COUNT(DISTINCT c_mktsegment), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  round(AVG(length(c_mktsegment)), 6) FROM customer
-        |ORDER BY col_name""".stripMargin,
-    // Accuracy-contract gate for the HLL profiling path: exact metrics
-    // hash-match; the approx distinct count is asserted within tolerance
-    // in-engine (nd_ok), which the oracle expects to be TRUE.
-    "q_profile_hll" ->
-      """SELECT 'c_custkey' AS col_name, COUNT(c_custkey) AS n_nonnull,
-        |  CAST(SUM(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |  CAST(MIN(c_custkey) AS DOUBLE) AS min_num, CAST(MAX(c_custkey) AS DOUBLE) AS max_num,
-        |  CAST(NULL AS DOUBLE) AS avg_len, TRUE AS nd_ok FROM customer
-        |UNION ALL
-        |SELECT 'c_name', COUNT(c_name),
-        |  CAST(SUM(CASE WHEN c_name IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  round(AVG(length(c_name)), 6), TRUE FROM customer
-        |UNION ALL
-        |SELECT 'c_nationkey', COUNT(c_nationkey),
-        |  CAST(SUM(CASE WHEN c_nationkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  CAST(MIN(c_nationkey) AS DOUBLE), CAST(MAX(c_nationkey) AS DOUBLE),
-        |  CAST(NULL AS DOUBLE), TRUE FROM customer
-        |UNION ALL
-        |SELECT 'c_acctbal', COUNT(c_acctbal),
-        |  CAST(SUM(CASE WHEN c_acctbal IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  CAST(MIN(c_acctbal) AS DOUBLE), CAST(MAX(c_acctbal) AS DOUBLE),
-        |  CAST(NULL AS DOUBLE), TRUE FROM customer
-        |UNION ALL
-        |SELECT 'c_mktsegment', COUNT(c_mktsegment),
-        |  CAST(SUM(CASE WHEN c_mktsegment IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |  round(AVG(length(c_mktsegment)), 6), TRUE FROM customer
-        |ORDER BY col_name""".stripMargin,
-    // Accuracy-contract gate for the approx_percentile winsorize path:
-    // the applied bounds must sit inside the exact-percentile band at
-    // p ± 4/accuracy rank error.
-    "q_winsorize_approx" ->
-      """SELECT COUNT(*) AS n, TRUE AS lo_in_tol, TRUE AS hi_in_tol
-        |FROM lineitem""".stripMargin,
-    "q_pack" ->
-      """WITH t AS (SELECT doc_id, doc_id % 16 AS bucket,
-        |  CAST(len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |o AS (SELECT doc_id, bucket, n_tokens,
-        |  CAST(SUM(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-        |    ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS "offset" FROM t)
-        |SELECT doc_id, bucket, n_tokens, "offset",
-        |CAST(FLOOR(CAST("offset" AS DOUBLE) / 2048) AS BIGINT) AS seq
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "q_csv_roundtrip" ->
-      """SELECT c_mktsegment, COUNT(*) AS n, MIN(c_name) AS first_name,
-        |CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_json_roundtrip" ->
-      """SELECT p_type, COUNT(*) AS n, CAST(SUM(p_size) AS BIGINT) AS sum_size,
-        |MAX(p_partkey) AS max_key
-        |FROM part GROUP BY p_type ORDER BY p_type""".stripMargin,
-    // Shard-manifest replay: same canonical encoding (chr(1) separator),
-    // md5-prefix 60-bit fingerprint, shard = fp % nShards, BIT_XOR fold.
-    "q_shard_manifest" ->
-      """WITH e AS (SELECT
-        |  ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || chr(1)
-        |    || CAST(l_linenumber AS VARCHAR)), 1, 15))::BIGINT AS kfp,
-        |  ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || chr(1)
-        |    || CAST(l_linenumber AS VARCHAR) || chr(1)
-        |    || CAST(l_partkey AS VARCHAR) || chr(1)
-        |    || CAST(l_suppkey AS VARCHAR) || chr(1)
-        |    || l_returnflag), 1, 15))::BIGINT AS vfp
-        |  FROM lineitem)
-        |SELECT CAST(kfp % 8 AS INTEGER) AS shard, COUNT(*) AS n_rows,
-        |CAST(bit_xor(vfp) AS BIGINT) AS content_fp
-        |FROM e GROUP BY 1 ORDER BY shard""".stripMargin,
-    // Full trigram-LM replay: same tokenization as q_tfidf, lead() windows
-    // for trigrams, add-k smoothing with exact integer counts, and the
-    // DECIMAL-summed rounded log-prob recipe for cross-engine exactness.
-    "q_text_perplexity" ->
-      """WITH tok AS (SELECT doc_id, unnest(ws) AS tw, generate_subscripts(ws, 1) AS pos
-        |  FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS ws
-        |        FROM documents)),
-        |tri AS (SELECT * FROM (
-        |  SELECT doc_id, tw || ' ' || lead(tw, 1) OVER win AS ctx, lead(tw, 2) OVER win AS nw
-        |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos))
-        |  WHERE nw IS NOT NULL),
-        |trn AS (SELECT ctx, nw FROM tri WHERE doc_id % 10 <> 0),
-        |c3 AS (SELECT ctx, nw, COUNT(*) AS c3 FROM trn GROUP BY 1, 2),
-        |c2 AS (SELECT ctx, COUNT(*) AS c2 FROM trn GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT tw) AS v FROM tok WHERE doc_id % 10 <> 0),
-        |sc AS (SELECT t.doc_id,
-        |  CAST(round(ln((coalesce(c3.c3, 0) + 0.5) / (coalesce(c2.c2, 0) + 0.5 * v.v)), 9) AS DECIMAL(20,9)) AS lp
-        |  FROM tri t LEFT JOIN c3 ON t.ctx = c3.ctx AND t.nw = c3.nw
-        |  LEFT JOIN c2 ON t.ctx = c2.ctx CROSS JOIN v
-        |  WHERE t.doc_id % 10 = 0)
-        |SELECT doc_id, COUNT(*) AS n_trigrams,
-        |round(exp(CAST(-SUM(lp) AS DOUBLE) / COUNT(*)), 6) AS ppl
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_text_repetition" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS ws FROM documents),
-        |tc AS (SELECT doc_id, w, COUNT(*) AS n
-        |  FROM (SELECT doc_id, unnest(ws) AS w FROM tok) GROUP BY 1, 2),
-        |ts AS (SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_tokens, MAX(n) AS top FROM tc GROUP BY 1),
-        |gr AS (SELECT doc_id, unnest(CASE WHEN len(ws) >= 2
-        |  THEN list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])
-        |  ELSE [] END) AS g FROM tok),
-        |gc AS (SELECT doc_id, g, COUNT(*) AS n FROM gr GROUP BY 1, 2),
-        |gs AS (SELECT doc_id, SUM(n) AS ng,
-        |  SUM(CASE WHEN n > 1 THEN n ELSE 0 END) AS dup FROM gc GROUP BY 1)
-        |SELECT ts.doc_id, ts.n_tokens,
-        |round(CAST(ts.top AS DOUBLE) / ts.n_tokens, 6) AS top_token_frac,
-        |coalesce(round(CAST(gs.dup AS DOUBLE) / gs.ng, 6), 0.0) AS dup_bigram_frac
-        |FROM ts LEFT JOIN gs ON ts.doc_id = gs.doc_id ORDER BY ts.doc_id""".stripMargin,
-    "q_zorder" -> {
-      val z = (0 until 21).map(k =>
-        s"(((l_suppkey % 2097152) >> $k) & 1) * ${1L << (2 * k)}" +
-          s" + (((l_partkey % 2097152) >> $k) & 1) * ${1L << (2 * k + 1)}")
-        .mkString(" + ")
-      s"""SELECT l_suppkey, l_partkey, $z AS z FROM lineitem
-         |ORDER BY z, l_suppkey, l_partkey LIMIT 200""".stripMargin
-    },
-    "q_zorder_3d" -> {
-      val z = (0 until 21).map(j =>
-        s"(((l_suppkey % 2097152) >> $j) & 1) * ${1L << (3 * j)}" +
-          s" + (((l_partkey % 2097152) >> $j) & 1) * ${1L << (3 * j + 1)}" +
-          s" + (((l_linenumber % 2097152) >> $j) & 1) * ${1L << (3 * j + 2)}")
-        .mkString(" + ")
-      s"""SELECT l_suppkey, l_partkey, l_linenumber, $z AS z FROM lineitem
-         |ORDER BY z, l_suppkey, l_partkey, l_linenumber LIMIT 200""".stripMargin
-    },
-    "q_winsorize" ->
-      """WITH b AS (SELECT quantile_cont(l_extendedprice, 0.05) AS lo,
-        |quantile_cont(l_extendedprice, 0.95) AS hi FROM lineitem),
-        |w AS (SELECT l_returnflag,
-        |round(least(greatest(l_extendedprice, b.lo), b.hi), 2) AS wv
-        |FROM lineitem, b)
-        |SELECT l_returnflag, COUNT(*) AS n, MIN(wv) AS mn, MAX(wv) AS mx,
-        |CAST(SUM(CAST(wv AS DECIMAL(18,2))) AS DOUBLE) AS sum_w
-        |FROM w GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_contamination" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS w FROM documents),
-        |sh AS (SELECT doc_id, (CASE WHEN len(w) >= 5
-        |  THEN list_distinct(list_transform(range(1, len(w) - 3), i -> array_to_string(w[i:i+4], ' ')))
-        |  ELSE [array_to_string(w, ' ')] END) AS shs FROM tok),
-        |ex AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-        |te AS (SELECT doc_id, s FROM ex WHERE doc_id % 10 = 0),
-        |tr AS (SELECT DISTINCT s FROM ex WHERE doc_id % 10 <> 0),
-        |agg AS (SELECT te.doc_id, COUNT(*) AS n_shingles,
-        |  CAST(SUM(CASE WHEN tr.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-        |  FROM te LEFT JOIN tr ON te.s = tr.s GROUP BY te.doc_id)
-        |SELECT doc_id, n_shingles, n_hit,
-        |  round(CAST(n_hit AS DOUBLE) / n_shingles, 6) AS rate
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    // Curate stage-5 rule: 2% portable-bucket eval sample (the
-    // q_sample_bernoulli hash formula), 3-gram coverage vs its distinct
-    // shingle set, keep iff coverage < 0.8.
-    "q_decontaminate" ->
-      """WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS w FROM documents),
-        |sh AS (SELECT doc_id, (CASE WHEN len(w) >= 3
-        |  THEN list_distinct(list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' ')))
-        |  ELSE [array_to_string(w, ' ')] END) AS shs FROM tok),
-        |ex AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-        |ev AS (SELECT DISTINCT s FROM ex
-        |  WHERE (((doc_id % 2147483648) * 2654435761) % 2147483648) % 1000000 < 20000),
-        |agg AS (SELECT ex.doc_id, COUNT(*) AS n_shingles,
-        |  CAST(SUM(CASE WHEN ev.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-        |  FROM ex LEFT JOIN ev ON ex.s = ev.s GROUP BY ex.doc_id)
-        |SELECT doc_id, n_shingles, n_hit,
-        |  round(CAST(n_hit AS DOUBLE) / n_shingles, 6) AS rate,
-        |  (CAST(n_hit AS DOUBLE) / n_shingles) < 0.8 AS kept
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    "q_multimodal" ->
-      """SELECT doc_id, 'fake/raw' AS media_format,
-        |(ascii(substr(text, 1, 1)) % 64) + 1 AS width,
-        |(ascii(substr(text, 2, 1)) % 64) + 1 AS height,
-        |CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |least(64, octet_length(encode(text))) AS first_frame_len,
-        |16 AS thumb_len,
-        |substring(hex(encode(text)), 2 * CAST(octet_length(encode(text)) // 2 AS INT) + 1, 2) AS thumb_mid
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Real-codec round trip: expected metadata re-derived from doc_id
-    // arithmetic (BMP file size = 54-byte header + 4-byte-padded
-    // 3-byte-per-pixel rows), independent of the encoder/decoder.
-    "q_multimodal_bmp" ->
-      """SELECT doc_id, 'image/bmp' AS media_format,
-        |CAST(doc_id % 64 + 1 AS INTEGER) AS width,
-        |CAST((doc_id // 64) % 64 + 1 AS INTEGER) AS height,
-        |CAST(54 + (3 * (doc_id % 64 + 1)
-        |  + (4 - (3 * (doc_id % 64 + 1)) % 4) % 4) * ((doc_id // 64) % 64 + 1) AS BIGINT) AS n_bytes,
-        |TRUE AS roundtrip_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // PPM file size = "P6\n" + w + " " + h + "\n255\n" (9 bytes + digit
-    // counts) + 3wh pixel bytes.
-    "q_multimodal_ppm" ->
-      """SELECT doc_id, 'image/ppm' AS media_format,
-        |CAST(doc_id % 64 + 1 AS INTEGER) AS width,
-        |CAST((doc_id // 64) % 64 + 1 AS INTEGER) AS height,
-        |CAST(9 + length(CAST(doc_id % 64 + 1 AS VARCHAR))
-        |  + length(CAST((doc_id // 64) % 64 + 1 AS VARCHAR))
-        |  + 3 * (doc_id % 64 + 1) * ((doc_id // 64) % 64 + 1) AS BIGINT) AS n_bytes,
-        |TRUE AS roundtrip_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // PNG file size (stored-block deflate): raw = h*(1+3w) filtered
-    // scanline bytes; 8 signature + 25 IHDR + 12 IDAT framing + 12 IEND
-    // + zlib (2 header + 5/block + raw + 4 adler) = 63 + raw + 5*blocks.
-    // Pixel stats replay the seed-cycling arithmetic: pixel byte j =
-    // seed byte (j mod len), channel = j mod 3 (RGB triples) — the text
-    // is ASCII, so ord() IS the byte the encoder cycled. The engine side
-    // computes the same sums from the actually-inflated+defiltered IDAT.
-    "q_multimodal_png" ->
-      """WITH geo AS (SELECT doc_id, text,
-        |  CAST(doc_id % 64 + 1 AS INTEGER) AS w,
-        |  CAST((doc_id // 64) % 64 + 1 AS INTEGER) AS h FROM documents),
-        |px AS (SELECT doc_id, CAST(j % 3 AS INTEGER) AS c,
-        |  ord(substr(text, CAST(j % strlen(text) AS INTEGER) + 1, 1)) AS v
-        |  FROM (SELECT doc_id, text, unnest(range(3 * w * h)) AS j FROM geo)),
-        |st AS (SELECT doc_id,
-        |  CAST(SUM(CASE WHEN c = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-        |  CAST(SUM(CASE WHEN c = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        |  CAST(SUM(CASE WHEN c = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b
-        |  FROM px GROUP BY doc_id)
-        |SELECT g.doc_id, 'image/png' AS media_format, g.w AS width, g.h AS height,
-        |CAST(63 + g.h * (1 + 3 * g.w)
-        |  + 5 * CEIL((g.h * (1 + 3 * g.w)) / 65535.0) AS BIGINT) AS n_bytes,
-        |TRUE AS roundtrip_ok,
-        |st.sum_r, st.sum_g, st.sum_b,
-        |CAST(st.sum_r AS DOUBLE) / (g.w * g.h) AS mean_r,
-        |CAST(st.sum_g AS DOUBLE) / (g.w * g.h) AS mean_g,
-        |CAST(st.sum_b AS DOUBLE) / (g.w * g.h) AS mean_b
-        |FROM geo g JOIN st USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // GIF file size: 794 fixed bytes (6 header + 7 LSD + 768 gray GCT +
-    // 10 image descriptor + 1 min-code + 1 terminator + 1 trailer) + db
-    // data bytes + 1 length byte per 255-byte sub-block, where db =
-    // ceil(9*C/8), C = n + (n-1)//254 + 2 LZW codes (literals + periodic
-    // CLEARs + initial CLEAR/EOI). The gray palette makes all three
-    // channel sums equal the seed-cycled byte sum over n = w*h pixels.
-    "q_multimodal_gif" ->
-      """WITH geo AS (SELECT doc_id, text,
-        |  CAST(doc_id % 64 + 1 AS INTEGER) AS w,
-        |  CAST((doc_id // 64) % 64 + 1 AS INTEGER) AS h FROM documents),
-        |sz AS (SELECT doc_id, w, h,
-        |  (9 * (w * h + (w * h - 1) // 254 + 2) + 7) // 8 AS db FROM geo),
-        |st AS (SELECT doc_id,
-        |  CAST(SUM(ord(substr(text, CAST(j % strlen(text) AS INTEGER) + 1, 1)))
-        |    AS BIGINT) AS s
-        |  FROM (SELECT doc_id, text, unnest(range(w * h)) AS j FROM geo)
-        |  GROUP BY doc_id)
-        |SELECT g.doc_id, 'image/gif' AS media_format, g.w AS width, g.h AS height,
-        |CAST(794 + z.db + (z.db + 254) // 255 AS BIGINT) AS n_bytes,
-        |TRUE AS roundtrip_ok,
-        |st.s AS sum_r, st.s AS sum_g, st.s AS sum_b
-        |FROM geo g JOIN sz z USING (doc_id) JOIN st USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // Full dHash replay: 9x8 nearest-neighbor grayscale grid (gray =
-    // r+g+b of source pixel ((y*h)//8, (x*w)//9)), bit y*8+x set iff
-    // grid(y,x) > grid(y,x+1) — bit 63 added as min-long (DuckDB rejects
-    // 1<<63) — then ALL-pairs Hamming <= 3 (the banded Spark join is
-    // exact at that radius by pigeonhole). Pixel bytes replay the same
-    // seed-cycling arithmetic as the PNG oracle; the C-corpus twin
-    // applies the planted +1 (mod 256) at pixel byte 0.
-    "q_image_phash" ->
-      s"""WITH $ImageDhashPairsCte
-         |SELECT id1, id2, hamming FROM ip ORDER BY id1, id2""".stripMargin,
-    // The image-dedup CLUSTER face: same replayed pairs, recursive-CTE
-    // reachability fixpoint, min label = canonical member (the same
-    // oracle shape as q_dedup_clusters over text pairs).
-    "q_image_dedup" ->
-      s"""WITH RECURSIVE $ImageDhashPairsCte,
-         |edges AS (SELECT id1 AS a, id2 AS b FROM ip
-         |UNION SELECT id2, id1 FROM ip),
-         |reach(id, lbl) AS (
-         |  SELECT a, a FROM edges
-         |  UNION
-         |  SELECT e.a, r.lbl FROM edges e JOIN reach r ON r.id = e.b)
-         |SELECT id, MIN(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin,
-    // Since round 8 the JPEG gate decodes REAL entropy-coded pixels; the
-    // tile-constant construction makes the lossy round trip bit-exact
-    // (see qMultimodalJpeg), so the oracle replays the decoded sums from
-    // the tile arithmetic: tile t (row-major over ceil(w/8) tiles across)
-    // has value seed[t % len] and covers min(8, w-8*tx) * min(8, h-8*ty)
-    // pixels; all three channels equal (grayscale).
-    "q_multimodal_jpeg" ->
-      """WITH geo AS (SELECT doc_id, text,
-        |  CAST(doc_id % 64 + 1 AS INTEGER) AS w,
-        |  CAST((doc_id // 64) % 64 + 1 AS INTEGER) AS h FROM documents),
-        |tiles AS (SELECT doc_id, text, w, h, (w + 7) // 8 AS ta,
-        |  unnest(range(((w + 7) // 8) * ((h + 7) // 8))) AS t FROM geo),
-        |tv AS (SELECT doc_id,
-        |  ord(substr(text, CAST(t % strlen(text) AS INTEGER) + 1, 1))
-        |    * least(8, w - 8 * (t % ta)) * least(8, h - 8 * (t // ta)) AS s
-        |  FROM tiles),
-        |st AS (SELECT doc_id, CAST(SUM(s) AS BIGINT) AS s FROM tv GROUP BY doc_id)
-        |SELECT g.doc_id, 'image/jpeg' AS media_format,
-        |g.w AS width, g.h AS height, TRUE AS roundtrip_ok,
-        |st.s AS sum_r, st.s AS sum_g, st.s AS sum_b,
-        |CAST(st.s AS DOUBLE) / (g.w * g.h) AS mean_r,
-        |CAST(st.s AS DOUBLE) / (g.w * g.h) AS mean_g,
-        |CAST(st.s AS DOUBLE) / (g.w * g.h) AS mean_b
-        |FROM geo g JOIN st USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // Seeded portable shuffle key replayed verbatim: seed-dependent odd
-    // multiplier (2·42+1)·prime mod 2^31 on the key, additive seed term,
-    // all mod 2^31; the position is row_number over that order.
-    "q_shuffle" ->
-      """WITH k AS (SELECT o_orderkey,
-        |  (((o_orderkey % 2147483648) * ((85 * 2654435761) % 2147483648))
-        |     % 2147483648
-        |   + (42 * 2246822519) % 2147483648) % 2147483648 AS skey
-        |  FROM orders)
-        |SELECT o_orderkey, skey,
-        |  row_number() OVER (ORDER BY skey, o_orderkey) - 1 AS pos
-        |FROM k ORDER BY o_orderkey""".stripMargin,
-    // Full replay of the vocabulary chain: same tokenization as the
-    // text-analysis oracles, counts, ranked top-40 cut (count desc,
-    // token asc), per-position id join, OOV -> -1.
-    "q_vocab_encode" ->
-      """WITH d AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS lst
-        |  FROM documents),
-        |toks AS (SELECT doc_id, unnest(lst) AS tok,
-        |  unnest(range(len(lst))) AS pos FROM d),
-        |cnt AS (SELECT tok, count(*) AS c FROM toks GROUP BY tok),
-        |voc AS (SELECT tok,
-        |  CAST(row_number() OVER (ORDER BY c DESC, tok) - 1 AS INTEGER) AS id
-        |  FROM cnt ORDER BY c DESC, tok LIMIT 40),
-        |enc AS (SELECT toks.doc_id,
-        |  array_to_string(array_agg(CAST(coalesce(voc.id, -1) AS VARCHAR)
-        |    ORDER BY toks.pos), ' ') AS ids_str,
-        |  count(*) AS n_tokens,
-        |  CAST(sum(CASE WHEN voc.id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-        |  FROM toks LEFT JOIN voc USING (tok) GROUP BY toks.doc_id)
-        |SELECT d.doc_id, coalesce(enc.ids_str, '') AS ids_str,
-        |  coalesce(enc.n_tokens, 0) AS n_tokens,
-        |  coalesce(enc.n_oov, 0) AS n_oov
-        |FROM d LEFT JOIN enc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // WAV file size = 44 (RIFF+fmt+data headers) + samples*channels*2
-    // (16-bit PCM frames).
-    "q_multimodal_wav" ->
-      """SELECT doc_id, 'audio/wav' AS media_format,
-        |CAST(doc_id % 2 + 1 AS INTEGER) AS channels,
-        |CAST(8000 + (doc_id % 8) * 1000 AS INTEGER) AS sample_rate,
-        |CAST(16 AS INTEGER) AS bits_per_sample,
-        |CAST(doc_id % 500 + 1 AS BIGINT) AS n_samples,
-        |CAST(44 + (doc_id % 500 + 1) * (doc_id % 2 + 1) * 2 AS BIGINT) AS n_bytes,
-        |TRUE AS roundtrip_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Per-channel PCM sample stats replayed from the byte-pair
-    // arithmetic: interleaved sample i (channel = i mod ch) is the
-    // little-endian int16 of seed bytes (2i, 2i+1) cycling the ASCII
-    // text; sign folded via (+32768) % 65536 - 32768 (identity for
-    // ASCII hi-bytes, kept for form). Means divide the exact sum by
-    // frames-per-channel, a deterministic double division.
-    "q_audio_stats" ->
-      """WITH geo AS (SELECT doc_id, text,
-        |  CAST(doc_id % 2 + 1 AS INTEGER) AS ch,
-        |  CAST(8000 + (doc_id % 8) * 1000 AS INTEGER) AS rate,
-        |  CAST(doc_id % 500 + 1 AS BIGINT) AS n FROM documents),
-        |sm AS (SELECT doc_id, CAST(i % ch AS INTEGER) AS channel,
-        |  ((ord(substr(text, CAST((2 * i + 1) % strlen(text) AS INTEGER) + 1, 1)) * 256
-        |    + ord(substr(text, CAST((2 * i) % strlen(text) AS INTEGER) + 1, 1))
-        |    + 32768) % 65536) - 32768 AS v
-        |  FROM (SELECT doc_id, text, ch, unnest(range(n * ch)) AS i FROM geo)),
-        |ag AS (SELECT doc_id, channel,
-        |  CAST(SUM(v) AS BIGINT) AS sum_s,
-        |  CAST(SUM(ABS(v)) AS BIGINT) AS sum_abs
-        |  FROM sm GROUP BY doc_id, channel)
-        |SELECT g.doc_id, a.channel, g.rate AS sample_rate, g.n AS n_samples,
-        |  a.sum_s, CAST(a.sum_s AS DOUBLE) / g.n AS mean_s, a.sum_abs
-        |FROM geo g JOIN ag a USING (doc_id)
-        |ORDER BY doc_id, channel""".stripMargin,
-    // Full audio-fingerprint replay: samples from the byte-pair
-    // arithmetic (as q_audio_stats), 65 envelope windows by integer
-    // division k = 65i/n, summed |amplitude| per window, bit k set iff
-    // env(k) > env(k+1) (bit 63 as min-long), then ALL-pairs Hamming
-    // <= 3. The C-corpus twin applies the planted +1 (mod 256) to the
-    // low byte of sample 0; the B twin has a different rate header but
-    // identical samples, so it never appears here — only ids differ.
-    "q_audio_phash" ->
-      """WITH geo AS (SELECT doc_id, text,
-        |  CAST(doc_id % 2 + 1 AS INTEGER) AS ch,
-        |  CAST(doc_id % 300 + 200 AS BIGINT) AS ns FROM documents),
-        |auds AS (
-        |  SELECT doc_id AS aud_id, text, ns * ch AS n, -1 AS pert FROM geo
-        |  UNION ALL
-        |  SELECT doc_id + 100000000, text, ns * ch, -1 FROM geo WHERE doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 200000000, text, ns * ch, 0 FROM geo WHERE doc_id % 7 = 0),
-        |sm AS (SELECT aud_id, n, i,
-        |  ((ord(substr(text, CAST((2 * i + 1) % strlen(text) AS INTEGER) + 1, 1)) * 256
-        |    + (ord(substr(text, CAST((2 * i) % strlen(text) AS INTEGER) + 1, 1))
-        |       + CASE WHEN i = pert THEN 1 ELSE 0 END) % 256
-        |    + 32768) % 65536) - 32768 AS v
-        |  FROM (SELECT aud_id, text, n, pert, unnest(range(n)) AS i FROM auds)),
-        |env AS (SELECT aud_id, CAST((65 * i) // n AS INTEGER) AS k, SUM(ABS(v)) AS e
-        |  FROM sm GROUP BY aud_id, CAST((65 * i) // n AS INTEGER)),
-        |bits AS (SELECT a.aud_id, a.k,
-        |  CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-        |  FROM env a JOIN env b ON a.aud_id = b.aud_id AND b.k = a.k + 1
-        |  WHERE a.k < 64),
-        |hs AS (SELECT aud_id,
-        |  CAST(SUM(CASE WHEN bit = 0 THEN 0
-        |    WHEN k = 63 THEN (-9223372036854775807 - 1)
-        |    ELSE (1::BIGINT << k) END) AS BIGINT) AS ahash
-        |  FROM bits GROUP BY aud_id)
-        |SELECT a.aud_id AS id1, b.aud_id AS id2,
-        |  bit_count(xor(a.ahash, b.ahash)) AS hamming
-        |FROM hs a JOIN hs b ON a.aud_id < b.aud_id
-        |WHERE bit_count(xor(a.ahash, b.ahash)) <= 3 ORDER BY id1, id2""".stripMargin,
-    // MP4 file size = 144 (ftyp 20 + moov/mvhd 116 + mdat header 8) +
-    // payload bytes; duration_ms replays the units*1000/timescale floor.
-    "q_multimodal_mp4" ->
-      """SELECT doc_id, 'video/mp4' AS media_format,
-        |CAST(600 + (doc_id % 5) * 100 AS INTEGER) AS timescale,
-        |CAST(doc_id % 100000 AS BIGINT) AS duration_units,
-        |CAST((doc_id % 100000) * 1000 // (600 + (doc_id % 5) * 100) AS BIGINT) AS duration_ms,
-        |CAST(144 + doc_id % 256 AS BIGINT) AS n_bytes,
-        |TRUE AS roundtrip_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_events_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |event_type, COUNT(*) AS n_events,
-        |CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    // The streaming face must commit EXACTLY the batch face's rows — one
-    // oracle text shared verbatim with q_events_window.
-    "q_stream_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |event_type, COUNT(*) AS n_events,
-        |CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "q_window_rank" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal,
-        |row_number() OVER w AS rn, rank() OVER w AS rk, dense_rank() OVER w AS drk
-        |FROM customer WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_window_analytics" ->
-      """SELECT c_custkey, c_mktsegment,
-        |lead(c_custkey, 1) OVER w AS next_key,
-        |lag(c_custkey, 1) OVER w AS prev_key,
-        |ntile(4) OVER w AS quartile,
-        |round(percent_rank() OVER w, 6) AS pct_rank,
-        |round(cume_dist() OVER w, 6) AS cume,
-        |nth_value(c_custkey, 2) OVER wr AS second_key,
-        |first_value(c_custkey) OVER wr AS top_key
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey),
-        |wr AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_lookup" ->
-      """SELECT p_brand, COUNT(*) AS n_items,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q_best_effort_agg" ->
-      """SELECT l_linestatus,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |COUNT(*) AS n FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q_agg_clusters" ->
-      """SELECT l_returnflag, MIN(l_quantity) AS mn, MAX(l_quantity) AS mx, COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sessionize" ->
-      """WITH t AS (SELECT user_id, event_id, ts,
-        |CAST(round(value * 100, 0) AS BIGINT) AS v FROM events),
-        |s AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 1800000 THEN 1 ELSE 0 END AS brk
-        |FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |g AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM s)
-        |SELECT user_id, MIN(epoch_ms(ts)) AS start_ms, MAX(epoch_ms(ts)) AS end_ms,
-        |COUNT(*) AS n_events, CAST(SUM(v) AS BIGINT) AS value_cents
-        |FROM g GROUP BY user_id, sess ORDER BY user_id, start_ms""".stripMargin,
-    // The stateful streaming face must emit EXACTLY the batch sessions —
-    // same oracle text as q_sessionize.
-    "q_stream_sessionize" ->
-      """WITH t AS (SELECT user_id, event_id, ts,
-        |CAST(round(value * 100, 0) AS BIGINT) AS v FROM events),
-        |s AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 1800000 THEN 1 ELSE 0 END AS brk
-        |FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |g AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess FROM s)
-        |SELECT user_id, MIN(epoch_ms(ts)) AS start_ms, MAX(epoch_ms(ts)) AS end_ms,
-        |COUNT(*) AS n_events, CAST(SUM(v) AS BIGINT) AS value_cents
-        |FROM g GROUP BY user_id, sess ORDER BY user_id, start_ms""".stripMargin,
-    // Streaming stateful dedup: key-projected rows make every duplicate
-    // identical and the un-evictable watermark horizon makes the emitted
-    // set exactly the distinct keys — any checkpoint-resume re-emission
-    // would duplicate a row and break the hash.
-    "q_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id, event_type""".stripMargin,
-    // Stream-stream interval join, replayed at µs precision (Spark
-    // TimestampType truncates the ns-precision raw values; 12 h =
-    // 43_200_000_000 µs).
-    "q_stream_join" ->
-      """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id
-        |FROM events p JOIN events c ON p.user_id = c.user_id
-        |  AND epoch_ns(c.ts) // 1000 >= epoch_ns(p.ts) // 1000 - 43200000000
-        |  AND epoch_ns(c.ts) // 1000 <= epoch_ns(p.ts) // 1000
-        |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-        |ORDER BY p.user_id, purchase_id, click_id""".stripMargin,
-    // The LEFT OUTER face: same interval join plus null-padded purchases
-    // with no qualifying click — the watermark-released rows.
-    "q_stream_outer_join" ->
-      """WITH p AS (SELECT user_id, event_id AS purchase_id,
-        |    epoch_ns(ts) // 1000 AS pus FROM events
-        |  WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id AS cuid, event_id AS click_id,
-        |    epoch_ns(ts) // 1000 AS cus FROM events
-        |  WHERE event_type = 'click')
-        |SELECT p.user_id, p.purchase_id, c.click_id
-        |FROM p LEFT JOIN c ON p.user_id = c.cuid
-        |  AND c.cus >= p.pus - 43200000000 AND c.cus <= p.pus
-        |ORDER BY user_id, purchase_id, click_id""".stripMargin,
-    // Stream-static anti-join with a mid-stream blocklist refresh: the
-    // committed sink = phase-1 rows (even event_id) filtered by V1
-    // (user_id%10=0) plus phase-2 rows (odd event_id) filtered by V2
-    // (user_id%10 in 0,1) — a stale static side on resume would leak
-    // user_id%10=1 phase-2 rows and break this predicate.
-    "q_stream_static_filter" ->
-      """SELECT event_id, user_id, event_type FROM events
-        |WHERE (event_id % 2 = 0 AND user_id % 10 <> 0)
-        |   OR (event_id % 2 = 1 AND user_id % 10 NOT IN (0, 1))
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_sliding_window" ->
-      """SELECT strftime(time_bucket(INTERVAL '15 minutes', ts)
-        |  - to_minutes(CAST(15 * i.i AS BIGINT)), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |event_type, COUNT(*) AS n_events
-        |FROM events CROSS JOIN (SELECT unnest(range(4)) AS i) i
-        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    // TRUE streaming run of the sliding windows — same batch oracle.
-    "q_stream_sliding" ->
-      """SELECT strftime(time_bucket(INTERVAL '15 minutes', ts)
-        |  - to_minutes(CAST(15 * i.i AS BIGINT)), '%Y-%m-%d %H:%M:%S') AS window_start,
-        |event_type, COUNT(*) AS n_events
-        |FROM events CROSS JOIN (SELECT unnest(range(4)) AS i) i
-        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "q_enum" ->
-      """SELECT o_orderkey,
-        |CASE o_orderpriority WHEN '1-URGENT' THEN 1 WHEN '2-HIGH' THEN 2
-        |WHEN '3-MEDIUM' THEN 3 WHEN '4-NOT SPECIFIED' THEN 4 WHEN '5-LOW' THEN 5 END AS prio_code,
-        |o_orderpriority AS prio_name,
-        |CAST(NULL AS VARCHAR) AS undefined_code
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_enum_storage" ->
-      """SELECT o_orderkey,
-        |CASE o_orderpriority WHEN '1-URGENT' THEN 1 WHEN '2-HIGH' THEN 2
-        |WHEN '3-MEDIUM' THEN 3 WHEN '4-NOT SPECIFIED' THEN 4 WHEN '5-LOW' THEN 5 END AS prio_code,
-        |o_orderpriority AS prio_name
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_expr_policy" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CAST(NULL AS DOUBLE) AS p_nulling,
-        |CAST(l_quantity AS DOUBLE) / 2 AS p_quiet,
-        |CAST(l_quantity AS DOUBLE) / 2 AS p_signal,
-        |CAST(trunc(l_quantity / 3.0) AS BIGINT) AS p_cppdiv,
-        |CAST(NULL AS BIGINT) AS p_cppdiv0,
-        |CASE WHEN l_quantity - 30 <= 0 THEN NULL
-        |  ELSE round(log10(l_quantity - 30), 6) END AS p_log10n,
-        |round(log2(l_quantity), 6) AS p_log2s,
-        |CAST(NULL AS DOUBLE) AS p_pow_null,
-        |pow(l_quantity, 2.0) AS p_pow_sig,
-        |printf('%.2f', CAST(l_quantity AS DOUBLE)) AS p_fmt_sig,
-        |CAST(l_orderkey AS INT) AS p_parse_q,
-        |CAST(l_linenumber AS BIGINT) AS p_cast_sig
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_asof_join" ->
-      """SELECT c.user_id, c.event_id, s.sv
-        |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-        |      WHERE event_type = 'click') c
-        |ASOF LEFT JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value AS sv
-        |      FROM events WHERE event_type = 'signup') s
-        |ON c.user_id = s.user_id AND c.ts >= s.ts
-        |ORDER BY c.user_id, c.event_id""".stripMargin,
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |GROUPING(l_returnflag, l_linestatus) AS gid,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |COUNT(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |GROUPING(o_orderstatus, o_orderpriority) AS gid,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |COUNT(*) AS n
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus, o_orderpriority""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |GROUPING(l_returnflag, l_linestatus) AS gid,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-        |CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_open,
-        |CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_filled,
-        |CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_pending
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_bloom_join" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // Full SemDeDup replay: nearest-centroid cell assignment (tie → higher
-    // centroid index, matching greatest() over (score, index) structs),
-    // then the recursive cell-size splits unrolled with the gate's own
-    // constants, within-cell cosine pairs at tau, connected components
-    // via recursive CTE, min-id canonical; unpaired rows are their own
-    // canonical.
-    "q_semdedup" -> semdedupOracle(SemdedupCap, SemdedupSplitK, SemdedupRounds),
-    "q_manifest_prune" ->
-      """SELECT month(o_orderdate) AS m, COUNT(*) AS n,
-        |CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND o_orderdate <= TIMESTAMP '1997-12-31 23:59:59'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_compact" ->
-      """WITH m AS (SELECT l_partkey % 40 AS file, COUNT(*) * 50 AS bytes
-        |  FROM lineitem GROUP BY 1),
-        |c AS (SELECT file, CAST(bytes AS BIGINT) AS bytes,
-        |  CAST(COALESCE(SUM(bytes) OVER (ORDER BY file
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-        |  FROM m)
-        |SELECT file, bytes, cum // 400000 AS bin FROM c ORDER BY file""".stripMargin,
-    "q_bpe_train" -> bpeTrainOracle(BpeNumMerges),
-    // WordPiece: likelihood-gain merges, all rounds unrolled; the
-    // fertility gate re-derives BOTH tokenizers at equal budget on the
-    // same #-stripped corpus.
-    "q_wordpiece_train" -> wpTrainOracle(WpNumMerges),
-    "q_wordpiece_fertility" -> wpFertilityOracle(WpNumMerges),
-    // the batched trainer must reproduce the SERIAL merge sequence — the
-    // oracle deliberately replays round-by-round serial BPE
-    "q_bpe_train_batched" -> bpeTrainOracle(BpeNumMerges),
-    "q_bpe_encode" -> bpeEncodeOracle(BpeNumMerges),
-    "q_pagerank" -> pagerankOracle(PagerankIters),
-    "q_cdc_apply" -> CdcFinalImageOracle,
-    // identical oracle BY CONSTRUCTION: incremental streaming application
-    // of the same log must land on the same final image
-    "q_stream_cdc" -> CdcFinalImageOracle,
-    "q_fuzzy_join" ->
-      """WITH t AS (SELECT DISTINCT p_name AS v FROM part)
-        |SELECT a.v AS s1, b.v AS s2, levenshtein(a.v, b.v) AS dist
-        |FROM t a JOIN t b ON a.v < b.v
-        |WHERE levenshtein(a.v, b.v) <= 2
-        |ORDER BY s1, s2""".stripMargin,
-    "q_histogram" ->
-      """SELECT CASE WHEN l_extendedprice IS NULL THEN NULL
-        |  WHEN l_extendedprice < 900.0 THEN -1
-        |  WHEN l_extendedprice >= 105000.0 THEN 20
-        |  ELSE CAST(floor((l_extendedprice - 900.0) * 20 / (105000.0 - 900.0)) AS BIGINT)
-        |END AS bin, COUNT(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q_resample" ->
-      """WITH a AS (SELECT user_id, date_trunc('day', ts) AS bucket,
-        |  COUNT(*) AS n, SUM(CAST(value AS DECIMAL(18,6))) AS s
-        |  FROM events GROUP BY 1, 2),
-        |sp AS (SELECT user_id, min(bucket) AS mn, max(bucket) AS mx FROM a GROUP BY 1),
-        |g AS (SELECT user_id, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS bucket FROM sp),
-        |j AS (SELECT g.user_id, g.bucket, a.n, a.s FROM g LEFT JOIN a USING (user_id, bucket))
-        |SELECT user_id, strftime(bucket, '%Y-%m-%d') AS day, COALESCE(n, 0) AS n,
-        |  CAST(last_value(s IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS filled
-        |FROM j ORDER BY user_id, day""".stripMargin,
-    // portableBucket replay (same formula as the q_sample_* oracles) +
-    // per-language rank cap
-    "q_domain_cap" ->
-      """WITH k AS (SELECT doc_id, lang,
-        |  ((doc_id % 2147483648) * 2654435761 % 2147483648) % 2147483648 % 1000000 AS b
-        |  FROM documents),
-        |r AS (SELECT doc_id, lang,
-        |  row_number() OVER (PARTITION BY lang ORDER BY b, doc_id) AS rn FROM k)
-        |SELECT doc_id, lang FROM r WHERE rn <= 30 ORDER BY lang, doc_id""".stripMargin,
-    // min-time-frontier funnel: stage i+1 = earliest event of its type
-    // STRICTLY after the stage-i frontier, compared at µs precision.
-    "q_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(epoch_ns(ts) // 1000) AS r
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(epoch_ns(e.ts) // 1000) AS r
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND epoch_ns(e.ts) // 1000 > s1.r GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(epoch_ns(e.ts) // 1000) AS r
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) // 1000 > s2.r GROUP BY 1),
-        |c AS (SELECT 1 AS stage, 'view' AS stage_name, count(*) AS users FROM s1
-        |  UNION ALL SELECT 2, 'click', count(*) FROM s2
-        |  UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-        |SELECT stage, stage_name, users,
-        |  CAST(users AS DOUBLE) / CAST(first_value(users) OVER (ORDER BY stage) AS DOUBLE) AS conv
-        |FROM c ORDER BY stage""".stripMargin,
-    // weekly cohort retention: Monday-truncated weeks in both engines, so
-    // the day difference is an exact multiple of 7.
-    "q_cohort" ->
-      """WITH e AS (SELECT user_id, date_trunc('week', ts) AS w FROM events),
-        |f AS (SELECT user_id, min(w) AS c FROM e GROUP BY 1)
-        |SELECT strftime(c, '%Y-%m-%d') AS cohort, date_diff('day', c, w) // 7 AS offset,
-        |  count(DISTINCT e.user_id) AS users
-        |FROM e JOIN f USING (user_id) GROUP BY 1, 2 ORDER BY cohort, "offset"""".stripMargin,
-    // exact equi-depth histogram: bucket = (rank−1)·k div n over the
-    // (value, tie-break keys) order
-    "q_histogram_eqdepth" ->
-      """WITH v AS (SELECT l_extendedprice AS v, l_orderkey AS k1, l_linenumber AS k2
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v, k1, k2) AS rk,
-        |  count(*) OVER () AS nt FROM v)
-        |SELECT (rk - 1) * 8 // nt AS bucket, count(*) AS n, min(v) AS lo, max(v) AS hi
-        |FROM r GROUP BY 1 ORDER BY bucket""".stripMargin,
-    // exact bivariate stats from decimal moment sums; decimal→double hops
-    // through the exact digit string (correctly rounded on every engine,
-    // unlike native decimal→double casts past 2^53) and the final doubles
-    // share the expression shape, so both engines produce identical bits
-    "q_corr" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_returnflag, n,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS corr,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS cov_samp
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    // duplicated 5-token spans: span text occurring >1 time corpus-wide
-    "q_dup_spans" ->
-      """WITH w AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS ws FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 4),
-        |  i -> array_to_string(ws[i:i+4], ' '))) AS s FROM w),
-        |c AS (SELECT s, count(*) AS cnt FROM sh GROUP BY 1),
-        |p AS (SELECT sh.doc_id, count(*) AS n_shingles,
-        |  CAST(SUM(CASE WHEN c.cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_shingles
-        |  FROM sh JOIN c USING (s) GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(p.n_shingles, 0) AS n_shingles,
-        |  COALESCE(p.dup_shingles, 0) AS dup_shingles,
-        |  CAST(COALESCE(p.dup_shingles, 0) AS DOUBLE) / greatest(COALESCE(p.n_shingles, 0), 1) AS dup_frac
-        |FROM documents d LEFT JOIN p USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "q_dup_spans_full" ->
-      """WITH all_docs AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000000, text FROM documents WHERE doc_id < 5),
-        |w AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS ws FROM all_docs),
-        |sh0 AS (SELECT doc_id, unnest(generate_series(1, len(ws) - 7)) AS s_start, ws FROM w WHERE len(ws) >= 8),
-        |sh AS (SELECT doc_id, s_start, array_to_string(ws[s_start:s_start+7], ' ') AS s FROM sh0),
-        |c AS (SELECT s FROM sh GROUP BY s HAVING count(*) > 1),
-        |d AS (SELECT doc_id, s_start FROM sh JOIN c USING (s)),
-        |i AS (SELECT doc_id, s_start,
-        |  CASE WHEN lag(s_start) OVER (PARTITION BY doc_id ORDER BY s_start) IS NULL
-        |       OR s_start > lag(s_start) OVER (PARTITION BY doc_id ORDER BY s_start) + 8
-        |       THEN 1 ELSE 0 END AS nw FROM d),
-        |j AS (SELECT doc_id, s_start,
-        |  SUM(nw) OVER (PARTITION BY doc_id ORDER BY s_start ROWS UNBOUNDED PRECEDING) AS island FROM i)
-        |SELECT doc_id, CAST(MIN(s_start) AS BIGINT) AS span_start,
-        |  CAST(MAX(s_start) + 7 AS BIGINT) AS span_end,
-        |  CAST(MAX(s_start) + 7 - MIN(s_start) + 1 AS BIGINT) AS span_len
-        |FROM j GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin,
-    "q_unigram_train" -> unigramTrainOracleSql(3),
-    "q_dup_longest" ->
-      """WITH all_docs AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000000, text FROM documents WHERE doc_id < 5),
-        |w AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS ws FROM all_docs),
-        |st AS (SELECT doc_id, unnest(generate_series(1, len(ws) - 7)) AS i, ws FROM w WHERE len(ws) >= 8),
-        |sub AS (SELECT array_to_string(ws[i:i+l-1], ' ') AS s, l
-        |  FROM (SELECT doc_id, i, ws, unnest(generate_series(8, len(ws) - i + 1)) AS l FROM st))
-        |SELECT COALESCE(CAST(MAX(l) AS BIGINT), 0) AS max_dup_len
-        |FROM (SELECT s, l FROM sub GROUP BY s, l HAVING count(*) > 1)""".stripMargin,
-    // hashed-linear classifier: integer-mills fold over the portable
-    // (length, first, last) token key — exact on any engine
-    "q_quality_classifier" ->
-      """WITH w AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS ws FROM documents),
-        |m AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(list_sum(list_transform(ws, t ->
-        |    ((((length(t) * 31 + ascii(t[1:1]) * 7 + ascii(t[-1:]))
-        |       % 64) * 2654435761) % 2147483648) % 2001 - 1000)), 0) AS BIGINT) AS mills
-        |  FROM w)
-        |SELECT doc_id, n_tokens,
-        |  CAST(mills AS DOUBLE) / (1000.0 * CAST(greatest(n_tokens, 1) AS DOUBLE)) AS score,
-        |  CAST(mills AS DOUBLE) / (1000.0 * CAST(greatest(n_tokens, 1) AS DOUBLE)) > -0.2 AS keep
-        |FROM m ORDER BY doc_id""".stripMargin,
-    // DSIR importance resampling: hashed-bigram buckets (portable token
-    // keys + integer scatter), Laplace-smoothed target/pool ratio tables
-    // over the FULL bucket domain, per-doc ln-at-9dp DECIMAL-summed
-    // scores, exact-integer top-fraction rank rule — every stage
-    // re-derived in SQL.
-    "q_dsir" ->
-      s"""WITH w AS MATERIALIZED (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS ws FROM documents),
-         |f AS MATERIALIZED (SELECT doc_id,
-         |  ((((length(a) * 31 + ascii(a[1:1]) * 7 + ascii(a[-1:])) * 1000003
-         |      + (length(b) * 31 + ascii(b[1:1]) * 7 + ascii(b[-1:]))) % 2147483648)
-         |     * 2654435761 % 2147483648) % 512 AS bucket
-         |  FROM (SELECT doc_id, ws[i] AS a, ws[i + 1] AS b
-         |        FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM w))),
-         |tf AS (SELECT bucket, count(*) AS tc FROM f
-         |  JOIN documents d USING (doc_id)
-         |  WHERE d.source IN ('src0','src1','src2') GROUP BY 1),
-         |pf AS (SELECT bucket, count(*) AS pc FROM f GROUP BY 1),
-         |tt AS (SELECT COALESCE(sum(tc), 0) AS t_tot FROM tf),
-         |pt AS (SELECT COALESCE(sum(pc), 0) AS p_tot FROM pf),
-         |r AS MATERIALIZED (SELECT g.bucket,
-         |  CAST(round(ln(
-         |    (CAST(COALESCE(tf.tc, 0) + 1 AS DOUBLE) / CAST(tt.t_tot + 512 AS DOUBLE)) /
-         |    (CAST(COALESCE(pf.pc, 0) + 1 AS DOUBLE) / CAST(pt.p_tot + 512 AS DOUBLE))), 9)
-         |    AS DECIMAL(20,9)) AS lr
-         |  FROM (SELECT unnest(range(0, 512)) AS bucket) g
-         |  LEFT JOIN tf USING (bucket) LEFT JOIN pf USING (bucket)
-         |  CROSS JOIN tt CROSS JOIN pt),
-         |s AS (SELECT f.doc_id, count(*) AS n_feats,
-         |  CAST(sum(r.lr) AS DECIMAL(28,9)) AS score
-         |  FROM f JOIN r USING (bucket) GROUP BY 1),
-         |sc AS (SELECT d0.doc_id, COALESCE(s.n_feats, 0) AS n_feats,
-         |  COALESCE(s.score, 0) AS score
-         |  FROM (SELECT doc_id FROM documents) d0 LEFT JOIN s USING (doc_id)),
-         |n AS (SELECT count(*) AS n FROM sc),
-         |rk AS (SELECT doc_id, n_feats, score,
-         |  row_number() OVER (ORDER BY score DESC, doc_id) - 1 AS rank FROM sc)
-         |SELECT doc_id, n_feats, CAST(score AS DOUBLE) AS score, rank,
-         |  rank * 4 < n.n AS keep
-         |FROM rk CROSS JOIN n ORDER BY doc_id""".stripMargin,
-    // weighted bernoulli: portable bucket under weight·Buckets
-    "q_weighted_sample" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE CAST(((doc_id % 2147483648) * 2654435761 % 2147483648) % 2147483648 % 1000000 AS DOUBLE)
-        |  < least(CAST(n_chars AS DOUBLE) / 400.0, 1.0) * 1000000.0
-        |ORDER BY doc_id""".stripMargin,
-    // robust outliers: lower medians via distributed-rank selection
-    "q_mad_outliers" ->
-      """WITH v AS (SELECT l_returnflag AS g, l_extendedprice AS v FROM lineitem WHERE l_extendedprice IS NOT NULL),
-        |c1 AS (SELECT g, v, count(*) AS c FROM v GROUP BY 1, 2),
-        |m1 AS (SELECT g, min(v) AS med FROM (
-        |  SELECT g, v, sum(c) OVER (PARTITION BY g ORDER BY v) AS cum,
-        |         sum(c) OVER (PARTITION BY g) AS n FROM c1)
-        |  WHERE cum >= (n + 1) // 2 GROUP BY g),
-        |d AS (SELECT v.g, v.v AS x, m1.med, abs(v.v - m1.med) AS dv FROM v JOIN m1 USING (g)),
-        |c2 AS (SELECT g, dv, count(*) AS c FROM d GROUP BY 1, 2),
-        |m2 AS (SELECT g, min(dv) AS mad FROM (
-        |  SELECT g, dv, sum(c) OVER (PARTITION BY g ORDER BY dv) AS cum,
-        |         sum(c) OVER (PARTITION BY g) AS n FROM c2)
-        |  WHERE cum >= (n + 1) // 2 GROUP BY g)
-        |SELECT d.g AS l_returnflag, count(*) AS n, any_value(d.med) AS med,
-        |  any_value(m2.mad) AS mad,
-        |  CAST(SUM(CASE WHEN d.dv > 3.0 * m2.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM d JOIN m2 USING (g) GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    // Exact token-set Jaccard >= 0.95 via DELETE-ONE signatures — an
-    // EQUAL but tractable rewrite of the naive all-pairs join (round 9,
-    // replacing the quadratic form that made the sf1 replay infeasible:
-    // ~2.5e9 list_intersects / ~1e11 shared-token rows, r8 record).
-    // Validity: jac >= 0.95 with symmetric difference d needs union
-    // u >= 19d, and u <= maxSetSize + d, so d <= maxSetSize/19 — with
-    // max distinct tokens per doc <= 37 every qualifying pair differs by
-    // AT MOST ONE token (measured: 31 at sf0.1, 32 at sf1). Qualifying
-    // pairs are then exactly (a) identical token sets (jac=1) plus
-    // (b) A = B minus one token with |B| >= 20 (jac=|A|/|B|), found by
-    // joining each doc's full sorted set to every delete-one set — cost
-    // Theta(docs x setSize + output), not Theta(docs^2). The `guard`
-    // branch emits poison rows if any doc ever exceeds 37 distinct
-    // tokens, so an assumption break fails the compare loudly instead of
-    // silently dropping pairs. Verified equal to the all-pairs form at
-    // sf0.01 (1,887 rows) and sf0.1 (190,925 rows); replays sf1 (867,302
-    // rows) in ~6 s where the all-pairs form needed hours.
-    "q_setsim_join" ->
-      s"WITH $SetsimPairsCte\nSELECT id1, id2, jac FROM sp ORDER BY id1, id2",
-    // Output-linear face of the same join: pairs → components → (id,
-    // min-member cluster), computed by the engine WITHOUT materializing
-    // member pairs (exact-set-collapsed representative graph).
-    "q_setsim_clusters" ->
-      s"WITH $SetsimPairsCte,\n${minLabelClustersSql("sp")}",
-    // oriented wedge-close triangle enumeration, credited to all corners
-    "q_triangles" ->
-      """WITH raw AS (SELECT o_custkey % 97 AS x, o_orderkey % 97 AS y FROM orders),
-        |e AS (SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b FROM raw WHERE x <> y),
-        |tr AS (SELECT e1.a, e1.b, e2.b AS c FROM e e1
-        |  JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |n AS (SELECT unnest([a, b, c]) AS node FROM tr)
-        |SELECT node, count(*) AS n_triangles FROM n GROUP BY 1 ORDER BY node""".stripMargin,
-    // 24 h-bounded funnel: conversion within (reach, reach + 86400 s]
-    "q_funnel_windowed" ->
-      """WITH s1 AS (SELECT user_id, min(epoch_ns(ts) // 1000) AS r
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(epoch_ns(e.ts) // 1000) AS r
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND epoch_ns(e.ts) // 1000 > s1.r
-        |    AND epoch_ns(e.ts) // 1000 <= s1.r + 86400000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(epoch_ns(e.ts) // 1000) AS r
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_ns(e.ts) // 1000 > s2.r
-        |    AND epoch_ns(e.ts) // 1000 <= s2.r + 86400000000 GROUP BY 1),
-        |c AS (SELECT 1 AS stage, 'view' AS stage_name, count(*) AS users FROM s1
-        |  UNION ALL SELECT 2, 'click', count(*) FROM s2
-        |  UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-        |SELECT stage, stage_name, users,
-        |  CAST(users AS DOUBLE) / CAST(first_value(users) OVER (ORDER BY stage) AS DOUBLE) AS conv
-        |FROM c ORDER BY stage""".stripMargin,
-    // conjunctive posting-list probe: docs containing ALL three terms
-    "q_inverted_index" ->
-      """WITH p AS (SELECT DISTINCT doc, term FROM (SELECT doc_id AS doc,
-        |  unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS term
-        |  FROM documents))
-        |SELECT doc FROM p WHERE term IN ('spark', 'window', 'merge')
-        |GROUP BY doc HAVING count(DISTINCT term) = 3 ORDER BY doc""".stripMargin,
-    // empirical-CDF normalization, cume_dist tie semantics
-    "q_quantile_norm" ->
-      """WITH v AS (SELECT o_orderkey, o_totalprice AS v FROM orders),
-        |c AS (SELECT v, count(*) AS c FROM v WHERE v IS NOT NULL GROUP BY 1),
-        |cc AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM c),
-        |n AS (SELECT count(*) AS n FROM v WHERE v IS NOT NULL)
-        |SELECT o_orderkey, v.v AS o_totalprice,
-        |  CAST(cum AS DOUBLE) / CAST(n.n AS DOUBLE) AS cume
-        |FROM v LEFT JOIN cc ON v.v = cc.v CROSS JOIN n ORDER BY o_orderkey""".stripMargin,
-    // SCD2 history: I/U open versions, the NEXT event (any op) closes them
-    "q_scd2" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, o_totalprice, 1 AS seq, 'I' AS op FROM orders
-        |  UNION ALL SELECT o_orderkey, o_totalprice * 2, 2, 'U' FROM orders WHERE o_orderkey % 5 = 0
-        |  UNION ALL SELECT o_orderkey, NULL, 3, 'D' FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL SELECT o_orderkey, o_totalprice + 1, 4, 'I' FROM orders WHERE o_orderkey % 35 = 0),
-        |v AS (SELECT *, lead(seq) OVER (PARTITION BY o_orderkey ORDER BY seq) AS valid_to FROM log)
-        |SELECT o_orderkey, o_totalprice, CAST(seq AS BIGINT) AS valid_from,
-        |  CAST(valid_to AS BIGINT) AS valid_to, valid_to IS NULL AS is_current
-        |FROM v WHERE op IN ('I', 'U') ORDER BY o_orderkey, valid_from""".stripMargin,
-    // group-wise OLS from the exact decimal moments; slope materialized
-    // so the shared subterm is evaluated once on both engines
-    "q_linreg" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM lineitem GROUP BY 1),
-        |sl AS (SELECT *, (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |  (CAST(n AS DOUBLE) * sxx - sx * sx) AS slope FROM m)
-        |SELECT l_returnflag, n, slope,
-        |  (sy - slope * sx) / CAST(n AS DOUBLE) AS intercept,
-        |  ((CAST(n AS DOUBLE) * sxy - sx * sy) * (CAST(n AS DOUBLE) * sxy - sx * sy)) /
-        |    ((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy)) AS r2
-        |FROM sl ORDER BY l_returnflag""".stripMargin,
-    // previous-observed-period deltas over daily decimal sums
-    "q_period_over_period" ->
-      """WITH a AS (SELECT event_type, date_trunc('day', ts) AS bucket,
-        |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS cur
-        |  FROM events GROUP BY 1, 2),
-        |l AS (SELECT *, lag(cur) OVER (PARTITION BY event_type ORDER BY bucket) AS prev FROM a)
-        |SELECT event_type, strftime(bucket, '%Y-%m-%d') AS day, cur, prev,
-        |  cur - prev AS change,
-        |  CASE WHEN prev IS NULL OR prev = 0.0 THEN NULL
-        |       ELSE cur / prev - 1.0 END AS pct_change
-        |FROM l ORDER BY event_type, day""".stripMargin,
-    // bigram PMI: joint over unigram-product probabilities, ALL-bigram
-    // denominator, minCount >= 5 output cut, 6 dp round. MATERIALIZED:
-    // DuckDB re-inlines the twice-referenced tokenization CTE (the r7
-    // DBSCAN finding) — at sf1 the un-hinted form timed out.
-    "q_pmi" ->
-      """WITH t AS MATERIALIZED (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS ws FROM documents),
-        |uni AS (SELECT unnest(ws) AS w FROM t),
-        |u AS (SELECT w, count(*) AS c FROM uni GROUP BY 1),
-        |ut AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM u),
-        |biall AS (SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-        |  i -> struct_pack(w1 := ws[i], w2 := ws[i+1]))) AS b FROM t),
-        |ba AS (SELECT b.w1 AS w1, b.w2 AS w2, count(*) AS c12 FROM biall GROUP BY 1, 2),
-        |bt AS (SELECT CAST(SUM(c12) AS BIGINT) AS bt FROM ba),
-        |q AS (SELECT w1, w2, c12 FROM ba WHERE c12 >= 5)
-        |SELECT q.w1, q.w2, q.c12, u1.c AS c1, u2.c AS c2,
-        |  round(ln((CAST(q.c12 AS DOUBLE) / CAST(bt.bt AS DOUBLE)) /
-        |    ((CAST(u1.c AS DOUBLE) / CAST(ut.t AS DOUBLE)) *
-        |     (CAST(u2.c AS DOUBLE) / CAST(ut.t AS DOUBLE)))), 6) AS pmi
-        |FROM q JOIN u u1 ON q.w1 = u1.w JOIN u u2 ON q.w2 = u2.w
-        |CROSS JOIN ut CROSS JOIN bt ORDER BY w1, w2""".stripMargin,
-    // constraint report over lineitem + three planted bad rows
-    "q_validate" ->
-      """WITH li AS (SELECT l_orderkey, l_linenumber, l_discount, l_returnflag FROM lineitem
-        |  UNION ALL SELECT NULL, 1, 0.5, 'Z'
-        |  UNION ALL SELECT 888888888, 1, 0.0, 'N'
-        |  UNION ALL SELECT 888888888, 1, 0.0, 'N'),
-        |c AS (
-        |  SELECT 'not_null(l_orderkey)' AS check, CAST(SUM(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS violations FROM li
-        |  UNION ALL SELECT 'in_range(l_discount, 0.0, 0.1)', CAST(SUM(CASE WHEN l_discount IS NOT NULL AND (l_discount < 0.0 OR l_discount > 0.1) THEN 1 ELSE 0 END) AS BIGINT) FROM li
-        |  UNION ALL SELECT 'accepted(l_returnflag)', CAST(SUM(CASE WHEN l_returnflag IS NOT NULL AND l_returnflag NOT IN ('A','N','R') THEN 1 ELSE 0 END) AS BIGINT) FROM li
-        |  UNION ALL SELECT 'unique(l_orderkey,l_linenumber)',
-        |    (SELECT CAST(COUNT(*) - COUNT(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT) FROM li
-        |     WHERE l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL)
-        |  UNION ALL SELECT 'ref_integrity(l_orderkey)',
-        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM li
-        |     WHERE l_orderkey IS NOT NULL
-        |       AND l_orderkey NOT IN (SELECT o_orderkey FROM orders)))
-        |SELECT "check", violations, violations = 0 AS pass FROM c ORDER BY "check"""".stripMargin,
-    // pointer-doubling root+depth over the div-10 ancestor closure
-    "q_hierarchy" ->
-      """WITH RECURSIVE ids AS (
-        |  SELECT DISTINCT id FROM (
-        |    SELECT o_orderkey // 1 AS id FROM orders
-        |    UNION ALL SELECT o_orderkey // 10 FROM orders
-        |    UNION ALL SELECT o_orderkey // 100 FROM orders
-        |    UNION ALL SELECT o_orderkey // 1000 FROM orders
-        |    UNION ALL SELECT o_orderkey // 10000 FROM orders
-        |    UNION ALL SELECT o_orderkey // 100000 FROM orders
-        |    UNION ALL SELECT o_orderkey // 1000000 FROM orders
-        |    UNION ALL SELECT o_orderkey // 10000000 FROM orders)
-        |  WHERE id >= 1),
-        |n AS (SELECT id, CASE WHEN id < 10 THEN NULL ELSE id // 10 END AS parent FROM ids),
-        |r(id, root, depth) AS (
-        |  SELECT id, id, 0 FROM n WHERE parent IS NULL
-        |  UNION ALL
-        |  SELECT n.id, r.root, r.depth + 1 FROM n JOIN r ON n.parent = r.id)
-        |SELECT id, root, CAST(depth AS BIGINT) AS depth FROM r ORDER BY id""".stripMargin,
-    // chi-square independence: integer cells, 6-dp-rounded decimal-summed contributions
-    "q_chisq" ->
-      """WITH cells AS (SELECT l_returnflag AS a, l_linestatus AS b, count(*) AS c FROM lineitem GROUP BY 1, 2),
-        |m AS (SELECT a, b, c,
-        |  CAST(SUM(c) OVER (PARTITION BY a) AS DOUBLE) * CAST(SUM(c) OVER (PARTITION BY b) AS DOUBLE)
-        |    / CAST(SUM(c) OVER () AS DOUBLE) AS e FROM cells),
-        |t AS (SELECT a, b, c,
-        |  CAST(round((CAST(c AS DOUBLE) - e) * (CAST(c AS DOUBLE) - e) / e, 6) AS DECIMAL(24,6)) AS contrib FROM m)
-        |SELECT CAST(SUM(c) AS BIGINT) AS n, count(*) AS cells,
-        |  (COUNT(DISTINCT a) - 1) * (COUNT(DISTINCT b) - 1) AS dof,
-        |  CAST(CAST(SUM(contrib) AS VARCHAR) AS DOUBLE) AS chi2
-        |FROM t""".stripMargin,
-    // Welch t-test: exact decimal moments per arm, fixed double dag
-    "q_ttest" ->
-      """WITH base AS (SELECT
-        |  count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_a,
-        |  CAST(CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS s_a,
-        |  CAST(CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN CAST(o_totalprice AS DECIMAL(12,2)) * CAST(o_totalprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS ss_a,
-        |  count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_b,
-        |  CAST(CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS s_b,
-        |  CAST(CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN CAST(o_totalprice AS DECIMAL(12,2)) * CAST(o_totalprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS ss_b
-        |  FROM orders WHERE o_orderstatus IN ('O', 'F') AND o_totalprice IS NOT NULL),
-        |mv AS (SELECT n_a, n_b,
-        |  s_a / CAST(n_a AS DOUBLE) AS mean_a, s_b / CAST(n_b AS DOUBLE) AS mean_b,
-        |  (ss_a - s_a * s_a / CAST(n_a AS DOUBLE)) / (CAST(n_a AS DOUBLE) - 1.0) AS v_a,
-        |  (ss_b - s_b * s_b / CAST(n_b AS DOUBLE)) / (CAST(n_b AS DOUBLE) - 1.0) AS v_b FROM base),
-        |se AS (SELECT n_a, n_b, mean_a, mean_b,
-        |  v_a / CAST(n_a AS DOUBLE) AS se_a, v_b / CAST(n_b AS DOUBLE) AS se_b FROM mv)
-        |SELECT n_a, n_b, mean_a, mean_b,
-        |  (mean_a - mean_b) / sqrt(se_a + se_b) AS t_stat,
-        |  ((se_a + se_b) * (se_a + se_b)) /
-        |    (se_a * se_a / (CAST(n_a AS DOUBLE) - 1.0) + se_b * se_b / (CAST(n_b AS DOUBLE) - 1.0)) AS dof
-        |FROM se""".stripMargin,
-    // k-anonymity: class-size fold over the quasi-identifier aggregate
-    "q_kanon" ->
-      """WITH c AS (SELECT c_nationkey, c_mktsegment, count(*) AS c FROM customer GROUP BY 1, 2)
-        |SELECT CAST(5 AS BIGINT) AS k, CAST(SUM(c) AS BIGINT) AS n_rows, count(*) AS n_classes,
-        |  CAST(SUM(CASE WHEN c < 5 THEN 1 ELSE 0 END) AS BIGINT) AS classes_below_k,
-        |  CAST(SUM(CASE WHEN c < 5 THEN c ELSE 0 END) AS BIGINT) AS rows_below_k,
-        |  MIN(c) AS min_class_size, MAX(c) AS max_class_size,
-        |  SUM(CASE WHEN c < 5 THEN 1 ELSE 0 END) = 0 AS anonymous
-        |FROM c""".stripMargin,
-    // key-skew profile: hottest-key share + rounded-decimal-summed entropy
-    "q_key_skew" ->
-      """WITH counts AS (SELECT l_partkey AS k, count(*) AS c FROM lineitem GROUP BY 1),
-        |t AS (SELECT c,
-        |  CAST(round(-(CAST(c AS DOUBLE) / CAST(SUM(c) OVER () AS DOUBLE)) *
-        |    ln(CAST(c AS DOUBLE) / CAST(SUM(c) OVER () AS DOUBLE)), 6) AS DECIMAL(24,6)) AS h FROM counts)
-        |SELECT CAST(SUM(c) AS BIGINT) AS n, count(*) AS n_keys, MAX(c) AS max_key_count,
-        |  round(CAST(MAX(c) AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6) AS top_share,
-        |  CAST(CAST(SUM(h) AS VARCHAR) AS DOUBLE) AS entropy
-        |FROM t""".stripMargin,
-    // snapshot diff: full-outer key join of v1 vs the mutated v2
-    "q_snapshot_diff" ->
-      """WITH v1 AS (SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders),
-        |v2 AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 13 = 1 THEN o_totalprice + 1.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_orderstatus
-        |  FROM orders WHERE o_orderkey % 97 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_orderstatus FROM orders WHERE o_orderkey % 101 = 5),
-        |j AS (SELECT COALESCE(a.o_orderkey, b.o_orderkey) AS o_orderkey,
-        |  CASE WHEN a.o_orderkey IS NULL THEN 'added'
-        |       WHEN b.o_orderkey IS NULL THEN 'removed'
-        |       WHEN (a.o_totalprice IS DISTINCT FROM b.o_totalprice)
-        |         OR (a.o_orderstatus IS DISTINCT FROM b.o_orderstatus) THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |  FROM v1 a FULL OUTER JOIN v2 b ON a.o_orderkey = b.o_orderkey)
-        |SELECT o_orderkey, status FROM j WHERE status <> 'unchanged' ORDER BY o_orderkey""".stripMargin,
-    // golden record: per-cluster most-frequent-non-null with (count desc, value asc) tie-break
-    "q_golden" ->
-      """WITH d AS (SELECT doc_id, md5(text) AS fp, lang, source FROM documents),
-        |base AS (SELECT fp, min(doc_id) AS canonical_id, count(*) AS n_members FROM d GROUP BY 1),
-        |lc AS (SELECT fp, lang, count(*) AS c FROM d WHERE lang IS NOT NULL GROUP BY 1, 2),
-        |lm AS (SELECT fp, lang AS golden_lang FROM
-        |  (SELECT fp, lang, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY c DESC, lang ASC) AS r FROM lc) WHERE r = 1),
-        |sc AS (SELECT fp, source, count(*) AS c FROM d WHERE source IS NOT NULL GROUP BY 1, 2),
-        |sm AS (SELECT fp, source AS golden_source FROM
-        |  (SELECT fp, source, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY c DESC, source ASC) AS r FROM sc) WHERE r = 1)
-        |SELECT b.fp, b.canonical_id, b.n_members, lm.golden_lang, sm.golden_source
-        |FROM base b LEFT JOIN lm USING (fp) LEFT JOIN sm USING (fp) ORDER BY b.fp""".stripMargin,
-    // join-size statistic from per-key counts (no join materialized)
-    "q_join_size" ->
-      """WITH lc AS (SELECT l_orderkey AS k, count(*) AS c FROM lineitem WHERE l_orderkey IS NOT NULL GROUP BY 1),
-        |rc AS (SELECT o_orderkey AS k, count(*) AS c FROM orders WHERE o_orderkey IS NOT NULL GROUP BY 1),
-        |m AS (SELECT count(*) AS matched_keys,
-        |  CAST(COALESCE(SUM(lc.c * rc.c), 0) AS BIGINT) AS join_rows FROM lc JOIN rc USING (k))
-        |SELECT (SELECT count(*) FROM lineitem) AS n_left,
-        |  (SELECT count(*) FROM orders) AS n_right, matched_keys, join_rows FROM m""".stripMargin,
-    // item-pair association rules: exact counts, fixed double dags
-    "q_basket" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-        |nb AS (SELECT count(DISTINCT b) AS n_baskets FROM items),
-        |ic AS (SELECT i, count(*) AS c FROM items GROUP BY 1),
-        |p AS (SELECT a.i AS i1, b.i AS i2, count(*) AS c12 FROM items a JOIN items b ON a.b = b.b AND a.i < b.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p.i1, p.i2, p.c12, c1.c AS c1, c2.c AS c2, nb.n_baskets,
-        |  CAST(p.c12 AS DOUBLE) / CAST(nb.n_baskets AS DOUBLE) AS support,
-        |  CAST(p.c12 AS DOUBLE) / CAST(c1.c AS DOUBLE) AS confidence,
-        |  (CAST(nb.n_baskets AS DOUBLE) * CAST(p.c12 AS DOUBLE)) /
-        |    (CAST(c1.c AS DOUBLE) * CAST(c2.c AS DOUBLE)) AS lift
-        |FROM p JOIN ic c1 ON p.i1 = c1.i JOIN ic c2 ON p.i2 = c2.i CROSS JOIN nb
-        |ORDER BY p.i1, p.i2""".stripMargin,
-    // spatial radius join: ALL-PAIRS oracle — equality proves grid recall
-    "q_spatial_join" ->
-      """WITH p AS (SELECT doc_id AS id,
-        |  ((doc_id % 2147483648) * 2654435761 % 2147483648) % 4000 AS x,
-        |  ((doc_id % 2147483648) * 2246822519 % 2147483648) % 4000 AS y FROM documents)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2
-        |FROM p a JOIN p b ON a.id < b.id
-        |WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 4096
-        |ORDER BY 1, 2""".stripMargin,
-    // deterministic k-means: 3 Lloyd iterations unrolled (q_pagerank standard);
-    // assignment = exact integer d2 argmin (tie -> smaller cid), update =
-    // floor-divided dimension sums, empty cluster keeps its centroid
-    "q_kmeans" ->
-      """WITH pts AS (SELECT vec_id AS id, CAST(i AS INTEGER) AS dim,
-        |  CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000) AS BIGINT) AS q
-        |  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) gs),
-        |init AS (SELECT id, CAST(ROW_NUMBER() OVER (ORDER BY id) - 1 AS INTEGER) AS cid
-        |  FROM (SELECT DISTINCT id FROM pts ORDER BY id LIMIT 8)),
-        |c0 AS (SELECT init.cid, p.dim, p.q AS v FROM pts p JOIN init ON p.id = init.id),
-        |a1 AS (SELECT id, cid FROM (
-        |  SELECT p.id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-        |  FROM pts p JOIN c0 c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-        |s1 AS (SELECT a.cid, p.dim, SUM(p.q) AS s, count(*) AS n FROM pts p JOIN a1 a ON p.id = a.id GROUP BY 1, 2),
-        |c1 AS (SELECT c0.cid, c0.dim,
-        |  CAST(COALESCE((s1.s - (((s1.s % s1.n) + s1.n) % s1.n)) // s1.n, c0.v) AS BIGINT) AS v
-        |  FROM c0 LEFT JOIN s1 ON c0.cid = s1.cid AND c0.dim = s1.dim),
-        |a2 AS (SELECT id, cid FROM (
-        |  SELECT p.id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-        |  FROM pts p JOIN c1 c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-        |s2 AS (SELECT a.cid, p.dim, SUM(p.q) AS s, count(*) AS n FROM pts p JOIN a2 a ON p.id = a.id GROUP BY 1, 2),
-        |c2 AS (SELECT c1.cid, c1.dim,
-        |  CAST(COALESCE((s2.s - (((s2.s % s2.n) + s2.n) % s2.n)) // s2.n, c1.v) AS BIGINT) AS v
-        |  FROM c1 LEFT JOIN s2 ON c1.cid = s2.cid AND c1.dim = s2.dim),
-        |a3 AS (SELECT id, cid FROM (
-        |  SELECT p.id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-        |  FROM pts p JOIN c2 c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-        |s3 AS (SELECT a.cid, p.dim, SUM(p.q) AS s, count(*) AS n FROM pts p JOIN a3 a ON p.id = a.id GROUP BY 1, 2),
-        |c3 AS (SELECT c2.cid, c2.dim,
-        |  CAST(COALESCE((s3.s - (((s3.s % s3.n) + s3.n) % s3.n)) // s3.n, c2.v) AS BIGINT) AS v
-        |  FROM c2 LEFT JOIN s3 ON c2.cid = s3.cid AND c2.dim = s3.dim)
-        |SELECT cid, dim, v FROM c3 ORDER BY cid, dim""".stripMargin,
-    // JL random projection: portable parity signs, exact integer sums
-    "q_rproj" ->
-      """WITH pts AS (SELECT vec_id, CAST(i AS BIGINT) AS i,
-        |  CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000) AS BIGINT) AS q
-        |  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) gs)
-        |SELECT vec_id, CAST(j AS INTEGER) AS rp_dim,
-        |  CAST(SUM(q * (CASE WHEN ((i + 1) * 2654435761 + (j + 1) * 2246822519) % 2147483648 % 2 = 0
-        |    THEN 1 ELSE -1 END)) AS BIGINT) AS rp_value
-        |FROM pts, (SELECT unnest(generate_series(0, 15)) AS j) js
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // one-way ANOVA: decimal moments, SS terms normalized by N before the
-    // 6-dp rounding (scale-invariant magnitude), decimal-summed
-    "q_anova" ->
-      """WITH g AS (SELECT l_returnflag AS grp, count(*) AS n,
-        |  SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS sdec,
-        |  SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS ssdec
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1),
-        |t AS (SELECT n,
-        |  CAST(round((CAST(CAST(ssdec AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(sdec AS VARCHAR) AS DOUBLE) * CAST(CAST(sdec AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE))
-        |    / CAST(SUM(n) OVER () AS DOUBLE), 6) AS DECIMAL(24,6)) AS ssw,
-        |  CAST(round(CAST(n AS DOUBLE) *
-        |    (CAST(CAST(sdec AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
-        |      - CAST(CAST(SUM(sdec) OVER () AS VARCHAR) AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE)) *
-        |    (CAST(CAST(sdec AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
-        |      - CAST(CAST(SUM(sdec) OVER () AS VARCHAR) AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE))
-        |    / CAST(SUM(n) OVER () AS DOUBLE), 6) AS DECIMAL(24,6)) AS ssb
-        |  FROM g),
-        |a AS (SELECT count(*) AS k, CAST(SUM(n) AS BIGINT) AS n,
-        |  CAST(CAST(SUM(ssb) AS VARCHAR) AS DOUBLE) AS ssb_over_n,
-        |  CAST(CAST(SUM(ssw) AS VARCHAR) AS DOUBLE) AS ssw_over_n FROM t)
-        |SELECT k, n, k - 1 AS dof_between, n - k AS dof_within, ssb_over_n, ssw_over_n,
-        |  (ssb_over_n / CAST(k - 1 AS DOUBLE)) / (ssw_over_n / CAST(n - k AS DOUBLE)) AS f_stat
-        |FROM a""".stripMargin,
-    // last-touch attribution: one IGNORE NULLS window, strictly-before frame
-    "q_attribution" ->
-      """WITH t AS (SELECT event_id, user_id, ts, event_type,
-        |  LAST_VALUE(CASE WHEN event_type IN ('view', 'click') THEN event_type END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch_type,
-        |  LAST_VALUE(CASE WHEN event_type IN ('view', 'click') THEN epoch_ns(ts) // 1000 END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch_ts
-        |  FROM events)
-        |SELECT event_id AS conversion_id, user_id, epoch_ns(ts) // 1000 AS conv_ts,
-        |  touch_type, touch_ts
-        |FROM t WHERE event_type = 'purchase' ORDER BY conversion_id""".stripMargin,
-    // seeded geometric mechanism: portable hash -> uniform -> inverse CDF
-    "q_dp_counts" ->
-      """WITH c AS (SELECT c_nationkey, count(*) AS n FROM customer GROUP BY 1),
-        |k AS (SELECT c_nationkey, n,
-        |  (((c_nationkey % 2147483648) * ((15 * 2654435761) % 2147483648)) % 2147483648
-        |    + (7 * 2246822519) % 2147483648) % 2147483648 AS k1,
-        |  (((c_nationkey % 2147483648) * ((17 * 2654435761) % 2147483648)) % 2147483648
-        |    + (8 * 2246822519) % 2147483648) % 2147483648 AS k2
-        |  FROM c)
-        |SELECT c_nationkey, n
-        |  + CAST(floor(round(ln(1.0 - (CAST(k1 AS DOUBLE) + 0.5) / 2147483648.0) / ln(0.5), 9)) AS BIGINT)
-        |  - CAST(floor(round(ln(1.0 - (CAST(k2 AS DOUBLE) + 0.5) / 2147483648.0) / ln(0.5), 9)) AS BIGINT)
-        |  AS noisy_count
-        |FROM k ORDER BY c_nationkey""".stripMargin,
-    // aggressive normalization + exact-dup grouping on the canonical form
-    "q_text_normalize" ->
-      """WITH n AS (SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS nt
-        |  FROM documents)
-        |SELECT doc_id, md5(nt) AS fp, CAST(length(nt) AS BIGINT) AS norm_chars,
-        |  MIN(doc_id) OVER (PARTITION BY nt) AS canonical
-        |FROM n ORDER BY doc_id""".stripMargin,
-    // incremental maintenance vs FULL RECOMPUTE over the effective set
-    "q_incremental_agg" ->
-      """WITH eff AS (
-        |  SELECT l_returnflag, l_quantity FROM lineitem
-        |  WHERE l_linenumber <= 4 AND NOT (l_linenumber = 1 AND l_orderkey % 10 = 0)
-        |  UNION ALL
-        |  SELECT l_returnflag, l_quantity FROM lineitem WHERE l_linenumber > 4)
-        |SELECT l_returnflag,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_v,
-        |  count(*) AS cnt
-        |FROM eff GROUP BY 1 ORDER BY 1""".stripMargin,
-    // profile drift: two one-scan profiles joined on column name
-    "q_profile_drift" ->
-      """WITH v2 AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 13 = 1 THEN o_totalprice + 1.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_orderstatus
-        |  FROM orders WHERE o_orderkey % 97 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_orderstatus FROM orders WHERE o_orderkey % 101 = 5),
-        |pa AS (
-        |  SELECT 'o_orderkey' AS col_name, COUNT(o_orderkey) AS n_nonnull_a,
-        |    CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_a,
-        |    COUNT(DISTINCT o_orderkey) AS n_distinct_a,
-        |    CAST(MIN(o_orderkey) AS DOUBLE) AS min_num_a, CAST(MAX(o_orderkey) AS DOUBLE) AS max_num_a,
-        |    CAST(NULL AS DOUBLE) AS avg_len_a FROM orders
-        |  UNION ALL
-        |  SELECT 'o_totalprice', COUNT(o_totalprice),
-        |    CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |    COUNT(DISTINCT o_totalprice), MIN(o_totalprice), MAX(o_totalprice),
-        |    CAST(NULL AS DOUBLE) FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', COUNT(o_orderstatus),
-        |    CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |    COUNT(DISTINCT o_orderstatus), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |    round(AVG(length(o_orderstatus)), 6) FROM orders),
-        |pb AS (
-        |  SELECT 'o_orderkey' AS col_name, COUNT(o_orderkey) AS n_nonnull_b,
-        |    CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_b,
-        |    COUNT(DISTINCT o_orderkey) AS n_distinct_b,
-        |    CAST(MIN(o_orderkey) AS DOUBLE) AS min_num_b, CAST(MAX(o_orderkey) AS DOUBLE) AS max_num_b,
-        |    CAST(NULL AS DOUBLE) AS avg_len_b FROM v2
-        |  UNION ALL
-        |  SELECT 'o_totalprice', COUNT(o_totalprice),
-        |    CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |    COUNT(DISTINCT o_totalprice), MIN(o_totalprice), MAX(o_totalprice),
-        |    CAST(NULL AS DOUBLE) FROM v2
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', COUNT(o_orderstatus),
-        |    CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |    COUNT(DISTINCT o_orderstatus), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-        |    round(AVG(length(o_orderstatus)), 6) FROM v2)
-        |SELECT pa.col_name, n_nonnull_a, n_null_a, n_distinct_a, min_num_a, max_num_a, avg_len_a,
-        |  n_nonnull_b, n_null_b, n_distinct_b, min_num_b, max_num_b, avg_len_b,
-        |  ((n_nonnull_a IS DISTINCT FROM n_nonnull_b)
-        |    OR (n_null_a IS DISTINCT FROM n_null_b)
-        |    OR (n_distinct_a IS DISTINCT FROM n_distinct_b)) AS drifted
-        |FROM pa JOIN pb ON pa.col_name = pb.col_name ORDER BY pa.col_name""".stripMargin,
-    // hybrid skew join: oracle is the PLAIN join over the same skewed corpus
-    "q_skew_join" ->
-      """WITH planted AS (SELECT * FROM lineitem WHERE l_suppkey % 50 = 0),
-        |sk AS (SELECT * FROM lineitem UNION ALL SELECT * FROM planted
-        |  UNION ALL SELECT * FROM planted UNION ALL SELECT * FROM planted)
-        |SELECT s_nationkey,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_qty,
-        |  count(*) AS cnt
-        |FROM sk JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // trailing-24h z-score anomaly over hourly buckets
-    "q_rate_anomaly" ->
-      """WITH b AS (SELECT date_trunc('hour', ts) AS bucket, count(*) AS c FROM events GROUP BY 1),
-        |t AS (SELECT bucket, c,
-        |  COUNT(c) OVER w AS n, SUM(c) OVER w AS s, SUM(c * c) OVER w AS ss
-        |  FROM b WINDOW w AS (ORDER BY bucket ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
-        |z AS (SELECT bucket, c,
-        |  CASE WHEN n = 24 AND (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0) > 0
-        |    THEN round((CAST(c AS DOUBLE) - CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) /
-        |      sqrt((CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)), 6)
-        |    END AS z
-        |  FROM t)
-        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket, c, z,
-        |  (z IS NOT NULL AND abs(z) > 2.0) AS anomaly
-        |FROM z ORDER BY bucket""".stripMargin,
-    // top-k value frequencies per column, (count desc, value asc) tie-break
-    "q_top_values" ->
-      """WITH s AS (
-        |  SELECT 'c_mktsegment' AS col_name, CAST(c_mktsegment AS VARCHAR) AS value FROM customer WHERE c_mktsegment IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'c_nationkey', CAST(c_nationkey AS VARCHAR) FROM customer WHERE c_nationkey IS NOT NULL),
-        |c AS (SELECT col_name, value, count(*) AS cnt FROM s GROUP BY 1, 2),
-        |r AS (SELECT col_name, value, cnt,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY col_name ORDER BY cnt DESC, value ASC) AS INTEGER) AS rank FROM c)
-        |SELECT col_name, value, cnt, rank FROM r WHERE rank <= 3
-        |ORDER BY col_name, rank""".stripMargin,
-    // streaming incremental-agg maintenance == full recompute (same
-    // effective set as q_incremental_agg)
-    "q_stream_incremental" ->
-      """WITH eff AS (
-        |  SELECT l_returnflag, l_quantity FROM lineitem
-        |  WHERE l_linenumber <= 4 AND NOT (l_linenumber = 1 AND l_orderkey % 10 = 0)
-        |  UNION ALL
-        |  SELECT l_returnflag, l_quantity FROM lineitem WHERE l_linenumber > 4)
-        |SELECT l_returnflag,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_v,
-        |  count(*) AS cnt
-        |FROM eff GROUP BY 1 ORDER BY 1""".stripMargin,
-    // exact nearest-rank percentiles from the distinct-value rank table
-    "q_percentiles" ->
-      """WITH dv AS (SELECT l_returnflag AS g, l_extendedprice AS v, count(*) AS c
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1, 2),
-        |cm AS (SELECT g, v, SUM(c) OVER (PARTITION BY g ORDER BY v) AS cum,
-        |  SUM(c) OVER (PARTITION BY g) AS n FROM dv),
-        |t AS (SELECT cm.*, p.p FROM cm CROSS JOIN (SELECT unnest([0.5, 0.9, 0.99]) AS p) p
-        |  WHERE cum >= ceil(p * CAST(n AS DOUBLE)))
-        |SELECT g AS l_returnflag, p, CAST(MAX(n) AS BIGINT) AS n, MIN(v) AS value
-        |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // temporal split with embargo: label counts per split
-    "q_temporal_split" ->
-      """WITH s AS (SELECT user_id,
-        |  CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 'train'
-        |       WHEN ts < TIMESTAMP '2024-01-15 00:00:00' + INTERVAL 86400 SECOND THEN 'embargo'
-        |       WHEN ts < TIMESTAMP '2024-01-25 00:00:00' THEN 'val'
-        |       WHEN ts < TIMESTAMP '2024-01-25 00:00:00' + INTERVAL 86400 SECOND THEN 'embargo'
-        |       ELSE 'test' END AS split
-        |  FROM events)
-        |SELECT split, count(*) AS n, count(DISTINCT user_id) AS users
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-    // content-defined anchor chunking: portable key, cumsum chunks,
-    // position-weighted fingerprints
-    "q_anchor_chunks" ->
-      """WITH w AS (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS ws FROM documents),
-        |tok AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS pos, unnest(ws) AS t FROM w),
-        |k AS (SELECT doc_id, pos,
-        |  (length(t) * 31 + ascii(t[1:1]) * 7 + ascii(t[-1:])) * 2654435761 % 2147483648 AS kt FROM tok),
-        |a AS (SELECT doc_id, pos, kt, CASE WHEN kt % 64 = 0 THEN 1 ELSE 0 END AS anchor FROM k),
-        |c AS (SELECT doc_id, pos, kt,
-        |  SUM(anchor) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS chunk FROM a),
-        |r AS (SELECT doc_id, chunk, kt,
-        |  ROW_NUMBER() OVER (PARTITION BY doc_id, chunk ORDER BY pos) AS rn FROM c)
-        |SELECT doc_id, CAST(chunk AS BIGINT) AS chunk, count(*) AS n_tokens,
-        |  CAST(SUM(kt * rn) % 2147483648 AS BIGINT) AS chunk_fp
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // deterministic contrastive negatives over the dense id domain
-    "q_negatives" ->
-      """WITH ids AS (SELECT vec_id, label FROM embeddings),
-        |nn AS (SELECT count(*) AS n FROM ids),
-        |c AS (SELECT a.vec_id AS anchor, a.label AS al, CAST(j.j AS INTEGER) AS j,
-        |  ((a.vec_id % nn.n) * (2654435761 % nn.n) + j.j * (2246822519 % nn.n) + 5 % nn.n) % nn.n AS nid
-        |  FROM ids a CROSS JOIN nn CROSS JOIN (SELECT unnest(generate_series(1, 3)) AS j) j)
-        |SELECT anchor, c.j, nid AS negative
-        |FROM c JOIN ids b ON c.nid = b.vec_id
-        |WHERE b.label <> c.al AND c.nid <> c.anchor
-        |ORDER BY anchor, j""".stripMargin,
-    // end-to-end recipe: filter -> normalize-dedup -> cap -> shuffle -> pack,
-    // the whole chain replayed
-    "q_recipe" ->
-      """WITH kept AS (SELECT doc_id, source, text FROM documents WHERE n_chars BETWEEN 100 AND 2000),
-        |fp AS (SELECT doc_id, source, text,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS f FROM kept),
-        |ded AS (SELECT doc_id, source, text FROM
-        |  (SELECT fp.*, MIN(doc_id) OVER (PARTITION BY f) AS canon FROM fp) WHERE doc_id = canon),
-        |cap AS (SELECT doc_id, source, text FROM (
-        |  SELECT ded.*, ROW_NUMBER() OVER (PARTITION BY source ORDER BY
-        |    ((doc_id % 2147483648) * 2654435761 % 2147483648) % 2147483648 % 1000000, doc_id) AS rn
-        |  FROM ded) WHERE rn <= 100),
-        |sh AS (SELECT doc_id, source, text,
-        |  (((doc_id % 2147483648) * ((85 * 2654435761) % 2147483648)) % 2147483648
-        |    + (42 * 2246822519) % 2147483648) % 2147483648 AS sk FROM cap),
-        |ord AS (SELECT doc_id, source, text,
-        |  CAST(ROW_NUMBER() OVER (ORDER BY sk, doc_id) - 1 AS INTEGER) AS pos FROM sh),
-        |tok AS (SELECT doc_id, source, pos,
-        |  CAST(len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) AS BIGINT) AS n_tokens FROM ord),
-        |pk AS (SELECT doc_id, source, pos, n_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum FROM tok)
-        |SELECT doc_id, source, pos, n_tokens,
-        |  CAST(FLOOR(CAST(cum AS DOUBLE) / 2048) AS BIGINT) AS seq
-        |FROM pk ORDER BY pos""".stripMargin,
-    // int8 L2 quantization: norm via inner product, 9-dp-rounded ratio floor
-    "q_embed_quantize" ->
-      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nrm FROM c),
-        |e AS (SELECT vec_id, unnest(generate_series(0, 63)) AS dim, unnest(v) AS x, nrm FROM n)
-        |SELECT vec_id, CAST(dim AS INTEGER) AS dim,
-        |  CAST(CASE WHEN nrm > 0 THEN floor(round(127.0 * x / nrm, 9)) ELSE 0 END AS INTEGER) AS q,
-        |  round(nrm, 6) AS norm
-        |FROM e ORDER BY vec_id, dim""".stripMargin,
-    // quarantine ingestion: good rows equal the parquet truth, 3 planted bad
-    "q_csv_quarantine" ->
-      """SELECT (SELECT count(*) FROM customer WHERE c_custkey <= 200) AS n_good,
-        |  CAST(3 AS BIGINT) AS n_bad,
-        |  (SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-        |   FROM customer WHERE c_custkey <= 200) AS sum_bal""".stripMargin,
-    // markup stripping: the exact regexp chain replayed (Java∩RE2 dialect)
-    "q_html_strip" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head><title>Doc ' || doc_id || ' &amp; co</title><style>p{margin:0}</style><script>var id='
-        |  || doc_id || ';</script></head><body><!-- src=' || source || ' --><h1 class="hd">' || source
-        |  || '</h1><p>' || text || '</p>'
-        |  || CASE WHEN doc_id % 3 = 0 THEN '<div>&quot;quoted&quot;&nbsp;&lt;tail&gt;</div>' ELSE '' END
-        |  || '</body></html>' AS html FROM documents),
-        |v AS (SELECT doc_id, html,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(replace(replace(
-        |      regexp_replace(regexp_replace(regexp_replace(regexp_replace(html,
-        |        '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |        '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-        |        '(?s)<!--.*?-->', ' ', 'g'),
-        |        '<[^>]+>', ' ', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&'),
-        |    '\s+', ' ', 'g')) AS vis FROM h)
-        |SELECT doc_id, regexp_extract(html, '(?is)<title[^>]*>(.*?)</title>', 1) AS title,
-        |  md5(vis) AS text_fp, CAST(length(vis) AS BIGINT) AS visible_chars,
-        |  round(CAST(length(html) - length(vis) AS DOUBLE) / greatest(length(html), 1), 6) AS markup_ratio
-        |FROM v ORDER BY doc_id""".stripMargin,
-    // URL canonicalization: the whole normalize chain replayed
-    "q_url_dedup" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'https' WHEN doc_id % 3 = 1 THEN 'HTTPS' ELSE 'Https' END
-        |  || '://'
-        |  || CASE WHEN doc_id % 2 = 0 THEN upper('www.' || source || '.example.com') ELSE 'www.' || source || '.example.com' END
-        |  || CASE WHEN doc_id % 3 = 1 THEN ':443' ELSE '' END
-        |  || '/docs/' || (doc_id % 400)
-        |  || CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END
-        |  || CASE WHEN doc_id % 4 = 0 THEN '?v=1&b=2'
-        |       WHEN doc_id % 4 = 1 THEN '?b=2&v=1&utm_source=tw'
-        |       WHEN doc_id % 4 = 2 THEN '?utm_campaign=x&v=1&b=2&gclid=99'
-        |       ELSE '?v=1&ref=home&b=2' END
-        |  || CASE WHEN doc_id % 5 = 0 THEN '#sec2' ELSE '' END AS url
-        |  FROM documents),
-        |parts AS (SELECT doc_id, url,
-        |  lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://([^/?#]*)(.*)$', 1)) AS scheme,
-        |  lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://([^/?#]*)(.*)$', 2)) AS host0,
-        |  regexp_replace(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://([^/?#]*)(.*)$', 3), '#.*$', '') AS nofrag
-        |  FROM u),
-        |norm AS (SELECT doc_id, url, scheme,
-        |  CASE WHEN scheme = 'http' THEN regexp_replace(host0, ':80$', '')
-        |       WHEN scheme = 'https' THEN regexp_replace(host0, ':443$', '')
-        |       ELSE host0 END AS host,
-        |  regexp_extract(nofrag, '^([^?]*)', 1) AS path0,
-        |  regexp_replace(regexp_replace(regexp_extract(nofrag, '\?(.*)$', 1),
-        |    '(?:utm_[a-z0-9]+|ref|fbclid|gclid|mc_eid)=[^&]*(?:&|$)', '', 'g'), '&+$', '') AS q2
-        |  FROM parts),
-        |canon AS (SELECT doc_id,
-        |  scheme || '://' || host
-        |  || CASE WHEN length(CASE WHEN path0 <> '/' AND path0 LIKE '%/' THEN substr(path0, 1, length(path0) - 1) ELSE path0 END) = 0
-        |       THEN '/' ELSE CASE WHEN path0 <> '/' AND path0 LIKE '%/' THEN substr(path0, 1, length(path0) - 1) ELSE path0 END END
-        |  || CASE WHEN length(q2) > 0 THEN '?' || array_to_string(list_sort(string_split(q2, '&')), '&') ELSE '' END
-        |  AS canon_url FROM norm)
-        |SELECT doc_id, canon_url,
-        |  MIN(doc_id) OVER (PARTITION BY canon_url) AS canonical,
-        |  doc_id <> MIN(doc_id) OVER (PARTITION BY canon_url) AS is_dup
-        |FROM canon ORDER BY doc_id""".stripMargin,
-    // corpus-level line dedup: heavy lines (count > 10) dropped everywhere
-    "q_line_dedup" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'Subscribe to our newsletter'
-        |       WHEN doc_id % 4 = 1 THEN 'All rights reserved.'
-        |       WHEN doc_id % 4 = 2 THEN 'Cookie policy: accept'
-        |       ELSE 'Share this page' END
-        |  || chr(10) || text || chr(10) || 'Doc ' || doc_id || ' footer' || chr(10)
-        |  || CASE WHEN doc_id % 3 = 0 THEN 'Follow us on social media'
-        |       WHEN doc_id % 3 = 1 THEN 'Back to top'
-        |       ELSE 'Contact support' END AS t FROM documents),
-        |p AS (SELECT doc_id, string_split(t, chr(10)) AS ls FROM d),
-        |l AS (SELECT doc_id, unnest(ls) AS line, unnest(range(1, len(ls) + 1)) AS pos FROM p),
-        |heavy AS (SELECT line FROM l GROUP BY line HAVING count(*) > 10),
-        |kept AS (SELECT * FROM l WHERE line NOT IN (SELECT line FROM heavy)),
-        |ka AS (SELECT doc_id, count(*) AS n_kept,
-        |  md5(string_agg(line, chr(10) ORDER BY pos)) AS clean_fp FROM kept GROUP BY doc_id),
-        |tot AS (SELECT doc_id, CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines FROM d)
-        |SELECT tot.doc_id, tot.n_lines,
-        |  tot.n_lines - COALESCE(ka.n_kept, 0) AS n_removed,
-        |  COALESCE(ka.clean_fp, md5('')) AS clean_fp
-        |FROM tot LEFT JOIN ka ON tot.doc_id = ka.doc_id ORDER BY tot.doc_id""".stripMargin,
-    // lexical diversity: 9-dp p·ln p contributions, decimal-summed
-    "q_lexical_diversity" ->
-      """WITH tok AS (SELECT doc_id,
-        |  unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS w
-        |  FROM documents),
-        |pt AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY doc_id, w),
-        |wn AS (SELECT doc_id, c, CAST(SUM(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n FROM pt),
-        |h AS (SELECT doc_id, MAX(n) AS n_tokens, count(*) AS n_types,
-        |  round(CAST(-SUM(CAST(round((CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) / n), 9) AS DECIMAL(20,9))) AS DOUBLE), 6) AS entropy
-        |  FROM wn GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(h.n_tokens, 0) AS n_tokens, COALESCE(h.n_types, 0) AS n_types,
-        |  COALESCE(round(CAST(h.n_types AS DOUBLE) / h.n_tokens, 6), 0.0) AS ttr,
-        |  COALESCE(h.entropy, 0.0) AS entropy
-        |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id ORDER BY d.doc_id""".stripMargin,
-    // length bucketing: CASE-chain buckets, sharded seeded rank, floor-div batches
-    "q_length_buckets" ->
-      """WITH t AS (SELECT doc_id,
-        |  CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |b AS (SELECT doc_id, n_tokens,
-        |  CAST(CASE WHEN n_tokens <= 16 THEN 16 WHEN n_tokens <= 32 THEN 32
-        |    WHEN n_tokens <= 64 THEN 64 WHEN n_tokens <= 128 THEN 128
-        |    WHEN n_tokens <= 256 THEN 256 WHEN n_tokens <= 512 THEN 512
-        |    WHEN n_tokens <= 1024 THEN 1024 ELSE 2048 END AS BIGINT) AS bucket,
-        |  (((doc_id % 2147483648) * (((15 * 2654435761) % 2147483648))) % 2147483648
-        |    + (7 * 2246822519) % 2147483648) % 2147483648 AS sk
-        |  FROM t),
-        |r AS (SELECT doc_id, n_tokens, bucket, sk % 8 AS shard,
-        |  ROW_NUMBER() OVER (PARTITION BY bucket, sk % 8 ORDER BY sk, doc_id) AS rn
-        |  FROM b)
-        |SELECT doc_id, n_tokens, bucket, shard,
-        |  CAST(FLOOR(CAST(rn - 1 AS DOUBLE) / FLOOR(8192.0 / bucket)) AS BIGINT) AS batch_id,
-        |  bucket - least(n_tokens, bucket) AS pad
-        |FROM r ORDER BY doc_id""".stripMargin,
-    // trigram novelty vs the doc_id % 10 = 0 reference slice
-    "q_novelty" ->
-      """WITH ls AS (SELECT doc_id,
-        |  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS ts
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(ts) AS w, unnest(range(1, len(ts) + 1)) AS pos FROM ls),
-        |g0 AS (SELECT doc_id, w,
-        |  lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w1,
-        |  lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w2 FROM tok),
-        |g AS (SELECT doc_id, w || ' ' || w1 || ' ' || w2 AS gram FROM g0 WHERE w2 IS NOT NULL),
-        |dict AS (SELECT DISTINCT md5(gram) AS gh FROM g WHERE doc_id % 10 = 0),
-        |dg AS (SELECT DISTINCT doc_id, md5(gram) AS gh FROM g),
-        |sc AS (SELECT dg.doc_id, count(*) AS n_ngrams,
-        |  CAST(SUM(CASE WHEN dict.gh IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-        |  FROM dg LEFT JOIN dict ON dg.gh = dict.gh GROUP BY dg.doc_id)
-        |SELECT d.doc_id, COALESCE(sc.n_ngrams, 0) AS n_ngrams,
-        |  COALESCE(sc.n_novel, 0) AS n_novel,
-        |  COALESCE(round(CAST(sc.n_novel AS DOUBLE) / sc.n_ngrams, 6), 0.0) AS novelty
-        |FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id ORDER BY d.doc_id""".stripMargin,
-    // JSON extraction: flatten-once (from_json) and per-path JSONPath
-    // (get_json_object) both replayed via DuckDB's json_extract_string.
-    "q_json_extract" ->
-      """WITH t AS (SELECT event_type, props,
-        |  '{"id":' || CAST(event_id AS VARCHAR) ||
-        |  ',"nest":{"u":' || CAST(user_id AS VARCHAR) ||
-        |  '},"arr":[1,' || CAST(event_id % 5 AS VARCHAR) || ']}' AS nj
-        |  FROM events)
-        |SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  CAST(SUM(CAST(json_extract_string(nj, '$.nest.u') AS BIGINT)) AS BIGINT) AS sum_u,
-        |  CAST(SUM(CAST(json_extract_string(nj, '$.arr[1]') AS BIGINT)) AS BIGINT) AS sum_arr,
-        |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // UNPIVOT: the relational equivalent is this 4-way UNION ALL (4 table
-    // scans); the Spark side plans ONE Expand over one scan.
-    "q_unpivot" ->
-      """WITH long AS (
-        |  SELECT l_returnflag, 'quantity' AS metric,
-        |    CAST(l_quantity AS DECIMAL(18,2)) AS value FROM lineitem
-        |  UNION ALL SELECT l_returnflag, 'extendedprice',
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) FROM lineitem
-        |  UNION ALL SELECT l_returnflag, 'discount',
-        |    CAST(l_discount AS DECIMAL(18,2)) FROM lineitem
-        |  UNION ALL SELECT l_returnflag, 'tax',
-        |    CAST(l_tax AS DECIMAL(18,2)) FROM lineitem)
-        |SELECT l_returnflag, metric,
-        |  CAST(CAST(SUM(value) AS VARCHAR) AS DOUBLE) AS sum_value
-        |FROM long GROUP BY l_returnflag, metric
-        |ORDER BY l_returnflag, metric""".stripMargin,
-    // Burst-collapse debounce: gaps-and-islands leaders, gap measured
-    // from the previous event (one lag window), 1 h threshold.
-    "q_debounce" ->
-      """WITH w AS (SELECT event_id, user_id, event_type, ts,
-        |  lag(ts) OVER (PARTITION BY user_id, event_type
-        |    ORDER BY ts ASC, event_id ASC) AS prev
-        |  FROM events)
-        |SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
-        |FROM w WHERE prev IS NULL OR epoch_us(ts) - epoch_us(prev) > 3600000000
-        |ORDER BY event_id""".stripMargin,
-    // ARG_MAX/ARG_MIN tie-break is the (order, value) lexicographic
-    // extreme — replayed as rank-1 rows under the matching total order.
-    "q_argmax" ->
-      """WITH r AS (SELECT l_returnflag, l_orderkey,
-        |  ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |    ORDER BY l_extendedprice DESC, l_orderkey DESC) AS rmax,
-        |  ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |    ORDER BY l_extendedprice ASC, l_orderkey ASC) AS rmin
-        |  FROM lineitem)
-        |SELECT l_returnflag,
-        |  MAX(CASE WHEN rmax = 1 THEN l_orderkey END) AS top_key,
-        |  MAX(CASE WHEN rmin = 1 THEN l_orderkey END) AS bottom_key,
-        |  COUNT(*) AS n
-        |FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // Gaps-and-islands overlap merge: island breaks where start strictly
-    // exceeds the running max end of everything before it.
-    "q_interval_merge" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
-        |  epoch_us(ts) + ((event_id % 7) + 1) * 600000000 AS e FROM events),
-        |m AS (SELECT user_id, s, e, MAX(e) OVER (PARTITION BY user_id
-        |  ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-        |  FROM iv),
-        |g AS (SELECT *, SUM(CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END)
-        |  OVER (PARTITION BY user_id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM m)
-        |SELECT user_id, MIN(s) AS s, MAX(e) AS e, COUNT(*) AS n_merged
-        |FROM g GROUP BY user_id, island ORDER BY user_id, s""".stripMargin,
-    "q_transitions" ->
-      """WITH t AS (SELECT event_type, lead(event_type) OVER (
-        |  PARTITION BY user_id ORDER BY ts, event_id) AS nxt FROM events)
-        |SELECT event_type AS from_type, nxt AS to_type, COUNT(*) AS n
-        |FROM t WHERE nxt IS NOT NULL
-        |GROUP BY from_type, nxt ORDER BY from_type, to_type""".stripMargin,
-    // ntile under the same TOTAL order (value, orderkey, linenumber);
-    // bucket membership pinned by the exact integer key sum.
-    "q_ntile" ->
-      """WITH b AS (SELECT l_returnflag, l_orderkey, l_extendedprice,
-        |  ntile(5) OVER (PARTITION BY l_returnflag
-        |    ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS bucket
-        |  FROM lineitem)
-        |SELECT l_returnflag, CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n,
-        |  MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi,
-        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_key
-        |FROM b GROUP BY l_returnflag, bucket
-        |ORDER BY l_returnflag, bucket""".stripMargin,
-    // FD audit over DISTINCT (lhs, rhs) pairs — NULL rhs is a value.
-    "q_fd_check" ->
-      """WITH f1 AS (SELECT 'orders_key' AS check_name, lhs, COUNT(*) AS nr
-        |  FROM (SELECT DISTINCT o_orderkey AS lhs, o_custkey AS r FROM orders)
-        |  GROUP BY lhs),
-        |f2 AS (SELECT 'order_returnflag' AS check_name, lhs, COUNT(*) AS nr
-        |  FROM (SELECT DISTINCT l_orderkey AS lhs, l_returnflag AS r FROM lineitem)
-        |  GROUP BY lhs),
-        |f3 AS (SELECT 'nation_segment' AS check_name, lhs, COUNT(*) AS nr
-        |  FROM (SELECT DISTINCT c_nationkey AS lhs, c_mktsegment AS r FROM customer)
-        |  GROUP BY lhs),
-        |u AS (SELECT * FROM f1 UNION ALL SELECT * FROM f2 UNION ALL
-        |  SELECT * FROM f3)
-        |SELECT check_name, COUNT(*) AS lhs_groups,
-        |  CAST(SUM(CASE WHEN nr > 1 THEN 1 ELSE 0 END) AS BIGINT) AS violating_groups,
-        |  CAST(MAX(nr) AS BIGINT) AS max_rhs_per_lhs,
-        |  SUM(CASE WHEN nr > 1 THEN 1 ELSE 0 END) = 0 AS holds
-        |FROM u GROUP BY check_name ORDER BY check_name""".stripMargin,
-    // RFM: integer recency days via µs floor-division, global ntile with
-    // the customer key tie-break — DuckDB ntile is BIGINT, Spark's INT;
-    // both kind-match under the driver's compare.
-    "q_rfm" ->
-      """WITH c AS (SELECT o_custkey, max(o_orderdate) AS last_ts,
-        |    count(*) AS frequency,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS mon
-        |  FROM orders GROUP BY 1),
-        |d AS (SELECT o_custkey, frequency, mon,
-        |    (epoch_ns((SELECT max(o_orderdate) FROM orders)) // 1000
-        |     - epoch_ns(last_ts) // 1000) // 86400000000 AS r_days
-        |  FROM c),
-        |s AS (SELECT o_custkey, r_days, frequency,
-        |    CAST(mon AS DOUBLE) AS monetary,
-        |    ntile(5) OVER (ORDER BY r_days, o_custkey) AS r_score,
-        |    ntile(5) OVER (ORDER BY frequency DESC, o_custkey) AS f_score,
-        |    ntile(5) OVER (ORDER BY mon DESC, o_custkey) AS m_score
-        |  FROM d)
-        |SELECT o_custkey, r_days, frequency, monetary, r_score, f_score,
-        |  m_score, r_score * 100 + f_score * 10 + m_score AS segment
-        |FROM s ORDER BY o_custkey""".stripMargin,
-    // ABC: cumulative decimal revenue against scaled-integer cut lines —
-    // no float share division anywhere near the class boundary.
-    "q_abc" ->
-      """WITH r AS (SELECT l_partkey,
-        |    sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS rev
-        |  FROM lineitem GROUP BY 1),
-        |w AS (SELECT l_partkey, rev,
-        |    sum(rev) OVER (ORDER BY rev DESC, l_partkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    (SELECT sum(rev) FROM r) AS total
-        |  FROM r)
-        |SELECT l_partkey, CAST(rev AS DOUBLE) AS revenue,
-        |  CAST(cum AS DOUBLE) AS cum_revenue,
-        |  CASE WHEN cum * 100 <= total * 80 THEN 'A'
-        |       WHEN cum * 100 <= total * 95 THEN 'B'
-        |       ELSE 'C' END AS abc_class
-        |FROM w ORDER BY l_partkey""".stripMargin,
-    // Mann-Whitney: 2·R1 = Σ c1·(2·bef + c + 1) over distinct values
-    // keeps tie-averaged ranks integral; z mirrors the engine's exact
-    // expression shape (no continuity correction).
-    "q_mannwhitney" ->
-      """WITH f AS (SELECT CAST(l_quantity AS DOUBLE) AS v,
-        |    CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END AS a1,
-        |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS a2
-        |  FROM lineitem WHERE l_returnflag IN ('A', 'R')),
-        |g AS (SELECT v, CAST(SUM(a1) AS BIGINT) AS c1,
-        |    CAST(SUM(a2) AS BIGINT) AS c2 FROM f GROUP BY v),
-        |w AS (SELECT v, c1, c2,
-        |    COALESCE(SUM(c1 + c2) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-        |  FROM g),
-        |s AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1,
-        |    CAST(SUM(c2) AS BIGINT) AS n2,
-        |    CAST(SUM(c1 * (2 * bef + c1 + c2 + 1)) AS BIGINT) AS two_r1,
-        |    CAST(SUM((c1 + c2) * (c1 + c2) * (c1 + c2) - (c1 + c2)) AS BIGINT) AS ties
-        |  FROM w),
-        |u AS (SELECT n1, n2, two_r1 - n1 * (n1 + 1) AS two_u, ties FROM s)
-        |SELECT n1, n2, two_u,
-        |  round(1.0 - CAST(two_u AS DOUBLE) /
-        |    (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS rank_biserial,
-        |  round((CAST(two_u AS DOUBLE) / 2.0
-        |      - CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) / 2.0) /
-        |    sqrt(CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) / 12.0 *
-        |      ((CAST(n1 + n2 AS DOUBLE) + 1.0) - CAST(ties AS DOUBLE) /
-        |        (CAST(n1 + n2 AS DOUBLE) * (CAST(n1 + n2 AS DOUBLE) - 1.0)))), 6)
-        |    AS z
-        |FROM u""".stripMargin,
-    // KS: integer ECDF numerator over the union of observed values.
-    "q_ks_test" ->
-      """WITH f AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
-        |    CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END AS a1,
-        |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS a2
-        |  FROM lineitem WHERE l_returnflag IN ('A', 'R')),
-        |g AS (SELECT v, CAST(SUM(a1) AS BIGINT) AS c1,
-        |    CAST(SUM(a2) AS BIGINT) AS c2 FROM f GROUP BY v),
-        |w AS (SELECT
-        |    SUM(c1) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
-        |    SUM(c2) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2,
-        |    (SELECT CAST(SUM(c1) AS BIGINT) FROM g) AS n1,
-        |    (SELECT CAST(SUM(c2) AS BIGINT) FROM g) AS n2
-        |  FROM g)
-        |SELECT MAX(n1) AS n1, MAX(n2) AS n2,
-        |  CAST(MAX(ABS(n2 * cum1 - n1 * cum2)) AS BIGINT) AS d_num,
-        |  round(CAST(MAX(ABS(n2 * cum1 - n1 * cum2)) AS DOUBLE) /
-        |    (CAST(MAX(n1) AS DOUBLE) * CAST(MAX(n2) AS DOUBLE)), 6) AS d
-        |FROM w""".stripMargin,
-    // Item-item cosine: both directions of each qualifying pair ranked
-    // per item; ORDER BY the raw double cosine (identical bits both
-    // engines), ties on (c12 desc, i2).
-    "q_item_sim" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-        |  FROM lineitem),
-        |cnt AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS c FROM it GROUP BY 1),
-        |und AS (SELECT a.i AS i1, b.i AS i2, CAST(COUNT(*) AS BIGINT) AS c12
-        |  FROM it a JOIN it b ON a.b = b.b AND a.i < b.i
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |dir AS (SELECT i1, i2, c12 FROM und
-        |  UNION ALL SELECT i2, i1, c12 FROM und),
-        |sc AS (SELECT d.i1, d.i2, d.c12, c1.c AS c1, c2.c AS c2,
-        |    CAST(d.c12 AS DOUBLE) / sqrt(CAST(c1.c * c2.c AS DOUBLE)) AS cos
-        |  FROM dir d JOIN cnt c1 ON d.i1 = c1.i JOIN cnt c2 ON d.i2 = c2.i),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY i1
-        |    ORDER BY cos DESC, c12 DESC, i2) AS rank FROM sc)
-        |SELECT i1, i2, c12, c1, c2, round(cos, 6) AS cosine,
-        |  CAST(rank AS INTEGER) AS rank
-        |FROM rk WHERE rank <= 5 ORDER BY i1, rank""".stripMargin,
-    // Stratified k-fold: replay the seeded shuffle key (seed 42 ⇒ odd
-    // multiplier (2·42+1)·P0 mod 2^31 + offset 42·P1), deal round-robin
-    // within each language stratum.
-    "q_kfold" ->
-      """WITH k AS (SELECT lang, doc_id,
-        |  (((doc_id % 2147483648) * ((85 * 2654435761) % 2147483648))
-        |     % 2147483648
-        |   + (42 * 2246822519) % 2147483648) % 2147483648 AS skey
-        |  FROM documents),
-        |r AS (SELECT lang, doc_id,
-        |    row_number() OVER (PARTITION BY lang ORDER BY skey, doc_id) AS rn
-        |  FROM k)
-        |SELECT lang, CAST((rn - 1) % 5 AS INTEGER) AS fold,
-        |  COUNT(*) AS n, CAST(SUM(doc_id) AS BIGINT) AS sum_id
-        |FROM r GROUP BY lang, fold ORDER BY lang, fold""".stripMargin,
-    // Time travel: v0 = keys ≡0 (mod 3), v1 adds ≡1, v2 swaps the ≡0
-    // file for a price-doubled rewrite.
-    "q_time_travel" ->
-      """SELECT 0 AS version, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE o_orderkey % 3 = 0
-        |UNION ALL
-        |SELECT 1, COUNT(*),
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |FROM orders WHERE o_orderkey % 3 IN (0, 1)
-        |UNION ALL
-        |SELECT 2, COUNT(*),
-        |  CAST(SUM(CAST(CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice * 2
-        |    ELSE o_totalprice END AS DECIMAL(18,2))) AS DOUBLE)
-        |FROM orders WHERE o_orderkey % 3 IN (0, 1)
-        |ORDER BY version""".stripMargin,
-    // First-3 user journeys: ordered prefix per user, path counts.
-    "q_paths" ->
-      """WITH r AS (SELECT user_id, event_type,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |p AS (SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path,
-        |    CAST(COUNT(*) AS INTEGER) AS depth
-        |  FROM r WHERE rn <= 3 GROUP BY user_id)
-        |SELECT path, depth, COUNT(*) AS n_users
-        |FROM p GROUP BY path, depth ORDER BY path, depth""".stripMargin,
-    // Trailing-5 rolling stats: decimal window sums, exact short heads.
-    "q_moving_avg" ->
-      """WITH w AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS ts_us,
-        |    COUNT(CAST(value AS DECIMAL(18,6))) OVER win AS win_n,
-        |    SUM(CAST(value AS DECIMAL(18,6))) OVER win AS win_sum,
-        |    MIN(CAST(value AS DECIMAL(18,6))) OVER win AS win_min_d,
-        |    MAX(CAST(value AS DECIMAL(18,6))) OVER win AS win_max_d
-        |  FROM events
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW))
-        |SELECT user_id, event_id, ts_us,
-        |  round(CAST(win_sum AS DOUBLE) / CAST(win_n AS DOUBLE), 6) AS win_mean,
-        |  CAST(win_n AS BIGINT) AS win_n,
-        |  CAST(win_min_d AS DOUBLE) AS win_min,
-        |  CAST(win_max_d AS DOUBLE) AS win_max
-        |FROM w ORDER BY user_id, event_id""".stripMargin,
-    // Daily OHLC/VWAP bars: open/close replayed as rank-1 rows under
-    // the engine's exact (µs, price) struct order. Volume is cast
-    // DECIMAL(19,6) — deliberately ONE integer digit wider than the
-    // engine's (18,6) (TimeSeries.ohlcBars) for two reasons: DuckDB only
-    // switches decimal arithmetic to int128 at width ≥19 (an int64-backed
-    // (18,6) product would overflow silently), and oracle-wider means an
-    // engine-side decimal overflow surfaces as a gate mismatch instead of
-    // matching nulls on both sides.
-    "q_ohlc" ->
-      """WITH e AS (SELECT event_type,
-        |    strftime(date_trunc('day', ts), '%Y-%m-%d') AS bucket,
-        |    epoch_ns(ts) // 1000 AS us, CAST(value AS DOUBLE) AS p,
-        |    CAST(value AS DECIMAL(12,6)) AS pd,
-        |    CAST(event_id AS DECIMAL(19,6)) AS vd
-        |  FROM events),
-        |r AS (SELECT *,
-        |    row_number() OVER (PARTITION BY event_type, bucket
-        |      ORDER BY us, p) AS ro,
-        |    row_number() OVER (PARTITION BY event_type, bucket
-        |      ORDER BY us DESC, p DESC) AS rc
-        |  FROM e)
-        |SELECT event_type, bucket, COUNT(*) AS n,
-        |  MAX(CASE WHEN ro = 1 THEN p END) AS open,
-        |  CAST(MAX(pd) AS DOUBLE) AS high,
-        |  CAST(MIN(pd) AS DOUBLE) AS low,
-        |  MAX(CASE WHEN rc = 1 THEN p END) AS close,
-        |  round(CAST(CAST(SUM(pd * vd) AS VARCHAR) AS DOUBLE) /
-        |    CAST(CAST(SUM(vd) AS VARCHAR) AS DOUBLE), 6) AS vwap,
-        |  CAST(CAST(SUM(vd) AS VARCHAR) AS DOUBLE) AS volume
-        |FROM r GROUP BY event_type, bucket
-        |ORDER BY event_type, bucket""".stripMargin,
-    // Top-N + OTHER: rank over the category aggregate, exact decimal
-    // re-fold of the tail.
-    "q_top_n_other" ->
-      """WITH agg AS (SELECT COALESCE(CAST(l_partkey AS VARCHAR), 'NULL')
-        |      AS category,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS m,
-        |    COUNT(*) AS nr
-        |  FROM lineitem GROUP BY 1),
-        |k AS (SELECT category,
-        |    row_number() OVER (ORDER BY m DESC, category) AS r FROM agg)
-        |SELECT CASE WHEN k.r <= 10 THEN agg.category ELSE 'OTHER' END
-        |    AS category,
-        |  CAST(SUM(m) AS DOUBLE) AS measure_sum,
-        |  CAST(SUM(nr) AS BIGINT) AS n_rows
-        |FROM agg JOIN k USING (category)
-        |GROUP BY 1 ORDER BY category""".stripMargin,
-    // Two-proportion z (pooled), success = quantity > 25.
-    "q_prop_test" ->
-      """WITH f AS (SELECT
-        |    CAST(SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(SUM(CASE WHEN l_returnflag = 'A' AND l_quantity > 25
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS x1,
-        |    CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |    CAST(SUM(CASE WHEN l_returnflag = 'R' AND l_quantity > 25
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS x2
-        |  FROM lineitem WHERE l_returnflag IN ('A', 'R'))
-        |SELECT n1, x1, n2, x2,
-        |  round(CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE), 6) AS p1,
-        |  round(CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE), 6) AS p2,
-        |  round((CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-        |      - CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE)) /
-        |    sqrt(CAST(x1 + x2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE) *
-        |      (1.0 - CAST(x1 + x2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) *
-        |      (1.0 / CAST(n1 AS DOUBLE) + 1.0 / CAST(n2 AS DOUBLE))), 6) AS z
-        |FROM f""".stripMargin,
-    // Schema evolution: the v1-added column reads NULL from the v0 file.
-    "q_schema_evolution" ->
-      """SELECT CASE WHEN o_orderkey % 2 = 0 THEN '<v0>'
-        |    ELSE o_orderpriority END AS prio,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY 1 ORDER BY prio""".stripMargin,
-    // PIT join: the q_scd2 history replayed, then a LEFT validity join;
-    // facts in a deleted window keep NULL payload.
-    "q_pit_join" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, o_totalprice, 1 AS seq, 'I' AS op FROM orders
-        |  UNION ALL SELECT o_orderkey, o_totalprice * 2, 2, 'U' FROM orders WHERE o_orderkey % 5 = 0
-        |  UNION ALL SELECT o_orderkey, NULL, 3, 'D' FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL SELECT o_orderkey, o_totalprice + 1, 4, 'I' FROM orders WHERE o_orderkey % 35 = 0),
-        |v AS (SELECT *, lead(seq) OVER (PARTITION BY o_orderkey ORDER BY seq) AS valid_to FROM log),
-        |h AS (SELECT o_orderkey, o_totalprice AS dim_price,
-        |    CAST(seq AS BIGINT) AS valid_from, CAST(valid_to AS BIGINT) AS valid_to
-        |  FROM v WHERE op IN ('I', 'U')),
-        |f AS (SELECT o_orderkey, 1 + o_orderkey % 4 AS fact_seq FROM orders),
-        |mt AS (SELECT f.o_orderkey, f.fact_seq, h.dim_price, h.valid_from
-        |  FROM f JOIN h ON f.o_orderkey = h.o_orderkey
-        |  WHERE f.fact_seq >= h.valid_from
-        |    AND (h.valid_to IS NULL OR f.fact_seq < h.valid_to))
-        |SELECT o_orderkey, fact_seq, dim_price, valid_from, TRUE AS matched
-        |FROM mt
-        |UNION ALL
-        |SELECT f.o_orderkey, f.fact_seq, CAST(NULL AS DOUBLE),
-        |  CAST(NULL AS BIGINT), FALSE
-        |FROM f ANTI JOIN mt ON f.o_orderkey = mt.o_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-    // Fellegi-Sunter: constant 6-dp log weights, decimal-summed; the
-    // blocking join and null-safe agreement replayed verbatim.
-    "q_linkage" ->
-      """WITH dirty AS (SELECT lower(c_name) AS block, c_custkey AS r_id,
-        |    CASE WHEN c_custkey % 4 = 0 THEN upper(c_name) ELSE c_name END AS c_name,
-        |    CASE WHEN c_custkey % 3 = 0 THEN c_acctbal + 1000 ELSE c_acctbal END AS c_acctbal,
-        |    c_mktsegment
-        |  FROM customer),
-        |p AS (SELECT l.c_custkey AS lid, r.r_id AS rid,
-        |    l.c_name IS NOT DISTINCT FROM r.c_name AS ag_c_name,
-        |    l.c_acctbal IS NOT DISTINCT FROM r.c_acctbal AS ag_c_acctbal,
-        |    l.c_mktsegment IS NOT DISTINCT FROM r.c_mktsegment AS ag_c_mktsegment
-        |  FROM customer l JOIN dirty r ON lower(l.c_name) = r.block),
-        |sc AS (SELECT lid, rid, ag_c_name, ag_c_acctbal, ag_c_mktsegment,
-        |    CAST(CASE WHEN ag_c_name THEN round(ln(0.95 / 0.001), 6)
-        |      ELSE round(ln(0.05 / 0.999), 6) END AS DECIMAL(18,6))
-        |  + CAST(CASE WHEN ag_c_acctbal THEN round(ln(0.9 / 0.001), 6)
-        |      ELSE round(ln(0.1 / 0.999), 6) END AS DECIMAL(18,6))
-        |  + CAST(CASE WHEN ag_c_mktsegment THEN round(ln(0.95 / 0.2), 6)
-        |      ELSE round(ln(0.05 / 0.8), 6) END AS DECIMAL(18,6)) AS sd
-        |  FROM p)
-        |SELECT lid, rid, ag_c_name, ag_c_acctbal, ag_c_mktsegment,
-        |  round(CAST(sd AS DOUBLE), 6) AS score
-        |FROM sc WHERE CAST(sd AS DOUBLE) > 0 ORDER BY lid, rid""".stripMargin,
-    // Benford: first significant digit from the exact decimal string.
-    "q_benford" ->
-      """WITH dg AS (SELECT substr(regexp_replace(
-        |    CAST(abs(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR),
-        |    '^0\.0*', ''), 1, 1) AS digit
-        |  FROM orders),
-        |c AS (SELECT digit, COUNT(*) AS n FROM dg
-        |  WHERE digit IN ('1','2','3','4','5','6','7','8','9')
-        |  GROUP BY digit),
-        |t AS (SELECT CAST(SUM(n) AS BIGINT) AS tot FROM c)
-        |SELECT digit, n,
-        |  round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS observed_frac,
-        |  round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6) AS benford_frac,
-        |  round((CAST(n AS DOUBLE) - CAST(tot AS DOUBLE) *
-        |      round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)) *
-        |    (CAST(n AS DOUBLE) - CAST(tot AS DOUBLE) *
-        |      round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)) /
-        |    (CAST(tot AS DOUBLE) *
-        |      round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)), 6)
-        |    AS chi2_term
-        |FROM c CROSS JOIN t ORDER BY digit""".stripMargin,
-    // Calendar spine: ISO dow (1 = Monday) in both engines.
-    "q_date_dim" ->
-      """SELECT strftime(d, '%Y-%m-%d') AS date,
-        |  year(d) AS year, quarter(d) AS quarter, month(d) AS month,
-        |  day(d) AS day, isodow(d) AS isodow,
-        |  isodow(d) >= 6 AS is_weekend, day(d) = 1 AS is_month_start,
-        |  d = last_day(d) AS is_month_end
-        |FROM generate_series(DATE '1995-01-01', DATE '1998-12-31',
-        |  INTERVAL 1 DAY) t(d)
-        |ORDER BY date""".stripMargin,
-    // Skyline: the distinct-x prefix-max formulation replayed.
-    "q_skyline" ->
-      """WITH p AS (SELECT l_partkey,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS revenue,
-        |    SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qty
-        |  FROM lineitem GROUP BY 1),
-        |x AS (SELECT revenue AS xv, MAX(qty) AS my FROM p GROUP BY 1),
-        |k AS (SELECT xv, my, MAX(my) OVER (ORDER BY xv DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM x)
-        |SELECT p.l_partkey, CAST(p.revenue AS DOUBLE) AS revenue,
-        |  CAST(p.qty AS DOUBLE) AS qty
-        |FROM p JOIN k ON p.revenue = k.xv AND p.qty = k.my
-        |WHERE k.pm IS NULL OR k.my > k.pm
-        |ORDER BY l_partkey""".stripMargin,
-    // Fingerprint: 48-bit md5 row hashes summed as DECIMAL(38,0); the
-    // reordered replica is BY CONSTRUCTION the same sum as base, the
-    // perturbed one re-derives with the price bump.
-    "q_fingerprint" ->
-      """WITH b AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) AS price FROM lineitem),
-        |fb AS (SELECT COUNT(*) AS n_rows,
-        |    CAST(SUM(('0x' || substr(md5(concat_ws('|',
-        |      CAST(l_orderkey AS VARCHAR), CAST(l_linenumber AS VARCHAR),
-        |      l_returnflag, CAST(price AS VARCHAR))), 1, 12))::BIGINT)
-        |      AS DECIMAL(38,0)) AS f
-        |  FROM b),
-        |pb AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-        |    CASE WHEN l_orderkey % 1000 = 0 THEN price + 0.01
-        |      ELSE price END AS price FROM b),
-        |fp AS (SELECT COUNT(*) AS n_rows,
-        |    CAST(SUM(('0x' || substr(md5(concat_ws('|',
-        |      CAST(l_orderkey AS VARCHAR), CAST(l_linenumber AS VARCHAR),
-        |      l_returnflag, CAST(price AS VARCHAR))), 1, 12))::BIGINT)
-        |      AS DECIMAL(38,0)) AS f
-        |  FROM pb)
-        |SELECT 'base' AS replica, n_rows, CAST(f AS VARCHAR) AS fingerprint FROM fb
-        |UNION ALL
-        |SELECT 'perturbed', n_rows, CAST(f AS VARCHAR) FROM fp
-        |UNION ALL
-        |SELECT 'reordered', n_rows, CAST(f AS VARCHAR) FROM fb
-        |ORDER BY replica""".stripMargin,
-    // Sweep-line concurrency: deltas netted per (key, instant) — ends
-    // release before starts acquire at the same time — then a prefix sum
-    // per user; peak + earliest peak time.
-    "q_concurrency" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
-        |  epoch_us(ts) + ((event_id % 7) + 1) * 600000000 AS e FROM events),
-        |d AS (SELECT user_id, s AS t, 1 AS dd FROM iv
-        |  UNION ALL SELECT user_id, e, -1 FROM iv),
-        |pi AS (SELECT user_id, t, SUM(dd) AS net,
-        |    SUM(CASE WHEN dd > 0 THEN 1 ELSE 0 END) AS starts
-        |  FROM d GROUP BY user_id, t),
-        |c AS (SELECT user_id, t, starts, SUM(net) OVER (
-        |    PARTITION BY user_id ORDER BY t
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS conc
-        |  FROM pi),
-        |a AS (SELECT user_id, CAST(SUM(starts) AS BIGINT) AS n_intervals,
-        |    MAX(conc) AS maxc FROM c GROUP BY user_id)
-        |SELECT a.user_id, a.n_intervals,
-        |  CAST(a.maxc AS BIGINT) AS max_concurrency,
-        |  CAST(MIN(c.t) AS BIGINT) AS at_time
-        |FROM a JOIN c ON c.user_id = a.user_id AND c.conc = a.maxc
-        |GROUP BY a.user_id, a.n_intervals, a.maxc
-        |ORDER BY a.user_id""".stripMargin,
-    // Exact AUC = Mann-Whitney midranks over the distinct-score table;
-    // two_u is an exact BIGINT, one final division.
-    "q_auc" ->
-      """WITH g AS (SELECT l_quantity AS v,
-        |    CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS pos,
-        |    CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END)
-        |      AS BIGINT) AS neg
-        |  FROM lineitem WHERE l_quantity IS NOT NULL GROUP BY l_quantity),
-        |w AS (SELECT pos, neg, COALESCE(SUM(pos + neg) OVER (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-        |  FROM g),
-        |f AS (SELECT CAST(SUM(pos) AS BIGINT) AS n_pos,
-        |    CAST(SUM(neg) AS BIGINT) AS n_neg,
-        |    CAST(SUM(pos * (2 * bef + pos + neg + 1)) AS BIGINT) AS two_rp
-        |  FROM w)
-        |SELECT n_pos, n_neg, two_rp - n_pos * (n_pos + 1) AS two_u,
-        |  round(CAST(two_rp - n_pos * (n_pos + 1) AS DOUBLE) /
-        |    (2.0 * n_pos * n_neg), 6) AS auc
-        |FROM f""".stripMargin,
-    // Gini rank identity in exact decimals; tie order cannot matter (a
-    // tied block contributes x·Σr with a fixed rank set), division via
-    // the digit string.
-    "q_gini" ->
-      """WITH rev AS (SELECT o_custkey,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
-        |      AS rev
-        |  FROM orders GROUP BY o_custkey),
-        |j AS (SELECT c.c_mktsegment AS seg, r.rev AS x
-        |  FROM rev r JOIN customer c ON c.c_custkey = r.o_custkey
-        |  WHERE r.rev IS NOT NULL AND r.rev >= 0),
-        |rk AS (SELECT seg, x, CAST(row_number() OVER (
-        |    PARTITION BY seg ORDER BY x) AS BIGINT) AS r FROM j),
-        |ag AS (SELECT seg, COUNT(*) AS n, SUM(x) AS sx, SUM(x * r) AS srx
-        |  FROM rk GROUP BY seg)
-        |SELECT seg, n, CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS sum_x,
-        |  CASE WHEN sx > 0 THEN round(
-        |    CAST(CAST(2 * srx - (n + 1) * sx AS VARCHAR) AS DOUBLE) /
-        |    CAST(CAST(n * sx AS VARCHAR) AS DOUBLE), 6) END AS gini
-        |FROM ag ORDER BY seg""".stripMargin,
-    // BFS min-hop: the recursive CTE explores every path of <= 6 hops
-    // (rows dedup via UNION, so cycles terminate); MIN(hops) per node is
-    // the BFS distance the engine's frontier iteration settles.
-    "q_bfs" ->
-      """WITH RECURSIVE e AS (SELECT DISTINCT o_orderkey % 500 AS src,
-        |    (o_custkey * 3 + 1) % 500 AS dst FROM orders),
-        |s0 AS (SELECT DISTINCT src AS id FROM e WHERE src % 50 = 0),
-        |r AS (SELECT id, 0 AS hops FROM s0
-        |  UNION
-        |  SELECT e.dst, r.hops + 1 FROM r JOIN e ON e.src = r.id
-        |  WHERE r.hops < 6)
-        |SELECT CAST(id AS BIGINT) AS id, CAST(MIN(hops) AS BIGINT) AS hops
-        |FROM r GROUP BY id ORDER BY id""".stripMargin,
-    // Ray-casting parity with cross-multiplied (exact integer) right-of
-    // tests; half-open straddle rule so vertices never double-count.
-    "q_pip" ->
-      """WITH p AS (SELECT doc_id AS id,
-        |  ((doc_id % 2147483648) * 2654435761 % 2147483648) % 4000 AS x,
-        |  ((doc_id % 2147483648) * 2246822519 % 2147483648) % 4000 AS y
-        |  FROM documents),
-        |ed AS (SELECT * FROM (VALUES
-        |  (1000, 1000, 3000, 1000), (3000, 1000, 3000, 2000),
-        |  (3000, 2000, 2000, 2000), (2000, 2000, 2000, 3000),
-        |  (2000, 3000, 1000, 3000), (1000, 3000, 1000, 1000))
-        |  AS t(x1, y1, x2, y2)),
-        |cr AS (SELECT p.id, p.x, p.y, SUM(CASE WHEN y1 <> y2
-        |      AND ((y1 <= p.y AND p.y < y2) OR (y2 <= p.y AND p.y < y1))
-        |      AND (CASE WHEN y2 > y1
-        |        THEN (p.x - x1) * (y2 - y1) < (p.y - y1) * (x2 - x1)
-        |        ELSE (p.x - x1) * (y2 - y1) > (p.y - y1) * (x2 - x1) END)
-        |    THEN 1 ELSE 0 END) AS c
-        |  FROM p CROSS JOIN ed GROUP BY p.id, p.x, p.y)
-        |SELECT id, x, y, (c % 2 = 1) AS inside FROM cr ORDER BY id""".stripMargin,
-    // Kaplan-Meier: at-risk = suffix sum over the distinct-duration
-    // table; survival = exp of the 6-dp-rounded decimal-summed ln
-    // factors; an all-die time zeroes everything after via prefix max.
-    "q_survival" ->
-      """WITH b AS (SELECT o_orderpriority AS g, o_orderkey % 100 + 1 AS t,
-        |    CASE WHEN o_orderkey % 7 <> 0 THEN 1 ELSE 0 END AS d
-        |  FROM orders),
-        |pt AS (SELECT g, t, CAST(SUM(d) AS BIGINT) AS dd,
-        |    CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY g, t),
-        |r AS (SELECT g, t, dd, CAST(SUM(c) OVER (PARTITION BY g ORDER BY t DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n
-        |  FROM pt),
-        |e AS (SELECT g, t, dd, n,
-        |    CASE WHEN dd < n THEN CAST(round(ln(1.0 -
-        |      CAST(dd AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS DECIMAL(18,6))
-        |    END AS lnf,
-        |    CASE WHEN dd = n THEN 1 ELSE 0 END AS z
-        |  FROM r WHERE dd > 0),
-        |w AS (SELECT g, t, n, dd,
-        |    MAX(z) OVER (PARTITION BY g ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS zs,
-        |    SUM(lnf) OVER (PARTITION BY g ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM e)
-        |SELECT g, t, n AS n_at_risk, dd AS d,
-        |  CASE WHEN zs = 1 THEN 0.0
-        |    ELSE round(exp(CAST(cum AS DOUBLE)), 6) END AS survival
-        |FROM w ORDER BY g, t""".stripMargin,
-    // Log templates: digit runs masked to '#'; NULL-propagating concat
-    // on both sides (|| in DuckDB, concat in Spark).
-    "q_log_templates" ->
-      """SELECT regexp_replace(event_type || ' ' || props, '[0-9]+', '#', 'g')
-        |    AS template,
-        |  COUNT(*) AS n, CAST(MIN(event_id) AS BIGINT) AS example_id
-        |FROM events WHERE event_type IS NOT NULL AND props IS NOT NULL
-        |GROUP BY template ORDER BY template""".stripMargin,
-    // Gazetteer tagging: zipped unnest gives 1-based token positions;
-    // dictionary lowercased on both sides.
-    "q_entity_tag" ->
-      """WITH w AS (SELECT doc_id, list_filter(string_split_regex(
-        |    lower(text), '[^a-z0-9]+'), x -> x <> '') AS ws FROM documents),
-        |t AS (SELECT doc_id, unnest(ws) AS tok,
-        |    unnest(generate_series(1, len(ws))) AS pos FROM w),
-        |g AS (SELECT unnest(['spark', 'customer', 'query', 'vector']) AS tok)
-        |SELECT t.doc_id, t.tok AS entity, COUNT(*) AS n_mentions,
-        |  CAST(MIN(t.pos) AS BIGINT) AS first_pos
-        |FROM t JOIN g USING (tok)
-        |GROUP BY t.doc_id, t.tok ORDER BY doc_id, entity""".stripMargin,
-    // Skip-gram window-2 pairs regenerated list-wise (no positional
-    // self-join on either side).
-    "q_skipgram" ->
-      """WITH w AS (SELECT list_filter(string_split_regex(lower(text),
-        |    '[^a-z0-9]+'), x -> x <> '') AS ws FROM documents),
-        |f AS (SELECT ws FROM w WHERE len(ws) > 1),
-        |p AS (SELECT unnest(flatten(list_transform(
-        |    generate_series(1, len(ws)), i ->
-        |    list_filter(list_transform([-2, -1, 1, 2], o ->
-        |      CASE WHEN i + o >= 1 AND i + o <= len(ws)
-        |        THEN struct_pack(center := ws[i], context := ws[i + o])
-        |      END), x -> x IS NOT NULL)))) AS pr
-        |  FROM f)
-        |SELECT pr.center AS center, pr.context AS context, COUNT(*) AS n
-        |FROM p GROUP BY pr.center, pr.context
-        |ORDER BY center, context""".stripMargin,
-    // Hamilton apportionment: base = floor(w·T/W), leftovers to the
-    // largest remainders (tie: key asc); Σ seats = T exactly.
-    "q_apportion" ->
-      """WITH g AS (SELECT l_partkey, COUNT(*) AS w FROM lineitem
-        |  GROUP BY l_partkey),
-        |t AS (SELECT CAST(SUM(w) AS BIGINT) AS tw FROM g),
-        |b AS (SELECT l_partkey, w,
-        |    CAST(w * 100000 // tw AS BIGINT) AS base,
-        |    CAST(w * 100000 % tw AS BIGINT) AS rem
-        |  FROM g CROSS JOIN t),
-        |sb AS (SELECT CAST(SUM(base) AS BIGINT) AS sbase FROM b),
-        |r AS (SELECT l_partkey, w, base, rem, row_number() OVER (
-        |    ORDER BY rem DESC, l_partkey ASC) AS rk FROM b)
-        |SELECT l_partkey, CAST(w AS BIGINT) AS weight,
-        |  CAST(base + CASE WHEN rk <= 100000 - sbase THEN 1 ELSE 0 END
-        |    AS BIGINT) AS seats
-        |FROM r CROSS JOIN sb ORDER BY l_partkey""".stripMargin,
-    // CUSUM closed form: S+ = prefix − min(0, running min of prior
-    // prefixes); S− mirrors with the running max. Decimal-exact; the
-    // prefix sums are CAST DOWN to DECIMAL(28,2) (a DECIMAL(38,2)
-    // difference needs 39 digits and falls to DOUBLE) and the min/max
-    // clamps are CASE, not least/greatest — DuckDB's least/greatest
-    // returns DOUBLE for ANY decimal inputs.
-    "q_cusum" ->
-      """WITH e AS (SELECT event_type AS k, epoch_us(ts) AS t, event_id AS eid,
-        |    CAST(value AS DECIMAL(18,2)) AS x FROM events),
-        |p AS (SELECT k, t, eid,
-        |    CAST(SUM(x - 52.00) OVER win AS DECIMAL(28,2)) AS ph,
-        |    CAST(SUM(x - 48.00) OVER win AS DECIMAL(28,2)) AS pl
-        |  FROM e WINDOW win AS (PARTITION BY k ORDER BY t, eid
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |m AS (SELECT k, eid, ph, pl,
-        |    COALESCE(MIN(ph) OVER wprev, CAST(0 AS DECIMAL(28,2))) AS mph,
-        |    COALESCE(MAX(pl) OVER wprev, CAST(0 AS DECIMAL(28,2))) AS mpl
-        |  FROM p WINDOW wprev AS (PARTITION BY k ORDER BY t, eid
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |s0 AS (SELECT k, eid,
-        |    ph - (CASE WHEN mph < 0 THEN mph
-        |          ELSE CAST(0 AS DECIMAL(28,2)) END) AS dh,
-        |    (CASE WHEN mpl > 0 THEN mpl
-        |     ELSE CAST(0 AS DECIMAL(28,2)) END) - pl AS dl FROM m),
-        |s AS (SELECT k, eid,
-        |    CASE WHEN dh > 0 THEN dh ELSE CAST(0 AS DECIMAL(29,2)) END AS sh,
-        |    CASE WHEN dl > 0 THEN dl ELSE CAST(0 AS DECIMAL(29,2)) END AS sl
-        |  FROM s0)
-        |SELECT k AS event_type, eid AS event_id,
-        |  CAST(CAST(sh AS VARCHAR) AS DOUBLE) AS s_hi,
-        |  CAST(CAST(sl AS VARCHAR) AS DOUBLE) AS s_lo,
-        |  sh > 200 AS alarm_hi, sl > 200 AS alarm_lo
-        |FROM s ORDER BY event_type, event_id""".stripMargin,
-    // Lag-3 autocorrelation: lag pairs then the q_corr moment replay.
-    "q_autocorr" ->
-      """WITH l AS (SELECT event_type AS k, value AS v,
-        |    lag(value, 3) OVER (PARTITION BY event_type
-        |      ORDER BY epoch_us(ts), event_id) AS pv
-        |  FROM events),
-        |f AS (SELECT k, CAST(v AS DECIMAL(12,2)) AS x,
-        |    CAST(pv AS DECIMAL(12,2)) AS y FROM l WHERE pv IS NOT NULL),
-        |m AS (SELECT k, count(*) AS n,
-        |  CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(x * y) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(x * x) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(y * y) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM f GROUP BY k)
-        |SELECT k AS event_type, n,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) *
-        |     sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS corr,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS cov_samp
-        |FROM m ORDER BY event_type""".stripMargin,
-    // Confusion counts + fixed-shape ratio dag at threshold 26.
-    "q_classifier_eval" ->
-      """WITH c AS (SELECT
-        |  CAST(SUM(CASE WHEN l_quantity >= 26 AND l_returnflag = 'R'
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |  CAST(SUM(CASE WHEN l_quantity >= 26 AND l_returnflag <> 'R'
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        |  CAST(SUM(CASE WHEN l_quantity < 26 AND l_returnflag = 'R'
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        |  CAST(SUM(CASE WHEN l_quantity < 26 AND l_returnflag <> 'R'
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS tn
-        |  FROM lineitem WHERE l_quantity IS NOT NULL),
-        |p AS (SELECT tp, fp, fn, tn,
-        |  CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE) /
-        |    (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)) END AS pr,
-        |  CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE) /
-        |    (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE)) END AS rc,
-        |  CASE WHEN tp + fp + fn + tn > 0 THEN
-        |    (CAST(tp AS DOUBLE) + CAST(tn AS DOUBLE)) /
-        |    (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE) +
-        |     CAST(fn AS DOUBLE) + CAST(tn AS DOUBLE)) END AS ac
-        |  FROM c)
-        |SELECT tp, fp, fn, tn, round(pr, 6) AS precision,
-        |  round(rc, 6) AS recall,
-        |  round(CASE WHEN pr + rc > 0
-        |    THEN 2.0 * pr * rc / (pr + rc) END, 6) AS f1,
-        |  round(ac, 6) AS accuracy
-        |FROM p""".stripMargin,
-    // Theil-Sen: lower-median of pair slopes (ties totalized by the
-    // point indices), then lower-median residual intercept; slopes are
-    // IEEE doubles of exact decimal differences.
-    "q_theilsen" ->
-      """WITH pts AS (SELECT l_returnflag AS g,
-        |    CAST(l_quantity AS DECIMAL(18,2)) AS x,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-        |      AS DECIMAL(18,2)) AS y
-        |  FROM lineitem GROUP BY l_returnflag, l_quantity),
-        |i AS (SELECT g, x, y, row_number() OVER (PARTITION BY g
-        |    ORDER BY x, y) AS i FROM pts),
-        |p AS (SELECT a.g, a.i AS ia, b.i AS ib,
-        |    CAST(CAST(b.y - a.y AS VARCHAR) AS DOUBLE) /
-        |    CAST(CAST(b.x - a.x AS VARCHAR) AS DOUBLE) AS s
-        |  FROM i a JOIN i b ON a.g = b.g AND a.i < b.i AND a.x <> b.x),
-        |med AS (SELECT g, s, m FROM (SELECT g, s, ia, ib,
-        |    row_number() OVER (PARTITION BY g ORDER BY s, ia, ib) AS rn,
-        |    COUNT(*) OVER (PARTITION BY g) AS m FROM p)
-        |  WHERE rn = (m + 1) // 2),
-        |r AS (SELECT i.g, i.i,
-        |    CAST(CAST(i.y AS VARCHAR) AS DOUBLE) -
-        |      med.s * CAST(CAST(i.x AS VARCHAR) AS DOUBLE) AS res,
-        |    med.s, med.m FROM i JOIN med ON i.g = med.g),
-        |fin AS (SELECT g, res, s, m, n FROM (SELECT g, res, i, s, m,
-        |    row_number() OVER (PARTITION BY g ORDER BY res, i) AS rn,
-        |    COUNT(*) OVER (PARTITION BY g) AS n FROM r)
-        |  WHERE rn = (n + 1) // 2)
-        |SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n_points,
-        |  CAST(m AS BIGINT) AS n_pairs, round(s, 6) AS slope,
-        |  round(res, 6) AS intercept
-        |FROM fin ORDER BY l_returnflag""".stripMargin,
-    // z-scores from the digit-strung moment sums; fixed IEEE dag.
-    "q_standardize" ->
-      """WITH st AS (SELECT l_returnflag AS g, COUNT(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR)
-        |    AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) *
-        |    CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx
-        |  FROM lineitem WHERE l_quantity IS NOT NULL GROUP BY l_returnflag),
-        |s2 AS (SELECT g, sx / CAST(n AS DOUBLE) AS mu,
-        |  CASE WHEN n > 1 THEN sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) /
-        |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) END AS sigma
-        |  FROM st)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
-        |  round(CASE WHEN sigma > 0 THEN
-        |    (CAST(CAST(CAST(l_quantity AS DECIMAL(12,2)) AS VARCHAR)
-        |      AS DOUBLE) - mu) / sigma END, 6) AS z
-        |FROM lineitem l JOIN s2 ON s2.g = l.l_returnflag
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // Group-mean fill of the synthesized NULLs; marker column.
-    "q_impute" ->
-      """WITH b AS (SELECT o_orderkey, o_orderpriority,
-        |    CASE WHEN o_orderkey % 11 = 0 THEN NULL
-        |      ELSE o_totalprice END AS v FROM orders),
-        |m AS (SELECT o_orderpriority,
-        |    CAST(CAST(SUM(CAST(v AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) /
-        |      CAST(COUNT(*) AS DOUBLE) AS mu
-        |  FROM b WHERE v IS NOT NULL GROUP BY o_orderpriority)
-        |SELECT b.o_orderkey, b.o_orderpriority,
-        |  COALESCE(CAST(b.v AS DOUBLE), round(m.mu, 6)) AS filled,
-        |  (b.v IS NULL AND m.mu IS NOT NULL) AS filled_imputed
-        |FROM b LEFT JOIN m USING (o_orderpriority)
-        |ORDER BY o_orderkey""".stripMargin,
-    // LOO target encoding: (Σ−x)/(n−1); the category sum is cast DOWN
-    // to DECIMAL(28,2) so the subtraction stays decimal (38,2 would
-    // fall to DOUBLE — the q_cusum trap).
-    "q_target_encode" ->
-      """WITH a AS (SELECT o_orderpriority,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |      AS DECIMAL(28,2)) AS s, COUNT(*) AS n
-        |  FROM orders WHERE o_totalprice IS NOT NULL
-        |  GROUP BY o_orderpriority)
-        |SELECT o.o_orderkey, o.o_orderpriority,
-        |  round(CASE WHEN o.o_totalprice IS NOT NULL AND n > 1 THEN
-        |      CAST(CAST(s - CAST(o.o_totalprice AS DECIMAL(18,2))
-        |        AS VARCHAR) AS DOUBLE) / CAST(n - 1 AS DOUBLE)
-        |    WHEN o.o_totalprice IS NULL AND n > 0 THEN
-        |      CAST(CAST(s AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)
-        |    END, 6) AS enc
-        |FROM orders o LEFT JOIN a USING (o_orderpriority)
-        |ORDER BY o_orderkey""".stripMargin,
-    // Clustering coefficient: distinct-neighbor degrees over the
-    // canonical edge set + the q_triangles wedge count.
-    "q_clustering_coef" ->
-      """WITH raw AS (SELECT o_custkey % 97 AS x, o_orderkey % 97 AS y
-        |  FROM orders),
-        |e AS (SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |tr AS (SELECT e1.a, e1.b, e2.b AS c FROM e e1
-        |  JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |tn AS (SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-        |  FROM (SELECT unnest([a, b, c]) AS node FROM tr) GROUP BY node),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-        |    SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-        |  GROUP BY node)
-        |SELECT deg.node, deg.degree,
-        |  COALESCE(tn.n_triangles, 0) AS n_triangles,
-        |  round(CASE WHEN deg.degree >= 2 THEN
-        |    2.0 * CAST(COALESCE(tn.n_triangles, 0) AS DOUBLE) /
-        |    (CAST(deg.degree AS DOUBLE) * (CAST(deg.degree AS DOUBLE) - 1.0))
-        |    END, 6) AS coefficient
-        |FROM deg LEFT JOIN tn USING (node) ORDER BY node""".stripMargin,
-    // Users-to-date: first-seen day per user, per-day counts, one
-    // prefix sum over the day table.
-    "q_cumulative_users" ->
-      """WITH pk AS (SELECT DISTINCT user_id,
-        |    CAST(date_trunc('day', ts) AS DATE) AS p FROM events),
-        |act AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS active
-        |  FROM pk GROUP BY p),
-        |fs AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS first_seen FROM (
-        |    SELECT user_id, MIN(p) AS p FROM pk GROUP BY user_id)
-        |  GROUP BY p)
-        |SELECT strftime(act.p, '%Y-%m-%d') AS day, act.active,
-        |  COALESCE(fs.first_seen, 0) AS first_seen,
-        |  CAST(SUM(COALESCE(fs.first_seen, 0)) OVER (ORDER BY act.p
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cumulative
-        |FROM act LEFT JOIN fs USING (p) ORDER BY day""".stripMargin,
-    // DAU/WAU/MAU: day-d activity covers days d..d+w−1; trailing
-    // actives = distinct coverage counts.
-    "q_active_users" ->
-      """WITH pk AS (SELECT DISTINCT user_id,
-        |    CAST(date_trunc('day', ts) AS DATE) AS d FROM events),
-        |dau AS (SELECT d AS day, CAST(COUNT(*) AS BIGINT) AS dau
-        |  FROM pk GROUP BY d),
-        |wc AS (SELECT DISTINCT user_id, d + CAST(i AS INTEGER) AS day
-        |  FROM pk, (SELECT unnest(generate_series(0, 6)) AS i)),
-        |wau AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS wau
-        |  FROM wc GROUP BY day),
-        |mc AS (SELECT DISTINCT user_id, d + CAST(i AS INTEGER) AS day
-        |  FROM pk, (SELECT unnest(generate_series(0, 29)) AS i)),
-        |mau AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS mau
-        |  FROM mc GROUP BY day)
-        |SELECT strftime(dau.day, '%Y-%m-%d') AS day, dau.dau, wau.wau,
-        |  mau.mau,
-        |  round(CAST(dau.dau AS DOUBLE) / CAST(mau.mau AS DOUBLE), 6)
-        |    AS stickiness
-        |FROM dau JOIN wau USING (day) JOIN mau USING (day)
-        |ORDER BY day""".stripMargin,
-    // Half-open band classification against the VALUES band table.
-    "q_band_join" ->
-      """WITH bands AS (SELECT * FROM (VALUES
-        |  ('low', 0, 50000), ('mid', 50000, 150000),
-        |  ('high', 150000, 300000), ('vip', 300000, 1000000000))
-        |  AS t(band, lo, hi))
-        |SELECT band, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR)
-        |    AS DOUBLE) AS sum_price
-        |FROM orders JOIN bands
-        |  ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY band ORDER BY band""".stripMargin,
-    // Reconciliation: per-key decimal sums both sides, full outer,
-    // 1-cent tolerance classified in exact decimals.
-    "q_reconcile" ->
-      """WITH l AS (SELECT l_orderkey AS k,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-        |      AS DECIMAL(28,2)) AS ls,
-        |    CAST(COUNT(*) AS BIGINT) AS lr FROM lineitem GROUP BY 1),
-        |r AS (SELECT o_orderkey AS k,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |      AS DECIMAL(28,2)) AS rs,
-        |    CAST(COUNT(*) AS BIGINT) AS rr FROM orders GROUP BY 1),
-        |f AS (SELECT COALESCE(l.k, r.k) AS k, lr, rr, ls, rs,
-        |    COALESCE(ls, CAST(0 AS DECIMAL(28,2))) -
-        |      COALESCE(rs, CAST(0 AS DECIMAL(28,2))) AS dd
-        |  FROM l FULL OUTER JOIN r ON l.k = r.k)
-        |SELECT k, COALESCE(lr, 0) AS l_rows, COALESCE(rr, 0) AS r_rows,
-        |  CAST(CAST(ls AS VARCHAR) AS DOUBLE) AS l_sum,
-        |  CAST(CAST(rs AS VARCHAR) AS DOUBLE) AS r_sum,
-        |  CAST(CAST(dd AS VARCHAR) AS DOUBLE) AS diff,
-        |  CASE WHEN lr IS NULL THEN 'right_only'
-        |    WHEN rr IS NULL THEN 'left_only'
-        |    WHEN abs(dd) <= 0.01 THEN 'match'
-        |    ELSE 'mismatch' END AS status
-        |FROM f ORDER BY k""".stripMargin,
-    // Tukey fences: nearest-rank quartiles over the distinct-value
-    // table, 1.5×IQR in exact decimals, outliers folded from the same
-    // table.
-    "q_tukey" ->
-      """WITH dv AS (SELECT l_returnflag AS g,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY g, v),
-        |rk AS (SELECT g, v, c,
-        |    CAST(SUM(c) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS n FROM dv),
-        |q AS (SELECT g, MAX(n) AS n,
-        |    MIN(CASE WHEN cum >= (n + 3) // 4 THEN v END) AS q1,
-        |    MIN(CASE WHEN cum >= (3 * n + 3) // 4 THEN v END) AS q3
-        |  FROM rk GROUP BY g),
-        |b AS (SELECT g, n, q1, q3, q1 - (q3 - q1) * 1.5 AS lo,
-        |    q3 + (q3 - q1) * 1.5 AS hi FROM q),
-        |o AS (SELECT rk.g, CAST(SUM(CASE WHEN rk.v < b.lo OR rk.v > b.hi
-        |      THEN rk.c ELSE 0 END) AS BIGINT) AS n_outliers
-        |  FROM rk JOIN b ON rk.g = b.g GROUP BY rk.g)
-        |SELECT b.g AS l_returnflag, CAST(b.n AS BIGINT) AS n,
-        |  CAST(CAST(b.q1 AS VARCHAR) AS DOUBLE) AS q1,
-        |  CAST(CAST(b.q3 AS VARCHAR) AS DOUBLE) AS q3,
-        |  CAST(CAST(b.lo AS VARCHAR) AS DOUBLE) AS lo,
-        |  CAST(CAST(b.hi AS VARCHAR) AS DOUBLE) AS hi,
-        |  o.n_outliers
-        |FROM b JOIN o ON b.g = o.g ORDER BY l_returnflag""".stripMargin,
-    // Adjacent type trigrams with distinct-user support.
-    "q_type_trigrams" ->
-      """WITH t AS (SELECT user_id, event_type AS a,
-        |    lead(event_type, 1) OVER w AS b,
-        |    lead(event_type, 2) OVER w AS c
-        |  FROM events WINDOW w AS (PARTITION BY user_id
-        |    ORDER BY ts, event_id))
-        |SELECT a || '>' || b || '>' || c AS ngram,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_keys
-        |FROM t WHERE a IS NOT NULL AND b IS NOT NULL AND c IS NOT NULL
-        |GROUP BY ngram ORDER BY ngram""".stripMargin,
-    // Hour-of-day seasonal profile: decimal sums, digit-string ratios.
-    "q_seasonal" ->
-      """WITH p AS (SELECT event_type, CAST(hour(ts) AS INTEGER) AS slot,
-        |    CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS s
-        |  FROM events WHERE value IS NOT NULL GROUP BY event_type, slot),
-        |t AS (SELECT event_type, CAST(SUM(s) AS DECIMAL(28,2)) AS tot
-        |  FROM p GROUP BY event_type)
-        |SELECT p.event_type, p.slot, p.n,
-        |  round(CAST(CAST(p.s AS VARCHAR) AS DOUBLE) /
-        |    CAST(p.n AS DOUBLE), 6) AS mean,
-        |  CASE WHEN tot <> 0 THEN round(
-        |    CAST(CAST(p.s AS VARCHAR) AS DOUBLE) /
-        |    CAST(CAST(tot AS VARCHAR) AS DOUBLE), 6) END AS share
-        |FROM p JOIN t USING (event_type)
-        |ORDER BY event_type, slot""".stripMargin,
-    // Hill tail index: x_k from suffix ranks over the distinct-value
-    // table; ties at x_k contribute ln(1)=0, so only v > x_k sums.
-    "q_hill" ->
-      """WITH dv AS (SELECT CAST(o_totalprice AS DECIMAL(18,2)) AS v,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0
-        |  GROUP BY v),
-        |rk AS (SELECT v, c,
-        |    CAST(SUM(c) OVER (ORDER BY v DESC ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS ge,
-        |    CAST(SUM(c) OVER () AS BIGINT) AS n FROM dv),
-        |xk AS (SELECT MAX(v) AS xkv, MAX(n) AS n FROM rk WHERE ge >= 1000),
-        |s AS (SELECT MAX(rk.n) AS n, MAX(xk.xkv) AS xkv,
-        |    CAST(SUM(rk.c * CAST(round(ln(
-        |      CAST(CAST(rk.v AS VARCHAR) AS DOUBLE) /
-        |      CAST(CAST(xk.xkv AS VARCHAR) AS DOUBLE)), 6)
-        |      AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS lnsum
-        |  FROM rk CROSS JOIN xk WHERE rk.v > xk.xkv)
-        |SELECT 1000 AS k, n, CAST(CAST(xkv AS VARCHAR) AS DOUBLE) AS x_k,
-        |  round(1000.0 / CAST(CAST(lnsum AS VARCHAR) AS DOUBLE), 6)
-        |    AS alpha
-        |FROM s""".stripMargin,
-    // Blocking audit: candidates from per-block count products; truth
-    // pairs checked for same-block membership.
-    "q_blocking_quality" ->
-      """WITH l AS (SELECT lower(c_name) AS b, c_custkey AS lid
-        |  FROM customer),
-        |r AS (SELECT lower(c_name) AS b, c_custkey AS rid FROM customer),
-        |lb AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS lc FROM l GROUP BY b),
-        |rb AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS rc FROM r GROUP BY b),
-        |cand AS (SELECT CAST(COALESCE(SUM(lc * rc), 0) AS BIGINT)
-        |    AS candidates FROM lb JOIN rb USING (b)),
-        |sz AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM l) AS n_left,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM r) AS n_right),
-        |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-        |    CAST(SUM(CASE WHEN l.b = r.b THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS truth_in_block
-        |  FROM l JOIN r ON l.lid = r.rid)
-        |SELECT n_left, n_right, candidates, n_truth, truth_in_block,
-        |  round(1.0 - CAST(candidates AS DOUBLE) /
-        |    (CAST(n_left AS DOUBLE) * CAST(n_right AS DOUBLE)), 6)
-        |    AS reduction_ratio,
-        |  CASE WHEN n_truth > 0 THEN round(
-        |    CAST(truth_in_block AS DOUBLE) / CAST(n_truth AS DOUBLE), 6)
-        |    END AS pair_completeness
-        |FROM cand CROSS JOIN sz CROSS JOIN m""".stripMargin,
-    // Hopping windows: slide-aligned starts, 3 windows per event.
-    "q_hopping_window" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) AS t,
-        |    CAST(value AS DECIMAL(18,2)) AS v FROM events),
-        |x AS (SELECT event_type, v,
-        |    (t // 600000000) * 600000000 - i * 600000000 AS ws
-        |  FROM e, (SELECT unnest(generate_series(0, 2)) AS i))
-        |SELECT event_type, CAST(ws AS BIGINT) AS window_start_us,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(CAST(SUM(v) AS VARCHAR) AS DOUBLE) AS sum_v,
-        |  CAST(ws + 1800000000 AS BIGINT) AS window_end_us
-        |FROM x GROUP BY event_type, ws
-        |ORDER BY event_type, window_start_us""".stripMargin,
-    // Trailing-hour RANGE-framed counts; (t−3600 s, t] inclusive.
-    "q_rate_limit" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t
-        |  FROM events),
-        |c AS (SELECT event_id, user_id,
-        |    CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY t
-        |      RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS window_count
-        |  FROM e)
-        |SELECT event_id, user_id, window_count, window_count > 5
-        |    AS over_limit
-        |FROM c ORDER BY event_id""".stripMargin,
-    // Weighted nearest-rank percentiles: smallest v with cumW >= p*W.
-    "q_weighted_median" ->
-      """WITH dv AS (SELECT l_returnflag AS g, l_quantity AS v,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS w
-        |  FROM lineitem WHERE l_quantity IS NOT NULL
-        |    AND l_extendedprice IS NOT NULL AND l_extendedprice >= 0
-        |  GROUP BY g, v),
-        |rk AS (SELECT g, v,
-        |    CAST(CAST(SUM(w) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS VARCHAR) AS DOUBLE) AS cum,
-        |    CAST(CAST(SUM(w) OVER (PARTITION BY g) AS VARCHAR) AS DOUBLE)
-        |      AS tot
-        |  FROM dv),
-        |x AS (SELECT g, v, cum, tot, p FROM rk,
-        |  (SELECT unnest([0.5, 0.9]) AS p) WHERE cum >= p * tot)
-        |SELECT g AS l_returnflag, p, MAX(tot) AS total_w, MIN(v) AS value
-        |FROM x GROUP BY g, p ORDER BY l_returnflag, p""".stripMargin,
-    // Funnel latency: first view → first strictly-later purchase.
-    "q_funnel_latency" ->
-      """WITH f AS (SELECT user_id, CAST(MIN(epoch_us(ts)) AS BIGINT)
-        |    AS from_us FROM events WHERE event_type = 'view'
-        |  GROUP BY user_id),
-        |c AS (SELECT e.user_id, f.from_us,
-        |    CAST(MIN(epoch_us(e.ts)) AS BIGINT) AS to_us
-        |  FROM events e JOIN f USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > f.from_us
-        |  GROUP BY e.user_id, f.from_us)
-        |SELECT user_id, from_us, to_us, to_us - from_us AS delay_us
-        |FROM c ORDER BY user_id""".stripMargin,
-    // PSI over fixed 20 bins + under/overflow, add-one smoothing,
-    // 6-dp lns, 8-dp decimal-summed terms.
-    "q_psi" ->
-      """WITH bb AS (SELECT CASE WHEN o_totalprice < 0 THEN -1
-        |      WHEN o_totalprice >= 600000 THEN 20
-        |      ELSE CAST(floor(o_totalprice * 20 / 600000.0) AS BIGINT)
-        |      END AS bin
-        |  FROM orders WHERE year(o_orderdate) <= 1996
-        |    AND o_totalprice IS NOT NULL),
-        |cc AS (SELECT CASE WHEN o_totalprice < 0 THEN -1
-        |      WHEN o_totalprice >= 600000 THEN 20
-        |      ELSE CAST(floor(o_totalprice * 20 / 600000.0) AS BIGINT)
-        |      END AS bin
-        |  FROM orders WHERE year(o_orderdate) > 1996
-        |    AND o_totalprice IS NOT NULL),
-        |hb AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS nb FROM bb GROUP BY bin),
-        |hc AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS nc FROM cc GROUP BY bin),
-        |j AS (SELECT COALESCE(hb.bin, hc.bin) AS bin,
-        |    COALESCE(nb, 0) AS nb, COALESCE(nc, 0) AS nc
-        |  FROM hb FULL OUTER JOIN hc ON hb.bin = hc.bin),
-        |t AS (SELECT CAST(SUM(nb) AS BIGINT) AS n_base,
-        |    CAST(SUM(nc) AS BIGINT) AS n_current FROM j),
-        |terms AS (SELECT n_base, n_current,
-        |    CAST(round((CAST(nb + 1 AS DOUBLE) / CAST(n_base + 22 AS DOUBLE)
-        |      - CAST(nc + 1 AS DOUBLE) / CAST(n_current + 22 AS DOUBLE)) *
-        |      round(ln((CAST(nb + 1 AS DOUBLE) / CAST(n_base + 22 AS DOUBLE)) /
-        |        (CAST(nc + 1 AS DOUBLE) / CAST(n_current + 22 AS DOUBLE))), 6),
-        |      8) AS DECIMAL(18,8)) AS tt
-        |  FROM j CROSS JOIN t)
-        |SELECT n_base, n_current,
-        |  round(CAST(CAST(SUM(tt) AS VARCHAR) AS DOUBLE), 6) AS psi
-        |FROM terms GROUP BY n_base, n_current""".stripMargin,
-    // Mutual information in nats from the joint-cell table.
-    "q_mutual_info" ->
-      """WITH cells AS (SELECT o_orderpriority AS x, o_orderstatus AS y,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM orders WHERE o_orderpriority IS NOT NULL
-        |    AND o_orderstatus IS NOT NULL GROUP BY x, y),
-        |m AS (SELECT c,
-        |    CAST(SUM(c) OVER (PARTITION BY x) AS BIGINT) AS nx,
-        |    CAST(SUM(c) OVER (PARTITION BY y) AS BIGINT) AS ny,
-        |    CAST(SUM(c) OVER () AS BIGINT) AS n FROM cells),
-        |t AS (SELECT n, CAST(round(CAST(c AS DOUBLE) / CAST(n AS DOUBLE) *
-        |    round(ln(CAST(c * n AS DOUBLE) / CAST(nx * ny AS DOUBLE)), 6),
-        |    8) AS DECIMAL(18,8)) AS tt FROM m)
-        |SELECT n, round(CAST(CAST(SUM(tt) AS VARCHAR) AS DOUBLE), 6) AS mi
-        |FROM t GROUP BY n""".stripMargin,
-    // L1 path stats per user over hashed waypoints in event order.
-    "q_path_length" ->
-      """WITH p AS (SELECT user_id, event_id AS seq,
-        |    ((event_id % 2147483648) * 2654435761 % 2147483648) % 1000 AS x,
-        |    ((event_id % 2147483648) * 2246822519 % 2147483648) % 1000 AS y
-        |  FROM events),
-        |l AS (SELECT user_id, seq, x, y,
-        |    lag(x) OVER w AS px, lag(y) OVER w AS py
-        |  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY seq)),
-        |agg AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_points,
-        |    CAST(COALESCE(SUM(abs(x - px) + abs(y - py)), 0) AS BIGINT)
-        |      AS path_len,
-        |    CAST(arg_min(x, seq) AS BIGINT) AS fx,
-        |    CAST(arg_min(y, seq) AS BIGINT) AS fy,
-        |    CAST(arg_max(x, seq) AS BIGINT) AS lx,
-        |    CAST(arg_max(y, seq) AS BIGINT) AS ly
-        |  FROM l GROUP BY user_id)
-        |SELECT user_id, n_points, path_len,
-        |  CAST(abs(lx - fx) + abs(ly - fy) AS BIGINT) AS net_displacement
-        |FROM agg ORDER BY user_id""".stripMargin,
-    // Linear attribution: 10^6 mills per converting user, remainder to
-    // the earliest touch; aggregated per touch type.
-    "q_multi_touch" ->
-      """WITH conv AS (SELECT user_id, MIN(ts) AS cts FROM events
-        |  WHERE event_type = 'purchase' GROUP BY user_id),
-        |touch AS (SELECT e.user_id, e.event_id, e.event_type,
-        |    CAST(COUNT(*) OVER (PARTITION BY e.user_id) AS BIGINT) AS n,
-        |    row_number() OVER (PARTITION BY e.user_id
-        |      ORDER BY e.ts, e.event_id) AS rn
-        |  FROM events e JOIN conv USING (user_id)
-        |  WHERE e.event_type IN ('view', 'click') AND e.ts < conv.cts)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_touches,
-        |  CAST(SUM(1000000 // n +
-        |    CASE WHEN rn = 1 THEN 1000000 % n ELSE 0 END) AS BIGINT)
-        |    AS total_credit
-        |FROM touch GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // NOT IN proven against the engine-native predicate: one NULL in
-    // the subquery must empty the result.
-    "q_not_in" ->
-      """SELECT 'clean' AS label, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(COALESCE(SUM(c_custkey), 0) AS BIGINT) AS key_sum
-        |FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        |UNION ALL
-        |SELECT 'with_null', CAST(COUNT(*) AS BIGINT),
-        |  CAST(COALESCE(SUM(c_custkey), 0) AS BIGINT)
-        |FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders
-        |  UNION ALL SELECT NULL)
-        |ORDER BY label""".stripMargin,
-    // Longest streak: gaps-and-islands constant over the (user, day)
-    // table; earliest start on length ties.
-    "q_streak" ->
-      """WITH pk AS (SELECT DISTINCT user_id,
-        |    CAST(date_trunc('day', ts) AS DATE) AS d FROM events),
-        |i AS (SELECT user_id, d,
-        |    (d - DATE '1970-01-01') - row_number() OVER (
-        |      PARTITION BY user_id ORDER BY d) AS isl FROM pk),
-        |r AS (SELECT user_id, isl, CAST(COUNT(*) AS BIGINT) AS len,
-        |    MIN(d) AS st FROM i GROUP BY user_id, isl),
-        |a AS (SELECT user_id, CAST(SUM(len) AS BIGINT) AS n_days,
-        |    CAST(COUNT(*) AS BIGINT) AS n_streaks,
-        |    CAST(MAX(len) AS BIGINT) AS longest FROM r GROUP BY user_id)
-        |SELECT a.user_id, a.n_days, a.n_streaks, a.longest,
-        |  strftime(MIN(r.st), '%Y-%m-%d') AS streak_start
-        |FROM a JOIN r ON r.user_id = a.user_id AND r.len = a.longest
-        |GROUP BY a.user_id, a.n_days, a.n_streaks, a.longest
-        |ORDER BY a.user_id""".stripMargin,
-    // Inclusion dependency: distinct child values missing from parent.
-    "q_fk_discovery" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS v FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL),
-        |lim AS (SELECT CAST(COUNT(*) AS BIGINT) AS nm FROM li
-        |  WHERE v NOT IN (SELECT o_orderkey FROM orders
-        |    WHERE o_orderkey IS NOT NULL)),
-        |lic AS (SELECT CAST(COUNT(*) AS BIGINT) AS nc FROM li),
-        |oc AS (SELECT DISTINCT o_custkey AS v FROM orders
-        |  WHERE o_custkey IS NOT NULL),
-        |ocm AS (SELECT CAST(COUNT(*) AS BIGINT) AS nm FROM oc
-        |  WHERE v NOT IN (SELECT c_custkey FROM customer
-        |    WHERE c_custkey IS NOT NULL)),
-        |occ AS (SELECT CAST(COUNT(*) AS BIGINT) AS nc FROM oc),
-        |oo AS (SELECT DISTINCT o_orderkey AS v FROM orders
-        |  WHERE o_orderkey IS NOT NULL),
-        |oom AS (SELECT CAST(COUNT(*) AS BIGINT) AS nm FROM oo
-        |  WHERE v NOT IN (SELECT c_custkey FROM customer
-        |    WHERE c_custkey IS NOT NULL)),
-        |ooc AS (SELECT CAST(COUNT(*) AS BIGINT) AS nc FROM oo)
-        |SELECT 'li_orderkey_in_orders' AS pair, nc AS n_child_distinct,
-        |  nm AS n_missing, CASE WHEN nc > 0 THEN round(1.0 -
-        |    CAST(nm AS DOUBLE) / CAST(nc AS DOUBLE), 6) END AS containment
-        |FROM lic CROSS JOIN lim
-        |UNION ALL
-        |SELECT 'o_custkey_in_customer', nc, nm, CASE WHEN nc > 0 THEN
-        |  round(1.0 - CAST(nm AS DOUBLE) / CAST(nc AS DOUBLE), 6) END
-        |FROM occ CROSS JOIN ocm
-        |UNION ALL
-        |SELECT 'o_orderkey_in_customer', nc, nm, CASE WHEN nc > 0 THEN
-        |  round(1.0 - CAST(nm AS DOUBLE) / CAST(nc AS DOUBLE), 6) END
-        |FROM ooc CROSS JOIN oom
-        |ORDER BY pair""".stripMargin,
-    "q_kcore" -> kcoreOracleSql(KcoreRounds, KcoreK),
-    // Trimmed mean: kept multiplicity = rank-interval overlap.
-    "q_trimmed_mean" ->
-      """WITH dv AS (SELECT l_returnflag AS g,
-        |    CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY g, v),
-        |rk AS (SELECT g, v, c,
-        |    CAST(SUM(c) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS n FROM dv),
-        |t AS (SELECT g, v, c, cum, n, (n * 1) // 10 AS tt FROM rk),
-        |kk AS (SELECT g, n, tt, v, greatest(0, least(cum, n - tt) -
-        |    greatest(cum - c + 1, tt + 1) + 1) AS kept FROM t),
-        |ag AS (SELECT g, MAX(n) AS n, CAST(MAX(tt) AS BIGINT) AS tt,
-        |    CAST(SUM(kept) AS BIGINT) AS n_kept, SUM(v * kept) AS ks
-        |  FROM kk GROUP BY g)
-        |SELECT g AS l_returnflag, n, tt AS n_trimmed_each_side, n_kept,
-        |  CASE WHEN n_kept > 0 THEN round(
-        |    CAST(CAST(ks AS VARCHAR) AS DOUBLE) / CAST(n_kept AS DOUBLE),
-        |    6) END AS mean
-        |FROM ag ORDER BY l_returnflag""".stripMargin,
-    // Rebalance: cap at the smallest class, portable-hash rank replay.
-    "q_rebalance" ->
-      """WITH cn AS (SELECT o_orderpriority AS g,
-        |    CAST(COUNT(*) AS BIGINT) AS c FROM orders GROUP BY g),
-        |mn AS (SELECT MIN(c) AS mc FROM cn),
-        |b AS (SELECT o_orderkey, o_orderpriority AS g,
-        |    ((o_orderkey % 2147483648) * 2654435761 % 2147483648)
-        |      % 2147483648 % 1000000 AS bk FROM orders),
-        |r AS (SELECT o_orderkey, g, row_number() OVER (PARTITION BY g
-        |    ORDER BY bk, o_orderkey) AS rn FROM b)
-        |SELECT g AS o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-        |FROM r CROSS JOIN mn WHERE rn <= mc GROUP BY g ORDER BY g""".stripMargin,
-    // Multinomial NB: add-one smoothing, 6-dp decimal-summed lns,
-    // argmax with lexicographic tie-break.
-    "q_naive_bayes" ->
-      """WITH tr AS (SELECT lang AS l, doc_id, text FROM documents
-        |  WHERE doc_id % 2 = 0),
-        |te AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1),
-        |trtf AS (SELECT l, unnest(list_filter(string_split_regex(
-        |    lower(text), '[^a-z0-9]+'), x -> x <> '')) AS w FROM tr),
-        |cnt AS (SELECT l, w, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM trtf GROUP BY l, w),
-        |tl AS (SELECT l, CAST(SUM(c) AS BIGINT) AS tt FROM cnt GROUP BY l),
-        |vs AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS vv FROM cnt),
-        |pr AS (SELECT l, CAST(COUNT(*) AS BIGINT) AS dd FROM tr GROUP BY l),
-        |prt AS (SELECT CAST(SUM(dd) AS BIGINT) AS dtot FROM pr),
-        |lab AS (SELECT pr.l, tl.tt, vs.vv,
-        |    CAST(round(ln(CAST(pr.dd AS DOUBLE) / CAST(prt.dtot AS DOUBLE)),
-        |      6) AS DECIMAL(18,6)) AS lnprior
-        |  FROM pr JOIN tl USING (l) CROSS JOIN vs CROSS JOIN prt),
-        |tetf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf FROM (
-        |    SELECT doc_id, unnest(list_filter(string_split_regex(
-        |      lower(text), '[^a-z0-9]+'), x -> x <> '')) AS w FROM te)
-        |  GROUP BY doc_id, w),
-        |terms AS (SELECT t.doc_id, lab.l, lab.lnprior,
-        |    t.tf * CAST(round(ln(
-        |      CAST(COALESCE(c.c, 0) + 1 AS DOUBLE) /
-        |      CAST(lab.tt + lab.vv AS DOUBLE)), 6) AS DECIMAL(18,6)) AS term
-        |  FROM tetf t CROSS JOIN lab
-        |  LEFT JOIN cnt c ON c.l = lab.l AND c.w = t.w),
-        |sc AS (SELECT doc_id, l, MAX(lnprior) + SUM(term) AS score
-        |  FROM terms GROUP BY doc_id, l),
-        |rk AS (SELECT doc_id, l, score, row_number() OVER (
-        |    PARTITION BY doc_id ORDER BY score DESC, l ASC) AS rn FROM sc)
-        |SELECT doc_id, l AS predicted,
-        |  round(CAST(CAST(score AS VARCHAR) AS DOUBLE), 6) AS score
-        |FROM rk WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // Sorted-neighborhood candidates: rank self-join replay.
-    "q_sorted_blocking" ->
-      """WITH r AS (SELECT c_custkey AS id, lower(c_name) AS k,
-        |    row_number() OVER (ORDER BY lower(c_name), c_custkey) AS rn
-        |  FROM customer)
-        |SELECT a.id AS id_a, b.id AS id_b, a.k AS key_a, b.k AS key_b,
-        |  CAST(b.rn - a.rn AS BIGINT) AS rank_dist
-        |FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 3
-        |ORDER BY id_a, id_b""".stripMargin,
-    // Weighted bounded-hop shortest path: the recursive CTE explores
-    // every path of <= 6 edges ((id, dist, hops) states dedup via UNION,
-    // so cycles terminate); MIN(dist) is the truncated-Bellman-Ford fix.
-    "q_sssp" ->
-      """WITH RECURSIVE e AS (SELECT DISTINCT o_orderkey % 500 AS src,
-        |    (o_custkey * 3 + 1) % 500 AS dst,
-        |    (o_orderkey + o_custkey) % 9 + 1 AS w FROM orders),
-        |s0 AS (SELECT DISTINCT src AS id FROM e WHERE src % 50 = 0),
-        |r AS (SELECT id, CAST(0 AS BIGINT) AS dist, 0 AS hops FROM s0
-        |  UNION
-        |  SELECT e.dst, r.dist + e.w, r.hops + 1 FROM r JOIN e ON e.src = r.id
-        |  WHERE r.hops < 6)
-        |SELECT CAST(id AS BIGINT) AS id, CAST(MIN(dist) AS BIGINT) AS dist
-        |FROM r GROUP BY id ORDER BY id""".stripMargin,
-    // Isotonic max-min identity replay: prefix sums over the bin table,
-    // interval means via exact-decimal digit strings, min over k>=i then
-    // max over j<=i.
-    "q_isotonic" ->
-      """WITH b AS (SELECT l_linestatus AS g, l_partkey % 24 AS x,
-        |    CASE WHEN l_orderkey % 100 < 20 + 3 * (l_partkey % 24)
-        |      THEN 1 ELSE 0 END AS y FROM lineitem),
-        |pt AS (SELECT g, x, CAST(COUNT(*) AS BIGINT) AS w,
-        |    CAST(SUM(y) AS DECIMAL(18,2)) AS sy FROM b GROUP BY g, x),
-        |cu AS (SELECT g, x, CAST(row_number() OVER (
-        |      PARTITION BY g ORDER BY x) AS BIGINT) AS i, w, sy,
-        |    CAST(SUM(w) OVER (PARTITION BY g ORDER BY x) AS BIGINT) AS cw,
-        |    CAST(SUM(sy) OVER (PARTITION BY g ORDER BY x)
-        |      AS DECIMAL(28,2)) AS csy FROM pt),
-        |z AS (SELECT g, CAST(0 AS BIGINT) AS i, CAST(0 AS BIGINT) AS cw,
-        |    CAST(0 AS DECIMAL(28,2)) AS csy FROM (SELECT DISTINCT g FROM cu)
-        |  UNION ALL SELECT g, i, cw, csy FROM cu),
-        |iv AS (SELECT lo.g, lo.i AS j0, hi.i AS k,
-        |    CAST(CAST(hi.csy - lo.csy AS VARCHAR) AS DOUBLE) /
-        |    CAST(CAST(hi.cw - lo.cw AS VARCHAR) AS DOUBLE) AS avgv
-        |  FROM z lo JOIN z hi ON hi.g = lo.g AND hi.i > lo.i),
-        |mn AS (SELECT c.g, c.i, iv.j0, MIN(iv.avgv) AS m
-        |  FROM cu c JOIN iv ON iv.g = c.g AND iv.j0 < c.i AND iv.k >= c.i
-        |  GROUP BY c.g, c.i, iv.j0),
-        |ft AS (SELECT g, i, MAX(m) AS f FROM mn GROUP BY g, i)
-        |SELECT c.g, CAST(c.x AS BIGINT) AS x, c.w AS n,
-        |  round(CAST(CAST(c.sy AS VARCHAR) AS DOUBLE) / CAST(c.w AS DOUBLE),
-        |    6) AS y_mean,
-        |  round(ft.f, 6) AS fitted
-        |FROM cu c JOIN ft ON ft.g = c.g AND ft.i = c.i
-        |ORDER BY c.g, c.x""".stripMargin,
-    // Ranking metrics: one rank window (score desc, id asc), 6-dp-rounded
-    // discount/precision terms summed as decimals (tfidf convention),
-    // ideal rank = cumulative relevant count.
-    "q_ranking_metrics" ->
-      """WITH b AS (SELECT o_custkey % 200 AS q, o_totalprice AS s,
-        |    o_orderkey AS id,
-        |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS rel
-        |  FROM orders),
-        |rk AS (SELECT q, rel, CAST(row_number() OVER (
-        |      PARTITION BY q ORDER BY s DESC, id ASC) AS BIGINT) AS r,
-        |    CAST(SUM(rel) OVER (PARTITION BY q ORDER BY s DESC, id ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cr FROM b),
-        |t AS (SELECT q, rel, r, cr,
-        |    CASE WHEN rel = 1 AND r <= 10 THEN CAST(round(
-        |      1.0 / log2(CAST(r AS DOUBLE) + 1.0), 6) AS DECIMAL(18,6))
-        |    END AS dcg_t,
-        |    CASE WHEN rel = 1 AND cr <= 10 THEN CAST(round(
-        |      1.0 / log2(CAST(cr AS DOUBLE) + 1.0), 6) AS DECIMAL(18,6))
-        |    END AS idcg_t,
-        |    CASE WHEN rel = 1 THEN CAST(round(
-        |      CAST(cr AS DOUBLE) / CAST(r AS DOUBLE), 6) AS DECIMAL(18,6))
-        |    END AS prec_t,
-        |    CASE WHEN rel = 1 THEN r END AS relr FROM rk),
-        |ag AS (SELECT q, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(rel) AS BIGINT) AS n_rel, SUM(dcg_t) AS dcg,
-        |    SUM(idcg_t) AS idcg, MIN(relr) AS minr, SUM(prec_t) AS sprec
-        |  FROM t GROUP BY q)
-        |SELECT q, n, n_rel,
-        |  CASE WHEN n_rel > 0 THEN round(
-        |    CAST(CAST(dcg AS VARCHAR) AS DOUBLE) /
-        |    CAST(CAST(idcg AS VARCHAR) AS DOUBLE), 6) END AS ndcg,
-        |  CASE WHEN n_rel > 0 THEN round(1.0 / CAST(minr AS DOUBLE), 6)
-        |    END AS mrr,
-        |  CASE WHEN n_rel > 0 THEN round(
-        |    CAST(CAST(sprec AS VARCHAR) AS DOUBLE) / CAST(n_rel AS DOUBLE),
-        |    6) END AS ap
-        |FROM ag ORDER BY q""".stripMargin,
-    // Calibration reliability bins: exact-decimal p sums and squared
-    // errors, one digit-string division per metric; the gap subtracts
-    // the two already-rounded means.
-    "q_calibration" ->
-      """WITH b AS (SELECT (o_orderkey % 100) // 10 AS bin,
-        |    CAST(o_orderkey % 100 AS DECIMAL(5,2)) *
-        |      CAST(0.01 AS DECIMAL(3,2)) AS p,
-        |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-        |  FROM orders),
-        |ag AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(y) AS BIGINT) AS n_pos, SUM(p) AS sp,
-        |    SUM((p - CAST(y AS DECIMAL(5,4))) *
-        |        (p - CAST(y AS DECIMAL(5,4)))) AS ssq
-        |  FROM b GROUP BY bin),
-        |m AS (SELECT bin, n, n_pos,
-        |    round(CAST(CAST(sp AS VARCHAR) AS DOUBLE) /
-        |      CAST(n AS DOUBLE), 6) AS mean_p,
-        |    round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS pos_rate,
-        |    ssq FROM ag)
-        |SELECT bin, n, n_pos, mean_p, pos_rate,
-        |  round(abs(mean_p - pos_rate), 6) AS gap,
-        |  round(CAST(CAST(ssq AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS brier
-        |FROM m ORDER BY bin""".stripMargin,
-    // TWAP: lead window over (ts, event_id), exact decimal·micros sum.
-    "q_twap" ->
-      """WITH b AS (SELECT user_id % 100 AS k, epoch_us(ts) AS t,
-        |    event_id AS tb, CAST(value AS DECIMAL(18,2)) AS v FROM events),
-        |l AS (SELECT k, t, v, lead(t) OVER (
-        |    PARTITION BY k ORDER BY t, tb) AS nt FROM b),
-        |ag AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(MAX(t) - MIN(t) AS BIGINT) AS span_micros,
-        |    SUM(CASE WHEN nt IS NOT NULL THEN v * (nt - t) END) AS ws
-        |  FROM l GROUP BY k)
-        |SELECT k, n, span_micros,
-        |  CASE WHEN span_micros > 0 THEN round(
-        |    CAST(CAST(ws AS VARCHAR) AS DOUBLE) /
-        |    CAST(span_micros AS DOUBLE), 6) END AS twap
-        |FROM ag ORDER BY k""".stripMargin,
-    // Truncated EWMA: the 9-term lag chain with integer weights 256..1;
-    // warm-up renormalizes over present lags.
-    "q_ewma" ->
-      """WITH b AS (SELECT event_type AS g, ts, event_id AS tb,
-        |    CAST(value AS DECIMAL(18,2)) AS v FROM events),
-        |l AS (SELECT g, tb, v,
-        |    lag(v, 1) OVER w AS l1, lag(v, 2) OVER w AS l2,
-        |    lag(v, 3) OVER w AS l3, lag(v, 4) OVER w AS l4,
-        |    lag(v, 5) OVER w AS l5, lag(v, 6) OVER w AS l6,
-        |    lag(v, 7) OVER w AS l7, lag(v, 8) OVER w AS l8
-        |  FROM b WINDOW w AS (PARTITION BY g ORDER BY ts, tb)),
-        |m AS (SELECT g, tb,
-        |    v * 256 + COALESCE(l1 * 128, 0) + COALESCE(l2 * 64, 0) +
-        |      COALESCE(l3 * 32, 0) + COALESCE(l4 * 16, 0) +
-        |      COALESCE(l5 * 8, 0) + COALESCE(l6 * 4, 0) +
-        |      COALESCE(l7 * 2, 0) + COALESCE(l8, 0) AS num,
-        |    256 + CASE WHEN l1 IS NULL THEN 0 ELSE 128 END +
-        |      CASE WHEN l2 IS NULL THEN 0 ELSE 64 END +
-        |      CASE WHEN l3 IS NULL THEN 0 ELSE 32 END +
-        |      CASE WHEN l4 IS NULL THEN 0 ELSE 16 END +
-        |      CASE WHEN l5 IS NULL THEN 0 ELSE 8 END +
-        |      CASE WHEN l6 IS NULL THEN 0 ELSE 4 END +
-        |      CASE WHEN l7 IS NULL THEN 0 ELSE 2 END +
-        |      CASE WHEN l8 IS NULL THEN 0 ELSE 1 END AS den,
-        |    1 + CASE WHEN l1 IS NULL THEN 0 ELSE 1 END +
-        |      CASE WHEN l2 IS NULL THEN 0 ELSE 1 END +
-        |      CASE WHEN l3 IS NULL THEN 0 ELSE 1 END +
-        |      CASE WHEN l4 IS NULL THEN 0 ELSE 1 END +
-        |      CASE WHEN l5 IS NULL THEN 0 ELSE 1 END +
-        |      CASE WHEN l6 IS NULL THEN 0 ELSE 1 END +
-        |      CASE WHEN l7 IS NULL THEN 0 ELSE 1 END +
-        |      CASE WHEN l8 IS NULL THEN 0 ELSE 1 END AS nt
-        |  FROM l)
-        |SELECT g AS event_type, tb AS event_id, CAST(nt AS BIGINT) AS n_terms,
-        |  round(CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(den AS DOUBLE), 6)
-        |    AS ewma
-        |FROM m ORDER BY event_type, event_id""".stripMargin,
-    // Pairwise interval overlap: the oracle IS the per-key quadratic
-    // join — zero-overlap pairs add nothing, so the engine's bucketized
-    // join (which never sees bucket-disjoint pairs) agrees exactly.
-    "q_overlap_duration" ->
-      """WITH a AS (SELECT user_id % 20 AS k, epoch_us(ts) AS s,
-        |    epoch_us(ts) + (1 + event_id % 5) * 60000000 AS e
-        |  FROM events WHERE event_type = 'click'),
-        |b AS (SELECT user_id % 20 AS k, epoch_us(ts) AS s,
-        |    epoch_us(ts) + (1 + user_id % 7) * 60000000 AS e
-        |  FROM events WHERE event_type = 'view'),
-        |p AS (SELECT a.k,
-        |    GREATEST(0, LEAST(a.e, b.e) - GREATEST(a.s, b.s)) AS ov
-        |  FROM a JOIN b ON b.k = a.k)
-        |SELECT k AS key,
-        |  CAST(SUM(CASE WHEN ov > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs,
-        |  CAST(SUM(ov) AS BIGINT) AS total_overlap
-        |FROM p GROUP BY k ORDER BY k""".stripMargin,
-    // Difference-in-differences: four exact cell means, one rounded
-    // contrast.
-    "q_did" ->
-      """WITH b AS (SELECT
-        |    CASE WHEN o_custkey % 2 = 0 THEN 1 ELSE 0 END AS tr,
-        |    CASE WHEN o_orderdate >= TIMESTAMP '1998-01-01'
-        |      THEN 1 ELSE 0 END AS po,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS v FROM orders),
-        |ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    SUM(CASE WHEN tr = 1 AND po = 0 THEN v END) AS stp,
-        |    CAST(SUM(CASE WHEN tr = 1 AND po = 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS ntp,
-        |    SUM(CASE WHEN tr = 1 AND po = 1 THEN v END) AS stq,
-        |    CAST(SUM(CASE WHEN tr = 1 AND po = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS ntq,
-        |    SUM(CASE WHEN tr = 0 AND po = 0 THEN v END) AS scp,
-        |    CAST(SUM(CASE WHEN tr = 0 AND po = 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS ncp,
-        |    SUM(CASE WHEN tr = 0 AND po = 1 THEN v END) AS scq,
-        |    CAST(SUM(CASE WHEN tr = 0 AND po = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS ncq
-        |  FROM b),
-        |m AS (SELECT n,
-        |    CAST(CAST(stp AS VARCHAR) AS DOUBLE) / CAST(ntp AS DOUBLE) AS mtp,
-        |    CAST(CAST(stq AS VARCHAR) AS DOUBLE) / CAST(ntq AS DOUBLE) AS mtq,
-        |    CAST(CAST(scp AS VARCHAR) AS DOUBLE) / CAST(ncp AS DOUBLE) AS mcp,
-        |    CAST(CAST(scq AS VARCHAR) AS DOUBLE) / CAST(ncq AS DOUBLE) AS mcq
-        |  FROM ag)
-        |SELECT n, round(mtp, 6) AS mean_treat_pre,
-        |  round(mtq, 6) AS mean_treat_post,
-        |  round(mcp, 6) AS mean_ctrl_pre, round(mcq, 6) AS mean_ctrl_post,
-        |  round((mtq - mtp) - (mcq - mcp), 6) AS did
-        |FROM m""".stripMargin,
-    // CIDR containment: the oracle replays the integer block arithmetic
-    // (canonical net bases precomputed; v // bsz = net // bsz) on the
-    // raw hash value — the engine's string roundtrip must land the same.
-    "q_cidr_join" ->
-      """WITH ips AS (SELECT event_id, user_id,
-        |    (user_id * 2654435761) % 4294967296 AS v FROM events),
-        |r AS (SELECT * FROM (VALUES
-        |    ('0.0.0.0/2', 0, 1073741824),
-        |    ('128.0.0.0/1', 2147483648, 2147483648),
-        |    ('55.0.0.0/8', 922746880, 16777216),
-        |    ('200.100.0.0/16', 3361996800, 65536),
-        |    ('10.20.30.0/24', 169090560, 256),
-        |    ('7.7.7.7/32', 117901063, 1),
-        |    ('77.0.0.0/6', 1275068416, 67108864))
-        |  AS t(cidr, net, bsz))
-        |SELECT cidr, CAST(COUNT(*) AS BIGINT) AS n_hits,
-        |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM ips JOIN r ON ips.v // r.bsz = r.net // r.bsz
-        |GROUP BY cidr ORDER BY cidr""".stripMargin,
-    // LPM winner per event: max plen, ties by cidr asc (row_number over
-    // the candidate matches); LEFT join keeps unmatched events as the
-    // NULL-cidr group.
-    "q_cidr_lpm" ->
-      """WITH ips AS (SELECT event_id, user_id,
-        |    (user_id * 2654435761) % 4294967296 AS v FROM events),
-        |r AS (SELECT * FROM (VALUES
-        |    ('0.0.0.0/2', 0, 1073741824, 2),
-        |    ('128.0.0.0/1', 2147483648, 2147483648, 1),
-        |    ('55.0.0.0/8', 922746880, 16777216, 8),
-        |    ('200.100.0.0/16', 3361996800, 65536, 16),
-        |    ('10.20.30.0/24', 169090560, 256, 24),
-        |    ('7.7.7.7/32', 117901063, 1, 32),
-        |    ('77.0.0.0/6', 1275068416, 67108864, 6))
-        |  AS t(cidr, net, bsz, plen)),
-        |m AS (SELECT event_id, user_id, cidr, plen,
-        |    row_number() OVER (PARTITION BY event_id
-        |      ORDER BY plen DESC, cidr ASC) AS rk
-        |  FROM ips JOIN r ON ips.v // r.bsz = r.net // r.bsz),
-        |w AS (SELECT event_id, user_id, cidr, plen FROM m WHERE rk = 1),
-        |u AS (SELECT i.event_id, i.user_id, w.cidr, w.plen
-        |  FROM ips i LEFT JOIN w ON i.event_id = w.event_id)
-        |SELECT cidr, CAST(COUNT(*) AS BIGINT) AS n_hits,
-        |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        |  MAX(plen) AS plen
-        |FROM u GROUP BY cidr ORDER BY cidr""".stripMargin,
-    // Phrase search: list-wise adjacency count per document under the
-    // identical tokenization.
-    "q_phrase_search" ->
-      """WITH t AS (SELECT doc_id, list_filter(
-        |    regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-        |    x -> x <> '') AS w FROM documents),
-        |m AS (SELECT doc_id, CAST(len(list_filter(range(1, len(w)),
-        |    i -> w[i] = 'table' AND w[i+1] = 'hash')) AS BIGINT)
-        |  AS n_matches FROM t)
-        |SELECT doc_id, n_matches FROM m WHERE n_matches > 0
-        |ORDER BY doc_id""".stripMargin,
-    // Flesch reading ease: three regexp counts + the fixed formula.
-    "q_readability" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
-        |    AS BIGINT) AS n_words,
-        |  CAST(GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1)
-        |    AS BIGINT) AS n_sentences,
-        |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |    AS BIGINT) AS n_syllables,
-        |  CASE WHEN n_words > 0 THEN round(206.835
-        |    - 1.015 * (CAST(n_words AS DOUBLE) / n_sentences)
-        |    - 84.6 * (CAST(n_syllables AS DOUBLE) / n_words), 6)
-        |  END AS flesch
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Luhn mod-10: digit-positional replay in list land.
-    "q_luhn" ->
-      """WITH n AS (SELECT lpad(CAST((o_orderkey * 2654435761) %
-        |    1000000000000 AS VARCHAR), 12, '0') AS s FROM orders),
-        |v AS (SELECT (list_sum(list_transform(range(1, length(s) + 1),
-        |    i -> CASE WHEN (length(s) - i) % 2 = 1
-        |      THEN CASE WHEN 2 * CAST(substring(s, i, 1) AS INT) > 9
-        |        THEN 2 * CAST(substring(s, i, 1) AS INT) - 9
-        |        ELSE 2 * CAST(substring(s, i, 1) AS INT) END
-        |      ELSE CAST(substring(s, i, 1) AS INT) END)) % 10 = 0)
-        |    AS valid FROM n)
-        |SELECT valid, CAST(COUNT(*) AS BIGINT) AS n FROM v
-        |GROUP BY valid ORDER BY valid""".stripMargin,
-    // Topological layers: bounded all-paths MAX over the
-    // (id, layer)-deduped recursive expansion.
-    "q_topo_layers" ->
-      """WITH RECURSIVE e AS (SELECT DISTINCT o_orderkey % 400 AS src,
-        |    (o_orderkey % 400) + 16 + (o_custkey % 48) AS dst FROM orders
-        |  WHERE (o_orderkey % 400) + 16 + (o_custkey % 48) < 400),
-        |n AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-        |r AS (SELECT id, 0 AS layer FROM n
-        |  UNION
-        |  SELECT e.dst, r.layer + 1 FROM r JOIN e ON e.src = r.id
-        |  WHERE r.layer < 30)
-        |SELECT CAST(id AS BIGINT) AS id, CAST(MAX(layer) AS BIGINT) AS layer
-        |FROM r GROUP BY id ORDER BY id""".stripMargin,
-    // Subtree rollup: recursive ancestor pairs (forest ⇒ UNION ALL path
-    // uniqueness), descendant aggregate + own value.
-    "q_subtree_rollup" ->
-      """WITH RECURSIVE nd AS (SELECT c_custkey AS id,
-        |    CASE WHEN c_custkey < 8 THEN NULL ELSE c_custkey // 8 END
-        |      AS parent,
-        |    CAST(c_custkey % 100 AS DECIMAL(18,2)) AS val FROM customer),
-        |a AS (SELECT id, parent AS anc FROM nd WHERE parent IS NOT NULL
-        |  UNION ALL
-        |  SELECT a.id, nd.parent FROM a JOIN nd ON nd.id = a.anc
-        |  WHERE nd.parent IS NOT NULL),
-        |ag AS (SELECT a.anc AS id, CAST(COUNT(*) AS BIGINT) AS nd_,
-        |    SUM(nd.val) AS dsum
-        |  FROM a JOIN nd ON nd.id = a.id GROUP BY a.anc)
-        |SELECT nd.id, COALESCE(ag.nd_, 0) AS n_desc,
-        |  CAST(CAST(nd.val + COALESCE(ag.dsum, 0) AS VARCHAR) AS DOUBLE)
-        |    AS subtree_sum
-        |FROM nd LEFT JOIN ag ON ag.id = nd.id ORDER BY nd.id""".stripMargin,
-    // Geometric/harmonic means: 6-dp ln terms, 12-dp reciprocal terms,
-    // decimal sums, edge divisions.
-    "q_geo_harm_mean" ->
-      """WITH b AS (SELECT o_orderpriority AS g,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS v FROM orders),
-        |t AS (SELECT g,
-        |    CASE WHEN v > 0 THEN CAST(round(ln(
-        |      CAST(CAST(v AS VARCHAR) AS DOUBLE)), 6) AS DECIMAL(18,6))
-        |    END AS lnt,
-        |    CASE WHEN v > 0 THEN CAST(round(1.0 /
-        |      CAST(CAST(v AS VARCHAR) AS DOUBLE), 12) AS DECIMAL(24,12))
-        |    END AS invt,
-        |    CASE WHEN v > 0 THEN 1 ELSE 0 END AS ok FROM b),
-        |ag AS (SELECT g, CAST(SUM(ok) AS BIGINT) AS n,
-        |    CAST(COUNT(*) - SUM(ok) AS BIGINT) AS n_excluded,
-        |    SUM(lnt) AS sln, SUM(invt) AS sinv FROM t GROUP BY g)
-        |SELECT g, n, n_excluded,
-        |  CASE WHEN n > 0 THEN round(exp(
-        |    CAST(CAST(sln AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-        |  END AS geo_mean,
-        |  CASE WHEN n > 0 THEN round(CAST(n AS DOUBLE) /
-        |    CAST(CAST(sinv AS VARCHAR) AS DOUBLE), 6)
-        |  END AS harm_mean
-        |FROM ag ORDER BY g""".stripMargin,
-    // Sequence gaps: lag over distinct ids per class.
-    "q_sequence_gaps" ->
-      """WITH b AS (SELECT DISTINCT user_id % 10 AS k, event_id AS s
-        |  FROM events),
-        |l AS (SELECT k, s, lag(s) OVER (PARTITION BY k ORDER BY s)
-        |    AS prev FROM b)
-        |SELECT k AS key, CAST(prev + 1 AS BIGINT) AS gap_start,
-        |  CAST(s - 1 AS BIGINT) AS gap_end,
-        |  CAST(s - prev - 1 AS BIGINT) AS n_missing
-        |FROM l WHERE prev IS NOT NULL AND s - prev > 1
-        |ORDER BY key, gap_start""".stripMargin,
-    // DBSCAN: INDEPENDENTLY-blocked neighbor oracle + contract-then-close
-    // components over core-core edges; border -> min adjacent core
-    // cluster. At this density (mean degree ~5.9, above the 2-D
-    // percolation threshold) the core graph has a GIANT component, so the
-    // node-level recursive closure was Theta(n^2) at sf3, and pure
-    // min-label/pointer-jump rounds converge only linearly in the
-    // component DIAMETER (~600 hops at sf3 — the absorbing frontier
-    // advances one hop per round). Instead: 12 contraction rounds (the
-    // q_dedup_clusters scheme) shrink the label space to a few hundred
-    // classes, then the EXACT recursive closure runs on the contracted
-    // supergraph (label classes are connected by construction — a node's
-    // label is always a reachable id — so the quotient preserves
-    // components exactly, for ANY round count; rounds only size the
-    // supergraph, they carry no correctness burden).
-    // The oracle blocks on a 53-unit grid (prime, distinct
-    // from the engine's eps=40 cells, boundaries never aligned):
-    // completeness is a theorem for ANY cell >= eps (a pair within eps
-    // lies in same-or-adjacent cells), so agreement still proves the
-    // engine's 3x3/eps blocking lost nothing, while the replay stays
-    // LINEAR in rows — the previous all-pairs form was quadratic and
-    // timed out at the sf3 replica (150k docs).
-    "q_dbscan" ->
-      s"""WITH RECURSIVE sc AS (SELECT CAST(greatest(650,
-        |  floor(650 * sqrt(count(*) / 500.0))) AS BIGINT) AS side FROM documents),
-        |p AS MATERIALIZED (SELECT doc_id AS id,
-        |  ((doc_id % 2147483648) * 2654435761 % 2147483648) % sc.side AS x,
-        |  ((doc_id % 2147483648) * 2246822519 % 2147483648) % sc.side AS y
-        |  FROM documents CROSS JOIN sc),
-        |g AS MATERIALIZED (SELECT id, x, y, x // 53 AS gx, y // 53 AS gy FROM p),
-        |ge AS MATERIALIZED (SELECT id, x, y, gx + dx.d AS gx, gy + dy.d AS gy
-        |  FROM g CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) dx
-        |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS d) dy),
-        |pr AS MATERIALIZED (SELECT a.id AS ia, b.id AS ib
-        |  FROM ge a JOIN g b ON a.gx = b.gx AND a.gy = b.gy AND a.id < b.id
-        |  WHERE (a.x-b.x)*(a.x-b.x)+(a.y-b.y)*(a.y-b.y) <= 1600),
-        |sym AS MATERIALIZED (SELECT ia AS id, ib AS nb FROM pr UNION ALL SELECT ib, ia FROM pr),
-        |cnt AS (SELECT pp.id, count(s.nb) AS c FROM p pp
-        |  LEFT JOIN sym s ON pp.id = s.id GROUP BY 1),
-        |core AS MATERIALIZED (SELECT id FROM cnt WHERE c + 1 >= 5),
-        |ce AS MATERIALIZED (SELECT s.id AS a, s.nb AS b FROM sym s
-        |  JOIN core c1 ON s.id = c1.id JOIN core c2 ON s.nb = c2.id),
-        |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS lbl FROM ce),
-        |${(1 to 12).map(i =>
-            s"""m$i AS MATERIALIZED (SELECT l.id, least(l.lbl, min(ln.lbl)) AS lbl
-               |  FROM l${i - 1} l JOIN ce e ON e.a = l.id
-               |  JOIN l${i - 1} ln ON ln.id = e.b GROUP BY l.id, l.lbl),
-               |l$i AS MATERIALIZED (SELECT m.id, l2.lbl
-               |  FROM m$i m JOIN m$i l2 ON l2.id = m.lbl)""".stripMargin)
-          .mkString(",\n")},
-        |sedge AS MATERIALIZED (SELECT DISTINCT la.lbl AS a, lb.lbl AS b FROM ce
-        |  JOIN l12 la ON la.id = ce.a JOIN l12 lb ON lb.id = ce.b
-        |  WHERE la.lbl <> lb.lbl),
-        |sreach(id, lbl) AS (
-        |  SELECT a, a FROM sedge
-        |  UNION
-        |  SELECT e.a, r.lbl FROM sedge e JOIN sreach r ON r.id = e.b),
-        |scc AS (SELECT id, MIN(lbl) AS slbl FROM sreach GROUP BY id),
-        |cc AS (SELECT l.id, COALESCE(scc.slbl, l.lbl) AS cluster
-        |  FROM l12 l LEFT JOIN scc ON l.lbl = scc.id),
-        |corelab AS MATERIALIZED (SELECT c.id, COALESCE(cc.cluster, c.id) AS cluster
-        |  FROM core c LEFT JOIN cc ON c.id = cc.id),
-        |border AS (SELECT s.id, MIN(cl.cluster) AS cluster
-        |  FROM sym s JOIN corelab cl ON s.nb = cl.id
-        |  WHERE s.id NOT IN (SELECT id FROM core)
-        |  GROUP BY s.id)
-        |SELECT pp.id,
-        |  CASE WHEN corelab.id IS NOT NULL THEN 'core'
-        |       WHEN border.id IS NOT NULL THEN 'border'
-        |       ELSE 'noise' END AS role,
-        |  COALESCE(corelab.cluster, border.cluster) AS cluster
-        |FROM p pp LEFT JOIN corelab ON pp.id = corelab.id
-        |LEFT JOIN border ON pp.id = border.id
-        |ORDER BY pp.id""".stripMargin,
-    // Max drawdown: decimal daily sums, running-peak window, earliest
-    // trough on ties; digit-string->double at the edge only.
-    "q_drawdown" ->
-      """WITH a AS (SELECT o_orderpriority AS k,
-        |  date_trunc('day', o_orderdate) AS dy,
-        |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (SELECT k, dy, v, MAX(v) OVER (PARTITION BY k ORDER BY dy
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak FROM a),
-        |t AS (SELECT k, dy, peak, peak - v AS delta FROM w),
-        |r AS (SELECT k, dy, peak, delta,
-        |  ROW_NUMBER() OVER (PARTITION BY k ORDER BY delta DESC, dy ASC) AS rn,
-        |  COUNT(*) OVER (PARTITION BY k) AS np FROM t)
-        |SELECT k AS o_orderpriority, CAST(np AS BIGINT) AS n_periods,
-        |  CAST(CAST(delta AS VARCHAR) AS DOUBLE) AS max_drawdown,
-        |  strftime(dy, '%Y-%m-%d') AS trough_day,
-        |  CAST(CAST(peak AS VARCHAR) AS DOUBLE) AS peak_at_trough
-        |FROM r WHERE rn = 1 ORDER BY 1""".stripMargin,
-    // l-diversity: distinct sensitive values per quasi-class, one fold.
-    "q_ldiversity" ->
-      """WITH c AS (SELECT c_nationkey, c_mktsegment, count(*) AS c,
-        |  count(DISTINCT c_acctbal) AS dv FROM customer GROUP BY 1, 2)
-        |SELECT CAST(5 AS BIGINT) AS l, CAST(SUM(c) AS BIGINT) AS n_rows,
-        |  count(*) AS n_classes,
-        |  CAST(SUM(CASE WHEN dv < 5 THEN 1 ELSE 0 END) AS BIGINT) AS classes_below_l,
-        |  CAST(SUM(CASE WHEN dv < 5 THEN c ELSE 0 END) AS BIGINT) AS rows_below_l,
-        |  MIN(dv) AS min_diversity, MAX(dv) AS max_diversity,
-        |  SUM(CASE WHEN dv < 5 THEN 1 ELSE 0 END) = 0 AS diverse
-        |FROM c""".stripMargin,
-    // Two-feature OLS: Cramer closed form, the q_linreg digit-string
-    // moment convention; b1/b2 materialize before b0/r2 so both engines
-    // share the identical double dag.
-    "q_multireg" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s1,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s2,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s11,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s22,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s12,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s1y,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s2y,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM lineitem GROUP BY 1),
-        |c AS (SELECT l_returnflag, n, s1, s2, sy,
-        |  CAST(n AS DOUBLE) * s11 - s1 * s1 AS c11,
-        |  CAST(n AS DOUBLE) * s22 - s2 * s2 AS c22,
-        |  CAST(n AS DOUBLE) * s12 - s1 * s2 AS c12,
-        |  CAST(n AS DOUBLE) * s1y - s1 * sy AS c1y,
-        |  CAST(n AS DOUBLE) * s2y - s2 * sy AS c2y,
-        |  CAST(n AS DOUBLE) * syy - sy * sy AS cyy FROM m),
-        |dt AS (SELECT *, c11 * c22 - c12 * c12 AS det FROM c),
-        |b AS (SELECT *, (c22 * c1y - c12 * c2y) / det AS b1,
-        |  (c11 * c2y - c12 * c1y) / det AS b2 FROM dt)
-        |SELECT l_returnflag, n, b1, b2,
-        |  (sy - b1 * s1 - b2 * s2) / CAST(n AS DOUBLE) AS b0,
-        |  (b1 * c1y + b2 * c2y) / cyy AS r2
-        |FROM b ORDER BY l_returnflag""".stripMargin,
-    // 2-D PCA: closed-form eigen over the q_linreg moment convention;
-    // identical double dags, atan2 rounded 6 dp at the edge.
-    "q_pca" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM lineitem GROUP BY 1),
-        |c AS (SELECT l_returnflag, n,
-        |  CAST(n AS DOUBLE) * sxx - sx * sx AS cxx,
-        |  CAST(n AS DOUBLE) * syy - sy * sy AS cyy,
-        |  CAST(n AS DOUBLE) * sxy - sx * sy AS cxy FROM m),
-        |dsc AS (SELECT *, sqrt((cxx - cyy) * (cxx - cyy) / 4.0 + cxy * cxy) AS disc FROM c),
-        |l AS (SELECT *,
-        |  ((cxx + cyy) / 2.0 + disc) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS lam1,
-        |  ((cxx + cyy) / 2.0 - disc) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS lam2 FROM dsc)
-        |SELECT l_returnflag, n,
-        |  cxx / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS var_x,
-        |  cyy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS var_y,
-        |  cxy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS cov_xy,
-        |  lam1, lam2, lam1 / (lam1 + lam2) AS explained_1,
-        |  round(atan2(2.0 * cxy, cxx - cyy) / 2.0, 6) AS theta
-        |FROM l ORDER BY l_returnflag""".stripMargin,
-    // Fisher exact: ln-factorial decimal prefix sums, pmf = exp(fixed
-    // dag) rounded to ABSOLUTE 10 dp (selection + sums engine-exact).
-    "q_fisher_exact" ->
-      """WITH cnt AS (SELECT
-        |  CAST(SUM(CASE WHEN c_nationkey % 2 = 0 AND c_mktsegment IN ('BUILDING','AUTOMOBILE') THEN 1 ELSE 0 END) AS BIGINT) AS a,
-        |  CAST(SUM(CASE WHEN c_nationkey % 2 = 0 AND NOT c_mktsegment IN ('BUILDING','AUTOMOBILE') THEN 1 ELSE 0 END) AS BIGINT) AS b,
-        |  CAST(SUM(CASE WHEN c_nationkey % 2 <> 0 AND c_mktsegment IN ('BUILDING','AUTOMOBILE') THEN 1 ELSE 0 END) AS BIGINT) AS c,
-        |  CAST(SUM(CASE WHEN c_nationkey % 2 <> 0 AND NOT c_mktsegment IN ('BUILDING','AUTOMOBILE') THEN 1 ELSE 0 END) AS BIGINT) AS dd
-        |  FROM customer),
-        |m AS (SELECT a, b, c, dd, a + b AS r1, c + dd AS r2,
-        |  a + c AS k1, b + dd AS k2, a + b + c + dd AS nn FROM cnt),
-        |lfb AS (SELECT i, SUM(CASE WHEN i >= 2
-        |    THEN CAST(round(ln(CAST(i AS DOUBLE)), 6) AS DECIMAL(18,6))
-        |    ELSE CAST(0 AS DECIMAL(18,6)) END)
-        |  OVER (ORDER BY i ROWS UNBOUNDED PRECEDING) AS lf
-        |  FROM (SELECT unnest(generate_series(0, (SELECT nn FROM m))) AS i)),
-        |sup AS (SELECT m.*, unnest(generate_series(greatest(0, r1 - k2), least(r1, k1))) AS k FROM m),
-        |j AS (SELECT sup.*,
-        |  lk.lf AS lfk, lr1k.lf AS lfr1k, lk1k.lf AS lfk1k, lrest.lf AS lfrest,
-        |  lr1.lf AS lfr1, lr2.lf AS lfr2, lk1.lf AS lfk1, lk2.lf AS lfk2, lnn.lf AS lfn
-        |  FROM sup
-        |  JOIN lfb lk ON lk.i = sup.k
-        |  JOIN lfb lr1k ON lr1k.i = sup.r1 - sup.k
-        |  JOIN lfb lk1k ON lk1k.i = sup.k1 - sup.k
-        |  JOIN lfb lrest ON lrest.i = sup.nn - sup.r1 - sup.k1 + sup.k
-        |  JOIN lfb lr1 ON lr1.i = sup.r1
-        |  JOIN lfb lr2 ON lr2.i = sup.r2
-        |  JOIN lfb lk1 ON lk1.i = sup.k1
-        |  JOIN lfb lk2 ON lk2.i = sup.k2
-        |  JOIN lfb lnn ON lnn.i = sup.nn),
-        |pm AS (SELECT a, b, c, dd, nn, k,
-        |  CAST(round(exp(
-        |    CAST(CAST(lfr1 AS VARCHAR) AS DOUBLE) + CAST(CAST(lfr2 AS VARCHAR) AS DOUBLE)
-        |    + CAST(CAST(lfk1 AS VARCHAR) AS DOUBLE) + CAST(CAST(lfk2 AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(lfn AS VARCHAR) AS DOUBLE) - CAST(CAST(lfk AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(lfr1k AS VARCHAR) AS DOUBLE) - CAST(CAST(lfk1k AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(lfrest AS VARCHAR) AS DOUBLE)), 10) AS DECIMAL(12,10)) AS pmf FROM j),
-        |obs AS (SELECT pmf AS pobs FROM pm WHERE k = a)
-        |SELECT a, b, c, dd AS d, CAST(nn AS BIGINT) AS n,
-        |  CAST(CAST(pobs AS VARCHAR) AS DOUBLE) AS pmf_obs,
-        |  CAST(CAST(SUM(CASE WHEN pmf <= pobs THEN pmf END) AS VARCHAR) AS DOUBLE) AS p_two,
-        |  CAST(CAST(SUM(CASE WHEN k <= a THEN pmf END) AS VARCHAR) AS DOUBLE) AS p_left,
-        |  CAST(CAST(SUM(CASE WHEN k >= a THEN pmf END) AS VARCHAR) AS DOUBLE) AS p_right
-        |FROM pm CROSS JOIN obs
-        |GROUP BY a, b, c, dd, nn, pobs""".stripMargin,
-    // TIFF: closed-form file size — 8 header + 3wh pixels + 2 + 9*12 +
-    // 4 IFD bytes + 6 out-of-line BitsPerSample = 128 + 3wh.
-    "q_multimodal_tiff" ->
-      """SELECT doc_id, 'image/tiff' AS media_format,
-        |CAST(doc_id % 64 + 1 AS INTEGER) AS width,
-        |CAST((doc_id // 64) % 64 + 1 AS INTEGER) AS height,
-        |CAST(128 + 3 * (doc_id % 64 + 1) * ((doc_id // 64) % 64 + 1) AS BIGINT) AS n_bytes,
-        |TRUE AS roundtrip_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Containment join: the oracle derives |T1 ∩ T2| as the aggregated
-    // COUNT of shared shingles over the exploded join — set-logic
-    // identical to per-pair list intersection (the lists are distinct)
-    // but Θ(Σ df²) instead of Θ(n²·|list|), which is what makes the 10×
-    // replay feasible (all-pairs list_intersect: >10 min at sf1; this:
-    // ~4 min over 279M joined rows). Completeness is STRUCTURAL: any
-    // pair with containment ≥ t > 0 shares ≥ 1 shingle and therefore
-    // appears in the join — so equality still proves the engine's
-    // rare-first prefix filter lost nothing.
-    "q_containment_join" ->
-      """WITH t0 AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |t AS (SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-        |  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS tk
-        |  FROM t0 WHERE len(toks) >= 3),
-        |t2 AS MATERIALIZED (SELECT doc_id, len(tk) AS m FROM t WHERE len(tk) > 0),
-        |ex AS MATERIALIZED (SELECT doc_id, unnest(tk) AS sh FROM t WHERE len(tk) > 0),
-        |ix AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS ix
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (SELECT ix.id1, ix.id2,
-        |  CAST(ix.ix AS DOUBLE) / CAST(ta.m AS DOUBLE) AS cont
-        |  FROM ix JOIN t2 ta ON ix.id1 = ta.doc_id)
-        |SELECT id1, id2, round(cont, 6) AS containment
-        |FROM p WHERE cont >= 0.8 ORDER BY id1, id2""".stripMargin,
-    // Degree assortativity: decimal-exact degree moments over the
-    // symmetric canonical edge list, corrExact dag.
-    "q_assortativity" ->
-      """WITH e0 AS (SELECT o_custkey % 97 AS a, o_orderkey % 97 AS b FROM orders),
-        |und AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-        |  FROM e0 WHERE a <> b),
-        |sym AS (SELECT a, b FROM und UNION ALL SELECT b, a FROM und),
-        |dg AS (SELECT a, count(*) AS deg FROM sym GROUP BY a),
-        |j AS (SELECT dx.deg AS dx, dy.deg AS dy FROM sym
-        |  JOIN dg dx ON sym.a = dx.a JOIN dg dy ON sym.b = dy.a),
-        |m AS (SELECT count(*) AS n,
-        |  CAST(CAST(SUM(CAST(dx AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(dy AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(dx AS DECIMAL(19,0)) * CAST(dy AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(dx AS DECIMAL(19,0)) * CAST(dx AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(dy AS DECIMAL(19,0)) * CAST(dy AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM j)
-        |SELECT CAST(n / 2 AS BIGINT) AS n_edges, n,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |  (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) *
-        |   sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS assortativity
-        |FROM m""".stripMargin,
-    // Bollinger bands: exact decimal 7-row window sums, fixed dag.
-    "q_bollinger" ->
-      """WITH a AS (SELECT o_orderpriority AS k,
-        |  date_trunc('day', o_orderdate) AS dy,
-        |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (SELECT k, dy, v,
-        |  COUNT(*) OVER win AS n,
-        |  SUM(v) OVER win AS s,
-        |  SUM(CAST(v AS DECIMAL(19,2)) * CAST(v AS DECIMAL(19,2))) OVER win AS s2
-        |  FROM a WINDOW win AS (PARTITION BY k ORDER BY dy
-        |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)),
-        |st AS (SELECT k, dy, v, n,
-        |  CAST(CAST(s AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-        |  sqrt(greatest(0.0, CAST(n AS DOUBLE) * CAST(CAST(s2 AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(s AS VARCHAR) AS DOUBLE) * CAST(CAST(s AS VARCHAR) AS DOUBLE)))
-        |    / CAST(n AS DOUBLE) AS sd
-        |  FROM w),
-        |b AS (SELECT *, mean + 2.0 * sd AS upper, mean - 2.0 * sd AS lower FROM st)
-        |SELECT k AS o_orderpriority, strftime(dy, '%Y-%m-%d') AS day,
-        |  CAST(CAST(v AS VARCHAR) AS DOUBLE) AS v, CAST(n AS BIGINT) AS n_window,
-        |  mean, sd, upper, lower,
-        |  (CAST(CAST(v AS VARCHAR) AS DOUBLE) > upper
-        |    OR CAST(CAST(v AS VARCHAR) AS DOUBLE) < lower) AS breakout
-        |FROM b ORDER BY 1, 2""".stripMargin,
-    // Phonetic blocking: the simplified-Soundex chain replayed — RE2 has
-    // no backreferences, so the run-collapse is six iterated pair-replace
-    // passes (handles runs to 64; words are far shorter).
-    "q_phonetic" ->
-      """WITH w0 AS (SELECT DISTINCT (['smith','smyth','smythe','jon','john','jahn',
-        |  'meyer','myer','mayer','reed','read','reid',
-        |  'stuart','stewart','karl','carl'])[CAST(c_custkey % 16 + 1 AS INTEGER)] AS w
-        |  FROM customer),
-        |w1 AS (SELECT w FROM w0 WHERE w IS NOT NULL AND w <> ''),
-        |c0 AS (SELECT w, regexp_replace(upper(w), '[^A-Z]', '', 'g') AS s FROM w1),
-        |c1 AS (SELECT w, s, translate(s, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
-        |  '01230120022455012623010202') AS cd FROM c0),
-        |r1 AS (SELECT w, s, replace(replace(replace(replace(replace(replace(replace(cd,'00','0'),'11','1'),'22','2'),'33','3'),'44','4'),'55','5'),'66','6') AS cd FROM c1),
-        |r2 AS (SELECT w, s, replace(replace(replace(replace(replace(replace(replace(cd,'00','0'),'11','1'),'22','2'),'33','3'),'44','4'),'55','5'),'66','6') AS cd FROM r1),
-        |r3 AS (SELECT w, s, replace(replace(replace(replace(replace(replace(replace(cd,'00','0'),'11','1'),'22','2'),'33','3'),'44','4'),'55','5'),'66','6') AS cd FROM r2),
-        |r4 AS (SELECT w, s, replace(replace(replace(replace(replace(replace(replace(cd,'00','0'),'11','1'),'22','2'),'33','3'),'44','4'),'55','5'),'66','6') AS cd FROM r3),
-        |r5 AS (SELECT w, s, replace(replace(replace(replace(replace(replace(replace(cd,'00','0'),'11','1'),'22','2'),'33','3'),'44','4'),'55','5'),'66','6') AS cd FROM r4),
-        |r6 AS (SELECT w, s, replace(replace(replace(replace(replace(replace(replace(cd,'00','0'),'11','1'),'22','2'),'33','3'),'44','4'),'55','5'),'66','6') AS cd FROM r5),
-        |coded AS (SELECT w, CASE WHEN length(s) > 0 THEN substr(s, 1, 1) ||
-        |  rpad(substr(replace(substr(cd, 2, 64), '0', ''), 1, 3), 3, '0') END AS code
-        |  FROM r6)
-        |SELECT a.code, a.w AS w1, b.w AS w2
-        |FROM coded a JOIN coded b ON a.code = b.code AND a.w < b.w
-        |WHERE a.code IS NOT NULL
-        |ORDER BY a.code, w1, w2""".stripMargin,
-    // Simplified silhouette: the full q_kmeans training unroll, then
-    // per-point a/b centroid distances and 6-dp decimal-summed scores.
-    "q_silhouette" ->
-      """WITH pts AS (SELECT vec_id AS id, CAST(i AS INTEGER) AS dim,
-        |  CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000) AS BIGINT) AS q
-        |  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) gs),
-        |init AS (SELECT id, CAST(ROW_NUMBER() OVER (ORDER BY id) - 1 AS INTEGER) AS cid
-        |  FROM (SELECT DISTINCT id FROM pts ORDER BY id LIMIT 8)),
-        |c0 AS (SELECT init.cid, p.dim, p.q AS v FROM pts p JOIN init ON p.id = init.id),
-        |a1 AS (SELECT id, cid FROM (
-        |  SELECT p.id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-        |  FROM pts p JOIN c0 c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-        |s1 AS (SELECT a.cid, p.dim, SUM(p.q) AS s, count(*) AS n FROM pts p JOIN a1 a ON p.id = a.id GROUP BY 1, 2),
-        |c1 AS (SELECT c0.cid, c0.dim,
-        |  CAST(COALESCE((s1.s - (((s1.s % s1.n) + s1.n) % s1.n)) // s1.n, c0.v) AS BIGINT) AS v
-        |  FROM c0 LEFT JOIN s1 ON c0.cid = s1.cid AND c0.dim = s1.dim),
-        |a2 AS (SELECT id, cid FROM (
-        |  SELECT p.id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-        |  FROM pts p JOIN c1 c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-        |s2 AS (SELECT a.cid, p.dim, SUM(p.q) AS s, count(*) AS n FROM pts p JOIN a2 a ON p.id = a.id GROUP BY 1, 2),
-        |c2 AS (SELECT c1.cid, c1.dim,
-        |  CAST(COALESCE((s2.s - (((s2.s % s2.n) + s2.n) % s2.n)) // s2.n, c1.v) AS BIGINT) AS v
-        |  FROM c1 LEFT JOIN s2 ON c1.cid = s2.cid AND c1.dim = s2.dim),
-        |a3 AS (SELECT id, cid FROM (
-        |  SELECT p.id, c.cid,
-        |    ROW_NUMBER() OVER (PARTITION BY p.id ORDER BY SUM((p.q - c.v) * (p.q - c.v)) ASC, c.cid ASC) AS rn
-        |  FROM pts p JOIN c2 c ON p.dim = c.dim GROUP BY p.id, c.cid) WHERE rn = 1),
-        |s3 AS (SELECT a.cid, p.dim, SUM(p.q) AS s, count(*) AS n FROM pts p JOIN a3 a ON p.id = a.id GROUP BY 1, 2),
-        |c3 AS (SELECT c2.cid, c2.dim,
-        |  CAST(COALESCE((s3.s - (((s3.s % s3.n) + s3.n) % s3.n)) // s3.n, c2.v) AS BIGINT) AS v
-        |  FROM c2 LEFT JOIN s3 ON c2.cid = s3.cid AND c2.dim = s3.dim),
-        |dd AS (SELECT p.id, c.cid, SUM((p.q - c.v) * (p.q - c.v)) AS d2
-        |  FROM pts p JOIN c3 c ON p.dim = c.dim GROUP BY p.id, c.cid),
-        |asg AS (SELECT id, cid, d2 FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2 ASC, cid ASC) AS rn FROM dd)
-        |  WHERE rn = 1),
-        |oth AS (SELECT dd.id, MIN(dd.d2) AS bd2 FROM dd JOIN asg ON dd.id = asg.id
-        |  WHERE dd.cid <> asg.cid GROUP BY dd.id),
-        |sil AS (SELECT asg.cid,
-        |  CAST(round(CASE WHEN greatest(sqrt(asg.d2), sqrt(oth.bd2)) = 0.0 THEN 0.0
-        |    ELSE (sqrt(oth.bd2) - sqrt(asg.d2)) / greatest(sqrt(asg.d2), sqrt(oth.bd2)) END, 6)
-        |    AS DECIMAL(10,6)) AS s
-        |  FROM asg JOIN oth ON asg.id = oth.id)
-        |SELECT cid, count(*) AS n,
-        |  CAST(CAST(SUM(s) AS VARCHAR) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_silhouette
-        |FROM sil GROUP BY cid ORDER BY cid""".stripMargin,
-    // 5-NN classification: exact-cosine ranks (the annExactTopKOracle
-    // convention), majority vote, ties to the smaller label.
-    "q_knn_classify" ->
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv, label AS tl
-        |  FROM embeddings WHERE vec_id < 50),
-        |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv, label FROM embeddings),
-        |s AS (SELECT qid, vec_id, label, list_inner_product(qv, cv) /
-        |  (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(cv, cv))) AS cos_exact
-        |  FROM q CROSS JOIN c WHERE vec_id <> qid),
-        |r AS (SELECT qid, label,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, vec_id) AS rank FROM s),
-        |v AS (SELECT qid, label, count(*) AS votes FROM r WHERE rank <= 5 GROUP BY 1, 2),
-        |b AS (SELECT qid, label AS pred, votes,
-        |  ROW_NUMBER() OVER (PARTITION BY qid ORDER BY votes DESC, label ASC) AS rn FROM v)
-        |SELECT q.qid AS vec_id, q.tl AS label, b.pred, b.votes, b.pred = q.tl AS correct
-        |FROM b JOIN q ON b.qid = q.qid WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-    // Decile lift: distributed global rank replay (distinct-score prefix
-    // sums + within-score rank), exact counts, fixed-dag lift.
-    "q_decile_lift" ->
-      """WITH rws AS (SELECT value AS sc, event_id AS tie,
-        |  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |ps AS (SELECT sc, count(*) AS c FROM rws GROUP BY 1),
-        |offs AS (SELECT sc, CAST(COALESCE(SUM(c) OVER (ORDER BY sc DESC
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off FROM ps),
-        |tot AS (SELECT count(*) AS n, CAST(SUM(y) AS BIGINT) AS pos FROM rws),
-        |rk AS (SELECT r.sc, r.y, o.off + ROW_NUMBER() OVER (PARTITION BY r.sc ORDER BY r.tie ASC) AS rr
-        |  FROM rws r JOIN offs o ON r.sc = o.sc),
-        |bk AS (SELECT CAST(((rr - 1) * 10) // tot.n AS BIGINT) AS bucket, y FROM rk CROSS JOIN tot),
-        |pb AS (SELECT bucket, count(*) AS n, CAST(SUM(y) AS BIGINT) AS positives FROM bk GROUP BY 1),
-        |cm AS (SELECT *, CAST(SUM(n) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cn,
-        |  CAST(SUM(positives) OVER (ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp FROM pb)
-        |SELECT bucket, cm.n, positives,
-        |  CAST(positives AS DOUBLE) / CAST(cm.n AS DOUBLE) AS rate,
-        |  (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)) /
-        |  (CAST(tot.pos AS DOUBLE) / CAST(tot.n AS DOUBLE)) AS cum_lift
-        |FROM cm CROSS JOIN tot ORDER BY bucket""".stripMargin,
-    // Interval gaps: the merge oracle plus one lag over the islands.
-    "q_interval_gaps" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
-        |  epoch_us(ts) + ((event_id % 7) + 1) * 600000000 AS e FROM events),
-        |m AS (SELECT user_id, s, e, MAX(e) OVER (PARTITION BY user_id
-        |  ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-        |  FROM iv),
-        |g AS (SELECT *, SUM(CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END)
-        |  OVER (PARTITION BY user_id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island FROM m),
-        |mg AS (SELECT user_id, MIN(s) AS s, MAX(e) AS e
-        |  FROM g GROUP BY user_id, island),
-        |lg AS (SELECT user_id, s,
-        |  lag(e) OVER (PARTITION BY user_id ORDER BY s) AS pe FROM mg)
-        |SELECT user_id, pe AS gap_start, s AS gap_end, s - pe AS gap_len
-        |FROM lg WHERE pe IS NOT NULL AND s > pe
-        |ORDER BY user_id, gap_start""".stripMargin,
-    // Diversity indices: exact integer count dags only.
-    "q_diversity" ->
-      """WITH c AS (SELECT lang, source, count(*) AS c FROM documents GROUP BY 1, 2),
-        |g AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS n, count(*) AS k,
-        |  CAST(CAST(SUM(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS ss,
-        |  MAX(c) AS mx FROM c GROUP BY lang),
-        |h AS (SELECT lang, n, k, ss / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS hhi, mx FROM g)
-        |SELECT lang, n, k, hhi, 1.0 - hhi AS simpson,
-        |  CAST(mx AS DOUBLE) / CAST(n AS DOUBLE) AS top_share
-        |FROM h ORDER BY lang""".stripMargin,
-    // Runs test: lower-median binarization (exact-median ties dropped),
-    // run breaks via lag, textbook z dag.
-    "q_runs_test" ->
-      """WITH vc AS (SELECT event_type AS g, value AS v, count(*) AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-        |cum AS (SELECT g, v, SUM(c) OVER (PARTITION BY g ORDER BY v
-        |  ROWS UNBOUNDED PRECEDING) AS cm FROM vc),
-        |tot AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n FROM vc GROUP BY g),
-        |med AS (SELECT cum.g, MIN(v) AS med FROM cum JOIN tot ON cum.g = tot.g
-        |  WHERE cm >= (n + 1) // 2 GROUP BY cum.g),
-        |sg AS (SELECT e.event_type AS g, e.ts, e.event_id,
-        |  CASE WHEN e.value > med.med THEN 1 ELSE -1 END AS sgn
-        |  FROM events e JOIN med ON e.event_type = med.g
-        |  WHERE e.value <> med.med),
-        |br AS (SELECT g, sgn, CASE WHEN lag(sgn) OVER w IS NULL
-        |    OR lag(sgn) OVER w <> sgn THEN 1 ELSE 0 END AS brk
-        |  FROM sg WINDOW w AS (PARTITION BY g ORDER BY ts, event_id)),
-        |r AS (SELECT g, CAST(SUM(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-        |  CAST(SUM(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
-        |  CAST(SUM(brk) AS BIGINT) AS runs FROM br GROUP BY g)
-        |SELECT g AS event_type, n_above, n_below, runs,
-        |  CASE WHEN n_above > 0 AND n_below > 0 THEN
-        |    (CAST(runs AS DOUBLE) - (1.0 + 2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) / (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE)))) /
-        |    sqrt(2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) * (2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) - CAST(n_above AS DOUBLE) - CAST(n_below AS DOUBLE)) /
-        |      ((CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE)) * (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE)) * (CAST(n_above AS DOUBLE) + CAST(n_below AS DOUBLE) - 1.0)))
-        |  END AS z
-        |FROM r ORDER BY event_type""".stripMargin,
-    // STL-lite: centered 7-row trend, 6-dp detrended decimals, per-dow
-    // seasonal means (Spark dayofweek convention: 1 = Sunday).
-    "q_seasonal_decompose" ->
-      """WITH a AS (SELECT o_orderpriority AS k,
-        |  date_trunc('day', o_orderdate) AS dy,
-        |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |t AS (SELECT k, dy, v,
-        |  COUNT(*) OVER win AS tn, SUM(v) OVER win AS ts
-        |  FROM a WINDOW win AS (PARTITION BY k ORDER BY dy
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |tr AS (SELECT k, dy, v,
-        |  CAST(CAST(ts AS VARCHAR) AS DOUBLE) / CAST(tn AS DOUBLE) AS trend
-        |  FROM t),
-        |de AS (SELECT *, CAST(round(CAST(CAST(v AS VARCHAR) AS DOUBLE) - trend, 6)
-        |    AS DECIMAL(18,6)) AS det,
-        |  CAST(dayofweek(dy) + 1 AS INTEGER) AS dow FROM tr),
-        |se AS (SELECT k, dow,
-        |  CAST(CAST(SUM(det) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS seasonal
-        |  FROM de GROUP BY 1, 2)
-        |SELECT de.k AS o_orderpriority, strftime(de.dy, '%Y-%m-%d') AS day,
-        |  de.dow, CAST(CAST(de.v AS VARCHAR) AS DOUBLE) AS v, de.trend,
-        |  se.seasonal,
-        |  CAST(CAST(de.det AS VARCHAR) AS DOUBLE) - se.seasonal AS residual
-        |FROM de JOIN se ON de.k = se.k AND de.dow = se.dow
-        |ORDER BY 1, 2""".stripMargin,
-    // Burstiness: exact-decimal gap moments, (sd-mean)/(sd+mean) dag.
-    "q_burstiness" ->
-      """WITH g AS (SELECT user_id,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS gp FROM events),
-        |m AS (SELECT user_id, count(*) AS n_gaps,
-        |  CAST(CAST(SUM(CAST(gp AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS s,
-        |  CAST(CAST(SUM(CAST(gp AS DECIMAL(19,0)) * CAST(gp AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS s2
-        |  FROM g WHERE gp IS NOT NULL GROUP BY user_id HAVING count(*) >= 2),
-        |st AS (SELECT user_id, n_gaps, s / CAST(n_gaps AS DOUBLE) AS mean_gap_us,
-        |  sqrt(greatest(0.0, CAST(n_gaps AS DOUBLE) * s2 - s * s)) / CAST(n_gaps AS DOUBLE) AS sd_gap_us
-        |  FROM m)
-        |SELECT user_id, n_gaps, mean_gap_us, sd_gap_us,
-        |  sd_gap_us / mean_gap_us AS cv,
-        |  (sd_gap_us - mean_gap_us) / (sd_gap_us + mean_gap_us) AS burstiness
-        |FROM st ORDER BY user_id""".stripMargin,
-    // Breakpoint: between-SS dag over exact decimal prefix sums,
-    // earliest split on ties.
-    "q_breakpoint" ->
-      """WITH a AS (SELECT o_orderpriority AS k,
-        |  date_trunc('day', o_orderdate) AS dy,
-        |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |s AS (SELECT k, dy, v,
-        |  ROW_NUMBER() OVER w AS t,
-        |  SUM(v) OVER (PARTITION BY k ORDER BY dy
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p,
-        |  COUNT(*) OVER (PARTITION BY k) AS n,
-        |  SUM(v) OVER (PARTITION BY k) AS stot,
-        |  lead(dy) OVER w AS nday
-        |  FROM a WINDOW w AS (PARTITION BY k ORDER BY dy)),
-        |c AS (SELECT k, n, strftime(nday, '%Y-%m-%d') AS bday, t,
-        |  CAST(CAST(p AS VARCHAR) AS DOUBLE) AS pd,
-        |  CAST(CAST(stot AS VARCHAR) AS DOUBLE) AS sd
-        |  FROM s WHERE t < n),
-        |g AS (SELECT *, pd * pd / CAST(t AS DOUBLE)
-        |  + (sd - pd) * (sd - pd) / (CAST(n AS DOUBLE) - CAST(t AS DOUBLE)) AS gv
-        |  FROM c),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY gv DESC, t ASC) AS rn FROM g)
-        |SELECT k AS o_orderpriority, CAST(n AS BIGINT) AS n_periods,
-        |  bday AS break_day,
-        |  pd / CAST(t AS DOUBLE) AS mean_left,
-        |  (sd - pd) / (CAST(n AS DOUBLE) - CAST(t AS DOUBLE)) AS mean_right,
-        |  (sd - pd) / (CAST(n AS DOUBLE) - CAST(t AS DOUBLE)) - pd / CAST(t AS DOUBLE) AS delta
-        |FROM r WHERE rn = 1 ORDER BY 1""".stripMargin,
-    // Linear interpolation: known-counting joins replay the ignoreNulls
-    // windows (different mechanism, same semantics).
-    "q_interpolate" ->
-      """WITH a AS (SELECT event_type AS k, date_trunc('day', ts) AS bucket,
-        |  count(*) AS n, SUM(CAST(value AS DECIMAL(18,6))) AS s
-        |  FROM events WHERE event_id % 11 = 0 GROUP BY 1, 2),
-        |sp AS (SELECT k, min(bucket) AS mn, max(bucket) AS mx FROM a GROUP BY k),
-        |grid AS (SELECT k, unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS bucket FROM sp),
-        |j AS (SELECT g.k, g.bucket, a.n,
-        |  CAST(CAST(a.s AS VARCHAR) AS DOUBLE) AS dv
-        |  FROM grid g LEFT JOIN a ON g.k = a.k AND g.bucket = a.bucket),
-        |px AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY bucket) AS pos,
-        |  SUM(CASE WHEN n IS NOT NULL THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY k ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS kl,
-        |  SUM(CASE WHEN n IS NOT NULL THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY k ORDER BY bucket DESC ROWS UNBOUNDED PRECEDING) AS kr
-        |  FROM j),
-        |kn AS (SELECT k, pos, dv,
-        |  ROW_NUMBER() OVER (PARTITION BY k ORDER BY pos) AS ki
-        |  FROM px WHERE n IS NOT NULL)
-        |SELECT p.k AS event_type, p.bucket, CAST(COALESCE(p.n, 0) AS BIGINT) AS n,
-        |  CASE WHEN p.n IS NOT NULL THEN p.dv
-        |       WHEN p.kl >= 1 AND p.kr >= 1 THEN
-        |         kp.dv + (kq.dv - kp.dv) * CAST(p.pos - kp.pos AS DOUBLE)
-        |           / CAST(kq.pos - kp.pos AS DOUBLE)
-        |  END AS value,
-        |  CASE WHEN p.n IS NOT NULL THEN 'observed'
-        |       WHEN p.kl >= 1 AND p.kr >= 1 THEN 'interpolated'
-        |       ELSE 'edge' END AS src
-        |FROM px p
-        |LEFT JOIN kn kp ON p.k = kp.k AND p.kl = kp.ki
-        |LEFT JOIN kn kq ON p.k = kq.k AND p.kl + 1 = kq.ki
-        |ORDER BY 1, 2""".stripMargin,
-    // Effect size: exact decimal arm moments, pooled-SD fixed dag.
-    "q_effect_size" ->
-      """WITH m AS (SELECT
-        |  CAST(SUM(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |  CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |  CAST(CAST(SUM(CASE WHEN l_returnflag = 'A' THEN CAST(l_extendedprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS s1,
-        |  CAST(CAST(SUM(CASE WHEN l_returnflag = 'R' THEN CAST(l_extendedprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS s2,
-        |  CAST(CAST(SUM(CASE WHEN l_returnflag = 'A' THEN CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS q1,
-        |  CAST(CAST(SUM(CASE WHEN l_returnflag = 'R' THEN CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS q2
-        |  FROM lineitem),
-        |w AS (SELECT n1, n2,
-        |  s1 / CAST(n1 AS DOUBLE) AS mean1, s2 / CAST(n2 AS DOUBLE) AS mean2,
-        |  sqrt(((CAST(n1 AS DOUBLE) * q1 - s1 * s1) / CAST(n1 AS DOUBLE)
-        |    + (CAST(n2 AS DOUBLE) * q2 - s2 * s2) / CAST(n2 AS DOUBLE))
-        |    / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0)) AS pooled_sd
-        |  FROM m),
-        |e AS (SELECT *, (mean1 - mean2) / pooled_sd AS cohens_d FROM w)
-        |SELECT n1, n2, mean1, mean2, pooled_sd, cohens_d,
-        |  cohens_d * (1.0 - 3.0 / (4.0 * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE)) - 9.0)) AS hedges_g
-        |FROM e""".stripMargin,
-    // BH FDR: distributed rank replay, broadcast m and k*.
-    "q_fdr" ->
-      """WITH rws AS (SELECT event_id AS id,
-        |  (CASE WHEN event_id % 23 = 0 THEN 0.001 ELSE 1.0 END) *
-        |  (CAST((event_id * 2654435761) % 1000000 AS DOUBLE) / 1000000.0) AS p
-        |  FROM events),
-        |pp AS (SELECT p, count(*) AS c FROM rws GROUP BY 1),
-        |offs AS (SELECT p, CAST(COALESCE(SUM(c) OVER (ORDER BY p ASC
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off FROM pp),
-        |tot AS (SELECT count(*) AS m FROM rws),
-        |rk AS (SELECT r.id, r.p,
-        |  o.off + ROW_NUMBER() OVER (PARTITION BY r.p ORDER BY r.id) AS rank
-        |  FROM rws r JOIN offs o ON r.p = o.p),
-        |th AS (SELECT rk.*, CAST(rank AS DOUBLE) * 0.1 / CAST(tot.m AS DOUBLE) AS bh_threshold
-        |  FROM rk CROSS JOIN tot),
-        |ks AS (SELECT MAX(CASE WHEN p <= bh_threshold THEN rank END) AS kk FROM th)
-        |SELECT id, p, rank, bh_threshold,
-        |  (ks.kk IS NOT NULL AND rank <= ks.kk) AS significant
-        |FROM th CROSS JOIN ks ORDER BY id""".stripMargin,
-    // Rolling correlation: exact decimal window moments; product
-    // operands cast (19,2) for DuckDB's int128 path (the bollinger
-    // lesson) — Spark multiplies the same exact values at (12,2).
-    "q_rolling_corr" ->
-      """WITH a AS (SELECT l_returnflag AS k, date_trunc('day', l_shipdate) AS dy,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DECIMAL(12,2)) AS x,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DECIMAL(12,2)) AS y
-        |  FROM lineitem GROUP BY 1, 2),
-        |w AS (SELECT k, dy, COUNT(*) OVER win AS n,
-        |  SUM(x) OVER win AS sx, SUM(y) OVER win AS sy,
-        |  SUM(CAST(x AS DECIMAL(19,2)) * CAST(y AS DECIMAL(19,2))) OVER win AS sxy,
-        |  SUM(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2))) OVER win AS sxx,
-        |  SUM(CAST(y AS DECIMAL(19,2)) * CAST(y AS DECIMAL(19,2))) OVER win AS syy
-        |  FROM a WINDOW win AS (PARTITION BY k ORDER BY dy
-        |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)),
-        |c AS (SELECT k, dy, n,
-        |  CAST(n AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(sx AS VARCHAR) AS DOUBLE) * CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS cov,
-        |  CAST(n AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(sx AS VARCHAR) AS DOUBLE) * CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS vx,
-        |  CAST(n AS DOUBLE) * CAST(CAST(syy AS VARCHAR) AS DOUBLE)
-        |    - CAST(CAST(sy AS VARCHAR) AS DOUBLE) * CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS vy
-        |  FROM w)
-        |SELECT k AS l_returnflag, strftime(dy, '%Y-%m-%d') AS day,
-        |  CAST(n AS BIGINT) AS n_window,
-        |  CASE WHEN n >= 2 AND vx > 0.0 AND vy > 0.0
-        |    THEN cov / (sqrt(vx) * sqrt(vy)) END AS rolling_corr
-        |FROM c ORDER BY 1, 2""".stripMargin,
-    // Cross-correlation: one lag-shifted join per lag, corrExact dag.
-    "q_cross_corr" ->
-      """WITH a AS (SELECT l_returnflag AS k, date_trunc('day', l_shipdate) AS dy,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DECIMAL(12,2)) AS x,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DECIMAL(12,2)) AS y
-        |  FROM lineitem GROUP BY 1, 2),
-        |l AS (SELECT unnest(generate_series(-3, 3)) AS lag),
-        |j AS (SELECT a.k, l.lag, a.x, b.y
-        |  FROM a CROSS JOIN l
-        |  JOIN a b ON a.k = b.k AND b.dy = a.dy + CAST(l.lag AS INT) * INTERVAL 1 DAY),
-        |m AS (SELECT k, lag, count(*) AS n,
-        |  CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(x AS DECIMAL(19,2)) * CAST(y AS DECIMAL(19,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(y AS DECIMAL(19,2)) * CAST(y AS DECIMAL(19,2))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM j GROUP BY 1, 2),
-        |c AS (SELECT k, lag, n,
-        |  CAST(n AS DOUBLE) * sxy - sx * sy AS cov,
-        |  CAST(n AS DOUBLE) * sxx - sx * sx AS vx,
-        |  CAST(n AS DOUBLE) * syy - sy * sy AS vy FROM m)
-        |SELECT k AS l_returnflag, CAST(lag AS BIGINT) AS lag, n,
-        |  CASE WHEN n >= 2 AND vx > 0.0 AND vy > 0.0
-        |    THEN cov / (sqrt(vx) * sqrt(vy)) END AS corr
-        |FROM c ORDER BY 1, 2""".stripMargin,
-    // Weighted OLS: per-row decimal products (int64-small), fixed dag.
-    "q_weighted_linreg" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS w,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS swx,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS swy,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS swxy,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS swxx
-        |  FROM lineitem GROUP BY 1),
-        |sl AS (SELECT *, (w * swxy - swx * swy) / (w * swxx - swx * swx) AS slope FROM m)
-        |SELECT l_returnflag, n, w AS w_sum, slope,
-        |  (swy - slope * swx) / w AS intercept
-        |FROM sl ORDER BY l_returnflag""".stripMargin,
-    // 2-D histogram: the q_histogram bucket rule per axis, NULL cell
-    // for rows with either coordinate NULL.
-    "q_histogram_2d" ->
-      """WITH b AS (SELECT
-        |  CASE WHEN l_quantity IS NULL OR l_extendedprice IS NULL THEN NULL
-        |       WHEN l_quantity < 5.0 THEN -1
-        |       WHEN l_quantity >= 45.0 THEN 8
-        |       ELSE CAST(floor((l_quantity - 5.0) * 8 / (45.0 - 5.0)) AS BIGINT) END AS bx,
-        |  CASE WHEN l_quantity IS NULL OR l_extendedprice IS NULL THEN NULL
-        |       WHEN l_extendedprice < 2000.0 THEN -1
-        |       WHEN l_extendedprice >= 80000.0 THEN 8
-        |       ELSE CAST(floor((l_extendedprice - 2000.0) * 8 / (80000.0 - 2000.0)) AS BIGINT) END AS by
-        |  FROM lineitem)
-        |SELECT CAST(bx AS BIGINT) AS bx, CAST(by AS BIGINT) AS by, count(*) AS n
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Spearman: doubled tie-midranks per variable, exact rank moments.
-    "q_spearman" ->
-      """WITH b AS (SELECT l_returnflag AS g, l_quantity AS xv, l_extendedprice AS yv
-        |  FROM lineitem WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-        |cx AS (SELECT g, xv, count(*) AS c FROM b GROUP BY 1, 2),
-        |rx AS (SELECT g, xv, 2 * CAST(COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY xv
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) + c + 1 AS rx2 FROM cx),
-        |cy AS (SELECT g, yv, count(*) AS c FROM b GROUP BY 1, 2),
-        |ry AS (SELECT g, yv, 2 * CAST(COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY yv
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) + c + 1 AS ry2 FROM cy),
-        |j AS (SELECT b.g, rx.rx2, ry.ry2 FROM b
-        |  JOIN rx ON b.g = rx.g AND b.xv = rx.xv
-        |  JOIN ry ON b.g = ry.g AND b.yv = ry.yv),
-        |m AS (SELECT g, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(rx2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(ry2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(rx2 AS DECIMAL(19,0)) * CAST(ry2 AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(rx2 AS DECIMAL(19,0)) * CAST(rx2 AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(ry2 AS DECIMAL(19,0)) * CAST(ry2 AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM j GROUP BY g)
-        |SELECT g AS l_returnflag, n,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |  (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) *
-        |   sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS spearman_rho
-        |FROM m ORDER BY 1""".stripMargin,
-    // Partial correlation: three Pearson r's materialized, identity dag.
-    "q_partial_corr" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sz,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS szz,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxz,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syz
-        |  FROM lineitem GROUP BY 1),
-        |r AS (SELECT l_returnflag, n,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS r_xy,
-        |  (CAST(n AS DOUBLE) * sxz - sx * sz) / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx) * sqrt(CAST(n AS DOUBLE) * szz - sz * sz)) AS r_xz,
-        |  (CAST(n AS DOUBLE) * syz - sy * sz) / (sqrt(CAST(n AS DOUBLE) * syy - sy * sy) * sqrt(CAST(n AS DOUBLE) * szz - sz * sz)) AS r_yz
-        |  FROM m)
-        |SELECT l_returnflag, n, r_xy, r_xz, r_yz,
-        |  (r_xy - r_xz * r_yz) / sqrt((1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz)) AS partial_r
-        |FROM r ORDER BY 1""".stripMargin,
-    // CUPED: per-user conditional decimal sums, global theta dag,
-    // per-arm adjusted means via linearity.
-    "q_cuped" ->
-      """WITH per AS (SELECT user_id AS u,
-        |  CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |    THEN CAST(value AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END) AS DECIMAL(18,6)) AS pre,
-        |  CAST(SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-        |    THEN CAST(value AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END) AS DECIMAL(18,6)) AS post
-        |  FROM events GROUP BY 1),
-        |g AS (SELECT count(*) AS n,
-        |  CAST(CAST(SUM(pre) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(post) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(pre AS DECIMAL(19,6)) * CAST(post AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(pre AS DECIMAL(19,6)) * CAST(pre AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(post AS DECIMAL(19,6)) * CAST(post AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM per),
-        |gl AS (SELECT n, sx / CAST(n AS DOUBLE) AS xbar,
-        |  (CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * sxx - sx * sx) AS theta,
-        |  ((CAST(n AS DOUBLE) * sxy - sx * sy) * (CAST(n AS DOUBLE) * sxy - sx * sy)) /
-        |  ((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy)) AS var_reduction
-        |  FROM g),
-        |arms AS (SELECT u % 2 AS arm, count(*) AS n_users,
-        |  CAST(CAST(SUM(pre) AS VARCHAR) AS DOUBLE) AS asx,
-        |  CAST(CAST(SUM(post) AS VARCHAR) AS DOUBLE) AS asy
-        |  FROM per GROUP BY 1)
-        |SELECT CAST(arm AS BIGINT) AS arm, n_users,
-        |  asy / CAST(n_users AS DOUBLE) AS mean_post,
-        |  (asy / CAST(n_users AS DOUBLE)) - theta *
-        |    ((asx / CAST(n_users AS DOUBLE)) - xbar) AS mean_adjusted,
-        |  theta, var_reduction
-        |FROM arms CROSS JOIN gl ORDER BY arm""".stripMargin,
-    // Cronbach's alpha: item + total moments, population variances.
-    "q_cronbach" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s0,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS q0,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s1,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS q1,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s2,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(12,2)) * CAST(l_tax AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS q2,
-        |  CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) + CAST(l_discount AS DECIMAL(12,2)) + CAST(l_tax AS DECIMAL(12,2)) AS DECIMAL(16,2))) AS VARCHAR) AS DOUBLE) AS st,
-        |  CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) + CAST(l_discount AS DECIMAL(12,2)) + CAST(l_tax AS DECIMAL(12,2)) AS DECIMAL(16,2)) * CAST(CAST(l_quantity AS DECIMAL(12,2)) + CAST(l_discount AS DECIMAL(12,2)) + CAST(l_tax AS DECIMAL(12,2)) AS DECIMAL(16,2))) AS VARCHAR) AS DOUBLE) AS qt
-        |  FROM lineitem GROUP BY 1),
-        |v AS (SELECT l_returnflag, n,
-        |  (CAST(n AS DOUBLE) * q0 - s0 * s0) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-        |  + (CAST(n AS DOUBLE) * q1 - s1 * s1) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-        |  + (CAST(n AS DOUBLE) * q2 - s2 * s2) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS sum_item_vars,
-        |  (CAST(n AS DOUBLE) * qt - st * st) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS var_total
-        |  FROM m)
-        |SELECT l_returnflag, n, CAST(3 AS BIGINT) AS k, sum_item_vars, var_total,
-        |  (3.0 / 2.0) * (1.0 - sum_item_vars / var_total) AS alpha
-        |FROM v ORDER BY l_returnflag""".stripMargin,
-    // Mahalanobis outliers: q_linreg moments, closed 2x2 inverse dag.
-    "q_mahalanobis" ->
-      """WITH m AS (SELECT l_returnflag, count(*) AS n,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM lineitem GROUP BY 1),
-        |st AS (SELECT l_returnflag, n,
-        |  sx / CAST(n AS DOUBLE) AS mx, sy / CAST(n AS DOUBLE) AS my,
-        |  CAST(n AS DOUBLE) * sxx - sx * sx AS cxx,
-        |  CAST(n AS DOUBLE) * syy - sy * sy AS cyy,
-        |  CAST(n AS DOUBLE) * sxy - sx * sy AS cxy FROM m),
-        |sc AS (SELECT l.l_returnflag, l.l_orderkey, l.l_linenumber,
-        |  l.l_quantity, l.l_extendedprice,
-        |  round(CAST(st.n AS DOUBLE) * CAST(st.n AS DOUBLE) *
-        |    (st.cyy * (CAST(l.l_quantity AS DOUBLE) - st.mx) * (CAST(l.l_quantity AS DOUBLE) - st.mx)
-        |     - 2.0 * st.cxy * (CAST(l.l_quantity AS DOUBLE) - st.mx) * (CAST(l.l_extendedprice AS DOUBLE) - st.my)
-        |     + st.cxx * (CAST(l.l_extendedprice AS DOUBLE) - st.my) * (CAST(l.l_extendedprice AS DOUBLE) - st.my))
-        |    / (st.cxx * st.cyy - st.cxy * st.cxy), 6) AS md2
-        |  FROM lineitem l JOIN st ON l.l_returnflag = st.l_returnflag)
-        |SELECT * FROM sc WHERE md2 > 5.5
-        |ORDER BY l_returnflag, l_orderkey, l_linenumber""".stripMargin,
-    // Zipf fit: vocabulary ranks, 6-dp lns, linearFit dag; products via
-    // (19,6) operands (the int64-path convention).
-    "q_zipf" ->
-      """WITH wds AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS w FROM documents),
-        |f AS (SELECT w, count(*) AS f FROM wds GROUP BY w),
-        |r AS (SELECT f, ROW_NUMBER() OVER (ORDER BY f DESC, w ASC) AS rk FROM f),
-        |t AS (SELECT f,
-        |  CAST(round(ln(CAST(rk AS DOUBLE)), 6) AS DECIMAL(12,6)) AS x,
-        |  CAST(round(ln(CAST(f AS DOUBLE)), 6) AS DECIMAL(12,6)) AS y FROM r),
-        |m AS (SELECT count(*) AS n, CAST(SUM(f) AS BIGINT) AS ntok,
-        |  CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(y AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM t),
-        |sl AS (SELECT *, (CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |  (CAST(n AS DOUBLE) * sxx - sx * sx) AS slope FROM m)
-        |SELECT n AS n_words, ntok AS n_tokens, slope,
-        |  (sy - slope * sx) / CAST(n AS DOUBLE) AS intercept,
-        |  ((CAST(n AS DOUBLE) * sxy - sx * sy) * (CAST(n AS DOUBLE) * sxy - sx * sy)) /
-        |  ((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy)) AS r2,
-        |  -slope AS zipf_exponent
-        |FROM sl""".stripMargin,
-    // Seasonal-naive error floor: exact decimal errors, 6-dp terms,
-    // (19,2) square operands.
-    "q_forecast_eval" ->
-      """WITH a AS (SELECT o_orderpriority AS k,
-        |  date_trunc('day', o_orderdate) AS dy,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DECIMAL(12,2)) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |fc AS (SELECT k, dy, v,
-        |  lag(v, 7) OVER (PARTITION BY k ORDER BY dy) AS f FROM a),
-        |e AS (SELECT k, v, f, CAST(v - f AS DECIMAL(13,2)) AS err,
-        |  abs(CAST(v - f AS DECIMAL(13,2))) AS ae
-        |  FROM fc WHERE f IS NOT NULL),
-        |t AS (SELECT k, err, ae,
-        |  CASE WHEN abs(v) > 0 THEN CAST(round(
-        |    CAST(CAST(ae AS VARCHAR) AS DOUBLE) / CAST(CAST(abs(v) AS VARCHAR) AS DOUBLE), 6) AS DECIMAL(18,6)) END AS mt,
-        |  CASE WHEN abs(v) + abs(f) > 0 THEN CAST(round(
-        |    2.0 * CAST(CAST(ae AS VARCHAR) AS DOUBLE) / CAST(CAST(abs(v) + abs(f) AS VARCHAR) AS DOUBLE), 6) AS DECIMAL(18,6)) END AS st
-        |  FROM e),
-        |g AS (SELECT k, count(*) AS n_eval,
-        |  CAST(CAST(SUM(ae) AS VARCHAR) AS DOUBLE) AS sae,
-        |  CAST(CAST(SUM(CAST(err AS DECIMAL(19,2)) * CAST(err AS DECIMAL(19,2))) AS VARCHAR) AS DOUBLE) AS se2,
-        |  CAST(SUM(CASE WHEN mt IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nzd,
-        |  CAST(CAST(SUM(mt) AS VARCHAR) AS DOUBLE) AS smt, COUNT(mt) AS nmt,
-        |  CAST(CAST(SUM(st) AS VARCHAR) AS DOUBLE) AS sst, COUNT(st) AS nst
-        |  FROM t GROUP BY k)
-        |SELECT k AS o_orderpriority, n_eval,
-        |  sae / CAST(n_eval AS DOUBLE) AS mae,
-        |  sqrt(se2 / CAST(n_eval AS DOUBLE)) AS rmse,
-        |  smt / CAST(nmt AS DOUBLE) AS mape,
-        |  sst / CAST(nst AS DOUBLE) AS smape,
-        |  nzd AS n_zero_denom
-        |FROM g ORDER BY 1""".stripMargin,
-    // U-shaped attribution: 40/20/40 with the middle remainder to the
-    // earliest middle; degenerate 1- and 2-touch paths pinned.
-    "q_attribution_position" ->
-      """WITH conv AS (SELECT user_id, MIN(ts) AS cts FROM events
-        |  WHERE event_type = 'purchase' GROUP BY user_id),
-        |touch AS (SELECT e.user_id, e.event_id, e.event_type,
-        |    CAST(COUNT(*) OVER (PARTITION BY e.user_id) AS BIGINT) AS n,
-        |    row_number() OVER (PARTITION BY e.user_id
-        |      ORDER BY e.ts, e.event_id) AS rn
-        |  FROM events e JOIN conv USING (user_id)
-        |  WHERE e.event_type IN ('view', 'click') AND e.ts < conv.cts),
-        |credit AS (SELECT event_type,
-        |  CASE WHEN n = 1 THEN 1000000
-        |       WHEN n = 2 THEN 500000
-        |       WHEN rn = 1 OR rn = n THEN 400000
-        |       ELSE 200000 // (n - 2) +
-        |         CASE WHEN rn = 2 THEN 200000 % (n - 2) ELSE 0 END
-        |  END AS c FROM touch)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_touches,
-        |  CAST(SUM(c) AS BIGINT) AS total_credit
-        |FROM credit GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // Time-decay attribution: exact power-of-two weights, floor shares,
-    // the ACCUMULATED remainder to the earliest touch.
-    "q_attribution_decay" ->
-      """WITH conv AS (SELECT user_id, MIN(ts) AS cts FROM events
-        |  WHERE event_type = 'purchase' GROUP BY user_id),
-        |touch AS (SELECT e.user_id, e.event_id, e.event_type,
-        |    (1::BIGINT << CAST(30 - least(
-        |      (epoch_us(conv.cts) - epoch_us(e.ts)) // 86400000000, 30) AS INTEGER)) AS w,
-        |    row_number() OVER (PARTITION BY e.user_id
-        |      ORDER BY e.ts, e.event_id) AS rn
-        |  FROM events e JOIN conv USING (user_id)
-        |  WHERE e.event_type IN ('view', 'click') AND e.ts < conv.cts),
-        |ws AS (SELECT *, CAST(SUM(w) OVER (PARTITION BY user_id) AS BIGINT) AS sw FROM touch),
-        |base AS (SELECT *, (1000000 * w) // sw AS b FROM ws),
-        |rem AS (SELECT *, 1000000 - CAST(SUM(b) OVER (PARTITION BY user_id) AS BIGINT) AS r FROM base)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_touches,
-        |  CAST(SUM(b + CASE WHEN rn = 1 THEN r ELSE 0 END) AS BIGINT) AS total_credit,
-        |  CAST(SUM(w) AS BIGINT) AS total_weight
-        |FROM rem GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // Graph summary: distinct directed edges, semi-join reciprocity,
-    // canonical undirected degrees, fixed-dag ratios.
-    "q_graph_summary" ->
-      """WITH raw AS (SELECT o_custkey % 97 AS a, o_orderkey % 97 AS b FROM orders),
-        |sl AS (SELECT count(*) AS self_loop_rows FROM raw WHERE a = b),
-        |dir AS (SELECT DISTINCT a, b FROM raw WHERE a <> b),
-        |rec AS (SELECT count(*) AS n_reciprocated FROM dir d
-        |  WHERE EXISTS (SELECT 1 FROM dir r WHERE r.a = d.b AND r.b = d.a)),
-        |und AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b FROM dir),
-        |sym AS (SELECT a FROM und UNION ALL SELECT b FROM und),
-        |dg AS (SELECT a, count(*) AS d FROM sym GROUP BY a),
-        |ds AS (SELECT count(*) AS n_nodes, MAX(d) AS max_degree FROM dg),
-        |c AS (SELECT (SELECT count(*) FROM dir) AS n_directed,
-        |  (SELECT n_reciprocated FROM rec) AS n_reciprocated,
-        |  (SELECT count(*) FROM und) AS n_undirected,
-        |  ds.n_nodes, ds.max_degree,
-        |  (SELECT self_loop_rows FROM sl) AS self_loop_rows FROM ds)
-        |SELECT n_nodes, CAST(n_directed AS BIGINT) AS n_directed,
-        |  CAST(n_undirected AS BIGINT) AS n_undirected,
-        |  CAST(n_reciprocated AS BIGINT) AS n_reciprocated,
-        |  CAST(self_loop_rows AS BIGINT) AS self_loop_rows, max_degree,
-        |  CAST(n_reciprocated AS DOUBLE) / CAST(n_directed AS DOUBLE) AS reciprocity,
-        |  2.0 * CAST(n_undirected AS DOUBLE) /
-        |    (CAST(n_nodes AS DOUBLE) * (CAST(n_nodes AS DOUBLE) - 1.0)) AS density,
-        |  2.0 * CAST(n_undirected AS DOUBLE) / CAST(n_nodes AS DOUBLE) AS mean_degree
-        |FROM c""".stripMargin,
-    // Subsequence DP: the two stacked prefix windows replayed.
-    "q_subseq_count" ->
-      """WITH o AS (SELECT user_id, ts, event_id, event_type,
-        |  CAST(COALESCE(SUM(CASE WHEN event_type = 'view' THEN 1 END)
-        |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS acnt
-        |  FROM events),
-        |p AS (SELECT *, CASE WHEN event_type = 'click' THEN acnt END AS ab FROM o),
-        |q AS (SELECT *, CAST(COALESCE(SUM(ab)
-        |  OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS abrun
-        |  FROM p)
-        |SELECT user_id, count(*) AS n_events,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN abrun ELSE 0 END) AS BIGINT)
-        |    AS subseq_count
-        |FROM q GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // Grid density anomalies: 8-neighbor stencil over the cell table.
-    "q_density_anomaly" ->
-      """WITH p AS (SELECT
-        |  ((doc_id % 2147483648) * 2654435761 % 2147483648) % 4000 AS x,
-        |  ((doc_id % 2147483648) * 2246822519 % 2147483648) % 4000 AS y FROM documents),
-        |cells AS (SELECT x // 250 AS cx, y // 250 AS cy, count(*) AS n
-        |  FROM p GROUP BY 1, 2),
-        |nb AS (SELECT c.cx + dx.d AS cx, c.cy + dy.d AS cy, c.n AS nn
-        |  FROM cells c,
-        |  (SELECT unnest([-1, 0, 1]) AS d) dx,
-        |  (SELECT unnest([-1, 0, 1]) AS d) dy
-        |  WHERE NOT (dx.d = 0 AND dy.d = 0)),
-        |ns AS (SELECT cx, cy, CAST(SUM(nn) AS BIGINT) AS nbhd FROM nb GROUP BY 1, 2),
-        |j AS (SELECT cells.cx, cells.cy, cells.n, COALESCE(ns.nbhd, 0) AS nbhd_sum
-        |  FROM cells LEFT JOIN ns ON cells.cx = ns.cx AND cells.cy = ns.cy),
-        |r AS (SELECT *, CASE WHEN nbhd_sum > 0 THEN
-        |  round(CAST(n AS DOUBLE) / (CAST(nbhd_sum AS DOUBLE) / 8.0), 6) END AS rel_density
-        |  FROM j)
-        |SELECT cx, cy, n, nbhd_sum, rel_density,
-        |  (rel_density IS NOT NULL AND (rel_density >= 2.0 OR rel_density <= 0.5)) AS anomaly
-        |FROM r ORDER BY cx, cy""".stripMargin,
-    // Seasonal anomalies: the decompose chain + per-key lower-median /
-    // MAD fences on the residual doubles.
-    "q_seasonal_anomaly" ->
-      """WITH a AS (SELECT o_orderpriority AS k,
-        |  date_trunc('day', o_orderdate) AS dy,
-        |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |t AS (SELECT k, dy, v,
-        |  COUNT(*) OVER win AS tn, SUM(v) OVER win AS ts
-        |  FROM a WINDOW win AS (PARTITION BY k ORDER BY dy
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |tr AS (SELECT k, dy, v,
-        |  CAST(CAST(ts AS VARCHAR) AS DOUBLE) / CAST(tn AS DOUBLE) AS trend
-        |  FROM t),
-        |de AS (SELECT *, CAST(round(CAST(CAST(v AS VARCHAR) AS DOUBLE) - trend, 6)
-        |    AS DECIMAL(18,6)) AS det,
-        |  CAST(dayofweek(dy) + 1 AS INTEGER) AS dow FROM tr),
-        |se AS (SELECT k, dow,
-        |  CAST(CAST(SUM(det) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS seasonal
-        |  FROM de GROUP BY 1, 2),
-        |res AS (SELECT de.k, de.dy, de.v, de.trend, se.seasonal,
-        |  CAST(CAST(de.det AS VARCHAR) AS DOUBLE) - se.seasonal AS residual
-        |  FROM de JOIN se ON de.k = se.k AND de.dow = se.dow),
-        |rc AS (SELECT k, residual, count(*) AS c FROM res GROUP BY 1, 2),
-        |rcum AS (SELECT k, residual, SUM(c) OVER (PARTITION BY k ORDER BY residual
-        |  ROWS UNBOUNDED PRECEDING) AS cum FROM rc),
-        |rtot AS (SELECT k, CAST(SUM(c) AS BIGINT) AS n FROM rc GROUP BY k),
-        |med AS (SELECT rcum.k, MIN(residual) AS med FROM rcum
-        |  JOIN rtot ON rcum.k = rtot.k WHERE cum >= (n + 1) // 2 GROUP BY rcum.k),
-        |ad AS (SELECT res.*, med.med, abs(res.residual - med.med) AS adev
-        |  FROM res JOIN med ON res.k = med.k),
-        |ac AS (SELECT k, adev, count(*) AS c FROM ad GROUP BY 1, 2),
-        |acum AS (SELECT k, adev, SUM(c) OVER (PARTITION BY k ORDER BY adev
-        |  ROWS UNBOUNDED PRECEDING) AS cum FROM ac),
-        |atot AS (SELECT k, CAST(SUM(c) AS BIGINT) AS n FROM ac GROUP BY k),
-        |mad AS (SELECT acum.k, MIN(adev) AS mad FROM acum
-        |  JOIN atot ON acum.k = atot.k WHERE cum >= (n + 1) // 2 GROUP BY acum.k)
-        |SELECT ad.k AS o_orderpriority, strftime(ad.dy, '%Y-%m-%d') AS day,
-        |  CAST(CAST(ad.v AS VARCHAR) AS DOUBLE) AS v, ad.trend, ad.seasonal,
-        |  ad.residual, ad.med, mad.mad,
-        |  (ad.adev > 3.0 * mad.mad) AS anomaly
-        |FROM ad JOIN mad ON ad.k = mad.k ORDER BY 1, 2""".stripMargin,
-    // Mann-Kendall: pairwise signs on the day table, tie-corrected z.
-    "q_mann_kendall" ->
-      """WITH a AS (SELECT o_orderpriority AS k,
-        |  date_trunc('day', o_orderdate) AS dy,
-        |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS v
-        |  FROM orders GROUP BY 1, 2),
-        |s AS (SELECT x.k, CAST(SUM(CASE WHEN y.v > x.v THEN 1
-        |    WHEN y.v < x.v THEN -1 ELSE 0 END) AS BIGINT) AS s
-        |  FROM a x JOIN a y ON x.k = y.k AND x.dy < y.dy GROUP BY x.k),
-        |t AS (SELECT k, v, count(*) AS t FROM a GROUP BY 1, 2),
-        |nt AS (SELECT k, CAST(SUM(t) AS BIGINT) AS n_days,
-        |  CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie FROM t GROUP BY k),
-        |z AS (SELECT s.k, nt.n_days, s.s,
-        |  round(CASE WHEN s.s > 0 THEN (CAST(s.s AS DOUBLE) - 1.0) /
-        |      sqrt((CAST(n_days AS DOUBLE) * (CAST(n_days AS DOUBLE) - 1.0) * (2.0 * CAST(n_days AS DOUBLE) + 5.0) - CAST(tie AS DOUBLE)) / 18.0)
-        |    WHEN s.s < 0 THEN (CAST(s.s AS DOUBLE) + 1.0) /
-        |      sqrt((CAST(n_days AS DOUBLE) * (CAST(n_days AS DOUBLE) - 1.0) * (2.0 * CAST(n_days AS DOUBLE) + 5.0) - CAST(tie AS DOUBLE)) / 18.0)
-        |    ELSE 0.0 END, 6) AS z
-        |  FROM s JOIN nt ON s.k = nt.k)
-        |SELECT k AS o_orderpriority, n_days, s, z,
-        |  CASE WHEN z > 1.96 THEN 'up' WHEN z < -1.96 THEN 'down'
-        |       ELSE 'none' END AS trend
-        |FROM z ORDER BY 1""".stripMargin,
-    // Kendall tau-b: cell-pair products + marginal tie terms.
-    "q_kendall" ->
-      """WITH b AS (SELECT l_returnflag AS g, l_quantity AS x, l_discount AS y
-        |  FROM lineitem WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL),
-        |cells AS (SELECT g, x, y, count(*) AS c FROM b GROUP BY 1, 2, 3),
-        |pr AS (SELECT l.g,
-        |  CAST(CAST(SUM(CASE WHEN (l.x < r.x AND l.y < r.y) OR (l.x > r.x AND l.y > r.y)
-        |    THEN CAST(l.c AS DECIMAL(19,0)) * CAST(r.c AS DECIMAL(19,0)) END) AS VARCHAR) AS DOUBLE) AS conc,
-        |  CAST(CAST(SUM(CASE WHEN (l.x < r.x AND l.y > r.y) OR (l.x > r.x AND l.y < r.y)
-        |    THEN CAST(l.c AS DECIMAL(19,0)) * CAST(r.c AS DECIMAL(19,0)) END) AS VARCHAR) AS DOUBLE) AS disc
-        |  FROM cells l JOIN cells r ON l.g = r.g
-        |    AND (l.x < r.x OR (l.x = r.x AND l.y < r.y))
-        |  GROUP BY l.g),
-        |tx AS (SELECT g, CAST(CAST(SUM(CAST((t * (t - 1)) // 2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS txx
-        |  FROM (SELECT g, x, count(*) AS t FROM b GROUP BY 1, 2) GROUP BY g),
-        |ty AS (SELECT g, CAST(CAST(SUM(CAST((t * (t - 1)) // 2 AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) AS tyy
-        |  FROM (SELECT g, y, count(*) AS t FROM b GROUP BY 1, 2) GROUP BY g),
-        |tot AS (SELECT g, count(*) AS n FROM b GROUP BY g)
-        |SELECT tot.g AS l_returnflag, tot.n,
-        |  COALESCE(pr.conc, 0.0) AS concordant,
-        |  COALESCE(pr.disc, 0.0) AS discordant,
-        |  (COALESCE(pr.conc, 0.0) - COALESCE(pr.disc, 0.0)) /
-        |  sqrt((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) / 2.0 - txx) *
-        |       (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) / 2.0 - tyy)) AS tau_b
-        |FROM tot LEFT JOIN pr ON tot.g = pr.g
-        |JOIN tx ON tot.g = tx.g JOIN ty ON tot.g = ty.g
-        |ORDER BY 1""".stripMargin,
-    // Chao1 + coverage from the frequency-of-frequencies.
-    "q_chao1" ->
-      """WITH t0 AS (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks FROM documents),
-        |wds AS (SELECT unnest(list_transform(range(1, len(toks) - 1),
-        |  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS w
-        |  FROM t0 WHERE len(toks) >= 3),
-        |c AS (SELECT w, count(*) AS c FROM wds GROUP BY w)
-        |SELECT CAST(SUM(c) AS BIGINT) AS n_tokens, count(*) AS n_distinct,
-        |  CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-        |  CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2,
-        |  round(CAST(count(*) AS DOUBLE) +
-        |    CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) *
-        |    (CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) - 1.0) /
-        |    (2.0 * (CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS DOUBLE) + 1.0)), 6) AS chao1,
-        |  round(1.0 - CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) /
-        |    CAST(SUM(c) AS DOUBLE), 6) AS coverage
-        |FROM c""".stripMargin,
-    // Good-Turing adjusted counts for r <= 5; gaps yield NULL r*.
-    "q_good_turing" ->
-      """WITH t0 AS (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks FROM documents),
-        |wds AS (SELECT unnest(list_transform(range(1, len(toks) - 1),
-        |  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS w
-        |  FROM t0 WHERE len(toks) >= 3),
-        |c AS (SELECT w, count(*) AS c FROM wds GROUP BY w),
-        |fof AS (SELECT c AS r, count(*) AS n_r FROM c GROUP BY c HAVING c <= 6),
-        |l AS (SELECT *, lead(r) OVER (ORDER BY r) AS nr,
-        |  lead(n_r) OVER (ORDER BY r) AS nn FROM fof)
-        |SELECT r, n_r,
-        |  CASE WHEN nr = r + 1 THEN round((CAST(r AS DOUBLE) + 1.0) *
-        |    CAST(nn AS DOUBLE) / CAST(n_r AS DOUBLE), 6) END AS r_star
-        |FROM l WHERE r <= 5 ORDER BY r""".stripMargin,
-    // Weibull plotting fit: Benard ranks at tied-block edges, zipf-style
-    // 6-dp lns, linearFit dag, (19,6) product operands.
-    "q_weibull" ->
-      """WITH b AS (SELECT l_returnflag AS g, l_extendedprice AS v FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_extendedprice > 0),
-        |pv AS (SELECT g, v, count(*) AS c FROM b GROUP BY 1, 2),
-        |tot AS (SELECT g, count(*) AS n FROM b GROUP BY g),
-        |cum AS (SELECT pv.g, pv.v, tot.n,
-        |  CAST(SUM(pv.c) OVER (PARTITION BY pv.g ORDER BY pv.v
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cm
-        |  FROM pv JOIN tot ON pv.g = tot.g),
-        |pts AS (SELECT g, n,
-        |  CAST(round(ln(CAST(v AS DOUBLE)), 6) AS DECIMAL(12,6)) AS x,
-        |  CAST(round(ln(-ln(1.0 - (CAST(cm AS DOUBLE) - 0.3) / (CAST(n AS DOUBLE) + 0.4))), 6) AS DECIMAL(12,6)) AS y
-        |  FROM cum),
-        |m AS (SELECT g, MAX(n) AS n, count(*) AS nd,
-        |  CAST(CAST(SUM(x) AS VARCHAR) AS DOUBLE) AS sx,
-        |  CAST(CAST(SUM(y) AS VARCHAR) AS DOUBLE) AS sy,
-        |  CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy,
-        |  CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-        |  CAST(CAST(SUM(CAST(y AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS syy
-        |  FROM pts GROUP BY g),
-        |sl AS (SELECT *, (CAST(nd AS DOUBLE) * sxy - sx * sy) /
-        |  (CAST(nd AS DOUBLE) * sxx - sx * sx) AS shape FROM m)
-        |SELECT g AS l_returnflag, n, nd AS n_distinct, shape,
-        |  exp(-((sy - shape * sx) / CAST(nd AS DOUBLE)) / shape) AS scale,
-        |  ((CAST(nd AS DOUBLE) * sxy - sx * sy) * (CAST(nd AS DOUBLE) * sxy - sx * sy)) /
-        |  ((CAST(nd AS DOUBLE) * sxx - sx * sx) * (CAST(nd AS DOUBLE) * syy - sy * sy)) AS r2
-        |FROM sl ORDER BY 1""".stripMargin,
-    // Decision stump: prefix class counts, weighted-Gini dag, earliest
-    // threshold on ties.
-    "q_best_split" ->
-      """WITH b AS (SELECT l_returnflag AS g, l_quantity AS x,
-        |  CASE WHEN l_extendedprice > 30000 THEN 1 ELSE 0 END AS y
-        |  FROM lineitem WHERE l_quantity IS NOT NULL),
-        |pv AS (SELECT g, x, count(*) AS c, CAST(SUM(y) AS BIGINT) AS p FROM b GROUP BY 1, 2),
-        |cum AS (SELECT *, CAST(SUM(c) OVER win AS BIGINT) AS nl,
-        |  CAST(SUM(p) OVER win AS BIGINT) AS pl
-        |  FROM pv WINDOW win AS (PARTITION BY g ORDER BY x ROWS UNBOUNDED PRECEDING)),
-        |tot AS (SELECT g, count(*) AS n, CAST(SUM(y) AS BIGINT) AS pos FROM b GROUP BY g),
-        |ca AS (SELECT cum.g, cum.x, cum.nl, cum.pl, tot.n, tot.pos,
-        |  (CAST(nl AS DOUBLE) * (1.0
-        |    - (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE)) * (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE))
-        |    - ((CAST(nl AS DOUBLE) - CAST(pl AS DOUBLE)) / CAST(nl AS DOUBLE)) * ((CAST(nl AS DOUBLE) - CAST(pl AS DOUBLE)) / CAST(nl AS DOUBLE)))
-        |   + CAST(n - nl AS DOUBLE) * (1.0
-        |    - (CAST(pos - pl AS DOUBLE) / CAST(n - nl AS DOUBLE)) * (CAST(pos - pl AS DOUBLE) / CAST(n - nl AS DOUBLE))
-        |    - ((CAST(n - nl AS DOUBLE) - CAST(pos - pl AS DOUBLE)) / CAST(n - nl AS DOUBLE)) * ((CAST(n - nl AS DOUBLE) - CAST(pos - pl AS DOUBLE)) / CAST(n - nl AS DOUBLE))))
-        |  / CAST(n AS DOUBLE) AS gw
-        |  FROM cum JOIN tot ON cum.g = tot.g WHERE cum.nl < tot.n),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY g ORDER BY gw ASC, x ASC) AS rn FROM ca)
-        |SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n, x AS threshold,
-        |  round(gw, 6) AS gini, nl AS n_left, pl AS pos_left,
-        |  CAST(n - nl AS BIGINT) AS n_right, CAST(pos - pl AS BIGINT) AS pos_right
-        |FROM r WHERE rn = 1 ORDER BY 1""".stripMargin,
-    // Tokenizer fertility: exact regexp-unit counts per language.
-    "q_fertility" ->
-      """SELECT lang, count(*) AS n_docs,
-        |  CAST(SUM(length(text)) AS BIGINT) AS n_chars,
-        |  CAST(SUM(len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))) AS BIGINT) AS n_words,
-        |  CAST(SUM(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))) AS BIGINT) AS n_units,
-        |  round(CAST(SUM(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))) AS DOUBLE) /
-        |    CAST(SUM(len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))) AS DOUBLE), 6) AS fertility,
-        |  round(CAST(SUM(length(text)) AS DOUBLE) /
-        |    CAST(SUM(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))) AS DOUBLE), 6) AS chars_per_unit
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    // Language-ID confusion: the q_text_langid scoring chain grouped.
-    "q_langid_eval" ->
-      """WITH sc AS (SELECT doc_id, lang, ' ' || lower(text) || ' ' AS p FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |(CASE WHEN contains(p, ' the ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' a ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' of ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' and ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' is ') THEN 1 ELSE 0 END) AS s_en,
-        |(CASE WHEN contains(p, ' der ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' und ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' die ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' das ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' ist ') THEN 1 ELSE 0 END) AS s_de,
-        |(CASE WHEN contains(p, ' el ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' de ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' y ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' es ') THEN 1 ELSE 0 END) AS s_es,
-        |(CASE WHEN contains(p, ' le ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' et ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' les ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' est ') THEN 1 ELSE 0 END) AS s_fr,
-        |(CASE WHEN contains(p, ' 的 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 是 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 了 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 在 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 我 ') THEN 1 ELSE 0 END) AS s_zh
-        |FROM sc),
-        |pred AS (SELECT lang AS label,
-        |CASE WHEN s_en = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_en > 0 THEN 'en'
-        |WHEN s_de = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_de > 0 THEN 'de'
-        |WHEN s_es = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_es > 0 THEN 'es'
-        |WHEN s_fr = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_fr > 0 THEN 'fr'
-        |WHEN s_zh = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_zh > 0 THEN 'zh'
-        |ELSE 'und' END AS pred FROM s),
-        |cells AS (SELECT label, pred, count(*) AS n FROM pred GROUP BY 1, 2),
-        |tot AS (SELECT label, CAST(SUM(n) AS BIGINT) AS label_total FROM cells GROUP BY label)
-        |SELECT cells.label, cells.pred, cells.n, tot.label_total,
-        |  round(CAST(cells.n AS DOUBLE) / CAST(tot.label_total AS DOUBLE), 6) AS share
-        |FROM cells JOIN tot ON cells.label = tot.label
-        |ORDER BY 1, 2""".stripMargin,
-    // Label centroids: exact integer sums, FLOOR-divided (the kmeans
-    // oracle's pmod form).
-    "q_label_centroids" ->
-      """WITH q AS (SELECT label, CAST(i AS INTEGER) AS dim,
-        |  CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000) AS BIGINT) AS x
-        |  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) gs),
-        |g AS (SELECT label, dim, CAST(SUM(x) AS BIGINT) AS vec_sum, count(*) AS n
-        |  FROM q GROUP BY 1, 2)
-        |SELECT label, dim, vec_sum, n,
-        |  CAST((vec_sum - (((vec_sum % n) + n) % n)) // n AS BIGINT) AS centroid
-        |FROM g ORDER BY label, dim""".stripMargin,
-    // Embedding drift: cosine of the halves' exact sum vectors.
-    "q_embedding_drift" ->
-      """WITH q AS (SELECT label, vec_id % 2 AS h, CAST(i AS INTEGER) AS dim,
-        |  CAST(floor(CAST(embedding[i + 1] AS DOUBLE) * 1000) AS BIGINT) AS x
-        |  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) gs),
-        |s AS (SELECT label, dim,
-        |  CAST(SUM(CASE WHEN h = 0 THEN x ELSE 0 END) AS BIGINT) AS a,
-        |  CAST(SUM(CASE WHEN h <> 0 THEN x ELSE 0 END) AS BIGINT) AS b,
-        |  CAST(SUM(CASE WHEN h = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |  CAST(SUM(CASE WHEN h <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nb
-        |  FROM q GROUP BY 1, 2),
-        |f AS (SELECT label, MAX(na) AS n_a, MAX(nb) AS n_b,
-        |  CAST(CAST(SUM(CAST(a AS DECIMAL(19,0)) * CAST(b AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS dt,
-        |  CAST(CAST(SUM(CAST(a AS DECIMAL(19,0)) * CAST(a AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS aa,
-        |  CAST(CAST(SUM(CAST(b AS DECIMAL(19,0)) * CAST(b AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS bb
-        |  FROM s GROUP BY label)
-        |SELECT label, n_a, n_b,
-        |  round(dt / (sqrt(aa) * sqrt(bb)), 6) AS cosine_drift
-        |FROM f ORDER BY label""".stripMargin,
-    // Cohen's kappa: the langid prediction chain + the diagonal
-    // row-times-column identity for pe.
-    "q_kappa" ->
-      """WITH sc AS (SELECT doc_id, lang, ' ' || lower(text) || ' ' AS p FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |(CASE WHEN contains(p, ' the ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' a ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' of ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' and ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' is ') THEN 1 ELSE 0 END) AS s_en,
-        |(CASE WHEN contains(p, ' der ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' und ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' die ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' das ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' ist ') THEN 1 ELSE 0 END) AS s_de,
-        |(CASE WHEN contains(p, ' el ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' de ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' y ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' es ') THEN 1 ELSE 0 END) AS s_es,
-        |(CASE WHEN contains(p, ' le ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' et ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' les ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' est ') THEN 1 ELSE 0 END) AS s_fr,
-        |(CASE WHEN contains(p, ' 的 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 是 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 了 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 在 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 我 ') THEN 1 ELSE 0 END) AS s_zh
-        |FROM sc),
-        |pr AS (SELECT
-        |CASE WHEN s_en = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_en > 0 THEN 'en'
-        |WHEN s_de = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_de > 0 THEN 'de'
-        |WHEN s_es = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_es > 0 THEN 'es'
-        |WHEN s_fr = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_fr > 0 THEN 'fr'
-        |WHEN s_zh = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_zh > 0 THEN 'zh'
-        |ELSE 'und' END AS a, lang AS b FROM s),
-        |cells AS (SELECT a, b, count(*) AS c FROM pr GROUP BY 1, 2),
-        |pa AS (SELECT a AS k, CAST(SUM(c) AS BIGINT) AS rw FROM cells GROUP BY 1),
-        |pb AS (SELECT b AS k, CAST(SUM(c) AS BIGINT) AS cl FROM cells GROUP BY 1),
-        |px AS (SELECT CAST(CAST(SUM(CAST(COALESCE(rw, 0) AS DECIMAL(19,0)) * CAST(COALESCE(cl, 0) AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS pexn
-        |  FROM pa FULL OUTER JOIN pb USING (k)),
-        |f AS (SELECT CAST(SUM(c) AS BIGINT) AS n,
-        |  CAST(SUM(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT) AS diag
-        |  FROM cells),
-        |g AS (SELECT n, CAST(diag AS DOUBLE) / CAST(n AS DOUBLE) AS po,
-        |  pexn / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS pe FROM f, px)
-        |SELECT n, po, pe, (po - pe) / (1.0 - pe) AS kappa FROM g""".stripMargin,
-    // Cross-source dup matrix over the ngram near-dup pair stream.
-    "q_dup_matrix" ->
-      s"""WITH $NgramPairsCte,
-        |src AS (SELECT doc_id, source FROM documents),
-        |m AS (SELECT least(a.source, b.source) AS source_a,
-        |  greatest(a.source, b.source) AS source_b
-        |  FROM jp JOIN src a ON jp.id1 = a.doc_id
-        |  JOIN src b ON jp.id2 = b.doc_id)
-        |SELECT source_a, source_b, count(*) AS dup_pairs
-        |FROM m GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Wilson interval: exact counts, fixed dag (Spark dayofweek = DuckDB
-    // dayofweek + 1, the seasonal-decompose convention).
-    "q_wilson" ->
-      """WITH b AS (SELECT CAST(dayofweek(ts) + 1 AS INTEGER) AS dow,
-        |  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y FROM events),
-        |m AS (SELECT dow, count(*) AS n, CAST(SUM(y) AS BIGINT) AS successes FROM b GROUP BY dow),
-        |c AS (SELECT dow, n, successes,
-        |  CAST(successes AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |  3.8416 AS z2, 1.96 AS z FROM m),
-        |w AS (SELECT dow, n, successes, p,
-        |  (p + z2 / (2.0 * CAST(n AS DOUBLE))) / (1.0 + z2 / CAST(n AS DOUBLE)) AS center,
-        |  (z * sqrt(p * (1.0 - p) / CAST(n AS DOUBLE) + z2 / (4.0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))) / (1.0 + z2 / CAST(n AS DOUBLE)) AS half
-        |  FROM c)
-        |SELECT dow, n, successes, round(p, 6) AS rate,
-        |  round(center - half, 6) AS wilson_lo,
-        |  round(center + half, 6) AS wilson_hi
-        |FROM w ORDER BY dow""".stripMargin,
-    // Top-k stability: per-half TakeOrdered replayed as ROW_NUMBER.
-    "q_topk_stability" ->
-      """WITH per AS (SELECT l_orderkey % 2 AS h, l_partkey AS k,
-        |  SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS v
-        |  FROM lineitem GROUP BY 1, 2),
-        |r AS (SELECT h, k, ROW_NUMBER() OVER (PARTITION BY h ORDER BY v DESC, k ASC) AS rn FROM per),
-        |t0 AS (SELECT k FROM r WHERE h = 0 AND rn <= 20),
-        |t1 AS (SELECT k FROM r WHERE h = 1 AND rn <= 20),
-        |c AS (SELECT count(*) AS n_common FROM t0 JOIN t1 USING (k))
-        |SELECT CAST(20 AS BIGINT) AS k, n_common,
-        |  round(CAST(n_common AS DOUBLE) / (40.0 - CAST(n_common AS DOUBLE)), 6) AS jaccard
-        |FROM c""".stripMargin,
-    // Macro P/R/F1: confusion marginals + 6-dp-rounded class terms.
-    "q_macro_f1" ->
-      """WITH sc AS (SELECT doc_id, lang, ' ' || lower(text) || ' ' AS p FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |(CASE WHEN contains(p, ' the ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' a ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' of ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' and ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' is ') THEN 1 ELSE 0 END) AS s_en,
-        |(CASE WHEN contains(p, ' der ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' und ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' die ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' das ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' ist ') THEN 1 ELSE 0 END) AS s_de,
-        |(CASE WHEN contains(p, ' el ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' de ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' y ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' es ') THEN 1 ELSE 0 END) AS s_es,
-        |(CASE WHEN contains(p, ' le ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' la ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' et ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' les ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' est ') THEN 1 ELSE 0 END) AS s_fr,
-        |(CASE WHEN contains(p, ' 的 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 是 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 了 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 在 ') THEN 1 ELSE 0 END + CASE WHEN contains(p, ' 我 ') THEN 1 ELSE 0 END) AS s_zh
-        |FROM sc),
-        |pr AS (SELECT
-        |CASE WHEN s_en = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_en > 0 THEN 'en'
-        |WHEN s_de = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_de > 0 THEN 'de'
-        |WHEN s_es = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_es > 0 THEN 'es'
-        |WHEN s_fr = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_fr > 0 THEN 'fr'
-        |WHEN s_zh = greatest(s_en, s_de, s_es, s_fr, s_zh) AND s_zh > 0 THEN 'zh'
-        |ELSE 'und' END AS pd, lang AS tr FROM s),
-        |cells AS (SELECT pd, tr, count(*) AS c FROM pr GROUP BY 1, 2),
-        |pt AS (SELECT tr AS cls, CAST(SUM(c) AS BIGINT) AS row_,
-        |  CAST(SUM(CASE WHEN pd = tr THEN c ELSE 0 END) AS BIGINT) AS diag
-        |  FROM cells GROUP BY tr),
-        |pp AS (SELECT pd AS cls, CAST(SUM(c) AS BIGINT) AS col_ FROM cells GROUP BY pd),
-        |k AS (SELECT pt.cls, row_, diag, pp.col_,
-        |  CASE WHEN pp.col_ > 0 THEN CAST(diag AS DOUBLE) / CAST(pp.col_ AS DOUBLE) END AS prec,
-        |  CAST(diag AS DOUBLE) / CAST(row_ AS DOUBLE) AS rec
-        |  FROM pt LEFT JOIN pp ON pt.cls = pp.cls),
-        |k2 AS (SELECT *, CASE WHEN prec IS NOT NULL AND prec + rec > 0
-        |  THEN 2.0 * prec * rec / (prec + rec) ELSE 0.0 END AS f1 FROM k),
-        |f AS (SELECT count(*) AS n_classes, CAST(SUM(row_) AS BIGINT) AS n,
-        |  CAST(SUM(diag) AS BIGINT) AS ok,
-        |  SUM(CAST(round(COALESCE(prec, 0.0), 6) AS DECIMAL(18,6))) AS sp,
-        |  SUM(CAST(round(rec, 6) AS DECIMAL(18,6))) AS sr,
-        |  SUM(CAST(round(f1, 6) AS DECIMAL(18,6))) AS sf FROM k2)
-        |SELECT n_classes, CAST(ok AS DOUBLE) / CAST(n AS DOUBLE) AS accuracy,
-        |  CAST(CAST(sp AS VARCHAR) AS DOUBLE) / CAST(n_classes AS DOUBLE) AS macro_p,
-        |  CAST(CAST(sr AS VARCHAR) AS DOUBLE) / CAST(n_classes AS DOUBLE) AS macro_r,
-        |  CAST(CAST(sf AS VARCHAR) AS DOUBLE) / CAST(n_classes AS DOUBLE) AS macro_f1
-        |FROM f""".stripMargin,
-    // SRM: k*sum(o^2)/n - n closed form + critical-value lookup.
-    "q_srm" ->
-      """WITH a AS (SELECT user_id % 3 AS arm FROM events),
-        |c AS (SELECT arm, count(*) AS c FROM a GROUP BY arm),
-        |f AS (SELECT CAST(SUM(c) AS BIGINT) AS n, count(*) AS k,
-        |  CAST(CAST(SUM(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS ss FROM c)
-        |SELECT n, k,
-        |  round(CAST(k AS DOUBLE) * ss / CAST(n AS DOUBLE) - CAST(n AS DOUBLE), 6) AS chi2,
-        |  round(CAST(k AS DOUBLE) * ss / CAST(n AS DOUBLE) - CAST(n AS DOUBLE), 6) >
-        |    (CASE k - 1 WHEN 1 THEN 3.841 WHEN 2 THEN 5.991 WHEN 3 THEN 7.815
-        |      WHEN 4 THEN 9.488 WHEN 5 THEN 11.070 END) AS srm_alarm
-        |FROM f""".stripMargin,
-    // Lorenz deciles: distributed ranks, exact decimal cumulative sums.
-    "q_lorenz" ->
-      """WITH per AS (SELECT o_custkey AS k,
-        |  SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS v FROM orders GROUP BY 1),
-        |pv AS (SELECT v, count(*) AS c FROM per GROUP BY v),
-        |offs AS (SELECT v, CAST(COALESCE(SUM(c) OVER (ORDER BY v ASC
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off FROM pv),
-        |tot AS (SELECT count(*) AS n, CAST(SUM(v) AS DECIMAL(28,2)) AS tv FROM per),
-        |rk AS (SELECT per.k, per.v,
-        |  offs.off + ROW_NUMBER() OVER (PARTITION BY per.v ORDER BY per.k) AS r
-        |  FROM per JOIN offs ON per.v = offs.v),
-        |b AS (SELECT ((r - 1) * 10) // tot.n AS bin, v FROM rk CROSS JOIN tot),
-        |pb AS (SELECT bin, count(*) AS bc, CAST(SUM(v) AS DECIMAL(28,2)) AS bv
-        |  FROM b GROUP BY bin),
-        |cm AS (SELECT *, CAST(SUM(bc) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ce,
-        |  CAST(SUM(bv) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS DECIMAL(28,2)) AS cv FROM pb)
-        |SELECT CAST(bin AS BIGINT) AS bin, ce AS cum_entities,
-        |  CAST(CAST(cv AS VARCHAR) AS DOUBLE) AS cum_value,
-        |  CAST(ce AS DOUBLE) / CAST(tot.n AS DOUBLE) AS entity_share,
-        |  CAST(CAST(cv AS VARCHAR) AS DOUBLE) / CAST(CAST(tot.tv AS VARCHAR) AS DOUBLE) AS value_share
-        |FROM cm CROSS JOIN tot ORDER BY bin""".stripMargin,
-    // Cohort LTV: exact decimal period + cumulative revenue per cohort.
-    "q_cohort_ltv" ->
-      """WITH ev AS (SELECT user_id AS u, date_trunc('week', ts) AS w,
-        |  CAST(value AS DECIMAL(18,6)) AS v FROM events),
-        |fs AS (SELECT u, MIN(w) AS c FROM ev GROUP BY u),
-        |sz AS (SELECT c AS cohort, count(*) AS cohort_size FROM fs GROUP BY c),
-        |cells AS (SELECT fs.c AS cohort,
-        |  CAST(floor(datediff('day', fs.c, ev.w) / 7) AS BIGINT) AS "offset",
-        |  CAST(count(DISTINCT ev.u) AS BIGINT) AS users,
-        |  CAST(SUM(ev.v) AS DECIMAL(28,6)) AS pv
-        |  FROM ev JOIN fs ON ev.u = fs.u GROUP BY 1, 2),
-        |cum AS (SELECT cells.*, sz.cohort_size,
-        |  CAST(SUM(pv) OVER (PARTITION BY cells.cohort ORDER BY "offset"
-        |    ROWS UNBOUNDED PRECEDING) AS DECIMAL(28,6)) AS cv
-        |  FROM cells JOIN sz ON cells.cohort = sz.cohort)
-        |SELECT cohort, "offset", users, cohort_size,
-        |  CAST(CAST(pv AS VARCHAR) AS DOUBLE) AS period_value,
-        |  CAST(CAST(cv AS VARCHAR) AS DOUBLE) AS cum_value,
-        |  CAST(CAST(cv AS VARCHAR) AS DOUBLE) / CAST(cohort_size AS DOUBLE) AS cum_value_per_user
-        |FROM cum ORDER BY cohort, "offset"""".stripMargin,
-    // Char entropy: per-(lang, char) cells, 6-dp decimal entropy terms.
-    "q_char_entropy" ->
-      """WITH ch AS (SELECT lang, unnest(string_split(text, '')) AS c FROM documents),
-        |cells AS (SELECT lang, c, count(*) AS n FROM ch WHERE c <> '' GROUP BY 1, 2),
-        |t AS (SELECT lang, n,
-        |  CAST(round(-(CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY lang) AS DOUBLE)) *
-        |    log2(CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY lang) AS DOUBLE)), 6) AS DECIMAL(18,6)) AS term
-        |  FROM cells)
-        |SELECT lang, CAST(SUM(n) AS BIGINT) AS n_chars,
-        |  count(*) AS n_distinct_chars,
-        |  CAST(CAST(SUM(term) AS VARCHAR) AS DOUBLE) AS bits_per_char
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-  )
+  /** Every gate's builder: `(session, sfDir) => frame`. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gates.byName.map { case (n, g) => n -> g.build }
+
+  /** The gates with a declared untimed setup ([[graft.gates.Gate]]). */
+  val benchSetup: Map[String, (SparkSession, String) => Unit] =
+    Gates.all.flatMap(g => g.setup.map(g.name -> _)).toMap
+
+  /** Every gate's oracle: ANSI SQL that DuckDB runs on the same parquet
+    * tables. Rendered on first read. */
+  lazy val oracleSql: Map[String, String] =
+    Gates.all.map(g => g.name -> g.oracle()).toMap
 }
