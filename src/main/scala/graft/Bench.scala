@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.gates.Gates
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",
@@ -23,6 +24,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional args filter to the named queries (local A/B timing); an
+    // unknown name fails here, before the session starts.
+    val only = args.toSeq
+    val picked = Gates.select(only).map(g => g.name -> g.build)
     val cpus = Sessions.cpus
     val reps = Sessions.env("SPARK_GRAFT_REPS", Sessions.positiveLong).getOrElse(3L).toInt
     val spark = Sessions.build(s"local[$cpus]", cpus, appName = "graft-bench")
@@ -33,11 +38,6 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     // noop sink: full plan executes (no count()-driven column pruning).
-    // Optional args filter to the named queries (local A/B timing).
-    val only = args.toSet
-    val picked =
-      if (only.isEmpty) SparkEntry.queries.toSeq else SparkEntry.queries.filter(kv => only(kv._1)).toSeq
-
     // One timed execution; -1 marks failure so the JSON is unambiguous.
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                  name: String): Double = {

@@ -172,14 +172,18 @@ object Instrument {
         (if (parts.isEmpty) "" else parts.mkString(" [", " ", "]"))
     }.mkString("\n")
 
-  /** Minimal JSON string escape: \, ", and control chars — node names can
-    * carry quoted identifiers or paths (scan nodes), which would otherwise
-    * break the stats dump's line-per-query JSON. */
-  private def jstr(s: String): String = {
+  /** JSON string-body escape (no surrounding quotes): \, ", and every
+    * control char. The one escaper of the JSON the mains write: node names
+    * carry quoted identifiers or paths (scan nodes), oracle SQL carries
+    * newlines and tabs, exception messages carry anything. */
+  def jstr(s: String): String = {
     val b = new StringBuilder(s.length + 8)
     s.foreach {
       case '\\' => b.append("\\\\")
       case '"' => b.append("\\\"")
+      case '\n' => b.append("\\n")
+      case '\r' => b.append("\\r")
+      case '\t' => b.append("\\t")
       case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
       case c => b.append(c)
     }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
   CartesianProductExec}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import graft.gates.Gates
 
 /** Machine-checkable plan audit: builds EVERY `SparkEntry.queries` frame
   * and flags the two physical operators that do not survive a 100 TB
@@ -151,25 +152,20 @@ object PlanLint {
       a == "--scans" || i == jsonIdx || i == jsonIdx + 1
     }.map(_._1)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val only = args.drop(1).toSet
+    val names = Gates.select(args.drop(1).toSeq).map(_.name).sorted
     // AQE off so executedPlan is a plain tree (AQE never introduces any
     // flagged operator — it only upgrades sort-merge to broadcast)
     val spark = Sessions.build("local[4]", "4", aqe = "false", appName = "graft-planlint")
     spark.sparkContext.setLogLevel("ERROR")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
     var checked = 0
     var violations = 0
     var allowed = 0
-    def esc(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", " ").replace("\r", " ")
     val jsonOut = jsonPath.map(p => new java.io.PrintWriter(p))
     def record(n: String, verdict: String, hits: Seq[String],
                reason: String): Unit =
       jsonOut.foreach { w =>
-        val hitsJson = hits.map(h => "\"" + esc(h) + "\"").mkString("[", ",", "]")
-        w.println(s"""{"query":"${esc(n)}","verdict":"$verdict","hits":$hitsJson,"reason":"${esc(reason)}"}""")
+        val hitsJson = hits.map(h => "\"" + Instrument.jstr(h) + "\"").mkString("[", ",", "]")
+        w.println(s"""{"query":"${Instrument.jstr(n)}","verdict":"$verdict","hits":$hitsJson,"reason":"${Instrument.jstr(reason)}"}""")
         w.flush()
       }
     names.foreach { n =>
@@ -213,7 +209,7 @@ object PlanLint {
       }
     }
     jsonOut.foreach { w =>
-      w.println(s"""{"summary":true,"checked":$checked,"violations":$violations,"allowed":$allowed,"sf":"${esc(sfDir)}"}""")
+      w.println(s"""{"summary":true,"checked":$checked,"violations":$violations,"allowed":$allowed,"sf":"${Instrument.jstr(sfDir)}"}""")
       w.close()
     }
     println(s"planlint: checked=$checked violations=$violations allowed=$allowed")

@@ -59,6 +59,14 @@ class InstrumentSpec extends SparkSpec {
     assert(stats.forall(s => rendered.contains(s.operator)))
     val json = Instrument.toJson("probe", stats)
     assert(json.startsWith("""{"query":"probe","operators":[""") && json.endsWith("]}"))
+    // every control char is escaped, so the line stays valid JSON
+    val raw = "a\"b\\c\nd\re\tf\u0001g\u001fh"
+    val esc = Instrument.jstr(raw)
+    assert(esc == "a\\\"b\\\\c\\nd\\re\\tf\\u0001g\\u001fh", esc)
+    assert(!esc.exists(_ < ' '))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Instrument.toJson(raw, stats)).get("query").asText
+    assert(parsed == raw)
   }
 
   test("benchmark proto + DOT faces render a live executed plan") {

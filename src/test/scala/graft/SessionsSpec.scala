@@ -2,8 +2,8 @@ package graft
 
 /** The parsers behind the SPARK_GRAFT_* settings (positive integers for
   * cores, shuffle partitions, bench reps and the blind-join candidate
-  * limit; flags for AQE and ANSI; the session time zone), and the
-  * partition derivation of the scoped loop/stream sessions. */
+  * limit; flags for AQE, ANSI and speculation; the session time zone),
+  * and the partition derivation of the scoped loop/stream sessions. */
 class SessionsSpec extends SparkSpec {
 
   test("positiveLong accepts positive integers") {
@@ -44,19 +44,24 @@ class SessionsSpec extends SparkSpec {
 
   test("Verify and JobProfile reject a malformed SPARK_GRAFT_SHUFFLE_PARTITIONS, naming it") {
     // both mains parse their settings before they start a session, so a
-    // child JVM given a bad value exits at once
+    // child JVM given a bad value exits at once; Verify's speculation flag
+    // goes through the same parser
     val out = java.nio.file.Files.createTempDirectory("graft-shuffle-env").toString
-    val mains = Seq("graft.Verify" -> Seq(sf(), out, "q1_agg"), "graft.JobProfile" -> Seq("q1_agg"))
-    for ((main, args) <- mains; raw <- Seq("abc", "0")) {
+    val verify = "graft.Verify" -> Seq(sf(), out, "q1_agg")
+    val shuffle = "SPARK_GRAFT_SHUFFLE_PARTITIONS"
+    val cases = Seq(verify, "graft.JobProfile" -> Seq("q1_agg")).flatMap { m =>
+      Seq("abc", "0").map(raw => (m, shuffle, raw, s"$shuffle must be a positive integer, got '$raw'"))
+    } :+ ((verify, "SPARK_GRAFT_SPECULATION", "yes",
+      "SPARK_GRAFT_SPECULATION must be true or false, got 'yes'"))
+    for (((main, args), name, raw, message) <- cases) {
       val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx256m",
         "-cp", sys.props("java.class.path"), main) ++ args
       val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      pb.environment().put("SPARK_GRAFT_SHUFFLE_PARTITIONS", raw)
+      pb.environment().put(name, raw)
       val proc = pb.start()
       val log = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      assert(proc.waitFor() != 0, s"$main accepted '$raw':\n$log")
-      assert(log.contains(s"SPARK_GRAFT_SHUFFLE_PARTITIONS must be a positive integer, got '$raw'"),
-        s"$main with '$raw':\n$log")
+      assert(proc.waitFor() != 0, s"$main accepted $name='$raw':\n$log")
+      assert(log.contains(message), s"$main with $name='$raw':\n$log")
     }
   }
 

@@ -28,7 +28,7 @@ import graft.SparkSpec
   * TaskRetrySpec); this spec pins the same discipline for graft's one
   * direct-filesystem writer, SupersonicFile.writePartitionFile.
   *
-  * The Verify knob SPARK_GRAFT_SPECULATION=1 sweeps the full oracle suite
+  * The Verify knob SPARK_GRAFT_SPECULATION=true sweeps the full oracle suite
   * with speculation enabled (aggressive thresholds), proving the
   * bookkeeping itself perturbs nothing.
   */
