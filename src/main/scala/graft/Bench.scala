@@ -58,7 +58,7 @@ object Bench {
     val jsonlPath =
       if (only.isEmpty) "BENCH_LAST.jsonl" else "BENCH_FILTERED_LAST.jsonl"
     val jsonl =
-      try Some(new java.io.PrintWriter(new java.io.FileWriter(jsonlPath)))
+      try Some(Instrument.utf8Writer(jsonlPath))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $jsonlPath: $e"); None }
 
@@ -151,7 +151,7 @@ object Bench {
     println(line(v => f"$v%.4f"))
     val lastPath = if (only.isEmpty) "BENCH_LAST.json" else "BENCH_FILTERED_LAST.json"
     try {
-      val w = new java.io.PrintWriter(lastPath)
+      val w = Instrument.utf8Writer(lastPath)
       try w.println(line(_.toString)) finally w.close()
     } catch { case e: Throwable => System.err.println(s"[bench] $lastPath: $e") }
     val top = finalResults.toSeq.sortBy(-_._2).take(12)
@@ -161,7 +161,7 @@ object Bench {
     // analog): SPARK_GRAFT_STATS=<path> re-runs each picked query UNTIMED
     // and writes one JSON line of per-node SQLMetric stats per query.
     sys.env.get("SPARK_GRAFT_STATS").foreach { path =>
-      val w = new java.io.PrintWriter(path)
+      val w = Instrument.utf8Writer(path)
       try picked.sortBy(_._1).foreach { case (name, fn) =>
         try {
           Instrument.drainStreamStats() // discard progress left by timed runs

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.pipeline.{Contamination, Dedup, Dsir, Packing, Sampling, Shards, TextAnalysis => T}
 
 /** End-to-end curation pipeline record: the chain a pretraining-data run
@@ -23,8 +25,10 @@ import graft.pipeline.{Contamination, Dedup, Dsir, Packing, Sampling, Shards, Te
   * the decontamination stage — a REAL run passes its held-out eval set
   * here; absent, the stage falls back to a deterministic 2% self-sample
   * so the demo record stays reproducible with no external input).
-  * Prints one JSONL line per stage and a final one-line JSON summary
-  * (same last-line contract as graft.Bench).
+  * Prints one JSONL line per stage (name, rows, seconds and the schema
+  * the next stage reads the artifact with) and a final one-line JSON
+  * summary with the chain's Spark job count (same last-line contract as
+  * graft.Bench).
   */
 object Curate {
 
@@ -44,15 +48,27 @@ object Curate {
       args.lift(2).orElse(sys.env.get("SPARK_GRAFT_EVAL_DIR"))
         .map(p => spark.read.parquet(p).select("doc_id", "text"))
 
-    val stages = Seq.newBuilder[(String, Long, Double)]
+    // every Spark job of the chain; read once spark.stop() has drained the bus
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
+    val stages = collection.mutable.LinkedHashMap.empty[String, (Long, Double)]
+    // The rows come from the write itself (an observed count), and the
+    // artifact is read back with the written schema made nullable, as a
+    // file source reads it: no schema-inference job and no count job.
     def stage(name: String)(build: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
-      build.write.mode("overwrite").parquet(s"$outDir/$name")
-      val out = spark.read.parquet(s"$outDir/$name")
-      val rows = out.count() // parquet footer metadata count — cheap
+      val df = build
+      val written = Observation(s"curate_$name")
+      df.observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(s"$outDir/$name")
+      val rows = written.get("rows").asInstanceOf[Long]
+      val schema = ColumnBridge.asNullable(df.schema)
+      val out = spark.read.schema(schema).parquet(s"$outDir/$name")
       val secs = (System.nanoTime() - t0) / 1e9
-      stages += ((name, rows, secs))
-      println(f"""{"stage":"$name","rows":$rows,"sec":$secs%.2f}""")
+      stages(name) = (rows, secs)
+      println(f"""{"stage":"$name","rows":$rows,"sec":$secs%.2f,"schema":${schema.json}}""")
       out
     }
 
@@ -129,7 +145,7 @@ object Curate {
     // 4:1, then 1.5 deterministic epochs with per-epoch shuffle keys.
     val mixed = stage("mix_epochs") {
       val langs = Seq("en", "de", "es", "fr", "zh")
-      val total = selected.count()
+      val total = stages("dsir_select")._1
       val sources = langs.map { l =>
         (l, selected.where(col("lang") === l),
           if (l == "en") 4L else 1L)
@@ -157,11 +173,10 @@ object Curate {
         packed.columns.toSeq, nShards = 16)
     }
 
-    val all = stages.result()
-    val totalS = all.map(_._3).sum
-    val stagesJson = all.map { case (n, r, s) =>
+    val totalS = stages.values.map(_._2).sum
+    val stagesJson = stages.map { case (n, (r, s)) =>
       f""""$n":{"rows":$r,"sec":$s%.2f}""" }.mkString(",")
-    println(f"""{"metric":"curate_total","value":$totalS%.2f,"unit":"sec","sf":"$sfDir","stages":{$stagesJson}}""")
     spark.stop()
+    println(f"""{"metric":"curate_total","value":$totalS%.2f,"unit":"sec","sf":"$sfDir","jobs":${jobs.get},"stages":{$stagesJson}}""")
   }
 }

@@ -172,6 +172,11 @@ object Instrument {
         (if (parts.isEmpty) "" else parts.mkString(" [", " ", "]"))
     }.mkString("\n")
 
+  /** A writer of `path` in UTF-8, whatever the platform charset: under a
+    * US-ASCII default every non-ASCII character would be stored as `?`. */
+  def utf8Writer(path: String): java.io.PrintWriter =
+    new java.io.PrintWriter(path, java.nio.charset.StandardCharsets.UTF_8)
+
   /** JSON string-body escape (no surrounding quotes): \, ", and every
     * control char. The one escaper of the JSON the mains write: node names
     * carry quoted identifiers or paths (scan nodes), oracle SQL carries

@@ -135,6 +135,12 @@ object PlanLint {
         "SinglePartitionExchange(unbounded child)"
     }
 
+  /** One `--json` record: {"query","verdict","hits","reason"}. */
+  def recordJson(query: String, verdict: String, hits: Seq[String], reason: String): String = {
+    val hitsJson = hits.map(h => "\"" + Instrument.jstr(h) + "\"").mkString("[", ",", "]")
+    s"""{"query":"${Instrument.jstr(query)}","verdict":"$verdict","hits":$hitsJson,"reason":"${Instrument.jstr(reason)}"}"""
+  }
+
   def main(rawArgs: Array[String]): Unit = {
     // --scans: informational column-pruning report — for every parquet
     // scan print readCols/tableCols and flag full-width reads of wide
@@ -160,14 +166,10 @@ object PlanLint {
     var checked = 0
     var violations = 0
     var allowed = 0
-    val jsonOut = jsonPath.map(p => new java.io.PrintWriter(p))
+    val jsonOut = jsonPath.map(Instrument.utf8Writer)
     def record(n: String, verdict: String, hits: Seq[String],
                reason: String): Unit =
-      jsonOut.foreach { w =>
-        val hitsJson = hits.map(h => "\"" + Instrument.jstr(h) + "\"").mkString("[", ",", "]")
-        w.println(s"""{"query":"${Instrument.jstr(n)}","verdict":"$verdict","hits":$hitsJson,"reason":"${Instrument.jstr(reason)}"}""")
-        w.flush()
-      }
+      jsonOut.foreach { w => w.println(recordJson(n, verdict, hits, reason)); w.flush() }
     names.foreach { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)

@@ -22,11 +22,13 @@ import org.apache.spark.sql.functions._
   * (score desc, id) through the distributed prefix-fold primitive, never
   * a single-reducer window.
   *
-  * 100 TB shape: one (doc, bucket) explode + groupBy per corpus for the
-  * count tables (≤ `buckets` rows each — broadcast), one broadcast join
-  * + decimal-sum aggregation for the scores, one range-exchange prefix
-  * fold for the rank. Shuffles move (id, bucket) ints and (id, score)
-  * rows, never text. */
+  * 100 TB shape: one (doc, bucket) explode + groupBy over both corpora
+  * for the count tables (≤ 2 · `buckets` rows, collected), a
+  * `buckets`-entry log-ratio table the optimizer folds, shipped as a
+  * literal in the task binary, one per-document scoring projection with
+  * a decimal-sum aggregation by id, and one range-exchange prefix fold
+  * for the rank. Shuffles move bucket counts and (id, n, score) rows,
+  * never per-bigram rows and never text. */
 object Dsir {
 
   /** Portable per-token integer key (replay: length/ascii only). */
@@ -41,65 +43,62 @@ object Dsir {
     pmod(pmod(pmod(k1 * 1000003L + k2, lit(2147483648L)) * 2654435761L,
       lit(2147483648L)), lit(buckets.toLong))
 
+  /** Non-empty whitespace tokens of `text`. */
+  private def tokens(text: Column): Column =
+    filter(split(text, "\\s+"), t => t =!= "")
+
+  /** The bucket of each bigram of `toks`, in order; for 2 or more tokens
+    * only (`sequence(1, 0)` counts down). */
+  private def bigramBuckets(toks: Column, buckets: Int): Column =
+    transform(sequence(lit(1), size(toks) - 1),
+      i => bigramBucket(
+        tokenKey(element_at(toks, i)),
+        tokenKey(element_at(toks, i + 1)), buckets))
+
   /** One row per bigram occurrence: (id, bucket). Documents with fewer
     * than 2 tokens contribute no features (they score 0 downstream). */
   def bigramFeatures(docs: DataFrame, idCol: String, textCol: String,
-                     buckets: Int): DataFrame = {
-    val toks = filter(split(col(textCol), "\\s+"), t => t =!= "")
-    docs.select(col(idCol), toks.as("__t"))
+                     buckets: Int): DataFrame =
+    docs.select(col(idCol), tokens(col(textCol)).as("__t"))
       .where(size(col("__t")) >= 2)
-      .select(col(idCol), explode(transform(
-        sequence(lit(1), size(col("__t")) - 1),
-        i => bigramBucket(
-          tokenKey(element_at(col("__t"), i)),
-          tokenKey(element_at(col("__t"), i + 1)), buckets))).as("bucket"))
-  }
-
-  /** Per-bucket occurrence counts over a corpus (≤ `buckets` rows). */
-  def bucketCounts(docs: DataFrame, idCol: String, textCol: String,
-                   buckets: Int): DataFrame =
-    bigramFeatures(docs, idCol, textCol, buckets)
-      .groupBy("bucket").agg(count(lit(1)).as("cnt"))
+      .select(col(idCol), explode(bigramBuckets(col("__t"), buckets)).as("bucket"))
 
   /** Per-pool-document importance score:
     * Σ_features round(ln(p̂_target(b) / p̂_pool(b)), 9) as DECIMAL —
     * p̂(b) = (count(b) + 1) / (total + buckets), Laplace-smoothed.
     * Every pool document appears in the output (feature-less docs score
-    * 0 with n_feats 0). Output: (id, n_feats, score: DECIMAL(28,9)). */
+    * 0 with n_feats 0; rows sharing an id sum; a null id scores 0, as a
+    * left join on it would). Output: (id, n_feats, score: DECIMAL(28,9)).
+    *
+    * One query collects both corpora's bucket counts; the ratio of every
+    * bucket (one unseen in either corpus included) is evaluated by the
+    * optimizer over a local relation, with no job; and one projection
+    * sums each document's ratios, looked up by bucket in that table held
+    * as an array literal, before the sum by id. */
   def importanceScores(pool: DataFrame, target: DataFrame, idCol: String,
                        textCol: String, buckets: Int): DataFrame = {
-    import graft.pipeline.Checkpoints.DatasetCheckpointOps
-    val tCounts = bucketCounts(target, idCol, textCol, buckets)
-    // the pool's feature table feeds BOTH the count aggregation and the
-    // per-doc scoring join — one checkpoint, one corpus tokenization pass
-    val feats = bigramFeatures(pool, idCol, textCol, buckets)
-      .stageCheckpoint(false)
-    val pCounts = feats.groupBy("bucket").agg(count(lit(1)).as("cnt"))
-    val tTot = tCounts.agg(coalesce(sum("cnt"), lit(0L)).as("t_tot"))
-    val pTot = pCounts.agg(coalesce(sum("cnt"), lit(0L)).as("p_tot"))
-    // full bucket domain so a feature unseen in either corpus still gets
-    // its smoothed ratio (ln of the totals ratio)
-    val domain = pool.sparkSession.range(buckets).select(col("id").as("bucket"))
-    val ratio = domain
-      .join(tCounts.withColumnRenamed("cnt", "t_cnt"), Seq("bucket"), "left")
-      .join(pCounts.withColumnRenamed("cnt", "p_cnt"), Seq("bucket"), "left")
-      .crossJoin(broadcast(tTot)).crossJoin(broadcast(pTot))
-      .select(col("bucket"),
-        round(log(
-          ((coalesce(col("t_cnt"), lit(0L)) + 1L).cast("double") /
-            (col("t_tot") + buckets).cast("double")) /
-          ((coalesce(col("p_cnt"), lit(0L)) + 1L).cast("double") /
-            (col("p_tot") + buckets).cast("double"))), 9)
-          .cast("decimal(20,9)").as("lr"))
-    val scored = feats.join(broadcast(ratio), Seq("bucket"))
+    val (tCnt, pCnt) = (new Array[Long](buckets), new Array[Long](buckets))
+    bigramFeatures(target, idCol, textCol, buckets).select(lit(0).as("side"), col("bucket"))
+      .unionByName(bigramFeatures(pool, idCol, textCol, buckets).select(lit(1).as("side"), col("bucket")))
+      .groupBy("side", "bucket").agg(count(lit(1)))
+      .collect()
+      .foreach(r => (if (r.getInt(0) == 0) tCnt else pCnt)(r.getLong(1).toInt) = r.getLong(2))
+    val ratio = pool.sparkSession.createDataFrame(tCnt.toSeq.zip(pCnt.toSeq))
+      .select(round(log(
+        ((col("_1") + 1L).cast("double") / lit(tCnt.sum + buckets).cast("double")) /
+          ((col("_2") + 1L).cast("double") / lit(pCnt.sum + buckets).cast("double"))), 9)
+        .cast("decimal(20,9)"))
+      .collect().map(_.getDecimal(0))
+    val lr = typedLit(ratio).cast("array<decimal(20,9)>")
+    pool.select(col(idCol), tokens(col(textCol)).as("__t"))
+      .select(col(idCol), when(size(col("__t")) >= 2 && col(idCol).isNotNull,
+        bigramBuckets(col("__t"), buckets)).otherwise(typedLit(Array.empty[Long])).as("__b"))
+      .select(col(idCol), size(col("__b")).cast("long").as("__n"),
+        aggregate(col("__b"), lit(0L).cast("decimal(28,9)"),
+          (acc, b) => (acc + element_at(lr, b.cast("int") + 1)).cast("decimal(28,9)")).as("__s"))
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_feats"),
-        sum(col("lr")).cast("decimal(28,9)").as("score"))
-    pool.select(col(idCol)).distinct()
-      .join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_feats"), lit(0L)).as("n_feats"),
-        coalesce(col("score"), lit(0L).cast("decimal(28,9)")).as("score"))
+      .agg(sum(col("__n")).as("n_feats"),
+        sum(col("__s")).cast("decimal(28,9)").as("score"))
   }
 
   /** Keep the most target-like fraction: global 0-based rank on
@@ -110,8 +109,11 @@ object Dsir {
                         num: Int, den: Int): DataFrame = {
     require(num > 0 && den > 0 && num <= den,
       s"selectTopFraction: need 0 < num/den <= 1, got $num/$den")
-    val n = scored.count()
-    Profile.rowPositions(scored, "rank", col("score").desc, col(idCol))
+    import graft.pipeline.Checkpoints.DatasetCheckpointOps
+    // the rank and the count read one materialization of the scores
+    val staged = scored.stagePersist(true)
+    val n = staged.stagedCount
+    Profile.rowPositions(staged, "rank", col("score").desc, col(idCol))
       .withColumn("keep", col("rank") * den < lit(n) * num)
   }
 }

@@ -165,9 +165,10 @@ object Sampling {
     * standard behavior when a small high-weight domain runs dry;
     * up-sampling beyond 1× is epoch repetition, a separate concern.
     *
-    * Cost: one count job per source (scalar metadata), one codegen'd
-    * hash filter per source (pushes to the scan), one union, and the
-    * range exchange of the final order — no joins, no driver data.
+    * Cost: one aggregate job counting every source (one row per
+    * source collected), one codegen'd hash filter per source (pushes
+    * to the scan), one union, and the range exchange of the final
+    * order — no joins.
     *
     * @param sources (label, corpus, integer weight) triples; schemas
     *                must match (checked) so the union is positional-safe
@@ -184,8 +185,12 @@ object Sampling {
     require(!cols.contains(sourceCol) && !cols.contains(posCol),
       s"mixCorpora: output columns $sourceCol/$posCol collide with the input schema")
     val sumW = sources.map(_._3).sum
-    val tagged = sources.map { case (label, df, w) =>
-      val n = df.count()
+    // every source's row count in one aggregate job; an empty source has no group
+    val counts = sources.zipWithIndex.map { case ((_, df, _), i) => df.select(lit(i).as("__src")) }
+      .reduce(_.union(_)).groupBy("__src").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val tagged = sources.zipWithIndex.map { case ((label, df, w), i) =>
+      val n = counts.getOrElse(i, 0L)
       val thr =
         if (n == 0) 0L
         else (BigInt(w) * targetRows * Buckets / (BigInt(sumW) * n))

@@ -75,6 +75,12 @@ object ColumnBridge {
     }
   }
 
+  /** `schema` with every field, array element and map value nullable, as
+    * a file source reads back what it wrote (`asNullable` is
+    * `private[spark]`). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
+
   /** A child session sharing `spark`'s SparkContext, cache and catalog,
     * with a COPY of its SQL conf (`cloneSession` is `private[sql]`): conf
     * set on the child never reaches the caller. The child has artifact

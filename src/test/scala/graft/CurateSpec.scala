@@ -1,16 +1,23 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Smoke-runs the end-to-end curation chain (graft.Curate) in a child JVM
   * (its own SparkSession cannot share this suite's) and pins the stage
   * contract: every stage emits a JSONL line, counts only shrink through
   * the filter/dedup stages, packing preserves the mixed row count, and
-  * the manifest is bounded by its shard count.
+  * the manifest is bounded by its shard count. It also pins the chain's
+  * Spark job count and the schema each stage reads its artifact back with.
   */
-class CurateSpec extends AnyFunSuite {
+class CurateSpec extends SparkSpec {
 
-  test("curation pipeline runs end to end; stage row counts are coherent") {
+  private val order = Seq("ingest", "quality_filter", "dedup_exact",
+    "dedup_near", "decontaminate", "dsir_select", "mix_epochs", "pack",
+    "manifest")
+
+  /** (exit code, stdout, output dir) of one chain over sf0.001. */
+  private lazy val chain: (Int, String, String) = {
     val outDir = java.nio.file.Files.createTempDirectory("curate-spec").toString
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val cmd: Seq[String] =
@@ -32,16 +39,21 @@ class CurateSpec extends AnyFunSuite {
     val out = new StringBuilder
     var line = reader.readLine()
     while (line != null) { out.append(line).append('\n'); line = reader.readLine() }
-    val rc = proc.waitFor()
-    val text = out.toString
+    (proc.waitFor(), out.toString, outDir)
+  }
+
+  private def records(text: String) = {
+    val om = new ObjectMapper()
+    text.linesIterator.filter(_.startsWith("{")).map(om.readTree).toSeq
+  }
+
+  test("curation pipeline runs end to end; stage row counts are coherent") {
+    val (rc, text, outDir) = chain
     withClue(text) {
       assert(rc == 0, s"Curate exited $rc")
       val stageRe = """\{"stage":"(\w+)","rows":(\d+),"sec":""".r
       val rows = stageRe.findAllMatchIn(text)
         .map(m => m.group(1) -> m.group(2).toLong).toMap
-      val order = Seq("ingest", "quality_filter", "dedup_exact",
-        "dedup_near", "decontaminate", "dsir_select", "mix_epochs", "pack",
-        "manifest")
       assert(order.forall(rows.contains), s"missing stages: got $rows")
       assert(order.forall(rows(_) > 0), s"empty stage: $rows")
       // monotone through the gates; pack keeps the mixed rows; bounded manifest
@@ -59,6 +71,27 @@ class CurateSpec extends AnyFunSuite {
       // the stage artifacts are real parquet the next stage consumed
       order.foreach { s =>
         assert(new java.io.File(s"$outDir/$s").isDirectory, s"no artifact for $s")
+      }
+    }
+  }
+
+  test("the chain runs at most 50 Spark jobs; artifacts read back as inferred") {
+    val (rc, text, outDir) = chain
+    withClue(text) {
+      assert(rc == 0, s"Curate exited $rc")
+      val recs = records(text)
+      // 92 jobs before the stage rows came from the write, DSIR scored in
+      // one pass and the mix counted its sources at once; 41 after
+      val jobs = recs.find(r => r.has("metric")).get.get("jobs").asLong
+      assert(jobs > 0 && jobs <= 50, s"jobs: $jobs")
+      val stages = recs.filter(_.has("stage"))
+      assert(stages.map(_.get("stage").asText) == order)
+      stages.foreach { r =>
+        val name = r.get("stage").asText
+        val readWith = DataType.fromJson(r.get("schema").toString).asInstanceOf[StructType]
+        val inferred = spark.read.parquet(s"$outDir/$name")
+        assert(inferred.schema == readWith, s"stage $name")
+        assert(inferred.count() == r.get("rows").asLong, s"stage $name")
       }
     }
   }

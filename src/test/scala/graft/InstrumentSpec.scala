@@ -185,3 +185,23 @@ class InstrumentSpec extends SparkSpec {
     graft.streaming.Streams.deleteRecursively(work)
   }
 }
+
+/** The JSON reports the mains write are UTF-8 whatever the platform
+  * charset (US-ASCII under a POSIX locale, which stores "—" as "?"). */
+class Utf8ReportSpec extends org.scalatest.funsuite.AnyFunSuite {
+
+  test("a PlanLint record with a non-ASCII reason reads back intact") {
+    val path = java.nio.file.Files.createTempFile("planlint", ".json")
+    try {
+      val reason = "(vec_id < 10) — brute-force; naïve ≤ 1 µs"
+      val w = Instrument.utf8Writer(path.toString)
+      try w.println(PlanLint.recordJson("q_x", "allowed", Seq("Hit(ü)"), reason))
+      finally w.close()
+      val line = new String(java.nio.file.Files.readAllBytes(path),
+        java.nio.charset.StandardCharsets.UTF_8).trim
+      val rec = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      assert(rec.get("reason").asText == reason, line)
+      assert(rec.get("hits").get(0).asText == "Hit(ü)", line)
+    } finally java.nio.file.Files.delete(path)
+  }
+}

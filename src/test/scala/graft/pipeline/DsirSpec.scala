@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DsirSpec extends SparkSpec {
@@ -52,5 +53,85 @@ class DsirSpec extends SparkSpec {
         .select(col("id"), col("score").cast("string")).orderBy("id"))
       assert(got == base)
     }
+  }
+
+  /** The scorer as a plan of joins: every bucket of `range(buckets)`
+    * left-joined to both count tables, the Laplace log-ratio per bucket,
+    * a join of the pool's (id, bucket) rows to it summed by id, and the
+    * distinct pool ids left-joined to that. */
+  private def reference(pool: DataFrame, target: DataFrame, buckets: Int): DataFrame = {
+    def counts(d: DataFrame) = Dsir.bigramFeatures(d, "id", "text", buckets)
+      .groupBy("bucket").agg(count(lit(1)).as("cnt"))
+    val feats = Dsir.bigramFeatures(pool, "id", "text", buckets)
+    val (tCounts, pCounts) = (counts(target), counts(pool))
+    val tTot = tCounts.agg(coalesce(sum("cnt"), lit(0L)).as("t_tot"))
+    val pTot = pCounts.agg(coalesce(sum("cnt"), lit(0L)).as("p_tot"))
+    val ratio = spark.range(buckets).select(col("id").as("bucket"))
+      .join(tCounts.withColumnRenamed("cnt", "t_cnt"), Seq("bucket"), "left")
+      .join(pCounts.withColumnRenamed("cnt", "p_cnt"), Seq("bucket"), "left")
+      .crossJoin(tTot).crossJoin(pTot)
+      .select(col("bucket"),
+        round(log(
+          ((coalesce(col("t_cnt"), lit(0L)) + 1L).cast("double") /
+            (col("t_tot") + buckets).cast("double")) /
+          ((coalesce(col("p_cnt"), lit(0L)) + 1L).cast("double") /
+            (col("p_tot") + buckets).cast("double"))), 9)
+          .cast("decimal(20,9)").as("lr"))
+    val scored = feats.join(ratio, Seq("bucket"))
+      .groupBy(col("id"))
+      .agg(count(lit(1)).as("n_feats"),
+        sum(col("lr")).cast("decimal(28,9)").as("score"))
+    pool.select(col("id")).distinct()
+      .join(scored, Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("n_feats"), lit(0L)).as("n_feats"),
+        coalesce(col("score"), lit(0L).cast("decimal(28,9)")).as("score"))
+  }
+
+  private def sorted(df: DataFrame): Seq[(Option[Long], Long, BigDecimal)] =
+    df.collect().toSeq.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+      r.getLong(1), BigDecimal(r.getDecimal(2)))).sortBy(_._1)
+
+  private val edgePool = Seq[(Option[Long], Option[String])](
+    (Some(1L), Some("alpha beta alpha beta")),
+    (Some(2L), None), // null text
+    (Some(3L), Some("")), // empty text
+    (Some(4L), Some("solo")), // one token
+    (Some(5L), Some("gamma delta")), // duplicated id: the two rows sum
+    (Some(5L), Some("alpha beta gamma")),
+    (None, Some("delta alpha beta")), // null id: counted in the pool, scores 0
+    (Some(6L), Some("  spaced   out\ttext  "))
+  ).toDF("id", "text")
+  private val edgeTarget = Seq((100L, "alpha beta"), (101L, "omega psi")).toDF("id", "text")
+
+  test("fused scorer equals the join-based formula on edge cases") {
+    val buckets = 512
+    val seen = Dsir.bigramFeatures(edgePool.unionByName(edgeTarget.select(
+      col("id").cast("long").as("id"), col("text"))), "id", "text", buckets)
+      .select("bucket").distinct().collect().map(_.getLong(0)).toSet
+    assert(seen.size < buckets, "some bucket must be in neither corpus")
+    val targetOnly = Dsir.bigramFeatures(edgeTarget, "id", "text", buckets).select("bucket")
+      .except(Dsir.bigramFeatures(edgePool, "id", "text", buckets).select("bucket"))
+    assert(targetOnly.count() > 0, "some bucket must be in the target only")
+
+    val got = Dsir.importanceScores(edgePool, edgeTarget, "id", "text", buckets)
+    assert(got.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("id" -> "bigint", "n_feats" -> "bigint", "score" -> "decimal(28,9)"))
+    val fused = sorted(got)
+    assert(fused == sorted(reference(edgePool, edgeTarget, buckets)))
+    val m = fused.map(r => r._1 -> (r._2, r._3)).toMap
+    Seq(2L, 3L, 4L).foreach(id => assert(m(Some(id)) == ((0L, BigDecimal(0))), s"doc $id: $m"))
+    assert(m(None) == ((0L, BigDecimal(0))), s"null id: $m")
+    assert(m(Some(5L))._1 == 3L, s"duplicated id sums its rows' bigrams: $m")
+    assert(fused.size == 7, s"one row per distinct id: $fused")
+    withPartitionings(edgePool) { p =>
+      assert(sorted(Dsir.importanceScores(p, edgeTarget, "id", "text", buckets)) == fused)
+    }
+  }
+
+  test("fused scorer equals the join-based formula with an empty target") {
+    val empty = edgeTarget.where(lit(false))
+    assert(sorted(Dsir.importanceScores(edgePool, empty, "id", "text", 64)) ==
+      sorted(reference(edgePool, empty, 64)))
   }
 }
