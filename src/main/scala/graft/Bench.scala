@@ -20,6 +20,7 @@ import graft.gates.Gates
   * owned by each attempt's frames (pipeline.Checkpoints), which the GC
   * collects so ContextCleaner frees them; nothing in the library enters
   * the session's CacheManager, so there is no cache to clear.
+  * Session settings: the README table "Session settings".
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -28,10 +29,7 @@ object Bench {
     // unknown name fails here, before the session starts.
     val only = args.toSeq
     val picked = Gates.select(only).map(g => g.name -> g.build)
-    val cpus = Sessions.cpus
-    val reps = Sessions.env("SPARK_GRAFT_REPS", Sessions.positiveLong).getOrElse(3L).toInt
-    val spark = Sessions.build(s"local[$cpus]", cpus, appName = "graft-bench")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("graft-bench")
     // Warmup: one untimed run to absorb JVM/codegen/parquet-footer startup
     // so the first timed query isn't charged ~8s of session warmup.
     try SparkEntry.queries("q1_agg")(spark, sfDir)
@@ -71,7 +69,7 @@ object Bench {
       }
       reset()
       val first = timeOnce(fn, name)
-      val extra = if (first < 0) 0 else if (first >= 4.0) 1 else math.max(0, reps - 1)
+      val extra = if (first < 0) 0 else if (first >= 4.0) 1 else 2
       val times = first +: (1 to extra).map { _ => reset(); timeOnce(fn, name) }
       val valid = times.filter(_ >= 0)
       val best = if (valid.isEmpty) -1.0 else valid.min

@@ -20,7 +20,8 @@ import graft.pipeline.{Contamination, Dedup, Dsir, Packing, Sampling, Shards, Te
   * is what a scheduler sees).
   *
   * Usage: graft.Curate <sfDir> <outDir> [evalParquetDir]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_EVAL_DIR (same as
+  * Session settings: the README table "Session settings".
+  * Env: SPARK_GRAFT_EVAL_DIR (same as
   * the third arg: a parquet of (doc_id, text) benchmark/eval docs for
   * the decontamination stage — a REAL run passes its held-out eval set
   * here; absent, the stage falls back to a deterministic 2% self-sample
@@ -35,11 +36,7 @@ object Curate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse(".scratch/curate_out")
-    val cpus = Sessions.cpus
-    val spark = Sessions.build(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
-      shufflePartitions = cpus, appName = "graft-curate")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("graft-curate")
     new java.io.File(outDir).mkdirs()
     // External benchmark for stage 5 (decontaminate): a real run passes
     // the eval set it must not train on; the self-sample below is only

@@ -32,7 +32,7 @@ import graft.pipeline.Dedup
   * generation.
   *
   * Usage: graft.DedupScale <sfDir> <family> [budgetBytes]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_MASTER.
+  * Session settings: the README table "Session settings".
   */
 object DedupScale {
   def main(args: Array[String]): Unit = {
@@ -40,11 +40,7 @@ object DedupScale {
     val sfDir = args(0)
     val family = args(1)
     val budget = args.lift(2).map(_.toLong).getOrElse(1L << 30)
-    val cpus = Sessions.cpus
-    val spark = Sessions.build(
-      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
-      shufflePartitions = cpus, appName = s"graft-dedupscale-$family")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"graft-dedupscale-$family")
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val t0 = System.nanoTime()
     val df = family match {

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.graftbus.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import graft.gates.Gates
 
 /** Job-level profile of one or more named SparkEntry queries: per query,
   * every Spark job's wall clock, stage count and task count, plus the
@@ -12,8 +14,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * before touching the algorithm).
   *
   * Usage: tools/run_main.sh graft.JobProfile q_topo_layers [more...]
-  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench;
-  * SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_GRAFT_AQE as in Verify.
+  * Env: SPARK_GRAFT_SF_DIR as in Bench; session settings: the README
+  * table "Session settings".
   */
 object JobProfile {
   private final case class JobRec(id: Int, start: Long, var end: Long = -1L,
@@ -22,12 +24,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProfile <query> [query...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Sessions.cpus
-    val spark = Sessions.build(s"local[$cpus]",
-      Sessions.env("SPARK_GRAFT_SHUFFLE_PARTITIONS", Sessions.positiveLong).fold(cpus)(_.toString),
-      aqe = Sessions.env("SPARK_GRAFT_AQE", Sessions.flag).getOrElse(true).toString,
-      appName = "graft-jobprofile")
-    spark.sparkContext.setLogLevel("WARN")
+    val picked = Gates.select(args.toSeq)
+    val spark = Sessions.start("graft-jobprofile")
     // warmup (same as Bench): absorb codegen/session startup
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
@@ -45,25 +43,24 @@ object JobProfile {
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val r = jobs.get(je.jobId); if (r != null) r.end = je.time
       }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = ()
     }
+    ListenerBus.drain(spark.sparkContext) // the warm-up's jobs stay out
     spark.sparkContext.addSparkListener(listener)
 
-    args.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    picked.foreach { g =>
       System.gc()
       jobs.clear(); order.clear()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      g.build(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async; give it a moment to drain
-      Thread.sleep(300)
+      // the listener bus is async: wait until every job's end has arrived
+      ListenerBus.drain(spark.sparkContext)
       val recs = order.toArray(new Array[JobRec](0)).toSeq.sortBy(_.start)
       val jobSum = recs.filter(_.end > 0).map(r => r.end - r.start).sum / 1e3
       val gaps = recs.sliding(2).collect {
         case Seq(a, b) if a.end > 0 => math.max(0L, b.start - a.end)
       }.sum / 1e3
-      println(f"== $name: wall ${wall}%.2f s, ${recs.size} jobs, " +
+      println(f"== ${g.name}: wall ${wall}%.2f s, ${recs.size} jobs, " +
         f"job time ${jobSum}%.2f s, inter-job gap ${gaps}%.2f s")
       recs.foreach { r =>
         val d = if (r.end > 0) (r.end - r.start) / 1e3 else -1.0

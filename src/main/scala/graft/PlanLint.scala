@@ -161,7 +161,8 @@ object PlanLint {
     val names = Gates.select(args.drop(1).toSeq).map(_.name).sorted
     // AQE off so executedPlan is a plain tree (AQE never introduces any
     // flagged operator — it only upgrades sort-merge to broadcast)
-    val spark = Sessions.build("local[4]", "4", aqe = "false", appName = "graft-planlint")
+    val spark = Sessions.start("graft-planlint",
+      Sessions.Settings("local[4]", 4, aqe = false))
     spark.sparkContext.setLogLevel("ERROR")
     var checked = 0
     var violations = 0

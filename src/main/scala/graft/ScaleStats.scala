@@ -15,14 +15,12 @@ import graft.pipeline.Dedup
   * factors where the full query is disk-bound on a single box.
   *
   * Usage: graft.ScaleStats <sfDir>
+  * Session settings: the README table "Session settings".
   * Prints one JSON line per family and a final summary line. */
 object ScaleStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = Sessions.cpus
-    val spark = Sessions.build(s"local[$cpus]", shufflePartitions = cpus,
-      appName = "graft-scalestats")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("graft-scalestats")
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val n = docs.count()
 

@@ -3,21 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** Session construction shared by every graft main and the cross-master
-  * probe, plus the one partition-scoping helper
-  * ([[Sessions.withDerivedPartitions]]). [[Sessions.build]] is one place that
-  * knows how to stand up a session on plain
-  * `local[*]` AND on `local-cluster[...]`, where executors are forked as
-  * SEPARATE JVMs — every broadcast, task closure, and custom-Expression
-  * capture then crosses a real serialization wire, the one failure class
-  * single-JVM local mode structurally cannot catch. Forked executors need
-  * the driver's classpath (absolutized — they run in the worker's own
-  * work dir, where relative entries silently vanish and Janino fails
-  * codegen with "Unknown variable or type" on the first custom
-  * Expression) and the JDK-17 --add-opens flags (spark-submit would
-  * inject them; a bare main must do it itself — the list matches
-  * org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()).
-  */
+/** Session construction shared by every graft main and the test fixture
+  * ([[Sessions.start]] under one [[Sessions.Settings]]), plus the one
+  * partition-scoping helper ([[Sessions.withDerivedPartitions]]). */
 object Sessions {
 
   /** Parse a positive-integer setting such as an env override. A
@@ -42,13 +30,101 @@ object Sessions {
     raw
   }
 
-  /** The environment variable `name` through a parser above, if set. */
-  def env[A](name: String, parse: (String, String) => A): Option[A] =
-    sys.env.get(name).map(parse(name, _))
+  /** The variable `name` of `vars` through a parser above, if set. */
+  def env[A](name: String, parse: (String, String) => A,
+             vars: Map[String, String] = sys.env): Option[A] =
+    vars.get(name).map(parse(name, _))
 
-  /** Local core count (SPARK_GRAFT_CPUS, default 32) — the mains' master
-    * width and default shuffle parallelism. */
-  def cpus: String = env("SPARK_GRAFT_CPUS", positiveLong).getOrElse(32L).toString
+  /** How a graft session runs: every main but PlanLint and CrossMaster
+    * reads it from the `SPARK_GRAFT_*` variables ([[Settings.fromEnv]],
+    * README "Session settings"); the rest pin theirs.
+    *
+    * Invariance knobs (`aqe`, `shufflePartitions`): every gate's output
+    * must be identical under any AQE setting / shuffle-partition count —
+    * results depend on the data, never on the execution layout.
+    * Semantic knobs (`timeZone`, `ansi`): gates must also hold under the
+    * session semantics a USER brings — stock Spark 4 runs ANSI on, and
+    * cluster sessions need not be UTC. Sweeps replay the full oracle under
+    * ansi=true and a non-UTC zone to prove no gate leans on the pins.
+    * Speculation sweep (round 10, `speculation`): enables spark.speculation
+    * with aggressive thresholds. On a single host the scheduler never
+    * actually LAUNCHES a duplicate (TaskSetManager skips hosts that already
+    * run an attempt — probed empirically, 0 speculative task starts even
+    * under local-cluster), so this sweep pins the bookkeeping/AQE
+    * interplay; the double-execution hazard itself is pinned at the commit
+    * layer by SpeculationSpec and TaskRetrySpec (attempt-temp + rename,
+    * parquet committer).
+    * Serialization-boundary sweep (round 11, `master` =
+    * local-cluster[2,2,4096]): executors run as SEPARATE JVMs — every
+    * broadcast, task closure, and custom-Expression capture crosses a
+    * real serialization wire, the one failure class plain local[*]
+    * structurally cannot catch. Executors are forked fresh by the worker,
+    * so they get the driver's classpath ([[absoluteClassPath]]) and
+    * `executorMemory` explicitly; Spark adds their JDK-17 module flags
+    * itself (`SparkContext` prepends `JavaModuleOptions` to
+    * `spark.executor.extraJavaOptions`).
+    * Durability-mode sweeps (`checkpointDir`): with a checkpoint dir set,
+    * stageCheckpoint writes reliable files (the cluster posture), not
+    * local executor blocks. */
+  final case class Settings(master: String, shufflePartitions: Long,
+                            timeZone: String = "UTC", ansi: Boolean = false,
+                            aqe: Boolean = true, speculation: Boolean = false,
+                            executorMemory: String = "3g",
+                            checkpointDir: Option[String] = None)
+
+  object Settings {
+    /** Every session variable of `vars`, parsed once: a malformed value
+      * fails here, naming its variable. The core count defaults to this
+      * JVM's available processors and sets the default master width and
+      * shuffle partitions. */
+    def fromEnv(vars: Map[String, String] = sys.env): Settings = {
+      def get[A](name: String, parse: (String, String) => A) = env(name, parse, vars)
+      val cores = get("SPARK_GRAFT_CPUS", positiveLong)
+        .getOrElse(Runtime.getRuntime.availableProcessors.toLong)
+      val d = Settings(s"local[$cores]", cores)
+      Settings(master = vars.getOrElse("SPARK_GRAFT_MASTER", d.master),
+        shufflePartitions = get("SPARK_GRAFT_SHUFFLE_PARTITIONS", positiveLong).getOrElse(cores),
+        timeZone = get("SPARK_GRAFT_TZ", zoneId).getOrElse(d.timeZone),
+        ansi = get("SPARK_GRAFT_ANSI", flag).getOrElse(d.ansi),
+        aqe = get("SPARK_GRAFT_AQE", flag).getOrElse(d.aqe),
+        speculation = get("SPARK_GRAFT_SPECULATION", flag).getOrElse(d.speculation),
+        executorMemory = vars.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", d.executorMemory),
+        checkpointDir = vars.get("SPARK_GRAFT_CHECKPOINT_DIR"))
+    }
+  }
+
+  /** The builder options of session `appName` under `s`: the graft
+    * semantic pins, plus the executors' classpath and memory when the
+    * master is local-cluster. */
+  def options(appName: String, s: Settings): Map[String, String] = {
+    val pins = Map(
+      "spark.master" -> s.master,
+      "spark.app.name" -> appName,
+      "spark.sql.shuffle.partitions" -> s.shufflePartitions.toString,
+      "spark.sql.session.timeZone" -> s.timeZone,
+      "spark.sql.ansi.enabled" -> s.ansi.toString,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> s.aqe.toString,
+      "spark.speculation" -> s.speculation.toString,
+      "spark.speculation.interval" -> "100ms",
+      "spark.speculation.multiplier" -> "1.5",
+      "spark.speculation.quantile" -> "0.5",
+      "spark.ui.enabled" -> "false")
+    if (!s.master.startsWith("local-cluster")) pins
+    else pins ++ Map("spark.executor.extraClassPath" -> absoluteClassPath,
+      "spark.executor.memory" -> s.executorMemory)
+  }
+
+  /** Start (or join, through `getOrCreate`) session `appName` under
+    * `settings` at log level WARN, with its checkpoint dir if one is set. */
+  def start(appName: String, settings: Settings = Settings.fromEnv()): SparkSession = {
+    val spark = options(appName, settings)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    settings.checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
+    spark
+  }
 
   /** Run `body` on a session whose `spark.sql.shuffle.partitions` is
     * derived from the work's measured size, `clamp(size / perPartition +
@@ -95,61 +171,13 @@ object Sessions {
     if (df.sparkSession eq s) df
     else ColumnBridge.ofRows(s, df.queryExecution.analyzed)
 
-  val Jdk17AddOpensPackages: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar")
-
-  /** `--add-opens a=ALL-UNNAMED --add-opens b=ALL-UNNAMED ...` as one
-    * string (executor extraJavaOptions) */
-  def addOpensFlags: String =
-    Jdk17AddOpensPackages.map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-
-  /** The same flags as an argv fragment (forking a driver JVM). */
-  def addOpensArgv: Seq[String] =
-    Jdk17AddOpensPackages.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   /** This JVM's classpath with every entry absolutized — what forked
-    * executor JVMs must see. */
+    * executor JVMs must see: they run in the worker's own work dir, where
+    * relative entries silently vanish and Janino fails codegen with
+    * "Unknown variable or type" on the first custom Expression. */
   def absoluteClassPath: String =
     sys.props("java.class.path")
       .split(java.io.File.pathSeparator)
       .map(e => new java.io.File(e).getAbsolutePath)
       .mkString(java.io.File.pathSeparator)
-
-  /** Build a session on `master` with the graft semantic pins; wires the
-    * executor classpath/add-opens/memory when `master` is local-cluster. */
-  def build(master: String,
-            shufflePartitions: String,
-            tz: String = "UTC",
-            ansi: String = "false",
-            aqe: String = "true",
-            speculation: Boolean = false,
-            executorMem: String = "3g",
-            appName: String = "graft"): SparkSession = {
-    val b0 = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", tz)
-      .config("spark.sql.ansi.enabled", ansi)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.speculation", speculation.toString)
-      .config("spark.speculation.interval", "100ms")
-      .config("spark.speculation.multiplier", "1.5")
-      .config("spark.speculation.quantile", "0.5")
-      .config("spark.ui.enabled", "false")
-    val b =
-      if (master.startsWith("local-cluster"))
-        b0.config("spark.executor.extraClassPath", absoluteClassPath)
-          .config("spark.executor.extraJavaOptions", addOpensFlags)
-          .config("spark.executor.memory", executorMem)
-      else b0
-    b.getOrCreate()
-  }
 }

@@ -27,8 +27,7 @@ import graft.pipeline.{Dedup, Packing, Sampling, TextAnalysis}
   */
 object CurationPipeline {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.build("local[8]", "8", appName = "graft-curation")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start("graft-curation", graft.Sessions.Settings("local[8]", 8))
 
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse(

@@ -16,8 +16,7 @@ import graft.testing.Builders
   */
 object Primer {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.build("local[4]", "4", appName = "graft-primer")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start("graft-primer", graft.Sessions.Settings("local[4]", 4))
 
     // ---- Part 1: the primer GroupAggregate ----
     val view = Builders.block(spark,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.launcher.JavaModuleOptions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins native-expression query results bit-identical across `local[4]`
@@ -13,7 +14,7 @@ class CrossMasterSpec extends AnyFunSuite {
   test("native-expression gates are bit-identical across a real executor wire") {
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val cmd: Seq[String] =
-      Seq(javaBin) ++ Sessions.addOpensArgv ++ Seq(
+      Seq(javaBin) ++ JavaModuleOptions.defaultModuleOptionArray() ++ Seq(
         "-Xmx3g", "-Dspark.ui.enabled=false",
         "-cp", sys.props("java.class.path"),
         "graft.CrossMaster", "/root/testdata/sf0.001")

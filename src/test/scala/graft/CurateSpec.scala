@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.launcher.JavaModuleOptions
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Smoke-runs the end-to-end curation chain (graft.Curate) in a child JVM
@@ -21,7 +22,7 @@ class CurateSpec extends SparkSpec {
     val outDir = java.nio.file.Files.createTempDirectory("curate-spec").toString
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val cmd: Seq[String] =
-      Seq(javaBin) ++ Sessions.addOpensArgv ++ Seq(
+      Seq(javaBin) ++ JavaModuleOptions.defaultModuleOptionArray() ++ Seq(
         "-Xmx3g", "-Dspark.ui.enabled=false",
         "-cp", sys.props("java.class.path"),
         "graft.Curate", "/root/testdata/sf0.001", outDir)

@@ -70,6 +70,7 @@ class EntryContractSpec extends AnyFunSuite {
     val lists = Seq(
       "PlanLint.allowlist" -> PlanLint.allowlist.keys.toSeq,
       "CrossMaster.DefaultQueries" -> CrossMaster.DefaultQueries,
+      "Explain.DefaultQueries" -> Explain.DefaultQueries,
       "tools/faultinject.sh GATES" -> "q\\w+".r.findAllIn(faultInject).toSeq,
       "perfbench LOOPS" -> quoted(between(workloads, "LOOPS = (", ")")),
       "perfbench STREAMING" -> quoted(between(workloads, "STREAMING = (", ")")))

@@ -50,15 +50,7 @@ object SparkSpec {
     // retry-determinism. Deterministic task bugs still surface (they fail
     // all 4 attempts); only a flaky nondeterministic task failure could
     // be masked — the precise class TaskRetrySpec exists to hunt.
-    val s = SparkSession.builder()
-      .master("local[4, 4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.start("graft-test", Sessions.Settings("local[4, 4]", 4))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

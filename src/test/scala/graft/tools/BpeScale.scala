@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual scale runner for BPE training (not a test): measures the
   * batched trainer at a realistic merge count and, optionally, the
   * serial trainer for the per-round comparison.
@@ -18,12 +16,7 @@ object BpeScale {
     // exhaust at ~89); customer names carry digit-rich 15k-word entropy
     val table = if (args.length > 3) args(3) else "customer"
     val column = if (args.length > 4) args(4) else "c_name"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start("graft-bpescale", graft.Sessions.Settings("local[32]", 32))
     val docs = spark.read.parquet(s"$sfDir/$table.parquet")
     val t0 = System.nanoTime()
     val ms = graft.pipeline.Bpe.trainMergesBatched(docs, column, merges)
