@@ -1,5 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbus.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.gates.Gates
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
@@ -20,9 +28,102 @@ import graft.gates.Gates
   * owned by each attempt's frames (pipeline.Checkpoints), which the GC
   * collects so ContextCleaner frees them; nothing in the library enters
   * the session's CacheManager, so there is no cache to clear.
+  *
+  * Each attempt records itself ([[attempt]]): its Spark jobs, the
+  * per-operator stats of its write and its streaming batches, heard by
+  * listeners attached around the timed write, so the record describes
+  * the run whose wall it sits next to (the reference's
+  * BenchmarkedCursor analog, benchmark/infrastructure/
+  * benchmark_listener.h). Every JSONL line carries the record of the
+  * attempt whose wall it reports.
   * Session settings: the README table "Session settings".
   */
 object Bench {
+  /** One Spark job of an attempt: bus times in epoch ms (`end` is -1
+    * when the job's end never arrived), stage and task counts at
+    * submission, skipped stages included. */
+  final case class Job(id: Int, start: Long, end: Long, stages: Int, tasks: Int) {
+    def sec: Double = if (end > 0) (end - start) / 1e3 else -1.0
+  }
+
+  /** What one attempt ran: its Spark jobs in start order, the operators
+    * of its noop write's executed plan ([[Instrument.fromPlan]]), and the
+    * batches of every streaming query it ran, keyed by the query's id —
+    * the id survives a checkpoint resume, so both phases of a two-phase
+    * stream gate sit under one key. */
+  final case class Record(jobs: Seq[Job], operators: Seq[OperatorStat],
+                          streams: Seq[(String, Seq[Instrument.StreamBatchStat])]) {
+    /** Summed wall time of the jobs, s. */
+    def jobSec: Double = jobs.filter(_.end > 0).map(j => j.end - j.start).sum / 1e3
+    /** Driver time between one job's end and the next job's start, s
+      * (AQE replanning, plan analysis, driver-side loop bookkeeping). */
+    def driverGapSec: Double = jobs.sliding(2).collect {
+      case Seq(a, b) if a.end > 0 => math.max(0L, b.start - a.end)
+    }.sum / 1e3
+    /** The record as JSON object members, to follow a line's own. */
+    def jsonFields: String = {
+      val list = jobs.map(j =>
+        s"""{"id":${j.id},"sec":${j.sec},"stages":${j.stages},"tasks":${j.tasks}}""")
+      val batches = streams.map { case (id, bs) =>
+        s""""${Instrument.jstr(id)}":${Instrument.batchesJson(bs)}""" }
+      s""""jobs":${jobs.size},"stages":${jobs.map(_.stages).sum},""" +
+        s""""tasks":${jobs.map(_.tasks).sum},"job_sec":$jobSec,""" +
+        s""""driver_gap_sec":$driverGapSec,"job_list":${list.mkString("[", ",", "]")},""" +
+        s""""operators":${Instrument.operatorsJson(operators)},""" +
+        s""""streams":${batches.mkString("{", ",", "}")}"""
+    }
+  }
+
+  /** One timed attempt: build the query at `sfDir` and write it to the
+    * noop sink (the full plan executes; no count()-driven column
+    * pruning). The wall covers build and write; -1 marks failure. A
+    * SparkListener (jobs, stream progress — it hears the child sessions
+    * of `Sessions.withDerivedPartitions` too) and a QueryExecutionListener
+    * (the write's executed plan) are attached around the timed window,
+    * and the bus is drained after it, so the record holds exactly this
+    * attempt. */
+  def attempt(spark: SparkSession, sfDir: String, name: String,
+              build: (SparkSession, String) => DataFrame): (Double, Record) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[QueryProgressEvent]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Job(e.jobId, e.time, -1L, e.stageInfos.size,
+          e.stageInfos.map(_.numTasks).sum))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.computeIfPresent(e.jobId, (_, j) => j.copy(end = e.time))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent => progress.add(p)
+        case _ => ()
+      }
+    }
+    // the last plan this session executed: the noop write's, once it ran
+    val written = new java.util.concurrent.atomic.AtomicReference[QueryExecution]()
+    val plans = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.sparkSession eq spark) written.set(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBus.drain(sc) // earlier events stay out of this attempt
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(plans)
+    val t0 = System.nanoTime()
+    val wall =
+      try { build(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0 }
+    try ListenerBus.drain(sc)
+    finally { sc.removeSparkListener(listener); spark.listenerManager.unregister(plans) }
+    val operators =
+      if (wall < 0 || written.get == null) Nil
+      else Instrument.fromPlan(written.get.executedPlan)
+    val batches = progress.asScala.toSeq.map(_.progress)
+    val streams = batches.map(_.id).distinct.map { id =>
+      id.toString -> batches.filter(_.id == id).map(Instrument.fromProgress) }
+    (wall, Record(jobs.values.asScala.toSeq.sortBy(j => (j.start, j.id)), operators, streams))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional args filter to the named queries (local A/B timing); an
@@ -35,15 +136,6 @@ object Bench {
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // noop sink: full plan executes (no count()-driven column pruning).
-    // One timed execution; -1 marks failure so the JSON is unambiguous.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 name: String): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); -1.0 }
-    }
     // Untimed inter-attempt reset: pay GC debt here, not in the next timed
     // window; the GC also lets ContextCleaner free the last attempt's blocks.
     def reset(): Unit = System.gc()
@@ -68,13 +160,15 @@ object Bench {
         catch { case e: Throwable => System.err.println(s"[bench] setup $name: $e") }
       }
       reset()
-      val first = timeOnce(fn, name)
-      val extra = if (first < 0) 0 else if (first >= 4.0) 1 else 2
-      val times = first +: (1 to extra).map { _ => reset(); timeOnce(fn, name) }
-      val valid = times.filter(_ >= 0)
-      val best = if (valid.isEmpty) -1.0 else valid.min
+      val first = attempt(spark, sfDir, name, fn)
+      val extra = if (first._1 < 0) 0 else if (first._1 >= 4.0) 1 else 2
+      val attempts = first +: (1 to extra).map { _ => reset(); attempt(spark, sfDir, name, fn) }
+      val valid = attempts.filter(_._1 >= 0)
+      // the best attempt's record; when every attempt failed, the last's
+      val (best, record) = if (valid.isEmpty) attempts.last else valid.minBy(_._1)
       jsonl.foreach { w =>
-        w.println(s"""{"query":"$name","sec":$best,"sf":"$sfDir"}"""); w.flush()
+        w.println(s"""{"query":"$name","sec":$best,"sf":"$sfDir",${record.jsonFields}}""")
+        w.flush()
       }
       name -> best
     }.toMap
@@ -113,12 +207,14 @@ object Bench {
           v >= 0 && baselines.get(n).exists(b => b > 0 && v > 2 * b)
         }.sortBy(_._1)
         suspects.map { case (n, first) =>
-          val again = (1 to 3).map { _ => reset(); timeOnce(SparkEntry.queries(n), n) }
-          val ok = again.filter(_ >= 0).sorted
-          val med = if (ok.isEmpty) -1.0 else ok(ok.size / 2)
+          val again = (1 to 3).map { _ =>
+            reset(); attempt(spark, sfDir, n, SparkEntry.queries(n)) }
+          val ok = again.filter(_._1 >= 0).sortBy(_._1)
+          val (med, record) = if (ok.isEmpty) again.last else ok(ok.size / 2)
           jsonl.foreach { w =>
             w.println(s"""{"query":"$n","sec":$med,"sf":"$sfDir","rerun":true,"""
-              + s""""first_pass":$first,"samples":[${again.mkString(",")}]}"""); w.flush()
+              + s""""first_pass":$first,"samples":[${again.map(_._1).mkString(",")}],"""
+              + s"""${record.jsonFields}}"""); w.flush()
           }
           n -> (first, med)
         }.toMap
@@ -155,24 +251,6 @@ object Bench {
     val top = finalResults.toSeq.sortBy(-_._2).take(12)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${f"$total%.4f"},"unit":"sec","n_queries":${finalResults.size},"n_failed":${finalResults.values.count(_ < 0)},"n_reruns":${rerunInfo.size},"queries":$top$rerunsJson,"queries_truncated":true,"queries_full":"$lastPath","queries_jsonl":"$jsonlPath","sf":"$sfDir"}""")
-    // Optional per-operator stats dump (reference benchmark-framework
-    // analog): SPARK_GRAFT_STATS=<path> re-runs each picked query UNTIMED
-    // and writes one JSON line of per-node SQLMetric stats per query.
-    sys.env.get("SPARK_GRAFT_STATS").foreach { path =>
-      val w = Instrument.utf8Writer(path)
-      try picked.sortBy(_._1).foreach { case (name, fn) =>
-        try {
-          Instrument.drainStreamStats() // discard progress left by timed runs
-          w.println(Instrument.toJson(name, Instrument.stats(fn(spark, sfDir))))
-          // streaming gates also publish per-batch rows/state progress —
-          // one extra JSON line per streaming run inside the query
-          Instrument.drainStreamStats().foreach { case (label, batches) =>
-            w.println(Instrument.streamToJson(name, label, batches))
-          }
-        } catch { case e: Throwable => System.err.println(s"[stats] $name: $e") }
-      } finally w.close()
-      System.err.println(s"[stats] per-operator stats written to $path")
-    }
     spark.stop()
   }
 }

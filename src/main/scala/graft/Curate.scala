@@ -21,11 +21,10 @@ import graft.pipeline.{Contamination, Dedup, Dsir, Packing, Sampling, Shards, Te
   *
   * Usage: graft.Curate <sfDir> <outDir> [evalParquetDir]
   * Session settings: the README table "Session settings".
-  * Env: SPARK_GRAFT_EVAL_DIR (same as
-  * the third arg: a parquet of (doc_id, text) benchmark/eval docs for
+  * `evalParquetDir`: a parquet of (doc_id, text) benchmark/eval docs for
   * the decontamination stage — a REAL run passes its held-out eval set
   * here; absent, the stage falls back to a deterministic 2% self-sample
-  * so the demo record stays reproducible with no external input).
+  * so the demo record stays reproducible with no external input.
   * Prints one JSONL line per stage (name, rows, seconds and the schema
   * the next stage reads the artifact with) and a final one-line JSON
   * summary with the chain's Spark job count (same last-line contract as
@@ -42,8 +41,7 @@ object Curate {
     // the eval set it must not train on; the self-sample below is only
     // the zero-input demo default.
     val externalEval: Option[DataFrame] =
-      args.lift(2).orElse(sys.env.get("SPARK_GRAFT_EVAL_DIR"))
-        .map(p => spark.read.parquet(p).select("doc_id", "text"))
+      args.lift(2).map(p => spark.read.parquet(p).select("doc_id", "text"))
 
     // every Spark job of the chain; read once spark.stop() has drained the bus
     val jobs = new java.util.concurrent.atomic.AtomicLong
@@ -102,7 +100,7 @@ object Curate {
     }
 
     // 5. Benchmark decontamination: the externally-supplied eval set
-    // (arg 3 / SPARK_GRAFT_EVAL_DIR) when given — the production shape —
+    // (arg 3) when given — the production shape —
     // else a deterministic 2% hash-sample OF THE
     // DEDUPED corpus stands in for the eval benchmark; any surviving
     // training doc whose 3-gram shingles are ≥80% covered by the

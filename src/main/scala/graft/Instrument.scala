@@ -195,16 +195,16 @@ object Instrument {
     b.result()
   }
 
-  /** One-line JSON per operator (Bench's optional stats dump). */
-  def toJson(name: String, stats: Seq[OperatorStat]): String = {
+  /** The operators as one JSON array, one object per node (Bench's
+    * per-attempt record). */
+  def operatorsJson(stats: Seq[OperatorStat]): String = {
     def opt[A](v: Option[A]): String = v.map(_.toString).getOrElse("null")
-    val nodes = stats.map { s =>
+    stats.map { s =>
       s"""{"id":${s.nodeId},"parent":${s.parentId},"op":"${jstr(s.operator)}",""" +
         s""""rows":${opt(s.rowsProcessed)},"time_us":${opt(s.processingTimeUs)},""" +
         s""""throughput":${opt(s.throughput)},"return_rate":${opt(s.returnRate)},""" +
         s""""row_rate":${opt(s.rowProcessingRate)},"rel_time":${opt(s.relativeTime)}}"""
     }.mkString("[", ",", "]")
-    s"""{"query":"${jstr(name)}","operators":$nodes}"""
   }
 
   // ===== Streaming observability (per-batch progress, the streaming face
@@ -244,40 +244,17 @@ object Instrument {
   def streamStats(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[StreamBatchStat] =
     q.recentProgress.toSeq.map(fromProgress)
 
-  /** Progress recorded by the streaming gate harnesses, keyed by gate
-    * label — a query's StreamingQuery handle lives inside the gate
-    * function, so the harness publishes its progress here for Bench's
-    * stats dump to drain (multiple runs of one label — checkpoint
-    * resume — append). */
-  private val recordedStreams =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[StreamBatchStat]]()
-
-  def recordStreamProgress(label: String,
-                           q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    recordedStreams.merge(label, streamStats(q), (a, b) => a ++ b)
-
-  /** Snapshot-and-clear the recorded stream progress (Bench drains after
-    * each query so stream stats attach to the gate that produced them). */
-  def drainStreamStats(): Map[String, Seq[StreamBatchStat]] = {
-    import scala.jdk.CollectionConverters._
-    val snap = recordedStreams.asScala.toMap
-    recordedStreams.clear()
-    snap
-  }
-
-  /** One JSON line for a gate's streaming batches (NaN/Infinity rates —
-    * empty batches — serialize as null; JSON has no non-finite numbers). */
-  def streamToJson(query: String, label: String,
-                   batches: Seq[StreamBatchStat]): String = {
+  /** A stream's batches as one JSON array (NaN/Infinity rates — empty
+    * batches — serialize as null; JSON has no non-finite numbers). */
+  def batchesJson(batches: Seq[StreamBatchStat]): String = {
     def num(d: Double): String = if (java.lang.Double.isFinite(d)) d.toString else "null"
     def opt[A](v: Option[A]): String = v.map(_.toString).getOrElse("null")
-    val bs = batches.map { b =>
+    batches.map { b =>
       s"""{"batch":${b.batchId},"rows":${b.numInputRows},""" +
         s""""rows_per_sec":${num(b.processedRowsPerSecond)},""" +
         s""""duration_ms":${b.batchDurationMs},"state_rows":${opt(b.stateRows)},""" +
         s""""state_bytes":${opt(b.stateMemoryBytes)},""" +
         b.watermark.map(w => s""""watermark":"${jstr(w)}"}""").getOrElse(""""watermark":null}""")
     }.mkString("[", ",", "]")
-    s"""{"query":"${jstr(query)}","stream":"${jstr(label)}","batches":$bs}"""
   }
 }

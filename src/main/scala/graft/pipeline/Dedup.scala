@@ -600,11 +600,9 @@ object Dedup {
     * 1.4 s + 0.45 µs/candidate, prefix ≈ 4.9 s · (n/5000)^0.43 — see
     * OPTIMIZATION_r17.md), erring toward the prefix path because past
     * the crossover blind grows QUADRATICALLY while prefix near it costs
-    * ≤ 1.5× — the asymmetric risk at 100 TB. Env override
-    * SPARK_GRAFT_BLIND_LIMIT for deployment tuning, validated as a
-    * positive integer when a call reads it (`Sessions.positiveLong`). */
-  def DefaultBlindCandidateLimit: Long =
-    graft.Sessions.env("SPARK_GRAFT_BLIND_LIMIT", graft.Sessions.positiveLong).getOrElse(16000000L)
+    * ≤ 1.5× — the asymmetric risk at 100 TB. A deployment tunes it per
+    * call through `blindCandidateLimit` (as DedupScale does). */
+  val DefaultBlindCandidateLimit: Long = 16000000L
 
   /** Pairwise n-gram Jaccard with double length-bucket blocking: each doc
     * lands in buckets floor(len/W) and floor(len/W)+1, so any pair whose

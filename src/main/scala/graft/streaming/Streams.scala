@@ -507,7 +507,7 @@ object Streams {
     val ckpt = work.resolve("ckpt").toString
     // no state-partition override: the stream-static anti-join holds no
     // state store (re-executed per batch), so there is no per-partition
-    // store protocol to amortize — see cdcStreamGate's note.
+    // store protocol to amortize — see versionedStateStreamGate's note.
     val blockSchema = StructType(Seq(StructField("user_id", LongType)))
     def runToCompletion(): Unit = {
       val stream = readEvents(spark, in.toString, glob = "events*.parquet")
@@ -517,7 +517,6 @@ object Streams {
           .select(col("event_id"), col("user_id"), col("event_type")),
         outDir, ckpt, trigger = Some(Trigger.AvailableNow()))
       q.awaitTermination()
-      graft.Instrument.recordStreamProgress(work.getFileName.toString, q)
     }
     runToCompletion()
     // refresh the blocklist, then deliver phase 2 + the sentinel
@@ -578,9 +577,6 @@ object Streams {
         pipeline(() => readEvents(child, in.toString, glob = "events*.parquet")),
         outDir, ckpt, trigger = Some(Trigger.AvailableNow()))
       q.awaitTermination()
-      // per-batch rows/state metrics for Bench's stats dump (the
-      // streaming face of the per-operator SQLMetric stats)
-      graft.Instrument.recordStreamProgress(work.getFileName.toString, q)
     }
     runToCompletion()
     // Sentinel phase: stage one event 30 days past the newest real one
@@ -614,7 +610,44 @@ object Streams {
   def cdcStreamGate(spark: SparkSession, workDir: String,
                     base: DataFrame, keys: Seq[String],
                     phase1: DataFrame, phase2: DataFrame,
-                    seqCol: String = "seq", opCol: String = "op"): DataFrame = {
+                    seqCol: String = "seq", opCol: String = "op"): DataFrame =
+    versionedStateStreamGate(spark, workDir, base, phase1, phase2, "cdcStreamGate") {
+      (image, batch) =>
+        graft.operators.Relational.applyChangeLog(image, batch, keys, seqCol, opCol)
+    }
+
+  /** Streaming INCREMENTAL AGGREGATE maintenance — the materialized-view
+    * half of the CDC story (cdcStreamGate keeps the latest row image;
+    * this keeps a (key, sum, count) aggregate current): each micro-batch
+    * of I/D changes folds into the previous aggregate snapshot via
+    * `Aggregates.incrementalSumCount` — the base table is NEVER
+    * rescanned, which is the whole point at 100 TB. Same versioned-state
+    * + checkpoint-resume harness as cdcStreamGate: phase 1 streams, the
+    * query stops, phase 2 lands, the RESUMED checkpoint processes only
+    * the new files. Batch ids are monotonic across the resume, so state
+    * versions can't collide. Returns the final aggregate image. */
+  def incrementalAggStreamGate(spark: SparkSession, workDir: String,
+                               baseAgg: DataFrame, keys: Seq[String],
+                               valueCol: String, opCol: String,
+                               phase1: DataFrame, phase2: DataFrame): DataFrame =
+    versionedStateStreamGate(spark, workDir, baseAgg, phase1, phase2,
+        "incrementalAggStreamGate") { (image, batch) =>
+      graft.operators.Aggregates.incrementalSumCount(image, batch, keys, valueCol, opCol)
+    }
+
+  /** The versioned-state harness behind [[cdcStreamGate]] and
+    * [[incrementalAggStreamGate]]: `base` is image v0; micro-batch `i`
+    * folds its changes into the newest image at or below version `i` and
+    * overwrites image `i+1`. Phase 1's changes stream to completion, then
+    * phase 2's land and the query resumes from its checkpoint. Returns
+    * the newest image. No state-partition override: foreachBatch holds no
+    * state store (the versioned parquet image IS the state), and the fold
+    * is plain batch compute where AQE sizes the exchanges — shrinking its
+    * parallelism only serializes it. */
+  private def versionedStateStreamGate(spark: SparkSession, workDir: String,
+                                       base: DataFrame, phase1: DataFrame,
+                                       phase2: DataFrame, gate: String)
+                                      (fold: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     import java.nio.file.{Files, Paths}
     val work = Paths.get(workDir)
     deleteRecursively(work)
@@ -630,18 +663,13 @@ object Streams {
           .toArray(new Array[java.nio.file.Path](_))
           .map(_.getFileName.toString.drop(1).toLong).filter(_ <= maxV)
         finally listing.close()
-      require(vs.nonEmpty, s"cdcStreamGate: no state image at or below v$maxV")
+      require(vs.nonEmpty, s"$gate: no state image at or below v$maxV")
       spark.read.parquet(state.resolve(f"v${vs.max}%05d").toString)
     }
     val changeSchema = phase1.schema
-    require(phase2.schema == changeSchema,
-      "cdcStreamGate: phase schemas must match")
+    require(phase2.schema == changeSchema, s"$gate: phase schemas must match")
     stageParquetParts(phase1, work, in, "changes_a")
     val ckpt = work.resolve("ckpt").toString
-    // no state-partition override here: foreachBatch holds no state
-    // store (the versioned parquet image IS the state), and the inner
-    // applyChangeLog join is plain batch compute where AQE sizes the
-    // exchanges — shrinking its parallelism only serializes the join.
     def runToCompletion(): Unit = {
       val stream = spark.readStream.schema(changeSchema)
         .option("pathGlobFilter", "changes*.parquet").parquet(in.toString)
@@ -650,76 +678,11 @@ object Streams {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          val next = graft.operators.Relational.applyChangeLog(
-            latestImageAtMost(id), batch, keys, seqCol, opCol)
-          next.write.mode("overwrite")
+          fold(latestImageAtMost(id), batch).write.mode("overwrite")
             .parquet(state.resolve(f"v${id + 1}%05d").toString)
         }
         .start()
       q.awaitTermination()
-      graft.Instrument.recordStreamProgress(work.getFileName.toString, q)
-    }
-    runToCompletion()
-    stageParquetParts(phase2, work, in, "changes_b")
-    runToCompletion()
-    latestImageAtMost(Long.MaxValue)
-  }
-
-  /** Streaming INCREMENTAL AGGREGATE maintenance — the materialized-view
-    * half of the CDC story (cdcStreamGate keeps the latest row image;
-    * this keeps a (key, sum, count) aggregate current): each micro-batch
-    * of I/D changes folds into the previous aggregate snapshot via
-    * `Aggregates.incrementalSumCount` — the base table is NEVER
-    * rescanned, which is the whole point at 100 TB. Same versioned-state
-    * + checkpoint-resume harness as cdcStreamGate: phase 1 streams, the
-    * query stops, phase 2 lands, the RESUMED checkpoint processes only
-    * the new files. Batch ids are monotonic across the resume, so state
-    * versions can't collide. Returns the final aggregate image. */
-  def incrementalAggStreamGate(spark: SparkSession, workDir: String,
-                               baseAgg: DataFrame, keys: Seq[String],
-                               valueCol: String, opCol: String,
-                               phase1: DataFrame, phase2: DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val work = Paths.get(workDir)
-    deleteRecursively(work)
-    val in = work.resolve("in")
-    val state = work.resolve("state")
-    Files.createDirectories(in)
-    Files.createDirectories(state)
-    baseAgg.write.parquet(state.resolve("v00000").toString)
-    def latestImageAtMost(maxV: Long): DataFrame = {
-      val listing = Files.list(state)
-      val vs =
-        try listing.filter(p => p.getFileName.toString.startsWith("v"))
-          .toArray(new Array[java.nio.file.Path](_))
-          .map(_.getFileName.toString.drop(1).toLong).filter(_ <= maxV)
-        finally listing.close()
-      require(vs.nonEmpty, s"incrementalAggStreamGate: no state at or below v$maxV")
-      spark.read.parquet(state.resolve(f"v${vs.max}%05d").toString)
-    }
-    val changeSchema = phase1.schema
-    require(phase2.schema == changeSchema,
-      "incrementalAggStreamGate: phase schemas must match")
-    stageParquetParts(phase1, work, in, "changes_a")
-    val ckpt = work.resolve("ckpt").toString
-    // no state-partition override: foreachBatch, stateless — see
-    // cdcStreamGate's note.
-    def runToCompletion(): Unit = {
-      val stream = spark.readStream.schema(changeSchema)
-        .option("pathGlobFilter", "changes*.parquet").parquet(in.toString)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val next = graft.operators.Aggregates.incrementalSumCount(
-            latestImageAtMost(id), batch, keys, valueCol, opCol)
-          next.write.mode("overwrite")
-            .parquet(state.resolve(f"v${id + 1}%05d").toString)
-        }
-        .start()
-      q.awaitTermination()
-      graft.Instrument.recordStreamProgress(work.getFileName.toString, q)
     }
     runToCompletion()
     stageParquetParts(phase2, work, in, "changes_b")
@@ -836,7 +799,6 @@ object Streams {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      graft.Instrument.recordStreamProgress(work.getFileName.toString, q)
     }
     runToCompletion()
     stageParquetParts(docs.where(col("doc_id") % 2 =!= 0), work, in, "docs_b")

@@ -57,16 +57,16 @@ class InstrumentSpec extends SparkSpec {
     // render and JSON are well-formed (smoke: every operator name appears)
     val rendered = Instrument.render(stats)
     assert(stats.forall(s => rendered.contains(s.operator)))
-    val json = Instrument.toJson("probe", stats)
-    assert(json.startsWith("""{"query":"probe","operators":[""") && json.endsWith("]}"))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val nodes = om.readTree(Instrument.operatorsJson(stats))
+    assert(nodes.isArray && nodes.size == stats.size)
+    assert(nodes.get(0).get("op").asText == stats.head.operator)
     // every control char is escaped, so the line stays valid JSON
     val raw = "a\"b\\c\nd\re\tf\u0001g\u001fh"
     val esc = Instrument.jstr(raw)
     assert(esc == "a\\\"b\\\\c\\nd\\re\\tf\\u0001g\\u001fh", esc)
     assert(!esc.exists(_ < ' '))
-    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Instrument.toJson(raw, stats)).get("query").asText
-    assert(parsed == raw)
+    assert(om.readTree("\"" + esc + "\"").asText == raw)
   }
 
   test("benchmark proto + DOT faces render a live executed plan") {
@@ -151,38 +151,11 @@ class InstrumentSpec extends SparkSpec {
       assert(stats.forall(_.stateRows.contains(3L)), s"state rows off in $stats")
       assert(stats.forall(_.stateMemoryBytes.exists(_ > 0L)))
       assert(stats.forall(_.batchDurationMs >= 0L))
-      // registry: record -> drain attaches progress to a gate label, and
-      // draining clears it
-      Instrument.drainStreamStats()
-      Instrument.recordStreamProgress("mem_gate", q)
-      val drained = Instrument.drainStreamStats()
-      assert(drained.keySet == Set("mem_gate") &&
-        drained("mem_gate").map(_.numInputRows).sum == 150L)
-      assert(Instrument.drainStreamStats().isEmpty)
-      // JSON line is well-formed-ish: no NaN/Infinity leaks, label quoted
-      val json = Instrument.streamToJson("q_x", "mem_gate", drained("mem_gate"))
-      assert(json.contains("\"stream\":\"mem_gate\"") &&
-        !json.contains("NaN") && !json.contains("Infinity"))
+      // the JSON array is well-formed: no NaN/Infinity leaks
+      val json = Instrument.batchesJson(Instrument.streamStats(q))
+      assert(!json.contains("NaN") && !json.contains("Infinity"))
+      assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(json).isArray)
     } finally q.stop()
-  }
-
-  test("streaming gate harnesses publish per-batch progress for the stats dump") {
-    // the real file-source gate records its two checkpointed runs under
-    // the workDir label; batches across runs accumulate
-    val work = java.nio.file.Files.createTempDirectory("graft_instr_stream")
-    Instrument.drainStreamStats()
-    val out = graft.streaming.Streams.windowedStreamGate(
-      spark, "/root/testdata/sf0.001", work.toString)
-    assert(out.count() > 0)
-    val drained = Instrument.drainStreamStats()
-    val label = work.getFileName.toString
-    assert(drained.contains(label), s"expected $label in ${drained.keySet}")
-    val batches = drained(label)
-    assert(batches.exists(_.numInputRows > 0))
-    // the windowed aggregate is stateful: some batch must report state
-    assert(batches.exists(_.stateRows.exists(_ > 0L)),
-      s"no state rows in $batches")
-    graft.streaming.Streams.deleteRecursively(work)
   }
 }
 

@@ -3,24 +3,24 @@ package graft
 import scala.jdk.CollectionConverters._
 
 /** The parsers behind the SPARK_GRAFT_* settings (positive integers for
-  * cores, shuffle partitions and the blind-join candidate limit; flags
-  * for AQE, ANSI and speculation; the session time zone), the one
-  * `Sessions.Settings` every main reads them into, the builder options a
-  * session starts with, and the partition derivation of the scoped
-  * loop/stream sessions. */
+  * cores and shuffle partitions; flags for AQE, ANSI and speculation; the
+  * session time zone), the one `Sessions.Settings` every main reads them
+  * into, the builder options a session starts with, the driver JVM's
+  * module flags, and the partition derivation of the scoped loop/stream
+  * sessions. */
 class SessionsSpec extends SparkSpec {
 
   test("positiveLong accepts positive integers") {
-    assert(Sessions.positiveLong("SPARK_GRAFT_BLIND_LIMIT", "16000000") == 16000000L)
-    assert(Sessions.positiveLong("SPARK_GRAFT_BLIND_LIMIT", "1") == 1L)
+    assert(Sessions.positiveLong("SPARK_GRAFT_CPUS", "16000000") == 16000000L)
+    assert(Sessions.positiveLong("SPARK_GRAFT_CPUS", "1") == 1L)
   }
 
   test("positiveLong rejects malformed, zero and negative values, naming the setting") {
     for (raw <- Seq("", "abc", "1.5", "16e6", " 7", "9223372036854775808", "0", "-1", "-16000000")) {
       val ex = intercept[IllegalArgumentException] {
-        Sessions.positiveLong("SPARK_GRAFT_BLIND_LIMIT", raw)
+        Sessions.positiveLong("SPARK_GRAFT_CPUS", raw)
       }
-      assert(ex.getMessage.contains("SPARK_GRAFT_BLIND_LIMIT must be a positive integer"),
+      assert(ex.getMessage.contains("SPARK_GRAFT_CPUS must be a positive integer"),
         s"for '$raw': ${ex.getMessage}")
       assert(ex.getMessage.contains(s"'$raw'"))
     }
@@ -123,6 +123,13 @@ class SessionsSpec extends SparkSpec {
     assert(users == Seq("src/main/scala/graft/Sessions.scala"))
   }
 
+  test("the forked test JVM runs with every driver module flag of Spark's launcher") {
+    val args = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSet
+    val missing = org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray()
+      .filterNot(args.contains)
+    assert(missing.isEmpty, s"missing from the JVM's arguments: ${missing.mkString(" ")}")
+  }
+
   /** (exit code, stdout + stderr) of `main args` in a child JVM whose
     * working directory is `dir`, with `env` added. */
   private def child(main: String, args: Seq[String], dir: String,
@@ -137,14 +144,14 @@ class SessionsSpec extends SparkSpec {
     (proc.waitFor(), log)
   }
 
-  test("Verify and JobProfile reject a malformed SPARK_GRAFT_SHUFFLE_PARTITIONS, naming it") {
+  test("Verify and Bench reject a malformed SPARK_GRAFT_SHUFFLE_PARTITIONS, naming it") {
     // the mains parse their settings before they start a session, so a
     // child JVM given a bad value exits at once; Verify's speculation flag
     // goes through the same parser, and Curate reads the same settings
     val out = java.nio.file.Files.createTempDirectory("graft-shuffle-env").toString
     val verify = "graft.Verify" -> Seq(sf(), out, "q1_agg")
     val shuffle = "SPARK_GRAFT_SHUFFLE_PARTITIONS"
-    val mains = Seq(verify, "graft.JobProfile" -> Seq("q1_agg"),
+    val mains = Seq(verify, "graft.Bench" -> Seq("q1_agg"),
       "graft.Curate" -> Seq(sf(), s"$out/curate"))
     val cases = mains.flatMap { m =>
       Seq("abc", "0").map(raw => (m, shuffle, raw, s"$shuffle must be a positive integer, got '$raw'"))
@@ -157,10 +164,10 @@ class SessionsSpec extends SparkSpec {
     }
   }
 
-  test("JobProfile, PlanDump, Explain and CrossMaster reject an unknown gate name before a session starts") {
+  test("Bench, PlanDump, Explain and CrossMaster reject an unknown gate name before a session starts") {
     val out = java.nio.file.Files.createTempDirectory("graft-gate-names").toString
     val cases = Seq(
-      "graft.JobProfile" -> Seq("q1_agg", "q_typo"),
+      "graft.Bench" -> Seq("q1_agg", "q_typo"),
       "graft.PlanDump" -> Seq(out, "x", "q_typo"),
       "graft.Explain" -> Seq(sf(), "q_typo"),
       "graft.CrossMaster" -> Seq(sf(), "q_typo"))

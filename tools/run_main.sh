@@ -1,20 +1,14 @@
 #!/usr/bin/env bash
 # Run a graft main class directly on the compiled classes + Spark jars,
-# bypassing sbt (no build-lock serialization; same JVM flags as build.sbt).
+# bypassing sbt (no build-lock serialization; same JVM flags as build.sbt:
+# Spark's driver module flags from the @argfile `sbt compile` writes).
 # Usage: tools/run_main.sh <mainClass> [args...]
 # Env: SPARK_DRIVER_MEM (default 8g) — matches the sbt fork options.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLASSES=target/scala-2.13/classes
-[ -d "$CLASSES" ] || { echo "compile first: sbt compile" >&2; exit 1; }
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
+OPTIONS=target/java-module-options
+[ -d "$CLASSES" ] && [ -f "$OPTIONS" ] || { echo "compile first: sbt compile" >&2; exit 1; }
+exec java @"$OPTIONS" \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
