@@ -25,8 +25,10 @@ import graft.pipeline.{Contamination, Dedup, Dsir, Packing, Sampling, Shards, Te
   * the decontamination stage — a REAL run passes its held-out eval set
   * here; absent, the stage falls back to a deterministic 2% self-sample
   * so the demo record stays reproducible with no external input.
-  * Prints one JSONL line per stage (name, rows, seconds and the schema
-  * the next stage reads the artifact with) and a final one-line JSON
+  * Prints one JSONL line per stage (name, rows, seconds, `cpu_s` — the
+  * CPU seconds of the whole JVM over the stage: every thread, so JIT
+  * compilation and GC included — and the schema the next stage reads
+  * the artifact with) and a final one-line JSON
   * summary with the chain's Spark job count (same last-line contract as
   * graft.Bench).
   */
@@ -52,8 +54,10 @@ object Curate {
     // The rows come from the write itself (an observed count), and the
     // artifact is read back with the written schema made nullable, as a
     // file source reads it: no schema-inference job and no count job.
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     def stage(name: String)(build: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
+      val (t0, cpu0) = (System.nanoTime(), os.getProcessCpuTime)
       val df = build
       val written = Observation(s"curate_$name")
       df.observe(written, count(lit(1)).as("rows"))
@@ -61,9 +65,9 @@ object Curate {
       val rows = written.get("rows").asInstanceOf[Long]
       val schema = ColumnBridge.asNullable(df.schema)
       val out = spark.read.schema(schema).parquet(s"$outDir/$name")
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (secs, cpu) = ((System.nanoTime() - t0) / 1e9, (os.getProcessCpuTime - cpu0) / 1e9)
       stages(name) = (rows, secs)
-      println(f"""{"stage":"$name","rows":$rows,"sec":$secs%.2f,"schema":${schema.json}}""")
+      println(f"""{"stage":"$name","rows":$rows,"sec":$secs%.2f,"cpu_s":$cpu%.2f,"schema":${schema.json}}""")
       out
     }
 
@@ -78,11 +82,12 @@ object Curate {
         T.langId(col("text")).as("lang_pred"))
     }
 
-    // 2. Quality + language gate: length/punctuation bounds, and the
-    // n-gram lang-id must agree with the declared tag (mismatches are
-    // the classic mislabeled-crawl shard).
+    // 2. Quality + language gate: length/punctuation bounds (T.qualityOk's
+    // rule, read from ingest's columns), and the n-gram lang-id must agree
+    // with the declared tag (mismatches are the classic mislabeled-crawl
+    // shard).
     val filtered = stage("quality_filter") {
-      ingested.where(T.qualityOk(col("text"), minChars = 20, maxChars = 100000)
+      ingested.where(col("n_chars_m").between(20, 100000) && col("punct_ratio") <= 0.2
         && col("lang_pred") === col("lang"))
     }
 

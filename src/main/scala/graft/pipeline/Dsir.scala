@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.TextKernels
 
 /** Data Selection via Importance Resampling (DSIR, Xie et al. 2023,
   * NeurIPS): score every pool document by how much more likely its hashed
@@ -24,44 +25,12 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: one (doc, bucket) explode + groupBy over both corpora
   * for the count tables (≤ 2 · `buckets` rows, collected), a
-  * `buckets`-entry log-ratio table the optimizer folds, shipped as a
-  * literal in the task binary, one per-document scoring projection with
+  * `buckets`-entry log-ratio table the optimizer folds, held by the
+  * scoring kernel in the task binary, one per-document scoring projection with
   * a decimal-sum aggregation by id, and one range-exchange prefix fold
   * for the rank. Shuffles move bucket counts and (id, n, score) rows,
   * never per-bigram rows and never text. */
 object Dsir {
-
-  /** Portable per-token integer key (replay: length/ascii only). */
-  def tokenKey(t: Column): Column =
-    length(t).cast("long") * 31L +
-      ascii(substring(t, 1, 1)).cast("long") * 7L +
-      ascii(substring(t, -1, 1)).cast("long")
-
-  /** Bigram feature bucket: multiplicative scatter of the pair of token
-    * keys, mod `buckets` — pure integer arithmetic, SQL-replayable. */
-  def bigramBucket(k1: Column, k2: Column, buckets: Int): Column =
-    pmod(pmod(pmod(k1 * 1000003L + k2, lit(2147483648L)) * 2654435761L,
-      lit(2147483648L)), lit(buckets.toLong))
-
-  /** Non-empty whitespace tokens of `text`. */
-  private def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => t =!= "")
-
-  /** The bucket of each bigram of `toks`, in order; for 2 or more tokens
-    * only (`sequence(1, 0)` counts down). */
-  private def bigramBuckets(toks: Column, buckets: Int): Column =
-    transform(sequence(lit(1), size(toks) - 1),
-      i => bigramBucket(
-        tokenKey(element_at(toks, i)),
-        tokenKey(element_at(toks, i + 1)), buckets))
-
-  /** One row per bigram occurrence: (id, bucket). Documents with fewer
-    * than 2 tokens contribute no features (they score 0 downstream). */
-  def bigramFeatures(docs: DataFrame, idCol: String, textCol: String,
-                     buckets: Int): DataFrame =
-    docs.select(col(idCol), tokens(col(textCol)).as("__t"))
-      .where(size(col("__t")) >= 2)
-      .select(col(idCol), explode(bigramBuckets(col("__t"), buckets)).as("bucket"))
 
   /** Per-pool-document importance score:
     * Σ_features round(ln(p̂_target(b) / p̂_pool(b)), 9) as DECIMAL —
@@ -74,12 +43,17 @@ object Dsir {
     * bucket (one unseen in either corpus included) is evaluated by the
     * optimizer over a local relation, with no job; and one projection
     * sums each document's ratios, looked up by bucket in that table held
-    * as an array literal, before the sum by id. */
+    * by the scoring kernel, before the sum by id. Both the bucket and the
+    * scoring pass are one native walk of the document's UTF-8 bytes
+    * ([[graft.functions.TextKernels]]): interpreted `transform` and
+    * `aggregate` lambdas evaluated once per bigram cost a third of the
+    * chain's CPU in graft.Curate. */
   def importanceScores(pool: DataFrame, target: DataFrame, idCol: String,
                        textCol: String, buckets: Int): DataFrame = {
+    def features(docs: DataFrame, side: Int) = docs.select(lit(side).as("side"),
+      explode(TextKernels.dsir_bigram_buckets(col(textCol), buckets)).as("bucket"))
     val (tCnt, pCnt) = (new Array[Long](buckets), new Array[Long](buckets))
-    bigramFeatures(target, idCol, textCol, buckets).select(lit(0).as("side"), col("bucket"))
-      .unionByName(bigramFeatures(pool, idCol, textCol, buckets).select(lit(1).as("side"), col("bucket")))
+    features(target, 0).unionByName(features(pool, 1))
       .groupBy("side", "bucket").agg(count(lit(1)))
       .collect()
       .foreach(r => (if (r.getInt(0) == 0) tCnt else pCnt)(r.getLong(1).toInt) = r.getLong(2))
@@ -88,17 +62,12 @@ object Dsir {
         ((col("_1") + 1L).cast("double") / lit(tCnt.sum + buckets).cast("double")) /
           ((col("_2") + 1L).cast("double") / lit(pCnt.sum + buckets).cast("double"))), 9)
         .cast("decimal(20,9)"))
-      .collect().map(_.getDecimal(0))
-    val lr = typedLit(ratio).cast("array<decimal(20,9)>")
-    pool.select(col(idCol), tokens(col(textCol)).as("__t"))
-      .select(col(idCol), when(size(col("__t")) >= 2 && col(idCol).isNotNull,
-        bigramBuckets(col("__t"), buckets)).otherwise(typedLit(Array.empty[Long])).as("__b"))
-      .select(col(idCol), size(col("__b")).cast("long").as("__n"),
-        aggregate(col("__b"), lit(0L).cast("decimal(28,9)"),
-          (acc, b) => (acc + element_at(lr, b.cast("int") + 1)).cast("decimal(28,9)")).as("__s"))
+      .collect().map(_.getDecimal(0).unscaledValue.longValueExact).toIndexedSeq
+    pool.select(col(idCol), TextKernels.dsir_score(
+        when(col(idCol).isNotNull, col(textCol)), ratio).as("__f"))
       .groupBy(col(idCol))
-      .agg(sum(col("__n")).as("n_feats"),
-        sum(col("__s")).cast("decimal(28,9)").as("score"))
+      .agg(sum(col("__f.n_feats")).as("n_feats"),
+        sum(col("__f.score")).cast("decimal(28,9)").as("score"))
   }
 
   /** Keep the most target-like fraction: global 0-based rank on

@@ -2,12 +2,21 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextKernels
 
 /** Text-analysis operators for large-scale training-data pipelines
-  * (beyond-reference surface, SURVEY §7 item 7). Everything is built from
-  * codegen'd `org.apache.spark.sql.functions` — no UDFs — so the operators
-  * run inside whole-stage codegen and scale linearly with input splits:
+  * (beyond-reference surface, SURVEY §7 item 7). Everything runs inside
+  * whole-stage codegen — no UDFs — and scales linearly with input splits:
   * per-document computations have no shuffle at all.
+  *
+  * `tokenCount`, `punctCount`, `markerScore` and `langId` are native byte
+  * walks ([[graft.functions.TextKernels]]), one static call per row. The
+  * composed forms they replace ran a regex trim and split, a regex count
+  * and one `contains` scan per marker word, and graft.Curate's ingest
+  * spent its CPU in them. Each walk gives the composed form's value,
+  * nulls included (`size(null)` is −1, or null under ANSI), and the
+  * marker kernels read Spark's `lower(text)`, so case mapping is Spark's.
+  * The rest is built from codegen'd `org.apache.spark.sql.functions`.
   */
 object TextAnalysis {
 
@@ -33,25 +42,27 @@ object TextAnalysis {
   private def wsTrim(text: Column): Column =
     regexp_replace(text, "^\\s+|\\s+$", "")
 
-  def tokenCount(text: Column): Column = size(tokens(text))
+  /** `size(tokens(text))`: whitespace runs counted natively; a null text
+    * gives Spark's `size(null)`. */
+  def tokenCount(text: Column): Column =
+    coalesce(TextKernels.token_count(text), size(lit(null).cast("array<string>")))
 
   /** BPE-ish token estimate: runs of letters, runs of digits, and single
     * punctuation marks each count as one token. */
   val BpeishPattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
   def bpeishTokenCount(text: Column): Column = regexp_count(text, lit(BpeishPattern))
 
-  /** Characters that are neither word characters nor whitespace. */
-  def punctCount(text: Column): Column = regexp_count(text, lit("[^a-zA-Z0-9\\s]"))
+  /** Characters that are neither word characters nor whitespace:
+    * `regexp_count(text, '[^a-zA-Z0-9\s]')`, counted natively. */
+  def punctCount(text: Column): Column = TextKernels.punct_count(text)
 
   def charCount(text: Column): Column = length(text)
 
-  /** Stopword hits: number of tokens that are in `words` (space-padded
-    * containment, duplicate-insensitive per word). */
-  def markerScore(text: Column, words: Seq[String]): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    words.map(w => when(padded.contains(s" $w "), 1).otherwise(0))
-      .reduce(_ + _)
-  }
+  /** Stopword hits: how many of `words` occur as ` w ` in
+    * `' ' || lower(text) || ' '` (duplicate-insensitive per word; 0 for a
+    * null text), found in one walk of the lowered text. */
+  def markerScore(text: Column, words: Seq[String]): Column =
+    TextKernels.marker_score(lower(text), words)
 
   /** Language-ID marker words (n-gram-heuristic stand-in): function words
     * that discriminate between the pipeline's languages. */
@@ -63,14 +74,9 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
   /** Predict language: highest marker score wins, ties broken by the
-    * declaration order above; all-zero scores → "und" (undetermined). */
-  def langId(text: Column): Column = {
-    val scored = LangMarkers.map { case (lang, ws) => (lang, markerScore(text, ws)) }
-    val best = scored.map(_._2).reduce((a, b) => greatest(a, b))
-    scored.foldRight(lit("und"): Column) { case ((lang, s), acc) =>
-      when(s === best && s > 0, lit(lang)).otherwise(acc)
-    }
-  }
+    * declaration order above; all-zero scores → "und" (undetermined).
+    * Every language's score comes from one walk of the lowered text. */
+  def langId(text: Column): Column = TextKernels.lang_id(lower(text), LangMarkers)
 
   /** Quality heuristics: length bounds, punctuation ratio, stopword ratio,
     * mean token length. Ratios are double divisions of exact integer counts

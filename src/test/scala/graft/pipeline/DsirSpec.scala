@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class DsirSpec extends SparkSpec {
@@ -55,14 +55,34 @@ class DsirSpec extends SparkSpec {
     }
   }
 
+  /** The composable form of DSIR's features, q_dsir's oracle in Spark:
+    * the token key is `length`/`ascii` arithmetic on the whitespace split,
+    * and the bigram bucket a pure integer scatter of two keys. */
+  private def tokenKey(t: Column): Column =
+    length(t).cast("long") * 31L +
+      ascii(substring(t, 1, 1)).cast("long") * 7L +
+      ascii(substring(t, -1, 1)).cast("long")
+
+  private def bigramBucket(k1: Column, k2: Column, buckets: Int): Column =
+    pmod(pmod(pmod(k1 * 1000003L + k2, lit(2147483648L)) * 2654435761L,
+      lit(2147483648L)), lit(buckets.toLong))
+
+  /** One row per bigram occurrence: (id, bucket). */
+  private def bigramFeatures(docs: DataFrame, buckets: Int): DataFrame =
+    docs.select(col("id"), filter(split(col("text"), "\\s+"), t => t =!= "").as("__t"))
+      .where(size(col("__t")) >= 2)
+      .select(col("id"), explode(transform(sequence(lit(1), size(col("__t")) - 1),
+        i => bigramBucket(tokenKey(element_at(col("__t"), i)),
+          tokenKey(element_at(col("__t"), i + 1)), buckets))).as("bucket"))
+
   /** The scorer as a plan of joins: every bucket of `range(buckets)`
     * left-joined to both count tables, the Laplace log-ratio per bucket,
     * a join of the pool's (id, bucket) rows to it summed by id, and the
     * distinct pool ids left-joined to that. */
   private def reference(pool: DataFrame, target: DataFrame, buckets: Int): DataFrame = {
-    def counts(d: DataFrame) = Dsir.bigramFeatures(d, "id", "text", buckets)
+    def counts(d: DataFrame) = bigramFeatures(d, buckets)
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))
-    val feats = Dsir.bigramFeatures(pool, "id", "text", buckets)
+    val feats = bigramFeatures(pool, buckets)
     val (tCounts, pCounts) = (counts(target), counts(pool))
     val tTot = tCounts.agg(coalesce(sum("cnt"), lit(0L)).as("t_tot"))
     val pTot = pCounts.agg(coalesce(sum("cnt"), lit(0L)).as("p_tot"))
@@ -100,32 +120,45 @@ class DsirSpec extends SparkSpec {
     (Some(5L), Some("gamma delta")), // duplicated id: the two rows sum
     (Some(5L), Some("alpha beta gamma")),
     (None, Some("delta alpha beta")), // null id: counted in the pool, scores 0
-    (Some(6L), Some("  spaced   out\ttext  "))
+    (Some(6L), Some("  spaced   out\ttext  ")),
+    (Some(7L), Some("数据 选择 重要性 采样 数据 选择")), // CJK: 3-byte code points
+    (Some(8L), Some("café naïve Ærø señor façade café")), // accented Latin
+    (Some(9L), Some("😀 ok 👍🏽 go 𝔘𝔫𝔦 😀")), // 4-byte code points
+    // the six ASCII whitespace bytes split; U+00A0 and U+3000 do not
+    (Some(10L), Some("a\tb\nc\u000bd\fe\rf g\u00a0h\u3000i j")),
+    (None, None) // null id and text
   ).toDF("id", "text")
-  private val edgeTarget = Seq((100L, "alpha beta"), (101L, "omega psi")).toDF("id", "text")
+    // invalid UTF-8: a stray continuation byte, a truncated sequence, an
+    // encoded surrogate, an overlong form and a byte above F4
+    .unionByName(DsirSpec.invalidUtf8.toDF("id", "hex")
+      .select(col("id"), unhex(col("hex")).cast("string").as("text")))
+  private val edgeTarget = Seq((100L, "alpha beta"), (101L, "omega psi chi phi rho")).toDF("id", "text")
 
   test("fused scorer equals the join-based formula on edge cases") {
     val buckets = 512
-    val seen = Dsir.bigramFeatures(edgePool.unionByName(edgeTarget.select(
-      col("id").cast("long").as("id"), col("text"))), "id", "text", buckets)
+    val seen = bigramFeatures(edgePool.unionByName(edgeTarget.select(
+      col("id").cast("long").as("id"), col("text"))), buckets)
       .select("bucket").distinct().collect().map(_.getLong(0)).toSet
     assert(seen.size < buckets, "some bucket must be in neither corpus")
-    val targetOnly = Dsir.bigramFeatures(edgeTarget, "id", "text", buckets).select("bucket")
-      .except(Dsir.bigramFeatures(edgePool, "id", "text", buckets).select("bucket"))
+    val targetOnly = bigramFeatures(edgeTarget, buckets).select("bucket")
+      .except(bigramFeatures(edgePool, buckets).select("bucket"))
     assert(targetOnly.count() > 0, "some bucket must be in the target only")
 
-    val got = Dsir.importanceScores(edgePool, edgeTarget, "id", "text", buckets)
-    assert(got.schema.map(f => f.name -> f.dataType.simpleString) ==
-      Seq("id" -> "bigint", "n_feats" -> "bigint", "score" -> "decimal(28,9)"))
-    val fused = sorted(got)
-    assert(fused == sorted(reference(edgePool, edgeTarget, buckets)))
-    val m = fused.map(r => r._1 -> (r._2, r._3)).toMap
-    Seq(2L, 3L, 4L).foreach(id => assert(m(Some(id)) == ((0L, BigDecimal(0))), s"doc $id: $m"))
-    assert(m(None) == ((0L, BigDecimal(0))), s"null id: $m")
-    assert(m(Some(5L))._1 == 3L, s"duplicated id sums its rows' bigrams: $m")
-    assert(fused.size == 7, s"one row per distinct id: $fused")
-    withPartitionings(edgePool) { p =>
-      assert(sorted(Dsir.importanceScores(p, edgeTarget, "id", "text", buckets)) == fused)
+    for (ansi <- Seq("false", "true")) withConfs("spark.sql.ansi.enabled" -> ansi) {
+      val got = Dsir.importanceScores(edgePool, edgeTarget, "id", "text", buckets)
+      assert(got.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("id" -> "bigint", "n_feats" -> "bigint", "score" -> "decimal(28,9)"))
+      val fused = sorted(got)
+      assert(fused == sorted(reference(edgePool, edgeTarget, buckets)), s"ANSI $ansi")
+      val m = fused.map(r => r._1 -> (r._2, r._3)).toMap
+      Seq(2L, 3L, 4L).foreach(id => assert(m(Some(id)) == ((0L, BigDecimal(0))), s"doc $id: $m"))
+      assert(m(None) == ((0L, BigDecimal(0))), s"null id: $m")
+      assert(m(Some(5L))._1 == 3L, s"duplicated id sums its rows' bigrams: $m")
+      assert(m(Some(9L))._1 == 5L && m(Some(10L))._1 == 7L, s"emoji and whitespace: $m")
+      assert(fused.size == 13, s"one row per distinct id: $fused")
+      withPartitionings(edgePool) { p =>
+        assert(sorted(Dsir.importanceScores(p, edgeTarget, "id", "text", buckets)) == fused)
+      }
     }
   }
 
@@ -134,4 +167,15 @@ class DsirSpec extends SparkSpec {
     assert(sorted(Dsir.importanceScores(edgePool, empty, "id", "text", 64)) ==
       sorted(reference(edgePool, empty, 64)))
   }
+}
+
+object DsirSpec {
+  /** Invalid UTF-8 documents as hex (20 is a space): a stray continuation
+    * byte, a truncated sequence before a space and before a letter, an
+    * encoded surrogate, an overlong form, a byte above F4 and a truncated
+    * 4-byte sequence. */
+  val invalidUtf8: Seq[(Long, String)] = Seq(
+    11L -> Seq("616C706861", "80", "20", "6265C3", "20", "6265C374", "20", "EDA080",
+      "20", "C0AF", "20", "F5", "20", "616C706861").mkString,
+    12L -> Seq("E4B8AD", "20", "61", "20", "F09F98", "20", "62657461", "20", "E4B8AD").mkString)
 }

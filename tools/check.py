@@ -9,6 +9,9 @@ depends on this.
 """
 import sys, os, json, glob, subprocess
 
+# the checkout this script belongs to: Verify runs on its sources
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 rest = sys.argv[3:]
@@ -32,7 +35,7 @@ if not skip:
     # forward query-name filters so Verify dumps only the requested queries
     names = (" " + " ".join(only)) if only else ""
     r = subprocess.run(["sbt", "-batch", f'runMain graft.Verify {sf} {out}{names}'],
-                       cwd="/root/repo", capture_output=True, text=True)
+                       cwd=ROOT, capture_output=True, text=True)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-3000:]); sys.exit(1)
