@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.Dedup
+import graft.pipeline.{Dedup, TextAnalysis}
 
 /** Candidate-volume decomposition for the heavy dedup families — the
   * measured counterpart of a scaling exponent. Wall time at a new scale
@@ -104,7 +104,7 @@ object ScaleStats {
     // ----- q_setsim_join: prefix-filtered token-set join (tau=0.95) -----
     {
       val toks = docs.select(col("doc_id"),
-          array_distinct(expr("filter(split(text, '\\\\s+'), t -> t <> '')")).as("__t"))
+          array_distinct(TextAnalysis.tokens(col("text"))).as("__t"))
         .where(size(col("__t")) > 0)
       val avgM = toks.select(size(col("__t")).as("m")).agg(avg("m")).head().getDouble(0)
       val tok = toks.select(col("doc_id"), explode(col("__t")).as("__tok"))

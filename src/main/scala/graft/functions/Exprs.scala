@@ -123,22 +123,13 @@ object Exprs {
   def cosE(c: Column): Column = cos(c)
   def tanE(c: Column): Column = tan(c)
   def cotE(c: Column): Column = cos(c) / sin(c)
-  def asinE(c: Column): Column = asin(c)
-  def acosE(c: Column): Column = acos(c)
   def atanE(c: Column): Column = atan(c)
   def atan2E(y: Column, x: Column): Column = atan2(y, x)
-  def sinhE(c: Column): Column = sinh(c)
-  def coshE(c: Column): Column = cosh(c)
-  def tanhE(c: Column): Column = tanh(c)
-  def asinhE(c: Column): Column = asinh(c)
-  def acoshE(c: Column): Column = acosh(c)
-  def atanhE(c: Column): Column = atanh(c)
   def toDegrees(c: Column): Column = degrees(c)
   def toRadians(c: Column): Column = radians(c)
   def piE: Column = lit(math.Pi)
   def absE(c: Column): Column = abs(c)
   def roundE(c: Column): Column = round(c, 0)
-  def roundWithPrecision(c: Column, p: Int): Column = round(c, p)
   def ceilE(c: Column): Column = ceil(c)
   def floorE(c: Column): Column = floor(c)
   /** Trunc toward zero (reference Trunc on doubles). */
@@ -168,7 +159,6 @@ object Exprs {
   def isFinite(c: Column): Column = !isnan(c) && !isInf(c)
   def isNormal(c: Column): Column =
     isFinite(c) && (c === 0.0 || abs(c) >= lit(java.lang.Double.MIN_NORMAL))
-  def randomDouble: Column = rand()
 
   // ===== String (string_expressions.h:29-102) =====
   def toStringE(c: Column): Column = c.cast(StringType)
@@ -392,5 +382,4 @@ object Exprs {
   def const[T](v: T): Column = lit(v)
   /** Sequence() — consecutive int64 per row; pair with Generate. */
   def sequence(idCol: Column): Column = idCol
-  def randInt32(seed: Long): Column = (rand(seed) * Int.MaxValue).cast("int")
 }

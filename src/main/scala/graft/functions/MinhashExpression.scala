@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   *
   * Empty input arrays yield Long.MaxValue entries (the HOF form yields
   * NULLs there; shingle sets are never empty — short docs fall back to
-  * the whole-doc shingle, see Dedup.shinglesFromTokens).
+  * the whole-doc shingle, see ShingleHashSorted).
   */
 case class MinhashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression {

@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * keeps the DuckDB algorithm-replay oracle valid.
   *
   * Documents shorter than n tokens hash the whole token array as one
-  * window (Dedup.shinglesFromTokens fallback). */
+  * window (the ShingleHashSorted fallback). */
 case class PortableSimHash60(child: Expression, n: Int) extends UnaryExpression {
 
   require(n > 0, "portable_simhash60: n must be positive")

@@ -12,8 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native sorted-distinct shingle-hash set: given an array of string
   * tokens, emit the xxhash64 (seed 42) of every n-token window joined by
   * a single space — sorted ascending, duplicates removed. Documents
-  * shorter than n tokens hash the whole token array as one shingle,
-  * mirroring Dedup.shinglesFromTokens.
+  * shorter than n tokens hash the whole token array as one shingle.
   *
   * WHY CUSTOM: the composable form —
   * `sort_array(transform(array_distinct(transform(sequence(...), i ->

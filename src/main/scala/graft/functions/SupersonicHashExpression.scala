@@ -170,7 +170,6 @@ object SupersonicHashing {
 
   /** Fingerprint(s) = Hash64StringWithSeed(s, len, 42) (hash.cc:77-84). */
   def fingerprintBytes(bytes: Array[Byte]): Long = hashBytes(bytes, FingerprintSeed)
-  def fingerprintLong(v: Long): Long = hashLong(v, FingerprintSeed)
 }
 
 object SupersonicHashExpression {

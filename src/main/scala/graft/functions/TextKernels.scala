@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -53,7 +53,17 @@ sealed abstract class TextKernel(method: String, total: Boolean)
   }
 }
 
-/** Whitespace tokens of the text: runs of bytes other than 9-13 and 32. */
+/** The whitespace tokens of the text, in order: runs of bytes other than
+  * 9-13 and 32, as `filter(split(text, '\\s+'), t -> t <> '')` gives
+  * them, invalid UTF-8 included. */
+case class Tokens(child: Expression) extends TextKernel("tokens", total = false) {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override protected def run(text: UTF8String): Any = TextKernels.tokens(text)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** How many [[Tokens]] the text has. */
 case class TokenCount(child: Expression) extends TextKernel("tokenCount", total = false) {
   override def dataType: DataType = IntegerType
   override protected def run(text: UTF8String): Any = TextKernels.tokenCount(text)
@@ -134,6 +144,21 @@ case class DsirScore(child: Expression, ratio: IndexedSeq[Long])
     copy(child = newChild)
 }
 
+/** The hashed-linear classifier's integer-mills weight sum over the
+  * text's tokens ([[graft.pipeline.Scoring.hashedLinearScore]]). A token's
+  * key is its length · 31 + its first byte · 7 + its last byte, over raw
+  * bytes: on ASCII text that is the SQL form's `length`/`ascii` key, on
+  * other text it counts bytes, not code points. */
+case class HashedLinearMills(child: Expression, dims: Int)
+    extends TextKernel("hashedLinearMills", total = false) {
+  require(dims > 0, "hashed_linear_mills: dims must be positive")
+  override def dataType: DataType = LongType
+  override protected def run(text: UTF8String): Any = TextKernels.hashedLinearMills(text, dims)
+  override protected def args(ctx: CodegenContext): Seq[String] = Seq(dims.toString)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object DsirScore {
   val Type: StructType = StructType(Seq(
     StructField("n_feats", LongType, nullable = false),
@@ -145,6 +170,8 @@ object DsirScore {
   * multi-byte character), so a token is a maximal run of other bytes. */
 object TextKernels {
 
+  /** The one definition of whitespace: a token is a maximal run of other
+    * bytes. */
   @inline private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
 
   @inline private def isContinuation(b: Byte): Boolean = (b & 0xC0) == 0x80
@@ -153,6 +180,26 @@ object TextKernels {
     * replacement characters and encoded again, as `split` does. */
   private def decoded(text: UTF8String): UTF8String =
     if (text.isValid) text else UTF8String.fromString(text.toString)
+
+  /** Decoded first, so each token is the string `split` returns. */
+  def tokens(text: UTF8String): ArrayData = {
+    val s = decoded(text)
+    val n = s.numBytes
+    var out = new Array[Any](8)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (isWs(s.getByte(i))) i += 1
+      else {
+        val start = i
+        while (i < n && !isWs(s.getByte(i))) i += 1
+        if (m == out.length) out = Array.copyOf(out, m * 2)
+        out(m) = s.copyUTF8String(start, i - 1)
+        m += 1
+      }
+    }
+    new GenericArrayData(Array.copyOf(out, m))
+  }
 
   /** Needs no decoding: decoding invalid UTF-8 keeps every ASCII byte and
     * turns no other byte into one. */
@@ -168,6 +215,23 @@ object TextKernels {
       }
     }
     count
+  }
+
+  /** Over raw bytes, undecoded: see [[HashedLinearMills]]. */
+  def hashedLinearMills(text: UTF8String, dims: Int): Long = {
+    val n = text.numBytes
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      if (isWs(text.getByte(i))) i += 1
+      else {
+        val start = i
+        while (i < n && !isWs(text.getByte(i))) i += 1
+        val key = (i - start) * 31L + (text.getByte(start) & 0xFF) * 7L + (text.getByte(i - 1) & 0xFF)
+        acc += ((key % dims) * 2654435761L % 2147483648L) % 2001 - 1000
+      }
+    }
+    acc
   }
 
   def punctCount(text: UTF8String): Int = {
@@ -287,6 +351,7 @@ object TextKernels {
   private def expr(c: Column): Expression = ColumnBridge.toExpr(c)
 
   /** Column API; see the expressions above. */
+  def tokens(text: Column): Column = kernel(Tokens(expr(text)))
   def token_count(text: Column): Column = kernel(TokenCount(expr(text)))
   def punct_count(text: Column): Column = kernel(PunctCount(expr(text)))
   def marker_score(lowered: Column, words: Seq[String]): Column =
@@ -297,4 +362,6 @@ object TextKernels {
     kernel(DsirBigramBuckets(expr(text), buckets))
   def dsir_score(text: Column, ratio: IndexedSeq[Long]): Column =
     kernel(DsirScore(expr(text), ratio))
+  def hashed_linear_mills(text: Column, dims: Int): Column =
+    kernel(HashedLinearMills(expr(text), dims))
 }

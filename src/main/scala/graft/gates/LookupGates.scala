@@ -1342,7 +1342,7 @@ object LookupGates extends GateGroup {
     val ord = keyed.withColumn("pos",
       row_number().over(Window.orderBy(col("__sk"), col("doc_id"))) - 1)
     val toks = ord.withColumn("n_tokens",
-      size(filter(split(col("text"), "\\s+"), t => t =!= "")).cast("long"))
+      graft.pipeline.TextAnalysis.tokenCount(col("text")).cast("long"))
     val packed = toks.withColumn("__cum",
         coalesce(sum(col("n_tokens")).over(
           Window.orderBy("pos").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))

@@ -40,9 +40,8 @@ object Bpe {
 
   /** Strip the bracket alphabet and split to words (whitespace). */
   private def words(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(
-      regexp_replace(col(textCol), "[\u0001\u0002]", ""), "\\s+")).as("word"))
-      .where(col("word") =!= "")
+    docs.select(explode(TextAnalysis.tokens(
+      regexp_replace(col(textCol), "[\u0001\u0002]", ""))).as("word"))
 
   /** Distinct-word frequency table with single-character token arrays —
     * the training working set. */
@@ -202,18 +201,9 @@ object Bpe {
     * bench introspection — how much the batching amortized). */
   @volatile var lastBatchedRounds: Int = 0
 
-  /** Merge table as a DataFrame — the q_bpe_train gate's output shape. */
-  def trainMergesDf(docs: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    trainMerges(docs, textCol, numMerges).zipWithIndex
-      .map { case ((a, b, c), i) => (i, a, b, c) }
-      .toDF("merge_rank", "a", "b", "cnt")
-  }
-
-  /** Batched merge table — same shape, same values as [[trainMergesDf]]
-    * by the batch-rule proof; the q_bpe_train_batched gate pins it to the
-    * SERIAL oracle replay. */
+  /** Merge table as a DataFrame, (merge_rank, a, b, cnt): the same values
+    * as [[trainMerges]] by the batch-rule proof; the q_bpe_train_batched
+    * gate pins it to the SERIAL oracle replay. */
   def trainMergesBatchedDf(docs: DataFrame, textCol: String, numMerges: Int,
                            maxBatch: Int = 32): DataFrame = {
     val spark = docs.sparkSession

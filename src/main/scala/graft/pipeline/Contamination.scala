@@ -21,7 +21,7 @@ object Contamination {
   /** Per-test-document n-gram overlap with the training corpus.
     * Output: (idCol, n_shingles, n_hit, rate) — one row per test doc.
     * Docs shorter than `n` tokens (including zero-token docs) fall back
-    * to ONE whole-document shingle (Dedup.shinglesFromTokens semantics),
+    * to ONE whole-document shingle (ShingleHashSorted semantics),
     * so every test doc is present with n_shingles ≥ 1; a short doc
     * "hits" only when its exact whole text also occurs as a train-side
     * shingle.

@@ -237,28 +237,6 @@ object Dedup {
 
   // ===== Shingles =====
 
-  /** Word n-gram shingles from a pre-tokenized array column. Taking the
-    * token ARRAY (not the raw text) matters for performance: the shingle
-    * windows reference the token array ~n_tokens times, and higher-order
-    * lambdas are interpreted without common-subexpression elimination — a
-    * raw split() here would re-tokenize once per shingle. */
-  def shinglesFromTokens(t: Column, n: Int): Column = {
-    val wins = transform(sequence(lit(1), size(t) - (n - 1)),
-      i => array_join(slice(t, i, lit(n)), " "))
-    array_distinct(when(size(t) >= n, wins).otherwise(array(array_join(t, " "))))
-  }
-
-  /** Word n-gram shingles (distinct), e.g. n=3 → all consecutive
-    * 3-token windows. Documents shorter than n tokens yield the whole
-    * document as one shingle. Column-level API; pipelines should stage
-    * tokenization behind a barrier (withShingleSet) instead. */
-  def shingles(text: Column, n: Int): Column =
-    shinglesFromTokens(TextAnalysis.tokens(text), n)
-
-  /** Materialization barrier: a cheap hash exchange that stops Catalyst's
-    * CollapseProject from inlining an expensive array-producing projection
-    * into its many downstream references. At cluster scale this exchange
-    * is the same shuffle the subsequent bucket/band key join needs anyway. */
   /** Minimum integer overlap o with o/m ≥ τ, computed CONSISTENTLY with
     * the double-arithmetic verify predicate: bare ceil(τ·m) is one ulp
     * too tight when τ·m is an exact integer but fl(τ)·m rounds above it
@@ -271,17 +249,12 @@ object Dedup {
   private[graft] def minOverlap(tau: Column, m: Column): Column =
     ceil(tau * m - lit(1e-9))
 
+  /** Materialization barrier: a cheap hash exchange that stops Catalyst's
+    * CollapseProject from inlining an expensive array-producing projection
+    * into its many downstream references. At cluster scale this exchange
+    * is the same shuffle the subsequent bucket/band key join needs anyway. */
   private def barrier(df: DataFrame, key: String): DataFrame =
     df.repartition(col(key))
-
-  /** id + distinct shingle set, with tokenization staged behind a barrier
-    * so split() runs once per document, not once per shingle. */
-  def withShingleSet(df: DataFrame, idCol: String, textCol: String,
-                     shingleLen: Int, out: String): DataFrame = {
-    val toks = barrier(
-      df.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks")), idCol)
-    toks.select(col(idCol), shinglesFromTokens(col("__toks"), shingleLen).as(out))
-  }
 
   /** id + distinct shingle-HASH set (64-bit, SORTED ascending): set
     * operations on long arrays shuffle ~8 bytes per shingle instead of
@@ -345,14 +318,6 @@ object Dedup {
     barrier(shh.select(col(idCol),
       graft.functions.MinhashExpression.minhash_signature(col("__shh"), numHashes).as(out)),
       idCol)
-  }
-
-  /** Column-level signature (reference-style API; prefer
-    * withMinhashSignature in pipelines — see performance note above). */
-  def minhashSignature(text: Column, numHashes: Int, shingleLen: Int = 3): Column = {
-    val sh = transform(shingles(text, shingleLen), s => xxhash64(s))
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      j => array_min(transform(sh, h => xxhash64(j, h))))
   }
 
   /** LSH banding: split the signature into `bands` rows of r = k/bands
@@ -436,20 +401,6 @@ object Dedup {
   }
 
   // ===== SimHash =====
-
-  /** 64-bit SimHash over word tokens: bit k of the fingerprint is the sign
-    * of the sum over tokens of ±1 depending on bit k of the token hash.
-    * Tokens are hashed ONCE into a long array; the 64 bit-sums then fold
-    * over cheap shift/mask ops — O(tokens + 64·tokens) cheap ops instead of
-    * O(64·tokens) rehashes. */
-  def simhash64(text: Column): Column = {
-    val th = transform(array_distinct(TextAnalysis.tokens(text)), tok => xxhash64(tok))
-    val bits = transform(sequence(lit(0), lit(63)), k =>
-      when(aggregate(th, lit(0),
-        (acc, h) => acc + when(call_function("shiftright", h, k).bitwiseAND(1) === 1, 1).otherwise(-1)) > 0,
-        call_function("shiftleft", lit(1L), k)).otherwise(0L))
-    aggregate(bits, lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
 
   /** Staged simhash (token hashes materialized once, native fold).
     *
@@ -892,29 +843,6 @@ object Dedup {
     if (dedup) cand.distinct() else cand
   }
 
-  // ===== Blocked n-gram Jaccard =====
-
-  /** Pairwise token n-gram Jaccard within blocks (e.g. same source+lang).
-    * Blocking keys bound the quadratic join; pairs below threshold are
-    * dropped early. */
-  def blockedJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                          blockCols: Seq[String], threshold: Double,
-                          shingleLen: Int = 2): DataFrame = {
-    val toks = df.select((blockCols.map(col) :+ col(idCol) :+
-      TextAnalysis.tokens(col(textCol)).as("__toks")): _*).repartition(col(idCol))
-    // sorted hash sets: the block join fans out per pair, so the verify
-    // uses the merge-walk Jaccard (and the join shuffles longs, not text)
-    val keyed = toks.select((blockCols.map(col) :+ col(idCol) :+
-      sort_array(transform(shinglesFromTokens(col("__toks"), shingleLen),
-        sh => xxhash64(sh))).as("sh")): _*)
-    val l = keyed.select((blockCols.map(col) :+ col(idCol).as("id1") :+ col("sh").as("sh1")): _*)
-    val r = keyed.select((blockCols.map(col) :+ col(idCol).as("id2") :+ col("sh").as("sh2")): _*)
-    l.join(r, blockCols).where(col("id1") < col("id2"))
-      .withColumn("jac", jaccardSortedLong(col("sh1"), col("sh2")))
-      .where(col("jac") >= threshold)
-      .select("id1", "id2", "jac")
-  }
-
   // ===== Edit-distance (fuzzy) matching =====
 
   /** Blocked fuzzy matching over a string column: DISTINCT values, length-
@@ -984,8 +912,8 @@ object Dedup {
     *    τ-required overlap τ·(m1+m2)/(1+τ) (compared with a 1e-9 slack
     *    so float rounding can only KEEP, never drop).
     * The verify runs the merge-walk Jaccard over sorted xxhash64 arrays
-    * (longs, codegen'd — same 64-bit-collision trade as
-    * blockedJaccardPairs; the oracle replays the raw-string form).
+    * (longs, codegen'd — the same 64-bit-collision trade as MinHash; the
+    * oracle replays the raw-string form).
     *
     * Scale: the df count is one reduced exchange; candidate generation
     * shuffles (token, id, size, pos) tuples for PREFIX tokens only (the
@@ -1001,7 +929,7 @@ object Dedup {
     // downstream — collapse keys, postings, verify — reads this 8-byte
     // signature array, never token text
     val allToks = df.select(col(idCol).as("__id"),
-        expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w0"))
+        TextAnalysis.tokens(col(textCol)).as("__w0"))
       .where(size(col("__w0")) > 0)
       .select(col("__id"), graft.functions.ShingleHashExpression
         .shingle_hash_sorted(col("__w0"), 1).as("__sh"))
@@ -1080,7 +1008,7 @@ object Dedup {
       "prefixFilterJaccardClusters: threshold must be in (0, 1]")
     // one native tokenize+hash+sort pass — see prefixFilterJaccardPairs
     val allToks = df.select(col(idCol).as("__id"),
-        expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w0"))
+        TextAnalysis.tokens(col(textCol)).as("__w0"))
       .where(size(col("__w0")) > 0)
       .select(col("__id"), graft.functions.ShingleHashExpression
         .shingle_hash_sorted(col("__w0"), 1).as("__sh"))
@@ -1345,13 +1273,13 @@ object Dedup {
     val toksAll =
       if (shingleWidth == 1)
         df.select(col(idCol).as("__id"),
-            expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w0"))
+            TextAnalysis.tokens(col(textCol)).as("__w0"))
           .where(size(col("__w0")) > 0)
           .select(col("__id"), sort_array(array_distinct(
             transform(col("__w0"), t => xxhash64(t)))).as("__sh"))
       else
         df.select(col(idCol).as("__id"),
-            expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w0"))
+            TextAnalysis.tokens(col(textCol)).as("__w0"))
           .where(size(col("__w0")) >= shingleWidth)
           .select(col("__id"), graft.functions.ShingleHashExpression
             .shingle_hash_sorted(col("__w0"), shingleWidth).as("__sh"))
@@ -1411,7 +1339,7 @@ object Dedup {
                       n: Int): DataFrame = {
     require(n >= 2, "duplicatedSpans: span width must be >= 2 tokens")
     val toks = df.select(col(idCol).as("__id"),
-      expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w"))
+      TextAnalysis.tokens(col(textCol)).as("__w"))
     // spans are keyed by the native ShingleHashAll kernel's window
     // hashes (bit-identical to xxhash64(array_join(slice(__w, i, n),
     // ' '))) — no span string is ever built or shuffled
@@ -1456,7 +1384,7 @@ object Dedup {
                              k: Int): DataFrame = {
     require(k >= 2, "duplicatedSpansMaximal: window width must be >= 2 tokens")
     val toks = df.select(col(idCol).as("__id"),
-      expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w"))
+      TextAnalysis.tokens(col(textCol)).as("__w"))
     // window keys are the native 8-byte window hashes — see
     // duplicatedSpans; posexplode: window start = pos + 1 (1-based
     // token index)
@@ -1497,7 +1425,7 @@ object Dedup {
                                 k: Int): Long = {
     require(k >= 1, "longestRepeatedSpanLength: k must be >= 1")
     val toks = df.select(
-      expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w"))
+      TextAnalysis.tokens(col(textCol)).as("__w"))
       .stagePersist(false)
     try {
       val maxLenRow = toks.agg(max(size(col("__w")))).head() // fills toks

@@ -64,9 +64,6 @@ object Multimodal {
       .select(col("path"), col("length"), col("content").as("media"))
   }
 
-  def byteLength(df: DataFrame, binCol: String, out: String): DataFrame =
-    df.withColumn(out, octet_length(col(binCol)).cast("long"))
-
   /** Frame sampling: slice the payload into `n` fixed-width frames
     * (binary substring — runs in codegen, no UDF). For video this is the
     * keyframe-stride pattern; stub keeps byte slices. */

@@ -132,7 +132,7 @@ object Packing {
     val m = 2147483648L
     val toks = docs
       .select(col(idCol).as("__id"),
-        posexplode(filter(split(col(textCol), "\\s+"), t => t =!= ""))
+        posexplode(TextAnalysis.tokens(col(textCol)))
           .as(Seq("__pos", "__t")))
     val kt = (length(col("__t")).cast("long") * 31L +
       ascii(substring(col("__t"), 1, 1)).cast("long") * 7L +

@@ -33,8 +33,7 @@ object Sampling {
     *
     * "Portable" is the point: any SQL engine reproduces it with `%` and
     * `*` (see the q_sample_* oracles), unlike xxhash64 whose exact values
-    * are engine-internal. For adversarial inputs prefer
-    * [[xxhashBucket]] — better mixing, same distribution contract. */
+    * are engine-internal. */
   def portableBucket(keys: Seq[Column]): Column = {
     require(keys.nonEmpty, "portableBucket: need at least one key column")
     val mixed = keys.zipWithIndex.map { case (k, i) =>
@@ -42,11 +41,6 @@ object Sampling {
     }.reduce(_ + _)
     pmod(pmod(mixed, lit(Mod)), lit(Buckets))
   }
-
-  /** Engine-internal bucket (xxhash64 — stronger mixing, arbitrary key
-    * types, not reproducible outside Spark). */
-  def xxhashBucket(keys: Seq[Column]): Column =
-    pmod(xxhash64(keys: _*), lit(Buckets))
 
   /** Seeded portable shuffle key in [0, 2^31): each key term is
     * multiplied by a SEED-DEPENDENT odd multiplier ((2s+1)·prime mod

@@ -208,7 +208,7 @@ object Scoring {
     * for a broadcast of real weights to serve a trained model.
     *
     * The whole computation is one codegen'd projection — tokenize, hash,
-    * look up, and fold INSIDE the row via array HOFs: zero shuffles, zero
+    * look up, and fold in one byte walk per row: zero shuffles, zero
     * UDFs, integer accumulation (order-exact on any engine). The token
     * key is the portable (length, first-char, last-char) triple so SQL
     * oracles replay it with `length`/`ascii` only; production swaps in
@@ -220,32 +220,15 @@ object Scoring {
   def hashedLinearScore(df: DataFrame, idCol: String, textCol: String,
                         dims: Int = 64, threshold: Double = 0.0): DataFrame = {
     require(dims > 0, "hashedLinearScore: dims must be positive")
-    // one generated byte loop per row (HashedLinearMills) — the 10×
-    // scaling run measured the array-HOF formulation (kept below as
-    // hofMills for the equality spec) near-linear because the lambda is
-    // interpreted; the native walk stays inside whole-stage codegen
-    val mills = graft.functions.HashedLinearExpression
-      .hashed_linear_mills(col(textCol), dims)
+    // a native byte walk per row: an array-HOF fold would interpret its
+    // lambda once per token
     df.select(col(idCol),
-        expr(s"filter(split($textCol, '\\\\s+'), t -> t <> '')").as("__w"),
-        mills.as("__mills"))
-      .withColumn("n_tokens", size(col("__w")).cast("long"))
+        TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"),
+        graft.functions.TextKernels.hashed_linear_mills(col(textCol), dims).as("__mills"))
       .withColumn("score", col("__mills").cast("double") /
         (lit(1000.0) * greatest(col("n_tokens"), lit(1L)).cast("double")))
       .withColumn("keep", col("score") > lit(threshold))
-      .drop("__w", "__mills")
-  }
-
-  /** The composable (array-HOF) formulation of the mills sum — the SQL-
-    * portable reference HashedLinearMills must match on ASCII text;
-    * interpreted, so the operator itself uses the native expression. */
-  def hofMills(text: Column, dims: Int): Column = {
-    val toks = filter(split(text, "\\s+"), t => t =!= "")
-    aggregate(toks, lit(0L), (acc, t) => acc +
-      (((org.apache.spark.sql.functions.length(t).cast("long") * 31 +
-        ascii(substring(t, 1, 1)).cast("long") * 7 +
-        ascii(substring(t, -1, 1)).cast("long")) % dims)
-        * 2654435761L % 2147483648L) % 2001 - 1000)
+      .drop("__mills")
   }
 
   /** Per-document lexical diversity: type-token ratio and unigram Shannon

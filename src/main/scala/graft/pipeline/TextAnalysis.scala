@@ -9,38 +9,24 @@ import graft.functions.TextKernels
   * whole-stage codegen — no UDFs — and scales linearly with input splits:
   * per-document computations have no shuffle at all.
   *
-  * `tokenCount`, `punctCount`, `markerScore` and `langId` are native byte
-  * walks ([[graft.functions.TextKernels]]), one static call per row. The
-  * composed forms they replace ran a regex trim and split, a regex count
-  * and one `contains` scan per marker word, and graft.Curate's ingest
-  * spent its CPU in them. Each walk gives the composed form's value,
-  * nulls included (`size(null)` is −1, or null under ANSI), and the
-  * marker kernels read Spark's `lower(text)`, so case mapping is Spark's.
+  * `tokens`, `tokenCount`, `punctCount`, `markerScore` and `langId` are
+  * native byte walks ([[graft.functions.TextKernels]]), one static call
+  * per row. The composed forms they replace ran a regex trim and split, a
+  * regex count and one `contains` scan per marker word, and graft.Curate's
+  * ingest and dedup stages spent their CPU in them. Each walk gives the
+  * composed form's value, nulls included (`size(null)` is −1, or null
+  * under ANSI), and the marker kernels read Spark's `lower(text)`, so case
+  * mapping is Spark's. `tokens` is the one whitespace tokenizer: every
+  * operator that splits text into words reads it.
   * The rest is built from codegen'd `org.apache.spark.sql.functions`.
   */
 object TextAnalysis {
 
-  /** Whitespace tokenization. Edge whitespace is stripped with a REGEXP
-    * trim first — Spark's trim() removes only ASCII spaces, so a
-    * tab/newline-edged document would otherwise emit phantom empty
-    * tokens — and an empty or whitespace-only document yields ZERO
-    * tokens (split("", ...) returns [""], which would otherwise count
-    * one phantom token and leak an empty token into every downstream
-    * stats/shingle pipeline). NULL text stays NULL. Trim-then-split
-    * means interior runs collapse and no other input can produce an
-    * empty fragment, so the single guard is exhaustive (no interpreted
-    * array-filter needed — the whole expression stays codegen).
-    * Equivalent DuckDB form (used by the oracles):
-    * list_filter(string_split_regex(text, '\s+'), t -> t <> ''). */
-  def tokens(text: Column): Column = {
-    val t = wsTrim(text)
-    when(length(t) > 0, split(t, "\\s+"))
-      .otherwise(when(text.isNotNull, lit(Array.empty[String])))
-  }
-
-  /** Full-whitespace edge trim (tabs/newlines included, unlike trim()). */
-  private def wsTrim(text: Column): Column =
-    regexp_replace(text, "^\\s+|\\s+$", "")
+  /** Whitespace tokenization: the runs of bytes other than 9-13 and 32
+    * (Java regex `\s`), in order. An empty or whitespace-only text gives
+    * no tokens and a null text null. Equivalent DuckDB form (used by the
+    * oracles): list_filter(string_split_regex(text, '\s+'), t -> t <> ''). */
+  def tokens(text: Column): Column = TextKernels.tokens(text)
 
   /** `size(tokens(text))`: whitespace runs counted natively; a null text
     * gives Spark's `size(null)`. */
@@ -115,11 +101,6 @@ object TextAnalysis {
   /** Document fingerprint — md5 of the normalized text (cross-engine
     * deterministic). */
   def fingerprint(text: Column): Column = md5(normalize(text))
-
-  /** 64-bit rolling-hash fingerprint (engine-internal; values are Spark's
-    * xxhash64, not portable across engines — documented like the
-    * reference's SupersonicFingerprint, hashing_expressions.h:28-35). */
-  def fingerprint64(text: Column): Column = xxhash64(normalize(text))
 
   // ===== PII redaction (training-data scrubbing; codegen'd regexp_replace
   // chain — zero shuffle, linear scan) =====

@@ -33,8 +33,7 @@ object Unigram {
 
   /** Word frequency table (word, cnt) — occurrences, not distinct docs. */
   private def wordTable(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(col(textCol), "\\s+")).as("word"))
-      .where(col("word") =!= "")
+    docs.select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** Candidate (piece, j, k) occurrences of every <= maxPieceLen substring
@@ -47,12 +46,6 @@ object Unigram {
            |    struct(j AS j, k AS k, substring(word, j + 1, k) AS piece))))""".stripMargin)).as("o"))
       .select(col("word"), col("cnt"), col("o.j").as("j"), col("o.k").as("k"),
         col("o.piece").as("piece"))
-
-  /** Seed vocabulary: every substring up to maxPieceLen, scored by its
-    * position-weighted corpus occurrence count. */
-  def seedPieces(docs: DataFrame, textCol: String, maxPieceLen: Int): DataFrame =
-    substrOccurrences(wordTable(docs, textCol), maxPieceLen)
-      .groupBy("piece").agg(sum(col("cnt")).as("score"))
 
   /** One Viterbi-EM segmentation pass: each distinct word's optimal
     * segmentation under `pieces`, exploded to chosen-piece usage. */

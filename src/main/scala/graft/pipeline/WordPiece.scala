@@ -57,8 +57,7 @@ object WordPiece {
     regexp_replace(c, "[#\u0001\u0002]", "")
 
   private def wordTable(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(cleanText(col(textCol)), "\\s+")).as("word"))
-      .where(col("word") =!= "")
+    docs.select(explode(TextAnalysis.tokens(cleanText(col(textCol)))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .withColumn("toks", initTokens(col("word")))
       .drop("word")
@@ -144,8 +143,7 @@ object WordPiece {
   def bpeFertility(docs: DataFrame, textCol: String,
                    merges: Seq[(String, String)]): (Long, Long) = {
     val wt = docs
-      .select(explode(split(cleanText(col(textCol)), "\\s+")).as("word"))
-      .where(col("word") =!= "")
+      .select(explode(TextAnalysis.tokens(cleanText(col(textCol)))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .withColumn("toks", split(col("word"), ""))
       .drop("word")

@@ -42,13 +42,4 @@ object Builders {
     * block `times` times — a deterministic larger input for operator tests. */
   def repeatingBlock(df: DataFrame, times: Int): DataFrame =
     df.sparkSession.range(times).toDF("__rep").crossJoin(df).drop("__rep")
-
-  /** Run an assertion under several partition counts — catches
-    * partition-boundary bugs like the reference's OperationTest block-size
-    * combinations (operation_testing.h:53-83). */
-  def underPartitionings(df: DataFrame, counts: Seq[Int] = Seq(1, 2, 7))
-                        (assertFn: DataFrame => Unit): Unit = {
-    assertFn(df)
-    counts.foreach(c => assertFn(df.repartition(c)))
-  }
 }

@@ -70,7 +70,5 @@ object GraftTypes {
         case ((n, nm), acc) => when(name === nm, lit(n)).otherwise(acc)
       }
 
-    def numberToName: Map[Int, String] = entries.toMap
-    def nameToNumber: Map[String, Int] = entries.map(_.swap).toMap
   }
 }

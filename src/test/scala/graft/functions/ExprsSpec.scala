@@ -159,6 +159,18 @@ class ExprsSpec extends SparkSpec {
     assert(rows(Seq("12").toDF("s").select(E.castSignaling(IntegerType)(col("s")))).head.head == 12)
   }
 
+  test("logBaseSignaling and lnSignaling complete the Log and Ln policy triples") {
+    val bad = Seq(-5.0, 0.0).toDF("x")
+    for (c <- Seq(E.logBaseSignaling(3.0, col("x")), E.lnSignaling(col("x"))))
+      intercept[Exception] { bad.select(c).collect() }
+    val ok = Seq(9.0).toDF("x")
+    val Seq(logBase, ln) = rows(ok.select(E.logBaseSignaling(3.0, col("x")),
+      E.lnSignaling(col("x")))).head.map(_.asInstanceOf[Double])
+    assert(math.abs(logBase - 2.0) < 1e-12)
+    assert(ln == math.log(9.0))
+    assert(rows(Seq(Option.empty[Double]).toDF("x").select(E.lnSignaling(col("x")))).head.head == null)
+  }
+
   test("formatSignaling errors on negative precision, substringSignaling is bounds-safe") {
     val df = Seq(1234.5678).toDF("x")
     assert(rows(df.select(E.formatSignaling(col("x"), lit(2)))).head.head == "1,234.57")

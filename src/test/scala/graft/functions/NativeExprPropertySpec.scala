@@ -51,7 +51,7 @@ class NativeExprPropertySpec extends SparkSpec {
       val toks = split(trim(col("text")), "\\s+")
       val native = rows(df.select(shingle_hash_sorted(toks, n)))
       val hof = rows(df.select(sort_array(transform(
-        graft.pipeline.Dedup.shinglesFromTokens(toks, n), s => xxhash64(s)))))
+        graft.pipeline.TextReference.shinglesFromTokens(toks, n), s => xxhash64(s)))))
       assert(native == hof, s"mismatch at shingle length $n")
     }
   }
@@ -67,7 +67,7 @@ class NativeExprPropertySpec extends SparkSpec {
     // the composable formulation the expression replaced: distinct shingle
     // strings -> md5 hex prefix -> conv -> 60 bit-vote sums -> sign fold
     val hashed = df
-      .select(col("id"), explode(graft.pipeline.Dedup.shinglesFromTokens(toks, 3)).as("s"))
+      .select(col("id"), explode(graft.pipeline.TextReference.shinglesFromTokens(toks, 3)).as("s"))
       .select(col("id"), conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long").as("h"))
     val votes = (0 until 60).map { j =>
       sum(when(call_function("shiftright", col("h"), lit(j)).bitwiseAND(1) === 1,
@@ -92,7 +92,7 @@ class NativeExprPropertySpec extends SparkSpec {
   }
 
   test("property: hashed_linear_mills == array-HOF fold on 300 random ASCII strings") {
-    import graft.functions.HashedLinearExpression.hashed_linear_mills
+    import graft.functions.TextKernels.hashed_linear_mills
     val alphabet = "abcdefghijklmnopqrstuvwxyz0123456789.,;!?"
     def randText(): String = {
       val n = rng.nextInt(40)
@@ -107,19 +107,19 @@ class NativeExprPropertySpec extends SparkSpec {
     for (dims <- Seq(16, 64)) {
       val got = df.select(
         hashed_linear_mills(col("t"), dims).as("native"),
-        graft.pipeline.Scoring.hofMills(col("t"), dims).as("hof"))
+        graft.pipeline.TextReference.hofMills(col("t"), dims).as("hof"))
       assert(got.where(col("native") =!= col("hof")).count() == 0, s"dims=$dims")
     }
   }
 
   test("hashed_linear_mills generates compiling code (no codegen fallback)") {
-    import graft.functions.HashedLinearExpression.hashed_linear_mills
+    import graft.functions.TextKernels.hashed_linear_mills
     withConfs("spark.sql.codegen.fallback" -> "false") {
       val df = Seq.tabulate(100)(i => (i.toLong, s"tok$i hello wor$i")).toDF("i", "t")
       val s = df.select(hashed_linear_mills(col("t"), 64).as("m"))
         .agg(sum("m")).collect()(0).getLong(0)
       // must agree with the interpreted eval of the same expression
-      val s2 = df.select(graft.pipeline.Scoring.hofMills(col("t"), 64).as("m"))
+      val s2 = df.select(graft.pipeline.TextReference.hofMills(col("t"), 64).as("m"))
         .agg(sum("m")).collect()(0).getLong(0)
       assert(s == s2)
     }

@@ -21,10 +21,16 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("shingles builds word n-grams; short docs degrade to whole text") {
-    val out = Seq("a b c d").toDF("t").select(Dedup.shingles(col("t"), 3).as("s"))
-    assert(rows(out).head.head == Seq("a b c", "b c d"))
-    val short = Seq("a b").toDF("t").select(Dedup.shingles(col("t"), 3).as("s"))
-    assert(rows(short).head.head == Seq("a b"))
+    import graft.functions.ShingleHashExpression.shingle_hash_sorted
+    val texts = Seq("a b c d", "a b").toDF("t")
+    val toks = TextAnalysis.tokens(col("t"))
+    def hashed(shingles: String*): Seq[Long] =
+      rows(shingles.toDF("s").select(xxhash64(col("s")))).map(_.head.asInstanceOf[Long]).sorted
+    // "a b c d" gives two 3-token windows; "a b" one whole-document shingle
+    assert(rows(texts.select(shingle_hash_sorted(toks, 3))).map(_.head) ==
+      Seq(hashed("a b c", "b c d"), hashed("a b")))
+    assert(rows(texts.select(TextReference.shinglesFromTokens(toks, 3))).map(_.head) ==
+      Seq(Seq("a b c", "b c d"), Seq("a b")))
   }
 
   test("jaccard on shingle sets") {

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.functions.TextKernels
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,7 @@ class TextAnalysisKernelSpec extends SparkSpec {
   import spark.implicits._
 
   /** The composable forms. */
-  private def tokenCount(text: Column): Column = size(TextAnalysis.tokens(text))
+  private def tokenCount(text: Column): Column = size(TextReference.regexTokens(text))
   private def punctCount(text: Column): Column = regexp_count(text, lit("[^a-zA-Z0-9\\s]"))
   private def markerScore(text: Column, words: Seq[String]): Column = {
     val padded = concat(lit(" "), lower(text), lit(" "))
@@ -42,15 +43,24 @@ class TextAnalysisKernelSpec extends SparkSpec {
       .mkString
   }
 
-  /** Every case as (id, text): the edges, 300 random texts and the
-    * invalid UTF-8 documents of DsirSpec, cast from binary. */
+  /** The edge pool as (id, text): the edges, then the invalid UTF-8
+    * documents of DsirSpec, cast from binary, at ids 111 and 112. */
+  private lazy val edgePool: DataFrame =
+    edges.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .unionByName(DsirSpec.invalidUtf8.toDF("id", "hex")
+        .select((col("id") + 100L).as("id"), unhex(col("hex")).cast("string").as("text")))
+
+  /** Every case: the edge pool and 300 random texts. */
   private lazy val corpus: DataFrame = {
     val rng = new scala.util.Random(20261019L)
-    val texts = edges ++ Seq.fill(300)(Some(randomText(rng)))
-    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-      .unionByName(DsirSpec.invalidUtf8.toDF("id", "hex")
-        .select(col("id"), unhex(col("hex")).cast("string").as("text")))
+    edgePool.unionByName(Seq.fill(300)(randomText(rng)).zipWithIndex
+      .map { case (t, i) => (edges.size + i.toLong, t) }.toDF("id", "text"))
   }
+
+  private def withCodegen[A](mode: String)(body: => A): A =
+    withConfs("spark.sql.codegen.factoryMode" -> mode,
+      "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString)(body)
+  private val codegenModes = Seq("CODEGEN_ONLY", "NO_CODEGEN")
 
   private def assertSame(name: String, native: Column, composed: Column): Unit =
     for (ansi <- Seq("false", "true")) withConfs("spark.sql.ansi.enabled" -> ansi) {
@@ -60,6 +70,54 @@ class TextAnalysisKernelSpec extends SparkSpec {
       val bad = rows(diff.limit(5))
       assert(bad.isEmpty, s"$name differs with ANSI $ansi: $bad")
     }
+
+  test("tokens equals the regex trim-and-split and filter(split), generated and interpreted") {
+    // the references type their arrays with nullable elements
+    val tokens = TextAnalysis.tokens(col("text")).cast("array<string>")
+    for (mode <- codegenModes) withCodegen(mode) {
+      assertSame(s"tokens vs regex, $mode", tokens,
+        TextReference.regexTokens(col("text")).cast("array<string>"))
+      assertSame(s"tokens vs filter(split), $mode", tokens,
+        TextReference.filteredSplit(col("text")).cast("array<string>"))
+    }
+    assert(rows(edgePool.where(col("id") === 13).select(TextAnalysis.tokens(col("text")))) ==
+      Seq(Seq(Seq("a", "b", "c", "d", "e", "f", "g\u00a0h\u3000i", "j"))))
+  }
+
+  test("hashed_linear_mills keeps its values on the edge pool, non-ASCII and invalid UTF-8 included") {
+    // (id, dims 16, dims 64), as the generated Java loop this kernel
+    // replaced gave them: keys over raw bytes, not code points
+    val expected = Seq[(Long, Any, Any)]((0L, null, null), (1L, 0L, 0L), (2L, 0L, 0L),
+      (3L, 0L, 0L), (4L, -468L, -2239L), (5L, 363L, -301L), (6L, 363L, -301L),
+      (7L, -346L, 101L), (8L, 1225L, 1025L), (9L, 528L, 311L), (10L, -24L, -445L),
+      (11L, -426L, -1524L), (12L, -650L, -1080L), (13L, -3259L, 773L), (14L, 418L, -1800L),
+      (15L, -1637L, 1505L), (16L, -1583L, -689L), (17L, -38L, 635L), (111L, -50L, 410L),
+      (112L, -928L, -34L)).map { case (id, a, b) => Seq(id, a, b) }
+    for (mode <- codegenModes) withCodegen(mode) {
+      assert(rows(edgePool.select(col("id"), TextKernels.hashed_linear_mills(col("text"), 16),
+        TextKernels.hashed_linear_mills(col("text"), 64)).orderBy("id")) == expected, mode)
+    }
+    graft.GraftExtensions.register(spark)
+    assert(rows(spark.sql("SELECT hashed_linear_mills('The cat and THE dog', 64)")) ==
+      Seq(Seq(-2239L)))
+  }
+
+  test("operators read a text column whose name needs quoting") {
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z a b c"),
+      (4L, "a b  c\td e f"), (5L, "")).toDF("id", "text")
+    val quoted = docs.withColumnRenamed("text", "body text")
+    def same(name: String, op: (DataFrame, String) => DataFrame): Unit = {
+      val want = rows(op(docs, "text")).map(_.toString).sorted
+      assert(want.nonEmpty, name)
+      assert(rows(op(quoted, "body text")).map(_.toString).sorted == want, name)
+    }
+    same("prefixFilterJaccardPairs", Dedup.prefixFilterJaccardPairs(_, "id", _, 0.5))
+    same("prefixFilterJaccardClusters", Dedup.prefixFilterJaccardClusters(_, "id", _, 0.5))
+    same("containmentPairs", Dedup.containmentPairs(_, "id", _, 0.8))
+    same("duplicatedSpans", Dedup.duplicatedSpans(_, "id", _, 2))
+    same("duplicatedSpansMaximal", Dedup.duplicatedSpansMaximal(_, "id", _, 2))
+    same("hashedLinearScore", Scoring.hashedLinearScore(_, "id", _))
+  }
 
   test("tokenCount equals size(tokens(text)), null included") {
     assertSame("tokenCount", TextAnalysis.tokenCount(col("text")), tokenCount(col("text")))
@@ -92,12 +150,13 @@ class TextAnalysisKernelSpec extends SparkSpec {
   }
 
   test("the kernels generate code and agree with their interpreted form") {
-    val kernels = Seq(TextAnalysis.tokenCount(col("text")), TextAnalysis.punctCount(col("text")),
+    val kernels = Seq(TextAnalysis.tokens(col("text")), TextAnalysis.tokenCount(col("text")),
+      TextAnalysis.punctCount(col("text")),
       TextAnalysis.markerScore(col("text"), Seq("the", "的")), TextAnalysis.langId(col("text")),
-      graft.functions.TextKernels.dsir_bigram_buckets(col("text"), 64),
-      graft.functions.TextKernels.dsir_score(col("text"), (1L to 64L).toIndexedSeq))
-    def run(codegen: String) = withConfs("spark.sql.codegen.factoryMode" -> codegen,
-        "spark.sql.codegen.wholeStage" -> (codegen == "CODEGEN_ONLY").toString) {
+      TextKernels.dsir_bigram_buckets(col("text"), 64),
+      TextKernels.dsir_score(col("text"), (1L to 64L).toIndexedSeq),
+      TextKernels.hashed_linear_mills(col("text"), 64))
+    def run(codegen: String) = withCodegen(codegen) {
       rows(corpus.select(col("id") +: kernels: _*).orderBy("id"))
     }
     assert(run("CODEGEN_ONLY") == run("NO_CODEGEN"))

@@ -105,7 +105,7 @@ class TypesAndLifecycleSpec extends SparkSpec {
     val toks = split(trim(col("text")), "\\s+")
     val native = rows(df.select(shingle_hash_sorted(toks, 3)))
     val hof = rows(df.select(sort_array(transform(
-      graft.pipeline.Dedup.shinglesFromTokens(toks, 3), s => xxhash64(s)))))
+      graft.pipeline.TextReference.shinglesFromTokens(toks, 3), s => xxhash64(s)))))
     assert(native == hof)
     // SQL registration with a literal n: 4 tokens, n=3 -> 2 windows
     graft.GraftExtensions.register(spark)
